@@ -12,11 +12,25 @@ import org.apache.spark.scheduler._
   * {{{ sbt "runMain graft.Prof text_bm25_maxscore /root/testdata/sf0.1" }}}
   */
 object Prof {
+
+  /** Splits the arguments into query keys and the SF dir (at most
+    * one). An argument that contains a path separator or names an
+    * existing directory is the SF dir, so a relative dir such as
+    * `sf0.1` works; every other argument must be a known key. Fails
+    * before any session starts. */
+  def parseArgs(args: Seq[String]): (Seq[String], Seq[String]) = {
+    val (dirs, keys) = args.partition(a => a.contains('/') ||
+      a.contains(java.io.File.separatorChar) || new java.io.File(a).isDirectory)
+    require(dirs.size <= 1, s"more than one SF dir: ${dirs.mkString(", ")}")
+    val unknown = keys.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown query keys: ${unknown.mkString(", ")}")
+    (keys, dirs)
+  }
+
   def main(args: Array[String]): Unit = {
-    // several keys in one JVM: last arg that looks like a path is the
-    // SF dir, everything else is a key list
-    val (dirs, keys0) = args.partition(_.startsWith("/"))
-    val keys = if (keys0.nonEmpty) keys0.toSeq else Seq("text_bm25_maxscore")
+    // several keys in one JVM
+    val (keys0, dirs) = parseArgs(args.toSeq)
+    val keys = if (keys0.nonEmpty) keys0 else Seq("text_bm25_maxscore")
     val sfDir = dirs.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", 32)

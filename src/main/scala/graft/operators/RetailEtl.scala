@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanShim
 import org.apache.spark.sql.types._
 
 /** Spark-native re-expression of the reference retail ETL
@@ -173,10 +174,27 @@ object RetailEtl {
     * engine doesn't replay in the hot path: columns stay typed from
     * scan to sink. `asTransportStrings`/`convertTyped` remain
     * available for actual wire-format boundaries.
+    *
+    * The summary is the job's one materialization, as in the
+    * reference's load step (loading.py:124-161), which validates one
+    * in-memory frame and writes it to both the CSV and MySQL. This
+    * call scans both sources once and runs the aggregate's shuffle map
+    * stage before it returns ([[PlanShim]]). Every action on the
+    * result, such as [[writeSummary]] followed by
+    * [[graft.sources.SalesJdbc.upsertInto]], reads that shuffle output
+    * and runs only the final aggregate over product-grained rows.
+    * Source errors therefore surface here, not at the first sink.
+    * [[validateSummary]]'s check stays in the final projection, so a
+    * negative total still fails each sink that writes it.
+    *
+    * The result is neither cached nor checkpointed. Each call reads
+    * its sources afresh, and lost shuffle output is recomputed from
+    * the source scans through the result's lineage.
     */
   def pipeline(online: DataFrame, inStore: DataFrame): DataFrame =
-    validateSummary(aggregate(clean(
-      combine(validateColumns(online), validateColumns(inStore)))))
+    validateSummary(PlanShim.executeOnce(
+      aggregate(clean(combine(validateColumns(online), validateColumns(inStore)))),
+      "RetailEtl.pipeline"))
 
   /** Idempotent sink, mirroring the truncate+replace MySQL load and
     * the always-overwritten CSV (loading.py:124-161): a full

@@ -54,24 +54,48 @@ object SalesJdbc {
           "numPartitions" -> cfg.numPartitions.toString)
       }
 
-  /** One-row probe for the partition bounds (pushed down to the
-    * database as min/max — trivial for a btree-indexed key). None
-    * when the table is empty (min/max are NULL): the caller falls
-    * back to an unpartitioned read instead of NPE-ing.
+  private def connect(url: String, user: Option[String],
+                      password: Option[String]): java.sql.Connection = {
+    val props = new java.util.Properties()
+    user.foreach(props.setProperty("user", _))
+    password.foreach(props.setProperty("password", _))
+    java.sql.DriverManager.getConnection(url, props)
+  }
+
+  /** One-row probe for the partition bounds: `SELECT min(col),
+    * max(col) FROM table`, trivial for a btree-indexed key. It runs on
+    * the driver over one plain JDBC connection, not as a Spark job;
+    * the driver needs the JDBC driver anyway, because Spark resolves
+    * the table's schema there. Credentials travel as connection
+    * properties and never appear in the failure message. None when
+    * the table is empty (min/max are NULL): the caller falls back to
+    * an unpartitioned read instead of NPE-ing.
     */
-  def probeBounds(spark: SparkSession, cfg: Config): Option[(Long, Long)] = {
-    val probe = spark.read.format("jdbc")
-      .options(baseOptions(cfg) + ("dbtable" ->
-        s"(SELECT min(${cfg.partitionColumn}) AS lo, max(${cfg.partitionColumn}) AS hi FROM ${cfg.table}) b"))
-      .load()
-      .collect()(0)
-    if (probe.isNullAt(0) || probe.isNullAt(1)) None
-    else Some((probe.getLong(0), probe.getLong(1)))
+  def probeBounds(cfg: Config): Option[(Long, Long)] = {
+    val col = cfg.partitionColumn
+    val sql = s"SELECT min($col), max($col) FROM ${cfg.table}"
+    try {
+      val conn = connect(cfg.url, cfg.user, cfg.password)
+      try {
+        val st = conn.createStatement()
+        try {
+          val rs = st.executeQuery(sql)
+          rs.next()
+          val lo = rs.getLong(1)
+          if (rs.wasNull()) None else Some((lo, rs.getLong(2)))
+        } finally st.close()
+      } finally conn.close()
+    } catch {
+      case e: java.sql.SQLException =>
+        throw new java.sql.SQLException(
+          s"bounds probe of ${cfg.table}.$col failed: ${e.getMessage}",
+          e.getSQLState, e.getErrorCode, e)
+    }
   }
 
   def read(spark: SparkSession, cfg: Config): DataFrame = {
     val bounded = if (cfg.bounds.isDefined) cfg
-      else cfg.copy(bounds = probeBounds(spark, cfg))
+      else cfg.copy(bounds = probeBounds(cfg))
     spark.read.format("jdbc").options(options(bounded)).load()
   }
 
@@ -209,10 +233,7 @@ object SalesJdbc {
           }
         }
         val all = Array.tabulate(cols.length)(identity)
-        val props = new java.util.Properties()
-        user.foreach(props.setProperty("user", _))
-        password.foreach(props.setProperty("password", _))
-        val conn = java.sql.DriverManager.getConnection(url, props)
+        val conn = connect(url, user, password)
         try {
           conn.setAutoCommit(false)
           oneShot match {

@@ -1,8 +1,10 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.{DoNotCleanup, QueryExecution, SQLExecution}
 
 /** Classic-mode bridge between [[Column]] and Catalyst [[Expression]].
   *
@@ -16,4 +18,36 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnShim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+}
+
+/** Run a plan's shuffle map stages once and keep their output as the
+  * input of every later action.
+  *
+  * `executeOnce` plans `df` and calls `execute()` on the physical plan
+  * inside one tracked SQL execution, so listeners and SQL metrics see
+  * the scans. With adaptive execution (graft's default) that call runs
+  * every shuffle map stage and returns the RDD of the final stage; the
+  * returned DataFrame wraps that RDD (`internalCreateDataFrame`), so an
+  * action on it reads the shuffle output and runs only the post-shuffle
+  * operators. With adaptive execution off, the map stages run on the
+  * first action instead, and later actions skip them the same way,
+  * because they share the one shuffle dependency.
+  *
+  * Nothing is cached or checkpointed: the CacheManager never sees the
+  * plan, so a later query over the same sources plans afresh, and the
+  * RDD keeps its full lineage, so lost shuffle output is recomputed
+  * from the sources. The shuffle files are released by the context
+  * cleaner once the returned DataFrame is unreachable.
+  */
+object PlanShim {
+  def executeOnce(df: DataFrame, name: String): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val session = ds.sparkSession
+    // later actions read these shuffle files, so the execution must
+    // not remove them when it ends
+    val qe = new QueryExecution(session, ds.logicalPlan,
+      shuffleCleanupMode = DoNotCleanup)
+    val rdd = SQLExecution.withNewExecutionId(qe, Some(name))(qe.executedPlan.execute())
+    session.internalCreateDataFrame(rdd, ds.schema)
+  }
 }

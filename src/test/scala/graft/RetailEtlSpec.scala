@@ -2,11 +2,18 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.ShuffleDependency
+import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.RaiseError
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graft.PlanShim
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 import graft.operators.RetailEtl
-import graft.sources.SalesCsv
+import graft.sources.{SalesCsv, SalesJdbc}
 
 /** Reference-fidelity spec: reproduces the reference pipeline's own
   * sample data and golden output.
@@ -59,6 +66,18 @@ class RetailEtlSpec extends SparkSpec {
   private def df(rows: Seq[(String, String, String, String, String)]): DataFrame =
     rows.toDF("sale_id", "product_id", "quantity", "sale_amount", "sale_date")
 
+  private val storeGolden = Map(
+    101L -> (6.0, 120.0), 102L -> (5.0, 125.0), 103L -> (3.0, 75.0),
+    104L -> (5.0, 125.0), 105L -> (1.0, 35.5), 106L -> (4.0, 80.0))
+
+  // reference golden sales_summary.csv (store + online samples)
+  private val combinedGolden = Map(
+    101L -> (13.0, 300.0), 102L -> (9.0, 225.0), 103L -> (7.0, 180.0),
+    104L -> (7.0, 165.0), 105L -> (3.0, 78.0), 106L -> (6.0, 135.0))
+
+  private def totals(d: DataFrame): Map[Long, (Double, Double)] =
+    d.collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+
   private def summary(): Map[Long, (Double, Double)] =
     RetailEtl.pipeline(
       RetailEtl.convertTyped(df(onlineRows)),
@@ -74,17 +93,11 @@ class RetailEtlSpec extends SparkSpec {
       RetailEtl.convertTyped(df(storeRows)),
       RetailEtl.convertTyped(df(storeRows).limit(0)))
       .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    assert(result == Map(
-      101L -> (6.0, 120.0), 102L -> (5.0, 125.0), 103L -> (3.0, 75.0),
-      104L -> (5.0, 125.0), 105L -> (1.0, 35.5), 106L -> (4.0, 80.0)))
+    assert(result == storeGolden)
   }
 
   test("combined two-source pipeline matches reference semantics") {
-    // reference golden sales_summary.csv (store + online samples):
-    // 101:13/300, 102:9/225, 103:7/180, 104:7/165, 105:3/78, 106:6/135
-    assert(summary() == Map(
-      101L -> (13.0, 300.0), 102L -> (9.0, 225.0), 103L -> (7.0, 180.0),
-      104L -> (7.0, 165.0), 105L -> (3.0, 78.0), 106L -> (6.0, 135.0)))
+    assert(summary() == combinedGolden)
   }
 
   test("pipeline output equals the reference's actual golden CSV, when present") {
@@ -530,5 +543,130 @@ class RetailEtlSpec extends SparkSpec {
       ords("o_custkey") === reqs("c_custkey"), "left_semi").count()
     assert(apply("orders")._2 === directOrders)
     assert(directOrders > 0L, "fixture must exercise the cascade")
+  }
+
+  // ——— the deployed job: one summary, two sinks ———
+
+  private val etlUrl = "jdbc:derby:memory:graftetl;create=true"
+
+  private def derby(sql: String): Unit = {
+    val conn = java.sql.DriverManager.getConnection(etlUrl)
+    try { val st = conn.createStatement(); try st.execute(sql) finally st.close() }
+    finally conn.close()
+  }
+
+  /** Sample sources as the deployed job reads them: the online rows
+    * from a Derby table through the JDBC extract, the in-store rows
+    * from CSV at `csv`. Both are overwritten in place. */
+  private def deployedSources(
+      online: Seq[(String, String, String, String, String)] = onlineRows,
+      store: Seq[(String, String, String, String, String)] = storeRows,
+      csv: String = Files.createTempDirectory("graft_store").toString + "/in_store")
+      : (DataFrame, DataFrame) = {
+    // Spark quotes the column names, so they stay lower-case
+    RetailEtl.convertTyped(df(online)).write.mode("overwrite")
+      .jdbc(etlUrl, "online_sales", new java.util.Properties())
+    SalesCsv.write(RetailEtl.convertTyped(df(store)), csv)
+    val cfg = SalesJdbc.Config(etlUrl, partitionColumn = "\"sale_id\"",
+      numPartitions = 2)
+    (RetailEtl.convertTyped(SalesJdbc.extractOnlineSales(spark, cfg)),
+      SalesCsv.read(spark, csv))
+  }
+
+  /** Runs `body` under job group `group` and counts the input records
+    * (source rows, not shuffle reads) its jobs' tasks read. */
+  private def inputRecords[T](group: String)(body: => T): (T, Long) = {
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val records = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          e.stageIds.foreach(stages.add(_))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          records.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val out = try body finally sc.clearJobGroup()
+      // deliver every queued task-end event before reading the count
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      (out, records.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("one pipeline result feeds the parquet and Derby sinks without " +
+    "re-reading the sources") {
+    val (online, inStore) = deployedSources()
+    val (summary, scanned) = inputRecords("etl-pipeline")(
+      RetailEtl.pipeline(online, inStore))
+    assert(scanned > 0L, "pipeline itself scans the CSV and JDBC sources")
+    val out = Files.createTempDirectory("graft_sinks").toString + "/summary"
+    try derby("DROP TABLE sales_summary") catch { case _: java.sql.SQLException => }
+    derby("CREATE TABLE sales_summary (product_id BIGINT NOT NULL PRIMARY KEY, " +
+      "total_quantity DOUBLE, total_sale_amount DOUBLE)")
+    val sink = SalesJdbc.Config(etlUrl, table = "sales_summary")
+    val (_, sinkReads) = inputRecords("etl-sinks") {
+      RetailEtl.writeSummary(summary, out)
+      SalesJdbc.upsertInto(summary, sink, Seq("product_id"))
+    }
+    assert(sinkReads === 0L, "both sinks read the summary, not the sources")
+    assert(totals(spark.read.parquet(out)) === combinedGolden)
+    assert(totals(spark.read.jdbc(etlUrl, "sales_summary",
+      new java.util.Properties())) === combinedGolden)
+  }
+
+  test("a second pipeline call reads rewritten sources afresh, and the " +
+    "first result keeps its own totals") {
+    val csv = Files.createTempDirectory("graft_rerun").toString + "/in_store"
+    val first = (RetailEtl.pipeline _).tupled(deployedSources(csv = csv))
+    assert(totals(first) === combinedGolden)
+    // the same table and path, now holding only their first five rows
+    val second = (RetailEtl.pipeline _).tupled(deployedSources(
+      onlineRows.take(5), storeRows.take(5), csv))
+    assert(totals(second) === Map(101L -> (6.0, 120.0), 102L -> (5.0, 120.0),
+      103L -> (4.0, 105.0), 104L -> (2.0, 40.0), 105L -> (1.0, 22.5)))
+    assert(totals(first) === combinedGolden,
+      "a result reads its own shuffle output, not the rewritten sources")
+  }
+
+  test("a negative total still fails the sink with the reference's message") {
+    // every sink runs the validation: it sits above the executed summary
+    val plan = RetailEtl.pipeline(RetailEtl.convertTyped(df(onlineRows)),
+      RetailEtl.convertTyped(df(storeRows))).queryExecution.optimizedPlan
+    assert(plan.collectLeaves().forall(_.isInstanceOf[LogicalRDD]))
+    assert(plan.flatMap(_.expressions).exists(_.exists(_.isInstanceOf[RaiseError])))
+    // a summary executed the way pipeline executes it, with a negative
+    // total, cannot be written
+    val bad = PlanShim.executeOnce(
+      Seq((1L, -5.0, 10.0), (2L, 1.0, 2.0))
+        .toDF("product_id", "quantity", "sale_amount")
+        .transform(RetailEtl.aggregate), "negative-total")
+    val out = Files.createTempDirectory("graft_neg").toString + "/summary"
+    val e = intercept[Exception](
+      RetailEtl.writeSummary(RetailEtl.validateSummary(bad), out))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+    assert(messages.exists(_.contains("Found negative quantities: product 1")))
+  }
+
+  test("the pipeline result is neither cached nor checkpointed and keeps " +
+    "its lineage to the source scans") {
+    val (online, inStore) = deployedSources()
+    val summary = RetailEtl.pipeline(online, inStore)
+    assert(summary.storageLevel === StorageLevel.NONE,
+      "not registered in the session's CacheManager")
+    val roots = summary.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd }
+    assert(roots.size === 1)
+    def lineage(r: RDD[_]): Seq[RDD[_]] = r +: r.dependencies.flatMap(d => lineage(d.rdd))
+    val rdds = lineage(roots.head)
+    assert(rdds.forall(r => !r.isCheckpointed && r.getStorageLevel == StorageLevel.NONE))
+    assert(rdds.exists(_.dependencies.exists(_.isInstanceOf[ShuffleDependency[_, _, _]])))
+    val leaves = rdds.filter(_.dependencies.isEmpty).map(_.getClass.getSimpleName).toSet
+    assert(leaves === Set("FileScanRDD", "JDBCRDD"),
+      "lost shuffle output can be recomputed from both sources")
   }
 }
