@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout.
   *
@@ -97,13 +95,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.localBuilder(cpus, "graft-bench")
       // FAIR job scheduling (r18; corrected by the r18 review): FAIR
       // is a NO-OP without per-chain pool assignment — every TaskSet
       // lands in the single default pool, which is FIFO inside even
@@ -178,7 +171,7 @@ object Bench {
     val primeWarmDir = sys.env.getOrElse("SPARK_GRAFT_PRIME_WARM_DIR",
       "/root/testdata/sf0.001")
     // never warm on the BENCH fixture itself (r18 review): the warm
-    // pass populates every SessionCache under the exact (session,
+    // pass populates every shared artifact under the exact (session,
     // dir) key the timed prime would look up, so warmDir == sfDir
     // would make the timed prime an all-cache-hit ~0 s and every
     // per-key artifact prebuilt untimed — silently meaningless

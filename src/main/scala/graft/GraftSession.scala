@@ -29,12 +29,15 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 
-  /** Local session for tests/benchmarks. */
-  def local(cores: Int = 4, appName: String = "graft-local"): SparkSession = {
-    val s = builder(appName, shufflePartitions = cores)
+  /** The builder behind [[local]], for a caller that adds settings. */
+  def localBuilder(cores: Int, appName: String): SparkSession.Builder =
+    builder(appName, shufflePartitions = cores)
       .master(s"local[$cores]")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+
+  /** Local session for tests/benchmarks. */
+  def local(cores: Int = 4, appName: String = "graft-local"): SparkSession = {
+    val s = localBuilder(cores, appName).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

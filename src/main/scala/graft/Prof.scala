@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 
 /** Dev profiler: job-level wall breakdown of ONE SparkEntry key.
@@ -32,12 +31,8 @@ object Prof {
     val (keys0, dirs) = parseArgs(args.toSeq)
     val keys = if (keys0.nonEmpty) keys0 else Seq("text_bm25_maxscore")
     val sfDir = dirs.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, "graft-prof")
     spark.range(1000000).selectExpr("sum(id * 2)").collect()
     val jobs = new scala.collection.mutable.ArrayBuffer[(Int, Long, Long)]
     val starts = new scala.collection.mutable.HashMap[Int, Long]

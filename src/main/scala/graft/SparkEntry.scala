@@ -56,475 +56,251 @@ object SparkEntry {
       existing = sourceSummary(s, dir, "F"),
       updates = sourceSummary(s, dir, "O"))
 
-  /** Session-scoped shared-relation cache (r17, ADVICE): a TrieMap
-    * keyed by (session, dir) whose entries are EVICTED when the
-    * owning SparkContext ends — a bare TrieMap pins stopped sessions
-    * and their eagerly localCheckpoint'ed blocks for the JVM
-    * lifetime (harmless in the one-session bench/driver processes, a
-    * leak in any long-lived multi-session embedding). Every instance
-    * registers in one global set; the first insert for a CONTEXT
-    * installs a single ApplicationEnd listener (r18: one per
-    * context, not per session — per-session listeners accumulated
-    * on the bus under session churn) that sweeps every session of
-    * that context from every registered cache, and every insert
-    * opportunistically purges entries whose context has already
-    * stopped (covering the insert-after-sweep race). Known
-    * boundary: sessions CHURNED over one long-lived context
-    * (newSession/cloneSession per tenant) hold their CACHE ENTRIES
-    * until that context ends — there is no per-session lifecycle
-    * event to hook (the listener itself no longer grows with churn);
-    * an embedding with per-tenant sessions should reuse them
-    * per (tenant, dir), which is also what makes this cache pay. */
-  private final class SessionCache[V] {
-    private val m = scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), V]
-    SessionCache.all.add(this)
-    def getOrElseUpdate(k: (SparkSession, String), v: => V): V = {
-      SessionCache.hookEviction(k._1)
-      m.getOrElseUpdate(k, v)
-    }
-    def evictContext(sc: org.apache.spark.SparkContext): Unit =
-      m.keySet.filter(_._1.sparkContext eq sc).foreach(m.remove)
-    def evictStopped(): Unit =
-      m.keySet.filter(_._1.sparkContext.isStopped).foreach(m.remove)
-    def countFor(s: SparkSession): Int = m.keySet.count(_._1 eq s)
+  // ---- shared artifacts ------------------------------------------------
+
+  /** Declares a shared artifact: the returned getter looks `name` up in
+    * [[SharedArtifacts]] for (session, dir) and, on a miss, builds it,
+    * billed through [[primeTimed]] under `name`. Each query runs
+    * standalone, so without the store every query of a family would
+    * rebuild the trunk the family shares. */
+  private def shared[V <: AnyRef](name: String)(
+      build: (SparkSession, String) => V): (SparkSession, String) => V = {
+    val key = SharedArtifacts.key[V](name)
+    (s, dir) =>
+      SharedArtifacts.getOrElseUpdate(s, key, dir)(primeTimed(name)(build(s, dir)))
   }
 
-  /** Test hook (r17): live shared-cache entries for `s` across every
-    * registered cache — lets the eviction listener be asserted
-    * without stopping the suite's shared context. */
-  private[graft] def sessionCacheEntries(s: SparkSession): Int = {
-    var n = 0
-    SessionCache.all.forEach(c => n += c.countFor(s))
-    n
-  }
-  private object SessionCache {
-    val all: java.util.Set[SessionCache[_]] =
-      java.util.concurrent.ConcurrentHashMap.newKeySet[SessionCache[_]]()
-    // hooked per CONTEXT, not per session (r18, ADVICE): a
-    // per-session listener meant churned sessions over one long-lived
-    // context accumulated listeners and strong session refs on the
-    // bus until context end — every bus event fanning out to dead
-    // sessions' listeners. One context-level listener sweeps every
-    // session of that context; contexts are few and long-lived by
-    // construction, so the set is bounded.
-    private val hooked = java.util.concurrent.ConcurrentHashMap
-      .newKeySet[org.apache.spark.SparkContext]()
-    /** The ApplicationEnd sweep, callable directly (the r18 test
-      * hook — posting a synthetic ApplicationEnd onto a LIVE bus
-      * also feeds Spark's own AppStatus/SQL listeners on a context
-      * still in use). */
-    def sweepContext(sc: org.apache.spark.SparkContext): Unit = {
-      all.forEach(_.evictContext(sc))
-      // un-hook only a STOPPED context (isStopped is already true
-      // inside onApplicationEnd — SparkContext.stop() flips the flag
-      // before posting the event). A direct sweep on a LIVE context
-      // (the reclamation/test path) must keep its `hooked` entry:
-      // removing it would make the next cache touch addSparkListener
-      // a SECOND identical listener while the first is still on the
-      // bus — re-growing per sweep+touch cycle, the exact
-      // accumulation this r18 change exists to prevent.
-      if (sc.isStopped) hooked.remove(sc)
-      ()
-    }
-    def hookEviction(s: SparkSession): Unit = {
-      // opportunistic reclamation on the way in (r17 review): an
-      // entry whose owning context already stopped can never be
-      // swept by its own listener again — either it was inserted in
-      // the race window after the sweep ran, or the listener fired
-      // before the insert existed. Purging here bounds that window
-      // to "until any session touches any cache next".
-      all.forEach(_.evictStopped())
-      // and drop dead contexts whose listener never fired (bus
-      // already stopped at the time of the post) — bounds `hooked`'s
-      // strong SparkContext refs under context churn
-      hooked.removeIf(_.isStopped)
-      val sc = s.sparkContext
-      if (hooked.add(sc))
-        sc.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onApplicationEnd(
-                e: org.apache.spark.scheduler.SparkListenerApplicationEnd)
-                : Unit = sweepContext(sc)
-          })
-    }
-  }
+  /** A shared relation, materialized by [[pinned]]. */
+  private def sharedFrame(name: String)(
+      plan: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
+    shared(name)((s, dir) => pinned(plan(s, dir)))
 
-  /** Test hook (r18): run the context sweep directly — what the
-    * ApplicationEnd listener does, without poisoning a live bus
-    * with a synthetic end-of-application event. */
-  private[graft] def sessionCacheSweep(
-      sc: org.apache.spark.SparkContext): Unit =
-    SessionCache.sweepContext(sc)
+  /** The one materialization of shared relations: an eager local
+    * checkpoint, which truncates the lineage and pins the rows in the
+    * block manager. Right for a single-JVM driver session; at scale the
+    * same role is a table persisted per corpus snapshot (DISK_ONLY, not
+    * executor memory — see the [[Dedup.BlockingTrunk]] scaladoc). */
+  private def pinned(plan: DataFrame): DataFrame = plan.localCheckpoint(true)
 
   /** Default-parameter [[Dedup.blockingTrunk]] over the documents
-    * table (shingle sets + df-capped candidate pairs) and the
-    * verified Jaccard pair relation over it, each materialized ONCE
-    * per (session, dir). Eleven near-dup queries consume one or both:
-    * the eight diagnostic/policy queries share the PAIRS, and the
-    * containment / edit-distance / minhash variants share the TRUNK
-    * (same blocking, different per-pair verify). Corpus blocking is
-    * the expensive half of every one of them; the driver runs
-    * queries standalone, so without this each report re-tokenizes
-    * and re-inverts the corpus. `localCheckpoint` (eager) truncates
-    * lineage and pins the results in the block manager — candidates/
-    * pairs are pair-count-sized; the shingle sets are corpus-sized,
-    * which local mode tolerates, and which a production pipeline
-    * would persist per corpus snapshot as a table (DISK_ONLY, not
-    * executor memory — see the [[Dedup.BlockingTrunk]] scaladoc).
-    * Caches are keyed on (session, dir) and EVICTED when the
-    * session's context ends (see [[SessionCache]]) — in the
-    * one-session driver/bench JVMs that is process exit, but a
-    * long-lived multi-session embedding must not pin stopped
-    * sessions and their checkpoint blocks forever. */
-  private val setsCache =
-    new SessionCache[DataFrame]
-  private def sharedShingleSets(s: SparkSession, dir: String): DataFrame =
-    setsCache.getOrElseUpdate((s, dir), primeTimed("shingle_sets")(
-      Dedup.blockingTrunk(Tables.documents(s, dir)).sets
-        .localCheckpoint(true)))
+    * table (shingle sets + df-capped candidate pairs) and the verified
+    * Jaccard pair relation over it. Eleven near-dup queries consume one
+    * or both: the eight diagnostic/policy queries share the PAIRS, and
+    * the containment / edit-distance / minhash variants share the
+    * TRUNK (same blocking, different per-pair verify). Candidates and
+    * pairs are pair-count-sized; the shingle sets are corpus-sized. */
+  private val sharedShingleSets = sharedFrame("shingle_sets")((s, dir) =>
+    Dedup.blockingTrunk(Tables.documents(s, dir)).sets)
+  // sets and candidates are separate artifacts: minhash/groups consume
+  // only the sets, and must not pay the inverted-index candidate build
+  // as a side effect of asking for them
+  private val sharedBlockedCands = sharedFrame("blocked_cands")((s, dir) =>
+    Dedup.candidatesOf(sharedShingleSets(s, dir)))
+  private def sharedTrunk(s: SparkSession, dir: String): Dedup.BlockingTrunk =
+    Dedup.BlockingTrunk(sharedShingleSets(s, dir), sharedBlockedCands(s, dir))
+  private val sharedBlockedPairs = sharedFrame("blocked_pairs")((s, dir) =>
+    Dedup.blockedJaccardPairsOf(sharedTrunk(s, dir)))
+
   // the 20-threshold Gopher metric+flag pass over the quality
-  // fixture: the fused kernels and segment folds run ONCE per
-  // (session, dir) — gate, apply, cost, and the quality profile all
-  // read this relation (the stream key keeps its own full code path:
-  // the streaming plan IS its product)
-  private val gopherFlaggedCache =
-    new SessionCache[DataFrame]
-  private def sharedGopherFlagged(s: SparkSession, dir: String): DataFrame =
-    gopherFlaggedCache.getOrElseUpdate((s, dir), primeTimed("gopher_flagged")(
-      TextAnalysis.gopherFlagged(
-        TextAnalysis.synthQualityCorpus(Tables.documents(s, dir)))
-        .localCheckpoint(true)))
+  // fixture: gate, apply, cost, and the quality profile all read this
+  // relation (the stream key keeps its own full code path: the
+  // streaming plan IS its product)
+  private val sharedGopherFlagged = sharedFrame("gopher_flagged")((s, dir) =>
+    TextAnalysis.gopherFlagged(
+      TextAnalysis.synthQualityCorpus(Tables.documents(s, dir))))
 
-  // perceptual-hash signature store: the decode runs ONCE per
-  // (session, dir) — production persists these per corpus snapshot;
-  // all three phash keys read the store instead of re-decoding
-  private val phashSigCache =
-    new SessionCache[DataFrame]
-  private def sharedPhashSigs(s: SparkSession, dir: String): DataFrame =
-    phashSigCache.getOrElseUpdate((s, dir), primeTimed("phash_sigs")(
-      operators.Multimodal.phashSignatures(
-        operators.Multimodal.synthMixedCorpus(Tables.documents(s, dir)))
-        .localCheckpoint(true)))
+  // perceptual-hash and perceptual-audio signature stores: production
+  // persists these per corpus snapshot; the phash and audio keys read
+  // the store instead of re-decoding
+  private val sharedPhashSigs = sharedFrame("phash_sigs")((s, dir) =>
+    operators.Multimodal.phashSignatures(
+      operators.Multimodal.synthMixedCorpus(Tables.documents(s, dir))))
+  private val sharedAudioSigs = sharedFrame("audio_sigs")((s, dir) =>
+    operators.Multimodal.audioSignatures(
+      operators.Multimodal.synthScaledWavCorpus(Tables.documents(s, dir))))
 
-  // perceptual-audio signature store, same economics as the phash
-  // store: decode once per (session, dir), both audio keys read it
-  private val audioSigCache =
-    new SessionCache[DataFrame]
-  private def sharedAudioSigs(s: SparkSession, dir: String): DataFrame =
-    audioSigCache.getOrElseUpdate((s, dir), primeTimed("audio_sigs")(
-      operators.Multimodal.audioSignatures(
-        operators.Multimodal.synthScaledWavCorpus(Tables.documents(s, dir)))
-        .localCheckpoint(true)))
+  // the perceptual GROUP closures: the groups key and its keep-best
+  // twin read the same min-label relation, so the pointer-doubling
+  // closure runs once
+  private val sharedPhashGroups = sharedFrame("phash_groups")((s, dir) =>
+    operators.Multimodal.phashGroups(
+      operators.Multimodal.synthMixedCorpus(Tables.documents(s, dir)),
+      sigs = Some(sharedPhashSigs(s, dir))))
+  private val sharedAudioGroups = sharedFrame("audio_groups")((s, dir) =>
+    operators.Multimodal.audioSigGroups(
+      operators.Multimodal.synthScaledWavCorpus(Tables.documents(s, dir)),
+      sigs = Some(sharedAudioSigs(s, dir))))
 
-  // the perceptual GROUP closures, pinned (r14): the groups key and
-  // its keep-best twin read the SAME min-label relation — without
-  // the pin each key re-runs the pointer-doubling closure
-  private val phashGroupsCache =
-    new SessionCache[DataFrame]
-  private def sharedPhashGroups(s: SparkSession, dir: String): DataFrame =
-    phashGroupsCache.getOrElseUpdate((s, dir), primeTimed("phash_groups")(
-      operators.Multimodal.phashGroups(
-        operators.Multimodal.synthMixedCorpus(Tables.documents(s, dir)),
-        sigs = Some(sharedPhashSigs(s, dir)))
-        .localCheckpoint(true)))
-  private val audioGroupsCache =
-    new SessionCache[DataFrame]
-  private def sharedAudioGroups(s: SparkSession, dir: String): DataFrame =
-    audioGroupsCache.getOrElseUpdate((s, dir), primeTimed("audio_groups")(
-      operators.Multimodal.audioSigGroups(
-        operators.Multimodal.synthScaledWavCorpus(Tables.documents(s, dir)),
-        sigs = Some(sharedAudioSigs(s, dir)))
-        .localCheckpoint(true)))
+  // offset-robust winnowed audio fingerprints over the offset fixture
+  // (the pairs and incremental keys read them) and their group closure
+  // (groups + keep-best)
+  private val sharedAudioWinnowSigs = sharedFrame("audio_winnow_sigs")((s, dir) =>
+    operators.Multimodal.audioWinnowSignatures(
+      operators.Multimodal.synthOffsetWavCorpus(Tables.documents(s, dir))))
+  private val sharedAudioWinnowGroups = sharedFrame("audio_winnow_groups")((s, dir) =>
+    operators.Multimodal.audioWinnowGroups(
+      operators.Multimodal.synthOffsetWavCorpus(Tables.documents(s, dir)),
+      sigs = Some(sharedAudioWinnowSigs(s, dir))))
 
-  // offset-robust winnowed audio fingerprint store (r14): decode +
-  // winnow runs ONCE per (session, dir) over the offset fixture;
-  // the pairs and incremental keys read the store
-  private val audioWinnowSigCache =
-    new SessionCache[DataFrame]
-  private def sharedAudioWinnowSigs(s: SparkSession, dir: String): DataFrame =
-    audioWinnowSigCache.getOrElseUpdate((s, dir),
-      primeTimed("audio_winnow_sigs")(
-        operators.Multimodal.audioWinnowSignatures(
-          operators.Multimodal.synthOffsetWavCorpus(Tables.documents(s, dir)))
-          .localCheckpoint(true)))
+  // crop-robust winnowed image fingerprints over the crop fixture (all
+  // four image-winnow keys read them) and their group closure
+  private val sharedImageWinnowSigs = sharedFrame("image_winnow_sigs")((s, dir) =>
+    operators.Multimodal.imageWinnowSignatures(
+      operators.Multimodal.synthCropPngCorpus(Tables.documents(s, dir))))
+  private val sharedImageWinnowGroups = sharedFrame("image_winnow_groups")((s, dir) =>
+    operators.Multimodal.imageWinnowGroups(
+      operators.Multimodal.synthCropPngCorpus(Tables.documents(s, dir)),
+      sigs = Some(sharedImageWinnowSigs(s, dir))))
 
-  // the winnow-tier GROUP closure, pinned (r15): the groups key and
-  // the new keep-best key read the same min-label relation
-  private val audioWinnowGroupsCache =
-    new SessionCache[DataFrame]
-  private def sharedAudioWinnowGroups(s: SparkSession, dir: String): DataFrame =
-    audioWinnowGroupsCache.getOrElseUpdate((s, dir),
-      primeTimed("audio_winnow_groups")(
-        operators.Multimodal.audioWinnowGroups(
-          operators.Multimodal.synthOffsetWavCorpus(Tables.documents(s, dir)),
-          sigs = Some(sharedAudioWinnowSigs(s, dir)))
-          .localCheckpoint(true)))
-
-  // crop-robust winnowed image fingerprint store (r15): decode +
-  // tile + winnow runs ONCE per (session, dir) over the crop
-  // fixture; all four image-winnow keys read the store
-  private val imageWinnowSigCache =
-    new SessionCache[DataFrame]
-  private def sharedImageWinnowSigs(s: SparkSession, dir: String): DataFrame =
-    imageWinnowSigCache.getOrElseUpdate((s, dir),
-      primeTimed("image_winnow_sigs")(
-        operators.Multimodal.imageWinnowSignatures(
-          operators.Multimodal.synthCropPngCorpus(Tables.documents(s, dir)))
-          .localCheckpoint(true)))
-
-  // the image-winnow GROUP closure, pinned (r15): groups + keep-best
-  // read the same min-label relation
-  private val imageWinnowGroupsCache =
-    new SessionCache[DataFrame]
-  private def sharedImageWinnowGroups(s: SparkSession, dir: String): DataFrame =
-    imageWinnowGroupsCache.getOrElseUpdate((s, dir),
-      primeTimed("image_winnow_groups")(
-        operators.Multimodal.imageWinnowGroups(
-          operators.Multimodal.synthCropPngCorpus(Tables.documents(s, dir)),
-          sigs = Some(sharedImageWinnowSigs(s, dir)))
-          .localCheckpoint(true)))
-
-  // the quality-FIXTURE corpus's dup-gram store + Bloom (r14): the
-  // nightly artifact the composed intake gate probes — built from
-  // the same fixture corpus the gate streams
-  private val qualityDupStoreCache = new SessionCache[
-    (DataFrame, org.apache.spark.util.sketch.BloomFilter)]
-  private def sharedQualityDupStore(s: SparkSession, dir: String)
-      : (DataFrame, org.apache.spark.util.sketch.BloomFilter) =
-    qualityDupStoreCache.getOrElseUpdate((s, dir),
-      primeTimed("quality_dup_store") {
-        val store = TextAnalysis.dupNgramStore(
-          TextAnalysis.synthIntakeCorpus(Tables.documents(s, dir)))
-          .localCheckpoint(true)
-        (store, graft.streaming.DocStream.storeBloom(store))
-      })
+  // the quality-FIXTURE corpus's dup-gram store + Bloom: the nightly
+  // artifact the composed intake gate probes, built from the same
+  // fixture corpus the gate streams
+  private val sharedQualityDupStore = shared("quality_dup_store") { (s, dir) =>
+    val store = pinned(TextAnalysis.dupNgramStore(
+      TextAnalysis.synthIntakeCorpus(Tables.documents(s, dir))))
+    (store, graft.streaming.DocStream.storeBloom(store))
+  }
 
   // the HISTORY slice's dup-gram store (doc_id % 10 <> 0 — what the
   // nightly batch would have persisted before today's delta): the
   // incremental curation gate probes it; grams duplicated only via
   // the delta must NOT appear, so this is NOT a filter of the
   // full-corpus store
-  private val histDupStoreCache =
-    new SessionCache[DataFrame]
-  private def sharedHistDupStore(s: SparkSession, dir: String): DataFrame =
-    histDupStoreCache.getOrElseUpdate((s, dir),
-      primeTimed("hist_dup_store")(
-        TextAnalysis.dupNgramStore(
-          Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0))
-          .localCheckpoint(true)))
+  private val sharedHistDupStore = sharedFrame("hist_dup_store")((s, dir) =>
+    TextAnalysis.dupNgramStore(
+      Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0)))
 
-  // corpus-duplication coverage trunk: the doc-grain relation both
-  // the source rollup and the per-doc gate read — the corpus-wide
-  // 8-gram window runs ONCE per (session, dir)
   // the family's ONE corpus-wide n-gram window, pinned as the
   // DUPLICATED-occurrence relation (proportional to duplicated
-  // positions, not the corpus) — the coverage fold, the gate, the
-  // r13 span extraction, and the intake store all derive from it
-  private val dupOccCache =
-    new SessionCache[DataFrame]
-  private def sharedDupNgramOcc(s: SparkSession, dir: String): DataFrame =
-    dupOccCache.getOrElseUpdate((s, dir), primeTimed("dup_ngram_occ")(
-      TextAnalysis.dupNgramDupOcc(
-        TextAnalysis.dupNgramToks(Tables.documents(s, dir)))
-        .localCheckpoint(true)))
+  // positions, not the corpus): the coverage fold, the gate, the span
+  // extraction, and the intake store all derive from it
+  private val sharedDupNgramOcc = sharedFrame("dup_ngram_occ")((s, dir) =>
+    TextAnalysis.dupNgramDupOcc(
+      TextAnalysis.dupNgramToks(Tables.documents(s, dir))))
 
-  // the fused curate FLAGS relation (r15): one row per doc carrying
-  // every per-doc gate decision + residual billing — the intake gate
-  // table a nightly pipeline persists. Both composition keys (full +
-  // funnel) read this one materialization; the gate chain's corpus
-  // work runs once per (session, dir) and bills to prime like every
-  // other trunk.
-  private val curateFlagsCache =
-    new SessionCache[DataFrame]
-  private def sharedCurateFlags(s: SparkSession, dir: String): DataFrame =
-    curateFlagsCache.getOrElseUpdate((s, dir), primeTimed("curate_flags")(
-      operators.Curation.curateFlags(Tables.documents(s, dir),
-        gopherFlags = Some(sharedGopherFlagged(s, dir)),
-        dupDocs = Some(sharedDupNgramDocs(s, dir)),
-        dupStarts = Some(operators.TextAnalysis.startsOfOcc(
-          sharedDupNgramOcc(s, dir))),
-        embeddings = Some(Tables.embeddings(s, dir)))
-        .localCheckpoint(true)))
+  // the corpus-duplication coverage trunk: the doc-grain relation both
+  // the source rollup and the per-doc gate read
+  private val sharedDupNgramDocs = sharedFrame("dup_ngram_docs")((s, dir) =>
+    TextAnalysis.dupNgramDocsOf2(
+      TextAnalysis.dupNgramToks(Tables.documents(s, dir)),
+      TextAnalysis.startsOfOcc(sharedDupNgramOcc(s, dir))))
 
-  private val dupNgramDocsCache =
-    new SessionCache[DataFrame]
-  private def sharedDupNgramDocs(s: SparkSession, dir: String): DataFrame =
-    dupNgramDocsCache.getOrElseUpdate((s, dir), primeTimed("dup_ngram_docs")(
-      TextAnalysis.dupNgramDocsOf2(
-        TextAnalysis.dupNgramToks(Tables.documents(s, dir)),
-        TextAnalysis.startsOfOcc(sharedDupNgramOcc(s, dir)))
-        .localCheckpoint(true)))
+  // the fused curate FLAGS relation: one row per doc carrying every
+  // per-doc gate decision + residual billing — the intake gate table a
+  // nightly pipeline persists. Both composition keys (full + funnel)
+  // read it, so the gate chain's corpus work runs once.
+  private val sharedCurateFlags = sharedFrame("curate_flags")((s, dir) =>
+    operators.Curation.curateFlags(Tables.documents(s, dir),
+      gopherFlags = Some(sharedGopherFlagged(s, dir)),
+      dupDocs = Some(sharedDupNgramDocs(s, dir)),
+      dupStarts = Some(operators.TextAnalysis.startsOfOcc(
+        sharedDupNgramOcc(s, dir))),
+      embeddings = Some(Tables.embeddings(s, dir))))
 
-  // the persisted dup-gram STORE + its Bloom, built once per
-  // (session, dir): production writes both as nightly artifacts next
-  // to each other, and the intake gates probe the Bloom map-side
-  // before the store join ever sees a row (r14). Without the shared
-  // build, every gate construction would pay the store count +
-  // Bloom aggregate as serial driver actions.
-  private val dupStoreCache = new SessionCache[
-    (DataFrame, org.apache.spark.util.sketch.BloomFilter)]
-  private def sharedDupStore(s: SparkSession, dir: String)
-      : (DataFrame, org.apache.spark.util.sketch.BloomFilter) =
-    dupStoreCache.getOrElseUpdate((s, dir), primeTimed("dup_store_bloom") {
-      val store = TextAnalysis.dupNgramStore(Tables.documents(s, dir),
-        occ = Some(sharedDupNgramOcc(s, dir))).localCheckpoint(true)
-      (store, graft.streaming.DocStream.storeBloom(store))
-    })
-
-  private val candsCache =
-    new SessionCache[DataFrame]
-  // sets and candidates cache separately: minhash/groups consume only
-  // the sets, and must not pay the inverted-index candidate build as
-  // a side effect of asking for them
-  private def sharedTrunk(s: SparkSession, dir: String): Dedup.BlockingTrunk = {
-    val sets = sharedShingleSets(s, dir)
-    Dedup.BlockingTrunk(sets,
-      candsCache.getOrElseUpdate((s, dir), primeTimed("blocked_cands")(
-        Dedup.candidatesOf(sets).localCheckpoint(true))))
+  // the persisted dup-gram STORE + its Bloom: production writes both
+  // as nightly artifacts next to each other, and the intake gates probe
+  // the Bloom map-side before the store join ever sees a row. Without
+  // the shared build, every gate construction would pay the store
+  // count + Bloom aggregate as serial driver actions.
+  private val sharedDupStore = shared("dup_store_bloom") { (s, dir) =>
+    val store = pinned(TextAnalysis.dupNgramStore(Tables.documents(s, dir),
+      occ = Some(sharedDupNgramOcc(s, dir))))
+    (store, graft.streaming.DocStream.storeBloom(store))
   }
-  private val pairsCache =
-    new SessionCache[DataFrame]
-  private def sharedBlockedPairs(s: SparkSession, dir: String): DataFrame =
-    pairsCache.getOrElseUpdate((s, dir), primeTimed("blocked_pairs")(
-      Dedup.blockedJaccardPairsOf(sharedTrunk(s, dir))
-        .localCheckpoint(true)))
 
-  /** Persisted [[AnnIndex]] lake layouts, built ONCE per (session,
-    * dir) under target/ann-index (gitignored, overwrite-safe): the
-    * `ann_index_*` probe keys are the 100 TB serving story —
-    * partition-pruned probes over a build-once index — promoted to
-    * driver keys now that a query fn can self-contain the build.
-    * Build parameters mirror the in-memory tiers (IVF nlist=16;
-    * IVF-PQ m=16/nCodes=32, the r9 retune), so probe recall equals
-    * the corresponding in-memory tier and sits under the same
-    * [[RecallFloors]] gate. */
+  /** Persisted [[AnnIndex]] lake layouts under target/ann-index
+    * (gitignored, overwrite-safe): the `ann_index_*` probe keys are
+    * partition-pruned probes over a build-once index. Build parameters
+    * mirror the in-memory tiers (IVF nlist=16; IVF-PQ m=16/nCodes=32),
+    * so probe recall equals the corresponding in-memory tier and sits
+    * under the same [[RecallFloors]] gate. */
   private def annIndexBaseDir(dir: String): String =
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get("target", "ann-index",
         java.lang.Integer.toHexString(dir.hashCode))).toString
-  // SPLIT caches (r18 review): the base pair (full-corpus ivf/ivfpq)
-  // and the incremental pair are independent consumers' artifacts —
-  // the delete-lifecycle copy and the plain probe keys read only the
-  // base pair, the *_incr probes only the incremental pair. One
-  // fused getter made a SPARK_GRAFT_ONLY delete-key run build all
-  // four (violating the lazy-subset-prime invariant: a subset never
-  // pays for indexes its keys never read). Within each pair the
-  // builds are independent (distinct output paths, distinct
-  // trainers), each a chain of small driver-fold jobs —
-  // stage-latency-bound, not CPU-bound — so they submit CONCURRENTLY
-  // (Spark's scheduler interleaves jobs from multiple threads; a
-  // real cluster runs them as parallel pipelines), and each pair's
-  // input count is paid ONCE and handed to both sibling builds
-  // (pickCentroids' thinning is a pure function of n — identical
-  // centroids, one count job per sibling saved).
-  private val annBaseIndexCache =
-    new SessionCache[(String, String)]
-  private def annBaseIndexPaths(s: SparkSession, dir: String): (String, String) =
-    annBaseIndexCache.getOrElseUpdate((s, dir), primeTimed("ann_indexes") {
-      val base = annIndexBaseDir(dir)
-      val emb = Tables.embeddings(s, dir)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val nFull = emb.count()
-      // the sibling futures run on pooled EC threads that do NOT
-      // inherit the chain's scheduler-pool property — re-pin it
-      def sib[T](body: => T): Future[T] = Future {
-        val sc = s.sparkContext
-        sc.setLocalProperty("spark.scheduler.pool", "prime_ann")
-        try body finally sc.setLocalProperty("spark.scheduler.pool", null)
-      }
-      Await.result(Future.sequence(Seq(
-        sib(primeTimed("ann_ivf_build")(
-          AnnIndex.buildIvf(emb, s"$base/ivf", knownN = nFull))),
-        sib(primeTimed("ann_ivfpq_build")(
-          AnnIndex.buildIvfPq(emb, s"$base/ivfpq", m = 16, nCodes = 32,
-            knownN = nFull))))), Duration.Inf)
-      (s"$base/ivf", s"$base/ivfpq")
-    })
+  // The base pair (full-corpus ivf/ivfpq) and the incremental pair are
+  // separate artifacts: the delete-lifecycle copy and the plain probe
+  // keys read only the base pair, the *_incr probes only the
+  // incremental pair, and a subset run never pays for indexes its keys
+  // never read. Within each pair the builds are independent (distinct
+  // output paths, distinct trainers), each a chain of small
+  // driver-fold jobs — stage-latency-bound, not CPU-bound — so they
+  // submit concurrently, and the pair's input count is paid once and
+  // handed to both (pickCentroids' thinning is a pure function of n).
+  private val annBaseIndexPaths = shared("ann_indexes") { (s, dir) =>
+    val base = annIndexBaseDir(dir)
+    val emb = Tables.embeddings(s, dir)
+    val nFull = emb.count()
+    SharedArtifacts.concurrently(s.sparkContext)(
+      "prime_ann" -> (() => primeTimed("ann_ivf_build")(
+        AnnIndex.buildIvf(emb, s"$base/ivf", knownN = nFull))),
+      "prime_ann" -> (() => primeTimed("ann_ivfpq_build")(
+        AnnIndex.buildIvfPq(emb, s"$base/ivfpq", m = 16, nCodes = 32,
+          knownN = nFull))))
+    (s"$base/ivf", s"$base/ivfpq")
+  }
   // the incremental twins: built on the even half ("yesterday"), the
   // odd half appended against the STORED centroids (and, for IVF-PQ,
   // STORED codebooks) — no retrain, no history rewrite (the
   // daily-ingest shape)
-  private val annIncrIndexCache =
-    new SessionCache[(String, String)]
-  private def annIncrIndexPaths(s: SparkSession, dir: String): (String, String) =
-    annIncrIndexCache.getOrElseUpdate((s, dir), primeTimed("ann_incr_indexes") {
-      val base = annIndexBaseDir(dir)
-      val emb = Tables.embeddings(s, dir)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val even = emb.filter(col("vec_id") % 2 === 0)
-      val nEven = even.count()
-      // re-pin the scheduler pool on the sibling futures' threads
-      // (pooled EC threads don't inherit the chain's property)
-      def sib[T](body: => T): Future[T] = Future {
-        val sc = s.sparkContext
-        sc.setLocalProperty("spark.scheduler.pool", "prime_ann_incr")
-        try body finally sc.setLocalProperty("spark.scheduler.pool", null)
-      }
-      Await.result(Future.sequence(Seq(
-        sib(primeTimed("ann_ivf_incr") {
-          AnnIndex.buildIvf(even, s"$base/ivf_incr", knownN = nEven)
-          AnnIndex.appendIvf(emb.filter(col("vec_id") % 2 =!= 0), s"$base/ivf_incr")
-        }),
-        sib(primeTimed("ann_ivfpq_incr") {
-          AnnIndex.buildIvfPq(even,
-            s"$base/ivfpq_incr", m = 16, nCodes = 32, knownN = nEven)
-          AnnIndex.appendIvfPq(emb.filter(col("vec_id") % 2 =!= 0), s"$base/ivfpq_incr")
-        }))), Duration.Inf)
-      (s"$base/ivf_incr", s"$base/ivfpq_incr")
-    })
+  private val annIncrIndexPaths = shared("ann_incr_indexes") { (s, dir) =>
+    val base = annIndexBaseDir(dir)
+    val emb = Tables.embeddings(s, dir)
+    val even = emb.filter(col("vec_id") % 2 === 0)
+    val nEven = even.count()
+    SharedArtifacts.concurrently(s.sparkContext)(
+      "prime_ann_incr" -> (() => primeTimed("ann_ivf_incr") {
+        AnnIndex.buildIvf(even, s"$base/ivf_incr", knownN = nEven)
+        AnnIndex.appendIvf(emb.filter(col("vec_id") % 2 =!= 0), s"$base/ivf_incr")
+      }),
+      "prime_ann_incr" -> (() => primeTimed("ann_ivfpq_incr") {
+        AnnIndex.buildIvfPq(even,
+          s"$base/ivfpq_incr", m = 16, nCodes = 32, knownN = nEven)
+        AnnIndex.appendIvfPq(emb.filter(col("vec_id") % 2 =!= 0), s"$base/ivfpq_incr")
+      }))
+    (s"$base/ivf_incr", s"$base/ivfpq_incr")
+  }
 
-  /** The DELETE-lifecycle index (r15): its own layout copy (the
-    * shared probes' index stays immutable — a driver key must never
-    * mutate an artifact other keys read), same build params, plus a
-    * tombstone log covering vec_id % 7 == 3 (~14% of the corpus —
-    * the GDPR-takedown / retention-expiry shape). The delete-probe
-    * and compaction-plan keys read it; compaction APPLY mutates, so
-    * it runs only in AnnIndexSpec against a scratch copy. */
-  private val annDelIndexCache =
-    new SessionCache[(String, String)]
-  private def annDelIndexPaths(s: SparkSession, dir: String): (String, String) =
-    annDelIndexCache.getOrElseUpdate((s, dir), primeTimed("ann_del_indexes") {
-      val base = java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get("target", "ann-index",
-          java.lang.Integer.toHexString(dir.hashCode))).toString
-      val emb = Tables.embeddings(s, dir)
-      val ids = emb.filter(col("vec_id") % 7 === 3).select("vec_id")
-      def freshLog(p: String): Unit = {
-        // start from an empty log: a stale log from a previous JVM on
-        // the same target dir would still read correctly (tombstones()
-        // dedups), but the fresh build's contract is "exactly this
-        // delete batch"
-        val t = new org.apache.hadoop.fs.Path(s"$p/tombstones")
-        t.getFileSystem(s.sparkContext.hadoopConfiguration).delete(t, true)
-        AnnIndex.deleteIvf(ids, p)
-      }
-      // the delete layouts are buildIvf/buildIvfPq over the SAME
-      // corpus at the SAME params as the shared immutable indexes —
-      // the build is deterministic, so a file copy IS the build
-      // (r18: two full rebuild passes dropped from the first
-      // delete-key run)
-      val (ivfSrc, ivfpqSrc) = annBaseIndexPaths(s, dir)
-      val conf = s.sparkContext.hadoopConfiguration
-      def copyLayout(src: String, dst: String): Unit = {
-        val sp = new org.apache.hadoop.fs.Path(src)
-        val dp = new org.apache.hadoop.fs.Path(dst)
-        val fs = dp.getFileSystem(conf)
-        fs.delete(dp, true)
-        org.apache.hadoop.fs.FileUtil.copy(fs, sp, fs, dp, false, true, conf)
-      }
-      copyLayout(ivfSrc, s"$base/ivf_del")
-      freshLog(s"$base/ivf_del")
-      copyLayout(ivfpqSrc, s"$base/ivfpq_del")
-      freshLog(s"$base/ivfpq_del")
-      (s"$base/ivf_del", s"$base/ivfpq_del")
-    })
+  /** The DELETE-lifecycle index: its own layout copy (the shared
+    * probes' index stays immutable — a driver key must never mutate an
+    * artifact other keys read), same build params, plus a tombstone
+    * log covering vec_id % 7 == 3 (~14% of the corpus — the
+    * GDPR-takedown / retention-expiry shape). The delete-probe and
+    * compaction-plan keys read it; compaction APPLY mutates, so it runs
+    * only in AnnIndexSpec against a scratch copy. */
+  private val annDelIndexPaths = shared("ann_del_indexes") { (s, dir) =>
+    val base = annIndexBaseDir(dir)
+    val emb = Tables.embeddings(s, dir)
+    val ids = emb.filter(col("vec_id") % 7 === 3).select("vec_id")
+    def freshLog(p: String): Unit = {
+      // start from an empty log: a stale log from a previous JVM on
+      // the same target dir would still read correctly (tombstones()
+      // dedups), but the fresh build's contract is "exactly this
+      // delete batch"
+      val t = new org.apache.hadoop.fs.Path(s"$p/tombstones")
+      t.getFileSystem(s.sparkContext.hadoopConfiguration).delete(t, true)
+      AnnIndex.deleteIvf(ids, p)
+    }
+    // the delete layouts are buildIvf/buildIvfPq over the SAME corpus
+    // at the SAME params as the shared immutable indexes — the build
+    // is deterministic, so a file copy IS the build
+    val (ivfSrc, ivfpqSrc) = annBaseIndexPaths(s, dir)
+    val conf = s.sparkContext.hadoopConfiguration
+    def copyLayout(src: String, dst: String): Unit = {
+      val sp = new org.apache.hadoop.fs.Path(src)
+      val dp = new org.apache.hadoop.fs.Path(dst)
+      val fs = dp.getFileSystem(conf)
+      fs.delete(dp, true)
+      org.apache.hadoop.fs.FileUtil.copy(fs, sp, fs, dp, false, true, conf)
+    }
+    copyLayout(ivfSrc, s"$base/ivf_del")
+    freshLog(s"$base/ivf_del")
+    copyLayout(ivfpqSrc, s"$base/ivfpq_del")
+    freshLog(s"$base/ivfpq_del")
+    (s"$base/ivf_del", s"$base/ivfpq_del")
+  }
 
-  /** Per-artifact build timings, recorded INSIDE each shared-cache
+  /** Per-artifact build timings, recorded INSIDE each shared-artifact
     * getter — whoever triggers a build (the full-run
     * [[primeSharedCaches]], or a single key under the bench's lazy
     * subset prime) bills it to its artifact name. Bench dumps this
@@ -538,16 +314,15 @@ object SparkEntry {
   val primeDetail: scala.collection.concurrent.TrieMap[String, Double] =
     scala.collection.concurrent.TrieMap.empty
 
-  /** EXCLUSIVE per-store build time (r17, verdict): [[primeDetail]]
-    * minus any nested builds triggered on the SAME thread, so a
-    * prime regression names exactly ONE store instead of every
-    * ancestor that happened to wrap it (blocked_pairs' inclusive
-    * time moves whenever shingle_sets does; its exclusive time only
-    * moves when the pair verify itself does). The ann_* children
-    * build on their own threads inside `ann_indexes` /
-    * `ann_incr_indexes`, so those parents' exclusive time equals
-    * their wall — a regression there still names the child, because
-    * the child has its own entry. */
+  /** EXCLUSIVE per-store build time: [[primeDetail]] minus any nested
+    * builds triggered on the SAME thread, so a prime regression names
+    * exactly ONE store instead of every ancestor that happened to wrap
+    * it (blocked_pairs' inclusive time moves whenever shingle_sets
+    * does; its exclusive time only moves when the pair verify itself
+    * does). The ann_* children build on their own threads inside
+    * `ann_indexes` / `ann_incr_indexes`, so those parents' exclusive
+    * time equals their wall — a regression there still names the
+    * child, because the child has its own entry. */
   val primeSelf: scala.collection.concurrent.TrieMap[String, Double] =
     scala.collection.concurrent.TrieMap.empty
   private val primeChildTime = new ThreadLocal[Double] {
@@ -565,103 +340,69 @@ object SparkEntry {
     }
   }
 
-  /** Force-build every shared cache for (session, dir). Bench calls
-    * this ONCE and reports the time as its own line item — otherwise
-    * min-of-two timing hides the build (first run pays it, second
-    * hits the cache) and the near-dup family's numbers silently
-    * become verify-only, invisible to regression tracking. The
-    * [[AnnIndex]] builds are billed the same way: probes are the
-    * steady-state cost, the build is the amortized one-time cost. */
   /** The basket family's shared pair engine: ONE guarded pair-count
-    * build (the [[graft.operators.Analytics.basketAffinity]]
-    * relation at the family defaults) pinned and reused by
-    * pagerank and the triangle census — at 100 TB the pair build is
-    * the dominant shuffle, and five queries re-deriving it is four
-    * wasted passes over the fact. Billed to `shared_prime`. */
-  private val basketPairsCache =
-    new SessionCache[DataFrame]
-  private def sharedBasketPairs(s: SparkSession, dir: String): DataFrame =
-    // derived from the PINNED trunk (identical composition to
-    // basketAffinity) — the second guarded-basket pass the old
-    // direct build paid is gone
-    basketPairsCache.getOrElseUpdate((s, dir), primeTimed("basket_pairs")(
-      operators.Analytics.basketAffinityOf(sharedBasketTrunk(s, dir))
-        .localCheckpoint(true)))
-  private val basketTrunkCache =
-    new SessionCache[DataFrame]
-  private def sharedBasketTrunk(s: SparkSession, dir: String): DataFrame =
-    basketTrunkCache.getOrElseUpdate((s, dir), primeTimed("basket_trunk")(
-      operators.Analytics.guardedBasketsShared(Tables.lineitem(s, dir))
-        .localCheckpoint(true)))
+    * build (the [[graft.operators.Analytics.basketAffinity]] relation
+    * at the family defaults) reused by pagerank and the triangle
+    * census — at 100 TB the pair build is the dominant shuffle, and
+    * five queries re-deriving it is four wasted passes over the fact.
+    * Derived from the pinned trunk (identical composition to
+    * basketAffinity). */
+  private val sharedBasketTrunk = sharedFrame("basket_trunk")((s, dir) =>
+    operators.Analytics.guardedBasketsShared(Tables.lineitem(s, dir)))
+  private val sharedBasketPairs = sharedFrame("basket_pairs")((s, dir) =>
+    operators.Analytics.basketAffinityOf(sharedBasketTrunk(s, dir)))
 
   // shared lexical trunk: one tokenize+count pass (doc_id, tok, tf)
   // for the BM25 family — at 100 TB this is the postings table a
   // search pipeline persists per corpus snapshot
-  private val tfCache =
-    new SessionCache[DataFrame]
-  private def sharedTfPostings(s: SparkSession, dir: String): DataFrame =
-    tfCache.getOrElseUpdate((s, dir), primeTimed("tf_postings")(
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          explode(operators.TextAnalysis.tokens(col("text"))).as("tok"))
-        .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-        .localCheckpoint(true)))
+  private val sharedTfPostings = sharedFrame("tf_postings")((s, dir) =>
+    Tables.documents(s, dir)
+      .select(col("doc_id"),
+        explode(operators.TextAnalysis.tokens(col("text"))).as("tok"))
+      .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf")))
 
   // the SCORED postings index (doc_id, tok, tf, term) on top of the
   // tf trunk — BM25 term weights are an index-time artifact (an IR
   // system never recomputes idf per query), so the build is billed
   // to prime like the other persisted indexes
-  private val bm25Cache =
-    new SessionCache[DataFrame]
-  private def sharedBm25Postings(s: SparkSession, dir: String): DataFrame =
-    bm25Cache.getOrElseUpdate((s, dir), primeTimed("bm25_index")(
-      operators.Similarity.bm25Postings(Tables.documents(s, dir),
-        tfPostings = Some(sharedTfPostings(s, dir)))
-        .localCheckpoint(true)))
+  private val sharedBm25Postings = sharedFrame("bm25_index")((s, dir) =>
+    operators.Similarity.bm25Postings(Tables.documents(s, dir),
+      tfPostings = Some(sharedTfPostings(s, dir))))
 
+  /** Force-build every shared artifact for (session, dir). Bench calls
+    * this ONCE and reports the time as its own line item — otherwise
+    * min-of-two timing hides the build (first run pays it, second
+    * hits the store) and the near-dup family's numbers silently
+    * become verify-only, invisible to regression tracking. The
+    * [[AnnIndex]] builds are billed the same way: probes are the
+    * steady-state cost, the build is the amortized one-time cost. */
   def primeSharedCaches(s: SparkSession, dir: String): Unit = {
     primeDetail.clear(); primeSelf.clear()
-    // independent chains (disjoint caches, disjoint inputs beyond
+    // independent chains (disjoint artifacts, disjoint inputs beyond
     // the shared parquet scans) submit concurrently: each is a
     // sequence of small jobs whose wall cost is stage-scheduling
     // latency, not CPU — exactly what multi-threaded job submission
     // overlaps (and what a cluster runs as parallel pipelines).
     // Under spark.scheduler.mode=FAIR each chain submits into its
     // OWN pool (auto-created on first use; the root pool FAIR-shares
-    // slots between pools): without the per-chain pool assignment
-    // every TaskSet lands in the single default pool, which is FIFO
-    // INSIDE even under FAIR mode — a no-op (r18 review; verified
-    // against FairSchedulableBuilder.buildDefaultPool in the
-    // shipped spark-core jar). Under FIFO mode the property is
-    // ignored, so the assignment is safe either way. The property
-    // is thread-local to the submitting thread and cleared in
-    // `finally`, so pooled ExecutionContext threads never leak a
-    // prime pool onto later bench-key submissions.
+    // slots between pools): the single default pool is FIFO inside
+    // even under FAIR mode. Under FIFO mode the pool is ignored.
     // Billing: each getter times itself, so prime_detail still
     // attributes cost per artifact; shared_prime = slowest chain.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    def chain[T](pool: String)(body: => T): Future[T] = Future {
-      val sc = s.sparkContext
-      sc.setLocalProperty("spark.scheduler.pool", s"prime_$pool")
-      try body finally sc.setLocalProperty("spark.scheduler.pool", null)
-    }
-    Await.result(Future.sequence(Seq[Future[Any]](
-      chain("blocked")(sharedBlockedPairs(s, dir)),
-      chain("phash")(sharedPhashSigs(s, dir)),
-      chain("ngram")(sharedDupNgramDocs(s, dir)),
-      chain("basket") { sharedBasketTrunk(s, dir); sharedBasketPairs(s, dir) },
-      chain("bm25")(sharedBm25Postings(s, dir)),
-      chain("entity")(sharedEntityGroups(s, dir)),
-      chain("ann")(annBaseIndexPaths(s, dir)),
-      chain("ann_incr")(annIncrIndexPaths(s, dir)))), Duration.Inf)
-    ()
+    SharedArtifacts.concurrently(s.sparkContext)(
+      "prime_blocked" -> (() => sharedBlockedPairs(s, dir)),
+      "prime_phash" -> (() => sharedPhashSigs(s, dir)),
+      "prime_ngram" -> (() => sharedDupNgramDocs(s, dir)),
+      "prime_basket" -> { () => sharedBasketTrunk(s, dir); sharedBasketPairs(s, dir) },
+      "prime_bm25" -> (() => sharedBm25Postings(s, dir)),
+      "prime_entity" -> (() => sharedEntityGroups(s, dir)),
+      "prime_ann" -> (() => annBaseIndexPaths(s, dir)),
+      "prime_ann_incr" -> (() => annIncrIndexPaths(s, dir)))
   }
 
   /** Lazy subset prime (SPARK_GRAFT_ONLY bench runs): CONSTRUCTING a
-    * key's DataFrame eagerly materializes exactly the shared caches
-    * it consumes (the getters checkpoint on first touch), so a
+    * key's DataFrame eagerly materializes exactly the shared artifacts
+    * it consumes (the getters materialize on first touch), so a
     * subset run never pays for indexes its keys never read. Build
     * failures surface in the timed run, not here. */
   def primeForKeys(s: SparkSession, dir: String,
@@ -689,33 +430,19 @@ object SparkEntry {
       partials = Seq(sum("quantity").as("q"), sum("sale_amount").as("a")),
       merge = Seq(sum("q").as("total_quantity"), sum("a").as("total_sale_amount")))
 
-  // the pinned CMS sketch relation shared by both text_cms keys
-  // (r16): ≤ depth·width rows, one tokenize+explode pass per
-  // (session, dir) instead of one per key
-  private val cmsSketchCache =
-    new SessionCache[DataFrame]
-  private def sharedCmsSketch(s: SparkSession, dir: String): DataFrame =
-    cmsSketchCache.getOrElseUpdate((s, dir), primeTimed("cms_sketch")(
-      operators.CountMin.sketch(Tables.documents(s, dir))
-        .localCheckpoint(true)))
+  // the CMS sketch relation shared by both text_cms keys: ≤ depth·width
+  // rows, one tokenize+explode pass instead of one per key
+  private val sharedCmsSketch = sharedFrame("cms_sketch")((s, dir) =>
+    operators.CountMin.sketch(Tables.documents(s, dir)))
 
-  // the pinned ML stores the RTBF pair erases from (r16): the
-  // fingerprint rows and the winnow-fp inversion are each built ONCE
-  // per (session, dir) — without the pin, plan and apply would pay
-  // the md5+minhash and tokenize+winnow passes independently
-  private val fpRowsCache =
-    new SessionCache[DataFrame]
-  private def sharedFingerprintRows(s: SparkSession, dir: String): DataFrame =
-    fpRowsCache.getOrElseUpdate((s, dir), primeTimed("fp_rows")(
-      operators.DedupStore.fingerprintRows(Tables.documents(s, dir))
-        .localCheckpoint(true)))
-  private val winnowFpsCache =
-    new SessionCache[DataFrame]
-  private def sharedWinnowFps(s: SparkSession, dir: String): DataFrame =
-    winnowFpsCache.getOrElseUpdate((s, dir), primeTimed("winnow_fps")(
-      Tables.documents(s, dir).select(col("doc_id"), explode(
-          graft.functions.gf.winnowFingerprints(col("text"), 3, 4)).as("fp"))
-        .localCheckpoint(true)))
+  // the ML stores the RTBF pair erases from: without them, plan and
+  // apply would pay the md5+minhash and tokenize+winnow passes
+  // independently
+  private val sharedFingerprintRows = sharedFrame("fp_rows")((s, dir) =>
+    operators.DedupStore.fingerprintRows(Tables.documents(s, dir)))
+  private val sharedWinnowFps = sharedFrame("winnow_fps")((s, dir) =>
+    Tables.documents(s, dir).select(col("doc_id"), explode(
+      graft.functions.gf.winnowFingerprints(col("text"), 3, 4)).as("fp")))
 
   // the synthetic file manifest with snapshot lineage shared by the
   // lake retention keys (vacuum plan/apply + as-of read): one
@@ -730,43 +457,28 @@ object SparkEntry {
           min("doc_id") % 7 + 1 + max("doc_id") % 4)
           .as("removed_snap"))
 
-  // shared entity-resolution chain (r15): the dirty-CRM fixture, its
-  // blocked fuzzy pairs, and the transitive closure — built once and
-  // read by all three etl_entity_* keys (pairs feed the closure, the
-  // closure feeds survivorship; rebuilding the chain per key would
-  // re-pay the blocked join three times)
-  private val crmRecsCache =
-    new SessionCache[DataFrame]
-  private def sharedCrmRecs(s: SparkSession, dir: String): DataFrame =
-    crmRecsCache.getOrElseUpdate((s, dir), primeTimed("crm_recs")(
-      operators.EntityResolution.synthCrmCorpus(Tables.customer(s, dir))
-        .localCheckpoint(true)))
-  private val entityPairsCache =
-    new SessionCache[DataFrame]
-  private def sharedEntityPairs(s: SparkSession, dir: String): DataFrame =
-    entityPairsCache.getOrElseUpdate((s, dir), primeTimed("entity_pairs")(
-      operators.EntityResolution.entityPairs(sharedCrmRecs(s, dir))
-        .localCheckpoint(true)))
-  private val entityGroupsCache =
-    new SessionCache[DataFrame]
-  private def sharedEntityGroups(s: SparkSession, dir: String): DataFrame =
-    entityGroupsCache.getOrElseUpdate((s, dir), primeTimed("entity_groups")(
-      operators.EntityResolution.entityGroups(sharedCrmRecs(s, dir),
-        sharedEntityPairs(s, dir)).localCheckpoint(true)))
+  // shared entity-resolution chain: the dirty-CRM fixture, its blocked
+  // fuzzy pairs, and the transitive closure — read by all three
+  // etl_entity_* keys (pairs feed the closure, the closure feeds
+  // survivorship; rebuilding the chain per key would re-pay the
+  // blocked join three times)
+  private val sharedCrmRecs = sharedFrame("crm_recs")((s, dir) =>
+    operators.EntityResolution.synthCrmCorpus(Tables.customer(s, dir)))
+  private val sharedEntityPairs = sharedFrame("entity_pairs")((s, dir) =>
+    operators.EntityResolution.entityPairs(sharedCrmRecs(s, dir)))
+  private val sharedEntityGroups = sharedFrame("entity_groups")((s, dir) =>
+    operators.EntityResolution.entityGroups(sharedCrmRecs(s, dir),
+      sharedEntityPairs(s, dir)))
   // the HISTORY entity store (base k%7≠0 + pos feeds, resolved by
   // their own closure) the incremental/stream intake keys probe —
   // what yesterday's nightly batch would have persisted
-  private val entityStoreCache =
-    new SessionCache[DataFrame]
-  private def sharedEntityHistStore(s: SparkSession, dir: String): DataFrame =
-    entityStoreCache.getOrElseUpdate((s, dir), primeTimed("entity_store") {
-      val hist = sharedCrmRecs(s, dir)
-        .filter((col("rec_id") % 4).isin(0L, 2L) && col("rec_id") % 28 =!= 0)
-      operators.EntityResolution.entityStore(hist,
-        operators.EntityResolution.entityGroups(hist,
-          operators.EntityResolution.entityPairs(hist)))
-        .localCheckpoint(true)
-    })
+  private val sharedEntityHistStore = sharedFrame("entity_store") { (s, dir) =>
+    val hist = sharedCrmRecs(s, dir)
+      .filter((col("rec_id") % 4).isin(0L, 2L) && col("rec_id") % 28 =!= 0)
+    operators.EntityResolution.entityStore(hist,
+      operators.EntityResolution.entityGroups(hist,
+        operators.EntityResolution.entityPairs(hist)))
+  }
   // the arriving delta: the web/legacy feeds plus brand-new base
   // records (k % 7 == 0 ⇔ rec_id % 28 == 0) with no history trace
   private def crmDelta(s: SparkSession, dir: String): DataFrame =
@@ -1309,9 +1021,9 @@ object SparkEntry {
     // hash-checked against the DuckDB FNV replay (swap decodeStub
     // for a real encoder and only the feature values change).
     "mm_pooled_topk" -> ((s, dir) => {
-      val pooled = Multimodal.pooledFeatures(Tables.documents(s, dir))
-        .select(col("doc_id").as("vec_id"), col("embedding"))
-        .localCheckpoint(true) // decode once; corpus + query side share it
+      // decode once; corpus + query side share it
+      val pooled = pinned(Multimodal.pooledFeatures(Tables.documents(s, dir))
+        .select(col("doc_id").as("vec_id"), col("embedding")))
       Similarity.bruteForceTopK(pooled,
         pooled.filter(col("vec_id") % 50 === 0), k = 10)
     }),

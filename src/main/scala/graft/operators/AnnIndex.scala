@@ -51,67 +51,55 @@ object AnnIndex {
   /** Run independent build-side writes on concurrent threads —
     * Spark's scheduler interleaves jobs submitted from multiple
     * threads, so a build's driver-sized model writes stop
-    * serializing in front of its corpus-sized layout write. The
-    * CALLING thread's scheduler-pool property (if any) is re-pinned
-    * on each worker thread: pooled ExecutionContext threads don't
-    * inherit it, and without the pin a FAIR-scheduled caller's
-    * writes would drop into the default pool. */
+    * serializing in front of its corpus-sized layout write. Each
+    * write runs in the CALLING thread's scheduler pool. */
   private def concurrently(sc: org.apache.spark.SparkContext)
                           (fs: (() => Unit)*): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val pool = Option(sc.getLocalProperty("spark.scheduler.pool"))
-    Await.result(
-      scala.concurrent.Future.sequence(fs.map(f => Future {
-        pool.foreach(p => sc.setLocalProperty("spark.scheduler.pool", p))
-        try f()
-        finally pool.foreach(_ =>
-          sc.setLocalProperty("spark.scheduler.pool", null))
-      })),
-      Duration.Inf)
+    val pool = sc.getLocalProperty("spark.scheduler.pool")
+    graft.SharedArtifacts.concurrently(sc)(fs.map(pool -> _): _*)
   }
 
-  /** The broadcastable model state back from disk. */
-  /** Session-scoped MODEL-STATE memo (r19): a serving probe loads an
+  /** Session-scoped MODEL-STATE memo: a serving probe loads an
     * index's centroids/codebooks once and keeps them — re-reading
     * nlist rows of immutable model parquet per probe batch is a
     * Spark job (file listing + scan + collect) paid for nothing.
-    * Keyed by (session, dir, directory stamp): the stamp folds every
-    * file's (name, length, mtime), so [[rebuildIvf]]'s in-place
+    * Entries live in [[graft.SharedArtifacts]] per (session, model
+    * dir), so they are evicted with the session's context, and each
+    * carries the dir's [[dirStamp]]: [[rebuildIvf]]'s in-place
     * centroid rewrite — the one mutation of model files this layout
-    * has — misses the memo and reloads. Appends/deletes touch only
+    * has — changes the stamp, and a stamp mismatch reloads and
+    * replaces the entry. Appends/deletes touch only
     * `vectors`/`tombstones`, never the model dirs, so their hits are
-    * correct by construction. Stale entries for a rewritten dir are
-    * dropped on reload (same (session, dir) prefix), so the memo
-    * holds O(live indexes) driver-sized arrays, not history. */
-  private val modelCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Long), AnyRef]
-  private def dirStamp(spark: SparkSession, dir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).foldLeft(0L) { (acc, st) =>
+    * correct by construction. */
+  private val modelMemo =
+    graft.SharedArtifacts.key[(Long, AnyRef)]("ann_model")
+
+  /** Folds every file's (name, length, mtime) in name order, so the
+    * stamp does not depend on the order the file system lists them. */
+  private[graft] def stampOf(statuses: Seq[org.apache.hadoop.fs.FileStatus]): Long =
+    statuses.sortBy(_.getPath.getName).foldLeft(0L) { (acc, st) =>
       var h = acc * 1000003L + st.getPath.getName.hashCode
       h = h * 1000003L + st.getLen
       h * 1000003L + st.getModificationTime
     }
+  private def dirStamp(spark: SparkSession, dir: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    stampOf(p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(p).toSeq)
   }
   private def cachedModel[T <: AnyRef](spark: SparkSession, dir: String)
                                       (load: => T): T = {
-    val key = (spark, dir, dirStamp(spark, dir))
-    modelCache.get(key) match {
-      case Some(v) => v.asInstanceOf[T]
-      case None =>
+    val stamp = dirStamp(spark, dir)
+    graft.SharedArtifacts.get(spark, modelMemo, dir) match {
+      case Some((`stamp`, v)) => v.asInstanceOf[T]
+      case _ =>
         val v = load
-        // drop superseded stamps of the same dir before inserting
-        modelCache.keys
-          .filter(k => k._1 == spark && k._2 == dir && k != key)
-          .foreach(modelCache.remove)
-        modelCache.putIfAbsent(key, v)
+        graft.SharedArtifacts.put(spark, modelMemo, dir, (stamp, v))
         v
     }
   }
 
+  /** The broadcastable model state back from disk. */
   def loadCentroids(spark: SparkSession, path: String): Array[Array[Float]] =
     cachedModel(spark, s"$path/centroids") {
       spark.read.parquet(s"$path/centroids")

@@ -473,4 +473,17 @@ class AnnIndexSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$base/ivf/vectors.staging")),
       "re-staged rebuild must clean up the staging marker")
   }
+
+  test("directory stamp does not depend on listing order") {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    def st(name: String, len: Long, mtime: Long) =
+      new FileStatus(len, false, 1, 1L, mtime, new Path(s"/idx/centroids/$name"))
+    val files = Seq(st("_SUCCESS", 0L, 10L), st("part-0.parquet", 812L, 11L),
+      st("part-1.parquet", 640L, 12L))
+    val stamp = AnnIndex.stampOf(files)
+    assert(AnnIndex.stampOf(files.reverse) === stamp)
+    assert(AnnIndex.stampOf(Seq(files(1), files(2), files(0))) === stamp)
+    assert(AnnIndex.stampOf(files.updated(1, st("part-0.parquet", 812L, 99L))) !== stamp,
+      "a rewritten file must change the stamp")
+  }
 }

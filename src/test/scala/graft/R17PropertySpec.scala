@@ -122,114 +122,6 @@ class R17PropertySpec extends SparkSpec {
     }
   }
 
-  test("SessionCache eviction (r17, ADVICE; r18: direct sweep hook): " +
-    "the context sweep clears every session of the context — churned " +
-    "sessions included — without stopping it") {
-    // touch one cached getter on the suite session AND on a churned
-    // newSession of the same context: the r18 context-level sweep
-    // must clear BOTH (the r17 per-session listener would have
-    // needed one listener each — the bus-growth ADVICE item)
-    SparkEntry.queries("text_cms_token_freq")(spark, "/root/testdata/sf0.001")
-    val churned = spark.newSession()
-    SparkEntry.queries("text_cms_token_freq")(churned, "/root/testdata/sf0.001")
-    assert(SparkEntry.sessionCacheEntries(spark) > 0 &&
-      SparkEntry.sessionCacheEntries(churned) > 0,
-      "touching a cms key must populate its shared cache per session")
-    // invoke the sweep the ApplicationEnd listener runs, DIRECTLY
-    // (r18, ADVICE: posting a synthetic ApplicationEnd onto the
-    // live bus also feeds Spark's own AppStatus/SQL listeners on a
-    // context still in use — a corruption hazard for later suites)
-    SparkEntry.sessionCacheSweep(spark.sparkContext)
-    assert(SparkEntry.sessionCacheEntries(spark) === 0,
-      "the context sweep must evict the suite session's entries")
-    assert(SparkEntry.sessionCacheEntries(churned) === 0,
-      "the context sweep must evict churned sessions' entries too")
-    // and the caches keep working afterwards (rebuild on next touch)
-    SparkEntry.queries("text_cms_token_freq")(spark, "/root/testdata/sf0.001")
-    assert(SparkEntry.sessionCacheEntries(spark) > 0,
-      "a swept cache must rebuild on the next touch, not wedge")
-  }
-
-  /** The bus listeners whose class lives in the graft package — the
-    * eviction hook's anonymous listener is the only graft-authored
-    * listener ever registered. Reflection because SparkContext
-    * .listenerBus is private[spark] (public at the bytecode level). */
-  private def graftBusListeners: Seq[AnyRef] = {
-    val bus = spark.sparkContext.getClass
-      .getMethod("listenerBus").invoke(spark.sparkContext)
-    bus.getClass.getMethod("listeners").invoke(bus)
-      .asInstanceOf[java.util.List[AnyRef]]
-      .toArray.toSeq.asInstanceOf[Seq[AnyRef]]
-      .filter(_.getClass.getName.startsWith("graft."))
-  }
-
-  test("SessionCache listener registration (r18 review): sweep+touch " +
-    "cycles on a LIVE context never stack a second bus listener, and " +
-    "the REAL registered listener's ApplicationEnd callback sweeps") {
-    SparkEntry.queries("text_cms_token_freq")(spark, "/root/testdata/sf0.001")
-    assert(graftBusListeners.size === 1,
-      "exactly one context-level eviction listener on the bus")
-    // the regression shape: a direct sweep on the live context used
-    // to drop the context from `hooked`, so the next cache touch
-    // re-registered a DUPLICATE listener while the first stayed on
-    // the bus — one extra listener per sweep+touch cycle
-    (1 to 3).foreach { _ =>
-      SparkEntry.sessionCacheSweep(spark.sparkContext)
-      SparkEntry.queries("text_cms_token_freq")(spark, "/root/testdata/sf0.001")
-    }
-    assert(graftBusListeners.size === 1,
-      "a live-context sweep must not make the next touch stack a " +
-        "duplicate listener on the bus")
-    // drive the REAL registered listener object's callback (not the
-    // bus, not the test hook): covers the wiring from registration
-    // through onApplicationEnd to the sweep
-    assert(SparkEntry.sessionCacheEntries(spark) > 0)
-    val ev = org.apache.spark.scheduler.SparkListenerApplicationEnd(0L)
-    graftBusListeners.foreach(l =>
-      l.asInstanceOf[org.apache.spark.scheduler.SparkListener]
-        .onApplicationEnd(ev))
-    assert(SparkEntry.sessionCacheEntries(spark) === 0,
-      "the registered listener's own onApplicationEnd must sweep")
-    SparkEntry.queries("text_cms_token_freq")(spark, "/root/testdata/sf0.001")
-    assert(SparkEntry.sessionCacheEntries(spark) > 0,
-      "caches must rebuild after the listener-driven sweep")
-  }
-
-  test("prime_self is exclusive: never exceeds the inclusive " +
-    "prime_detail, and a nesting parent's self-time drops") {
-    // trailing slash = a distinct (session, dir) cache key, so the
-    // chain rebuilds even if another suite primed the plain dir.
-    // split_leakage_pairs consumes sharedBlockedPairs, whose build
-    // nests shingle_sets + blocked_cands on the same thread — the
-    // nesting case the exclusive-time deduction exists for (the
-    // r17 review caught the earlier choice of key building no
-    // nested artifact, which left the assertion below vacuous)
-    val dir = "/root/testdata/sf0.001/"
-    SparkEntry.primeForKeys(spark, dir, Seq("split_leakage_pairs"))
-    assert(SparkEntry.primeSelf.nonEmpty, "prime must record builds")
-    assert(SparkEntry.primeDetail.contains("blocked_pairs") &&
-      SparkEntry.primeDetail.contains("blocked_cands"),
-      "the chosen key must actually build the nested chain — " +
-        "otherwise the nesting assertion below is vacuous")
-    SparkEntry.primeSelf.foreach { case (k, self) =>
-      val wall = SparkEntry.primeDetail(k)
-      assert(self >= 0 && self <= wall + 1e-9,
-        s"$k: exclusive $self must sit within inclusive $wall")
-    }
-    // blocked_pairs builds shingle_sets + blocked_cands inside it on
-    // the same thread — its exclusive time must shed that child time
-    for (parent <- Seq("blocked_pairs")
-         if SparkEntry.primeDetail.contains(parent) &&
-           SparkEntry.primeDetail.contains("blocked_cands")) {
-      val wall = SparkEntry.primeDetail(parent)
-      val self = SparkEntry.primeSelf(parent)
-      val child = SparkEntry.primeDetail("blocked_cands")
-      assert(self <= wall - child + 1e-9,
-        s"$parent self ($self) must exclude the nested blocked_cands " +
-          s"build ($child of $wall)")
-    }
-  }
-
   test("dqCalibrationOneScan ≡ dqCalibration row-for-row; columns " +
     "resolve case-insensitively; ambiguity and absence throw by name") {
     import graft.operators.RetailEtl
