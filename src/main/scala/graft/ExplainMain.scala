@@ -1,126 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
-/** Dev tool: dump formatted physical plans for the flagship queries
-  * (docs/PLANS.md is generated from this output).
+/** Dev tool: dump physical plans for driver keys (docs/PLANS.md is
+  * generated from this output). With no arguments it explains every
+  * key in [[SparkEntry.queries]], sorted; arguments name the keys.
+  *
+  * `GRAFT_EXPLAIN_OUT=<dir>` writes one formatted-mode file per key
+  * (`<dir>/<key>_<suffix>.txt`, suffix from `GRAFT_EXPLAIN_SUFFIX`,
+  * default `before`) instead of the PLANS.md stream, so two builds'
+  * plans can be diffed file by file.
   */
 object ExplainMain {
   def main(a: Array[String]): Unit = {
     val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
-    val names = if (a.nonEmpty) a.toSeq else Seq(
-      "etl_sales_summary", "q5_regional_revenue", "q_customer_enrich",
-      "q_asof_join", "dedup_minhash_lsh", "ann_bruteforce_topk",
-      "ann_pq_topk", "ann_ivfpq_topk", "docs_pack_sequences",
-      "text_lm_score", "q_nation_volume", "sample_uniform_k_agg",
-      "q3_bloom_pruned", "q_sole_blame_supplier", "text_decontaminate",
-      "q_topn_per_group_agg", "text_winnow_dedup", "events_audience_overlap",
-      "dedup_ngram_blocked", "q_pareto_revenue", "q_interval_join",
-      "dedup_incremental_pairs", "sample_mixture", "q_profit_nation_year",
-      "ann_rerank", "docs_source_cap", "sketch_compact",
-      "docs_context_chunks", "docs_curate_capped", "stream_curate_gate",
-      "docs_shuffle_shard", "docs_token_budget", "dedup_blocked_suppress",
-      "docs_curate_full", "q_gini_revenue", "q_supplier_hhi", "events_inter_event_gaps", "q_cart_abandonment", "docs_vocab_growth", "etl_cdc_apply", "etl_table_diff", "q_skyline",
-      "sample_poisson_k", "ann_filtered_topk", "dedup_edit_distance",
-      "q_price_fill", "q_brand_trend", "mm_near_dup_blobs", "q_abc_class",
-      "q_order_backlog", "events_common_paths", "docs_perplexity_filter",
-      "docs_augment_dropout", "etl_dq_profile",
-      "dedup_source_matrix", "dedup_source_rate",
-      "docs_source_policy_apply", "dedup_cluster_sizes",
-      "stream_funnel", "dedup_ngram_contain",
-      "text_pmi_bigrams", "events_attribution",
-      "events_key_skew", "docs_quality_dup_profile",
-      "etl_dim_asof_enrich", "etl_dim_asof_coverage",
-      "sample_temperature", "docs_curate_temperature",
-      "dedup_embedding_groups", "stream_scd2",
-      "dedup_embedding_groups_lsh", "mm_pooled_topk",
-      "ann_index_ivf_probe", "ann_index_ivfpq_probe",
-      "etl_dq_profile_approx", "events_user_lifespan_approx",
-      "q_rolling_revenue", "q_copurchase_pagerank",
-      "events_deseasonalized_anomaly", "events_bot_flag",
-      "docs_interleave_order", "emb_pca_project", "ann_pca_topk",
-      "etl_backfill_plan", "stream_bot_flag",
-      // r9 final batch
-      "etl_fd_violations", "etl_referential_integrity",
-      "etl_check_constraints", "etl_benford_check",
-      "events_rolling_active_users", "events_rolling_active_approx",
-      "q_revenue_changepoint", "q_purchase_streaks", "q_decile_lift",
-      "split_stratified", "emb_dim_stats", "emb_centroid_drift",
-      "dedup_lsh_band_stats", "text_source_divergence",
-      "events_value_psi", "events_markov_stationary",
-      "stream_source_cap", "stream_dq_profile",
-      // r9 third-continuation batch
-      "q_copurchase_triangles", "q_revenue_autocorr", "q_basket_chi2",
-      "q_survival_curve", "q_holt_forecast", "etl_freshness",
-      "etl_grain_check", "events_session_cooccur", "events_type_psi",
-      "events_disorder_profile", "events_audience_overlap_exact",
-      "text_readability", "text_tokenizer_fertility",
-      "split_group_assign", "split_leakage_pairs", "emb_pair_histogram",
-      "mm_format_psi", "docs_curate_funnel", "stream_freshness",
-      // r9 fourth-continuation batch
-      "ann_rrf_hybrid", "emb_hubness", "events_ab_ttest",
-      "events_ab_sequential", "events_ab_cuped",
-      // r10 batch
-      "events_ab_mannwhitney", "events_ab_mde", "stream_ab_readout",
-      "events_attribution_markov", "text_bm25_topk", "lake_zorder_plan",
-      "emb_kmeans_assign", "emb_label_outliers", "ann_mmr_diverse",
-      "ann_lsh_topk", "mm_decode_png",
-      "events_ab_srm", "q_revenue_sample_estimate",
-      // r11 batch
-      "mm_decode_wav", "events_sketch_calibration",
-      "ann_index_ivfpq_append_probe", "mm_audio_features",
-      "ann_matryoshka_topk", "text_bm25_maxscore", "text_bpe_train", "text_bpe_vocab",
-      "dedup_exact_jaccard_pairs",
-      // r12 batch
-      "mm_phash_pairs", "mm_phash_dedup", "text_repetition_profile",
-      "text_bpe_apply", "text_dup_ngram_mass", "docs_gopher_gate",
-      "docs_gopher_apply", "docs_gopher_cost", "stream_gopher_gate",
-      "mm_phash_groups", "lake_compaction_plan",
-      "docs_dup_ngram_corpus", "docs_dup_line_removal",
-      "mm_phash_incremental", "lake_file_skipping",
-      "docs_dup_ngram_apply", "stream_compaction_monitor",
-      "dedup_embedding_incremental", "dedup_keep_best",
-      "stream_token_budget",
-      // r13 batch
-      "docs_gopher_quality", "docs_dup_spans", "stream_dup_ngram_gate",
-      "lake_compaction_apply", "docs_dup_spans_apply",
-      "docs_quality_drift", "stream_quality_drift", "stream_dup_span_scrub",
-      "mm_audio_sig_pairs", "mm_audio_sig_dedup", "mm_audio_sig_incremental",
-      "mm_audio_sig_groups",
-      // r14 batch
-      "lake_zorder_apply", "mm_phash_keep_best", "mm_audio_keep_best",
-      "text_decontaminate_semantic", "stream_semantic_gate",
-      "mm_audio_winnow_pairs", "mm_audio_winnow_incremental",
-      "mm_audio_winnow_groups", "docs_curate_incremental",
-      "mm_audio_winnow_dedup", "stream_intake_gate",
-      // r15 batch
-      "mm_phash_winnow_pairs", "mm_phash_winnow_dedup",
-      "mm_phash_winnow_groups", "mm_phash_winnow_incremental",
-      "mm_phash_winnow_keep_best", "mm_audio_winnow_keep_best",
-      "ann_index_delete_probe", "ann_index_ivfpq_delete_probe",
-      "ann_index_compact_plan", "ann_index_health", "stream_ann_probe",
-      "text_quality_lr_train", "text_quality_lr_score",
-      "stream_quality_lr",
-      // r15 second batch
-      "etl_entity_pairs", "etl_entity_groups", "etl_entity_golden",
-      "etl_entity_incremental", "stream_entity_match",
-      "text_cms_sketch", "text_cms_token_freq", "stream_cms_sketch",
-      "docs_cluster_temperature", "mm_scene_cuts", "mm_shot_stats",
-      "lake_vacuum_plan", "text_lm_kn_score", "etl_anonymity_audit",
-      "etl_rtbf_plan", "etl_rtbf_apply", "q_holtwinters_forecast",
-      "q_forecast_backtest", "mm_keyframe_sample", "stream_rtbf_gate",
-      // r16 batch
-      "lake_vacuum_apply", "lake_time_travel_read",
-      "rtbf_ml_plan", "rtbf_ml_apply",
-      "mm_thumbnail", "mm_audio_decimate",
-      "events_approx_stats", "events_sketch_reach",
-      "stream_sliding_actives",
-      // r17 batch
-      "text_compression_signal", "etl_dq_profile_onescan")
-    // r18 optimization round: GRAFT_EXPLAIN_OUT=<dir> writes ONE
-    // formatted-mode file per key (plans/r18/<key>_<suffix>.txt, the
-    // judge-facing deliverable) instead of the PLANS.md stream;
-    // GRAFT_EXPLAIN_SUFFIX names the files (before/after).
+    val names = if (a.nonEmpty) a.toSeq else SparkEntry.queries.keys.toSeq.sorted
     val outDir = sys.env.get("GRAFT_EXPLAIN_OUT")
     val suffix = sys.env.getOrElse("GRAFT_EXPLAIN_SUFFIX", "before")
     for (name <- names) {

@@ -123,13 +123,9 @@ object SparkEntry {
   // twin read the same min-label relation, so the pointer-doubling
   // closure runs once
   private val sharedPhashGroups = sharedFrame("phash_groups")((s, dir) =>
-    operators.Multimodal.phashGroups(
-      operators.Multimodal.synthMixedCorpus(Tables.documents(s, dir)),
-      sigs = Some(sharedPhashSigs(s, dir))))
+    operators.Multimodal.phashGroups(sharedPhashSigs(s, dir)))
   private val sharedAudioGroups = sharedFrame("audio_groups")((s, dir) =>
-    operators.Multimodal.audioSigGroups(
-      operators.Multimodal.synthScaledWavCorpus(Tables.documents(s, dir)),
-      sigs = Some(sharedAudioSigs(s, dir))))
+    operators.Multimodal.audioSigGroups(sharedAudioSigs(s, dir)))
 
   // offset-robust winnowed audio fingerprints over the offset fixture
   // (the pairs and incremental keys read them) and their group closure
@@ -138,9 +134,7 @@ object SparkEntry {
     operators.Multimodal.audioWinnowSignatures(
       operators.Multimodal.synthOffsetWavCorpus(Tables.documents(s, dir))))
   private val sharedAudioWinnowGroups = sharedFrame("audio_winnow_groups")((s, dir) =>
-    operators.Multimodal.audioWinnowGroups(
-      operators.Multimodal.synthOffsetWavCorpus(Tables.documents(s, dir)),
-      sigs = Some(sharedAudioWinnowSigs(s, dir))))
+    operators.Multimodal.audioWinnowGroups(sharedAudioWinnowSigs(s, dir)))
 
   // crop-robust winnowed image fingerprints over the crop fixture (all
   // four image-winnow keys read them) and their group closure
@@ -148,9 +142,7 @@ object SparkEntry {
     operators.Multimodal.imageWinnowSignatures(
       operators.Multimodal.synthCropPngCorpus(Tables.documents(s, dir))))
   private val sharedImageWinnowGroups = sharedFrame("image_winnow_groups")((s, dir) =>
-    operators.Multimodal.imageWinnowGroups(
-      operators.Multimodal.synthCropPngCorpus(Tables.documents(s, dir)),
-      sigs = Some(sharedImageWinnowSigs(s, dir))))
+    operators.Multimodal.imageWinnowGroups(sharedImageWinnowSigs(s, dir)))
 
   // the quality-FIXTURE corpus's dup-gram store + Bloom: the nightly
   // artifact the composed intake gate probes, built from the same
@@ -191,11 +183,11 @@ object SparkEntry {
   // read it, so the gate chain's corpus work runs once.
   private val sharedCurateFlags = sharedFrame("curate_flags")((s, dir) =>
     operators.Curation.curateFlags(Tables.documents(s, dir),
-      gopherFlags = Some(sharedGopherFlagged(s, dir)),
-      dupDocs = Some(sharedDupNgramDocs(s, dir)),
-      dupStarts = Some(operators.TextAnalysis.startsOfOcc(
-        sharedDupNgramOcc(s, dir))),
-      embeddings = Some(Tables.embeddings(s, dir))))
+      gopherFlags = sharedGopherFlagged(s, dir),
+      dupDocs = sharedDupNgramDocs(s, dir),
+      dupStarts = operators.TextAnalysis.startsOfOcc(
+        sharedDupNgramOcc(s, dir)),
+      embeddings = Tables.embeddings(s, dir)))
 
   // the persisted dup-gram STORE + its Bloom: production writes both
   // as nightly artifacts next to each other, and the intake gates probe
@@ -356,18 +348,14 @@ object SparkEntry {
   // for the BM25 family — at 100 TB this is the postings table a
   // search pipeline persists per corpus snapshot
   private val sharedTfPostings = sharedFrame("tf_postings")((s, dir) =>
-    Tables.documents(s, dir)
-      .select(col("doc_id"),
-        explode(operators.TextAnalysis.tokens(col("text"))).as("tok"))
-      .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf")))
+    operators.Similarity.termFreqs(Tables.documents(s, dir)))
 
   // the SCORED postings index (doc_id, tok, tf, term) on top of the
   // tf trunk — BM25 term weights are an index-time artifact (an IR
   // system never recomputes idf per query), so the build is billed
   // to prime like the other persisted indexes
   private val sharedBm25Postings = sharedFrame("bm25_index")((s, dir) =>
-    operators.Similarity.bm25Postings(Tables.documents(s, dir),
-      tfPostings = Some(sharedTfPostings(s, dir))))
+    operators.Similarity.bm25Postings(sharedTfPostings(s, dir)))
 
   /** Force-build every shared artifact for (session, dir). Bench calls
     * this ONCE and reports the time as its own line item — otherwise
@@ -613,14 +601,11 @@ object SparkEntry {
     "q_rolling_revenue" -> ((s, dir) =>
       Analytics.rollingRevenue(Tables.lineitem(s, dir))),
     "q_copurchase_pagerank" -> ((s, dir) =>
-      Analytics.copurchasePagerank(Tables.lineitem(s, dir),
-        pairs = Some(sharedBasketPairs(s, dir)))),
+      Analytics.copurchasePagerank(sharedBasketPairs(s, dir))),
     "q_copurchase_triangles" -> ((s, dir) =>
-      Analytics.copurchaseTriangles(Tables.lineitem(s, dir),
-        pairs = Some(sharedBasketPairs(s, dir)))),
+      Analytics.copurchaseTriangles(sharedBasketPairs(s, dir))),
     "q_basket_chi2" -> ((s, dir) =>
-      Analytics.basketChi2(Tables.lineitem(s, dir),
-        baskets = Some(sharedBasketTrunk(s, dir)))),
+      Analytics.basketChi2(sharedBasketTrunk(s, dir))),
     "q_revenue_autocorr" -> ((s, dir) =>
       Analytics.revenueAutocorr(Tables.lineitem(s, dir))),
     "emb_pair_histogram" -> ((s, dir) =>
@@ -770,7 +755,7 @@ object SparkEntry {
     "text_cms_sketch" -> ((s, dir) => sharedCmsSketch(s, dir)),
     "text_cms_token_freq" -> ((s, dir) =>
       operators.CountMin.topTokenEstimates(Tables.documents(s, dir),
-        prebuilt = Some(sharedCmsSketch(s, dir)))),
+        sharedCmsSketch(s, dir))),
     // streaming CMS maintenance (r15): the sketch as BOUNDED live
     // state (≤ depth·width counter rows forever); replay = per-batch
     // partial sketches summed — the state-update rule applied
@@ -827,13 +812,13 @@ object SparkEntry {
     // per-doc spans via gaps-and-islands over the SAME pinned trunk
     "docs_dup_spans" -> ((s, dir) =>
       TextAnalysis.dupSpans(Tables.documents(s, dir),
-        starts = Some(TextAnalysis.startsOfOcc(sharedDupNgramOcc(s, dir))))),
+        TextAnalysis.startsOfOcc(sharedDupNgramOcc(s, dir)))),
     // APPLY the span extraction (r13): spans CUT, residual text
     // emitted per doc — the Lee-et-al dedup's actual output, same
     // covered-position union as spans/coverage, same pinned trunk
     "docs_dup_spans_apply" -> ((s, dir) =>
       TextAnalysis.dupSpansApply(Tables.documents(s, dir),
-        starts = Some(TextAnalysis.startsOfOcc(sharedDupNgramOcc(s, dir))))),
+        TextAnalysis.startsOfOcc(sharedDupNgramOcc(s, dir)))),
     // quality-distribution drift between corpus snapshots (r13):
     // fixed-bin PSI per quality metric off the pinned metric pass
     "docs_quality_drift" -> ((s, dir) =>
@@ -921,8 +906,7 @@ object SparkEntry {
     // signatures have no SQL analog (rows-only; DedupSpec pins the
     // histogram identities and the collapse/too-fine readouts)
     "dedup_lsh_band_stats" -> ((s, dir) =>
-      Dedup.lshBandStats(Tables.documents(s, dir),
-        shingles = Some(sharedShingleSets(s, dir)))),
+      Dedup.lshBandStats(sharedShingleSets(s, dir))),
     "text_quality_filter" -> ((s, dir) =>
       TextAnalysis.qualityFilter(Tables.documents(s, dir))),
     // §2.C dedup
@@ -935,15 +919,14 @@ object SparkEntry {
     "stream_sig_dedup" -> ((s, dir) =>
       Dedup.signatureDedup(Tables.documents(s, dir))),
     "dedup_minhash_lsh" -> ((s, dir) =>
-      Dedup.minhashSummary(Tables.documents(s, dir), tau = 0.4,
-        shingles = Some(sharedShingleSets(s, dir)))),
+      Dedup.minhashSummary(Tables.documents(s, dir),
+        sharedShingleSets(s, dir), tau = 0.4)),
     // the LOSSLESS complement to the LSH tiers: prefix-filtered
     // exact set-similarity join — every pair at J >= tau, candidate
     // join bounded by rarest-first prefixes, oracled against the
     // exhaustive definition
     "dedup_exact_jaccard_pairs" -> ((s, dir) =>
-      Dedup.prefixJaccardPairs(Tables.documents(s, dir),
-        shingles = Some(sharedShingleSets(s, dir)))),
+      Dedup.prefixJaccardPairs(sharedShingleSets(s, dir))),
     "dedup_simhash" -> ((s, dir) =>
       Dedup.simhashSummary(Tables.documents(s, dir), maxHamming = 12)),
     "dedup_ngram_jaccard" -> ((s, dir) =>
@@ -976,8 +959,8 @@ object SparkEntry {
     }),
     "dedup_groups" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      Dedup.dedupGroups(docs, Dedup.minhashPairs(docs, tau = 0.4,
-        shingles = Some(sharedShingleSets(s, dir))))
+      Dedup.dedupGroups(docs,
+        Dedup.minhashPairs(sharedShingleSets(s, dir), tau = 0.4))
     }),
     // §2.D similarity search
     "ann_bruteforce_topk" -> ((s, dir) => {
@@ -1307,12 +1290,12 @@ object SparkEntry {
     // cap, budget (full) / the counting aggregate (funnel)
     "docs_curate_full" -> ((s, dir) =>
       operators.Curation.curateFull(Tables.documents(s, dir),
-        shingles = Some(sharedShingleSets(s, dir)),
-        flags = Some(sharedCurateFlags(s, dir)))),
+        flags = sharedCurateFlags(s, dir),
+        shingles = sharedShingleSets(s, dir))),
     "docs_curate_funnel" -> ((s, dir) =>
       operators.Curation.curateFunnel(Tables.documents(s, dir),
-        shingles = Some(sharedShingleSets(s, dir)),
-        flags = Some(sharedCurateFlags(s, dir)))),
+        flags = sharedCurateFlags(s, dir),
+        shingles = sharedShingleSets(s, dir))),
     "docs_token_budget" -> ((s, dir) =>
       // ~28k corpus tokens at sf0.01 — a 10k budget binds hard
       operators.Curation.selectToBudget(Tables.documents(s, dir), 10000L)),
@@ -1422,24 +1405,18 @@ object SparkEntry {
     // (bands > maxHamming) so the oracle is the exhaustive all-pairs
     // definition with no candidate rule
     "mm_phash_pairs" -> ((s, dir) =>
-      Multimodal.phashPairs(
-        Multimodal.synthMixedCorpus(Tables.documents(s, dir)),
-        sigs = Some(sharedPhashSigs(s, dir)))),
+      Multimodal.phashPairs(sharedPhashSigs(s, dir))),
     // the keep decision over the perceptual pairs: BMP re-encodes
     // suppress, PNG originals survive
     "mm_phash_dedup" -> ((s, dir) =>
-      Multimodal.phashSummary(
-        Multimodal.synthMixedCorpus(Tables.documents(s, dir)),
-        sigs = Some(sharedPhashSigs(s, dir)))),
+      Multimodal.phashSummary(sharedPhashSigs(s, dir))),
     "mm_phash_groups" -> ((s, dir) => sharedPhashGroups(s, dir)),
     // keep-THE-BEST-copy over the image closure (r14): survivor =
     // highest decoded pixel count, ties min id — the store carries
     // the rank key, no second decode; same closure as groups
     "mm_phash_keep_best" -> ((s, dir) =>
-      Multimodal.phashKeepBest(
-        Multimodal.synthMixedCorpus(Tables.documents(s, dir)),
-        sigs = Some(sharedPhashSigs(s, dir)),
-        groups = Some(sharedPhashGroups(s, dir)))),
+      Multimodal.phashKeepBest(sharedPhashSigs(s, dir),
+        sharedPhashGroups(s, dir))),
     // nightly-ingest perceptual dedup: new batch (doc_id % 5 == 1 —
     // half planted BMP re-encodes that must match, half originals
     // that must not) probes the signature STORE of the rest; both
@@ -1447,38 +1424,28 @@ object SparkEntry {
     "mm_phash_incremental" -> ((s, dir) => {
       val sigs = sharedPhashSigs(s, dir)
       Multimodal.phashIncremental(
-        Multimodal.synthMixedCorpus(Tables.documents(s, dir))
-          .filter(col("doc_id") % 5 === 1),
-        storeSigs = sigs.filter(col("doc_id") % 5 =!= 1),
-        newSigs = Some(sigs.filter(col("doc_id") % 5 === 1)))
+        newSigs = sigs.filter(col("doc_id") % 5 === 1),
+        storeSigs = sigs.filter(col("doc_id") % 5 =!= 1))
     }),
     // perceptual AUDIO near-dup (r13): sign-of-delta signatures over
     // really-decoded PCM — volume-scaled copies (doc_id % 10 == 1,
     // truncation-halved samples) pair here while every byte tier
     // misses them; banding lossless, oracle exhaustive
     "mm_audio_sig_pairs" -> ((s, dir) =>
-      Multimodal.audioSigPairs(
-        Multimodal.synthScaledWavCorpus(Tables.documents(s, dir)),
-        sigs = Some(sharedAudioSigs(s, dir)))),
+      Multimodal.audioSigPairs(sharedAudioSigs(s, dir))),
     "mm_audio_sig_dedup" -> ((s, dir) =>
-      Multimodal.audioSigDedup(
-        Multimodal.synthScaledWavCorpus(Tables.documents(s, dir)),
-        sigs = Some(sharedAudioSigs(s, dir)))),
+      Multimodal.audioSigDedup(sharedAudioSigs(s, dir))),
     "mm_audio_sig_groups" -> ((s, dir) => sharedAudioGroups(s, dir)),
     // OFFSET-ROBUST audio pairs (r14): winnowed per-window
     // sign-of-delta fingerprints — trimmed copies (doc_id % 10 == 1,
     // first 37 samples cut) pair with their masters here while the
     // prefix tier provably misses them (spec-pinned)
     "mm_audio_winnow_pairs" -> ((s, dir) =>
-      Multimodal.audioWinnowPairs(
-        Multimodal.synthOffsetWavCorpus(Tables.documents(s, dir)),
-        sigs = Some(sharedAudioWinnowSigs(s, dir)))),
+      Multimodal.audioWinnowPairs(sharedAudioWinnowSigs(s, dir))),
     // summary tail over the winnow pairs: keep = no smaller-id
     // offset-duplicate, score = shared-fingerprint count
     "mm_audio_winnow_dedup" -> ((s, dir) =>
-      Multimodal.audioWinnowDedup(
-        Multimodal.synthOffsetWavCorpus(Tables.documents(s, dir)),
-        sigs = Some(sharedAudioWinnowSigs(s, dir)))),
+      Multimodal.audioWinnowDedup(sharedAudioWinnowSigs(s, dir))),
     // closure over the winnow pairs: a trim of a trim chains to its
     // master; completes the tier's pairs → groups → incremental
     // parity (r15: reads the pinned closure the keep-best key shares)
@@ -1489,10 +1456,8 @@ object SparkEntry {
     "mm_audio_winnow_incremental" -> ((s, dir) => {
       val sigs = sharedAudioWinnowSigs(s, dir)
       Multimodal.audioWinnowIncremental(
-        Multimodal.synthOffsetWavCorpus(Tables.documents(s, dir))
-          .filter(col("doc_id") % 5 === 1),
-        storeSigs = sigs.filter(col("doc_id") % 5 =!= 1),
-        newSigs = Some(sigs.filter(col("doc_id") % 5 === 1)))
+        newSigs = sigs.filter(col("doc_id") % 5 === 1),
+        storeSigs = sigs.filter(col("doc_id") % 5 =!= 1))
     }),
     // winnow keep-best (r15): survivor = longest decoded recording
     // over the OFFSET-duplicate closure — and the first keep-best
@@ -1500,25 +1465,19 @@ object SparkEntry {
     // (doc_id % 20 == 11) are longer than their smaller-id masters,
     // so rank and min-id disagree on real fixture rows
     "mm_audio_winnow_keep_best" -> ((s, dir) =>
-      Multimodal.audioWinnowKeepBest(
-        Multimodal.synthOffsetWavCorpus(Tables.documents(s, dir)),
-        sigs = Some(sharedAudioWinnowSigs(s, dir)),
-        groups = Some(sharedAudioWinnowGroups(s, dir)))),
+      Multimodal.audioWinnowKeepBest(sharedAudioWinnowSigs(s, dir),
+        sharedAudioWinnowGroups(s, dir))),
     // CROP-ROBUST image pairs (r15): winnowed per-tile gradient
     // fingerprints — cropped copies (doc_id % 10 == 1, an 8×8 crop
     // of the previous doc's 12×12 pixels at offset (2,3)) pair with
     // their masters here while the whole-image tier structurally
     // cannot see them (spec-pinned, the audio-winnow pattern)
     "mm_phash_winnow_pairs" -> ((s, dir) =>
-      Multimodal.imageWinnowPairs(
-        Multimodal.synthCropPngCorpus(Tables.documents(s, dir)),
-        sigs = Some(sharedImageWinnowSigs(s, dir)))),
+      Multimodal.imageWinnowPairs(sharedImageWinnowSigs(s, dir))),
     // summary tail over the crop pairs: keep = no smaller-id
     // crop-duplicate, score = shared-fingerprint count
     "mm_phash_winnow_dedup" -> ((s, dir) =>
-      Multimodal.imageWinnowDedup(
-        Multimodal.synthCropPngCorpus(Tables.documents(s, dir)),
-        sigs = Some(sharedImageWinnowSigs(s, dir)))),
+      Multimodal.imageWinnowDedup(sharedImageWinnowSigs(s, dir))),
     // closure over the crop pairs: a crop of a crop chains to its
     // master; pinned, shared with the keep-best key
     "mm_phash_winnow_groups" -> ((s, dir) => sharedImageWinnowGroups(s, dir)),
@@ -1527,38 +1486,30 @@ object SparkEntry {
     // (doc_id % 20 == 11) are LARGER than their smaller-id masters,
     // so the rank ordering is oracle-covered, not just the tie-break
     "mm_phash_winnow_keep_best" -> ((s, dir) =>
-      Multimodal.imageWinnowKeepBest(
-        Multimodal.synthCropPngCorpus(Tables.documents(s, dir)),
-        sigs = Some(sharedImageWinnowSigs(s, dir)),
-        groups = Some(sharedImageWinnowGroups(s, dir)))),
+      Multimodal.imageWinnowKeepBest(sharedImageWinnowSigs(s, dir),
+        sharedImageWinnowGroups(s, dir))),
     // nightly-ingest twin: new batch (doc_id % 5 == 1 — half cropped
     // copies that must match, half originals that must not) probes
     // the winnowed fingerprint store; history pays zero codec work
     "mm_phash_winnow_incremental" -> ((s, dir) => {
       val sigs = sharedImageWinnowSigs(s, dir)
       Multimodal.imageWinnowIncremental(
-        Multimodal.synthCropPngCorpus(Tables.documents(s, dir))
-          .filter(col("doc_id") % 5 === 1),
-        storeSigs = sigs.filter(col("doc_id") % 5 =!= 1),
-        newSigs = Some(sigs.filter(col("doc_id") % 5 === 1)))
+        newSigs = sigs.filter(col("doc_id") % 5 === 1),
+        storeSigs = sigs.filter(col("doc_id") % 5 =!= 1))
     }),
     // audio keep-best (r14): survivor = longest decoded recording
     // (sample count off the store), ties min id; groups' closure
     "mm_audio_keep_best" -> ((s, dir) =>
-      Multimodal.audioSigKeepBest(
-        Multimodal.synthScaledWavCorpus(Tables.documents(s, dir)),
-        sigs = Some(sharedAudioSigs(s, dir)),
-        groups = Some(sharedAudioGroups(s, dir)))),
+      Multimodal.audioSigKeepBest(sharedAudioSigs(s, dir),
+        sharedAudioGroups(s, dir))),
     // nightly-ingest audio dedup (r13): new batch (doc_id % 5 == 1 —
     // half re-leveled copies that must match, half originals that
     // must not) probes the signature store; history pays zero codec
     "mm_audio_sig_incremental" -> ((s, dir) => {
       val sigs = sharedAudioSigs(s, dir)
       Multimodal.audioSigIncremental(
-        Multimodal.synthScaledWavCorpus(Tables.documents(s, dir))
-          .filter(col("doc_id") % 5 === 1),
-        storeSigs = sigs.filter(col("doc_id") % 5 =!= 1),
-        newSigs = Some(sigs.filter(col("doc_id") % 5 === 1)))
+        newSigs = sigs.filter(col("doc_id") % 5 === 1),
+        storeSigs = sigs.filter(col("doc_id") % 5 =!= 1))
     }),
     "mm_frame_sample" -> ((s, dir) => Multimodal.frameSample(Tables.documents(s, dir))),
     // video scene structure (r15): cuts = consecutive-frame luma
@@ -1582,8 +1533,7 @@ object SparkEntry {
     // cache instead of re-deriving it
     "q_basket_affinity" -> ((s, dir) => sharedBasketPairs(s, dir)),
     "q_basket_rules" -> ((s, dir) =>
-      Analytics.basketRules(Tables.lineitem(s, dir),
-        baskets = Some(sharedBasketTrunk(s, dir)))),
+      Analytics.basketRules(sharedBasketTrunk(s, dir))),
     "q_cohort_ltv" -> ((s, dir) => Analytics.cohortLtv(Tables.orders(s, dir))),
     "q_segment_quartiles" -> ((s, dir) =>
       Analytics.segmentQuartiles(Tables.customer(s, dir))),
@@ -1816,15 +1766,15 @@ object SparkEntry {
     "docs_source_policy" -> ((s, dir) =>
       operators.Curation.sourcePolicy(Tables.documents(s, dir),
         dropDupRate = 0.18, capQuality = 0.2,
-        pairs = Some(sharedBlockedPairs(s, dir)))),
+        pairs = sharedBlockedPairs(s, dir))),
     // cap=8 trims the capped sources (25 docs each at sf0.01)
     "docs_source_policy_apply" -> ((s, dir) =>
       operators.Curation.applySourcePolicy(Tables.documents(s, dir),
         dropDupRate = 0.18, capQuality = 0.2, cap = 8,
-        pairs = Some(sharedBlockedPairs(s, dir)))),
+        pairs = sharedBlockedPairs(s, dir))),
     "docs_quality_dup_profile" -> ((s, dir) =>
       operators.Curation.qualityDupProfile(Tables.documents(s, dir),
-        pairs = Some(sharedBlockedPairs(s, dir)))),
+        pairs = sharedBlockedPairs(s, dir))),
     "dedup_edit_distance" -> ((s, dir) =>
       Dedup.editDistancePairsOf(sharedTrunk(s, dir),
         Tables.documents(s, dir))),
@@ -1847,11 +1797,11 @@ object SparkEntry {
       // batch would have persisted yesterday)
       Curation.curateIncremental(
         d.filter(col("doc_id") % 10 === 0), d.filter(col("doc_id") % 10 =!= 0),
-        gopherFlags = Some(sharedGopherFlagged(s, dir)),
-        dupStore = Some(sharedHistDupStore(s, dir)),
+        gopherFlags = sharedGopherFlagged(s, dir),
+        dupStore = sharedHistDupStore(s, dir),
         // r15: full-pipeline parity — the delta's vectors score
         // against the broadcast static benchmark (O(delta) daily)
-        embeddings = Some(Tables.embeddings(s, dir)))
+        embeddings = Tables.embeddings(s, dir))
     }),
     "q_top_supplier" -> ((s, dir) =>
       Analytics.topSupplier(Tables.lineitem(s, dir), Tables.supplier(s, dir))),
@@ -2095,17 +2045,13 @@ object SparkEntry {
     // (billed to prime — the persisted-index economics: term
     // weights are computed at index time, queries only join + fold)
     "text_bm25_topk" -> ((s, dir) =>
-      Similarity.bm25TopK(Tables.documents(s, dir),
-        tfPostings = Some(sharedTfPostings(s, dir)),
-        scoredPostings = Some(sharedBm25Postings(s, dir)))),
+      Similarity.bm25TopK(sharedBm25Postings(s, dir))),
     // the rank-SAFE exhaustive tier: MaxScore pruning (hash-sample θ
     // + per-token ub + BLOCK-MAX per-doc_id-range bounds) returns the
     // TRUE exhaustive top-k — the oracle scores every pair; the plan
     // prunes where the corpus lets it (spec-proven on Zipf shapes)
     "text_bm25_maxscore" -> ((s, dir) =>
-      Similarity.bm25MaxScoreTopK(Tables.documents(s, dir),
-        tfPostings = Some(sharedTfPostings(s, dir)),
-        scoredPostings = Some(sharedBm25Postings(s, dir)))),
+      Similarity.bm25MaxScoreTopK(sharedBm25Postings(s, dir))),
     // the tokenizer-building step itself: 6 greedy BPE merges
     // learned from the corpus, training loop unrolled in the oracle
     "text_bpe_train" -> ((s, dir) =>

@@ -378,20 +378,17 @@ object Analytics {
     * one shuffle for the join, one for the pair count.
     */
   /** The shared basket core: (order, part) distinct rows surviving
-    * the giant-order guard. `pin` materializes it for callers with
-    * several independent consumers ([[basketRules]]: pairs,
-    * per-part counts, order total); [[basketAffinity]]'s lone
-    * self-join gets exchange reuse for free and skips the
-    * checkpoint write. */
-  private def guardedBaskets(lineitem: DataFrame, maxParts: Int,
-                             pin: Boolean): DataFrame = {
+    * the giant-order guard. Lazy: [[basketAffinity]]'s lone
+    * self-join gets exchange reuse for free, and callers with several
+    * independent consumers ([[basketRules]]: pairs, per-part counts,
+    * order total) read it pinned ([[guardedBasketsShared]]). */
+  private def guardedBaskets(lineitem: DataFrame, maxParts: Int): DataFrame = {
     val perOrder = lineitem.select("l_orderkey", "l_partkey").distinct()
     val small = perOrder.groupBy("l_orderkey")
       .agg(count(lit(1)).as("n_parts"))
       .filter(col("n_parts") <= maxParts)
       .select("l_orderkey")
-    val guarded = perOrder.join(small, Seq("l_orderkey"), "left_semi")
-    if (pin) guarded.localCheckpoint(true) else guarded
+    perOrder.join(small, Seq("l_orderkey"), "left_semi")
   }
 
   /** Guarded co-purchase pair counts ≥ minOrders — the shared pair
@@ -407,7 +404,7 @@ object Analytics {
 
   def basketAffinity(lineitem: DataFrame, minOrders: Long = 2,
                      maxParts: Int = 20): DataFrame =
-    guardedPairs(guardedBaskets(lineitem, maxParts, pin = false), minOrders)
+    guardedPairs(guardedBaskets(lineitem, maxParts), minOrders)
 
   /** [[basketAffinity]] from an already-built (typically pinned)
     * [[guardedBasketsShared]] relation — the driver's shared cache
@@ -418,13 +415,13 @@ object Analytics {
 
   /** The pinned guarded (order, part) basket relation at the family
     * defaults — built once by the driver's shared cache and passed
-    * into [[basketRules]]/[[basketChi2]] via their `baskets`
-    * override (the pair relation alone is not enough for them: both
-    * also need per-part order counts and the guarded order total
-    * from the SAME trunk). */
+    * into [[basketRules]]/[[basketChi2]] as their `baskets` input
+    * (the pair relation alone is not enough for them: both also
+    * need per-part order counts and the guarded order total from
+    * the SAME trunk). */
   def guardedBasketsShared(lineitem: DataFrame,
                            maxParts: Int = 20): DataFrame =
-    guardedBaskets(lineitem, maxParts, pin = false)
+    guardedBaskets(lineitem, maxParts)
 
   /** Association rules over [[basketAffinity]]'s pairs: directed
     * confidence(a→b) = together/orders(a) and lift =
@@ -434,15 +431,11 @@ object Analytics {
     * from one pair row (a union of two projections, no second
     * self-join).
     */
-  def basketRules(lineitem: DataFrame, minOrders: Long = 2,
-                  maxParts: Int = 20,
-                  baskets: Option[DataFrame] = None): DataFrame = {
-    val guarded = baskets.getOrElse(
-      guardedBaskets(lineitem, maxParts, pin = true))
-    val nOrders = guarded.select("l_orderkey").distinct().count()
-    val partOrders = guarded.groupBy(col("l_partkey"))
+  def basketRules(baskets: DataFrame, minOrders: Long = 2): DataFrame = {
+    val nOrders = baskets.select("l_orderkey").distinct().count()
+    val partOrders = baskets.groupBy(col("l_partkey"))
       .agg(count(lit(1)).as("n_orders_part"))
-    val pairs = guardedPairs(guarded, minOrders)
+    val pairs = guardedPairs(baskets, minOrders)
       .withColumnRenamed("n_orders_together", "n_together")
     val directed = pairs.select(col("part_a").as("antecedent"),
         col("part_b").as("consequent"), col("n_together"))
@@ -1448,20 +1441,16 @@ object Analytics {
     * score is rounded (1e-9 grid vs ~1e-17 summation-order error —
     * docs/ORACLE_NOTES.md).
     */
-  def copurchasePagerank(lineitem: DataFrame, iters: Int = 3,
-                         damping: Double = 0.85, minOrders: Long = 2,
-                         maxParts: Int = 20,
-                         pairs: Option[DataFrame] = None): DataFrame = {
-    // `pairs` (a cached [[basketAffinity]] relation) lets the driver
-    // share ONE pair-engine build across the whole basket family —
+  def copurchasePagerank(pairs: DataFrame, iters: Int = 3,
+                         damping: Double = 0.85): DataFrame = {
+    // `pairs` (a pinned [[basketAffinityOf]] relation) is ONE
+    // pair-engine build shared across the whole basket family —
     // affinity, rules, pagerank, triangles, chi2 all ride the same
     // guarded pair counts, and at 100 TB building it once is the
     // difference between one shuffle of the fact and five
-    val undirected = pairs.getOrElse(guardedPairs(
-      guardedBaskets(lineitem, maxParts, pin = true), minOrders))
-    val edges = undirected.select(col("part_a").as("src"),
+    val edges = pairs.select(col("part_a").as("src"),
         col("part_b").as("dst"), col("n_orders_together").as("w"))
-      .unionByName(undirected.select(col("part_b").as("src"),
+      .unionByName(pairs.select(col("part_b").as("src"),
         col("part_a").as("dst"), col("n_orders_together").as("w")))
       .localCheckpoint(true) // deg + frac both consume it
     // deg doubles as the node relation: one row per src by
@@ -1501,13 +1490,9 @@ object Analytics {
     * rounded once. `positive` disambiguates the direction χ²
     * deliberately ignores.
     */
-  def basketChi2(lineitem: DataFrame, minOrders: Long = 2,
-                 maxParts: Int = 20,
-                 baskets: Option[DataFrame] = None): DataFrame = {
-    val guarded = baskets.getOrElse(
-      guardedBaskets(lineitem, maxParts, pin = true))
-    val nOrders = guarded.select("l_orderkey").distinct().count()
-    val partOrders = guarded.groupBy(col("l_partkey"))
+  def basketChi2(baskets: DataFrame, minOrders: Long = 2): DataFrame = {
+    val nOrders = baskets.select("l_orderkey").distinct().count()
+    val partOrders = baskets.groupBy(col("l_partkey"))
       .agg(count(lit(1)).as("n_orders_part"))
     val a = col("n_together")
     val b = col("n_a") - col("n_together")
@@ -1516,7 +1501,7 @@ object Analytics {
     val delta = (a * d - b * c).cast("double")
     val denom = (a + b).cast("double") * (c + d).cast("double") *
       (a + c).cast("double") * (b + d).cast("double")
-    guardedPairs(guarded, minOrders)
+    guardedPairs(baskets, minOrders)
       .withColumnRenamed("n_orders_together", "n_together")
       .join(partOrders.select(col("l_partkey").as("part_a"),
         col("n_orders_part").as("n_a")), Seq("part_a"))
@@ -1551,11 +1536,8 @@ object Analytics {
     * join bounds wedge fan-out by the oriented out-degree, and the
     * output is ONE row.
     */
-  def copurchaseTriangles(lineitem: DataFrame, minOrders: Long = 2,
-                          maxParts: Int = 20,
-                          pairs: Option[DataFrame] = None): DataFrame = {
-    val edges = pairs.getOrElse(guardedPairs(
-        guardedBaskets(lineitem, maxParts, pin = false), minOrders))
+  def copurchaseTriangles(pairs: DataFrame): DataFrame = {
+    val edges = pairs
       .select(col("part_a").as("a"), col("part_b").as("b"))
       .localCheckpoint(true) // wedge join (twice), closure probe, degrees
     val paths = edges
@@ -1935,15 +1917,12 @@ object Analytics {
     * collapse for per-day HLL sketches merged across the window
     * ([[EventOps.sketchReach]]'s pattern) — same fan-out shape.
     */
-  def rollingActiveUsers(events: DataFrame, days: Int = 7,
-                         userDaysOpt: Option[DataFrame] = None): DataFrame = {
-    // fan-out + present-days spine share the pinned relation;
-    // userDaysOpt lets the calibration tier thread ONE build through
-    // both the exact and the sketch route (r16)
-    val userDays = userDaysOpt.getOrElse(events
+  def rollingActiveUsers(events: DataFrame, days: Int = 7): DataFrame = {
+    // fan-out + present-days spine share the pinned relation
+    val userDays = events
       .select(col("user_id"), to_date(col("ts")).as("day"))
       .distinct()
-      .localCheckpoint(true))
+      .localCheckpoint(true)
     val present = userDays.select(col("day").as("target_day")).distinct()
     userDays
       .select(col("user_id"), col("day"),
@@ -2083,12 +2062,11 @@ object Analytics {
     * becomes a null-gated second sketch (nulls don't enter HLL).
     */
   def rollingActiveUsersApprox(events: DataFrame, days: Int = 7,
-                               rsd: Double = 0.02,
-                               userDaysOpt: Option[DataFrame] = None): DataFrame = {
-    val userDays = userDaysOpt.getOrElse(events
+                               rsd: Double = 0.02): DataFrame = {
+    val userDays = events
       .select(col("user_id"), to_date(col("ts")).as("day"))
       .distinct()
-      .localCheckpoint(true))
+      .localCheckpoint(true)
     val present = userDays.select(col("day").as("target_day")).distinct()
     userDays
       .select(col("user_id"), col("day"),

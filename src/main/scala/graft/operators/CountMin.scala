@@ -79,21 +79,19 @@ object CountMin {
     * model. The probe side is k·depth rows against the ≤ depth·width
     * sketch: broadcast-sized both ways.
     *
-    * `prebuilt`: pass the already-materialized sketch relation (the
-    * pinned-shared-relation convention — cf. knScore's pinned `b`
-    * and the sharedEntity* chain) and the corpus pays ONE
-    * tokenize+explode pass here (the exact-counts side) instead of
-    * rebuilding the sketch from scratch; None rebuilds for ad-hoc
-    * use (r16, ADVICE). */
-  def topTokenEstimates(docs: DataFrame, k: Int = 30,
-                        prebuilt: Option[DataFrame] = None): DataFrame = {
+    * `sketched` is the already-materialized [[sketch]] relation of
+    * `docs` (the pinned-shared-relation convention — cf. knScore's
+    * pinned `b` and the sharedEntity* chain), so the corpus pays ONE
+    * tokenize+explode pass here: the exact-counts side. */
+  def topTokenEstimates(docs: DataFrame, sketched: DataFrame,
+                        k: Int = 30): DataFrame = {
     val exact = instances(docs)
       .groupBy("tok").agg(count(lit(1)).as("exact_cnt"))
     val top = exact.orderBy(col("exact_cnt").desc, col("tok")).limit(k)
     val probes = top
       .select(col("tok"), col("exact_cnt"),
         posexplode(bucketsOf(gf.hash64(col("tok")))).as(Seq("r", "bucket")))
-    probes.join(prebuilt.getOrElse(sketch(docs)), Seq("r", "bucket"))
+    probes.join(sketched, Seq("r", "bucket"))
       .groupBy("tok", "exact_cnt")
       .agg(min("cnt").as("cms_est"))
       .select(col("tok"), col("exact_cnt"), col("cms_est"),

@@ -24,7 +24,7 @@ object Curation {
   /** Per-doc (doc_id, n_tokens, quality_score) used by several gates.
     * Quality stats are PURE per-document (length/punct/stopword
     * ratios — no corpus dependence), so one tokenization scan can
-    * feed every stage of a composed pipeline; [[curateFull]] and
+    * feed every stage of a composed pipeline; [[curateFlags]] and
     * [[curateCapped]] thread this through instead of re-tokenizing
     * the corpus once per gate.
     */
@@ -73,13 +73,12 @@ object Curation {
     * reads, vs [[curateFull]]'s O(corpus) full rebuild.
     */
   def curateIncremental(newDocs: DataFrame, corpus: DataFrame,
+                        gopherFlags: DataFrame, dupStore: DataFrame,
+                        embeddings: DataFrame,
                         minTokens: Long = 20L, maxTokens: Long = 100000L,
                         minQuality: Double = 0.2, benchMod: Int = 97,
                         tau: Double = 0.5,
-                        gopherFlags: Option[DataFrame] = None,
-                        dupStore: Option[DataFrame] = None,
                         maxDupFrac: Double = 0.5,
-                        embeddings: Option[DataFrame] = None,
                         semTau: Double = 0.4): DataFrame = {
     // r14 gate parity with the recomposed [[curateFull]]: the
     // 20-threshold Gopher gate leads (per-doc pure, so gating the
@@ -95,8 +94,6 @@ object Curation {
     // the materialization is the cheap side at any scale.
     val delta = newDocs.localCheckpoint(true)
     val gopherDrop = gopherFlags
-      .getOrElse(TextAnalysis.gopherFlagged(
-        TextAnalysis.synthQualityCorpus(delta)))
       .filter(TextAnalysis.gopherAnyFlag)
       .select("doc_id")
     val quality = scoreDocs(delta)
@@ -106,8 +103,8 @@ object Curation {
       .join(gopherDrop, Seq("doc_id"), "left_anti")
     val gated = delta.join(quality, Seq("doc_id"), "left_semi")
     val dupDrop = TextAnalysis
-      .dupNgramApplyOf(TextAnalysis.dupNgramDocsVsStore(delta,
-        dupStore.getOrElse(TextAnalysis.dupNgramStore(corpus))), maxDupFrac)
+      .dupNgramApplyOf(TextAnalysis.dupNgramDocsVsStore(delta, dupStore),
+        maxDupFrac)
       .filter(!col("keep")).select("doc_id")
     // exact: within-batch keep-min, then anti-join history fingerprints
     val batchKeep = Dedup.exact(gated).select("doc_id")
@@ -127,12 +124,10 @@ object Curation {
     // parity with [[curateFull]]'s r14 gate): the static benchmark
     // slice broadcasts, only the delta's vectors score against it —
     // the daily cost is O(delta), history is never re-scored
-    val semContaminated = embeddings
-      .map(e => Dedup.semanticDecontaminate(e, benchMod, semTau,
-          corpusIds = Some(delta.select(col("doc_id").as("vec_id"))))
-        .filter(col("contaminated"))
-        .select(col("vec_id").as("doc_id")))
-      .getOrElse(delta.select("doc_id").limit(0))
+    val semContaminated = Dedup.semanticDecontaminate(embeddings, benchMod,
+        semTau, corpusIds = Some(delta.select(col("doc_id").as("vec_id"))))
+      .filter(col("contaminated"))
+      .select(col("vec_id").as("doc_id"))
     gated
       .join(fresh, Seq("doc_id"), "left_semi")
       .join(dupDrop, Seq("doc_id"), "left_anti")
@@ -210,48 +205,32 @@ object Curation {
     * Stage order is the policy: quality gates before dedup (a
     * low-quality copy must not steal survivorship), dedup before
     * capping (a duplicate never holds a budget slot), balancing
-    * before the budget. Every stage narrows, and every gate reads a
-    * pinned trunk the standalone gate keys already share
-    * (`gopherFlags`, `dupDocs`, `dupStarts`, `shingles`) — the
-    * composition adds NO corpus scans beyond its stages' own.
+    * before the budget. Every per-doc gate — its thresholds and the
+    * benchmark slice included — is decided once, in the `flags`
+    * relation ([[curateFlags]], pinned); this function runs only the
+    * set-shaped stages over it and the pinned `shingles`
+    * ([[Dedup.blockingTrunk]]'s sets), so the composition adds NO
+    * corpus scans beyond those stages' own.
     */
-  def curateFull(docs: DataFrame, cap: Int = 10, tokenBudget: Long = 5000L,
-                 minTokens: Long = 20L, maxTokens: Long = 100000L,
-                 minQuality: Double = 0.2, benchMod: Int = 97,
-                 shingles: Option[DataFrame] = None,
-                 gopherFlags: Option[DataFrame] = None,
-                 dupDocs: Option[DataFrame] = None,
-                 dupStarts: Option[DataFrame] = None,
-                 maxDupFrac: Double = 0.5,
-                 dupN: Int = 8,
-                 embeddings: Option[DataFrame] = None,
-                 semTau: Double = 0.4,
-                 flags: Option[DataFrame] = None): DataFrame = {
+  def curateFull(docs: DataFrame, flags: DataFrame, shingles: DataFrame,
+                 cap: Int = 10, tokenBudget: Long = 5000L): DataFrame = {
     def restrict(ids: DataFrame): DataFrame =
       docs.join(ids.select("doc_id"), Seq("doc_id"), "left_semi")
-    // ONE pinned per-doc FLAGS relation carries everything the six
-    // per-doc gate families decide plus the residual billing (r15:
-    // the relation is first-class — a nightly pipeline persists it
-    // as the intake gate table, and the funnel reads the SAME one,
-    // so the result key and its readout cannot drift)
-    val fl = flags.getOrElse(curateFlags(docs, None, minTokens, maxTokens,
-      minQuality, gopherFlags, dupDocs, dupStarts, maxDupFrac, dupN,
-      embeddings, semTau, benchMod).localCheckpoint(true))
-    val scored = Some(fl.select("doc_id", "n_tokens", "quality_score"))
-    val residual = fl.select(col("doc_id"), col("n_res").as("n_tokens"),
+    val scored = Some(flags.select("doc_id", "n_tokens", "quality_score"))
+    val residual = flags.select(col("doc_id"), col("n_res").as("n_tokens"),
       col("quality_score"))
     val suppressed = restrict(Dedup.nearDupSuppress(
-      restrict(curatedIdsOf(fl, benchMod)), scored = scored,
-      shingles = shingles))
+      restrict(curatedIdsOf(flags)), scored = scored,
+      shingles = Some(shingles)))
     // pin the post-cap survivors: the budget walk consumes its input
     // twice (band totals + final window), and without this pin both
     // consumers would re-run the whole gate chain incl. the near-dup
-    // blocking joins (selectToBudget no longer pins thread-in input)
+    // blocking joins (selectToBudget does not pin a given preScored)
     val capped = restrict(sourceCap(suppressed, cap, scored))
       .localCheckpoint(true)
     selectToBudget(capped, tokenBudget, Some(residual))
       .withColumnRenamed("n_tokens", "n_tokens_kept")
-      .join(fl.select("doc_id", "n_tokens"), Seq("doc_id"))
+      .join(flags.select("doc_id", "n_tokens"), Seq("doc_id"))
       .join(docs.select("doc_id", "source"), Seq("doc_id"))
       .select("doc_id", "source", "n_tokens", "n_tokens_kept",
         "quality_score")
@@ -260,148 +239,90 @@ object Curation {
   /** The fused per-doc gate relation under [[curateFull]] and
     * [[curateFunnel]] (r15): ONE row per document carrying the
     * tokenization scores, every per-doc gate decision as a boolean/
-    * marker column (C4 quality bounds, the 20-threshold Gopher gate,
-    * exact-dedup survivorship, the corpus-duplication fraction gate,
-    * n-gram and semantic contamination) and the residual token
-    * billing. Evaluating the gates as COLUMNS of one pass — instead
-    * of a chain of per-gate semi/anti-join stages — is what a
-    * nightly pipeline persists as its intake gate table: every
-    * downstream consumer (the curated set, the funnel readout, the
-    * budget walk) is then a filter or aggregate over this relation,
-    * and the gate chain's corpus work runs exactly once. */
-  def curateFlags(docs: DataFrame, scored: Option[DataFrame] = None,
+    * marker column and the residual token billing (`n_res`).
+    * Evaluating the gates as COLUMNS of one pass — instead of a
+    * chain of per-gate semi/anti-join stages — is what a nightly
+    * pipeline persists as its intake gate table: every downstream
+    * consumer (the curated set, the funnel readout, the budget walk)
+    * is then a filter or aggregate over this relation, and the gate
+    * chain's corpus work runs exactly once. Every gate parameter is
+    * decided here and nowhere else.
+    *
+    * The columns: `f_quality` (C4 score bounds), `f_bench` (the
+    * held-out benchmark slice, `doc_id % benchMod = 0`), `f_goph`
+    * (any of the 20 Gopher thresholds, off the gate family's pinned
+    * metric+flag pass `gopherFlags`), `f_keeper` (exact-dedup
+    * survivor among the quality-kept docs — a low-quality copy must
+    * not steal survivorship), `f_dg` (over the corpus-duplication
+    * fraction cut, off the doc-grain coverage `dupDocs`), `f_contam`
+    * (n-gram contamination) and `f_sem` (semantic contamination:
+    * embeddings align 1:1 with documents, vec_id ≡ doc_id, so the
+    * benchMod slice is the same slice). Marker columns are null
+    * when the gate does not fire. `n_res` rebills `n_tokens` to the
+    * post-span-scrub residual (raw − covered positions, the exact
+    * [[TextAnalysis.dupSpansApply]] union), folded row-locally off
+    * the duplicated-occurrence starts `dupStarts` — proportional to
+    * duplicated positions, never a corpus scan. */
+  def curateFlags(docs: DataFrame, gopherFlags: DataFrame,
+                  dupDocs: DataFrame, dupStarts: DataFrame,
+                  embeddings: DataFrame,
                   minTokens: Long = 20L, maxTokens: Long = 100000L,
                   minQuality: Double = 0.2,
-                  gopherFlags: Option[DataFrame] = None,
-                  dupDocs: Option[DataFrame] = None,
-                  dupStarts: Option[DataFrame] = None,
                   maxDupFrac: Double = 0.5, dupN: Int = 8,
-                  embeddings: Option[DataFrame] = None,
                   semTau: Double = 0.4, benchMod: Int = 97): DataFrame = {
-    val statsRel = scored.getOrElse(scoreDocs(docs))
-    val stages = curateFullStages(docs, Some(statsRel), minTokens,
-      maxTokens, minQuality, benchMod, gopherFlags, dupDocs, dupStarts,
-      maxDupFrac, dupN, embeddings, semTau)
+    val scored = scoreDocs(docs)
     val qualityPred = col("n_tokens") >= minTokens &&
       col("n_tokens") <= maxTokens && col("quality_score") >= minQuality
-    statsRel
+    val gopherDrop = gopherFlags
+      .filter(TextAnalysis.gopherAnyFlag)
+      .select("doc_id")
+    val qualityIds = scored.filter(qualityPred).select("doc_id")
+      .join(gopherDrop, Seq("doc_id"), "left_anti")
+    val keeperIds = Dedup.exact(
+      docs.join(qualityIds, Seq("doc_id"), "left_semi")).select("doc_id")
+    val dupDrop = TextAnalysis.dupNgramApplyOf(dupDocs, maxDupFrac)
+      .filter(!col("keep")).select("doc_id")
+    val contaminated = TextAnalysis
+      .decontaminate(docs, n = 3, benchMod = benchMod).select("doc_id")
+    val semContaminated = Dedup.semanticDecontaminate(embeddings, benchMod, semTau)
+      .filter(col("contaminated"))
+      .select(col("vec_id").as("doc_id"))
+    val nCov = dupStarts
+      .select(col("doc_id"), expr(
+        s"size(array_distinct(flatten(transform(starts," +
+          s" s -> sequence(s, s + ${dupN - 1})))))").cast("long").as("n_cov"))
+    val residual = scored
+      .join(nCov, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        (col("n_tokens") - coalesce(col("n_cov"), lit(0L))).as("n_res"))
+    scored
       .withColumn("f_quality", qualityPred)
-      .join(stages.gopherDrop.withColumn("f_goph", lit(true)),
+      .withColumn("f_bench", col("doc_id") % benchMod === 0)
+      .join(gopherDrop.withColumn("f_goph", lit(true)), Seq("doc_id"), "left")
+      .join(keeperIds.withColumn("f_keeper", lit(true)), Seq("doc_id"), "left")
+      .join(dupDrop.withColumn("f_dg", lit(true)), Seq("doc_id"), "left")
+      .join(contaminated.withColumn("f_contam", lit(true)),
         Seq("doc_id"), "left")
-      .join(stages.keeperIds.withColumn("f_keeper", lit(true)),
+      .join(semContaminated.withColumn("f_sem", lit(true)),
         Seq("doc_id"), "left")
-      .join(stages.dupDrop.withColumn("f_dg", lit(true)),
-        Seq("doc_id"), "left")
-      .join(stages.contaminatedIds.withColumn("f_contam", lit(true)),
-        Seq("doc_id"), "left")
-      .join(stages.semContaminatedIds.withColumn("f_sem", lit(true)),
-        Seq("doc_id"), "left")
-      .join(stages.residualScored
-        .select(col("doc_id"), col("n_tokens").as("n_res")),
-        Seq("doc_id"))
+      .join(residual, Seq("doc_id"))
   }
 
   /** The per-doc gate chain of [[curateFlags]], in funnel order —
     * shared by the curated-set filter and the funnel's prefix
     * counts so the two can never disagree. */
-  private[graft] def curateChain(benchMod: Int)
-      : Seq[(String, org.apache.spark.sql.Column)] = Seq(
+  private[graft] val curateChain: Seq[(String, org.apache.spark.sql.Column)] = Seq(
     ("gopher", col("f_goph").isNull),
     ("quality", col("f_quality")),
     ("exact_dedup", col("f_keeper").isNotNull),
     ("dup_gram", col("f_dg").isNull),
-    ("decontam",
-      col("doc_id") % benchMod =!= 0 && col("f_contam").isNull),
+    ("decontam", !col("f_bench") && col("f_contam").isNull),
     ("decontam_semantic", col("f_sem").isNull))
 
   /** Training-eligible ids off the flags relation: the full gate
     * conjunction as one filter. */
-  private[graft] def curatedIdsOf(flags: DataFrame,
-                                  benchMod: Int): DataFrame =
-    flags.filter(curateChain(benchMod).map(_._2).reduce(_ && _))
-      .select("doc_id")
-
-  /** The shared gate relations under [[curateFull]] and
-    * [[curateFunnel]] — one definition so the result key and its
-    * funnel can never disagree about what a stage means.
-    *
-    * `gopherDrop`: doc_ids any of the 20 Gopher thresholds flag
-    * (from the gate family's pinned metric+flag pass).
-    * `dupDrop`: doc_ids over the corpus-duplication fraction gate.
-    * `residualScored`: the scored relation with `n_tokens` rebilled
-    * to the post-span-scrub residual (raw − covered positions, the
-    * exact [[TextAnalysis.dupSpansApply]] union).
-    */
-  private[graft] case class CurateStages(gopherDrop: DataFrame,
-                                         dupDrop: DataFrame,
-                                         keptIds: DataFrame,
-                                         keeperIds: DataFrame,
-                                         contaminatedIds: DataFrame,
-                                         semContaminatedIds: DataFrame,
-                                         curatedIds: DataFrame,
-                                         residualScored: DataFrame)
-
-  private[graft] def curateFullStages(docs: DataFrame,
-                                      scored: Option[DataFrame],
-                                      minTokens: Long, maxTokens: Long,
-                                      minQuality: Double, benchMod: Int,
-                                      gopherFlags: Option[DataFrame],
-                                      dupDocs: Option[DataFrame],
-                                      dupStarts: Option[DataFrame],
-                                      maxDupFrac: Double,
-                                      dupN: Int = 8,
-                                      embeddings: Option[DataFrame] = None,
-                                      semTau: Double = 0.4): CurateStages = {
-    val sc = scored.getOrElse(scoreDocs(docs))
-    val gopherDrop = gopherFlags
-      .getOrElse(TextAnalysis.gopherFlagged(
-        TextAnalysis.synthQualityCorpus(docs)))
-      .filter(TextAnalysis.gopherAnyFlag)
-      .select("doc_id")
-    val qualityIds = sc
-      .filter(col("n_tokens") >= minTokens && col("n_tokens") <= maxTokens &&
-        col("quality_score") >= minQuality)
-      .select("doc_id")
-      .join(gopherDrop, Seq("doc_id"), "left_anti")
-    val kept = docs.join(qualityIds, Seq("doc_id"), "left_semi")
-    val keeperIds = Dedup.exact(kept).select("doc_id")
-    val dupDrop = TextAnalysis
-      .dupNgramApplyOf(dupDocs.getOrElse(TextAnalysis.dupNgramDocs(docs, dupN)),
-        maxDupFrac)
-      .filter(!col("keep")).select("doc_id")
-    val contaminated = TextAnalysis
-      .decontaminate(docs, n = 3, benchMod = benchMod).select("doc_id")
-    // SEMANTIC decontamination (r14): paraphrased benchmark items
-    // the n-gram tier misses — embeddings align 1:1 with documents
-    // (vec_id ≡ doc_id), so the benchMod slice is the same slice;
-    // vacuous when no embedding table is threaded in
-    val semContaminated = embeddings
-      .map(e => Dedup.semanticDecontaminate(e, benchMod, semTau)
-        .filter(col("contaminated"))
-        .select(col("vec_id").as("doc_id")))
-      .getOrElse(docs.select("doc_id").limit(0))
-    val curatedIds = keeperIds
-      .join(dupDrop, Seq("doc_id"), "left_anti")
-      .filter(col("doc_id") % benchMod =!= 0)
-      .join(contaminated, Seq("doc_id"), "left_anti")
-      .join(semContaminated, Seq("doc_id"), "left_anti")
-    // residual billing: covered-position counts fold row-locally off
-    // the pinned duplicated-occurrence starts (proportional to
-    // duplicated positions, never a corpus scan)
-    val nCov = dupStarts
-      .getOrElse(TextAnalysis.dupNgramStarts(
-        TextAnalysis.dupNgramToks(docs), dupN))
-      .select(col("doc_id"), expr(
-        s"size(array_distinct(flatten(transform(starts," +
-          s" s -> sequence(s, s + ${dupN - 1})))))").cast("long").as("n_cov"))
-    val residualScored = sc
-      .join(nCov, Seq("doc_id"), "left")
-      .withColumn("n_tokens",
-        col("n_tokens") - coalesce(col("n_cov"), lit(0L)))
-      .select("doc_id", "n_tokens", "quality_score")
-    CurateStages(gopherDrop, dupDrop, kept.select("doc_id"), keeperIds,
-      contaminated, semContaminated, curatedIds, residualScored)
-  }
+  private[graft] def curatedIdsOf(flags: DataFrame): DataFrame =
+    flags.filter(curateChain.map(_._2).reduce(_ && _)).select("doc_id")
 
   /** Per-gate funnel of [[curateFull]] — the "which gate ate my
     * corpus" readout: docs surviving after each stage (quality →
@@ -410,23 +331,13 @@ object Curation {
     * drop count. An end-count alone can't distinguish "quality gate
     * too harsh" from "one source got capped to dust", and re-running
     * the pipeline N times with gates toggled costs N corpus scans —
-    * this emits the whole diagnosis in one composition (same shared
-    * tokenization scan, each stage pinned so its count and its
-    * successor reuse the work). Output is O(#stages) driver-built
-    * rows; every count is exact and the stage set mirrors the
-    * oracle's CTE chain one-for-one.
+    * this emits the whole diagnosis in one composition over the same
+    * pinned `flags` and `shingles` [[curateFull]] reads. Output is
+    * O(#stages) driver-built rows; every count is exact and the
+    * stage set mirrors the oracle's CTE chain one-for-one.
     */
-  def curateFunnel(docs: DataFrame, cap: Int = 10, tokenBudget: Long = 5000L,
-                   minTokens: Long = 20L, maxTokens: Long = 100000L,
-                   minQuality: Double = 0.2, benchMod: Int = 97,
-                   shingles: Option[DataFrame] = None,
-                   gopherFlags: Option[DataFrame] = None,
-                   dupDocs: Option[DataFrame] = None,
-                   dupStarts: Option[DataFrame] = None,
-                   maxDupFrac: Double = 0.5,
-                   embeddings: Option[DataFrame] = None,
-                   semTau: Double = 0.4,
-                   flags: Option[DataFrame] = None): DataFrame = {
+  def curateFunnel(docs: DataFrame, flags: DataFrame, shingles: DataFrame,
+                   cap: Int = 10, tokenBudget: Long = 5000L): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     // measured at sf0.1: the funnel's floor is its serial actions
@@ -436,28 +347,23 @@ object Curation {
     // per stage); dropping the near-dup pin was tried and REGRESSED
     // (the gate re-runs once per downstream consumer). r15: the
     // flags relation is [[curateFlags]], shared with [[curateFull]]
-    // — threaded in by the driver as a pinned per-(session, dir)
-    // artifact, so BOTH keys read one materialization of the whole
-    // gate chain.
+    // as a pinned per-(session, dir) artifact, so BOTH keys read one
+    // materialization of the whole gate chain.
     def restrict(ids: DataFrame): DataFrame =
       docs.join(ids.select("doc_id"), Seq("doc_id"), "left_semi")
-    val fl = flags.getOrElse(curateFlags(docs, None, minTokens, maxTokens,
-      minQuality, gopherFlags, dupDocs, dupStarts, maxDupFrac, 8,
-      embeddings, semTau, benchMod).localCheckpoint(true))
-    val scored = Some(fl.select("doc_id", "n_tokens", "quality_score"))
-    val residual = fl
+    val scored = Some(flags.select("doc_id", "n_tokens", "quality_score"))
+    val residual = flags
       .select(col("doc_id"), col("n_res").as("n_tokens"),
         col("quality_score"))
-    val chain = curateChain(benchMod)
-    val curatedIds = curatedIdsOf(fl, benchMod)
     // the near-dup gate is the one remaining expensive relation
     // consumed by two downstreams (cap chain + counts) — pin its
     // OUTPUT so the blocking joins run exactly once. capped/budgeted
     // stay lazy: off the pinned suppressed + flags they are one
     // aggregate + one banded fold, cheaper to recompute than a
     // checkpoint job's fixed overhead.
-    val suppressed = restrict(Dedup.nearDupSuppress(restrict(curatedIds),
-        scored = scored, shingles = shingles))
+    val suppressed = restrict(Dedup.nearDupSuppress(
+        restrict(curatedIdsOf(flags)), scored = scored,
+        shingles = Some(shingles)))
       .localCheckpoint(true)
     val capped = restrict(sourceCap(suppressed, cap, scored))
     val budgeted = selectToBudget(capped, tokenBudget, Some(residual))
@@ -466,8 +372,8 @@ object Curation {
     // membership flags — the first six stages are ALREADY columns
     // of the pinned flags relation, so the count spine joins only
     // the three post-gate id sets: ONE aggregate action total
-    val prefixes = chain.inits.toSeq.reverse.tail // chain[0..k], k=1..5
-    val row = fl
+    val prefixes = curateChain.inits.toSeq.reverse.tail // chain[0..k], k=1..5
+    val row = flags
       .join(suppressed.select("doc_id").withColumn("f_nd", lit(1L)),
         Seq("doc_id"), "left")
       .join(capped.select("doc_id").withColumn("f_cap", lit(1L)),
@@ -482,7 +388,7 @@ object Curation {
           sum(coalesce(col("f_cap"), lit(0L))).as("source_cap"),
           sum(coalesce(col("f_bud"), lit(0L))).as("token_budget")): _*)
       .head()
-    val names = chain.map(_._1) ++
+    val names = curateChain.map(_._1) ++
       Seq("near_dup", "source_cap", "token_budget")
     val counts = ("input" -> row.getAs[Long]("input")) +:
       names.map(n => n -> row.getAs[Long](n))
@@ -696,15 +602,13 @@ object Curation {
     * corpus-calibration knobs — rates/qualities are rounded to 6 dp
     * BEFORE comparison, so the cut is reproducible cross-engine.
     */
-  def sourcePolicy(docs: DataFrame, dropDupRate: Double = 0.3,
-                   capQuality: Double = 0.35,
-                   pairs: Option[DataFrame] = None): DataFrame = {
-    // a precomputed near-dup pair list (the expensive half) can be
-    // threaded through — a pipeline running several of the
-    // source-diagnostic operators should block the corpus once
-    val rate = pairs
-      .map(p => Dedup.nearDupRateBySourceOf(p, docs))
-      .getOrElse(Dedup.nearDupRateBySource(docs))
+  def sourcePolicy(docs: DataFrame, pairs: DataFrame,
+                   dropDupRate: Double = 0.3,
+                   capQuality: Double = 0.35): DataFrame = {
+    // the near-dup pair list (the expensive half) comes in built — a
+    // pipeline running several of the source-diagnostic operators
+    // blocks the corpus once ([[Dedup.blockedJaccardPairsOf]])
+    val rate = Dedup.nearDupRateBySourceOf(pairs, docs)
       .select("source", "n_docs", "near_dup_rate")
     val qual = TextAnalysis.stats(docs, keep = Seq("source"))
       .groupBy("source")
@@ -722,17 +626,15 @@ object Curation {
     * curation question it answers — "are the low-quality documents
     * also the duplicated ones?" — decides whether a quality gate
     * alone already removes most duplication (cheap) or dedup must
-    * run on the full corpus (expensive). One stats scan + the pair
-    * list (thread a materialized one via `pairs` — cf.
-    * [[sourcePolicy]]); bucket assignment is floor on the identical
+    * run on the full corpus (expensive). One stats scan + the
+    * materialized pair list `pairs` (cf. [[sourcePolicy]]); bucket assignment is floor on the identical
     * quality expression both engines compute (rule-2 determinism,
     * same argument as [[curate]]'s threshold). Output is O(buckets)
     * rows.
     */
-  def qualityDupProfile(docs: DataFrame, buckets: Int = 10,
-                        pairs: Option[DataFrame] = None): DataFrame = {
-    val p = pairs.getOrElse(Dedup.blockedJaccardPairs(docs))
-    val dupIds = p
+  def qualityDupProfile(docs: DataFrame, pairs: DataFrame,
+                        buckets: Int = 10): DataFrame = {
+    val dupIds = pairs
       .select(explode(array(col("id_a"), col("id_b"))).as("doc_id"))
       .distinct()
       .withColumn("dup", lit(1L))
@@ -762,16 +664,16 @@ object Curation {
     * is |sources| rows → broadcast; the cap window partitions by
     * source and only ever ranks capped sources' rows.
     */
-  def applySourcePolicy(docs: DataFrame, dropDupRate: Double = 0.3,
+  def applySourcePolicy(docs: DataFrame, pairs: DataFrame,
+                        dropDupRate: Double = 0.3,
                         capQuality: Double = 0.35,
-                        cap: Int = 40,
-                        pairs: Option[DataFrame] = None): DataFrame = {
+                        cap: Int = 40): DataFrame = {
     // stats' computed n_chars IS length(text) — identical to the
     // table column, so no metadata lookup join is needed for it
     val scored = TextAnalysis
       .stats(docs, keep = Seq("source", "lang"))
       .select("doc_id", "source", "lang", "n_chars", "quality_score")
-    val policy = sourcePolicy(docs, dropDupRate, capQuality, pairs)
+    val policy = sourcePolicy(docs, pairs, dropDupRate, capQuality)
       .select("source", "policy")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("source")

@@ -74,13 +74,9 @@ object Dedup {
         col("min_doc_id"), col("max_doc_id"))
 
   /** doc_id + distinct k-token shingle hash set — fused single-pass
-    * kernel (canonicalize+tokenize+shingle, no regexp). */
-  /** Test access to the shingle-set relation (the losslessness spec
-    * computes its all-pairs reference over the same sets). */
-  private[graft] def shingleSetsForTest(docs: DataFrame, k: Int): DataFrame =
-    shingleSets(docs, k)
-
-  private def shingleSets(docs: DataFrame, k: Int): DataFrame =
+    * kernel (canonicalize+tokenize+shingle, no regexp). Callers
+    * outside this object take the sets from [[blockingTrunk]]. */
+  private[graft] def shingleSets(docs: DataFrame, k: Int): DataFrame =
     docs.select(
       col("doc_id"),
       array_distinct(gf.tokenShingleHashes(col("text"), k)).as("shingles"))
@@ -149,11 +145,9 @@ object Dedup {
     * banded keys — the cheap PREFIX of the dedup pipeline, nothing
     * pairwise is materialized. Output is O(bands · distinct sizes).
     */
-  def lshBandStats(docs: DataFrame, shingleSize: Int = 3,
-                   numPerms: Int = 64, bands: Int = 16, seed: Long = 42L,
-                   shingles: Option[DataFrame] = None): DataFrame = {
-    val sets = shingles.getOrElse(shingleSets(docs, shingleSize))
-    val sigs = sets.select(col("doc_id"),
+  def lshBandStats(shingles: DataFrame, numPerms: Int = 64, bands: Int = 16,
+                   seed: Long = 42L): DataFrame = {
+    val sigs = shingles.select(col("doc_id"),
       gf.minhashSignature(col("shingles"), numPerms, seed).as("sig"))
     bandedKeys(sigs, "doc_id", "sig", bands)
       .groupBy("band", "band_key")
@@ -167,21 +161,17 @@ object Dedup {
 
   /** MinHash + LSH near-dup pairs with exact-Jaccard verification:
     * (id_a, id_b, jaccard) for all pairs with Jaccard ≥ tau among
-    * LSH candidates.
+    * LSH candidates, over a shingle-set relation (a
+    * [[BlockingTrunk]]'s sets — the corpus-sized trunk a pipeline
+    * persists per snapshot).
     */
-  def minhashPairs(docs: DataFrame, shingleSize: Int = 3, numPerms: Int = 64,
+  def minhashPairs(shingles: DataFrame, numPerms: Int = 64,
                    bands: Int = 16, tau: Double = 0.5, seed: Long = 42L,
-                   maxBucket: Int = 64,
-                   shingles: Option[DataFrame] = None): DataFrame = {
-    // no .cache(): shingle sets are cheap to recompute (one codegen'd
-    // scan) and pinning them poisons executor memory for later queries;
-    // at cluster scale persist(DISK_ONLY) here if the input scan is hot
-    // — or thread a BlockingTrunk's sets in via `shingles`
-    val sets = shingles.getOrElse(shingleSets(docs, shingleSize))
-    val sigs = sets.select(col("doc_id"),
+                   maxBucket: Int = 64): DataFrame = {
+    val sigs = shingles.select(col("doc_id"),
       gf.minhashSignature(col("shingles"), numPerms, seed).as("sig"))
     val pairs = bandedPairs(sigs, "doc_id", "sig", bands, maxBucket)
-    verifiedJaccard(pairs, sets, tau)
+    verifiedJaccard(pairs, shingles, tau)
   }
 
   /** Exact-Jaccard verification of candidate pairs against shingle
@@ -317,11 +307,11 @@ object Dedup {
   }
 
   /** MinHash+LSH dedup, per-document summary form. */
-  def minhashSummary(docs: DataFrame, shingleSize: Int = 3, numPerms: Int = 64,
-                     bands: Int = 16, tau: Double = 0.5, seed: Long = 42L,
-                     shingles: Option[DataFrame] = None): DataFrame =
-    pairSummary(docs, minhashPairs(docs, shingleSize, numPerms, bands, tau,
-      seed, shingles = shingles), "jaccard")
+  def minhashSummary(docs: DataFrame, shingles: DataFrame, numPerms: Int = 64,
+                     bands: Int = 16, tau: Double = 0.5,
+                     seed: Long = 42L): DataFrame =
+    pairSummary(docs, minhashPairs(shingles, numPerms, bands, tau, seed),
+      "jaccard")
 
   /** Near-exact dedup on the FULL minhash signature: documents whose
     * 64 permuted minima ALL collide have (w.h.p.) near-identical
@@ -388,14 +378,9 @@ object Dedup {
     * the oracle doesn't even need it — it checks the exhaustive
     * definition directly.
     */
-  def prefixJaccardPairs(docs: DataFrame, n: Int = 3,
-                         tau: Double = 0.5,
-                         shingles: Option[DataFrame] = None): DataFrame = {
-    // per-doc-pure, so the shared pinned trunk substitutes exactly
-    // (see the restriction note on shingleSetsOf)
-    val sets = shingles.getOrElse(shingleSets(docs, n))
-    verifiedJaccard(prefixJaccardCandidates(sets, tau), sets, tau)
-  }
+  def prefixJaccardPairs(shingles: DataFrame,
+                         tau: Double = 0.5): DataFrame =
+    verifiedJaccard(prefixJaccardCandidates(shingles, tau), shingles, tau)
 
   /** The candidate relation under [[prefixJaccardPairs]] — exposed
     * at package scope so the CONTRACT can be pinned as candidate

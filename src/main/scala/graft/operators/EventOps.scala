@@ -375,13 +375,6 @@ object EventOps {
           .as("ov_within_tol"))
   }
 
-  /** Exact distinct-user variant (shuffles user ids; the approx one
-    * above is the 100 TB default). */
-  def hourlyDistinctUsers(events: DataFrame): DataFrame =
-    events
-      .groupBy(date_trunc("hour", col("ts")).as("hour"))
-      .agg(countDistinct("user_id").as("distinct_users"))
-
   /** Sessionization: a new session starts after `gapMinutes` of
     * inactivity per user. Classic lag+cumsum — one shuffle on
     * user_id, session assignment is then per-partition.
@@ -1359,9 +1352,16 @@ object EventOps {
     * scheduling latency — the forecast-family discipline applies:
     * ONE distributed aggregate, then a model-sized driver fold.
     * Degree sums are integer (order-independent); the per-step
-    * double products fold in ascending (prev, next) state order, a
-    * deterministic order inside the same reassociation envelope the
-    * two engines already matched under).
+    * double products fold in ascending (prev, next) state order.
+    *
+    * Envelope: any other summation order (the oracle's, or the former
+    * distributed sum's) moves an unrounded mass by a few ulps — at
+    * most about steps · |types| · 2^-52 relative — so the reported
+    * `round(p, 9)` can differ by at most ONE unit in the 9th decimal
+    * (|Δ| ≤ 1e-9), and only for a mass within that distance of a
+    * rounding midpoint; the state set never changes. EventOpsSpec
+    * checks the fold against a reordered power iteration within this
+    * bound; docs/ORACLE_NOTES.md carries the same statement.
     */
   def markovStationary(events: DataFrame, steps: Int = 6): DataFrame = {
     val spark = events.sparkSession

@@ -648,25 +648,18 @@ object Multimodal {
     * buckets sit under the cap — true of the driver fixture with
     * margin (max measured bucket 115 of 5 000 blobs at sf0.1 vs the
     * 256 default), so the exhaustive oracle still holds exactly. */
-  def phashPairs(blobs: DataFrame, side: Int = 8, maxHamming: Int = 6,
-                 bands: Int = 7, maxBucket: Int = 256,
-                 sigs: Option[DataFrame] = None): DataFrame = {
+  def phashPairs(sigs: DataFrame, side: Int = 8, maxHamming: Int = 6,
+                 bands: Int = 7, maxBucket: Int = 256): DataFrame = {
     val totalBits = side * (side - 1)
     require(totalBits % bands == 0,
       s"bands must divide $totalBits, got $bands")
     require(bands > maxHamming,
       s"lossless banding needs bands > maxHamming ($bands vs $maxHamming)")
-    val bits = totalBits / bands
-    val mask = (1L << bits) - 1
-    // pinned: every band group reads the signature relation —
-    // without the pin the group-by re-runs the DECODE (and, on the
-    // synth fixture, the encode) over every payload. The pin is two
-    // longs per doc; the codec pass it saves is the key's dominant
-    // cost. A caller holding a persisted signature store (the
-    // production shape — perceptual hashes are written once per
-    // corpus snapshot) threads it in and skips the decode entirely.
-    val sg = sigs.getOrElse(phashSignatures(blobs, side).localCheckpoint(true))
-    bandedHammingPairs(sg, "dhash", totalBits, maxHamming, bands, maxBucket)
+    // `sigs` is the persisted signature store (the production shape —
+    // perceptual hashes are written once per corpus snapshot, two
+    // longs per doc): every band group reads it, and none re-runs the
+    // decode that is the tier's dominant cost
+    bandedHammingPairs(sigs, "dhash", totalBits, maxHamming, bands, maxBucket)
   }
 
   /** Pigeonhole-lossless banded Hamming self-join over any integer
@@ -713,12 +706,11 @@ object Multimodal {
     * so bigger is more similar. On the planted-copy
     * corpus exactly the BMP re-encodes (doc_id % 10 == 1) read
     * keep = false while their PNG originals survive. */
-  def phashSummary(blobs: DataFrame, side: Int = 8, maxHamming: Int = 6,
-                   bands: Int = 7, maxBucket: Int = 256,
-                   sigs: Option[DataFrame] = None): DataFrame =
+  def phashSummary(sigs: DataFrame, side: Int = 8, maxHamming: Int = 6,
+                   bands: Int = 7, maxBucket: Int = 256): DataFrame =
     Dedup.pairSummary(
-      sigs.map(_.select("doc_id")).getOrElse(blobs),
-      phashPairs(blobs, side, maxHamming, bands, maxBucket, sigs)
+      sigs.select("doc_id"),
+      phashPairs(sigs, side, maxHamming, bands, maxBucket)
         .withColumn("sim", lit(side * (side - 1)) - col("hamming")), "sim")
 
   /** Transitive closure of [[phashPairs]] — perceptual duplicate
@@ -728,12 +720,10 @@ object Multimodal {
     * label and the min-id survivor flag. Completes the perceptual
     * tier's pairs → summary → groups parity with the text dedup
     * family. */
-  def phashGroups(blobs: DataFrame, side: Int = 8, maxHamming: Int = 6,
-                  bands: Int = 7, maxBucket: Int = 256,
-                  sigs: Option[DataFrame] = None): DataFrame =
-    Dedup.dedupGroups(
-      sigs.map(_.select("doc_id")).getOrElse(blobs.select("doc_id")),
-      phashPairs(blobs, side, maxHamming, bands, maxBucket, sigs))
+  def phashGroups(sigs: DataFrame, side: Int = 8, maxHamming: Int = 6,
+                  bands: Int = 7, maxBucket: Int = 256): DataFrame =
+    Dedup.dedupGroups(sigs.select("doc_id"),
+      phashPairs(sigs, side, maxHamming, bands, maxBucket))
 
   /** Keep-THE-BEST-copy over the perceptual image groups — the r12
     * text lesson ([[Dedup.keepBest]]) ported to the perceptual tier:
@@ -743,32 +733,19 @@ object Multimodal {
     * integer rank key, 8 extra bytes/blob, no second decode), ties
     * broken to min doc_id. One window over the closure's groups;
     * same transitive closure as [[phashGroups]], so the two keys can
-    * never disagree about MEMBERSHIP, only about the survivor. */
-  def phashKeepBest(blobs: DataFrame, side: Int = 8, maxHamming: Int = 6,
-                    bands: Int = 7, maxBucket: Int = 256,
-                    sigs: Option[DataFrame] = None,
-                    groups: Option[DataFrame] = None): DataFrame = {
-    val sg = sigs.getOrElse(phashSignatures(blobs, side).localCheckpoint(true))
-    keepBestOf(
-      groups.getOrElse(Dedup.dedupGroups(sg.select("doc_id"),
-        phashPairs(blobs, side, maxHamming, bands, maxBucket, Some(sg)))),
-      sg.select(col("doc_id"), col("px").as("rank_key")))
-  }
+    * never disagree about MEMBERSHIP, only about the survivor:
+    * `groups` is [[phashGroups]] over the same `sigs`. */
+  def phashKeepBest(sigs: DataFrame, groups: DataFrame): DataFrame =
+    keepBestOf(groups, sigs.select(col("doc_id"), col("px").as("rank_key")))
 
   /** Audio twin of [[phashKeepBest]]: the best copy of a perceptual
     * audio group is the LONGEST recording (decoded sample count —
     * the master beats the trimmed/re-leveled derivative), ties to
-    * min doc_id; same closure as [[audioSigGroups]]. */
-  def audioSigKeepBest(blobs: DataFrame, maxHamming: Int = 6,
-                       bands: Int = 7, maxBucket: Int = 256,
-                       sigs: Option[DataFrame] = None,
-                       groups: Option[DataFrame] = None): DataFrame = {
-    val sg = sigs.getOrElse(audioSignatures(blobs).localCheckpoint(true))
-    keepBestOf(
-      groups.getOrElse(Dedup.dedupGroups(sg.select("doc_id"),
-        audioSigPairs(blobs, maxHamming, bands, maxBucket, Some(sg)))),
-      sg.select(col("doc_id"), col("n_samples").as("rank_key")))
-  }
+    * min doc_id; `groups` is [[audioSigGroups]] over the same
+    * `sigs`. */
+  def audioSigKeepBest(sigs: DataFrame, groups: DataFrame): DataFrame =
+    keepBestOf(groups,
+      sigs.select(col("doc_id"), col("n_samples").as("rank_key")))
 
   /** Shared survivor selection under the two perceptual keep-best
     * tiers: one row_number window per group over (rank desc, id). */
@@ -796,19 +773,15 @@ object Multimodal {
     * scale the banded new side is the small relation and
     * broadcasts; only signatures ever shuffle.
     */
-  def phashIncremental(newBlobs: DataFrame, storeSigs: DataFrame,
-                       side: Int = 8, maxHamming: Int = 6, bands: Int = 7,
-                       newSigs: Option[DataFrame] = None): DataFrame = {
+  def phashIncremental(newSigs: DataFrame, storeSigs: DataFrame,
+                       side: Int = 8, maxHamming: Int = 6,
+                       bands: Int = 7): DataFrame = {
     val totalBits = side * (side - 1)
     require(totalBits % bands == 0,
       s"bands must divide $totalBits, got $bands")
     require(bands > maxHamming,
       s"lossless banding needs bands > maxHamming ($bands vs $maxHamming)")
-    val bits = totalBits / bands
-    val mask = (1L << bits) - 1
-    val ns = newSigs.getOrElse(
-      phashSignatures(newBlobs, side).localCheckpoint(true))
-    bandedHammingIncremental(ns.withColumnRenamed("dhash", "sig"),
+    bandedHammingIncremental(newSigs.withColumnRenamed("dhash", "sig"),
       storeSigs.withColumnRenamed("dhash", "sig"),
       totalBits, maxHamming, bands)
   }
@@ -862,12 +835,10 @@ object Multimodal {
     * pointer-doubling propagation, completing the audio tier's
     * pairs → summary → groups → incremental parity with the image
     * tier. */
-  def audioSigGroups(blobs: DataFrame, maxHamming: Int = 6,
-                     bands: Int = 7, maxBucket: Int = 256,
-                     sigs: Option[DataFrame] = None): DataFrame =
-    Dedup.dedupGroups(
-      sigs.map(_.select("doc_id")).getOrElse(blobs.select("doc_id")),
-      audioSigPairs(blobs, maxHamming, bands, maxBucket, sigs))
+  def audioSigGroups(sigs: DataFrame, maxHamming: Int = 6,
+                     bands: Int = 7, maxBucket: Int = 256): DataFrame =
+    Dedup.dedupGroups(sigs.select("doc_id"),
+      audioSigPairs(sigs, maxHamming, bands, maxBucket))
 
   /** Incremental perceptual-audio dedup — the nightly-ingest shape,
     * completing the audio tier's parity with the image/text/chunk
@@ -875,15 +846,12 @@ object Multimodal {
     * the persisted 8-bytes-per-blob signature STORE via the same
     * pigeonhole-lossless banded join — history pays zero codec work.
     */
-  def audioSigIncremental(newBlobs: DataFrame, storeSigs: DataFrame,
-                          maxHamming: Int = 6, bands: Int = 7,
-                          newSigs: Option[DataFrame] = None): DataFrame = {
+  def audioSigIncremental(newSigs: DataFrame, storeSigs: DataFrame,
+                          maxHamming: Int = 6, bands: Int = 7): DataFrame = {
     require(63 % bands == 0, s"bands must divide 63, got $bands")
     require(bands > maxHamming,
       s"lossless banding needs bands > maxHamming ($bands vs $maxHamming)")
-    val ns = newSigs.getOrElse(
-      audioSignatures(newBlobs).localCheckpoint(true))
-    bandedHammingIncremental(ns.withColumnRenamed("asig", "sig"),
+    bandedHammingIncremental(newSigs.withColumnRenamed("asig", "sig"),
       storeSigs.withColumnRenamed("asig", "sig"), 63, maxHamming, bands)
   }
 
@@ -1350,16 +1318,13 @@ object Multimodal {
     * fixture exactly the trimmed copies pair with their masters —
     * the pairs the prefix tier provably misses (spec-pinned, the
     * mm_phash_pairs pattern). */
-  def audioWinnowPairs(blobs: DataFrame, maxHamming: Int = 0,
-                       bands: Int = 7, maxBucket: Int = 256,
-                       sigs: Option[DataFrame] = None): DataFrame = {
+  def audioWinnowPairs(sigs: DataFrame, maxHamming: Int = 0,
+                       bands: Int = 7, maxBucket: Int = 256): DataFrame = {
     require(63 % bands == 0, s"bands must divide 63, got $bands")
     require(bands > maxHamming,
       s"lossless banding needs bands > maxHamming ($bands vs $maxHamming)")
-    val sg = sigs.getOrElse(
-      audioWinnowSignatures(blobs).localCheckpoint(true))
     if (maxHamming == 0) {
-      return sg.groupBy("wsig")
+      return sigs.groupBy("wsig")
         .agg(collect_set(col("doc_id")).as("ds"))
         .filter(size(col("ds")) > 1)
         .select(slice(sort_array(col("ds")), 1, maxBucket).as("ds"))
@@ -1372,7 +1337,7 @@ object Multimodal {
     }
     val bits = 63 / bands
     val mask = (1L << bits) - 1
-    val banded = sg.select(col("doc_id"), col("wsig").as("sig"),
+    val banded = sigs.select(col("doc_id"), col("wsig").as("sig"),
       posexplode(expr(
         s"transform(sequence(0, ${bands - 1}), " +
           s"b -> shiftright(wsig, b * $bits) & ${mask}L)")))
@@ -1400,30 +1365,22 @@ object Multimodal {
     * same pairs → dedup → groups → incremental shape as every other
     * perceptual tier: keep = no smaller-id offset-duplicate, score =
     * the shared-fingerprint count (bigger = more shared audio). */
-  def audioWinnowDedup(blobs: DataFrame, maxHamming: Int = 0,
-                       bands: Int = 7, maxBucket: Int = 256,
-                       sigs: Option[DataFrame] = None): DataFrame = {
-    val sg = sigs.getOrElse(
-      audioWinnowSignatures(blobs).localCheckpoint(true))
+  def audioWinnowDedup(sigs: DataFrame, maxHamming: Int = 0,
+                       bands: Int = 7, maxBucket: Int = 256): DataFrame =
     Dedup.pairSummary(
-      sg.select("doc_id").distinct(),
-      audioWinnowPairs(blobs, maxHamming, bands, maxBucket, Some(sg))
+      sigs.select("doc_id").distinct(),
+      audioWinnowPairs(sigs, maxHamming, bands, maxBucket)
         .withColumn("sim", col("n_shared").cast("double")), "sim")
-  }
 
   /** Transitive closure of [[audioWinnowPairs]] — OFFSET-duplicate
     * GROUPS (a trim of a trim chains to its master): min-label
     * components via [[Dedup.dedupGroups]]'s pointer-doubling
     * propagation, completing the winnow tier's pairs → groups →
     * incremental parity with the other perceptual tiers. */
-  def audioWinnowGroups(blobs: DataFrame, maxHamming: Int = 0,
-                        bands: Int = 7, maxBucket: Int = 256,
-                        sigs: Option[DataFrame] = None): DataFrame = {
-    val sg = sigs.getOrElse(
-      audioWinnowSignatures(blobs).localCheckpoint(true))
-    Dedup.dedupGroups(sg.select("doc_id").distinct(),
-      audioWinnowPairs(blobs, maxHamming, bands, maxBucket, Some(sg)))
-  }
+  def audioWinnowGroups(sigs: DataFrame, maxHamming: Int = 0,
+                        bands: Int = 7, maxBucket: Int = 256): DataFrame =
+    Dedup.dedupGroups(sigs.select("doc_id").distinct(),
+      audioWinnowPairs(sigs, maxHamming, bands, maxBucket))
 
   /** Nightly-ingest twin of [[audioWinnowPairs]]: NEW audio decodes
     * and winnows once, then its fingerprints probe the persisted
@@ -1431,20 +1388,17 @@ object Multimodal {
     * winnow work. One row per new blob: count of store docs it
     * collides with, best match on the discrete (hamming, store_id)
     * cut, keep = no offset-duplicate in the store. */
-  def audioWinnowIncremental(newBlobs: DataFrame, storeSigs: DataFrame,
-                             maxHamming: Int = 0, bands: Int = 7,
-                             newSigs: Option[DataFrame] = None): DataFrame = {
+  def audioWinnowIncremental(newSigs: DataFrame, storeSigs: DataFrame,
+                             maxHamming: Int = 0, bands: Int = 7): DataFrame = {
     require(63 % bands == 0 && bands > maxHamming, "lossless banding")
-    val ns = newSigs.getOrElse(
-      audioWinnowSignatures(newBlobs).localCheckpoint(true))
     if (maxHamming == 0) {
-      val p = ns.join(storeSigs
+      val p = newSigs.join(storeSigs
           .select(col("doc_id").as("store_id"), col("wsig")), Seq("wsig"))
         .select("doc_id", "store_id").distinct()
       val best = p.groupBy("doc_id").agg(
         count(lit(1)).as("n_matches"),
         min(col("store_id")).as("match_id"))
-      return ns.select("doc_id").distinct()
+      return newSigs.select("doc_id").distinct()
         .join(best, Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("n_matches"), lit(0L)).as("n_matches"),
@@ -1467,7 +1421,7 @@ object Multimodal {
     // scalar, so filtering first leaves the 4-column distinct a
     // survivor-sized set instead of the whole join output (measured
     // 6.9 s → sub-second at sf0.1)
-    val qualifying = banded(ns, "doc_id")
+    val qualifying = banded(newSigs, "doc_id")
       .join(banded(storeSigs, "store_id"), Seq("band", "band_bits"))
       .withColumn("hamming", bit_count(
         col("sig_doc_id").bitwiseXOR(col("sig_store_id"))).cast("int"))
@@ -1482,7 +1436,7 @@ object Multimodal {
         countDistinct(col("store_id")).as("n_matches"),
         max(when(col("rn") === 1, col("store_id"))).as("match_id"),
         max(when(col("rn") === 1, col("hamming"))).as("best_hamming"))
-    ns.select("doc_id").distinct().join(best, Seq("doc_id"), "left")
+    newSigs.select("doc_id").distinct().join(best, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_matches"), lit(0L)).as("n_matches"),
         coalesce(col("match_id"), lit(-1L)).as("match_id"),
@@ -1500,19 +1454,11 @@ object Multimodal {
     * picking the smaller id for trimmed copies — any rank-key bug
     * flips real rows. Rank = decoded sample count, carried on the
     * winnow fingerprint store (no second decode), ties to min id;
-    * same closure as [[audioWinnowGroups]], so membership can never
-    * disagree between the two keys. */
-  def audioWinnowKeepBest(blobs: DataFrame, maxHamming: Int = 0,
-                          bands: Int = 7, maxBucket: Int = 256,
-                          sigs: Option[DataFrame] = None,
-                          groups: Option[DataFrame] = None): DataFrame = {
-    val sg = sigs.getOrElse(
-      audioWinnowSignatures(blobs).localCheckpoint(true))
-    keepBestOf(
-      groups.getOrElse(Dedup.dedupGroups(sg.select("doc_id").distinct(),
-        audioWinnowPairs(blobs, maxHamming, bands, maxBucket, Some(sg)))),
-      sg.groupBy("doc_id").agg(max(col("n_samples")).as("rank_key")))
-  }
+    * same closure as [[audioWinnowGroups]] (`groups`, over the same
+    * `sigs`), so membership can never disagree between the two keys. */
+  def audioWinnowKeepBest(sigs: DataFrame, groups: DataFrame): DataFrame =
+    keepBestOf(groups,
+      sigs.groupBy("doc_id").agg(max(col("n_samples")).as("rank_key")))
 
   /** The CROPPED/PADDED-copy image fixture — the symmetric hole the
     * audio offset fixture closed for trims, with both rank
@@ -1702,11 +1648,8 @@ object Multimodal {
     * fixture exactly the cropped copies pair with their masters —
     * pairs the whole-image tier structurally cannot see
     * (spec-pinned, the audio-winnow pattern). */
-  def imageWinnowPairs(blobs: DataFrame, maxBucket: Int = 256,
-                       sigs: Option[DataFrame] = None): DataFrame = {
-    val sg = sigs.getOrElse(
-      imageWinnowSignatures(blobs).localCheckpoint(true))
-    sg.groupBy("fp")
+  def imageWinnowPairs(sigs: DataFrame, maxBucket: Int = 256): DataFrame =
+    sigs.groupBy("fp")
       .agg(collect_set(col("doc_id")).as("ds"))
       .filter(size(col("ds")) > 1)
       .select(slice(sort_array(col("ds")), 1, maxBucket).as("ds"))
@@ -1715,31 +1658,22 @@ object Multimodal {
       .filter(col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("n_shared"))
-  }
 
   /** Per-blob crop-duplicate summary over [[imageWinnowPairs]]:
     * keep = no smaller-id crop-duplicate, score = the shared
     * fingerprint count (bigger = more shared image area). */
-  def imageWinnowDedup(blobs: DataFrame, maxBucket: Int = 256,
-                       sigs: Option[DataFrame] = None): DataFrame = {
-    val sg = sigs.getOrElse(
-      imageWinnowSignatures(blobs).localCheckpoint(true))
+  def imageWinnowDedup(sigs: DataFrame, maxBucket: Int = 256): DataFrame =
     Dedup.pairSummary(
-      sg.select("doc_id").distinct(),
-      imageWinnowPairs(blobs, maxBucket, Some(sg))
+      sigs.select("doc_id").distinct(),
+      imageWinnowPairs(sigs, maxBucket)
         .withColumn("sim", col("n_shared").cast("double")), "sim")
-  }
 
   /** Transitive closure of [[imageWinnowPairs]] — CROP-duplicate
     * GROUPS (a crop of a crop chains to its master): min-label
     * components via [[Dedup.dedupGroups]], one row per blob. */
-  def imageWinnowGroups(blobs: DataFrame, maxBucket: Int = 256,
-                        sigs: Option[DataFrame] = None): DataFrame = {
-    val sg = sigs.getOrElse(
-      imageWinnowSignatures(blobs).localCheckpoint(true))
-    Dedup.dedupGroups(sg.select("doc_id").distinct(),
-      imageWinnowPairs(blobs, maxBucket, Some(sg)))
-  }
+  def imageWinnowGroups(sigs: DataFrame, maxBucket: Int = 256): DataFrame =
+    Dedup.dedupGroups(sigs.select("doc_id").distinct(),
+      imageWinnowPairs(sigs, maxBucket))
 
   /** Keep-THE-BEST-copy over the CROP-duplicate groups — the image
     * twin of [[audioWinnowKeepBest]], with the same oracle-covered
@@ -1749,17 +1683,11 @@ object Multimodal {
     * picks the larger id on padded groups where min-id would pick
     * the smaller. Rank = pixel count carried on the winnow
     * fingerprint store (no second decode), ties to min id; same
-    * closure as [[imageWinnowGroups]]. */
-  def imageWinnowKeepBest(blobs: DataFrame, maxBucket: Int = 256,
-                          sigs: Option[DataFrame] = None,
-                          groups: Option[DataFrame] = None): DataFrame = {
-    val sg = sigs.getOrElse(
-      imageWinnowSignatures(blobs).localCheckpoint(true))
-    keepBestOf(
-      groups.getOrElse(Dedup.dedupGroups(sg.select("doc_id").distinct(),
-        imageWinnowPairs(blobs, maxBucket, Some(sg)))),
-      sg.groupBy("doc_id").agg(max(col("px")).as("rank_key")))
-  }
+    * closure as [[imageWinnowGroups]] (`groups`, over the same
+    * `sigs`). */
+  def imageWinnowKeepBest(sigs: DataFrame, groups: DataFrame): DataFrame =
+    keepBestOf(groups,
+      sigs.groupBy("doc_id").agg(max(col("px")).as("rank_key")))
 
   /** Nightly-ingest twin of [[imageWinnowPairs]]: NEW images decode
     * and winnow once, their fingerprints probe the persisted store
@@ -1767,17 +1695,15 @@ object Multimodal {
     * new blob: distinct store docs sharing a fingerprint, best
     * match (min store_id — every match is exact), keep = no
     * crop-duplicate in the store. */
-  def imageWinnowIncremental(newBlobs: DataFrame, storeSigs: DataFrame,
-                             newSigs: Option[DataFrame] = None): DataFrame = {
-    val ns = newSigs.getOrElse(
-      imageWinnowSignatures(newBlobs).localCheckpoint(true))
-    val p = ns.join(storeSigs
+  def imageWinnowIncremental(newSigs: DataFrame,
+                             storeSigs: DataFrame): DataFrame = {
+    val p = newSigs.join(storeSigs
         .select(col("doc_id").as("store_id"), col("fp")), Seq("fp"))
       .select("doc_id", "store_id").distinct()
     val best = p.groupBy("doc_id").agg(
       count(lit(1)).as("n_matches"),
       min(col("store_id")).as("match_id"))
-    ns.select("doc_id").distinct()
+    newSigs.select("doc_id").distinct()
       .join(best, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_matches"), lit(0L)).as("n_matches"),
@@ -1792,25 +1718,22 @@ object Multimodal {
     * oracle is the EXHAUSTIVE all-pairs definition with no candidate
     * rule). On the scaled-copy fixture exactly the re-leveled copies
     * pair with their sources. */
-  def audioSigPairs(blobs: DataFrame, maxHamming: Int = 6,
-                    bands: Int = 7, maxBucket: Int = 256,
-                    sigs: Option[DataFrame] = None): DataFrame = {
+  def audioSigPairs(sigs: DataFrame, maxHamming: Int = 6,
+                    bands: Int = 7, maxBucket: Int = 256): DataFrame = {
     require(63 % bands == 0, s"bands must divide 63, got $bands")
     require(bands > maxHamming,
       s"lossless banding needs bands > maxHamming ($bands vs $maxHamming)")
-    val sg = sigs.getOrElse(audioSignatures(blobs).localCheckpoint(true))
-    bandedHammingPairs(sg, "asig", 63, maxHamming, bands, maxBucket)
+    bandedHammingPairs(sigs, "asig", 63, maxHamming, bands, maxBucket)
   }
 
   /** Per-blob perceptual-audio dup summary — keep = no smaller-id
     * perceptual duplicate, score = 63 − hamming; completes the audio
     * tier into the same pairs → summary shape as phash/simhash. */
-  def audioSigDedup(blobs: DataFrame, maxHamming: Int = 6,
-                    bands: Int = 7, maxBucket: Int = 256,
-                    sigs: Option[DataFrame] = None): DataFrame =
+  def audioSigDedup(sigs: DataFrame, maxHamming: Int = 6,
+                    bands: Int = 7, maxBucket: Int = 256): DataFrame =
     Dedup.pairSummary(
-      sigs.map(_.select("doc_id")).getOrElse(blobs),
-      audioSigPairs(blobs, maxHamming, bands, maxBucket, sigs)
+      sigs.select("doc_id"),
+      audioSigPairs(sigs, maxHamming, bands, maxBucket)
         .withColumn("sim", lit(63) - col("hamming")), "sim")
 
   /** True when the leading bytes carry the RIFF/WAVE container magic

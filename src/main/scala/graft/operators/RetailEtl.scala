@@ -29,8 +29,6 @@ object RetailEtl {
   val RequiredColumns: Seq[String] =
     Seq("sale_id", "product_id", "quantity", "sale_amount", "sale_date")
 
-  private val NumericColumns = Seq("sale_id", "product_id", "quantity", "sale_amount")
-
   /** Map the TPC-H-ish `lineitem` fact onto the reference's sales
     * schema. `l_linestatus = 'O'` plays the online source and `'F'`
     * the in-store source (SURVEY.md §1).

@@ -1086,6 +1086,15 @@ object Similarity {
     rrfFuse(Seq(dense, lex), k, rrfK)
   }
 
+  /** The tokenize+count trunk under [[bm25Postings]]: one
+    * `(doc_id, tok, tf)` row per distinct token of each document. At
+    * 100 TB this is the postings table a search pipeline persists per
+    * corpus snapshot. */
+  def termFreqs(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+        explode(TextAnalysis.tokens(col("text"))).as("tok"))
+      .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
+
   /** BM25 lexical top-k — the classic probabilistic ranking function
     * (Robertson–Spärck Jones), the retrieval-quality upgrade over
     * [[hybridRrfTopK]]'s raw shared-token count: per shared term,
@@ -1138,8 +1147,10 @@ object Similarity {
     * `doc_id`, band-filtered to 2 ≤ df ≤ maxDfFrac·N. This is the
     * persisted-index half of [[bm25TopK]] — an IR system scores its
     * postings at INDEX time, not per query, so a pipeline running
-    * bm25 repeatedly should build this once (checkpoint/bucket it)
-    * and thread it in via `scoredPostings`. Build posture: dl rides
+    * bm25 builds this once (checkpoint/bucket it) and every query
+    * operator reads it. Its input is the tokenize+count trunk
+    * [[termFreqs]], the expensive prefix a pipeline running several
+    * lexical operators pays once. Build posture: dl rides
     * the postings as a window sum over doc_id (per-doc partitions
     * are bounded by document length — skew-proof — and it removes a
     * per-stage dl join downstream); df stays a groupBy (map-side
@@ -1151,16 +1162,8 @@ object Similarity {
     * single division is bit-stable cross-engine, unlike an iterated
     * float mean.
     */
-  def bm25Postings(docs: DataFrame, maxDfFrac: Double = 0.9,
-                   k1: Double = 1.2, b: Double = 0.75,
-                   tfPostings: Option[DataFrame] = None): DataFrame = {
-    // a precomputed (doc_id, tok, tf) relation can be threaded in —
-    // the tokenize+count trunk is the expensive prefix, and a
-    // pipeline running several lexical operators should pay it once
-    val tf = tfPostings.getOrElse(
-      docs.select(col("doc_id"),
-        explode(TextAnalysis.tokens(col("text"))).as("tok"))
-        .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf")))
+  def bm25Postings(tf: DataFrame, maxDfFrac: Double = 0.9,
+                   k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val corpusStats = broadcast(tf.agg(
         countDistinct(col("doc_id")).cast("double").as("n_docs"),
         sum("tf").as("tot_toks"))
@@ -1196,13 +1199,8 @@ object Similarity {
       s => s.getField("term")),
     lit(0.0), (acc, x) => acc + x)
 
-  def bm25TopK(docs: DataFrame, queryMod: Int = 100, k: Int = 10,
-               maxDfFrac: Double = 0.9, k1: Double = 1.2,
-               b: Double = 0.75, tfPostings: Option[DataFrame] = None,
-               championR: Int = 64,
-               scoredPostings: Option[DataFrame] = None): DataFrame = {
-    val posts = scoredPostings.getOrElse(
-      bm25Postings(docs, maxDfFrac, k1, b, tfPostings))
+  def bm25TopK(posts: DataFrame, queryMod: Int = 100, k: Int = 10,
+               championR: Int = 64): DataFrame = {
     val qPosts = posts.filter(col("doc_id") % queryMod === 0)
       .select(col("tok"), col("doc_id").as("query_id"))
     def termsOver(corpusPosts: DataFrame): DataFrame =
@@ -1323,10 +1321,8 @@ object Similarity {
   }
 
   private[graft] def bm25MaxScoreEstimate(
-      docs: DataFrame, queryMod: Int = 100, k: Int = 10,
-      maxDfFrac: Double = 0.9, k1: Double = 1.2, b: Double = 0.75,
+      posts: DataFrame, queryMod: Int = 100, k: Int = 10,
       sampleMod: Int = 50, blockSize: Int = 16): MaxScoreEstimate = {
-    val posts = bm25Postings(docs, maxDfFrac, k1, b)
     val qPosts = posts.filter(col("doc_id") % queryMod === 0)
       .select(col("tok"), col("doc_id").as("query_id"))
     val theta = bm25SampleTheta(posts, qPosts, k, sampleMod)
@@ -1456,18 +1452,12 @@ object Similarity {
     * prune even at blockSize=4 — and the volume estimate correctly
     * picks one direct pass instead.
     */
-  def bm25MaxScoreTopK(docs: DataFrame, queryMod: Int = 100, k: Int = 10,
-                       maxDfFrac: Double = 0.9, k1: Double = 1.2,
-                       b: Double = 0.75,
-                       tfPostings: Option[DataFrame] = None,
-                       scoredPostings: Option[DataFrame] = None,
+  def bm25MaxScoreTopK(posts: DataFrame, queryMod: Int = 100, k: Int = 10,
                        sampleMod: Int = 50, blockSize: Int = 16,
                        // test hook: pin the plan branch (None = the
                        // volume estimate decides). Both branches
                        // return the identical exhaustive ranking.
                        forcePruned: Option[Boolean] = None): DataFrame = {
-    val posts = scoredPostings.getOrElse(
-      bm25Postings(docs, maxDfFrac, k1, b, tfPostings))
     val qPosts = posts.filter(col("doc_id") % queryMod === 0)
       .select(col("tok"), col("doc_id").as("query_id"))
     val theta = bm25SampleTheta(posts, qPosts, k, sampleMod)

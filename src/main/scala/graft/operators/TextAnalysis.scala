@@ -490,7 +490,7 @@ object TextAnalysis {
   /** Token projection under the corpus-duplication family — cheap
     * and row-local, re-derived per consumer; the expensive piece
     * ([[dupNgramStarts]]'s corpus window) is what callers pin. */
-  private[graft] def dupNgramToks(docs0: DataFrame): DataFrame =
+  def dupNgramToks(docs0: DataFrame): DataFrame =
     Spread.spread(docs0.select(col("doc_id"), col("source"), col("text")))
       .select(col("doc_id"), col("source"), tokens(col("text")).as("toks"))
       .withColumn("tok_chars",
@@ -503,7 +503,7 @@ object TextAnalysis {
     * a `min(doc_id) ≠ max(doc_id)` window over that exchange. Input
     * is a [[dupNgramToks]] projection; output is proportional to
     * DUPLICATED occurrences, the relation callers pin. */
-  private[graft] def dupNgramDupOcc(docs: DataFrame, n: Int = 8): DataFrame = {
+  def dupNgramDupOcc(docs: DataFrame, n: Int = 8): DataFrame = {
     val occ = docs
       .filter(size(col("toks")) >= n)
       .select(col("doc_id"), explode(expr(
@@ -522,7 +522,7 @@ object TextAnalysis {
 
   /** Per-doc duplicated start positions folded from a
     * [[dupNgramDupOcc]] relation (cheap — dup rows only). */
-  private[graft] def startsOfOcc(occ: DataFrame): DataFrame =
+  def startsOfOcc(occ: DataFrame): DataFrame =
     occ.groupBy("doc_id").agg(collect_list(col("start")).as("starts"))
 
   /** The persisted dup-gram STORE a streaming intake gate probes:
@@ -578,12 +578,9 @@ object TextAnalysis {
     * Everything downstream of the trunk is proportional to
     * duplicated positions, not corpus size.
     */
-  def dupSpans(docs0: DataFrame, n: Int = 8,
-               toks: Option[DataFrame] = None,
-               starts: Option[DataFrame] = None): DataFrame = {
-    val d = toks.getOrElse(dupNgramToks(docs0))
-    val st = starts.getOrElse(dupNgramStarts(d, n))
-    val pos = st.select(col("doc_id"), explode(expr(
+  def dupSpans(docs0: DataFrame, starts: DataFrame, n: Int = 8): DataFrame = {
+    val d = dupNgramToks(docs0)
+    val pos = starts.select(col("doc_id"), explode(expr(
       s"array_distinct(flatten(transform(starts," +
         s" s -> sequence(s, s + ${n - 1}))))")).as("pos"))
     val wd = Window.partitionBy("doc_id").orderBy("pos")
@@ -621,11 +618,9 @@ object TextAnalysis {
     * the rewrite is transform + filter + join, codegen'd — no
     * shuffle beyond the trunk's).
     */
-  def dupSpansApply(docs0: DataFrame, n: Int = 8,
-                    toks: Option[DataFrame] = None,
-                    starts: Option[DataFrame] = None): DataFrame = {
-    val d = toks.getOrElse(dupNgramToks(docs0))
-    val st = starts.getOrElse(dupNgramStarts(d, n))
+  def dupSpansApply(docs0: DataFrame, starts: DataFrame,
+                    n: Int = 8): DataFrame = {
+    val d = dupNgramToks(docs0)
     // O(len) mask/merge walk (the stream twin's BitSet shape): sorted
     // starts → merged spans (intervals [s, s+n) chain into one island
     // iff the next start is within n of the previous — exactly the
@@ -634,7 +629,7 @@ object TextAnalysis {
     // array_contains(covered, i) rewrite paid O(len · |covered|) per
     // doc — quadratic on the long fully-duplicated documents this
     // operator exists to cut.
-    d.join(st, Seq("doc_id"), "left")
+    d.join(starts, Seq("doc_id"), "left")
       .withColumn("ss", expr(
         "array_sort(coalesce(starts, CAST(array() AS ARRAY<INT>)))"))
       .withColumn("bnds", expr(

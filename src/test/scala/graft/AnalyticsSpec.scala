@@ -208,7 +208,7 @@ class AnalyticsSpec extends SparkSpec {
     // rules: both directions of the surviving pair; parts 1 and 2
     // each appear in all 3 guarded orders → confidence 1, lift
     // 3·3/(3·3) = 1
-    val rules = Analytics.basketRules(li, minOrders = 2, maxParts = 20)
+    val rules = Analytics.basketRules(SharedTrunks.baskets(li), minOrders = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(2), r.getDouble(3), r.getDouble(4))).toMap
     assert(rules.keySet == Set((1L, 2L), (2L, 1L)))
@@ -538,13 +538,15 @@ class AnalyticsSpec extends SparkSpec {
       p <- Seq(1L, leaf)
     } yield (o, p)
     val li = rows.toDF("l_orderkey", "l_partkey")
-    val pr = Analytics.copurchasePagerank(li).collect()
+    val pr = Analytics.copurchasePagerank(SharedTrunks.basketPairs(li))
+      .collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     // teleport + damped redistribution conserves total mass at 1
     assert(math.abs(pr.values.sum - 1.0) < 1e-6, s"mass: ${pr.values.sum}")
     assert(pr(1L) > pr(2L) && pr(2L) == pr(3L) && pr(3L) == pr(4L),
       s"hub must dominate symmetric leaves: $pr")
-    val again = Analytics.copurchasePagerank(li.repartition(7)).collect()
+    val again = Analytics.copurchasePagerank(
+        SharedTrunks.basketPairs(li.repartition(7))).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(again == pr, "partition-dependent pagerank")
   }
@@ -704,7 +706,8 @@ class AnalyticsSpec extends SparkSpec {
       10L -> Seq(1L, 2L, 5L, 6L), 11L -> Seq(1L, 2L, 5L, 6L),
       12L -> Seq(1L, 5L, 6L), 13L -> Seq(2L, 5L, 6L))
       .flatMap { case (o, ps) => ps.map(p => (o, p)) }
-    val got = Analytics.basketChi2(rows.toDF("l_orderkey", "l_partkey"))
+    val got = Analytics.basketChi2(
+        SharedTrunks.baskets(rows.toDF("l_orderkey", "l_partkey")))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         ((r.getLong(2), if (r.isNullAt(5)) None else Some(r.getDouble(5)),
@@ -727,7 +730,8 @@ class AnalyticsSpec extends SparkSpec {
       (for (o <- Seq(12L, 13L); p <- Seq(1L, 4L)) yield (o, p)) ++
       (for (o <- Seq(99L, 98L); p <- 100L until 125L) yield (o, p))
     val li = rows.toDF("l_orderkey", "l_partkey")
-    val r = Analytics.copurchaseTriangles(li).collect().head
+    val r = Analytics.copurchaseTriangles(SharedTrunks.basketPairs(li))
+      .collect().head
     // graph: edges (1,2)(1,3)(2,3)(1,4); degrees 3,2,2,1 →
     // wedges 3+1+1+0 = 5; one triangle; clustering 3·1/5
     assert(r.getLong(0) == 4L, s"nodes: $r")

@@ -486,4 +486,31 @@ class AnnIndexSpec extends SparkSpec {
     assert(AnnIndex.stampOf(files.updated(1, st("part-0.parquet", 812L, 99L))) !== stamp,
       "a rewritten file must change the stamp")
   }
+
+  test("annindex model memo: append hits the memo, in-place model rewrite misses it") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("ann_memo").toString
+    val emb = (0L until 64L).map(i =>
+      (i, Array.tabulate(8)(d => ((i * 7 + d) % 13).toFloat)))
+      .toDF("vec_id", "embedding")
+    AnnIndex.buildIvf(emb, dir, nlist = 4)
+    val first = AnnIndex.loadCentroids(spark, dir)
+    // memo hit: same files, same array INSTANCE back
+    assert(AnnIndex.loadCentroids(spark, dir) eq first)
+    // append touches only vectors/ — the model memo must stay valid
+    AnnIndex.appendIvf(
+      (100L until 110L).map(i =>
+        (i, Array.tabulate(8)(d => ((i * 3 + d) % 11).toFloat)))
+        .toDF("vec_id", "embedding"), dir)
+    assert(AnnIndex.loadCentroids(spark, dir) eq first)
+    // in-place rebuild on a DIFFERENT corpus rewrites centroids —
+    // the directory stamp changes and the memo must reload
+    val emb2 = (0L until 64L).map(i =>
+      (i, Array.tabulate(8)(d => ((i * 5 + d * 2) % 17).toFloat)))
+      .toDF("vec_id", "embedding")
+    AnnIndex.buildIvf(emb2, dir, nlist = 4)
+    val second = AnnIndex.loadCentroids(spark, dir)
+    assert(!(second eq first))
+    assert(!second.zip(first).forall { case (a, b) => a.sameElements(b) })
+  }
 }

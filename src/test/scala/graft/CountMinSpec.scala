@@ -89,7 +89,8 @@ class CountMinSpec extends SparkSpec {
 
   test("readout: the top-k table is the exact top-k with min-over-" +
     "rows estimates (brute-force parity)") {
-    val got = CountMin.topTokenEstimates(docs, k = 10).collect()
+    val got = CountMin.topTokenEstimates(docs,
+        SharedTrunks.pin(CountMin.sketch(docs)), k = 10).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sortBy(_._1)
     val expTop = exactCounts(docs).orderBy(col("exact_cnt").desc, col("tok"))

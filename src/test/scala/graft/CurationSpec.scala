@@ -90,8 +90,9 @@ class CurationSpec extends SparkSpec {
     val emb = spark.read
       .parquet("/root/testdata/sf0.001/embeddings.parquet")
     val (cap, budget) = (5, 2000L)
-    val full = Curation.curateFull(docs, cap = cap, tokenBudget = budget,
-        embeddings = Some(emb))
+    val full = Curation.curateFull(docs, SharedTrunks.curateFlags(docs, emb,
+        SharedTrunks.gopherFlagged(docs)),
+        SharedTrunks.shingles(docs), cap = cap, tokenBudget = budget)
       .collect().map(r =>
         (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
     assert(full.nonEmpty, "the composed pipeline should keep something")
@@ -125,13 +126,62 @@ class CurationSpec extends SparkSpec {
       s"kept $total residual tokens for budget $budget")
   }
 
+  test("benchMod is decided once, in the flags: full and funnel exclude its slice") {
+    // clean, mutually distinct prose: ≥ 50 alphabetic words with a
+    // stop word every third position, so each doc passes the Gopher
+    // suite over its own text, the C4 bounds, both dedup tiers, the
+    // dup-gram gate and n-gram decontamination — only the benchmark
+    // slice can drop one
+    val stops = Seq("the", "of", "and", "to", "with", "that")
+    def word(n: Int): String =
+      Iterator.iterate(n)(_ / 26).takeWhile(_ > 0)
+        .map(k => ('a' + k % 26).toChar).mkString
+    def prose(id: Int): String = (0 until 60).map(j =>
+      if (j % 3 == 0) stops(j / 3 % stops.size)
+      else word(20000 + id * 100 + j)).mkString(" ")
+    val ids = Seq(49L, 50L, 51L, 52L, 100L, 101L)
+    val docs = ids.map(id => (id, prose(id.toInt)))
+      .toDF("doc_id", "text")
+      .withColumn("lang", lit("en"))
+      .withColumn("source", lit("s"))
+      .withColumn("n_chars", length(col("text")).cast("long"))
+    val emb = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
+    val gopher = SharedTrunks.pin(
+      graft.operators.TextAnalysis.gopherFlagged(docs))
+    val shingles = SharedTrunks.shingles(docs)
+    def kept(benchMod: Int): (Set[Long], Map[String, Long]) = {
+      val flags = SharedTrunks.curateFlags(docs, emb, gopher, benchMod)
+      val full = Curation.curateFull(docs, flags, shingles,
+          tokenBudget = 100000L)
+        .collect().map(_.getLong(0)).toSet
+      val funnel = Curation.curateFunnel(docs, flags, shingles,
+          tokenBudget = 100000L)
+        .collect().map(r => r.getString(1) -> r.getLong(2)).toMap
+      (full, funnel)
+    }
+    // control: no id of this corpus is in the default slice, and
+    // every doc survives every gate
+    val (all, allFunnel) = kept(97)
+    assert(all == ids.toSet, s"every doc must survive the gates: $all")
+    assert(allFunnel("token_budget") == ids.size.toLong, s"$allFunnel")
+    // the slice the flags were built with is the slice both exclude
+    val (full50, funnel50) = kept(50)
+    assert(full50 == Set(49L, 51L, 52L, 101L), s"got $full50")
+    assert(funnel50("decontam") == allFunnel("decontam") - 2L,
+      s"the funnel's decontam stage must drop the slice: $funnel50")
+    assert(funnel50("token_budget") == full50.size.toLong, s"$funnel50")
+  }
+
   test("curateFunnel: stage counts tie to the pipeline, drops reconcile") {
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
     val emb = spark.read
       .parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val rows = Curation.curateFunnel(docs, cap = 5, tokenBudget = 2000L,
-        embeddings = Some(emb))
+    val flags = SharedTrunks.curateFlags(docs, emb,
+        SharedTrunks.gopherFlagged(docs))
+    val shingles = SharedTrunks.shingles(docs)
+    val rows = Curation.curateFunnel(docs, flags, shingles, cap = 5,
+        tokenBudget = 2000L)
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
         if (r.isNullAt(3)) None else Some(r.getLong(3))))
@@ -147,8 +197,8 @@ class CurationSpec extends SparkSpec {
     assert(rows.head._4.isEmpty, "input row carries no drop")
     assert(rows.head._3 == docs.count(), "input count is the corpus")
     // endpoints tie to the real pipeline
-    val end = Curation.curateFull(docs, cap = 5, tokenBudget = 2000L,
-      embeddings = Some(emb)).count()
+    val end = Curation.curateFull(docs, flags, shingles, cap = 5,
+      tokenBudget = 2000L).count()
     assert(rows.last._3 == end, s"funnel end ${rows.last._3} != pipeline $end")
   }
 
@@ -296,7 +346,8 @@ class CurationSpec extends SparkSpec {
       (5L, fresh + " " + fresh, "srcOk"))
       .toDF("doc_id", "text", "source")
     val got = graft.operators.Curation
-      .sourcePolicy(docs, dropDupRate = 0.5, capQuality = 0.3)
+      .sourcePolicy(docs, SharedTrunks.blockedPairs(docs),
+        dropDupRate = 0.5, capQuality = 0.3)
       .collect()
       .map(r => r.getString(0) -> r.getAs[String]("policy")).toMap
     assert(got == Map(
@@ -308,8 +359,8 @@ class CurationSpec extends SparkSpec {
     val metaDocs = docs.withColumn("lang", lit("en"))
       .withColumn("n_chars", length(col("text")).cast("long"))
     val applied = graft.operators.Curation
-      .applySourcePolicy(metaDocs, dropDupRate = 0.5, capQuality = 0.3,
-        cap = 1)
+      .applySourcePolicy(metaDocs, SharedTrunks.blockedPairs(metaDocs),
+        dropDupRate = 0.5, capQuality = 0.3, cap = 1)
       .collect().map(_.getAs[Long]("doc_id")).toSet
     assert(applied == Set(3L, 5L), s"got $applied")
   }
@@ -324,7 +375,7 @@ class CurationSpec extends SparkSpec {
       (3L, Seq.fill(32)("the xa ya za").mkString(" ")))
       .toDF("doc_id", "text")
     val pairs = Seq((1L, 2L)).toDF("id_a", "id_b")
-    val out = Curation.qualityDupProfile(docs, pairs = Some(pairs))
+    val out = Curation.qualityDupProfile(docs, pairs)
       .collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3)))
       .toMap
@@ -332,6 +383,24 @@ class CurationSpec extends SparkSpec {
       0L -> (2L, 2L, 1.0),
       9L -> (1L, 0L, 0.0)), s"profile: $out")
   }
+
+  /** [[Curation.curateIncremental]] over the trunks the driver key
+    * reads: the Gopher pass over the whole corpus (delta ∪ history)
+    * and the dup-gram store of the history. */
+  private def incremental(delta: org.apache.spark.sql.DataFrame,
+                          history: org.apache.spark.sql.DataFrame,
+                          embeddings: org.apache.spark.sql.DataFrame,
+                          minTokens: Long = 20L, minQuality: Double = 0.2,
+                          tau: Double = 0.5) =
+    Curation.curateIncremental(delta, history,
+      gopherFlags = SharedTrunks.gopherFlagged(delta.unionByName(history)),
+      dupStore = SharedTrunks.pin(
+        graft.operators.TextAnalysis.dupNgramStore(history)),
+      embeddings = embeddings,
+      minTokens = minTokens, minQuality = minQuality, tau = tau)
+
+  private def noEmbeddings =
+    Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
 
   test("curateIncremental gates the delta against history, never rescores it") {
     def doc(id: Long, text: String) = (id, text, "en", "src", text.length.toLong)
@@ -354,13 +423,13 @@ class CurationSpec extends SparkSpec {
       // quality kill: below minTokens
       doc(14L, "x"))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val kept = Curation.curateIncremental(delta, history,
+    val kept = incremental(delta, history, noEmbeddings,
       minTokens = 2L, minQuality = 0.0).collect().map(_.getLong(0)).toSet
     assert(kept == Set(12L),
       s"only the fresh unique batch winner survives: $kept")
     // the near-dup threshold is live: loosening tau above the crafted
     // pair's jaccard (0.6) lets doc 16 back in
-    val loose = Curation.curateIncremental(delta, history,
+    val loose = incremental(delta, history, noEmbeddings,
       minTokens = 2L, minQuality = 0.0, tau = 0.7)
       .collect().map(_.getLong(0)).toSet
     assert(loose == Set(16L, 12L), s"tau gate must be the dropper: $loose")
@@ -376,12 +445,13 @@ class CurationSpec extends SparkSpec {
     val emb = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val delta = docs.filter(col("doc_id") % 10 === 0)
     val hist = docs.filter(col("doc_id") % 10 =!= 0)
-    val base = Curation.curateIncremental(delta, hist)
+    val base = incremental(delta, hist, emb.filter(lit(false)))
       .collect().map(_.getLong(0)).toSet
     assert(base.nonEmpty, "need a kept delta doc to poison")
     val victim = base.min
-    // clean-table sanity: without embeddings the gate is absent
-    assert(Curation.curateIncremental(delta, hist, embeddings = Some(emb))
+    // clean-table sanity: over an empty embedding table the gate is
+    // vacuous, and the real table drops nothing more
+    assert(incremental(delta, hist, emb)
       .collect().map(_.getLong(0)).toSet == base,
       "the sf0.001 vectors must be semantically clean (else pick another victim)")
     val benchVec = emb.filter(col("vec_id") === 0L)
@@ -390,8 +460,7 @@ class CurationSpec extends SparkSpec {
     val poisoned = emb.withColumn("embedding",
       when(col("vec_id") === victim, typedlit(benchVec))
         .otherwise(col("embedding")))
-    val gated = Curation.curateIncremental(delta, hist,
-        embeddings = Some(poisoned))
+    val gated = incremental(delta, hist, poisoned)
       .collect().map(_.getLong(0)).toSet
     assert(gated == base - victim,
       s"only the poisoned doc may drop: base=$base gated=$gated victim=$victim")
@@ -412,7 +481,9 @@ class CurationSpec extends SparkSpec {
       .filter(graft.operators.TextAnalysis.gopherAnyFlag)
       .collect().map(_.getAs[Long]("doc_id")).toSet
     val full = ids(Curation.curate(docs)) -- gflagged
-    val incr = ids(Curation.curateIncremental(docs, docs.filter(lit(false))))
+    val incr = ids(incremental(docs, docs.filter(lit(false)),
+      graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
+        .filter(lit(false))))
     assert(full == incr, s"day-zero mismatch: ${(full -- incr, incr -- full)}")
     assert(full.nonEmpty, "vacuously-equal empty results prove nothing")
   }

@@ -57,7 +57,8 @@ class DedupRecallSpec extends SparkSpec {
   test("minhash LSH candidate recall >= 0.9 against the exact anchor") {
     // same similarity space (token 3-gram Jaccard), same tau: recall
     // is purely the banding miss rate, 1-(1-J^4)^16 ~ 0.9998 at J=0.8
-    val found = pairSet(Dedup.minhashPairs(docs, shingleSize = 3, tau = 0.5))
+    val found = pairSet(Dedup.minhashPairs(
+      SharedTrunks.shingles(docs, 3), tau = 0.5))
     val r = recall(found, anchor)
     assert(r >= 0.9, s"minhash recall $r over ${anchor.size} anchor pairs")
   }

@@ -87,7 +87,8 @@ class DedupSpec extends SparkSpec {
     // reference is the exhaustive all-pairs computation over the
     // driver corpus (planted near-dups included)
     val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val sets = Dedup.shingleSetsForTest(corpus, 3).collect()
+    val shingles = SharedTrunks.shingles(corpus, 3)
+    val sets = shingles.collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
     val expected = (for {
       a <- sets.keys; b <- sets.keys if a < b
@@ -96,7 +97,7 @@ class DedupSpec extends SparkSpec {
       if union > 0 && inter.toDouble / union >= 0.5
     } yield (a, b) -> inter.toDouble / union).toMap
     assert(expected.nonEmpty, "sf0.001 must contain planted near-dups")
-    val got = Dedup.prefixJaccardPairs(corpus).collect()
+    val got = Dedup.prefixJaccardPairs(shingles).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(got.keySet == expected.keySet,
       s"missing=${expected.keySet -- got.keySet} extra=${got.keySet -- expected.keySet}")
@@ -220,7 +221,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash LSH finds near-dup pairs, not unrelated ones") {
-    val pairs = Dedup.minhashPairs(docs, tau = 0.3)
+    val pairs = Dedup.minhashPairs(SharedTrunks.shingles(docs), tau = 0.3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((0L, 1L))) // exact dup: jaccard 1.0
     assert(pairs.contains((0L, 2L)) || pairs.contains((1L, 2L)),
@@ -230,7 +231,8 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash summary marks dominated docs as non-keepers") {
-    val s = Dedup.minhashSummary(docs, tau = 0.3).collect()
+    val s = Dedup.minhashSummary(docs, SharedTrunks.shingles(docs),
+        tau = 0.3).collect()
       .map(r => r.getLong(0) -> r.getBoolean(3)).toMap
     assert(s(0L), "doc 0 is the senior copy")
     assert(!s(1L), "doc 1 duplicates doc 0")
@@ -475,7 +477,7 @@ class DedupSpec extends SparkSpec {
     // (prefix too long, suffix bound dropped) blows through this
     // before any bench run would notice.
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.1")
-    val sets = Dedup.shingleSetsForTest(docs, 3)
+    val sets = Dedup.shingleSets(docs, 3)
     val n = Dedup.prefixJaccardCandidates(sets, 0.5).count()
     assert(n <= 125000L, s"candidate volume regressed: $n > 125000")
     assert(n > 0L, "fixture must generate candidates")
@@ -601,7 +603,8 @@ class DedupSpec extends SparkSpec {
       (2L, "the quick brown fox jumps over the lazy dog again"), // dup of 1
       (3L, "completely different text with no shared shingles here at all"))
       .toDF("doc_id", "text")
-    val rows = Dedup.lshBandStats(docs, bands = 16).collect()
+    val rows = Dedup.lshBandStats(SharedTrunks.shingles(docs), bands = 16)
+      .collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     // identity 1: every band accounts for all 3 docs
     val perBand = rows.groupBy(_._1)

@@ -58,9 +58,9 @@ class DupSpanPropertySpec extends SparkSpec {
         } else id -> toks
       }
       val want = reference(docs)
-      val got = TextAnalysis.dupSpans(
-          docs.map { case (id, t) => (id, "s", t.mkString(" ")) }
-            .toDF("doc_id", "source", "text"))
+      val df = docs.map { case (id, t) => (id, "s", t.mkString(" ")) }
+        .toDF("doc_id", "source", "text")
+      val got = TextAnalysis.dupSpans(df, SharedTrunks.dupStarts(df))
         .collect()
         .map(r => r.getLong(0) -> (r.getLong(2), r.getLong(3)))
         .groupBy(_._1).view
@@ -83,7 +83,7 @@ class DupSpanPropertySpec extends SparkSpec {
       (0L, "s", long), (1L, "s", long),
       (2L, "s", Vector.tabulate(40)(i => s"solo$i").mkString(" ")))
       .toDF("doc_id", "source", "text")
-    val out = TextAnalysis.dupSpansApply(docs).collect()
+    val out = TextAnalysis.dupSpansApply(docs, SharedTrunks.dupStarts(docs)).collect()
       .map(r => r.getLong(0) ->
         (r.getLong(2), r.getLong(3), r.getString(4))).toMap
     Seq(0L, 1L).foreach { id =>
@@ -108,7 +108,7 @@ class DupSpanPropertySpec extends SparkSpec {
     val d1 = runA ++ fill("m", 7) ++ runB ++ fill("n", 2) ++ runC
     val docs = Seq((0L, "s", d0.mkString(" ")), (1L, "s", d1.mkString(" ")))
       .toDF("doc_id", "source", "text")
-    val out = TextAnalysis.dupSpansApply(docs).collect()
+    val out = TextAnalysis.dupSpansApply(docs, SharedTrunks.dupStarts(docs)).collect()
       .map(r => r.getLong(0) -> (r.getLong(3), r.getString(4))).toMap
     assert(out(0L) == ((27L,
       (fill("x", 5) ++ fill("y", 4) ++ fill("z", 6) ++ fill("q", 3))

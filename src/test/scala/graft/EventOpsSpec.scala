@@ -541,6 +541,51 @@ class EventOpsSpec extends SparkSpec {
     assert(again == got, "partition-dependent stationary distribution")
   }
 
+  test("markovStationary: the driver fold matches a reordered power iteration " +
+    "within the 9th-decimal envelope") {
+    // the envelope in docs/ORACLE_NOTES.md: summing the same per-step
+    // contributions in another order moves an unrounded mass by a few
+    // ulps, so round(p, 9) may differ by at most one unit in the 9th
+    // decimal, and the state set never changes
+    val rnd = new scala.util.Random(19)
+    val types = Seq("view", "click", "cart", "buy", "exit")
+    for (_ <- 0 until 4) {
+      var id = 0L
+      val rows = for {
+        u <- 1L to 12L
+        k <- 0 until 2 + rnd.nextInt(9)
+      } yield {
+        id += 1
+        (id, f"2024-01-01 10:00:$k%02d", u, types(rnd.nextInt(types.size)))
+      }
+      val steps = 1 + rnd.nextInt(8)
+      val got = EventOps.markovStationary(events(rows: _*), steps).collect()
+        .map(r => r.getString(0) -> r.getDouble(1)).toMap
+      // reference: the same chain off the raw rows, its contributions
+      // summed in DESCENDING (next, prev) order
+      val counts = rows.groupBy(_._3).values
+        .map(_.sortBy(r => (r._2, r._1)).map(_._4))
+        .flatMap(s => s.zip(s.tail))
+        .groupBy(identity).map { case (k, v) => k -> v.size.toLong }
+      val deg = counts.groupBy(_._1._1).map { case (p, m) => p -> m.values.sum }
+      val order = counts.toSeq.sortBy { case ((p, n), _) => (n, p) }.reverse
+      var pi = deg.keys.map(_ -> 1.0 / deg.size).toMap
+      for (_ <- 1 to steps) {
+        val next = scala.collection.mutable.Map.empty[String, Double]
+        for (((p, n), c) <- order; m <- pi.get(p))
+          next(n) = next.getOrElse(n, 0.0) + m * (c.toDouble / deg(p))
+        pi = next.toMap
+      }
+      assert(got.keySet == pi.keySet, s"state sets differ: $got vs $pi")
+      pi.foreach { case (st, p) =>
+        val want = BigDecimal(p).setScale(9, BigDecimal.RoundingMode.HALF_UP)
+          .toDouble
+        assert(math.abs(got(st) - want) <= 1e-9 + 1e-15,
+          s"$st: fold ${got(st)} vs reordered $want (steps $steps)")
+      }
+    }
+  }
+
   test("activityPowerlaw: MLE matches the closed form; all-light users read null") {
     // users with 1, 2, 4, 8 events (xmin=2 → tail {2, 4, 8})
     val rows = Seq(1L -> 1, 2L -> 2, 3L -> 4, 4L -> 8).flatMap {

@@ -352,7 +352,8 @@ class MultimodalSpec extends SparkSpec {
     val docs = (0L until 40L).toDF("doc_id")
     val blobs = Multimodal.synthMixedCorpus(docs).cache()
     // the BMP copies decode to the source's pixels (±1 on one channel)
-    val pairs = Multimodal.phashPairs(blobs).collect()
+    val pairs = Multimodal.phashPairs(SharedTrunks.pin(Multimodal.phashSignatures(blobs)))
+      .collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2))).toMap
     assert(pairs.keySet == Set((0L, 1L), (10L, 11L), (20L, 21L), (30L, 31L)),
       s"exactly the planted copy pairs must match: ${pairs.keySet}")
@@ -374,7 +375,8 @@ class MultimodalSpec extends SparkSpec {
   test("audioSigPairs: volume-scaled copies pair perceptually; byte identity misses them") {
     val docs = (0L until 40L).toDF("doc_id")
     val blobs = Multimodal.synthScaledWavCorpus(docs).cache()
-    val pairs = Multimodal.audioSigPairs(blobs).collect()
+    val pairs = Multimodal.audioSigPairs(SharedTrunks.pin(Multimodal.audioSignatures(blobs)))
+      .collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2))).toMap
     assert(pairs.keySet == Set((0L, 1L), (10L, 11L), (20L, 21L), (30L, 31L)),
       s"exactly the planted re-leveled copies must pair: ${pairs.keySet}")
@@ -391,8 +393,8 @@ class MultimodalSpec extends SparkSpec {
 
   test("audioSigDedup: scaled copies suppress, their sources survive") {
     val docs = (0L until 30L).toDF("doc_id")
-    val out = Multimodal.audioSigDedup(
-        Multimodal.synthScaledWavCorpus(docs)).collect()
+    val out = Multimodal.audioSigDedup(SharedTrunks.pin(Multimodal.audioSignatures(
+        Multimodal.synthScaledWavCorpus(docs)))).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(3))).toMap
     val copies = Set(1L, 11L, 21L)
     copies.foreach(d =>
@@ -410,7 +412,7 @@ class MultimodalSpec extends SparkSpec {
     // of {0, 10, 20} (in the store) and must match; {6, 16, 26} are
     // originals with no perceptual twin and must keep
     val out = Multimodal.audioSigIncremental(
-        blobs.filter($"doc_id" % 5 === 1),
+        SharedTrunks.pin(Multimodal.audioSignatures(blobs.filter($"doc_id" % 5 === 1))),
         storeSigs = Multimodal.audioSignatures(
           blobs.filter($"doc_id" % 5 =!= 1))).collect()
       .map(r => r.getLong(0) ->
@@ -427,8 +429,8 @@ class MultimodalSpec extends SparkSpec {
 
   test("audioSigGroups: re-leveled copies land in their sources' groups") {
     val docs = (0L until 30L).toDF("doc_id")
-    val out = Multimodal.audioSigGroups(
-        Multimodal.synthScaledWavCorpus(docs)).collect()
+    val out = Multimodal.audioSigGroups(SharedTrunks.pin(Multimodal.audioSignatures(
+        Multimodal.synthScaledWavCorpus(docs)))).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
     Seq(1L -> 0L, 11L -> 10L, 21L -> 20L).foreach { case (copy, src) =>
       assert(out(copy) == ((src, false)), s"copy $copy: ${out(copy)}")
@@ -443,9 +445,7 @@ class MultimodalSpec extends SparkSpec {
     // The cap bounds candidate volume to O(maxBucket²) per band and
     // the survivor subset is the smallest doc_ids (deterministic).
     val sigs = (0L until 20L).map(d => (d, 0L)).toDF("doc_id", "dhash")
-    val noBlobs = Seq.empty[Long].toDF("doc_id") // sigs threaded, codec untouched
-    val capped = Multimodal.phashPairs(noBlobs, maxBucket = 5,
-        sigs = Some(sigs)).collect()
+    val capped = Multimodal.phashPairs(sigs, maxBucket = 5).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val want = (for { a <- 0L until 5L; b <- a + 1 until 5L }
       yield (a, b)).toSet
@@ -453,7 +453,7 @@ class MultimodalSpec extends SparkSpec {
       s"cap must keep exactly the 5 smallest ids' pairs: $capped")
     // uncapped (default 256 > 20): the full quadratic set — the cap,
     // not the banding, is what bounded the volume above
-    val full = Multimodal.phashPairs(noBlobs, sigs = Some(sigs)).count()
+    val full = Multimodal.phashPairs(sigs).count()
     assert(full == 190L, s"20 identical sigs pair exhaustively: $full")
   }
 
@@ -494,14 +494,16 @@ class MultimodalSpec extends SparkSpec {
     // precondition (the mm_phash_pairs pattern): the PREFIX tier
     // reads samples [0, 64) — a 37-sample trim shifts the window,
     // so the prefix signatures share nothing and no copy pairs
-    val prefix = Multimodal.audioSigPairs(corpus).collect()
+    val prefix = Multimodal.audioSigPairs(SharedTrunks.pin(Multimodal.audioSignatures(corpus)))
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val planted = Set((0L, 1L), (10L, 11L), (20L, 21L))
     assert(prefix.intersect(planted).isEmpty,
       s"the prefix tier must MISS every trimmed copy: $prefix")
     // the winnowed tier pairs exactly the planted trims, hamming 0
     // (identical PCM after the shift), ≥1 shared fingerprint each
-    val winnow = Multimodal.audioWinnowPairs(corpus).collect()
+    val sigs = SharedTrunks.pin(Multimodal.audioWinnowSignatures(corpus))
+    val winnow = Multimodal.audioWinnowPairs(sigs).collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getInt(2), r.getLong(3))).toMap
     assert(winnow.keySet == planted,
@@ -510,17 +512,15 @@ class MultimodalSpec extends SparkSpec {
       assert(h == 0 && n >= 1, s"pair $p: hamming $h, $n shared") }
     // the banded-Hamming tier (maxHamming > 0) finds the same
     // planted pairs — tolerance can only ADD pairs, never lose one
-    val banded = Multimodal.audioWinnowPairs(corpus, maxHamming = 6)
+    val banded = Multimodal.audioWinnowPairs(sigs, maxHamming = 6)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(planted.subsetOf(banded),
       s"banded tier must cover the exact tier's pairs: $banded")
     // store/incremental parity: the copies flag against the store,
     // the originals in the same new batch keep
-    val sigs = Multimodal.audioWinnowSignatures(corpus)
     val inc = Multimodal.audioWinnowIncremental(
-        corpus.filter($"doc_id" % 5 === 1),
-        storeSigs = sigs.filter($"doc_id" % 5 =!= 1),
-        newSigs = Some(sigs.filter($"doc_id" % 5 === 1)))
+        newSigs = sigs.filter($"doc_id" % 5 === 1),
+        storeSigs = sigs.filter($"doc_id" % 5 =!= 1))
       .collect().map(r => r.getLong(0) -> (r.getLong(2), r.getBoolean(4)))
       .toMap
     Seq(1L, 11L, 21L).foreach(d =>
@@ -528,13 +528,13 @@ class MultimodalSpec extends SparkSpec {
     Seq(6L, 16L, 26L).foreach(d =>
       assert(inc(d)._2, s"original $d must keep: ${inc(d)}"))
     // summary parity: exactly the trimmed copies suppress
-    val ded = Multimodal.audioWinnowDedup(corpus, sigs = Some(sigs))
+    val ded = Multimodal.audioWinnowDedup(sigs)
       .collect().map(r => r.getLong(0) -> r.getBoolean(3)).toMap
     Seq(1L, 11L, 21L).foreach(d =>
       assert(!ded(d), s"copy $d must suppress in the summary"))
     assert(ded.count(!_._2) == 3, "exactly the three copies suppress")
     // groups parity: each trimmed copy lands in its master's group
-    val grp = Multimodal.audioWinnowGroups(corpus, sigs = Some(sigs))
+    val grp = Multimodal.audioWinnowGroups(sigs)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2)))
       .toMap
     Seq(1L -> 0L, 11L -> 10L, 21L -> 20L).foreach { case (c, m) =>
@@ -553,7 +553,8 @@ class MultimodalSpec extends SparkSpec {
     val docs = (0L until 30L).toDF("doc_id")
     val corpus = Multimodal.synthOffsetWavCorpus(docs)
     val sigs = Multimodal.audioWinnowSignatures(corpus).localCheckpoint(true)
-    val kb = Multimodal.audioWinnowKeepBest(corpus, sigs = Some(sigs))
+    val groups = SharedTrunks.pin(Multimodal.audioWinnowGroups(sigs))
+    val kb = Multimodal.audioWinnowKeepBest(sigs, groups)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getBoolean(3))).toMap
     // trim group {0 (192), 1 (155)}: rank and min-id agree on 0
@@ -565,7 +566,7 @@ class MultimodalSpec extends SparkSpec {
       s"extension group must keep the LONGER larger-id copy: " +
         s"${kb(10L)} / ${kb(11L)}")
     // group membership identical to the groups key (shared closure)
-    val grp = Multimodal.audioWinnowGroups(corpus, sigs = Some(sigs))
+    val grp = groups
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(kb.view.mapValues(_._1).toMap == grp,
       "keep-best and groups must agree on membership")
@@ -590,7 +591,7 @@ class MultimodalSpec extends SparkSpec {
     // the winnowed tier pairs exactly the planted crops
     val planted = Set((0L, 1L), (10L, 11L), (20L, 21L))
     val sigs = Multimodal.imageWinnowSignatures(corpus).localCheckpoint(true)
-    val pairs = Multimodal.imageWinnowPairs(corpus, sigs = Some(sigs))
+    val pairs = Multimodal.imageWinnowPairs(sigs)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(pairs.keySet == planted,
       s"exactly the cropped copies must pair: ${pairs.keySet}")
@@ -599,9 +600,8 @@ class MultimodalSpec extends SparkSpec {
     // store/incremental parity: crops flag against the store,
     // originals in the same new batch keep
     val inc = Multimodal.imageWinnowIncremental(
-        corpus.filter($"doc_id" % 5 === 1),
-        storeSigs = sigs.filter($"doc_id" % 5 =!= 1),
-        newSigs = Some(sigs.filter($"doc_id" % 5 === 1)))
+        newSigs = sigs.filter($"doc_id" % 5 === 1),
+        storeSigs = sigs.filter($"doc_id" % 5 =!= 1))
       .collect().map(r => r.getLong(0) -> (r.getLong(2), r.getBoolean(3)))
       .toMap
     Seq(1L, 11L, 21L).foreach(d =>
@@ -609,11 +609,12 @@ class MultimodalSpec extends SparkSpec {
     Seq(6L, 16L, 26L).foreach(d =>
       assert(inc(d)._2, s"original $d must keep: ${inc(d)}"))
     // summary + groups parity
-    val ded = Multimodal.imageWinnowDedup(corpus, sigs = Some(sigs))
+    val ded = Multimodal.imageWinnowDedup(sigs)
       .collect().map(r => r.getLong(0) -> r.getBoolean(3)).toMap
     assert(Seq(1L, 11L, 21L).forall(!ded(_)) && ded.count(!_._2) == 3,
       "exactly the three crops suppress")
-    val grp = Multimodal.imageWinnowGroups(corpus, sigs = Some(sigs))
+    val groups = SharedTrunks.pin(Multimodal.imageWinnowGroups(sigs))
+    val grp = groups
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2)))
       .toMap
     Seq(1L -> 0L, 11L -> 10L, 21L -> 20L).foreach { case (c, m) =>
@@ -622,7 +623,7 @@ class MultimodalSpec extends SparkSpec {
     // keep-best rank coverage: crop group {0 (144 px), 1 (64 px)}
     // agrees with min-id; padded group {10 (144), 11 (256)} picks
     // the LARGER larger-id restoration — the ordering decides
-    val kb = Multimodal.imageWinnowKeepBest(corpus, sigs = Some(sigs))
+    val kb = Multimodal.imageWinnowKeepBest(sigs, groups)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getBoolean(3))).toMap
     assert(kb(0L) == ((0L, 144L, true)) && kb(1L) == ((0L, 64L, false)),
@@ -837,8 +838,8 @@ class MultimodalSpec extends SparkSpec {
 
   test("phashSummary: exactly the re-encoded copies suppress, originals survive") {
     val docs = (0L until 30L).toDF("doc_id")
-    val out = Multimodal.phashSummary(
-        Multimodal.synthMixedCorpus(docs)).collect()
+    val out = Multimodal.phashSummary(SharedTrunks.pin(Multimodal.phashSignatures(
+        Multimodal.synthMixedCorpus(docs)))).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(3))).toMap
     val copies = Set(1L, 11L, 21L)
     copies.foreach(d =>
@@ -855,8 +856,8 @@ class MultimodalSpec extends SparkSpec {
     // pixels, so it must beat the min-id doc 0 for survivorship
     val imgSigs = Seq((0L, 7L, 64L), (1L, 7L, 256L), (2L, 7L, 64L),
       (9L, (1L << 28) - 1, 64L)).toDF("doc_id", "dhash", "px")
-    val none = Seq.empty[Long].toDF("doc_id")
-    val img = Multimodal.phashKeepBest(none, sigs = Some(imgSigs)).collect()
+    val img = Multimodal.phashKeepBest(imgSigs,
+        SharedTrunks.pin(Multimodal.phashGroups(imgSigs))).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getBoolean(3)))
       .toMap
     assert(img(1L) == ((0L, 256L, true)), s"the 256-px copy wins: ${img(1L)}")
@@ -866,7 +867,8 @@ class MultimodalSpec extends SparkSpec {
     // audio: the 96-sample master beats the 64-sample derivative
     val audSigs = Seq((10L, 5L, 64L), (11L, 5L, 96L))
       .toDF("doc_id", "asig", "n_samples")
-    val aud = Multimodal.audioSigKeepBest(none, sigs = Some(audSigs))
+    val aud = Multimodal.audioSigKeepBest(audSigs,
+        SharedTrunks.pin(Multimodal.audioSigGroups(audSigs)))
       .collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getBoolean(3)))
       .toMap
@@ -877,10 +879,12 @@ class MultimodalSpec extends SparkSpec {
     // out-ranks its min-id master — rank ordering, not the
     // tie-break, decides; ties elsewhere still fall to min id
     val docs = (0L until 30L).toDF("doc_id")
-    val kb = Multimodal.phashKeepBest(Multimodal.synthMixedCorpus(docs))
+    val sigs = SharedTrunks.pin(Multimodal.phashSignatures(Multimodal.synthMixedCorpus(docs)))
+    val groups = SharedTrunks.pin(Multimodal.phashGroups(sigs))
+    val kb = Multimodal.phashKeepBest(sigs, groups)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(3)))
       .sortBy(_._1).toSeq
-    val gr = Multimodal.phashGroups(Multimodal.synthMixedCorpus(docs))
+    val gr = groups
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
       .sortBy(_._1).toSeq
     assert(kb.map(t => (t._1, t._2)) == gr.map(t => (t._1, t._2)),
@@ -897,8 +901,8 @@ class MultimodalSpec extends SparkSpec {
 
   test("phashGroups: planted copies land in their originals' groups") {
     val docs = (0L until 30L).toDF("doc_id")
-    val out = Multimodal.phashGroups(
-        Multimodal.synthMixedCorpus(docs)).collect()
+    val out = Multimodal.phashGroups(SharedTrunks.pin(Multimodal.phashSignatures(
+        Multimodal.synthMixedCorpus(docs)))).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
     Seq(1L -> 0L, 11L -> 10L, 21L -> 20L).foreach { case (copy, orig) =>
       assert(out(copy) == ((orig, false)), s"copy $copy: ${out(copy)}")
@@ -914,7 +918,7 @@ class MultimodalSpec extends SparkSpec {
     // {0, 10, 20} (in the store) and must match; {6, 16, 26} are
     // originals with no perceptual twin and must keep
     val out = Multimodal.phashIncremental(
-        blobs.filter($"doc_id" % 5 === 1),
+        SharedTrunks.pin(Multimodal.phashSignatures(blobs.filter($"doc_id" % 5 === 1))),
         storeSigs = Multimodal.phashSignatures(
           blobs.filter($"doc_id" % 5 =!= 1))).collect()
       .map(r => r.getLong(0) ->

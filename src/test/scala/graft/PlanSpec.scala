@@ -370,7 +370,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("copurchaseTriangles closes triangles with equi-joins, never a nested loop") {
-    val p = plan(Analytics.copurchaseTriangles(Tables.lineitem(spark, dir)))
+    val p = plan(Analytics.copurchaseTriangles(
+      SharedTrunks.basketPairs(Tables.lineitem(spark, dir))))
     // the oriented a<b edge list makes both the wedge join and the
     // closure probe hash-joinable; a BNLJ here is the O(n²) failure
     assert(!p.contains("BroadcastNestedLoopJoin") &&
@@ -462,7 +463,7 @@ class PlanSpec extends SparkSpec {
 
   test("bm25 stage-1 fan-out is champion-bounded — never 0.9·N per token") {
     val p = plan(graft.operators.Similarity.bm25TopK(
-      Tables.documents(spark, dir)))
+      SharedTrunks.bm25Postings(Tables.documents(spark, dir))))
     // the r10 scale-killer: candidate generation joining full
     // fractional-cap postings fans each hot token out to 0.9·N rows.
     // The plan must carry the stratified champion index instead — a
@@ -535,7 +536,7 @@ class PlanSpec extends SparkSpec {
     val ta = graft.operators.TextAnalysis
     val toks = ta.dupNgramToks(Tables.documents(spark, dir))
     val p = plan(ta.dupSpans(Tables.documents(spark, dir),
-      toks = Some(toks), starts = Some(ta.dupNgramStarts(toks))))
+      ta.dupNgramStarts(toks)))
     // exchanges: the n-gram window (trunk), the starts fold, and the
     // doc_id window the islands/group/span-index chain SHARES — the
     // subset-key reuse means no fourth hash exchange appears
@@ -581,10 +582,11 @@ class PlanSpec extends SparkSpec {
     val occ = ta.dupNgramDupOcc(ta.dupNgramToks(docs)).localCheckpoint(true)
     val dd = ta.dupNgramDocsOf2(ta.dupNgramToks(docs), ta.startsOfOcc(occ))
       .localCheckpoint(true)
+    val flags = graft.operators.Curation.curateFlags(docs, gopherFlags = gf,
+      dupDocs = dd, dupStarts = ta.startsOfOcc(occ),
+      embeddings = Tables.embeddings(spark, dir))
     val p = plan(graft.operators.Curation.curateFull(docs,
-      shingles = Some(shingles), gopherFlags = Some(gf),
-      dupDocs = Some(dd), dupStarts = Some(ta.startsOfOcc(occ)),
-      embeddings = Some(Tables.embeddings(spark, dir))))
+      SharedTrunks.pin(flags), shingles))
     // ≤ 8 documents scans (the r13 budget) + the semantic stage's
     // two embeddings scans (bench + corpus sides of the broadcast)
     val scans = "Scan parquet".r.findAllIn(p).length
@@ -606,13 +608,10 @@ class PlanSpec extends SparkSpec {
     // documents table appears only as the restrict/source
     // projections (id + source columns)
     val docs = Tables.documents(spark, dir)
-    val flags = graft.operators.Curation.curateFlags(docs,
-        embeddings = Some(Tables.embeddings(spark, dir)))
-      .localCheckpoint(true)
-    val shingles = graft.operators.Dedup.blockingTrunk(docs)
-      .sets.localCheckpoint(true)
-    val p = plan(graft.operators.Curation.curateFull(docs,
-      flags = Some(flags), shingles = Some(shingles)))
+    val flags = SharedTrunks.curateFlags(docs, Tables.embeddings(spark, dir),
+      SharedTrunks.gopherFlagged(docs))
+    val shingles = SharedTrunks.shingles(docs)
+    val p = plan(graft.operators.Curation.curateFull(docs, flags, shingles))
     val scans = "Scan parquet".r.findAllIn(p).length
     assert(scans <= 4, s"flags-threaded curateFull may read documents " +
       s"only for restrict/source projections, got $scans scans:\n$p")
@@ -640,9 +639,7 @@ class PlanSpec extends SparkSpec {
     // equi-buckets via ONE groupBy on the fingerprint value and
     // expand row-locally — no join node, no cartesian anywhere
     val sigs = (0L until 40L).map(d => (d, d % 7)).toDF("doc_id", "wsig")
-    val none = Seq.empty[Long].toDF("doc_id")
-    val p = plan(graft.operators.Multimodal.audioWinnowPairs(
-      none, sigs = Some(sigs)))
+    val p = plan(graft.operators.Multimodal.audioWinnowPairs(sigs))
     assert(!p.contains("Join"), s"exact tier must not plan any join:\n$p")
     assert(!p.contains("CartesianProduct"), s"no cartesian:\n$p")
   }

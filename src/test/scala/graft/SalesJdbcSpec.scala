@@ -37,6 +37,46 @@ class SalesJdbcSpec extends SparkSpec {
       .load().collect()
       .map(r => r.getInt(0) -> (r.getInt(1), BigDecimal(r.getDecimal(2)))).toMap
 
+  test("writeSummaryCsv: header row, one part file when singleFile, a rewrite replaces the first") {
+    import scala.jdk.CollectionConverters._
+    import java.nio.file.{Files, Path, Paths}
+    // the reference's sales_summary.csv artifact (loading.py:124-132)
+    val out = Files.createTempDirectory("summary_csv")
+      .resolve("sales_summary.csv").toString
+    def summary(rows: (Int, Int, String)*) = rows
+      .toDF("product_id", "total_quantity", "total_sale_amount")
+      .withColumn("total_sale_amount",
+        org.apache.spark.sql.functions.col("total_sale_amount")
+          .cast("decimal(10,2)"))
+      .repartition(3)
+    def parts(): Seq[Path] = {
+      val s = Files.list(Paths.get(out))
+      try s.iterator().asScala
+        .filter(_.getFileName.toString.startsWith("part-")).toSeq
+      finally s.close()
+    }
+    def lines(): Seq[String] =
+      parts().flatMap(p => Files.readAllLines(p).asScala)
+    val header = "product_id,total_quantity,total_sale_amount"
+    // partitioned by default: one part per non-empty partition
+    SalesJdbc.writeSummaryCsv(
+      summary((1, 10, "12.50"), (2, 3, "4.00"), (3, 7, "9.99")), out)
+    assert(parts().size > 1, s"default write stays partitioned: ${parts()}")
+    // singleFile: the reference's one-file layout, header first
+    SalesJdbc.writeSummaryCsv(
+      summary((1, 10, "12.50"), (2, 3, "4.00"), (3, 7, "9.99")), out,
+      singleFile = true)
+    assert(parts().size == 1, s"singleFile must write one part: ${parts()}")
+    assert(lines().head == header, s"header row: ${lines()}")
+    assert(lines().tail.toSet == Set("1,10,12.50", "2,3,4.00", "3,7,9.99"),
+      s"rows: ${lines()}")
+    // a second write replaces the first: no row of the old summary
+    // survives, and the header is written once
+    SalesJdbc.writeSummaryCsv(summary((4, 1, "1.00")), out, singleFile = true)
+    assert(parts().size == 1)
+    assert(lines() == Seq(header, "4,1,1.00"), s"replaced: ${lines()}")
+  }
+
   test("upsertSql: MySQL dialect reproduces the reference INSERT..ON DUPLICATE") {
     val cols = Seq("product_id", "total_quantity", "total_sale_amount")
     val sql = SalesJdbc.upsertSql("jdbc:mysql://db/retail", "sales_summary",

@@ -142,8 +142,8 @@ class SimilaritySpec extends SparkSpec {
       (3L, "the pad pad pad"), // shares only the stopword → no row
       (4L, "zebra zebra the pad")) // exact dup of doc 1
       .toDF("doc_id", "text")
-    val got = Similarity.bm25TopK(docs, queryMod = 100, k = 10,
-      maxDfFrac = 0.9)
+    val got = Similarity.bm25TopK(SharedTrunks.bm25Postings(docs),
+      queryMod = 100, k = 10)
       .collect().sortBy(r => -r.getDouble(2) -> r.getLong(1))
     // 'the' (df 5 of 5 > 0.9·5) is a stopword; 'zebra' df 4 reaches
     // docs 1, 2, 4 — doc 3 never becomes a candidate
@@ -162,25 +162,27 @@ class SimilaritySpec extends SparkSpec {
 
   test("bm25TopK: threaded tf/scored-postings trunks equal the self-built path") {
     // the shared-trunk contract (tf_postings + bm25_index billed to
-    // prime): threading a precomputed trunk must be a pure billing
-    // change, never a semantic fork — row-for-row identical results
+    // prime): pinning the trunks must be a pure billing change, never
+    // a semantic fork — row-for-row identical to the lazy composition
+    // from the documents, and termFreqs is exactly the hand-spelled
+    // tokenize+count
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     def rows(df: DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .sortBy(t => (t._1, t._2)).toSeq
-    val self = rows(Similarity.bm25TopK(docs, queryMod = 10))
+    val self = rows(Similarity.bm25TopK(
+      Similarity.bm25Postings(Similarity.termFreqs(docs)), queryMod = 10))
     val tfTrunk = docs
       .select(col("doc_id"),
         explode(graft.operators.TextAnalysis.tokens(col("text"))).as("tok"))
       .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-    val viaTf = rows(Similarity.bm25TopK(docs, queryMod = 10,
-      tfPostings = Some(tfTrunk)))
-    val viaScored = rows(Similarity.bm25TopK(docs, queryMod = 10,
-      scoredPostings = Some(
-        Similarity.bm25Postings(docs, tfPostings = Some(tfTrunk)))))
+    val viaTf = rows(Similarity.bm25TopK(
+      Similarity.bm25Postings(SharedTrunks.pin(tfTrunk)), queryMod = 10))
+    val viaScored = rows(Similarity.bm25TopK(
+      SharedTrunks.bm25Postings(docs), queryMod = 10))
     assert(self.nonEmpty, "fixture must produce rows")
-    assert(viaTf == self, "tf-threaded path must equal self-built")
-    assert(viaScored == self, "scored-index path must equal self-built")
+    assert(viaTf == self, "pinned tf trunk must equal the lazy path")
+    assert(viaScored == self, "pinned scored index must equal the lazy path")
   }
 
   test("bm25MaxScoreTopK: both plan branches equal the exhaustive reference") {
@@ -224,7 +226,8 @@ class SimilaritySpec extends SparkSpec {
       (i, s"the the of rare${i % 15} odd${i % 10}"))
     for (rows <- Seq(common, zipf); branch <- Seq(true, false)) {
       val want = reference(rows, queryMod = 10, k = 3)
-      val got = Similarity.bm25MaxScoreTopK(rows.toDF("doc_id", "text"),
+      val got = Similarity.bm25MaxScoreTopK(
+          SharedTrunks.bm25Postings(rows.toDF("doc_id", "text")),
           queryMod = 10, k = 3, forcePruned = Some(branch))
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
         .toMap
@@ -247,8 +250,8 @@ class SimilaritySpec extends SparkSpec {
     // θ sample sees the mid-tier sharers, not just common-token hits
     val rows = (0L until 600L).map(i =>
       (i, s"filler common${i % 3} mid${i % 40} rare${i % 300}"))
-    val docs = rows.toDF("doc_id", "text")
-    val est = Similarity.bm25MaxScoreEstimate(docs, queryMod = 100,
+    val posts = SharedTrunks.bm25Postings(rows.toDF("doc_id", "text"))
+    val est = Similarity.bm25MaxScoreEstimate(posts, queryMod = 100,
       k = 2, sampleMod = 7, blockSize = 8)
     assert(est.usePruned,
       s"estimate must pick pruned: v_pruned=${est.vPruned} " +
@@ -260,7 +263,7 @@ class SimilaritySpec extends SparkSpec {
       s"block-max must prune a majority of blocks: " +
         s"surviving=${est.blocksSurviving} of ${est.blocksTotal}")
     def res(force: Option[Boolean]) =
-      Similarity.bm25MaxScoreTopK(docs, queryMod = 100, k = 2,
+      Similarity.bm25MaxScoreTopK(posts, queryMod = 100, k = 2,
           sampleMod = 7, blockSize = 8, forcePruned = force)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .sortBy(t => (t._1, t._2)).toSeq

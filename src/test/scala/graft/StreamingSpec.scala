@@ -892,7 +892,8 @@ class StreamingSpec extends SparkSpec {
     val batch = fold(graft.streaming.DocStream.dupSpanScrub(docs, store)
       .collect())
     // the batch run IS docs_dup_spans_apply's relation
-    val applyTwin = fold(graft.operators.TextAnalysis.dupSpansApply(docs)
+    val applyTwin = fold(graft.operators.TextAnalysis.dupSpansApply(docs,
+      SharedTrunks.dupStarts(docs))
       .collect())
     assert(batch == applyTwin, s"$batch\nvs\n$applyTwin")
     assert(batch(1L) == ((8L, 8L, "")), s"fully covered: ${batch(1L)}")

@@ -266,7 +266,7 @@ class TextAnalysisSpec extends SparkSpec {
       (2L, "s", "unrelated distinct words nothing here repeats across " +
         "any document at all ever"))
       .toDF("doc_id", "source", "text")
-    val out = TextAnalysis.dupSpans(docs).collect()
+    val out = TextAnalysis.dupSpans(docs, SharedTrunks.dupStarts(docs)).collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5),
           r.getLong(6))).toMap
@@ -288,7 +288,7 @@ class TextAnalysisSpec extends SparkSpec {
       (1L, "s", s"pre1a $runA post1a"),
       (2L, "s", s"pre2a $runB post2a"))
       .toDF("doc_id", "source", "text")
-    val out = TextAnalysis.dupSpans(docs).collect()
+    val out = TextAnalysis.dupSpans(docs, SharedTrunks.dupStarts(docs)).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3)))
       .toMap
     // doc 0 carries BOTH runs, split by the undup'd middle
@@ -305,7 +305,7 @@ class TextAnalysisSpec extends SparkSpec {
       (1L, "s", shared),                      // fully covered -> ''
       (2L, "s", "unique2 words2 here2 nothing2 repeats2 at2 all2 ever2"))
       .toDF("doc_id", "source", "text")
-    val out = TextAnalysis.dupSpansApply(docs).collect()
+    val out = TextAnalysis.dupSpansApply(docs, SharedTrunks.dupStarts(docs)).collect()
       .map(r => r.getLong(0) ->
         (r.getLong(2), r.getLong(3), r.getString(4))).toMap
     assert(out(0L) == ((11L, 8L, "pre0a pre0b post0a")), s"${out(0L)}")
@@ -918,5 +918,33 @@ class TextAnalysisSpec extends SparkSpec {
     assert(real.filter(col("avg_surprisal").isNull ||
       org.apache.spark.sql.functions.isnan(col("avg_surprisal"))).count() === 0L)
     assert(real.filter(col("held_out") && col("oov_rate") > 0.0).count() > 0L)
+  }
+
+  /** A corpus whose word dict exercises merges, ties and repeats:
+    * adjacent-pair runs ("aaaa"), cross-word shared pairs, and a
+    * deterministic tie on the best-pair count. */
+  private def bpeDocs = Seq(
+    (1L, "abab abab cdcd"),
+    (2L, "aaaa abab cdcd cd"),
+    (3L, "zzq abab ababab"),
+    (4L, "cdcd cdab")
+  ).toDF("doc_id", "text")
+
+  test("bpe driver fold ≡ distributed loop: identical merge table and final vocab state") {
+    import org.apache.spark.sql.functions._
+    val docs = bpeDocs
+    // driver branch (dict ≪ the 64k switch)
+    val (mergesFold, vocabFold) = TextAnalysis.bpeLoop(docs, merges = 6)
+    // distributed branch, forced by calling it directly on the same dict
+    val dict = docs
+      .select(explode(TextAnalysis.tokens(col("text"))).as("word"))
+      .groupBy("word").agg(count(lit(1)).as("n"))
+      .localCheckpoint(true)
+    val (mergesDist, vocabDist) = TextAnalysis.bpeLoopDistributed(dict, merges = 6)
+    assert(mergesFold === mergesDist)
+    def rows(df: org.apache.spark.sql.DataFrame) = df
+      .select(col("word"), col("n"), concat_ws("", col("syms")))
+      .as[(String, Long, String)].collect().sortBy(_._1).toSeq
+    assert(rows(vocabFold) === rows(vocabDist))
   }
 }

@@ -69,4 +69,23 @@ class UnigramSpec extends SparkSpec {
         s"path_sig must sit under n_words * 2^53: $r")
     }
   }
+
+  test("unigram local init/EM ≡ distributed twins on the same dict") {
+    import spark.implicits._
+    val docs = Seq(
+      (1L, "banana bandana ana ban"),
+      (2L, "banana nabnab anaban"),
+      (3L, "dana ban ana ana")
+    ).toDF("doc_id", "text")
+    val words = Unigram.wordsOf(docs).localCheckpoint(true)
+    val dict = words.as[(String, Long)].collect()
+    val vLocal = Unigram.initVocabLocal(dict, vocabSize = 16)
+    val vDist = Unigram.initVocab(words, vocabSize = 16)
+    assert(vLocal.sortBy(_._1).toSeq === vDist.sortBy(_._1).toSeq)
+    val probs = vLocal.map { case (p, c) =>
+      p -> (c.toDouble / vLocal.map(_._2).sum).toFloat }.toMap
+    val eLocal = Unigram.emRoundLocal(dict, probs)
+    val eDist = Unigram.emRound(words, probs)
+    assert(eLocal.sortBy(_._1).toSeq === eDist.sortBy(_._1).toSeq)
+  }
 }
