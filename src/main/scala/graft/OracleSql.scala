@@ -8,6 +8,265 @@ package graft
   */
 private[graft] object OracleSql {
 
+  // ---- shared fragments ------------------------------------------------
+  // Each SQL fragment that two or more oracles use is written once here
+  // and interpolated where it is used. A fragment takes as parameters
+  // only what differs between its uses: a name, a modulus, a threshold.
+  // The map is pinned byte for byte and its copies sat at different
+  // indents, so a fragment whose uses differ only in the indent of its
+  // continuation lines takes that indent too (`p`, and `pp` for a
+  // second level). Fragments are flattened to one line, as every
+  // oracle is.
+
+  /** The C4-style quality score of a relation with `text` and its
+    * whitespace tokens `toks`, `AS quality_score`: a length, a
+    * punctuation and a stop-word factor. */
+  private def qualityScoreSql(p: String = "   "): String =
+    s"""least(1.0, len(toks) / 128.0)
+       |$p* (1.0 - least(1.0, ((length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g'))) / greatest(length(text), 1)) * 4.0))
+       |$p* (0.3 + 0.7 * least(1.0, (len(list_filter(toks, x -> x IN ('the','a','and','of','to','in','is','it','for','on'))) / greatest(len(toks), 1)) * 5.0))
+       |${p}AS quality_score""".stripMargin.replace("\n", " ")
+
+  /** Min-label connected components of the undirected edges
+    * `pairs(id_a, id_b)` over the nodes `nodes(id)`: `e` holds both
+    * edge directions, `reach` is the recursive closure and `lab(id,
+    * group_id)` labels each node with the least id it reaches. */
+  private def minLabelCtes(pairs: String, nodes: String = "documents",
+      id: String = "doc_id", p: String = " "): String =
+    s"""e AS (SELECT id_a AS src, id_b AS dst FROM $pairs
+       |${p}UNION ALL SELECT id_b AS src, id_a AS dst FROM $pairs),
+       |reach AS (SELECT $id, $id AS r FROM $nodes
+       |${p}UNION
+       |${p}SELECT reach.$id, e.dst AS r
+       |${p}FROM reach JOIN e ON e.src = reach.r),
+       |lab AS (SELECT $id, min(r) AS group_id
+       |${p}FROM reach GROUP BY $id)""".stripMargin.replace("\n", " ")
+
+  /** The word trigrams of `toks`, in order. */
+  private val trigramListSql: String =
+    """list_transform(range(1, len(toks) - 1),
+      |   i -> array_to_string(toks[i:i+2], ' '))""".stripMargin.replace("\n", " ")
+
+  /** `grams`, or the empty list when `toks` has under three tokens. */
+  private def ifTrigramsSql(grams: String): String =
+    s"""CASE WHEN len(toks) >= 3
+       |  THEN $grams
+       |  ELSE CAST([] AS VARCHAR[]) END""".stripMargin.replace("\n", " ")
+
+  /** The word trigrams of `toks`, and the same deduplicated. */
+  private val trigramsSql: String = ifTrigramsSql(trigramListSql)
+  private val trigramSetSql: String = ifTrigramsSql(s"list_distinct($trigramListSql)")
+
+  /** FNV-1a 64 of the string `str` as a HUGEINT: a fold over its
+    * characters from the offset basis, xor then multiply by the prime,
+    * mod 2^64. `j` and `b` name the lambdas' variables. */
+  private def fnv1aSql(str: String, j: String = "j", b: String = "b",
+      p: String = "   ", pp: String = "     "): String =
+    s"""list_reduce(list_prepend(CAST(14695981039346656037 AS HUGEINT),
+       |${p}list_transform(range(1, length($str) + 1),
+       |$pp$j -> CAST(ord(substr($str, $j, 1)) AS HUGEINT))),
+       |$p(h, $b) -> ((h - (h % 256)) + xor(CAST(h % 256 AS BIGINT),
+       |${pp}CAST($b AS BIGINT))) * 1099511628211 % 18446744073709551616)""".stripMargin.replace("\n", " ")
+
+  /** Each embedding with the IVF cells of the centroids
+    * `cents(cell, col)` ranked by cosine: rows (vec_id, cell, rn), the
+    * nearest first and ties to the lower cell. */
+  private def ivfRankSql(cents: String, col: String = "embedding",
+      p: String = "   ", pp: String = "     "): String =
+    s"""SELECT e.vec_id, c.cell, row_number() OVER (
+       |   PARTITION BY e.vec_id ORDER BY
+       |${p}list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
+       |${pp}CAST(c.$col AS DOUBLE[])) DESC, c.cell) AS rn
+       | FROM embeddings e, $cents c""".stripMargin.replace("\n", " ")
+
+  /** The near-dup pair-summary tail over `verified(id_a, id_b, …)`:
+    * `sides` scores both ids of each pair with `score` and marks the
+    * larger one junior; `perdoc(doc_id, n_dupes, max_score,
+    * dominated)` folds them per doc; the keep query reports every doc
+    * of `docs`, kept unless dominated. */
+  private def dupSidesCte(score: String): String =
+    s"""sides AS (SELECT id_a AS doc_id, $score AS score,
+       |  false AS is_junior FROM verified
+       | UNION ALL SELECT id_b, $score, true FROM verified)""".stripMargin.replace("\n", " ")
+  private val dupPerdocCte: String =
+    """perdoc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_dupes,
+      |  max(score) AS max_score, bool_or(is_junior) AS dominated
+      | FROM sides GROUP BY 1)""".stripMargin.replace("\n", " ")
+  private def dupKeepSql(docs: String = "documents d"): String =
+    s"""SELECT d.doc_id, coalesce(p.n_dupes, 0) AS n_dupes,
+       | coalesce(p.max_score, 0.0) AS max_score,
+       | coalesce(NOT p.dominated, true) AS keep
+       |FROM $docs LEFT JOIN perdoc p USING (doc_id)""".stripMargin.replace("\n", " ")
+
+  /** The docs_curate stages after a quality gate `q(doc_id)`, over
+    * `t(doc_id, text, toks)`: `dd` keeps the least doc_id of each
+    * normalized text, `g` lists each doc's trigrams, `bench` holds the
+    * trigrams of the benchmark slice (doc_id % `benchMod` = 0) and
+    * `cont` the other docs that share one. */
+  private def curateDedupCtes(benchMod: Int): String =
+    s"""dd AS (SELECT min(doc_id) AS doc_id FROM (SELECT doc_id,
+       |  trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS norm
+       |  FROM documents WHERE doc_id IN (SELECT doc_id FROM q)) n GROUP BY norm),
+       |g AS (SELECT doc_id, unnest(list_distinct($trigramsSql)) AS gram FROM t),
+       |bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % $benchMod = 0),
+       |cont AS (SELECT DISTINCT c.doc_id FROM
+       |  (SELECT doc_id, gram FROM g WHERE doc_id % $benchMod <> 0) c
+       |  JOIN bench USING (gram))""".stripMargin.replace("\n", " ")
+
+  /** The docs_curate chain: the tokens `t`, the quality gate `q`
+    * (20 to 100000 tokens, score at least `minScore`) and
+    * [[curateDedupCtes]]. */
+  private def curateCtes(minScore: String, benchMod: Int): String =
+    s"""${toksCteAs("t")},
+       |q AS (SELECT doc_id FROM (SELECT doc_id,
+       |  CAST(len(toks) AS BIGINT) AS n_tokens,
+       |  ${qualityScoreSql()} FROM t) s
+       | WHERE n_tokens >= 20 AND n_tokens <= 100000 AND quality_score >= $minScore),
+       |${curateDedupCtes(benchMod)}""".stripMargin.replace("\n", " ")
+
+  /** `name(id_a, id_b)`: every id pair inside one row of
+    * `bucket(ids)`, each bucket capped at its first 64 ids. */
+  private def bucketPairsCte(name: String): String =
+    s"""$name AS (SELECT DISTINCT a.ida AS id_a, b.idb AS id_b
+       | FROM (SELECT list_slice(ids, 1, 64) AS ids FROM bucket) c,
+       |  LATERAL (SELECT unnest(c.ids) AS ida) a,
+       |  LATERAL (SELECT unnest(c.ids) AS idb) b
+       | WHERE a.ida < b.idb)""".stripMargin.replace("\n", " ")
+
+  /** Welch's t-test per event type from the A/B arms' sufficient
+    * statistics `a(event_type, n_a, n_b, s_a, s_b, q_a, q_b)`. */
+  private val welchSql: String =
+    """w AS (SELECT event_type, n_a, n_b,
+      |  CAST(n_a AS DOUBLE) / (n_a + n_b) AS share_a,
+      |  s_a / n_a AS mean_a, s_b / n_b AS mean_b,
+      |  greatest((q_a - s_a * s_a / n_a) / (n_a - 1), 0) / n_a AS se_a,
+      |  greatest((q_b - s_b * s_b / n_b) / (n_b - 1), 0) / n_b AS se_b
+      | FROM a)
+      |SELECT event_type, n_a, n_b, share_a, mean_a, mean_b,
+      | (mean_a - mean_b) / sqrt(se_a + se_b) AS welch_t,
+      | (se_a + se_b) * (se_a + se_b) / (se_a * se_a / (n_a - 1)
+      |   + se_b * se_b / (n_b - 1)) AS welch_df
+      |FROM w WHERE se_a + se_b > 0""".stripMargin.replace("\n", " ")
+
+  /** SCD2 versions of each user's runs of one event type in `src`:
+    * `r` flags each change of type, `v` numbers the runs. */
+  private def scdVersionCtes(src: String = "events"): String =
+    s"""r AS (SELECT user_id, ts, event_type, event_id,
+       |  CASE WHEN lag(event_type) OVER (PARTITION BY user_id
+       |    ORDER BY ts, event_id) = event_type THEN 0 ELSE 1 END AS chg
+       | FROM $src),
+       |v AS (SELECT user_id, ts, event_type,
+       |  sum(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS version
+       | FROM r)""".stripMargin.replace("\n", " ")
+
+  /** The IVF index's live and dead (vec_id % 7 = 3) vectors per cell:
+    * `assigned` maps each vector to its nearest cell, `filled(cell,
+    * n_vecs, n_dead)` covers all 16 cells. */
+  private val ivfCellDeadCtes: String =
+    s"""assigned AS (SELECT vec_id, cell FROM (
+       | ${ivfRankSql("cents")}) x WHERE rn = 1),
+       |pc AS (SELECT cell, count(*) AS n_vecs,
+       |  sum(CASE WHEN vec_id % 7 = 3 THEN 1 ELSE 0 END) AS n_dead
+       | FROM assigned GROUP BY 1),
+       |filled AS (SELECT s.cell,
+       |  CAST(coalesce(pc.n_vecs, 0) AS BIGINT) AS n_vecs,
+       |  CAST(coalesce(pc.n_dead, 0) AS BIGINT) AS n_dead
+       | FROM (SELECT unnest(generate_series(0, 15)) AS cell) s
+       | LEFT JOIN pc USING (cell))""".stripMargin.replace("\n", " ")
+
+  /** BM25 statistics of the documents' whitespace tokens: postings
+    * `t(doc_id, tok)`, term frequencies `tf`, lengths `dl`, corpus
+    * stats `cs(n_docs, avgdl)`, the vocabulary `dfr(tok, df)` of terms
+    * in at least two and at most 90% of the docs, and the scored
+    * postings `p(doc_id, tok, tf, df)`. */
+  private val bm25StatsCtes: String =
+    """t AS (SELECT doc_id, unnest(
+      |  list_filter(regexp_split_to_array(text, '\s+'), x -> x <> ''))
+      |  AS tok FROM documents),
+      |tf AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
+      | FROM t GROUP BY 1, 2),
+      |dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
+      | FROM t GROUP BY 1),
+      |cs AS (SELECT CAST(count(DISTINCT doc_id) AS DOUBLE) AS n_docs,
+      |  CAST(sum(tf) AS DOUBLE) / count(DISTINCT doc_id) AS avgdl
+      | FROM tf),
+      |dfr AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf
+      | GROUP BY 1 HAVING count(*) >= 2
+      |  AND count(*) <= (SELECT floor(0.9 * n_docs) FROM cs)),
+      |p AS (SELECT tf.doc_id, tf.tok, tf.tf, dfr.df
+      | FROM tf JOIN dfr USING (tok))""".stripMargin.replace("\n", " ")
+
+  /** The best store match of each new item, over the candidate matches
+    * `p(doc_id, store_id, hamming)` and the new items `nd(doc_id)`:
+    * the match count, the nearest store_id (ties to the lower id) and
+    * its distance; an item with no match is kept. */
+  private val storeMatchSql: String =
+    """b AS (SELECT doc_id, store_id, hamming, row_number() OVER
+      |  (PARTITION BY doc_id ORDER BY hamming, store_id) AS rn FROM p),
+      |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matches,
+      |  CAST(max(CASE WHEN rn = 1 THEN store_id END) AS BIGINT)
+      |   AS match_id,
+      |  CAST(max(CASE WHEN rn = 1 THEN hamming END) AS INTEGER)
+      |   AS best_hamming
+      | FROM b GROUP BY 1)
+      |SELECT nd.doc_id,
+      | CAST(coalesce(a.n_matches, 0) AS BIGINT) AS n_matches,
+      | CAST(coalesce(a.match_id, -1) AS BIGINT) AS match_id,
+      | CAST(coalesce(a.best_hamming, -1) AS INTEGER) AS best_hamming,
+      | coalesce(a.n_matches, 0) = 0 AS keep
+      |FROM nd LEFT JOIN agg a USING (doc_id)""".stripMargin.replace("\n", " ")
+
+  /** The A/B arms' six sufficient statistics over `g(is_a, value)`:
+    * the count, sum and sum of squares of `value` in each arm, named
+    * `cnt`, `sum` or `sq` followed by the arm letter. */
+  private def abSumsSql(cnt: String, sum: String, sq: String): String =
+    s"""CAST(sum(CASE WHEN is_a THEN 1 ELSE 0 END) AS BIGINT) AS ${cnt}a,
+       |  CAST(sum(CASE WHEN NOT is_a THEN 1 ELSE 0 END) AS BIGINT) AS ${cnt}b,
+       |  sum(CASE WHEN is_a THEN value ELSE CAST(0 AS DOUBLE) END) AS ${sum}a,
+       |  sum(CASE WHEN NOT is_a THEN value ELSE CAST(0 AS DOUBLE) END) AS ${sum}b,
+       |  sum(CASE WHEN is_a THEN value ELSE CAST(0 AS DOUBLE) END * value)
+       |   AS ${sq}a,
+       |  sum(CASE WHEN NOT is_a THEN value ELSE CAST(0 AS DOUBLE) END * value)
+       |   AS ${sq}b""".stripMargin.replace("\n", " ")
+
+  /** The md5 coin that splits users into the A and B arms. */
+  private val abCoinSql: String =
+    """substring(md5(CAST(user_id AS VARCHAR) || ':ab42'), 1, 8)
+      |   < '80000000' AS is_a""".stripMargin.replace("\n", " ")
+
+  /** Per event type: `g` splits the events by [[abCoinSql]] and `a`
+    * holds the arms' [[abSumsSql]] (n_a, n_b, s_a, s_b, q_a, q_b), for
+    * types with at least two events per arm. */
+  private val abMomentsCtes: String =
+    s"""g AS (SELECT event_type,
+       | $abCoinSql,
+       | value FROM events),
+       |a AS (SELECT event_type,
+       |  ${abSumsSql("n_", "s_", "q_")}
+       | FROM g GROUP BY 1 HAVING n_a > 1 AND n_b > 1)""".stripMargin.replace("\n", " ")
+
+  /** [[abMomentsCtes]] per event type and day, into `d` (d_na, d_nb,
+    * d_sa, d_sb, d_qa, d_qb), over the events with a timestamp. */
+  private val abDailyMomentsCtes: String =
+    s"""g AS (SELECT event_type, CAST(ts AS DATE) AS day,
+       | $abCoinSql,
+       | value FROM events WHERE ts IS NOT NULL),
+       |d AS (SELECT event_type, day,
+       |  ${abSumsSql("d_n", "d_s", "d_q")}
+       | FROM g GROUP BY 1, 2)""".stripMargin.replace("\n", " ")
+
+  /** `name(cols, h)`: the hashes that seed the synthetic media's 64
+    * samples, the [[fnv1aSql]] of "doc_id:i" for i in [0, 64); `cols`
+    * is `doc_id` or `doc_id, i`. */
+  private def sampleHashCte(name: String, cols: String): String =
+    s"""$name AS (SELECT $cols,
+       | ${fnv1aSql("s")} AS h
+       | FROM (SELECT $cols,
+       |   CAST(doc_id AS VARCHAR) || ':' || CAST(i AS VARCHAR) AS s
+       |  FROM documents, LATERAL (SELECT unnest(generate_series(0, 63))
+       |   AS i) g) t)""".stripMargin.replace("\n", " ")
+
   // ---- DuckDB oracles --------------------------------------------------
 
   /** The lineitem→sales mapping as a SQL fragment (SURVEY.md §1). */
@@ -52,12 +311,8 @@ private[graft] object OracleSql {
     * `sig(doc_id, dhash)`. Both phash oracles append their own
     * exhaustive tail - no candidate rule anywhere. */
   private val phashSigCtes: String =
-    """fold1 AS (SELECT doc_id, i,
-        |  CAST(list_reduce(list_prepend(CAST(14695981039346656037 AS HUGEINT),
-        |    list_transform(range(1, length(s) + 1),
-        |      j -> CAST(ord(substr(s, j, 1)) AS HUGEINT))),
-        |    (h, b) -> ((h - (h % 256)) + xor(CAST(h % 256 AS BIGINT),
-        |      CAST(b AS BIGINT))) * 1099511628211 % 18446744073709551616)
+    s"""fold1 AS (SELECT doc_id, i,
+        |  CAST(${fnv1aSql("s", p = "    ", pp = "      ")}
         |    AS VARCHAR) AS s2
         | FROM (SELECT doc_id, i,
         |   CAST(CASE WHEN doc_id % 10 = 1 THEN doc_id - 1 ELSE doc_id END
@@ -72,11 +327,7 @@ private[graft] object OracleSql {
         |  CAST((h // 65536) % 256 AS BIGINT) AS g,
         |  CAST((h // 16777216) % 256 AS BIGINT) AS b
         | FROM (SELECT doc_id, i,
-        |  list_reduce(list_prepend(CAST(14695981039346656037 AS HUGEINT),
-        |    list_transform(range(1, length(s2) + 1),
-        |      j -> CAST(ord(substr(s2, j, 1)) AS HUGEINT))),
-        |    (h, b) -> ((h - (h % 256)) + xor(CAST(h % 256 AS BIGINT),
-        |      CAST(b AS BIGINT))) * 1099511628211 % 18446744073709551616)
+        |  ${fnv1aSql("s2", p = "    ", pp = "      ")}
         |    AS h
         |  FROM fold1) u) v),
         |lum AS (SELECT doc_id, i, 299 * r + 587 * g + 114 * b AS l FROM px),
@@ -375,6 +626,23 @@ private[graft] object OracleSql {
     operators.TextAnalysis.GopherQualityThresholds
       .map(t => qualFlagSql(t._1)).mkString("(", " OR ", ")")
 
+  /** Any Gopher repetition threshold broken, over the
+    * [[gopherProfileCtes]] columns. */
+  private def repAnySql: String = {
+    val th = operators.TextAnalysis.GopherGateThresholds.toMap
+    th.keys.toSeq.sorted.map(n => s"$n > ${th(n)}").mkString("(", " OR ", ")")
+  }
+
+  /** The 20-threshold Gopher gate, appended after [[linedCtesFrom]]:
+    * the profile chains and `gflag(doc_id)`, every doc that breaks a
+    * repetition or a quality threshold. */
+  private lazy val gopherFlagCtes: String =
+    s"""$gopherProfileCtes, $dupMassCtes, $qualProfileCtes,
+       |gflag AS (SELECT r.doc_id
+       | FROM rep_profile r JOIN dng gg ON gg.doc_id = r.doc_id
+       | JOIN qprof qq ON qq.doc_id = r.doc_id
+       | WHERE ($repAnySql OR $qualAnySql))""".stripMargin.replace("\n", " ")
+
   /** Corpus-duplicated n-gram coverage CTE chain (DuckDB dialect),
     * appended after [[toksCte]]: 8-gram occurrences, the ≥2-distinct
     * -docs duplicate set, and per-doc covered characters (position
@@ -402,10 +670,16 @@ private[graft] object OracleSql {
       .stripMargin.replace("\n", " ")
 
   /** Shared token-array CTE for the text oracles (DuckDB dialect). */
-  private val toksCte: String =
-    """WITH t AS (SELECT doc_id, text,
-      | list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS toks
-      |FROM documents)""".stripMargin.replace("\n", " ")
+  /** `name(cols, toks)`: each document's whitespace tokens. `p` is
+    * the host's indent of the tokens line; its FROM line sits one
+    * space less deep. */
+  private def toksCteAs(name: String, cols: String = "doc_id, text",
+      p: String = "  "): String =
+    s"""$name AS (SELECT $cols,
+       |${p}list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS toks
+       |${p.tail}FROM documents)""".stripMargin.replace("\n", " ")
+
+  private val toksCte: String = "WITH " + toksCteAs("t", p = " ")
 
   /** Learned-quality-filter training replay (r15): the
     * [[graft.operators.QualityLr]] full-batch GD unrolled — exact
@@ -567,25 +841,33 @@ private[graft] object OracleSql {
        |  CAST(sm / CAST((SELECT sum(sm) FROM v2) AS DOUBLE) AS FLOAT) AS p
        | FROM v2)""".stripMargin.replace("\n", " ")
 
+  /** Trigram document frequencies: `t` holds each doc's lower-cased
+    * tokens, `g(doc_id, grams)` its distinct trigrams, `inv(doc_id,
+    * gram)` the postings and `d(gram, df)` the frequencies. */
+  private val gramDfCtes: String =
+    s"""t AS (SELECT doc_id, list_filter(
+       |  regexp_split_to_array(lower(text), '\\s+'), x -> x <> '') AS toks
+       | FROM documents),
+       |g AS (SELECT doc_id, $trigramSetSql AS grams FROM t),
+       |inv AS (SELECT doc_id, unnest(grams) AS gram FROM g),
+       |d AS (SELECT gram, count(*) AS df FROM inv GROUP BY 1)""".stripMargin.replace("\n", " ")
+
+  /** [[gramDfCtes]] and the blocked candidate pairs `p(id_a, id_b)`:
+    * at least three shared trigrams of df in [2, 64]. */
+  private val blockedCandCtes: String =
+    s"""$gramDfCtes,
+       |p AS (SELECT a.doc_id AS id_a, c.doc_id AS id_b
+       |  FROM inv a JOIN d ON d.gram = a.gram JOIN inv c ON c.gram = a.gram
+       |  WHERE a.doc_id < c.doc_id AND d.df BETWEEN 2 AND 64
+       |  GROUP BY 1, 2 HAVING count(*) >= 3)""".stripMargin.replace("\n", " ")
+
   /** Verified blocked near-dup pairs as a CTE chain ending in
     * `m(id_a, id_b)` — the DuckDB mirror of
     * [[graft.operators.Dedup.blockedJaccardPairs]] at its defaults
     * (3-token shingles, df ∈ [2, 64], ≥3 shared rare grams,
     * Jaccard ≥ 0.5), shared by the source-diagnostic oracles. */
   private val blockedPairsCte: String =
-    """WITH t AS (SELECT doc_id, list_filter(
-      |  regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS toks
-      | FROM documents),
-      |g AS (SELECT doc_id, CASE WHEN len(toks) >= 3
-      |  THEN list_distinct(list_transform(range(1, len(toks) - 1),
-      |   i -> array_to_string(toks[i:i+2], ' ')))
-      |  ELSE CAST([] AS VARCHAR[]) END AS grams FROM t),
-      |inv AS (SELECT doc_id, unnest(grams) AS gram FROM g),
-      |d AS (SELECT gram, count(*) AS df FROM inv GROUP BY 1),
-      |p AS (SELECT a.doc_id AS id_a, c.doc_id AS id_b
-      |  FROM inv a JOIN d ON d.gram = a.gram JOIN inv c ON c.gram = a.gram
-      |  WHERE a.doc_id < c.doc_id AND d.df BETWEEN 2 AND 64
-      |  GROUP BY 1, 2 HAVING count(*) >= 3),
+    s"""WITH $blockedCandCtes,
       |m AS (SELECT p.id_a, p.id_b FROM p
       | JOIN g ga ON ga.doc_id = p.id_a JOIN g gb ON gb.doc_id = p.id_b
       | WHERE CAST(len(list_intersect(ga.grams, gb.grams)) AS DOUBLE)
@@ -621,11 +903,7 @@ private[graft] object OracleSql {
     * (r, bucket) counter table. */
   private def cmsCtes: String =
     s"""ti AS MATERIALIZED (SELECT t,
-       |  list_reduce(list_prepend(CAST(14695981039346656037 AS HUGEINT),
-       |   list_transform(range(1, length(t) + 1),
-       |    j -> CAST(ord(substr(t, j, 1)) AS HUGEINT))),
-       |   (h, c) -> ((h - (h % 256)) + xor(CAST(h % 256 AS BIGINT),
-       |    CAST(c AS BIGINT))) * 1099511628211 % 18446744073709551616)
+       |  ${fnv1aSql("t", b = "c", p = "   ", pp = "    ")}
        |   AS th
        | FROM (SELECT list_filter(
        |    regexp_split_to_array(lower(text), '\\s+'), x -> x <> '') AS toks
@@ -649,13 +927,9 @@ private[graft] object OracleSql {
     * assignment — emb_kmeans_assign reads it directly, the
     * cluster-temperature key appends its sampling tail. */
   private def kmeansCtes: String = {
-    def assign(src: String, cents: String) =
+    def assign(cents: String) =
       s"""(SELECT vec_id, cell FROM (
-         | SELECT e.vec_id, c.cell, row_number() OVER (
-         |   PARTITION BY e.vec_id ORDER BY
-         |    list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-         |      CAST(c.embedding AS DOUBLE[])) DESC, c.cell) AS rn
-         | FROM $src e, $cents c) x WHERE rn = 1)"""
+         | ${ivfRankSql(cents, p = "    ", pp = "      ")}) x WHERE rn = 1)"""
     def update(assigned: String, prev: String) =
       s"""(SELECT p.cell,
          |  coalesce(m.emb, CAST(p.embedding AS FLOAT[])) AS embedding
@@ -672,12 +946,12 @@ private[graft] object OracleSql {
        |  embedding
        | FROM (SELECT vec_id, embedding FROM embeddings
        |  ORDER BY vec_id LIMIT 8) s),
-       |a0 AS MATERIALIZED ${assign("embeddings", "c0")},
+       |a0 AS MATERIALIZED ${assign("c0")},
        |c1 AS MATERIALIZED ${update("a0", "c0")},
-       |a1 AS MATERIALIZED ${assign("embeddings", "c1")},
+       |a1 AS MATERIALIZED ${assign("c1")},
        |c2 AS MATERIALIZED ${update("a1", "c1")},
        |fa AS MATERIALIZED (SELECT vec_id, CAST(cell AS BIGINT) AS cell
-       | FROM ${assign("embeddings", "c2")} f)""".stripMargin
+       | FROM ${assign("c2")} f)""".stripMargin
   }
 
   /** Scene-structure replay: the frame grid + the stub decode's
@@ -745,11 +1019,7 @@ private[graft] object OracleSql {
   private def shingleCtes: String =
     s"""tok AS MATERIALIZED (
        | SELECT doc_id, i AS pos,
-       |  list_reduce(list_prepend(CAST(14695981039346656037 AS HUGEINT),
-       |   list_transform(range(1, length(t) + 1),
-       |    j -> CAST(ord(substr(t, j, 1)) AS HUGEINT))),
-       |   (h, c) -> ((h - (h % 256)) + xor(CAST(h % 256 AS BIGINT),
-       |    CAST(c AS BIGINT))) * 1099511628211 % 18446744073709551616)
+       |  ${fnv1aSql("t", b = "c", p = "   ", pp = "    ")}
        |   AS th
        | FROM (SELECT doc_id, list_filter(
        |    regexp_split_to_array(lower(text), '\\s+'), x -> x <> '') AS toks
@@ -799,11 +1069,7 @@ private[graft] object OracleSql {
        |bucket AS (SELECT band, band_key,
        |  list_sort(list(DISTINCT doc_id)) AS ids
        | FROM sig GROUP BY 1, 2 HAVING count(DISTINCT doc_id) > 1),
-       |pairs AS (SELECT DISTINCT a.ida AS id_a, b.idb AS id_b
-       | FROM (SELECT list_slice(ids, 1, 64) AS ids FROM bucket) c,
-       |  LATERAL (SELECT unnest(c.ids) AS ida) a,
-       |  LATERAL (SELECT unnest(c.ids) AS idb) b
-       | WHERE a.ida < b.idb),
+       |${bucketPairsCte("pairs")},
        |inter AS (SELECT p.id_a, p.id_b, count(*) AS n_shared
        | FROM pairs p
        | JOIN sh x ON x.doc_id = p.id_a
@@ -825,11 +1091,7 @@ private[graft] object OracleSql {
   private def simhashOracle: String =
     s"""WITH tok AS MATERIALIZED (
        | SELECT doc_id,
-       |  list_reduce(list_prepend(CAST(14695981039346656037 AS HUGEINT),
-       |   list_transform(range(1, length(t) + 1),
-       |    j -> CAST(ord(substr(t, j, 1)) AS HUGEINT))),
-       |   (h, c) -> ((h - (h % 256)) + xor(CAST(h % 256 AS BIGINT),
-       |    CAST(c AS BIGINT))) * 1099511628211 % 18446744073709551616)
+       |  ${fnv1aSql("t", b = "c", p = "   ", pp = "    ")}
        |   AS th
        | FROM (SELECT doc_id, list_filter(regexp_split_to_array(
        |    trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), '\\s+'),
@@ -851,11 +1113,7 @@ private[graft] object OracleSql {
        |bucket AS (SELECT band, band_bits,
        |  list_sort(list(DISTINCT doc_id)) AS ids
        | FROM banded GROUP BY 1, 2 HAVING count(DISTINCT doc_id) > 1),
-       |prs AS (SELECT DISTINCT a.ida AS id_a, b.idb AS id_b
-       | FROM (SELECT list_slice(ids, 1, 64) AS ids FROM bucket) c,
-       |  LATERAL (SELECT unnest(c.ids) AS ida) a,
-       |  LATERAL (SELECT unnest(c.ids) AS idb) b
-       | WHERE a.ida < b.idb),
+       |${bucketPairsCte("prs")},
        |ham AS (SELECT p.id_a, p.id_b,
        |  bit_count(xor(CAST(sa.sig % 4294967296 AS BIGINT),
        |    CAST(sb.sig % 4294967296 AS BIGINT)))
@@ -865,16 +1123,9 @@ private[graft] object OracleSql {
        | JOIN sig sb ON sb.doc_id = p.id_b),
        |verified AS (SELECT id_a, id_b, 64 - hamming AS sim FROM ham
        | WHERE hamming <= 12),
-       |sides AS (SELECT id_a AS doc_id, CAST(sim AS DOUBLE) AS score,
-       |  false AS is_junior FROM verified
-       | UNION ALL SELECT id_b, CAST(sim AS DOUBLE), true FROM verified),
-       |perdoc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_dupes,
-       |  max(score) AS max_score, bool_or(is_junior) AS dominated
-       | FROM sides GROUP BY 1)
-       |SELECT d.doc_id, coalesce(p.n_dupes, 0) AS n_dupes,
-       | coalesce(p.max_score, 0.0) AS max_score,
-       | coalesce(NOT p.dominated, true) AS keep
-       |FROM documents d LEFT JOIN perdoc p USING (doc_id)"""
+       |${dupSidesCte("CAST(sim AS DOUBLE)")},
+       |$dupPerdocCte
+       |${dupKeepSql()}"""
       .stripMargin.replace("\n", " ")
 
   /** Char-n-gram Jaccard oracle (r10): the rolling polynomial gram
@@ -913,11 +1164,7 @@ private[graft] object OracleSql {
        |bucket AS (SELECT band, band_key,
        |  list_sort(list(DISTINCT doc_id)) AS ids
        | FROM sig GROUP BY 1, 2 HAVING count(DISTINCT doc_id) > 1),
-       |prs AS (SELECT DISTINCT a.ida AS id_a, b.idb AS id_b
-       | FROM (SELECT list_slice(ids, 1, 64) AS ids FROM bucket) c,
-       |  LATERAL (SELECT unnest(c.ids) AS ida) a,
-       |  LATERAL (SELECT unnest(c.ids) AS idb) b
-       | WHERE a.ida < b.idb),
+       |${bucketPairsCte("prs")},
        |inter AS (SELECT p.id_a, p.id_b, count(*) AS n_shared
        | FROM prs p JOIN sh x ON x.doc_id = p.id_a
        | JOIN sh y ON y.doc_id = p.id_b AND y.shv = x.shv GROUP BY 1, 2),
@@ -929,16 +1176,9 @@ private[graft] object OracleSql {
        | JOIN sizes sb ON sb.doc_id = i.id_b
        | WHERE CAST(i.n_shared AS DOUBLE)
        |  / greatest(sa.nn + sb.nn - i.n_shared, 1) >= 0.7),
-       |sides AS (SELECT id_a AS doc_id, jaccard AS score,
-       |  false AS is_junior FROM verified
-       | UNION ALL SELECT id_b, jaccard, true FROM verified),
-       |perdoc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_dupes,
-       |  max(score) AS max_score, bool_or(is_junior) AS dominated
-       | FROM sides GROUP BY 1)
-       |SELECT d.doc_id, coalesce(p.n_dupes, 0) AS n_dupes,
-       | coalesce(p.max_score, 0.0) AS max_score,
-       | coalesce(NOT p.dominated, true) AS keep
-       |FROM documents d LEFT JOIN perdoc p USING (doc_id)"""
+       |${dupSidesCte("jaccard")},
+       |$dupPerdocCte
+       |${dupKeepSql()}"""
       .stripMargin.replace("\n", " ")
   }
 
@@ -1001,11 +1241,7 @@ private[graft] object OracleSql {
   private def hyperplanePairsCte(tau: Double): String =
     s"""bucket AS (SELECT tbl, sig, list_sort(list(DISTINCT vec_id)) AS ids
        | FROM hsig GROUP BY 1, 2 HAVING count(DISTINCT vec_id) > 1),
-       |prs AS (SELECT DISTINCT a.ida AS id_a, b.idb AS id_b
-       | FROM (SELECT list_slice(ids, 1, 64) AS ids FROM bucket) c,
-       |  LATERAL (SELECT unnest(c.ids) AS ida) a,
-       |  LATERAL (SELECT unnest(c.ids) AS idb) b
-       | WHERE a.ida < b.idb),
+       |${bucketPairsCte("prs")},
        |verified AS (SELECT p.id_a, p.id_b,
        |  list_cosine_similarity(CAST(ea.embedding AS DOUBLE[]),
        |    CAST(eb.embedding AS DOUBLE[])) AS cosine
@@ -1236,7 +1472,7 @@ private[graft] object OracleSql {
     * buckets capped at the 256 smallest doc_ids, the operator's
     * guard). */
   private val imageWinnowCtes: String =
-    """iw0 AS (SELECT d.doc_id,
+    s"""iw0 AS (SELECT d.doc_id,
       |  CAST(CASE WHEN d.doc_id % 20 = 1 THEN 8
       |   WHEN d.doc_id % 20 = 11 THEN 16 ELSE 12 END
       |   AS INTEGER) AS w, gx.x, gy.y,
@@ -1260,11 +1496,7 @@ private[graft] object OracleSql {
       |  AND gy.y < CASE WHEN d.doc_id % 20 = 1 THEN 8
       |   WHEN d.doc_id % 20 = 11 THEN 16 ELSE 12 END),
       |iwf1 AS (SELECT doc_id, w, x, y,
-      |  CAST(list_reduce(list_prepend(CAST(14695981039346656037 AS HUGEINT),
-      |    list_transform(range(1, length(s) + 1),
-      |      j -> CAST(ord(substr(s, j, 1)) AS HUGEINT))),
-      |    (h, b) -> ((h - (h % 256)) + xor(CAST(h % 256 AS BIGINT),
-      |      CAST(b AS BIGINT))) * 1099511628211 % 18446744073709551616)
+      |  CAST(${fnv1aSql("s", p = "    ", pp = "      ")}
       |    AS VARCHAR) AS s2
       | FROM iw0),
       |ilum AS (SELECT doc_id, w, x, y,
@@ -1272,11 +1504,7 @@ private[graft] object OracleSql {
       |   + 587 * CAST((h // 65536) % 256 AS BIGINT)
       |   + 114 * CAST((h // 16777216) % 256 AS BIGINT) AS l
       | FROM (SELECT doc_id, w, x, y,
-      |  list_reduce(list_prepend(CAST(14695981039346656037 AS HUGEINT),
-      |    list_transform(range(1, length(s2) + 1),
-      |      j -> CAST(ord(substr(s2, j, 1)) AS HUGEINT))),
-      |    (h, b) -> ((h - (h % 256)) + xor(CAST(h % 256 AS BIGINT),
-      |      CAST(b AS BIGINT))) * 1099511628211 % 18446744073709551616)
+      |  ${fnv1aSql("s2", p = "    ", pp = "      ")}
       |    AS h
       |  FROM iwf1) u),
       |ill AS MATERIALIZED (SELECT doc_id, w,
@@ -1367,17 +1595,9 @@ private[graft] object OracleSql {
       if (!useIvf) ""
       else s"""icents AS (SELECT cell, embedding FROM cents WHERE cell < 16),
               |assigned AS MATERIALIZED (SELECT vec_id, cell FROM (
-              | SELECT e.vec_id, c.cell, row_number() OVER (
-              |   PARTITION BY e.vec_id ORDER BY
-              |   list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-              |     CAST(c.embedding AS DOUBLE[])) DESC, c.cell) AS rn
-              | FROM embeddings e, icents c $assignWhere) x WHERE rn = 1),
+              | ${ivfRankSql("icents")} $assignWhere) x WHERE rn = 1),
               |probes AS (SELECT vec_id AS query_id, cell FROM (
-              | SELECT e.vec_id, c.cell, row_number() OVER (
-              |   PARTITION BY e.vec_id ORDER BY
-              |   list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-              |     CAST(c.embedding AS DOUBLE[])) DESC, c.cell) AS rn
-              | FROM embeddings e, icents c WHERE e.vec_id % 100 = 0) x
+              | ${ivfRankSql("icents")} WHERE e.vec_id % 100 = 0) x
               | WHERE rn <= $nprobe),
               |""".stripMargin
     val candSrc =
@@ -1440,11 +1660,7 @@ private[graft] object OracleSql {
     }.mkString(" + ")
     s"""WITH ${ivfCentsCtes("", pick = 16)},
        |a0 AS MATERIALIZED (SELECT vec_id, cell FROM (
-       | SELECT e.vec_id, c.cell, row_number() OVER (
-       |   PARTITION BY e.vec_id ORDER BY
-       |   list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-       |     CAST(c.embedding AS DOUBLE[])) DESC, c.cell) AS rn
-       | FROM embeddings e, cents c) x WHERE rn = 1),
+       | ${ivfRankSql("cents")}) x WHERE rn = 1),
        |c1 AS MATERIALIZED (SELECT c.cell,
        |  coalesce(mm.emb, CAST(c.embedding AS FLOAT[])) AS emb
        | FROM cents c LEFT JOIN (
@@ -1468,11 +1684,7 @@ private[graft] object OracleSql {
        | FROM s32 JOIN c1 c1e ON c1e.cell = s32.cell,
        |  LATERAL (SELECT unnest(range(0, 16)) AS j) g),
        |a1 AS MATERIALIZED (SELECT vec_id, cell FROM (
-       | SELECT e.vec_id, c.cell, row_number() OVER (
-       |   PARTITION BY e.vec_id ORDER BY
-       |   list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-       |     CAST(c.emb AS DOUBLE[])) DESC, c.cell) AS rn
-       | FROM embeddings e, c1 c) x WHERE rn = 1),
+       | ${ivfRankSql("c1", col = "emb")}) x WHERE rn = 1),
        |enc0 AS MATERIALIZED (SELECT vec_id, sub, code FROM (
        | SELECT e.vec_id, cb0.sub, cb0.code, row_number() OVER (
        |   PARTITION BY e.vec_id, cb0.sub
@@ -1512,11 +1724,7 @@ private[graft] object OracleSql {
        | JOIN c1 c1e ON c1e.cell = a1.cell
        | GROUP BY 1),
        |probes AS (SELECT vec_id AS query_id, cell FROM (
-       | SELECT e.vec_id, c.cell, row_number() OVER (
-       |   PARTITION BY e.vec_id ORDER BY
-       |   list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-       |     CAST(c.emb AS DOUBLE[])) DESC, c.cell) AS rn
-       | FROM embeddings e, c1 c WHERE e.vec_id % 100 = 0) x
+       | ${ivfRankSql("c1", col = "emb")} WHERE e.vec_id % 100 = 0) x
        | WHERE rn <= 12),
        |apx AS (SELECT query_id, neighbor_id FROM (
        | SELECT p.query_id, a.vec_id AS neighbor_id, row_number() OVER (
@@ -1544,17 +1752,9 @@ private[graft] object OracleSql {
   private def ivfProbeTail(assignWhere: String = "",
                            nprobe: Int = 8): String =
     s"""assigned AS MATERIALIZED (SELECT vec_id, cell FROM (
-       | SELECT e.vec_id, c.cell, row_number() OVER (
-       |   PARTITION BY e.vec_id ORDER BY
-       |   list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-       |     CAST(c.embedding AS DOUBLE[])) DESC, c.cell) AS rn
-       | FROM embeddings e, cents c $assignWhere) x WHERE rn = 1),
+       | ${ivfRankSql("cents")} $assignWhere) x WHERE rn = 1),
        |probes AS (SELECT vec_id AS query_id, cell FROM (
-       | SELECT e.vec_id, c.cell, row_number() OVER (
-       |   PARTITION BY e.vec_id ORDER BY
-       |   list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-       |     CAST(c.embedding AS DOUBLE[])) DESC, c.cell) AS rn
-       | FROM embeddings e, cents c WHERE e.vec_id % 100 = 0) x
+       | ${ivfRankSql("cents")} WHERE e.vec_id % 100 = 0) x
        | WHERE rn <= $nprobe),
        |cand AS (SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id
        | FROM probes p JOIN assigned a ON a.cell = p.cell
@@ -1569,7 +1769,8 @@ private[graft] object OracleSql {
        |QUALIFY row_number() OVER (PARTITION BY query_id
        | ORDER BY cosine DESC, neighbor_id) <= 10""".stripMargin
 
-  def oracleSql: Map[String, String] = {
+  /** Every key's oracle, built once per JVM. */
+  lazy val oracleSql: Map[String, String] = {
     val m = base
     // result-parity keys: same semantics, different physical strategy
     // (or, for stream_dedup_within_wm, the batch degenerate form)
@@ -1614,6 +1815,10 @@ private[graft] object OracleSql {
       ("stream_sessionize" -> m("q_events_sessionize")) +
       // single-batch first-seen min-fold == the first-seen join
       ("stream_new_vs_returning" -> m("q_new_vs_returning")) +
+      // last-write-wins upsert per user == the latest-event query
+      ("stream_cdc_apply" -> m("etl_cdc_apply")) +
+      // folding sorted history replays the same run-collapse
+      ("stream_scd2" -> m("etl_scd2_user_state")) +
       // ts-ordered O(w)-tail span fold == the lag(w-1) window form
       ("stream_bot_flag" -> m("events_bot_flag")) +
       // single-batch k-smallest-key fold == the rank-window sample
@@ -1652,25 +1857,13 @@ private[graft] object OracleSql {
     * coverage chain (the docs_dup_ngram_apply definition), and the
     * legacy stages keep their exact prior SQL (raw-corpus CTEs
     * renamed rt/cp to coexist with the fixture chain's t/p). */
-  private val curateFullCtes: String = {
-    val th = operators.TextAnalysis.GopherGateThresholds.toMap
-    val fAny = th.keys.toSeq.sorted.map(n => s"$n > ${th(n)}")
-      .mkString("(", " OR ", ")")
+  private val curateFullCtes: String =
     (s"""WITH $qualCorpusCte, ${linedCtesFrom("qd")},
-        |$gopherProfileCtes, $dupMassCtes, $qualProfileCtes,
-        |gflag AS (SELECT r.doc_id
-        | FROM rep_profile r JOIN dng gg ON gg.doc_id = r.doc_id
-        | JOIN qprof qq ON qq.doc_id = r.doc_id
-        | WHERE ($fAny OR $qualAnySql)),
-        |rt AS (SELECT doc_id, text,
-        |  list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS toks
-        | FROM documents),
+        |$gopherFlagCtes,
+        |${toksCteAs("rt")},
         |sc AS (SELECT doc_id,
         |  CAST(len(toks) AS BIGINT) AS n_tokens,
-        |  least(1.0, len(toks) / 128.0)
-        |   * (1.0 - least(1.0, ((length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g'))) / greatest(length(text), 1)) * 4.0))
-        |   * (0.3 + 0.7 * least(1.0, (len(list_filter(toks, x -> x IN ('the','a','and','of','to','in','is','it','for','on'))) / greatest(len(toks), 1)) * 5.0))
-        |   AS quality_score FROM rt),
+        |  ${qualityScoreSql()} FROM rt),
         |q AS (SELECT doc_id FROM sc
         | WHERE n_tokens >= 20 AND n_tokens <= 100000 AND quality_score >= 0.2
         |  AND doc_id NOT IN (SELECT doc_id FROM gflag)),
@@ -1696,10 +1889,7 @@ private[graft] object OracleSql {
         |ddrop AS (SELECT rtc.doc_id FROM rtc JOIN cc USING (doc_id)
         | WHERE rtc.tok_chars > 0
         |  AND CAST(cc.dup_chars AS BIGINT) / rtc.tok_chars > 0.5),
-        |g AS (SELECT doc_id, unnest(list_distinct(CASE WHEN len(toks) >= 3
-        |  THEN list_transform(range(1, len(toks) - 1),
-        |   i -> array_to_string(toks[i:i+2], ' '))
-        |  ELSE CAST([] AS VARCHAR[]) END)) AS gram FROM rt),
+        |g AS (SELECT doc_id, unnest(list_distinct($trigramsSql)) AS gram FROM rt),
         |bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 97 = 0),
         |cont AS (SELECT DISTINCT c.doc_id FROM
         |  (SELECT doc_id, gram FROM g WHERE doc_id % 97 <> 0) c
@@ -1716,10 +1906,7 @@ private[graft] object OracleSql {
         |  AND d.doc_id % 97 <> 0
         |  AND d.doc_id NOT IN (SELECT doc_id FROM cont)
         |  AND d.doc_id NOT IN (SELECT doc_id FROM sem)),
-        |tl AS (SELECT doc_id, CASE WHEN len(toks) >= 3
-        |  THEN list_distinct(list_transform(range(1, len(toks) - 1),
-        |   i -> array_to_string(toks[i:i+2], ' ')))
-        |  ELSE CAST([] AS VARCHAR[]) END AS grams
+        |tl AS (SELECT doc_id, $trigramSetSql AS grams
         | FROM (SELECT doc_id, list_filter(
         |   regexp_split_to_array(lower(text), '\\s+'), x -> x <> '') AS toks
         |  FROM documents WHERE doc_id IN (SELECT doc_id FROM cur)) lt),
@@ -1751,7 +1938,6 @@ private[graft] object OracleSql {
         |  CAST(sc.n_tokens - coalesce(cc.n_cov, 0) AS BIGINT) AS n_res,
         |  sc.quality_score FROM sc LEFT JOIN cc USING (doc_id))""")
       .stripMargin.replace("\n", " ")
-  }
 
   /** Shared front half of the etl_entity_* oracles: the dirty-CRM
     * derivation from `customer` (EntityResolution.synthCrmCorpus
@@ -1762,9 +1948,7 @@ private[graft] object OracleSql {
     * fingerprint (the text_winnow_dedup front half, shared by the
     * r16 ML-erasure keys). */
   private val winnowFpCtes: String =
-    """t AS (SELECT doc_id,
-      |  list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS toks
-      | FROM documents),
+    s"""${toksCteAs("t", "doc_id")},
       |g AS (SELECT doc_id, CASE WHEN len(toks) >= 3
       |  THEN list_transform(range(1, len(toks) - 1),
       |   i -> md5(array_to_string(toks[i:i+2], ' ')))
@@ -1807,6 +1991,17 @@ private[graft] object OracleSql {
       | FROM nbk a JOIN nbk b ON a.block = b.block AND a.rec_id < b.rec_id
       |  AND abs(a.len - b.len) <= 1
       | WHERE levenshtein(a.norm, b.norm) <= 1)""".stripMargin
+
+  /** [[crmPairsCte]] closed into entities: the min-label closure over
+    * the `pr` edges, ending in `lab(rec_id, entity_id)`. */
+  private val crmEntityCtes: String =
+    crmPairsCte.replace("WITH ", "WITH RECURSIVE ") + """,
+      |e AS (SELECT rec_a AS src, rec_b AS dst FROM pr
+      |  UNION ALL SELECT rec_b, rec_a FROM pr),
+      |reach AS (SELECT rec_id, rec_id AS r FROM recs
+      |  UNION
+      |  SELECT reach.rec_id, e.dst FROM reach JOIN e ON e.src = reach.r),
+      |lab AS (SELECT rec_id, min(r) AS entity_id FROM reach GROUP BY 1)""".stripMargin
 
   private def base: Map[String, String] = Map(
     "etl_extract_typed" -> salesSql("WHERE l_linestatus = 'F'"),
@@ -1902,23 +2097,11 @@ private[graft] object OracleSql {
         | CASE WHEN lev = 0 THEN 'exact_norm' ELSE 'fuzzy' END AS rule
         |FROM pr""").stripMargin.replace("\n", " "),
     "etl_entity_groups" ->
-      (crmPairsCte.replace("WITH ", "WITH RECURSIVE ") + """,
-        |e AS (SELECT rec_a AS src, rec_b AS dst FROM pr
-        |  UNION ALL SELECT rec_b, rec_a FROM pr),
-        |reach AS (SELECT rec_id, rec_id AS r FROM recs
-        |  UNION
-        |  SELECT reach.rec_id, e.dst FROM reach JOIN e ON e.src = reach.r),
-        |lab AS (SELECT rec_id, min(r) AS entity_id FROM reach GROUP BY 1)
+      (crmEntityCtes + """
         |SELECT rec_id, entity_id, rec_id = entity_id AS keep
         |FROM lab""").stripMargin.replace("\n", " "),
     "etl_entity_golden" ->
-      (crmPairsCte.replace("WITH ", "WITH RECURSIVE ") + """,
-        |e AS (SELECT rec_a AS src, rec_b AS dst FROM pr
-        |  UNION ALL SELECT rec_b, rec_a FROM pr),
-        |reach AS (SELECT rec_id, rec_id AS r FROM recs
-        |  UNION
-        |  SELECT reach.rec_id, e.dst FROM reach JOIN e ON e.src = reach.r),
-        |lab AS (SELECT rec_id, min(r) AS entity_id FROM reach GROUP BY 1),
+      (crmEntityCtes + """,
         |m AS (SELECT l.rec_id, l.entity_id, nb.src, nb.nationkey,
         |  nb.acctbal, nb.norm,
         |  CASE nb.src WHEN 'crm' THEN 0 WHEN 'web' THEN 1
@@ -2926,11 +3109,8 @@ private[graft] object OracleSql {
         |FROM documents""".stripMargin.replace("\n", " "),
     "text_quality_filter" ->
       (toksCte +
-        """ SELECT * FROM (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-          | least(1.0, len(toks) / 128.0)
-          |  * (1.0 - least(1.0, ((length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g'))) / greatest(length(text), 1)) * 4.0))
-          |  * (0.3 + 0.7 * least(1.0, (len(list_filter(toks, x -> x IN ('the','a','and','of','to','in','is','it','for','on'))) / greatest(len(toks), 1)) * 5.0))
-          |  AS quality_score
+        s""" SELECT * FROM (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
+          | ${qualityScoreSql("  ")}
           |FROM t) q
           |WHERE n_tokens >= 20 AND n_tokens <= 100000 AND quality_score >= 0.2"""
           .stripMargin.replace("\n", " ")),
@@ -3315,14 +3495,11 @@ private[graft] object OracleSql {
         |  ELSE 1.0 END AS char_retention
         |FROM documents d LEFT JOIN pd USING (doc_id)
         |GROUP BY 1""").stripMargin.replace("\n", " "),
-    "docs_gopher_cost" -> {
+    "docs_gopher_cost" ->
       // survivors chain joined to RAW token counts; all sums exact
-      val th = operators.TextAnalysis.GopherGateThresholds.toMap
-      val fAny = th.keys.toSeq.sorted.map(n => s"$n > ${th(n)}")
-        .mkString("(", " OR ", ")")
       (s"""WITH $qualCorpusCte, ${linedCtesFrom("qd")},
          |$gopherProfileCtes, $dupMassCtes, $qualProfileCtes,
-         |k AS (SELECT r.doc_id, NOT ($fAny OR $qualAnySql) AS keep
+         |k AS (SELECT r.doc_id, NOT ($repAnySql OR $qualAnySql) AS keep
          | FROM rep_profile r JOIN dng g ON g.doc_id = r.doc_id
          | JOIN qprof q ON q.doc_id = r.doc_id),
          |tc AS (SELECT doc_id, CAST(len(list_filter(
@@ -3339,21 +3516,16 @@ private[graft] object OracleSql {
          |  ELSE 0.0 END AS token_retention
          |FROM documents d JOIN k ON k.doc_id = d.doc_id
          |JOIN tc ON tc.doc_id = d.doc_id
-         |GROUP BY 1""").stripMargin.replace("\n", " ")
-    },
-    "stream_gopher_gate" -> {
+         |GROUP BY 1""").stripMargin.replace("\n", " "),
+    "stream_gopher_gate" ->
       // survivors of the 20-threshold gate: same chains, NOT(any)
-      val th = operators.TextAnalysis.GopherGateThresholds.toMap
-      val fAny = th.keys.toSeq.sorted.map(n => s"$n > ${th(n)}")
-        .mkString("(", " OR ", ")")
       (s"""WITH $qualCorpusCte, ${linedCtesFrom("qd")},
          |$gopherProfileCtes, $dupMassCtes, $qualProfileCtes
          |SELECT r.doc_id, d.source
          |FROM rep_profile r JOIN dng g ON g.doc_id = r.doc_id
          |JOIN qprof q ON q.doc_id = r.doc_id
          |JOIN documents d ON d.doc_id = r.doc_id
-         |WHERE NOT ($fAny OR $qualAnySql)""").stripMargin.replace("\n", " ")
-    },
+         |WHERE NOT ($repAnySql OR $qualAnySql)""").stripMargin.replace("\n", " "),
     "docs_gopher_quality" ->
       // the 7 quality metrics straight off the qprof chain
       (s"""WITH $qualCorpusCte, ${linedCtesFrom("qd")}, $qualProfileCtes
@@ -3437,9 +3609,7 @@ private[graft] object OracleSql {
          |FROM j GROUP BY 1""").stripMargin.replace("\n", " ")
     },
     "text_source_stats" ->
-      """WITH t2 AS (SELECT source, text,
-        |  list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS toks
-        | FROM documents),
+      s"""WITH ${toksCteAs("t2", "source, text")},
         |s AS (SELECT source,
         | CAST(length(text) AS BIGINT) AS n_chars,
         | CAST(len(toks) AS BIGINT) AS n_tokens,
@@ -3487,13 +3657,8 @@ private[graft] object OracleSql {
           | SELECT id_a AS doc_id, jaccard AS score, false AS is_junior
           |  FROM verified
           | UNION ALL SELECT id_b, jaccard, true FROM verified),
-          |perdoc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_dupes,
-          |  max(score) AS max_score, bool_or(is_junior) AS dominated
-          | FROM sides GROUP BY 1)
-          |SELECT d.doc_id, coalesce(p.n_dupes, 0) AS n_dupes,
-          | coalesce(p.max_score, 0.0) AS max_score,
-          | coalesce(NOT p.dominated, true) AS keep
-          |FROM documents d LEFT JOIN perdoc p USING (doc_id)""")
+          |$dupPerdocCte
+          |${dupKeepSql()}""")
         .stripMargin.replace("\n", " "),
     "dedup_exact_jaccard_pairs" ->
       // the EXHAUSTIVE definition, no prefix rule: every sharing
@@ -3625,20 +3790,7 @@ private[graft] object OracleSql {
       // assignment, live/dead counts per cell (dead = the tombstoned
       // vec_id % 7 == 3 set), rewrite at rounded dead_frac > 0.14
       (s"""WITH ${ivfCentsCtes("")},
-          |assigned AS (SELECT vec_id, cell FROM (
-          | SELECT e.vec_id, c.cell, row_number() OVER (
-          |   PARTITION BY e.vec_id ORDER BY
-          |   list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-          |     CAST(c.embedding AS DOUBLE[])) DESC, c.cell) AS rn
-          | FROM embeddings e, cents c) x WHERE rn = 1),
-          |pc AS (SELECT cell, count(*) AS n_vecs,
-          |  sum(CASE WHEN vec_id % 7 = 3 THEN 1 ELSE 0 END) AS n_dead
-          | FROM assigned GROUP BY 1),
-          |filled AS (SELECT s.cell,
-          |  CAST(coalesce(pc.n_vecs, 0) AS BIGINT) AS n_vecs,
-          |  CAST(coalesce(pc.n_dead, 0) AS BIGINT) AS n_dead
-          | FROM (SELECT unnest(generate_series(0, 15)) AS cell) s
-          | LEFT JOIN pc USING (cell))
+          |$ivfCellDeadCtes
           |SELECT CAST(cell AS INT) AS cell, n_vecs, n_dead,
           | round(CASE WHEN n_vecs > 0
           |  THEN CAST(n_dead AS DOUBLE) / n_vecs ELSE 0.0 END, 6)
@@ -3651,20 +3803,7 @@ private[graft] object OracleSql {
       // the maintenance decision table replayed: compact-plan
       // arithmetic + per-cell balance + the two action columns
       (s"""WITH ${ivfCentsCtes("")},
-          |assigned AS (SELECT vec_id, cell FROM (
-          | SELECT e.vec_id, c.cell, row_number() OVER (
-          |   PARTITION BY e.vec_id ORDER BY
-          |   list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-          |     CAST(c.embedding AS DOUBLE[])) DESC, c.cell) AS rn
-          | FROM embeddings e, cents c) x WHERE rn = 1),
-          |pc AS (SELECT cell, count(*) AS n_vecs,
-          |  sum(CASE WHEN vec_id % 7 = 3 THEN 1 ELSE 0 END) AS n_dead
-          | FROM assigned GROUP BY 1),
-          |filled AS (SELECT s.cell,
-          |  CAST(coalesce(pc.n_vecs, 0) AS BIGINT) AS n_vecs,
-          |  CAST(coalesce(pc.n_dead, 0) AS BIGINT) AS n_dead
-          | FROM (SELECT unnest(generate_series(0, 15)) AS cell) s
-          | LEFT JOIN pc USING (cell)),
+          |$ivfCellDeadCtes,
           |tt AS (SELECT CAST(sum(n_vecs) AS BIGINT) AS total FROM filled),
           |hb AS (SELECT max(round(CASE WHEN tt.total > 0
           |  THEN CAST(f.n_vecs AS DOUBLE) * 16 / tt.total
@@ -3686,11 +3825,7 @@ private[graft] object OracleSql {
       // the cell-balance diagnostic over the same replayed pick
       (s"""WITH ${ivfCentsCtes("")},
           |assigned AS (SELECT vec_id, cell FROM (
-          | SELECT e.vec_id, c.cell, row_number() OVER (
-          |   PARTITION BY e.vec_id ORDER BY
-          |   list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-          |     CAST(c.embedding AS DOUBLE[])) DESC, c.cell) AS rn
-          | FROM embeddings e, cents c) x WHERE rn = 1),
+          | ${ivfRankSql("cents")}) x WHERE rn = 1),
           |filled AS (SELECT s.cell,
           |  CAST(coalesce(n.n_vecs, 0) AS BIGINT) AS n_vecs
           | FROM (SELECT unnest(generate_series(0, 15)) AS cell) s
@@ -3707,12 +3842,8 @@ private[graft] object OracleSql {
       // the standard pair-summary tail
       (s"""WITH ${hyperplaneSigCte(8, 8, 11L)},
           |${hyperplanePairsCte(0.9)},
-          |sides AS (SELECT id_a AS doc_id, cosine AS score,
-          |  false AS is_junior FROM verified
-          | UNION ALL SELECT id_b, cosine, true FROM verified),
-          |perdoc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_dupes,
-          |  max(score) AS max_score, bool_or(is_junior) AS dominated
-          | FROM sides GROUP BY 1)
+          |${dupSidesCte("cosine")},
+          |$dupPerdocCte
           |SELECT e.vec_id AS doc_id, coalesce(p.n_dupes, 0) AS n_dupes,
           | coalesce(p.max_score, 0.0) AS max_score,
           | coalesce(NOT p.dominated, true) AS keep
@@ -3872,14 +4003,7 @@ private[graft] object OracleSql {
       // the same recursive-reachability tail as dedup_groups_blocked,
       // fed by minhashVerifiedCtes instead of the blocked trunk
       (s"""WITH RECURSIVE $minhashVerifiedCtes,
-          |e AS (SELECT id_a AS src, id_b AS dst FROM verified
-          | UNION ALL SELECT id_b AS src, id_a AS dst FROM verified),
-          |reach AS (SELECT doc_id, doc_id AS r FROM documents
-          | UNION
-          | SELECT reach.doc_id, e.dst AS r
-          | FROM reach JOIN e ON e.src = reach.r),
-          |lab AS (SELECT doc_id, min(r) AS group_id
-          | FROM reach GROUP BY doc_id)
+          |${minLabelCtes("verified")}
           |SELECT doc_id, group_id, doc_id = group_id AS keep
           |FROM lab""").stripMargin.replace("\n", " "),
     "dedup_exact_report" ->
@@ -4183,7 +4307,7 @@ private[graft] object OracleSql {
     "mm_dedup_groups" ->
       // the blob pair relation + the shared recursive reachability
       // closure (dedup_groups_blocked / dedup_embedding_groups shape)
-      """WITH RECURSIVE f AS (SELECT doc_id,
+      s"""WITH RECURSIVE f AS (SELECT doc_id,
         |  md5(substr(text, i * 128 + 1, 64)) AS fmd5
         |  FROM documents, LATERAL (SELECT unnest(generate_series(0,
         |   greatest((length(text) - 1) // 128, 0))) AS i) g),
@@ -4197,14 +4321,7 @@ private[graft] object OracleSql {
         |  JOIN sz sa ON sa.doc_id = sh.id_a
         |  JOIN sz sb ON sb.doc_id = sh.id_b
         |  WHERE n_shared * 1.0 / (sa.n + sb.n - n_shared) >= 0.3),
-        |e AS (SELECT id_a AS src, id_b AS dst FROM m
-        |  UNION ALL SELECT id_b AS src, id_a AS dst FROM m),
-        |reach AS (SELECT doc_id, doc_id AS r FROM documents
-        |  UNION
-        |  SELECT reach.doc_id, e.dst AS r
-        |  FROM reach JOIN e ON e.src = reach.r),
-        |lab AS (SELECT doc_id, min(r) AS group_id
-        |  FROM reach GROUP BY doc_id)
+        |${minLabelCtes("m", p = "  ")}
         |SELECT doc_id, group_id, doc_id = group_id AS keep
         |FROM lab""".stripMargin.replace("\n", " "),
     "mm_pooled_topk" ->
@@ -4218,15 +4335,11 @@ private[graft] object OracleSql {
       // double-accumulating cosine. ord()==byte because the corpus is
       // pure ASCII (asserted at all SFs; the other mm oracles already
       // lean on char-index == byte-offset).
-      """WITH f AS (SELECT doc_id, substr(text, i * 128 + 1, 64) AS frame
+      s"""WITH f AS (SELECT doc_id, substr(text, i * 128 + 1, 64) AS frame
         |  FROM documents, LATERAL (SELECT unnest(generate_series(0,
         |   greatest((length(text) - 1) // 128, 0))) AS i) g),
         |d AS (SELECT doc_id,
-        |  list_reduce(list_prepend(CAST(14695981039346656037 AS HUGEINT),
-        |    list_transform(range(1, length(frame) + 1),
-        |      i -> CAST(ord(substr(frame, i, 1)) AS HUGEINT))),
-        |    (h, b) -> ((h - (h % 256)) + xor(CAST(h % 256 AS BIGINT),
-        |      CAST(b AS BIGINT))) * 1099511628211 % 18446744073709551616) AS h,
+        |  ${fnv1aSql("frame", j = "i", p = "    ", pp = "      ")} AS h,
         |  CASE WHEN length(frame) = 0 THEN 0.0 ELSE
         |    CAST(list_sum(list_transform(range(1, length(frame) + 1),
         |      i -> ord(substr(frame, i, 1)))) AS DOUBLE) / length(frame)
@@ -4352,16 +4465,7 @@ private[graft] object OracleSql {
       // channel means over the FNV pixels, summed over the 4×4 grid —
       // the Spark side's decode→average→encode→decode chain must
       // return exactly these integers (PNG lossless both ways)
-      """WITH px AS (SELECT doc_id, i,
-        | list_reduce(list_prepend(CAST(14695981039346656037 AS HUGEINT),
-        |   list_transform(range(1, length(s) + 1),
-        |     j -> CAST(ord(substr(s, j, 1)) AS HUGEINT))),
-        |   (h, b) -> ((h - (h % 256)) + xor(CAST(h % 256 AS BIGINT),
-        |     CAST(b AS BIGINT))) * 1099511628211 % 18446744073709551616) AS h
-        | FROM (SELECT doc_id, i,
-        |   CAST(doc_id AS VARCHAR) || ':' || CAST(i AS VARCHAR) AS s
-        |  FROM documents, LATERAL (SELECT unnest(generate_series(0, 63))
-        |   AS i) g) t),
+      s"""WITH ${sampleHashCte("px", "doc_id, i")},
         |c AS (SELECT doc_id, i,
         |  CAST((h // 256) % 256 AS BIGINT) AS r,
         |  CAST((h // 65536) % 256 AS BIGINT) AS g,
@@ -4382,16 +4486,7 @@ private[graft] object OracleSql {
       // mm_pooled_topk HUGEINT fold over the ASCII bytes), and PNG's
       // losslessness means the Spark side's real encode→decode round
       // trip must return exactly these integers
-      """WITH px AS (SELECT doc_id,
-        | list_reduce(list_prepend(CAST(14695981039346656037 AS HUGEINT),
-        |   list_transform(range(1, length(s) + 1),
-        |     j -> CAST(ord(substr(s, j, 1)) AS HUGEINT))),
-        |   (h, b) -> ((h - (h % 256)) + xor(CAST(h % 256 AS BIGINT),
-        |     CAST(b AS BIGINT))) * 1099511628211 % 18446744073709551616) AS h
-        | FROM (SELECT doc_id,
-        |   CAST(doc_id AS VARCHAR) || ':' || CAST(i AS VARCHAR) AS s
-        |  FROM documents, LATERAL (SELECT unnest(generate_series(0, 63))
-        |   AS i) g) t)
+      s"""WITH ${sampleHashCte("px", "doc_id")}
         |SELECT doc_id, CAST(8 AS INTEGER) AS width,
         | CAST(8 AS INTEGER) AS height,
         | CAST(sum((h // 256) % 256) AS BIGINT) AS sum_r,
@@ -4414,14 +4509,7 @@ private[graft] object OracleSql {
          |pp AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
          | FROM sig a JOIN sig b ON a.doc_id < b.doc_id
          | WHERE bit_count(xor(a.dhash, b.dhash)) <= 6),
-         |e AS (SELECT id_a AS src, id_b AS dst FROM pp
-         | UNION ALL SELECT id_b AS src, id_a AS dst FROM pp),
-         |reach AS (SELECT doc_id, doc_id AS r FROM documents
-         | UNION
-         | SELECT reach.doc_id, e.dst AS r
-         | FROM reach JOIN e ON e.src = reach.r),
-         |lab AS (SELECT doc_id, min(r) AS group_id
-         | FROM reach GROUP BY doc_id)
+         |${minLabelCtes("pp")}
          |SELECT doc_id, group_id, doc_id = group_id AS keep
          |FROM lab""").stripMargin.replace("\n", " "),
     "mm_phash_keep_best" ->
@@ -4434,14 +4522,7 @@ private[graft] object OracleSql {
          |pp AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
          | FROM sig a JOIN sig b ON a.doc_id < b.doc_id
          | WHERE bit_count(xor(a.dhash, b.dhash)) <= 6),
-         |e AS (SELECT id_a AS src, id_b AS dst FROM pp
-         | UNION ALL SELECT id_b AS src, id_a AS dst FROM pp),
-         |reach AS (SELECT doc_id, doc_id AS r FROM documents
-         | UNION
-         | SELECT reach.doc_id, e.dst AS r
-         | FROM reach JOIN e ON e.src = reach.r),
-         |lab AS (SELECT doc_id, min(r) AS group_id
-         | FROM reach GROUP BY doc_id),
+         |${minLabelCtes("pp")},
          |rk AS (SELECT doc_id, group_id, rank_key,
          |  row_number() OVER (PARTITION BY group_id
          |    ORDER BY rank_key DESC, doc_id) AS rn
@@ -4462,20 +4543,7 @@ private[graft] object OracleSql {
         |p AS (SELECT nd.doc_id, st.store_id,
         |  CAST(bit_count(xor(nd.dhash, st.dhash)) AS INTEGER) AS hamming
         | FROM nd JOIN st ON bit_count(xor(nd.dhash, st.dhash)) <= 6),
-        |b AS (SELECT doc_id, store_id, hamming, row_number() OVER
-        |  (PARTITION BY doc_id ORDER BY hamming, store_id) AS rn FROM p),
-        |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matches,
-        |  CAST(max(CASE WHEN rn = 1 THEN store_id END) AS BIGINT)
-        |   AS match_id,
-        |  CAST(max(CASE WHEN rn = 1 THEN hamming END) AS INTEGER)
-        |   AS best_hamming
-        | FROM b GROUP BY 1)
-        |SELECT nd.doc_id,
-        | CAST(coalesce(a.n_matches, 0) AS BIGINT) AS n_matches,
-        | CAST(coalesce(a.match_id, -1) AS BIGINT) AS match_id,
-        | CAST(coalesce(a.best_hamming, -1) AS INTEGER) AS best_hamming,
-        | coalesce(a.n_matches, 0) = 0 AS keep
-        |FROM nd LEFT JOIN agg a USING (doc_id)""").stripMargin
+        |$storeMatchSql""").stripMargin
         .replace("\n", " "),
     "mm_phash_dedup" ->
       // per-blob summary tail: the keep decision over the same
@@ -4486,16 +4554,9 @@ private[graft] object OracleSql {
         |  56 - bit_count(xor(a.dhash, b.dhash)) AS sim
         | FROM sig a JOIN sig b ON a.doc_id < b.doc_id
         | WHERE bit_count(xor(a.dhash, b.dhash)) <= 6),
-        |sides AS (SELECT id_a AS doc_id, CAST(sim AS DOUBLE) AS score,
-        |  false AS is_junior FROM verified
-        | UNION ALL SELECT id_b, CAST(sim AS DOUBLE), true FROM verified),
-        |perdoc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_dupes,
-        |  max(score) AS max_score, bool_or(is_junior) AS dominated
-        | FROM sides GROUP BY 1)
-        |SELECT d.doc_id, coalesce(p.n_dupes, 0) AS n_dupes,
-        | coalesce(p.max_score, 0.0) AS max_score,
-        | coalesce(NOT p.dominated, true) AS keep
-        |FROM documents d LEFT JOIN perdoc p USING (doc_id)""").stripMargin
+        |${dupSidesCte("CAST(sim AS DOUBLE)")},
+        |$dupPerdocCte
+        |${dupKeepSql()}""").stripMargin
         .replace("\n", " "),
     "mm_audio_sig_pairs" ->
       // exhaustive all-pairs definition, no candidate rule: the
@@ -4515,16 +4576,9 @@ private[graft] object OracleSql {
          |  63 - bit_count(xor(a.asig, b.asig)) AS sim
          | FROM asg a JOIN asg b ON a.doc_id < b.doc_id
          | WHERE bit_count(xor(a.asig, b.asig)) <= 6),
-         |sides AS (SELECT id_a AS doc_id, CAST(sim AS DOUBLE) AS score,
-         |  false AS is_junior FROM verified
-         | UNION ALL SELECT id_b, CAST(sim AS DOUBLE), true FROM verified),
-         |perdoc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_dupes,
-         |  max(score) AS max_score, bool_or(is_junior) AS dominated
-         | FROM sides GROUP BY 1)
-         |SELECT d.doc_id, coalesce(p.n_dupes, 0) AS n_dupes,
-         | coalesce(p.max_score, 0.0) AS max_score,
-         | coalesce(NOT p.dominated, true) AS keep
-         |FROM documents d LEFT JOIN perdoc p USING (doc_id)""")
+         |${dupSidesCte("CAST(sim AS DOUBLE)")},
+         |$dupPerdocCte
+         |${dupKeepSql()}""")
         .stripMargin.replace("\n", " "),
     "mm_audio_sig_groups" ->
       // recursive reachability closure over the exhaustive pair
@@ -4533,14 +4587,7 @@ private[graft] object OracleSql {
          |pp AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
          | FROM asg a JOIN asg b ON a.doc_id < b.doc_id
          | WHERE bit_count(xor(a.asig, b.asig)) <= 6),
-         |e AS (SELECT id_a AS src, id_b AS dst FROM pp
-         | UNION ALL SELECT id_b AS src, id_a AS dst FROM pp),
-         |reach AS (SELECT doc_id, doc_id AS r FROM documents
-         | UNION
-         | SELECT reach.doc_id, e.dst AS r
-         | FROM reach JOIN e ON e.src = reach.r),
-         |lab AS (SELECT doc_id, min(r) AS group_id
-         | FROM reach GROUP BY doc_id)
+         |${minLabelCtes("pp")}
          |SELECT doc_id, group_id, doc_id = group_id AS keep
          |FROM lab""").stripMargin.replace("\n", " "),
     "mm_audio_keep_best" ->
@@ -4553,14 +4600,7 @@ private[graft] object OracleSql {
          |pp AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
          | FROM asg a JOIN asg b ON a.doc_id < b.doc_id
          | WHERE bit_count(xor(a.asig, b.asig)) <= 6),
-         |e AS (SELECT id_a AS src, id_b AS dst FROM pp
-         | UNION ALL SELECT id_b AS src, id_a AS dst FROM pp),
-         |reach AS (SELECT doc_id, doc_id AS r FROM documents
-         | UNION
-         | SELECT reach.doc_id, e.dst AS r
-         | FROM reach JOIN e ON e.src = reach.r),
-         |lab AS (SELECT doc_id, min(r) AS group_id
-         | FROM reach GROUP BY doc_id),
+         |${minLabelCtes("pp")},
          |rk AS (SELECT doc_id, group_id, rank_key,
          |  row_number() OVER (PARTITION BY group_id
          |    ORDER BY rank_key DESC, doc_id) AS rn
@@ -4591,17 +4631,9 @@ private[graft] object OracleSql {
          |  CAST(count(*) AS DOUBLE) AS sim
          | FROM wpair
          | GROUP BY 1, 2),
-         |sides AS (SELECT id_a AS doc_id, sim AS score,
-         |  false AS is_junior FROM verified
-         | UNION ALL SELECT id_b, sim, true FROM verified),
-         |perdoc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_dupes,
-         |  max(score) AS max_score, bool_or(is_junior) AS dominated
-         | FROM sides GROUP BY 1)
-         |SELECT d.doc_id, coalesce(p.n_dupes, 0) AS n_dupes,
-         | coalesce(p.max_score, 0.0) AS max_score,
-         | coalesce(NOT p.dominated, true) AS keep
-         |FROM (SELECT DISTINCT doc_id FROM wsg) d
-         |LEFT JOIN perdoc p USING (doc_id)""").stripMargin
+         |${dupSidesCte("sim")},
+         |$dupPerdocCte
+         |${dupKeepSql("(SELECT DISTINCT doc_id FROM wsg) d")}""").stripMargin
         .replace("\n", " "),
     "mm_audio_winnow_groups" ->
       // recursive reachability closure over the exact-match
@@ -4609,14 +4641,7 @@ private[graft] object OracleSql {
       // guard); label = min reachable id
       (s"""WITH RECURSIVE $audioWinnowCtes, $audioWinnowPairCte,
          |pp AS (SELECT DISTINCT id_a, id_b FROM wpair),
-         |e AS (SELECT id_a AS src, id_b AS dst FROM pp
-         | UNION ALL SELECT id_b AS src, id_a AS dst FROM pp),
-         |reach AS (SELECT doc_id, doc_id AS r FROM documents
-         | UNION
-         | SELECT reach.doc_id, e.dst AS r
-         | FROM reach JOIN e ON e.src = reach.r),
-         |lab AS (SELECT doc_id, min(r) AS group_id
-         | FROM reach GROUP BY doc_id)
+         |${minLabelCtes("pp")}
          |SELECT doc_id, group_id, doc_id = group_id AS keep
          |FROM lab""").stripMargin.replace("\n", " "),
     "mm_audio_winnow_keep_best" ->
@@ -4626,14 +4651,7 @@ private[graft] object OracleSql {
       // the ordering itself is oracle-covered, ties to min id
       (s"""WITH RECURSIVE $audioWinnowCtes, $audioWinnowPairCte,
          |pp AS (SELECT DISTINCT id_a, id_b FROM wpair),
-         |e AS (SELECT id_a AS src, id_b AS dst FROM pp
-         | UNION ALL SELECT id_b AS src, id_a AS dst FROM pp),
-         |reach AS (SELECT doc_id, doc_id AS r FROM documents
-         | UNION
-         | SELECT reach.doc_id, e.dst AS r
-         | FROM reach JOIN e ON e.src = reach.r),
-         |lab AS (SELECT doc_id, min(r) AS group_id
-         | FROM reach GROUP BY doc_id)
+         |${minLabelCtes("pp")}
          |SELECT l.doc_id, l.group_id,
          | CAST(w.n AS BIGINT) AS rank_key,
          | (row_number() OVER (PARTITION BY l.group_id
@@ -4653,30 +4671,15 @@ private[graft] object OracleSql {
          |verified AS (SELECT id_a, id_b,
          |  CAST(count(*) AS DOUBLE) AS sim
          | FROM ipair GROUP BY 1, 2),
-         |sides AS (SELECT id_a AS doc_id, sim AS score,
-         |  false AS is_junior FROM verified
-         | UNION ALL SELECT id_b, sim, true FROM verified),
-         |perdoc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_dupes,
-         |  max(score) AS max_score, bool_or(is_junior) AS dominated
-         | FROM sides GROUP BY 1)
-         |SELECT d.doc_id, coalesce(p.n_dupes, 0) AS n_dupes,
-         | coalesce(p.max_score, 0.0) AS max_score,
-         | coalesce(NOT p.dominated, true) AS keep
-         |FROM (SELECT DISTINCT doc_id FROM iwsg) d
-         |LEFT JOIN perdoc p USING (doc_id)""").stripMargin
+         |${dupSidesCte("sim")},
+         |$dupPerdocCte
+         |${dupKeepSql("(SELECT DISTINCT doc_id FROM iwsg) d")}""").stripMargin
         .replace("\n", " "),
     "mm_phash_winnow_groups" ->
       // recursive reachability closure over the crop pair relation
       (s"""WITH RECURSIVE $imageWinnowCtes,
          |pp AS (SELECT DISTINCT id_a, id_b FROM ipair),
-         |e AS (SELECT id_a AS src, id_b AS dst FROM pp
-         | UNION ALL SELECT id_b AS src, id_a AS dst FROM pp),
-         |reach AS (SELECT doc_id, doc_id AS r FROM documents
-         | UNION
-         | SELECT reach.doc_id, e.dst AS r
-         | FROM reach JOIN e ON e.src = reach.r),
-         |lab AS (SELECT doc_id, min(r) AS group_id
-         | FROM reach GROUP BY doc_id)
+         |${minLabelCtes("pp")}
          |SELECT doc_id, group_id, doc_id = group_id AS keep
          |FROM lab""").stripMargin.replace("\n", " "),
     "mm_phash_winnow_keep_best" ->
@@ -4687,14 +4690,7 @@ private[graft] object OracleSql {
       // oracle-covered, ties to min id
       (s"""WITH RECURSIVE $imageWinnowCtes,
          |pp AS (SELECT DISTINCT id_a, id_b FROM ipair),
-         |e AS (SELECT id_a AS src, id_b AS dst FROM pp
-         | UNION ALL SELECT id_b AS src, id_a AS dst FROM pp),
-         |reach AS (SELECT doc_id, doc_id AS r FROM documents
-         | UNION
-         | SELECT reach.doc_id, e.dst AS r
-         | FROM reach JOIN e ON e.src = reach.r),
-         |lab AS (SELECT doc_id, min(r) AS group_id
-         | FROM reach GROUP BY doc_id),
+         |${minLabelCtes("pp")},
          |iwn AS (SELECT DISTINCT doc_id,
          |  CAST(w AS BIGINT) * w AS px FROM iw0)
          |SELECT l.doc_id, l.group_id, iwn.px AS rank_key,
@@ -4754,20 +4750,7 @@ private[graft] object OracleSql {
         |p AS (SELECT nd.doc_id, st.store_id,
         |  CAST(bit_count(xor(nd.asig, st.asig)) AS INTEGER) AS hamming
         | FROM nd JOIN st ON bit_count(xor(nd.asig, st.asig)) <= 6),
-        |b AS (SELECT doc_id, store_id, hamming, row_number() OVER
-        |  (PARTITION BY doc_id ORDER BY hamming, store_id) AS rn FROM p),
-        |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matches,
-        |  CAST(max(CASE WHEN rn = 1 THEN store_id END) AS BIGINT)
-        |   AS match_id,
-        |  CAST(max(CASE WHEN rn = 1 THEN hamming END) AS INTEGER)
-        |   AS best_hamming
-        | FROM b GROUP BY 1)
-        |SELECT nd.doc_id,
-        | CAST(coalesce(a.n_matches, 0) AS BIGINT) AS n_matches,
-        | CAST(coalesce(a.match_id, -1) AS BIGINT) AS match_id,
-        | CAST(coalesce(a.best_hamming, -1) AS INTEGER) AS best_hamming,
-        | coalesce(a.n_matches, 0) = 0 AS keep
-        |FROM nd LEFT JOIN agg a USING (doc_id)""").stripMargin
+        |$storeMatchSql""").stripMargin
         .replace("\n", " "),
     "mm_decode_wav" ->
       // replay of the synthesized SAMPLES, never the codec: sample i
@@ -4775,16 +4758,7 @@ private[graft] object OracleSql {
       // (same HUGEINT fold as mm_decode_png), and PCM WAV's
       // losslessness means the Spark side's real encode→decode round
       // trip must return exactly these integers
-      """WITH sm AS (SELECT doc_id,
-        | list_reduce(list_prepend(CAST(14695981039346656037 AS HUGEINT),
-        |   list_transform(range(1, length(s) + 1),
-        |     j -> CAST(ord(substr(s, j, 1)) AS HUGEINT))),
-        |   (h, b) -> ((h - (h % 256)) + xor(CAST(h % 256 AS BIGINT),
-        |     CAST(b AS BIGINT))) * 1099511628211 % 18446744073709551616) AS h
-        | FROM (SELECT doc_id,
-        |   CAST(doc_id AS VARCHAR) || ':' || CAST(i AS VARCHAR) AS s
-        |  FROM documents, LATERAL (SELECT unnest(generate_series(0, 63))
-        |   AS i) g) t),
+      s"""WITH ${sampleHashCte("sm", "doc_id")},
         |v AS (SELECT doc_id,
         |  CASE WHEN (h // 256) % 65536 >= 32768
         |   THEN (h // 256) % 65536 - 65536
@@ -4800,16 +4774,7 @@ private[graft] object OracleSql {
       // the resample replayed from the sample recipe: keep i % 2 = 0,
       // half the rate — the Spark side's decode→decimate→encode→
       // decode chain must return exactly these integers
-      """WITH sm AS (SELECT doc_id, i,
-        | list_reduce(list_prepend(CAST(14695981039346656037 AS HUGEINT),
-        |   list_transform(range(1, length(s) + 1),
-        |     j -> CAST(ord(substr(s, j, 1)) AS HUGEINT))),
-        |   (h, b) -> ((h - (h % 256)) + xor(CAST(h % 256 AS BIGINT),
-        |     CAST(b AS BIGINT))) * 1099511628211 % 18446744073709551616) AS h
-        | FROM (SELECT doc_id, i,
-        |   CAST(doc_id AS VARCHAR) || ':' || CAST(i AS VARCHAR) AS s
-        |  FROM documents, LATERAL (SELECT unnest(generate_series(0, 63))
-        |   AS i) g) t),
+      s"""WITH ${sampleHashCte("sm", "doc_id, i")},
         |v AS (SELECT doc_id,
         |  CASE WHEN (h // 256) % 65536 >= 32768
         |   THEN (h // 256) % 65536 - 65536
@@ -4826,16 +4791,7 @@ private[graft] object OracleSql {
       // kept for the lag-based zero-crossing count; Σv² is an exact
       // long and rms one sqrt of one exact division, so even the
       // float column is bit-stable
-      """WITH sm AS (SELECT doc_id, i,
-        | list_reduce(list_prepend(CAST(14695981039346656037 AS HUGEINT),
-        |   list_transform(range(1, length(s) + 1),
-        |     j -> CAST(ord(substr(s, j, 1)) AS HUGEINT))),
-        |   (h, b) -> ((h - (h % 256)) + xor(CAST(h % 256 AS BIGINT),
-        |     CAST(b AS BIGINT))) * 1099511628211 % 18446744073709551616) AS h
-        | FROM (SELECT doc_id, i,
-        |   CAST(doc_id AS VARCHAR) || ':' || CAST(i AS VARCHAR) AS s
-        |  FROM documents, LATERAL (SELECT unnest(generate_series(0, 63))
-        |   AS i) g) t),
+      s"""WITH ${sampleHashCte("sm", "doc_id, i")},
         |v AS (SELECT doc_id, i,
         |  CAST(CASE WHEN (h // 256) % 65536 >= 32768
         |   THEN (h // 256) % 65536 - 65536
@@ -5092,27 +5048,7 @@ private[graft] object OracleSql {
         |FROM events JOIN customer ON user_id = c_custkey
         |GROUP BY 1, 2""".stripMargin.replace("\n", " "),
     "docs_curate" ->
-      """WITH t AS (SELECT doc_id, text,
-        |  list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS toks
-        | FROM documents),
-        |q AS (SELECT doc_id FROM (SELECT doc_id,
-        |  CAST(len(toks) AS BIGINT) AS n_tokens,
-        |  least(1.0, len(toks) / 128.0)
-        |   * (1.0 - least(1.0, ((length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g'))) / greatest(length(text), 1)) * 4.0))
-        |   * (0.3 + 0.7 * least(1.0, (len(list_filter(toks, x -> x IN ('the','a','and','of','to','in','is','it','for','on'))) / greatest(len(toks), 1)) * 5.0))
-        |   AS quality_score FROM t) s
-        | WHERE n_tokens >= 20 AND n_tokens <= 100000 AND quality_score >= 0.2),
-        |dd AS (SELECT min(doc_id) AS doc_id FROM (SELECT doc_id,
-        |  trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS norm
-        |  FROM documents WHERE doc_id IN (SELECT doc_id FROM q)) n GROUP BY norm),
-        |g AS (SELECT doc_id, unnest(list_distinct(CASE WHEN len(toks) >= 3
-        |  THEN list_transform(range(1, len(toks) - 1),
-        |   i -> array_to_string(toks[i:i+2], ' '))
-        |  ELSE CAST([] AS VARCHAR[]) END)) AS gram FROM t),
-        |bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 97 = 0),
-        |cont AS (SELECT DISTINCT c.doc_id FROM
-        |  (SELECT doc_id, gram FROM g WHERE doc_id % 97 <> 0) c
-        |  JOIN bench USING (gram))
+      s"""WITH ${curateCtes("0.2", 97)}
         |SELECT d.doc_id, d.lang, d.source, d.n_chars FROM documents d
         |WHERE d.doc_id IN (SELECT doc_id FROM dd)
         | AND d.doc_id % 97 <> 0
@@ -5170,12 +5106,9 @@ private[graft] object OracleSql {
       // quality-order prefix under a global token budget; the doc
       // that crosses the line is kept (exclusive-cum < budget)
       (toksCte +
-        """, sc AS (SELECT doc_id,
+        s""", sc AS (SELECT doc_id,
           |  CAST(len(toks) AS BIGINT) AS n_tokens,
-          |  least(1.0, len(toks) / 128.0)
-          |   * (1.0 - least(1.0, ((length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g'))) / greatest(length(text), 1)) * 4.0))
-          |   * (0.3 + 0.7 * least(1.0, (len(list_filter(toks, x -> x IN ('the','a','and','of','to','in','is','it','for','on'))) / greatest(len(toks), 1)) * 5.0))
-          |   AS quality_score FROM t)
+          |  ${qualityScoreSql()} FROM t)
           |SELECT doc_id, n_tokens, quality_score FROM (
           | SELECT doc_id, n_tokens, quality_score,
           |  COALESCE(sum(n_tokens) OVER (ORDER BY quality_score DESC, doc_id
@@ -5190,9 +5123,6 @@ private[graft] object OracleSql {
       // and the corpus-duplication fraction vs the fixture-built
       // store. The LINED text is the corpus (t2/txt), so every rule
       // tokenizes the same stream the operator sees.
-      val th = operators.TextAnalysis.GopherGateThresholds.toMap
-      val fAny = th.keys.toSeq.sorted.map(n => s"$n > ${th(n)}")
-        .mkString("(", " OR ", ")")
       val tailSql = operators.TextAnalysis.GopherQualityStopWords.zipWithIndex
         .map { case (w, i) =>
           s"' $w s' || CAST(doc_id AS VARCHAR) || 'x$i'" }
@@ -5200,23 +5130,13 @@ private[graft] object OracleSql {
       (s"""WITH qd2 AS (SELECT doc_id, source,
           |  text || $tailSql AS text FROM documents),
           |${linedCtesFrom("qd2")},
-          |$gopherProfileCtes, $dupMassCtes, $qualProfileCtes,
-          |gflag AS (SELECT r.doc_id
-          | FROM rep_profile r JOIN dng gg ON gg.doc_id = r.doc_id
-          | JOIN qprof qq ON qq.doc_id = r.doc_id
-          | WHERE ($fAny OR $qualAnySql)),
+          |$gopherFlagCtes,
           |lt AS (SELECT t2.doc_id, txt.text, t2.toks
           | FROM t2 JOIN txt USING (doc_id)),
           |sc AS (SELECT doc_id,
           |  CAST(len(toks) AS BIGINT) AS n_tokens,
-          |  least(1.0, len(toks) / 128.0)
-          |   * (1.0 - least(1.0, ((length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g'))) / greatest(length(text), 1)) * 4.0))
-          |   * (0.3 + 0.7 * least(1.0, (len(list_filter(toks, x -> x IN ('the','a','and','of','to','in','is','it','for','on'))) / greatest(len(toks), 1)) * 5.0))
-          |   AS quality_score FROM lt),
-          |dgr AS (SELECT doc_id, unnest(list_distinct(CASE WHEN len(toks) >= 3
-          |  THEN list_transform(range(1, len(toks) - 1),
-          |   i -> array_to_string(toks[i:i+2], ' '))
-          |  ELSE CAST([] AS VARCHAR[]) END)) AS gram FROM lt),
+          |  ${qualityScoreSql()} FROM lt),
+          |dgr AS (SELECT doc_id, unnest(list_distinct($trigramsSql)) AS gram FROM lt),
           |dbench AS (SELECT DISTINCT gram FROM dgr WHERE doc_id % 97 = 0),
           |rtc AS (SELECT doc_id, CAST(list_sum(list_transform(toks,
           |  x -> length(x))) AS BIGINT) AS tok_chars FROM lt),
@@ -5251,16 +5171,10 @@ private[graft] object OracleSql {
       // the stateless curation prefix: quality band + benchmark-slice
       // exclusion + any-gram decontamination (no dedup stage)
       (toksCte +
-        """, sc AS (SELECT doc_id,
+        s""", sc AS (SELECT doc_id,
           |  CAST(len(toks) AS BIGINT) AS n_tokens,
-          |  least(1.0, len(toks) / 128.0)
-          |   * (1.0 - least(1.0, ((length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g'))) / greatest(length(text), 1)) * 4.0))
-          |   * (0.3 + 0.7 * least(1.0, (len(list_filter(toks, x -> x IN ('the','a','and','of','to','in','is','it','for','on'))) / greatest(len(toks), 1)) * 5.0))
-          |   AS quality_score FROM t),
-          |g AS (SELECT doc_id, unnest(list_distinct(CASE WHEN len(toks) >= 3
-          |  THEN list_transform(range(1, len(toks) - 1),
-          |   i -> array_to_string(toks[i:i+2], ' '))
-          |  ELSE CAST([] AS VARCHAR[]) END)) AS gram FROM t),
+          |  ${qualityScoreSql()} FROM t),
+          |g AS (SELECT doc_id, unnest(list_distinct($trigramsSql)) AS gram FROM t),
           |bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 97 = 0)
           |SELECT doc_id, n_tokens, quality_score FROM sc
           |WHERE n_tokens >= 20 AND n_tokens <= 100000 AND quality_score >= 0.2
@@ -5281,28 +5195,13 @@ private[graft] object OracleSql {
     "docs_curate_capped" ->
       // curate's survivor set, then the per-source quality cap —
       // same CTEs as docs_curate plus a scored rank over survivors
-      """WITH t AS (SELECT doc_id, text,
-        |  list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS toks
-        | FROM documents),
+      s"""WITH ${toksCteAs("t")},
         |sc AS (SELECT doc_id,
         |  CAST(len(toks) AS BIGINT) AS n_tokens,
-        |  least(1.0, len(toks) / 128.0)
-        |   * (1.0 - least(1.0, ((length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g'))) / greatest(length(text), 1)) * 4.0))
-        |   * (0.3 + 0.7 * least(1.0, (len(list_filter(toks, x -> x IN ('the','a','and','of','to','in','is','it','for','on'))) / greatest(len(toks), 1)) * 5.0))
-        |   AS quality_score FROM t),
+        |  ${qualityScoreSql()} FROM t),
         |q AS (SELECT doc_id FROM sc
         | WHERE n_tokens >= 20 AND n_tokens <= 100000 AND quality_score >= 0.2),
-        |dd AS (SELECT min(doc_id) AS doc_id FROM (SELECT doc_id,
-        |  trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS norm
-        |  FROM documents WHERE doc_id IN (SELECT doc_id FROM q)) n GROUP BY norm),
-        |g AS (SELECT doc_id, unnest(list_distinct(CASE WHEN len(toks) >= 3
-        |  THEN list_transform(range(1, len(toks) - 1),
-        |   i -> array_to_string(toks[i:i+2], ' '))
-        |  ELSE CAST([] AS VARCHAR[]) END)) AS gram FROM t),
-        |bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 97 = 0),
-        |cont AS (SELECT DISTINCT c.doc_id FROM
-        |  (SELECT doc_id, gram FROM g WHERE doc_id % 97 <> 0) c
-        |  JOIN bench USING (gram)),
+        |${curateDedupCtes(97)},
         |cur AS (SELECT d.doc_id, d.source FROM documents d
         | WHERE d.doc_id IN (SELECT doc_id FROM dd)
         |  AND d.doc_id % 97 <> 0
@@ -5315,27 +5214,7 @@ private[graft] object OracleSql {
         | FROM cur JOIN sc ON sc.doc_id = cur.doc_id) r
         |WHERE rank_in_source <= 10""".stripMargin.replace("\n", " "),
     "docs_curate_manifest" ->
-      """WITH t AS (SELECT doc_id, text,
-        |  list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS toks
-        | FROM documents),
-        |q AS (SELECT doc_id FROM (SELECT doc_id,
-        |  CAST(len(toks) AS BIGINT) AS n_tokens,
-        |  least(1.0, len(toks) / 128.0)
-        |   * (1.0 - least(1.0, ((length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g'))) / greatest(length(text), 1)) * 4.0))
-        |   * (0.3 + 0.7 * least(1.0, (len(list_filter(toks, x -> x IN ('the','a','and','of','to','in','is','it','for','on'))) / greatest(len(toks), 1)) * 5.0))
-        |   AS quality_score FROM t) s
-        | WHERE n_tokens >= 20 AND n_tokens <= 100000 AND quality_score >= 0.2),
-        |dd AS (SELECT min(doc_id) AS doc_id FROM (SELECT doc_id,
-        |  trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS norm
-        |  FROM documents WHERE doc_id IN (SELECT doc_id FROM q)) n GROUP BY norm),
-        |g AS (SELECT doc_id, unnest(list_distinct(CASE WHEN len(toks) >= 3
-        |  THEN list_transform(range(1, len(toks) - 1),
-        |   i -> array_to_string(toks[i:i+2], ' '))
-        |  ELSE CAST([] AS VARCHAR[]) END)) AS gram FROM t),
-        |bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 97 = 0),
-        |cont AS (SELECT DISTINCT c.doc_id FROM
-        |  (SELECT doc_id, gram FROM g WHERE doc_id % 97 <> 0) c
-        |  JOIN bench USING (gram))
+      s"""WITH ${curateCtes("0.2", 97)}
         |SELECT source,
         | CASE WHEN doc_id NOT IN (SELECT doc_id FROM q) THEN 'quality'
         |      WHEN doc_id NOT IN (SELECT doc_id FROM dd) THEN 'duplicate'
@@ -5345,25 +5224,15 @@ private[graft] object OracleSql {
         | count(*) AS n_docs
         |FROM documents GROUP BY 1, 2""".stripMargin.replace("\n", " "),
     "text_decontaminate" ->
-      """WITH t AS (SELECT doc_id,
-        |  list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS toks
-        | FROM documents),
-        |g AS (SELECT doc_id, unnest(list_distinct(CASE WHEN len(toks) >= 3
-        |  THEN list_transform(range(1, len(toks) - 1),
-        |   i -> array_to_string(toks[i:i+2], ' '))
-        |  ELSE CAST([] AS VARCHAR[]) END)) AS gram FROM t),
+      s"""WITH ${toksCteAs("t", "doc_id")},
+        |g AS (SELECT doc_id, unnest(list_distinct($trigramsSql)) AS gram FROM t),
         |bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 97 = 0),
         |corpus AS (SELECT doc_id, gram FROM g WHERE doc_id % 97 <> 0)
         |SELECT doc_id, count(*) AS n_overlap
         |FROM corpus JOIN bench USING (gram) GROUP BY 1""".stripMargin.replace("\n", " "),
     "docs_contamination_by_source" ->
-      """WITH t AS (SELECT doc_id,
-        |  list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS toks
-        | FROM documents),
-        |g AS (SELECT doc_id, unnest(list_distinct(CASE WHEN len(toks) >= 3
-        |  THEN list_transform(range(1, len(toks) - 1),
-        |   i -> array_to_string(toks[i:i+2], ' '))
-        |  ELSE CAST([] AS VARCHAR[]) END)) AS gram FROM t),
+      s"""WITH ${toksCteAs("t", "doc_id")},
+        |g AS (SELECT doc_id, unnest(list_distinct($trigramsSql)) AS gram FROM t),
         |bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 97 = 0),
         |corpus AS (SELECT doc_id, gram FROM g WHERE doc_id % 97 <> 0),
         |o AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_overlap
@@ -5432,27 +5301,7 @@ private[graft] object OracleSql {
     "docs_curate_mixture" ->
       // curate's survivor set (same CTE chain as docs_curate), then
       // the mixture rate derivation REPLAYED OVER THE CURATED COUNTS
-      """WITH t AS (SELECT doc_id, text,
-        |  list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS toks
-        | FROM documents),
-        |q AS (SELECT doc_id FROM (SELECT doc_id,
-        |  CAST(len(toks) AS BIGINT) AS n_tokens,
-        |  least(1.0, len(toks) / 128.0)
-        |   * (1.0 - least(1.0, ((length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g'))) / greatest(length(text), 1)) * 4.0))
-        |   * (0.3 + 0.7 * least(1.0, (len(list_filter(toks, x -> x IN ('the','a','and','of','to','in','is','it','for','on'))) / greatest(len(toks), 1)) * 5.0))
-        |   AS quality_score FROM t) s
-        | WHERE n_tokens >= 20 AND n_tokens <= 100000 AND quality_score >= 0.05),
-        |dd AS (SELECT min(doc_id) AS doc_id FROM (SELECT doc_id,
-        |  trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS norm
-        |  FROM documents WHERE doc_id IN (SELECT doc_id FROM q)) n GROUP BY norm),
-        |g AS (SELECT doc_id, unnest(list_distinct(CASE WHEN len(toks) >= 3
-        |  THEN list_transform(range(1, len(toks) - 1),
-        |   i -> array_to_string(toks[i:i+2], ' '))
-        |  ELSE CAST([] AS VARCHAR[]) END)) AS gram FROM t),
-        |bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 997 = 0),
-        |cont AS (SELECT DISTINCT c.doc_id FROM
-        |  (SELECT doc_id, gram FROM g WHERE doc_id % 997 <> 0) c
-        |  JOIN bench USING (gram)),
+      s"""WITH ${curateCtes("0.05", 997)},
         |cur AS (SELECT d.doc_id, d.source FROM documents d
         | WHERE d.doc_id IN (SELECT doc_id FROM dd)
         |  AND d.doc_id % 997 <> 0
@@ -5476,27 +5325,7 @@ private[graft] object OracleSql {
       // then the τ=1/2 temperature rate derivation REPLAYED OVER THE
       // CURATED COUNTS — sqrt(n_min/n) is a single correctly-rounded
       // IEEE op, so the rates (and the selected set) are engine-exact
-      """WITH t AS (SELECT doc_id, text,
-        |  list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS toks
-        | FROM documents),
-        |q AS (SELECT doc_id FROM (SELECT doc_id,
-        |  CAST(len(toks) AS BIGINT) AS n_tokens,
-        |  least(1.0, len(toks) / 128.0)
-        |   * (1.0 - least(1.0, ((length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g'))) / greatest(length(text), 1)) * 4.0))
-        |   * (0.3 + 0.7 * least(1.0, (len(list_filter(toks, x -> x IN ('the','a','and','of','to','in','is','it','for','on'))) / greatest(len(toks), 1)) * 5.0))
-        |   AS quality_score FROM t) s
-        | WHERE n_tokens >= 20 AND n_tokens <= 100000 AND quality_score >= 0.05),
-        |dd AS (SELECT min(doc_id) AS doc_id FROM (SELECT doc_id,
-        |  trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS norm
-        |  FROM documents WHERE doc_id IN (SELECT doc_id FROM q)) n GROUP BY norm),
-        |g AS (SELECT doc_id, unnest(list_distinct(CASE WHEN len(toks) >= 3
-        |  THEN list_transform(range(1, len(toks) - 1),
-        |   i -> array_to_string(toks[i:i+2], ' '))
-        |  ELSE CAST([] AS VARCHAR[]) END)) AS gram FROM t),
-        |bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 997 = 0),
-        |cont AS (SELECT DISTINCT c.doc_id FROM
-        |  (SELECT doc_id, gram FROM g WHERE doc_id % 997 <> 0) c
-        |  JOIN bench USING (gram)),
+      s"""WITH ${curateCtes("0.05", 997)},
         |cur AS (SELECT d.doc_id, d.source FROM documents d
         | WHERE d.doc_id IN (SELECT doc_id FROM dd)
         |  AND d.doc_id % 997 <> 0
@@ -5540,9 +5369,7 @@ private[graft] object OracleSql {
         |  ELSE printf('%08x', CAST(floor(r.rate * 4294967296.0) AS BIGINT)) END"""
         .stripMargin.replace("\n", " "),
     "text_chunk_dedup" ->
-      """WITH t AS (SELECT doc_id,
-        |  list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS toks
-        | FROM documents),
+      s"""WITH ${toksCteAs("t", "doc_id")},
         |c AS (SELECT doc_id, unnest(CASE WHEN len(toks) >= 8
         |  THEN list_transform(range(1, len(toks) - 6, 8),
         |   i -> md5(array_to_string(toks[i:i+7], ' ')))
@@ -5636,13 +5463,8 @@ private[graft] object OracleSql {
     "docs_ngram_diversity" ->
       // per-doc-distinct grams (the token_ngrams kernel's SQL
       // spelling twin); diversity = one division of two exact longs
-      """WITH t AS (SELECT doc_id,
-        |  list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS toks
-        | FROM documents),
-        |g AS (SELECT doc_id, unnest(list_distinct(CASE WHEN len(toks) >= 3
-        |  THEN list_transform(range(1, len(toks) - 1),
-        |   i -> array_to_string(toks[i:i+2], ' '))
-        |  ELSE CAST([] AS VARCHAR[]) END)) AS gram FROM t),
+      s"""WITH ${toksCteAs("t", "doc_id")},
+        |g AS (SELECT doc_id, unnest(list_distinct($trigramsSql)) AS gram FROM t),
         |j AS (SELECT d.source, g.doc_id, g.gram
         |  FROM g JOIN documents d USING (doc_id))
         |SELECT source, count(DISTINCT doc_id) AS n_docs,
@@ -5775,11 +5597,8 @@ private[graft] object OracleSql {
       // shared quality score (same expression as text_quality_filter),
       // capped per source: row_number twin of the bounded-heap agg
       (toksCte +
-        """, q AS (SELECT doc_id,
-          | least(1.0, len(toks) / 128.0)
-          |  * (1.0 - least(1.0, ((length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g'))) / greatest(length(text), 1)) * 4.0))
-          |  * (0.3 + 0.7 * least(1.0, (len(list_filter(toks, x -> x IN ('the','a','and','of','to','in','is','it','for','on'))) / greatest(len(toks), 1)) * 5.0))
-          |  AS quality_score
+        s""", q AS (SELECT doc_id,
+          | ${qualityScoreSql("  ")}
           | FROM t)
           |SELECT source, rank_in_source, doc_id, quality_score FROM (
           | SELECT d.source, d.doc_id, q.quality_score,
@@ -6079,32 +5898,15 @@ private[graft] object OracleSql {
     "dedup_blocked_suppress" ->
       // blocked pairs + quality domination: the beaten side of every
       // pair drops (tie → higher id drops)
-      """WITH t AS (SELECT doc_id, list_filter(
-        |  regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS toks
-        | FROM documents),
-        |g AS (SELECT doc_id, CASE WHEN len(toks) >= 3
-        |  THEN list_distinct(list_transform(range(1, len(toks) - 1),
-        |   i -> array_to_string(toks[i:i+2], ' ')))
-        |  ELSE CAST([] AS VARCHAR[]) END AS grams FROM t),
-        |inv AS (SELECT doc_id, unnest(grams) AS gram FROM g),
-        |d AS (SELECT gram, count(*) AS df FROM inv GROUP BY 1),
-        |p AS (SELECT a.doc_id AS id_a, c.doc_id AS id_b
-        |  FROM inv a JOIN d ON d.gram = a.gram JOIN inv c ON c.gram = a.gram
-        |  WHERE a.doc_id < c.doc_id AND d.df BETWEEN 2 AND 64
-        |  GROUP BY 1, 2 HAVING count(*) >= 3),
+      s"""WITH $blockedCandCtes,
         |j AS (SELECT p.id_a, p.id_b FROM p
         | JOIN g ga ON ga.doc_id = p.id_a JOIN g gb ON gb.doc_id = p.id_b
         | WHERE CAST(len(list_intersect(ga.grams, gb.grams)) AS DOUBLE)
         |  / (len(ga.grams) + len(gb.grams)
         |     - len(list_intersect(ga.grams, gb.grams))) >= 0.5),
-        |tq AS (SELECT doc_id, text,
-        |  list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS toks
-        | FROM documents),
+        |${toksCteAs("tq")},
         |sc AS (SELECT doc_id,
-        |  least(1.0, len(toks) / 128.0)
-        |   * (1.0 - least(1.0, ((length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g'))) / greatest(length(text), 1)) * 4.0))
-        |   * (0.3 + 0.7 * least(1.0, (len(list_filter(toks, x -> x IN ('the','a','and','of','to','in','is','it','for','on'))) / greatest(len(toks), 1)) * 5.0))
-        |   AS quality_score FROM tq),
+        |  ${qualityScoreSql()} FROM tq),
         |losers AS (SELECT DISTINCT
         |  CASE WHEN qa.quality_score < qb.quality_score THEN j.id_a
         |       WHEN qb.quality_score < qa.quality_score THEN j.id_b
@@ -6115,19 +5917,7 @@ private[graft] object OracleSql {
         |WHERE doc_id NOT IN (SELECT doc_id FROM losers)"""
         .stripMargin.replace("\n", " "),
     "dedup_ngram_blocked" ->
-      """WITH t AS (SELECT doc_id, list_filter(
-        |  regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS toks
-        | FROM documents),
-        |g AS (SELECT doc_id, CASE WHEN len(toks) >= 3
-        |  THEN list_distinct(list_transform(range(1, len(toks) - 1),
-        |   i -> array_to_string(toks[i:i+2], ' ')))
-        |  ELSE CAST([] AS VARCHAR[]) END AS grams FROM t),
-        |inv AS (SELECT doc_id, unnest(grams) AS gram FROM g),
-        |d AS (SELECT gram, count(*) AS df FROM inv GROUP BY 1),
-        |p AS (SELECT a.doc_id AS id_a, c.doc_id AS id_b
-        |  FROM inv a JOIN d ON d.gram = a.gram JOIN inv c ON c.gram = a.gram
-        |  WHERE a.doc_id < c.doc_id AND d.df BETWEEN 2 AND 64
-        |  GROUP BY 1, 2 HAVING count(*) >= 3),
+      s"""WITH $blockedCandCtes,
         |j AS (SELECT p.id_a, p.id_b,
         |  len(list_intersect(ga.grams, gb.grams)) AS inter,
         |  len(ga.grams) + len(gb.grams)
@@ -6140,19 +5930,7 @@ private[graft] object OracleSql {
     "dedup_threshold_histogram" ->
       // same blocking as dedup_ngram_blocked but UNFILTERED verify;
       // bucket = (10·inter) // union in exact integers
-      """WITH t AS (SELECT doc_id, list_filter(
-        |  regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS toks
-        | FROM documents),
-        |g AS (SELECT doc_id, CASE WHEN len(toks) >= 3
-        |  THEN list_distinct(list_transform(range(1, len(toks) - 1),
-        |   i -> array_to_string(toks[i:i+2], ' ')))
-        |  ELSE CAST([] AS VARCHAR[]) END AS grams FROM t),
-        |inv AS (SELECT doc_id, unnest(grams) AS gram FROM g),
-        |d AS (SELECT gram, count(*) AS df FROM inv GROUP BY 1),
-        |p AS (SELECT a.doc_id AS id_a, c.doc_id AS id_b
-        |  FROM inv a JOIN d ON d.gram = a.gram JOIN inv c ON c.gram = a.gram
-        |  WHERE a.doc_id < c.doc_id AND d.df BETWEEN 2 AND 64
-        |  GROUP BY 1, 2 HAVING count(*) >= 3),
+      s"""WITH $blockedCandCtes,
         |j AS (SELECT CAST(10 * len(list_intersect(ga.grams, gb.grams))
         |   AS BIGINT) AS i10,
         |  CAST(greatest(len(ga.grams) + len(gb.grams)
@@ -6190,48 +5968,27 @@ private[graft] object OracleSql {
       // DOUBLE[] replays Spark's kernel — ann_range_search
       // precedent), then the same recursive reachability closure as
       // dedup_groups_blocked
-      """WITH RECURSIVE m AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
+      s"""WITH RECURSIVE m AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
         | FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
         | WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
         |   CAST(b.embedding AS DOUBLE[])) >= 0.9),
-        |e AS (SELECT id_a AS src, id_b AS dst FROM m
-        |  UNION ALL SELECT id_b AS src, id_a AS dst FROM m),
-        |reach AS (SELECT vec_id, vec_id AS r FROM embeddings
-        |  UNION
-        |  SELECT reach.vec_id, e.dst AS r
-        |  FROM reach JOIN e ON e.src = reach.r),
-        |lab AS (SELECT vec_id, min(r) AS group_id
-        |  FROM reach GROUP BY vec_id)
+        |${minLabelCtes("m", "embeddings", "vec_id", "  ")}
         |SELECT vec_id, group_id, vec_id = group_id AS keep
         |FROM lab""".stripMargin.replace("\n", " "),
     "dedup_groups_blocked" ->
       // transitive closure by recursive reachability: label = min id
       // reachable through the undirected blocked-pair edge set
       (blockedPairsCte.replaceFirst("WITH ", "WITH RECURSIVE ") +
-        """, e AS (SELECT id_a AS src, id_b AS dst FROM m
-          |  UNION ALL SELECT id_b AS src, id_a AS dst FROM m),
-          |reach AS (SELECT doc_id, doc_id AS r FROM documents
-          |  UNION
-          |  SELECT reach.doc_id, e.dst AS r
-          |  FROM reach JOIN e ON e.src = reach.r),
-          |lab AS (SELECT doc_id, min(r) AS group_id
-          |  FROM reach GROUP BY doc_id)
+        s""", ${minLabelCtes("m", p = "  ")}
           |SELECT doc_id, group_id, doc_id = group_id AS keep
           |FROM lab""".stripMargin.replace("\n", " ")),
     "dedup_keep_best" ->
       // same recursive closure; survivor = most tokens then min id —
       // both rank keys integers, the cut is discrete
       (blockedPairsCte.replaceFirst("WITH ", "WITH RECURSIVE ") +
-        """, e AS (SELECT id_a AS src, id_b AS dst FROM m
-          |  UNION ALL SELECT id_b AS src, id_a AS dst FROM m),
-          |reach AS (SELECT doc_id, doc_id AS r FROM documents
-          |  UNION
-          |  SELECT reach.doc_id, e.dst AS r
-          |  FROM reach JOIN e ON e.src = reach.r),
-          |lab AS (SELECT doc_id, min(r) AS group_id
-          |  FROM reach GROUP BY doc_id),
+        s""", ${minLabelCtes("m", p = "  ")},
           |nt AS (SELECT doc_id, CAST(len(list_filter(
-          |   regexp_split_to_array(text, '\s+'), x -> x <> ''))
+          |   regexp_split_to_array(text, '\\s+'), x -> x <> ''))
           |  AS BIGINT) AS n_tokens FROM documents),
           |rk AS (SELECT lab.doc_id, lab.group_id, nt.n_tokens,
           |  row_number() OVER (PARTITION BY lab.group_id
@@ -6241,14 +5998,7 @@ private[graft] object OracleSql {
           |FROM rk""".stripMargin.replace("\n", " ")),
     "dedup_cluster_sizes" ->
       (blockedPairsCte.replaceFirst("WITH ", "WITH RECURSIVE ") +
-        """, e AS (SELECT id_a AS src, id_b AS dst FROM m
-          |  UNION ALL SELECT id_b AS src, id_a AS dst FROM m),
-          |reach AS (SELECT doc_id, doc_id AS r FROM documents
-          |  UNION
-          |  SELECT reach.doc_id, e.dst AS r
-          |  FROM reach JOIN e ON e.src = reach.r),
-          |lab AS (SELECT doc_id, min(r) AS group_id
-          |  FROM reach GROUP BY doc_id),
+        s""", ${minLabelCtes("m", p = "  ")},
           |sizes AS (SELECT group_id, count(*) AS cluster_size
           |  FROM lab GROUP BY 1)
           |SELECT cluster_size, count(*) AS n_clusters
@@ -6256,13 +6006,10 @@ private[graft] object OracleSql {
     "docs_novelty" ->
       // string grams stand in for the 64-bit shingle hashes — same
       // cardinalities absent a hash collision (blockingTrunk note)
-      """WITH t AS (SELECT doc_id, list_filter(
-        |  regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS toks
+      s"""WITH t AS (SELECT doc_id, list_filter(
+        |  regexp_split_to_array(lower(text), '\\s+'), x -> x <> '') AS toks
         | FROM documents),
-        |g AS (SELECT doc_id, unnest(CASE WHEN len(toks) >= 3
-        |  THEN list_distinct(list_transform(range(1, len(toks) - 1),
-        |   i -> array_to_string(toks[i:i+2], ' ')))
-        |  ELSE CAST([] AS VARCHAR[]) END) AS gram FROM t),
+        |g AS (SELECT doc_id, unnest($trigramSetSql) AS gram FROM t),
         |f AS (SELECT gram, min(doc_id) AS first_doc FROM g GROUP BY 1)
         |SELECT doc_id, count(*) AS n_grams,
         | CAST(sum(CASE WHEN doc_id = first_doc THEN 1 ELSE 0 END) AS BIGINT)
@@ -6283,7 +6030,7 @@ private[graft] object OracleSql {
         |FROM c GROUP BY 1""".stripMargin.replace("\n", " "),
     "docs_source_policy" ->
       (blockedPairsCte +
-        """, ids AS (SELECT DISTINCT doc_id FROM
+        s""", ids AS (SELECT DISTINCT doc_id FROM
           |  (SELECT id_a AS doc_id FROM m
           |   UNION ALL SELECT id_b AS doc_id FROM m) u),
           |rate AS (SELECT d.source, count(*) AS n_docs,
@@ -6292,13 +6039,10 @@ private[graft] object OracleSql {
           | FROM documents d LEFT JOIN ids ON ids.doc_id = d.doc_id
           | GROUP BY 1),
           |tq AS (SELECT source, text,
-          |  list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')
+          |  list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')
           |   AS toks FROM documents),
           |sc AS (SELECT source,
-          |  least(1.0, len(toks) / 128.0)
-          |   * (1.0 - least(1.0, ((length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g'))) / greatest(length(text), 1)) * 4.0))
-          |   * (0.3 + 0.7 * least(1.0, (len(list_filter(toks, x -> x IN ('the','a','and','of','to','in','is','it','for','on'))) / greatest(len(toks), 1)) * 5.0))
-          |   AS quality_score FROM tq),
+          |  ${qualityScoreSql()} FROM tq),
           |qual AS (SELECT source, round(avg(quality_score), 6)
           |  AS avg_quality FROM sc GROUP BY 1)
           |SELECT rate.source, rate.n_docs, rate.near_dup_rate,
@@ -6310,7 +6054,7 @@ private[graft] object OracleSql {
         .stripMargin.replace("\n", " ")),
     "docs_source_policy_apply" ->
       (blockedPairsCte +
-        """, ids AS (SELECT DISTINCT doc_id FROM
+        s""", ids AS (SELECT DISTINCT doc_id FROM
           |  (SELECT id_a AS doc_id FROM m
           |   UNION ALL SELECT id_b AS doc_id FROM m) u),
           |rate AS (SELECT d.source,
@@ -6319,13 +6063,10 @@ private[graft] object OracleSql {
           | FROM documents d LEFT JOIN ids ON ids.doc_id = d.doc_id
           | GROUP BY 1),
           |tq AS (SELECT doc_id, source, lang, n_chars, text,
-          |  list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')
+          |  list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')
           |   AS toks FROM documents),
           |sc AS (SELECT doc_id, source, lang, n_chars,
-          |  least(1.0, len(toks) / 128.0)
-          |   * (1.0 - least(1.0, ((length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g'))) / greatest(length(text), 1)) * 4.0))
-          |   * (0.3 + 0.7 * least(1.0, (len(list_filter(toks, x -> x IN ('the','a','and','of','to','in','is','it','for','on'))) / greatest(len(toks), 1)) * 5.0))
-          |   AS quality_score FROM tq),
+          |  ${qualityScoreSql()} FROM tq),
           |qual AS (SELECT source, round(avg(quality_score), 6)
           |  AS avg_quality FROM sc GROUP BY 1),
           |pol AS (SELECT rate.source,
@@ -6341,19 +6082,7 @@ private[graft] object OracleSql {
           |  OR (pol.policy = 'cap' AND rk.rk <= 8)"""
         .stripMargin.replace("\n", " ")),
     "dedup_edit_distance" ->
-      """WITH t AS (SELECT doc_id, list_filter(
-        |  regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS toks
-        | FROM documents),
-        |g AS (SELECT doc_id, CASE WHEN len(toks) >= 3
-        |  THEN list_distinct(list_transform(range(1, len(toks) - 1),
-        |   i -> array_to_string(toks[i:i+2], ' ')))
-        |  ELSE CAST([] AS VARCHAR[]) END AS grams FROM t),
-        |inv AS (SELECT doc_id, unnest(grams) AS gram FROM g),
-        |d AS (SELECT gram, count(*) AS df FROM inv GROUP BY 1),
-        |p AS (SELECT a.doc_id AS id_a, c.doc_id AS id_b
-        |  FROM inv a JOIN d ON d.gram = a.gram JOIN inv c ON c.gram = a.gram
-        |  WHERE a.doc_id < c.doc_id AND d.df BETWEEN 2 AND 64
-        |  GROUP BY 1, 2 HAVING count(*) >= 3)
+      s"""WITH $blockedCandCtes
         |SELECT p.id_a, p.id_b,
         | CAST(levenshtein(ta.text, tb.text) AS BIGINT) AS edit_distance
         |FROM p JOIN documents ta ON ta.doc_id = p.id_a
@@ -6361,19 +6090,7 @@ private[graft] object OracleSql {
         |WHERE levenshtein(ta.text, tb.text) <= 80"""
         .stripMargin.replace("\n", " "),
     "dedup_ngram_contain" ->
-      """WITH t AS (SELECT doc_id, list_filter(
-        |  regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS toks
-        | FROM documents),
-        |g AS (SELECT doc_id, CASE WHEN len(toks) >= 3
-        |  THEN list_distinct(list_transform(range(1, len(toks) - 1),
-        |   i -> array_to_string(toks[i:i+2], ' ')))
-        |  ELSE CAST([] AS VARCHAR[]) END AS grams FROM t),
-        |inv AS (SELECT doc_id, unnest(grams) AS gram FROM g),
-        |d AS (SELECT gram, count(*) AS df FROM inv GROUP BY 1),
-        |p AS (SELECT a.doc_id AS id_a, c.doc_id AS id_b
-        |  FROM inv a JOIN d ON d.gram = a.gram JOIN inv c ON c.gram = a.gram
-        |  WHERE a.doc_id < c.doc_id AND d.df BETWEEN 2 AND 64
-        |  GROUP BY 1, 2 HAVING count(*) >= 3),
+      s"""WITH $blockedCandCtes,
         |j AS (SELECT p.id_a, p.id_b,
         |  len(list_intersect(ga.grams, gb.grams)) AS inter,
         |  greatest(least(len(ga.grams), len(gb.grams)), 1) AS mn
@@ -6391,15 +6108,7 @@ private[graft] object OracleSql {
         | WHERE c.norm = trim(regexp_replace(lower(n.text), '\s+', ' ', 'g')))"""
         .stripMargin.replace("\n", " "),
     "dedup_incremental_pairs" ->
-      """WITH t AS (SELECT doc_id, list_filter(
-        |  regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS toks
-        | FROM documents),
-        |g AS (SELECT doc_id, CASE WHEN len(toks) >= 3
-        |  THEN list_distinct(list_transform(range(1, len(toks) - 1),
-        |   i -> array_to_string(toks[i:i+2], ' ')))
-        |  ELSE CAST([] AS VARCHAR[]) END AS grams FROM t),
-        |inv AS (SELECT doc_id, unnest(grams) AS gram FROM g),
-        |d AS (SELECT gram, count(*) AS df FROM inv GROUP BY 1),
+      s"""WITH $gramDfCtes,
         |p AS (SELECT a.doc_id AS new_id, c.doc_id AS corpus_id
         |  FROM inv a JOIN d ON d.gram = a.gram JOIN inv c ON c.gram = a.gram
         |  WHERE a.doc_id % 10 = 0 AND c.doc_id % 10 <> 0
@@ -6422,25 +6131,12 @@ private[graft] object OracleSql {
       // HISTORY-built store, near-dup-vs-history (df over
       // gated-delta ∪ history), benchmark slice + decontamination
       // vs the static benchmark
-      {
-        val th = operators.TextAnalysis.GopherGateThresholds.toMap
-        val fAny = th.keys.toSeq.sorted.map(n => s"$n > ${th(n)}")
-          .mkString("(", " OR ", ")")
         (s"""WITH $qualCorpusCte, ${linedCtesFrom("qd")},
-        |$gopherProfileCtes, $dupMassCtes, $qualProfileCtes,
-        |gflag AS (SELECT r.doc_id
-        | FROM rep_profile r JOIN dng gg ON gg.doc_id = r.doc_id
-        | JOIN qprof qq ON qq.doc_id = r.doc_id
-        | WHERE ($fAny OR $qualAnySql)),
-        |rt AS (SELECT doc_id, text,
-        |  list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS toks
-        | FROM documents),
+        |$gopherFlagCtes,
+        |${toksCteAs("rt")},
         |q AS (SELECT doc_id FROM (SELECT doc_id,
         |  CAST(len(toks) AS BIGINT) AS n_tokens,
-        |  least(1.0, len(toks) / 128.0)
-        |   * (1.0 - least(1.0, ((length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g'))) / greatest(length(text), 1)) * 4.0))
-        |   * (0.3 + 0.7 * least(1.0, (len(list_filter(toks, x -> x IN ('the','a','and','of','to','in','is','it','for','on'))) / greatest(len(toks), 1)) * 5.0))
-        |   AS quality_score FROM rt WHERE doc_id % 10 = 0) s
+        |  ${qualityScoreSql()} FROM rt WHERE doc_id % 10 = 0) s
         | WHERE n_tokens >= 20 AND n_tokens <= 100000 AND quality_score >= 0.2
         |  AND doc_id NOT IN (SELECT doc_id FROM gflag)),
         |bx AS (SELECT min(doc_id) AS doc_id FROM (SELECT doc_id,
@@ -6476,10 +6172,7 @@ private[graft] object OracleSql {
         |tl AS (SELECT doc_id, list_filter(
         |  regexp_split_to_array(lower(text), '\\s+'), x -> x <> '') AS toks
         | FROM documents),
-        |gl AS (SELECT doc_id, CASE WHEN len(toks) >= 3
-        |  THEN list_distinct(list_transform(range(1, len(toks) - 1),
-        |   i -> array_to_string(toks[i:i+2], ' ')))
-        |  ELSE CAST([] AS VARCHAR[]) END AS grams FROM tl
+        |gl AS (SELECT doc_id, $trigramSetSql AS grams FROM tl
         | WHERE doc_id % 10 <> 0 OR doc_id IN (SELECT doc_id FROM q)),
         |inv AS (SELECT doc_id, unnest(grams) AS gram FROM gl),
         |dfr AS (SELECT gram, count(*) AS df FROM inv GROUP BY 1),
@@ -6493,10 +6186,7 @@ private[graft] object OracleSql {
         | WHERE CAST(len(list_intersect(ga.grams, gb.grams)) AS DOUBLE)
         |  / (len(ga.grams) + len(gb.grams)
         |     - len(list_intersect(ga.grams, gb.grams))) >= 0.5),
-        |g AS (SELECT doc_id, unnest(list_distinct(CASE WHEN len(toks) >= 3
-        |  THEN list_transform(range(1, len(toks) - 1),
-        |   i -> array_to_string(toks[i:i+2], ' '))
-        |  ELSE CAST([] AS VARCHAR[]) END)) AS gram FROM rt),
+        |g AS (SELECT doc_id, unnest(list_distinct($trigramsSql)) AS gram FROM rt),
         |bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 97 = 0),
         |cont AS (SELECT DISTINCT c.doc_id FROM
         |  (SELECT doc_id, gram FROM g WHERE doc_id % 10 = 0 AND doc_id % 97 <> 0) c
@@ -6514,8 +6204,7 @@ private[graft] object OracleSql {
         | AND d.doc_id NOT IN (SELECT doc_id FROM nd)
         | AND d.doc_id NOT IN (SELECT doc_id FROM cont)
         | AND d.doc_id NOT IN (SELECT doc_id FROM semc)""")
-        .stripMargin.replace("\n", " ")
-      },
+        .stripMargin.replace("\n", " "),
     "q_top_supplier" ->
       """WITH rev AS (SELECT l_suppkey,
         |  sum(l_extendedprice * (1 - l_discount)) AS total_revenue
@@ -6620,14 +6309,6 @@ private[graft] object OracleSql {
         |FROM rk JOIN (VALUES (0.5), (0.8), (0.9), (0.95), (0.99)) t(threshold)
         | ON cum_share >= threshold
         |GROUP BY 1""".stripMargin.replace("\n", " "),
-    "stream_cdc_apply" ->
-      """WITH last AS (SELECT user_id, event_type, value, ts,
-        |  row_number() OVER (PARTITION BY user_id
-        |    ORDER BY ts DESC, event_id DESC) AS rn
-        | FROM events)
-        |SELECT user_id, event_type AS state, value, ts
-        |FROM last WHERE rn = 1 AND event_type <> 'error'"""
-        .stripMargin.replace("\n", " "),
     "etl_cdc_apply" ->
       """WITH last AS (SELECT user_id, event_type, value, ts,
         |  row_number() OVER (PARTITION BY user_id
@@ -6789,33 +6470,7 @@ private[graft] object OracleSql {
         | FROM o FULL OUTER JOIN n ON o.product_id = n.product_id) d
         |WHERE diff_type IS NOT NULL""".stripMargin.replace("\n", " "),
     "etl_scd2_user_state" ->
-      """WITH r AS (SELECT user_id, ts, event_type, event_id,
-        |  CASE WHEN lag(event_type) OVER (PARTITION BY user_id
-        |    ORDER BY ts, event_id) = event_type THEN 0 ELSE 1 END AS chg
-        | FROM events),
-        |v AS (SELECT user_id, ts, event_type,
-        |  sum(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS version
-        | FROM r),
-        |g AS (SELECT user_id, CAST(version AS BIGINT) AS version,
-        |  event_type AS state, min(ts) AS valid_from, count(*) AS n_events
-        | FROM v GROUP BY 1, 2, 3)
-        |SELECT user_id, version, state, valid_from,
-        | lead(valid_from) OVER w AS valid_to, n_events,
-        | lead(valid_from) OVER w IS NULL AS is_current
-        |FROM g WINDOW w AS (PARTITION BY user_id ORDER BY version)"""
-        .stripMargin.replace("\n", " "),
-    // stream_scd2's batch run replays the same run-collapse by
-    // folding sorted history — identical output, identical oracle
-    "stream_scd2" ->
-      """WITH r AS (SELECT user_id, ts, event_type, event_id,
-        |  CASE WHEN lag(event_type) OVER (PARTITION BY user_id
-        |    ORDER BY ts, event_id) = event_type THEN 0 ELSE 1 END AS chg
-        | FROM events),
-        |v AS (SELECT user_id, ts, event_type,
-        |  sum(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS version
-        | FROM r),
+      s"""WITH ${scdVersionCtes()},
         |g AS (SELECT user_id, CAST(version AS BIGINT) AS version,
         |  event_type AS state, min(ts) AS valid_from, count(*) AS n_events
         | FROM v GROUP BY 1, 2, 3)
@@ -6825,14 +6480,7 @@ private[graft] object OracleSql {
         |FROM g WINDOW w AS (PARTITION BY user_id ORDER BY version)"""
         .stripMargin.replace("\n", " "),
     "etl_dim_asof_enrich" ->
-      """WITH r AS (SELECT user_id, ts, event_type, event_id,
-        |  CASE WHEN lag(event_type) OVER (PARTITION BY user_id
-        |    ORDER BY ts, event_id) = event_type THEN 0 ELSE 1 END AS chg
-        | FROM events WHERE event_type <> 'purchase'),
-        |v AS (SELECT user_id, ts, event_type,
-        |  sum(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS version
-        | FROM r),
+      s"""WITH ${scdVersionCtes("events WHERE event_type <> 'purchase'")},
         |g0 AS (SELECT user_id, CAST(version AS BIGINT) AS version,
         |  event_type AS state, min(ts) AS valid_from
         | FROM v GROUP BY 1, 2, 3),
@@ -6849,14 +6497,7 @@ private[graft] object OracleSql {
       // the enrichment CTE chain aggregated to the per-day coverage
       // report; n_early sum CAST to BIGINT (HUGEINT trap), rate on
       // the 1e-6 grid from exact long division
-      """WITH r AS (SELECT user_id, ts, event_type, event_id,
-        |  CASE WHEN lag(event_type) OVER (PARTITION BY user_id
-        |    ORDER BY ts, event_id) = event_type THEN 0 ELSE 1 END AS chg
-        | FROM events WHERE event_type <> 'purchase'),
-        |v AS (SELECT user_id, ts, event_type,
-        |  sum(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS version
-        | FROM r),
+      s"""WITH ${scdVersionCtes("events WHERE event_type <> 'purchase'")},
         |g0 AS (SELECT user_id, CAST(version AS BIGINT) AS version,
         |  min(ts) AS valid_from
         | FROM v GROUP BY 1, 2, event_type),
@@ -7093,51 +6734,15 @@ private[graft] object OracleSql {
       // (1, value, value²) conditional sums, same closed-form Welch
       // expressions — only summation order can differ (last-ulp, the
       // q_events_anomaly class); moments ship unrounded
-      """WITH g AS (SELECT event_type,
-        | substring(md5(CAST(user_id AS VARCHAR) || ':ab42'), 1, 8)
-        |   < '80000000' AS is_a,
-        | value FROM events),
-        |a AS (SELECT event_type,
-        |  CAST(sum(CASE WHEN is_a THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-        |  CAST(sum(CASE WHEN NOT is_a THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-        |  sum(CASE WHEN is_a THEN value ELSE CAST(0 AS DOUBLE) END) AS s_a,
-        |  sum(CASE WHEN NOT is_a THEN value ELSE CAST(0 AS DOUBLE) END) AS s_b,
-        |  sum(CASE WHEN is_a THEN value ELSE CAST(0 AS DOUBLE) END * value)
-        |   AS q_a,
-        |  sum(CASE WHEN NOT is_a THEN value ELSE CAST(0 AS DOUBLE) END * value)
-        |   AS q_b
-        | FROM g GROUP BY 1 HAVING n_a > 1 AND n_b > 1),
-        |w AS (SELECT event_type, n_a, n_b,
-        |  CAST(n_a AS DOUBLE) / (n_a + n_b) AS share_a,
-        |  s_a / n_a AS mean_a, s_b / n_b AS mean_b,
-        |  greatest((q_a - s_a * s_a / n_a) / (n_a - 1), 0) / n_a AS se_a,
-        |  greatest((q_b - s_b * s_b / n_b) / (n_b - 1), 0) / n_b AS se_b
-        | FROM a)
-        |SELECT event_type, n_a, n_b, share_a, mean_a, mean_b,
-        | (mean_a - mean_b) / sqrt(se_a + se_b) AS welch_t,
-        | (se_a + se_b) * (se_a + se_b) / (se_a * se_a / (n_a - 1)
-        |   + se_b * se_b / (n_b - 1)) AS welch_df
-        |FROM w WHERE se_a + se_b > 0""".stripMargin.replace("\n", " "),
+      s"""WITH $abMomentsCtes,
+        |$welchSql""".stripMargin.replace("\n", " "),
     "events_ab_mde" -> {
       // same six sufficient statistics + clamps as events_ab_ttest;
       // the z-quantile sum is ONE pre-added double literal on both
       // engines (adding two literals engine-side could differ in
       // constant-folding order)
       val z = (1.959963984540054 + 0.8416212335729143).toString
-      s"""WITH g AS (SELECT event_type,
-         | substring(md5(CAST(user_id AS VARCHAR) || ':ab42'), 1, 8)
-         |   < '80000000' AS is_a,
-         | value FROM events),
-         |a AS (SELECT event_type,
-         |  CAST(sum(CASE WHEN is_a THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-         |  CAST(sum(CASE WHEN NOT is_a THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-         |  sum(CASE WHEN is_a THEN value ELSE CAST(0 AS DOUBLE) END) AS s_a,
-         |  sum(CASE WHEN NOT is_a THEN value ELSE CAST(0 AS DOUBLE) END) AS s_b,
-         |  sum(CASE WHEN is_a THEN value ELSE CAST(0 AS DOUBLE) END * value)
-         |   AS q_a,
-         |  sum(CASE WHEN NOT is_a THEN value ELSE CAST(0 AS DOUBLE) END * value)
-         |   AS q_b
-         | FROM g GROUP BY 1 HAVING n_a > 1 AND n_b > 1),
+      s"""WITH $abMomentsCtes,
          |w AS (SELECT event_type, n_a, n_b, s_b,
          |  greatest((q_a - s_a * s_a / n_a) / (n_a - 1), 0) / n_a
          |   + greatest((q_b - s_b * s_b / n_b) / (n_b - 1), 0) / n_b AS se2
@@ -7293,9 +6898,8 @@ private[graft] object OracleSql {
       // distinct USERS per arm (the randomization unit), chi-square
       // GOF vs 50/50, flag at the fixed χ²₁(0.95) literal — exact
       // integer inputs make the flag deterministic on both engines
-      """WITH g AS (SELECT event_type, user_id,
-        | substring(md5(CAST(user_id AS VARCHAR) || ':ab42'), 1, 8)
-        |   < '80000000' AS is_a
+      s"""WITH g AS (SELECT event_type, user_id,
+        | $abCoinSql
         | FROM events),
         |a AS (SELECT event_type,
         |  CAST(count(DISTINCT CASE WHEN is_a THEN user_id END) AS BIGINT)
@@ -7437,36 +7041,13 @@ private[graft] object OracleSql {
       // shared Welch closed form — so both engines sum the same
       // partials in the same nesting (only within-day order floats,
       // the events_ab_sequential last-ulp class)
-      """WITH g AS (SELECT event_type, CAST(ts AS DATE) AS day,
-        | substring(md5(CAST(user_id AS VARCHAR) || ':ab42'), 1, 8)
-        |   < '80000000' AS is_a,
-        | value FROM events WHERE ts IS NOT NULL),
-        |d AS (SELECT event_type, day,
-        |  CAST(sum(CASE WHEN is_a THEN 1 ELSE 0 END) AS BIGINT) AS d_na,
-        |  CAST(sum(CASE WHEN NOT is_a THEN 1 ELSE 0 END) AS BIGINT) AS d_nb,
-        |  sum(CASE WHEN is_a THEN value ELSE CAST(0 AS DOUBLE) END) AS d_sa,
-        |  sum(CASE WHEN NOT is_a THEN value ELSE CAST(0 AS DOUBLE) END) AS d_sb,
-        |  sum(CASE WHEN is_a THEN value ELSE CAST(0 AS DOUBLE) END * value)
-        |   AS d_qa,
-        |  sum(CASE WHEN NOT is_a THEN value ELSE CAST(0 AS DOUBLE) END * value)
-        |   AS d_qb
-        | FROM g GROUP BY 1, 2),
+      s"""WITH $abDailyMomentsCtes,
         |a AS (SELECT event_type,
         |  CAST(sum(d_na) AS BIGINT) AS n_a, CAST(sum(d_nb) AS BIGINT) AS n_b,
         |  sum(d_sa) AS s_a, sum(d_sb) AS s_b,
         |  sum(d_qa) AS q_a, sum(d_qb) AS q_b
         | FROM d GROUP BY 1 HAVING sum(d_na) > 1 AND sum(d_nb) > 1),
-        |w AS (SELECT event_type, n_a, n_b,
-        |  CAST(n_a AS DOUBLE) / (n_a + n_b) AS share_a,
-        |  s_a / n_a AS mean_a, s_b / n_b AS mean_b,
-        |  greatest((q_a - s_a * s_a / n_a) / (n_a - 1), 0) / n_a AS se_a,
-        |  greatest((q_b - s_b * s_b / n_b) / (n_b - 1), 0) / n_b AS se_b
-        | FROM a)
-        |SELECT event_type, n_a, n_b, share_a, mean_a, mean_b,
-        | (mean_a - mean_b) / sqrt(se_a + se_b) AS welch_t,
-        | (se_a + se_b) * (se_a + se_b) / (se_a * se_a / (n_a - 1)
-        |   + se_b * se_b / (n_b - 1)) AS welch_df
-        |FROM w WHERE se_a + se_b > 0""".stripMargin.replace("\n", " "),
+        |$welchSql""".stripMargin.replace("\n", " "),
     "lake_vacuum_plan" ->
       // the manifest's snapshot lineage + the retention rule, all
       // integer arithmetic (horizon = 8 − 2 = 6)
@@ -7675,21 +7256,7 @@ private[graft] object OracleSql {
       // tie by neighbor_id the same way in both engines; the
       // stage-1 cut at rank 50 orders by the 1e-6-rounded fold so
       // the candidate SET is last-ulp-proof too
-      """WITH t AS (SELECT doc_id, unnest(
-        |  list_filter(regexp_split_to_array(text, '\s+'), x -> x <> ''))
-        |  AS tok FROM documents),
-        |tf AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-        | FROM t GROUP BY 1, 2),
-        |dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
-        | FROM t GROUP BY 1),
-        |cs AS (SELECT CAST(count(DISTINCT doc_id) AS DOUBLE) AS n_docs,
-        |  CAST(sum(tf) AS DOUBLE) / count(DISTINCT doc_id) AS avgdl
-        | FROM tf),
-        |dfr AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf
-        | GROUP BY 1 HAVING count(*) >= 2
-        |  AND count(*) <= (SELECT floor(0.9 * n_docs) FROM cs)),
-        |p AS (SELECT tf.doc_id, tf.tok, tf.tf, dfr.df
-        | FROM tf JOIN dfr USING (tok)),
+      s"""WITH $bm25StatsCtes,
         |champ AS (SELECT doc_id, tok FROM (
         |  SELECT doc_id, tok, row_number() OVER (
         |    PARTITION BY tok, doc_id % 32
@@ -7775,21 +7342,7 @@ private[graft] object OracleSql {
       // Spark side's MaxScore pruning is provably lossless, so its
       // output must equal the brute-force fold over every sharing
       // pair — the strongest possible oracle for a pruned plan
-      """WITH t AS (SELECT doc_id, unnest(
-        |  list_filter(regexp_split_to_array(text, '\s+'), x -> x <> ''))
-        |  AS tok FROM documents),
-        |tf AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-        | FROM t GROUP BY 1, 2),
-        |dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
-        | FROM t GROUP BY 1),
-        |cs AS (SELECT CAST(count(DISTINCT doc_id) AS DOUBLE) AS n_docs,
-        |  CAST(sum(tf) AS DOUBLE) / count(DISTINCT doc_id) AS avgdl
-        | FROM tf),
-        |dfr AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf
-        | GROUP BY 1 HAVING count(*) >= 2
-        |  AND count(*) <= (SELECT floor(0.9 * n_docs) FROM cs)),
-        |p AS (SELECT tf.doc_id, tf.tok, tf.tf, dfr.df
-        | FROM tf JOIN dfr USING (tok)),
+      s"""WITH $bm25StatsCtes,
         |terms AS (SELECT q.doc_id AS query_id,
         |  c.doc_id AS neighbor_id, c.tok,
         |  ln((cs.n_docs - c.df + 0.5) / (c.df + 0.5) + 1.0) *
@@ -7877,20 +7430,7 @@ private[graft] object OracleSql {
       // per-type ROWS UNBOUNDED PRECEDING fold in day order — both
       // engines sum the partials in the same order, so only
       // within-day order can differ (same last-ulp class)
-      """WITH g AS (SELECT event_type, CAST(ts AS DATE) AS day,
-        | substring(md5(CAST(user_id AS VARCHAR) || ':ab42'), 1, 8)
-        |   < '80000000' AS is_a,
-        | value FROM events WHERE ts IS NOT NULL),
-        |d AS (SELECT event_type, day,
-        |  CAST(sum(CASE WHEN is_a THEN 1 ELSE 0 END) AS BIGINT) AS d_na,
-        |  CAST(sum(CASE WHEN NOT is_a THEN 1 ELSE 0 END) AS BIGINT) AS d_nb,
-        |  sum(CASE WHEN is_a THEN value ELSE CAST(0 AS DOUBLE) END) AS d_sa,
-        |  sum(CASE WHEN NOT is_a THEN value ELSE CAST(0 AS DOUBLE) END) AS d_sb,
-        |  sum(CASE WHEN is_a THEN value ELSE CAST(0 AS DOUBLE) END * value)
-        |   AS d_qa,
-        |  sum(CASE WHEN NOT is_a THEN value ELSE CAST(0 AS DOUBLE) END * value)
-        |   AS d_qb
-        | FROM g GROUP BY 1, 2),
+      s"""WITH $abDailyMomentsCtes,
         |c AS (SELECT event_type, day,
         |  CAST(sum(d_na) OVER cw AS BIGINT) AS n_a,
         |  CAST(sum(d_nb) OVER cw AS BIGINT) AS n_b,
