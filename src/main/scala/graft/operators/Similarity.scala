@@ -1293,11 +1293,9 @@ object Similarity {
       .filter(pmod(col("doc_id"), lit(sampleMod)) === lit(1 % sampleMod))
     val wS = Window.partitionBy("query_id")
       .orderBy(col("s").desc, col("neighbor_id"))
-    // the query side is |queries|·|toks-per-query| rows — broadcast
-    // it explicitly (r19): the planner's estimate for a filtered
-    // checkpoint is not trusted, and a sort-merge here would shuffle
-    // the postings sample by tok for nothing
-    broadcast(qPosts).join(samplePosts, Seq("tok"))
+    // no broadcast hint on the query side: it is O(corpus / queryMod)
+    // rows, and AQE still broadcasts it at run time when it is small
+    qPosts.join(samplePosts, Seq("tok"))
       .filter(col("doc_id") =!= col("query_id"))
       .select(col("query_id"), col("doc_id").as("neighbor_id"), col("term"))
       .groupBy("query_id", "neighbor_id").agg(sum("term").as("s"))
@@ -1355,11 +1353,9 @@ object Similarity {
     val wq = Window.partitionBy("query_id")
       .orderBy(col("ub").asc, col("tok"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // query side broadcast (r19) — ubDf is the postings aggregate;
-    // hinting the O(queries·toks) side keeps it un-shuffled
-    broadcast(qPosts)
+    qPosts
       .join(ubDf, Seq("tok"))
-      .join(broadcast(theta), Seq("query_id"), "left")
+      .join(theta, Seq("query_id"), "left")
       .withColumn("theta",
         coalesce(col("theta"), lit(Double.NegativeInfinity)))
       .withColumn("cum", sum("ub").over(wq))
@@ -1406,11 +1402,9 @@ object Similarity {
     val bub = posts
       .withColumn("blk", expr(s"doc_id div $blockSize"))
       .groupBy("tok", "blk").agg(max("term").as("bub"))
-    // query side broadcast (r19) — bub is postings-bounded and
-    // already partitioned by its own aggregate; never re-shuffle it
-    broadcast(qPosts).join(bub, Seq("tok"))
+    qPosts.join(bub, Seq("tok"))
       .groupBy("query_id", "blk").agg(sum("bub").as("bound"))
-      .join(broadcast(theta), Seq("query_id"), "left")
+      .join(theta, Seq("query_id"), "left")
       .filter(col("theta").isNull || col("bound") >= col("theta"))
       .select("query_id", "blk")
   }
@@ -1490,21 +1484,19 @@ object Similarity {
       // anti-self filter) → pin the tiny O(queries) θ relation once
       val thetaCk = theta.localCheckpoint(true)
       val surviving = bm25SurvivingBlocks(posts, qPosts, thetaCk, blockSize)
-      // essential (query, tok) relation is query-bounded → broadcast
-      // (r19), so the postings side never shuffles for the fan-out
-      val cands = broadcast(bm25QTok(posts, qPosts, thetaCk)
-          .filter(col("cum") >= col("theta"))
-          .select("query_id", "tok"))
+      val cands = bm25QTok(posts, qPosts, thetaCk)
+        .filter(col("cum") >= col("theta"))
+        .select("query_id", "tok")
         .join(posts.select(col("doc_id"), col("tok"),
           expr(s"doc_id div $blockSize").as("blk")), Seq("tok"))
         .filter(col("doc_id") =!= col("query_id"))
         .join(surviving, Seq("query_id", "blk"), "left_semi")
         .select(col("query_id"), col("doc_id").as("neighbor_id"))
         .distinct()
-      cands.join(broadcast(qPosts), Seq("query_id"))
+      cands.join(qPosts, Seq("query_id"))
         .join(corpusSide, Seq("neighbor_id", "tok"))
     } else {
-      broadcast(qPosts).join(corpusSide, Seq("tok"))
+      qPosts.join(corpusSide, Seq("tok"))
         .filter(col("neighbor_id") =!= col("query_id"))
         .select(col("query_id"), col("neighbor_id"), col("tok"), col("term"))
     })
@@ -1531,12 +1523,13 @@ object Similarity {
       .select("query_id", "neighbor_id")
     // survivor rescore rebuilds its terms PAIR-bounded (the bm25TopK
     // stage-2 shape) — O(survivors · tokens-per-query) rows, never a
-    // second pass over the candidate term relation. The expanded
-    // (survivor × query-token) side is tiny (≈ k·|q|·toks rows) and
-    // BROADCAST, so the postings side never shuffles for the join.
+    // second pass over the candidate term relation. The relations that
+    // grow with the query count (qPosts, θ, the essential candidates,
+    // this survivor side) carry no broadcast hint: the planner and AQE
+    // pick the join from their measured size.
     val scored = posts
       .select(col("doc_id").as("neighbor_id"), col("tok"), col("term"))
-      .join(broadcast(survivors.join(qPosts, Seq("query_id"))),
+      .join(survivors.join(qPosts, Seq("query_id")),
         Seq("neighbor_id", "tok"))
       .repartition(col("query_id"))
       .groupBy("query_id", "neighbor_id")

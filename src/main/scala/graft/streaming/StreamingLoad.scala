@@ -1,5 +1,8 @@
 package graft.streaming
 
+import java.io.IOException
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -12,14 +15,23 @@ import graft.operators.RetailEtl
   * each micro-batch is merged into the parquet summary by key via
   * `foreachBatch` + [[RetailEtl.upsertSummary]].
   *
-  * The read-merge-overwrite cycle materializes the existing summary
-  * (localCheckpoint) before overwriting the path it came from —
-  * fine for summary-sized state; a production deployment at table
-  * scale would swap in an ACID table format (the merge semantics and
-  * this sink's shape are unchanged).
+  * [[upsertSink]] never overwrites the path it reads: it writes the
+  * merged state beside the summary and then swaps it in. A
+  * production deployment at table scale would swap in an ACID table
+  * format (the merge semantics and this sink's shape are unchanged).
   */
 object StreamingLoad {
 
+  /** Merges each micro-batch into the parquet summary at `path` by
+    * `keys`. The merged state is written to the hidden sibling
+    * `_<name>.staging` while the summary stays untouched, then the
+    * summary is deleted and the staging directory renamed onto it
+    * through the Hadoop `FileSystem`. A batch that fails while it
+    * is computed or written stops the query and leaves the last good
+    * summary in place. What remains is the window between the delete
+    * and the rename: a crash there leaves no summary at `path`, and
+    * the complete merged state under the staging name.
+    */
   def upsertSink(updates: DataFrame, path: String, checkpoint: String,
                  keys: Seq[String] = Seq("product_id")): StreamingQuery =
     updates.writeStream
@@ -29,15 +41,17 @@ object StreamingLoad {
         val spark = batch.sparkSession
         // Hadoop FS, not java.io.File: the path may be s3://, hdfs://,
         // or resolved against a non-local defaultFS
-        val hPath = new org.apache.hadoop.fs.Path(path)
-        val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val target = new Path(path)
+        val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val staging = new Path(target.getParent, s"_${target.getName}.staging")
         val merged =
-          if (fs.exists(hPath)) {
-            // pin the current state off the files we're about to replace
-            val existing = spark.read.parquet(path).localCheckpoint(true)
-            RetailEtl.upsertSummary(existing, batch, keys)
-          } else batch
-        merged.write.mode("overwrite").parquet(path)
+          if (fs.exists(target))
+            RetailEtl.upsertSummary(spark.read.parquet(path), batch, keys)
+          else batch
+        merged.write.mode("overwrite").parquet(staging.toString)
+        fs.delete(target, true)
+        if (!fs.rename(staging, target))
+          throw new IOException(s"cannot rename $staging to $target")
       }
       .start()
 

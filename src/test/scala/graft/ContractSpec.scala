@@ -34,6 +34,8 @@ class ContractSpec extends AnyFunSuite {
       assert(sql.trim.nonEmpty, s"$k: empty oracle")
       assert(!sql.contains("\n"), s"$k: embedded newline breaks the one-line JSON dump")
     }
+    assert(SparkEntry.oracleSql eq SparkEntry.oracleSql,
+      "the oracle map is built once per JVM, not on every call")
   }
 
   test("rows-only queries are down to ZERO (r17)") {

@@ -6,6 +6,7 @@ import org.apache.spark.ShuffleDependency
 import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.catalyst.expressions.RaiseError
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.graft.PlanShim
@@ -668,5 +669,43 @@ class RetailEtlSpec extends SparkSpec {
     val leaves = rdds.filter(_.dependencies.isEmpty).map(_.getClass.getSimpleName).toSet
     assert(leaves === Set("FileScanRDD", "JDBCRDD"),
       "lost shuffle output can be recomputed from both sources")
+  }
+
+  test("dqCalibrationOneScan ≡ dqCalibration row-for-row; columns " +
+    "resolve case-insensitively; ambiguity and absence throw by name") {
+    import graft.operators.RetailEtl
+    val li = graft.sources.Tables.lineitem(spark, "/root/testdata/sf0.001")
+    val cols = Seq("l_partkey", "l_returnflag", "l_shipdate", "l_quantity")
+    val composed = RetailEtl.dqCalibration(li, cols)
+      .collect().map(_.toString).sorted.toSeq
+    val oneScan = RetailEtl.dqCalibrationOneScan(li, cols)
+      .collect().map(_.toString).sorted.toSeq
+    assert(oneScan === composed,
+      "the one-scan form must reproduce the composed calibration " +
+        "exactly (stringified distincts are injective for these columns)")
+    // case-insensitive resolution emits the RESOLVED field name, so
+    // the output stays oracle-comparable regardless of caller case
+    val ci = RetailEtl.dqCalibrationOneScan(li, Seq("L_PARTKEY")).collect()
+    assert(ci.length === 1 && ci.head.getString(0) === "l_partkey")
+    // r18 (ADVICE): the COMPOSED twin resolves identically — a
+    // case-variant caller gets the same col_name rows from both forms
+    val ciComposed = RetailEtl.dqCalibration(li, Seq("L_PARTKEY")).collect()
+    assert(ciComposed.length === 1 &&
+      ciComposed.head.getString(0) === "l_partkey",
+      "dqCalibration must emit the resolved schema-case col_name")
+    assert(ciComposed.map(_.toString).sorted.toSeq ===
+      ci.map(_.toString).sorted.toSeq,
+      "case-variant callers must get identical rows from both twins")
+    // two case-variant fields: a third spelling matches both → throws
+    val amb = li.select(col("l_partkey"), col("l_partkey").as("L_PARTKEY"))
+    val e = intercept[IllegalArgumentException] {
+      RetailEtl.dqCalibrationOneScan(amb, Seq("l_PartKey"))
+    }
+    assert(e.getMessage.contains("l_PartKey") &&
+      e.getMessage.toLowerCase.contains("ambiguous"))
+    val missing = intercept[IllegalArgumentException] {
+      RetailEtl.dqCalibrationOneScan(li, Seq("no_such_col"))
+    }
+    assert(missing.getMessage.contains("no_such_col"))
   }
 }

@@ -272,6 +272,44 @@ class SimilaritySpec extends SparkSpec {
       "estimator-chosen pruned plan must equal the forced-direct ranking")
   }
 
+  test("bm25MaxScoreTopK: no relation keyed by query_id is broadcast by hint") {
+    // qPosts, θ, the essential candidates and the survivor side all
+    // grow with corpus / queryMod, so their join strategy is left to
+    // the planner: with both broadcast thresholds off, no broadcast
+    // in the executed plan may carry query_id, in either branch, and
+    // the rows stay those of the default config
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    object Plans extends AdaptiveSparkPlanHelper
+    val rows = (0L until 600L).map(i =>
+      (i, s"filler common${i % 3} mid${i % 40} rare${i % 300}"))
+    val posts = SharedTrunks.bm25Postings(rows.toDF("doc_id", "text"))
+    def run(branch: Boolean) =
+      Similarity.bm25MaxScoreTopK(posts, queryMod = 100, k = 2,
+        sampleMod = 7, blockSize = 8, forcePruned = Some(branch))
+    def sorted(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .sortBy(t => (t._1, t._2)).toSeq
+    val thresholds = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    for (branch <- Seq(true, false)) {
+      val want = sorted(run(branch))
+      val saved = thresholds.map(k => k -> spark.conf.getOption(k))
+      thresholds.foreach(spark.conf.set(_, "-1"))
+      try {
+        val df = run(branch)
+        val got = sorted(df)
+        val keyed = Plans.collectWithSubqueries(df.queryExecution.executedPlan) {
+          case b: BroadcastExchangeExec if b.output.exists(_.name == "query_id") => b
+        }
+        assert(keyed.isEmpty, s"branch=$branch broadcasts by hint:\n" +
+          keyed.map(_.output.mkString(", ")).mkString("\n"))
+        assert(got.nonEmpty && got == want, s"branch=$branch rows changed")
+      } finally saved.foreach { case (k, v) =>
+        v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+  }
+
   test("LSH multiprobe lifts recall at the same table layout") {
     def meanRecall(mp: Int): Double = {
       val got = topkSets(Similarity.lshTopK(emb, queries, k = 10,

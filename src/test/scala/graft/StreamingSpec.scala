@@ -383,6 +383,37 @@ class StreamingSpec extends SparkSpec {
       103L -> (3.0, 30.0)))  // inserted by batch 2
   }
 
+  test("streaming upsert sink keeps the last good summary when a batch fails") {
+    implicit val sqlCtx = spark.sqlContext
+    val base = java.nio.file.Files.createTempDirectory("graft_upsert_fail").toString
+    val mem = MemoryStream[(Long, Double, Double)]
+    // a negative product_id fails its batch at run time
+    val updates = mem.toDF().toDF("product_id", "total_quantity", "total_sale_amount")
+      .withColumn("total_quantity", when($"product_id" < 0,
+        raise_error(lit("poisoned batch"))).otherwise($"total_quantity"))
+    // AQE off for the query (its session is cloned at start): every
+    // stage of the merge then runs inside the write job, after an
+    // overwrite has deleted the files it replaces; AQE would run the
+    // merge's shuffle stage, and fail, before the write begins
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val q = try graft.streaming.StreamingLoad.upsertSink(updates,
+      path = s"$base/summary", checkpoint = s"$base/chk")
+      finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    try {
+      mem.addData((101L, 1.0, 10.0), (102L, 2.0, 20.0))
+      q.processAllAvailable()
+      mem.addData((102L, 9.0, 90.0), (-1L, 0.0, 0.0))
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        q.processAllAvailable())
+      assert(!q.isActive, "a failed batch must stop the query")
+    } finally q.stop()
+    val out = spark.read.parquet(s"$base/summary").collect()
+      .map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    assert(out == Map(101L -> (1.0, 10.0), 102L -> (2.0, 20.0)),
+      s"the summary must still hold the first batch: $out")
+  }
+
   test("continuous hourly rollup materializes via the upsert sink") {
     implicit val sqlCtx = spark.sqlContext
     val base = java.nio.file.Files.createTempDirectory("graft_rollup").toString
