@@ -15,10 +15,9 @@ import graft.operators.RetailEtl
   * each micro-batch is merged into the parquet summary by key via
   * `foreachBatch` + [[RetailEtl.upsertSummary]].
   *
-  * [[upsertSink]] never overwrites the path it reads: it writes the
-  * merged state beside the summary and then swaps it in. A
-  * production deployment at table scale would swap in an ACID table
-  * format (the merge semantics and this sink's shape are unchanged).
+  * A production deployment at table scale would swap in an ACID
+  * table format (the merge semantics and this sink's shape are
+  * unchanged).
   */
 object StreamingLoad {
 
