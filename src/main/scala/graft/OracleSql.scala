@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.matching.Regex
+
 /** The DuckDB oracle: one SQL string per `SparkEntry.queries` key,
   * written in DuckDB's dialect against the raw testdata tables. A key
   * is correct when its rows match its oracle's. The SQL is written
@@ -12,46 +14,43 @@ private[graft] object OracleSql {
   // Each SQL fragment that two or more oracles use is written once here
   // and interpolated where it is used. A fragment takes as parameters
   // only what differs between its uses: a name, a modulus, a threshold.
-  // The map is pinned byte for byte and its copies sat at different
-  // indents, so a fragment whose uses differ only in the indent of its
-  // continuation lines takes that indent too (`p`, and `pp` for a
-  // second level). Fragments are flattened to one line, as every
-  // oracle is.
+  // Fragments and oracles are written as margin literals and left
+  // as they are; [[oracleSql]] flattens each finished oracle once.
 
   /** The C4-style quality score of a relation with `text` and its
     * whitespace tokens `toks`, `AS quality_score`: a length, a
     * punctuation and a stop-word factor. */
-  private def qualityScoreSql(p: String = "   "): String =
-    s"""least(1.0, len(toks) / 128.0)
-       |$p* (1.0 - least(1.0, ((length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g'))) / greatest(length(text), 1)) * 4.0))
-       |$p* (0.3 + 0.7 * least(1.0, (len(list_filter(toks, x -> x IN ('the','a','and','of','to','in','is','it','for','on'))) / greatest(len(toks), 1)) * 5.0))
-       |${p}AS quality_score""".stripMargin.replace("\n", " ")
+  private val qualityScoreSql: String =
+    """least(1.0, len(toks) / 128.0)
+       | * (1.0 - least(1.0, ((length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g'))) / greatest(length(text), 1)) * 4.0))
+       | * (0.3 + 0.7 * least(1.0, (len(list_filter(toks, x -> x IN ('the','a','and','of','to','in','is','it','for','on'))) / greatest(len(toks), 1)) * 5.0))
+       | AS quality_score"""
 
   /** Min-label connected components of the undirected edges
     * `pairs(id_a, id_b)` over the nodes `nodes(id)`: `e` holds both
     * edge directions, `reach` is the recursive closure and `lab(id,
     * group_id)` labels each node with the least id it reaches. */
   private def minLabelCtes(pairs: String, nodes: String = "documents",
-      id: String = "doc_id", p: String = " "): String =
+      id: String = "doc_id"): String =
     s"""e AS (SELECT id_a AS src, id_b AS dst FROM $pairs
-       |${p}UNION ALL SELECT id_b AS src, id_a AS dst FROM $pairs),
+       | UNION ALL SELECT id_b AS src, id_a AS dst FROM $pairs),
        |reach AS (SELECT $id, $id AS r FROM $nodes
-       |${p}UNION
-       |${p}SELECT reach.$id, e.dst AS r
-       |${p}FROM reach JOIN e ON e.src = reach.r),
+       | UNION
+       | SELECT reach.$id, e.dst AS r
+       | FROM reach JOIN e ON e.src = reach.r),
        |lab AS (SELECT $id, min(r) AS group_id
-       |${p}FROM reach GROUP BY $id)""".stripMargin.replace("\n", " ")
+       | FROM reach GROUP BY $id)"""
 
   /** The word trigrams of `toks`, in order. */
   private val trigramListSql: String =
     """list_transform(range(1, len(toks) - 1),
-      |   i -> array_to_string(toks[i:i+2], ' '))""".stripMargin.replace("\n", " ")
+      |   i -> array_to_string(toks[i:i+2], ' '))"""
 
   /** `grams`, or the empty list when `toks` has under three tokens. */
   private def ifTrigramsSql(grams: String): String =
     s"""CASE WHEN len(toks) >= 3
        |  THEN $grams
-       |  ELSE CAST([] AS VARCHAR[]) END""".stripMargin.replace("\n", " ")
+       |  ELSE CAST([] AS VARCHAR[]) END"""
 
   /** The word trigrams of `toks`, and the same deduplicated. */
   private val trigramsSql: String = ifTrigramsSql(trigramListSql)
@@ -60,24 +59,22 @@ private[graft] object OracleSql {
   /** FNV-1a 64 of the string `str` as a HUGEINT: a fold over its
     * characters from the offset basis, xor then multiply by the prime,
     * mod 2^64. `j` and `b` name the lambdas' variables. */
-  private def fnv1aSql(str: String, j: String = "j", b: String = "b",
-      p: String = "   ", pp: String = "     "): String =
+  private def fnv1aSql(str: String, j: String = "j", b: String = "b"): String =
     s"""list_reduce(list_prepend(CAST(14695981039346656037 AS HUGEINT),
-       |${p}list_transform(range(1, length($str) + 1),
-       |$pp$j -> CAST(ord(substr($str, $j, 1)) AS HUGEINT))),
-       |$p(h, $b) -> ((h - (h % 256)) + xor(CAST(h % 256 AS BIGINT),
-       |${pp}CAST($b AS BIGINT))) * 1099511628211 % 18446744073709551616)""".stripMargin.replace("\n", " ")
+       |   list_transform(range(1, length($str) + 1),
+       |     $j -> CAST(ord(substr($str, $j, 1)) AS HUGEINT))),
+       |   (h, $b) -> ((h - (h % 256)) + xor(CAST(h % 256 AS BIGINT),
+       |     CAST($b AS BIGINT))) * 1099511628211 % 18446744073709551616)"""
 
   /** Each embedding with the IVF cells of the centroids
     * `cents(cell, col)` ranked by cosine: rows (vec_id, cell, rn), the
     * nearest first and ties to the lower cell. */
-  private def ivfRankSql(cents: String, col: String = "embedding",
-      p: String = "   ", pp: String = "     "): String =
+  private def ivfRankSql(cents: String, col: String = "embedding"): String =
     s"""SELECT e.vec_id, c.cell, row_number() OVER (
        |   PARTITION BY e.vec_id ORDER BY
-       |${p}list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-       |${pp}CAST(c.$col AS DOUBLE[])) DESC, c.cell) AS rn
-       | FROM embeddings e, $cents c""".stripMargin.replace("\n", " ")
+       |   list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
+       |     CAST(c.$col AS DOUBLE[])) DESC, c.cell) AS rn
+       | FROM embeddings e, $cents c"""
 
   /** The near-dup pair-summary tail over `verified(id_a, id_b, …)`:
     * `sides` scores both ids of each pair with `score` and marks the
@@ -87,16 +84,16 @@ private[graft] object OracleSql {
   private def dupSidesCte(score: String): String =
     s"""sides AS (SELECT id_a AS doc_id, $score AS score,
        |  false AS is_junior FROM verified
-       | UNION ALL SELECT id_b, $score, true FROM verified)""".stripMargin.replace("\n", " ")
+       | UNION ALL SELECT id_b, $score, true FROM verified)"""
   private val dupPerdocCte: String =
     """perdoc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_dupes,
       |  max(score) AS max_score, bool_or(is_junior) AS dominated
-      | FROM sides GROUP BY 1)""".stripMargin.replace("\n", " ")
+      | FROM sides GROUP BY 1)"""
   private def dupKeepSql(docs: String = "documents d"): String =
     s"""SELECT d.doc_id, coalesce(p.n_dupes, 0) AS n_dupes,
        | coalesce(p.max_score, 0.0) AS max_score,
        | coalesce(NOT p.dominated, true) AS keep
-       |FROM $docs LEFT JOIN perdoc p USING (doc_id)""".stripMargin.replace("\n", " ")
+       |FROM $docs LEFT JOIN perdoc p USING (doc_id)"""
 
   /** The docs_curate stages after a quality gate `q(doc_id)`, over
     * `t(doc_id, text, toks)`: `dd` keeps the least doc_id of each
@@ -111,7 +108,7 @@ private[graft] object OracleSql {
        |bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % $benchMod = 0),
        |cont AS (SELECT DISTINCT c.doc_id FROM
        |  (SELECT doc_id, gram FROM g WHERE doc_id % $benchMod <> 0) c
-       |  JOIN bench USING (gram))""".stripMargin.replace("\n", " ")
+       |  JOIN bench USING (gram))"""
 
   /** The docs_curate chain: the tokens `t`, the quality gate `q`
     * (20 to 100000 tokens, score at least `minScore`) and
@@ -120,9 +117,9 @@ private[graft] object OracleSql {
     s"""${toksCteAs("t")},
        |q AS (SELECT doc_id FROM (SELECT doc_id,
        |  CAST(len(toks) AS BIGINT) AS n_tokens,
-       |  ${qualityScoreSql()} FROM t) s
+       |  ${qualityScoreSql} FROM t) s
        | WHERE n_tokens >= 20 AND n_tokens <= 100000 AND quality_score >= $minScore),
-       |${curateDedupCtes(benchMod)}""".stripMargin.replace("\n", " ")
+       |${curateDedupCtes(benchMod)}"""
 
   /** `name(id_a, id_b)`: every id pair inside one row of
     * `bucket(ids)`, each bucket capped at its first 64 ids. */
@@ -131,7 +128,7 @@ private[graft] object OracleSql {
        | FROM (SELECT list_slice(ids, 1, 64) AS ids FROM bucket) c,
        |  LATERAL (SELECT unnest(c.ids) AS ida) a,
        |  LATERAL (SELECT unnest(c.ids) AS idb) b
-       | WHERE a.ida < b.idb)""".stripMargin.replace("\n", " ")
+       | WHERE a.ida < b.idb)"""
 
   /** Welch's t-test per event type from the A/B arms' sufficient
     * statistics `a(event_type, n_a, n_b, s_a, s_b, q_a, q_b)`. */
@@ -146,7 +143,7 @@ private[graft] object OracleSql {
       | (mean_a - mean_b) / sqrt(se_a + se_b) AS welch_t,
       | (se_a + se_b) * (se_a + se_b) / (se_a * se_a / (n_a - 1)
       |   + se_b * se_b / (n_b - 1)) AS welch_df
-      |FROM w WHERE se_a + se_b > 0""".stripMargin.replace("\n", " ")
+      |FROM w WHERE se_a + se_b > 0"""
 
   /** SCD2 versions of each user's runs of one event type in `src`:
     * `r` flags each change of type, `v` numbers the runs. */
@@ -158,7 +155,7 @@ private[graft] object OracleSql {
        |v AS (SELECT user_id, ts, event_type,
        |  sum(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS version
-       | FROM r)""".stripMargin.replace("\n", " ")
+       | FROM r)"""
 
   /** The IVF index's live and dead (vec_id % 7 = 3) vectors per cell:
     * `assigned` maps each vector to its nearest cell, `filled(cell,
@@ -173,7 +170,7 @@ private[graft] object OracleSql {
        |  CAST(coalesce(pc.n_vecs, 0) AS BIGINT) AS n_vecs,
        |  CAST(coalesce(pc.n_dead, 0) AS BIGINT) AS n_dead
        | FROM (SELECT unnest(generate_series(0, 15)) AS cell) s
-       | LEFT JOIN pc USING (cell))""".stripMargin.replace("\n", " ")
+       | LEFT JOIN pc USING (cell))"""
 
   /** BM25 statistics of the documents' whitespace tokens: postings
     * `t(doc_id, tok)`, term frequencies `tf`, lengths `dl`, corpus
@@ -195,7 +192,7 @@ private[graft] object OracleSql {
       | GROUP BY 1 HAVING count(*) >= 2
       |  AND count(*) <= (SELECT floor(0.9 * n_docs) FROM cs)),
       |p AS (SELECT tf.doc_id, tf.tok, tf.tf, dfr.df
-      | FROM tf JOIN dfr USING (tok))""".stripMargin.replace("\n", " ")
+      | FROM tf JOIN dfr USING (tok))"""
 
   /** The best store match of each new item, over the candidate matches
     * `p(doc_id, store_id, hamming)` and the new items `nd(doc_id)`:
@@ -215,7 +212,7 @@ private[graft] object OracleSql {
       | CAST(coalesce(a.match_id, -1) AS BIGINT) AS match_id,
       | CAST(coalesce(a.best_hamming, -1) AS INTEGER) AS best_hamming,
       | coalesce(a.n_matches, 0) = 0 AS keep
-      |FROM nd LEFT JOIN agg a USING (doc_id)""".stripMargin.replace("\n", " ")
+      |FROM nd LEFT JOIN agg a USING (doc_id)"""
 
   /** The A/B arms' six sufficient statistics over `g(is_a, value)`:
     * the count, sum and sum of squares of `value` in each arm, named
@@ -228,12 +225,12 @@ private[graft] object OracleSql {
        |  sum(CASE WHEN is_a THEN value ELSE CAST(0 AS DOUBLE) END * value)
        |   AS ${sq}a,
        |  sum(CASE WHEN NOT is_a THEN value ELSE CAST(0 AS DOUBLE) END * value)
-       |   AS ${sq}b""".stripMargin.replace("\n", " ")
+       |   AS ${sq}b"""
 
   /** The md5 coin that splits users into the A and B arms. */
   private val abCoinSql: String =
     """substring(md5(CAST(user_id AS VARCHAR) || ':ab42'), 1, 8)
-      |   < '80000000' AS is_a""".stripMargin.replace("\n", " ")
+      |   < '80000000' AS is_a"""
 
   /** Per event type: `g` splits the events by [[abCoinSql]] and `a`
     * holds the arms' [[abSumsSql]] (n_a, n_b, s_a, s_b, q_a, q_b), for
@@ -244,7 +241,7 @@ private[graft] object OracleSql {
        | value FROM events),
        |a AS (SELECT event_type,
        |  ${abSumsSql("n_", "s_", "q_")}
-       | FROM g GROUP BY 1 HAVING n_a > 1 AND n_b > 1)""".stripMargin.replace("\n", " ")
+       | FROM g GROUP BY 1 HAVING n_a > 1 AND n_b > 1)"""
 
   /** [[abMomentsCtes]] per event type and day, into `d` (d_na, d_nb,
     * d_sa, d_sb, d_qa, d_qb), over the events with a timestamp. */
@@ -254,7 +251,7 @@ private[graft] object OracleSql {
        | value FROM events WHERE ts IS NOT NULL),
        |d AS (SELECT event_type, day,
        |  ${abSumsSql("d_n", "d_s", "d_q")}
-       | FROM g GROUP BY 1, 2)""".stripMargin.replace("\n", " ")
+       | FROM g GROUP BY 1, 2)"""
 
   /** `name(cols, h)`: the hashes that seed the synthetic media's 64
     * samples, the [[fnv1aSql]] of "doc_id:i" for i in [0, 64); `cols`
@@ -265,7 +262,90 @@ private[graft] object OracleSql {
        | FROM (SELECT $cols,
        |   CAST(doc_id AS VARCHAR) || ':' || CAST(i AS VARCHAR) AS s
        |  FROM documents, LATERAL (SELECT unnest(generate_series(0, 63))
-       |   AS i) g) t)""".stripMargin.replace("\n", " ")
+       |   AS i) g) t)"""
+
+  /** The exact-cosine top 10 of each query over the candidate pairs
+    * `cands(query_id, neighbor_id)`, aliased `c`, ties to the lower
+    * neighbor_id; `q` aliases the query's embedding row. */
+  private def exactTop10Sql(cands: String, c: String, q: String = "q"): String =
+    s"""SELECT query_id, neighbor_id, cosine FROM (
+       | SELECT $c.query_id, $c.neighbor_id,
+       |  list_cosine_similarity(CAST($q.embedding AS DOUBLE[]),
+       |    CAST(n.embedding AS DOUBLE[])) AS cosine
+       | FROM $cands $c
+       | JOIN embeddings $q ON $q.vec_id = $c.query_id
+       | JOIN embeddings n ON n.vec_id = $c.neighbor_id) s
+       |QUALIFY row_number() OVER (PARTITION BY query_id
+       | ORDER BY cosine DESC, neighbor_id) <= 10"""
+
+  /** The 8-gram coverage of the token relation `src(doc_id, toks)`:
+    * `rtc(doc_id, tok_chars)`, the 8-gram occurrences `og(doc_id,
+    * start, ng)`, the 8-grams `du` found in two or more docs and the
+    * token positions `cpos(doc_id, p)` they cover. */
+  private def ngramCoverCtes(src: String): String =
+    s"""rtc AS (SELECT doc_id, CAST(list_sum(list_transform(toks,
+       |  x -> length(x))) AS BIGINT) AS tok_chars FROM $src),
+       |og AS (SELECT $src.doc_id, u.i - 1 AS start,
+       |  array_to_string($src.toks[u.i:u.i + 7], ' ') AS ng
+       | FROM $src, LATERAL (SELECT unnest(generate_series(1,
+       |   len($src.toks) - 7)) AS i) u
+       | WHERE len($src.toks) >= 8),
+       |du AS (SELECT ng FROM og GROUP BY ng
+       |  HAVING count(DISTINCT doc_id) >= 2),
+       |cpos AS (SELECT DISTINCT og.doc_id, u.p
+       | FROM og JOIN du USING (ng),
+       |  LATERAL (SELECT unnest(range(og.start, og.start + 8)) AS p) u)"""
+
+  /** The rows `t` and the rows to erase `e` (id % 53 = 3) of the
+    * three stores an erasure touches: the documents `f`, the winnow
+    * fingerprints `wn` ([[winnowFpCtes]]) and the ANN vectors `av`. */
+  private lazy val rtbfStoreCtes: String =
+    s"""$winnowFpCtes,
+       |f AS (SELECT CAST(count(*) AS BIGINT) AS t,
+       |  CAST(coalesce(sum(CASE WHEN doc_id % 53 = 3 THEN 1 ELSE 0 END),
+       |   0) AS BIGINT) AS e FROM documents),
+       |wn AS (SELECT CAST(count(*) AS BIGINT) AS t,
+       |  CAST(coalesce(sum(CASE WHEN doc_id % 53 = 3 THEN 1 ELSE 0 END),
+       |   0) AS BIGINT) AS e FROM w),
+       |av AS (SELECT CAST(count(*) AS BIGINT) AS t,
+       |  CAST(coalesce(sum(CASE WHEN vec_id % 53 = 3 THEN 1 ELSE 0 END),
+       |   0) AS BIGINT) AS e FROM embeddings)"""
+
+  /** Each user's activity on each event day: `g(target_day, user_id,
+    * active_today)` holds the users active in the 7 days up to
+    * `target_day`, flagged when active on that day itself. */
+  private val stickinessCtes: String =
+    """ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
+      | FROM events),
+      |days AS (SELECT DISTINCT day AS target_day FROM ud),
+      |fan AS (SELECT ud.user_id, d.target_day,
+      |  CASE WHEN ud.day = d.target_day THEN 1 ELSE 0 END AS is_today
+      | FROM ud JOIN days d
+      |  ON d.target_day BETWEEN ud.day AND ud.day + 6),
+      |g AS (SELECT target_day, user_id, max(is_today) AS active_today
+      | FROM fan GROUP BY 1, 2)"""
+
+  /** `m(mth, c)`: lineitem revenue per ship month, in exact cents
+    * times percent (a HUGEINT). */
+  private val monthlyRevenueCte: String =
+    """m AS (SELECT
+      |  date_trunc('month', CAST(l_shipdate AS DATE)) AS mth,
+      |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
+      |    * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS HUGEINT)
+      |   AS c
+      | FROM lineitem GROUP BY 1)"""
+
+  /** Holt-Winters' start over the monthly series `s(i, c, x)`: the
+    * first two years' mean levels `init(m1, m2)` and the first year's
+    * seasonal offsets `seas0(sl)`. */
+  private val holtWintersInitCtes: String =
+    """init AS (SELECT
+      |  (SELECT CAST(sum(c) AS DOUBLE) / 10000.0 / 12.0 FROM s
+      |    WHERE i <= 12) AS m1,
+      |  (SELECT CAST(sum(c) AS DOUBLE) / 10000.0 / 12.0 FROM s
+      |    WHERE i BETWEEN 13 AND 24) AS m2),
+      |seas0 AS (SELECT list(x - (SELECT m1 FROM init) ORDER BY i) AS sl
+      | FROM s WHERE i <= 12)"""
 
   // ---- DuckDB oracles --------------------------------------------------
 
@@ -276,14 +356,13 @@ private[graft] object OracleSql {
        | l_quantity AS quantity,
        | l_extendedprice AS sale_amount,
        | CAST(l_shipdate AS DATE) AS sale_date
-       |FROM lineitem $where""".stripMargin.replace("\n", " ")
+       |FROM lineitem $where"""
 
   private val cleanSalesSql: String =
     s"""SELECT * FROM (${salesSql("")}) s
        | WHERE sale_id IS NOT NULL AND product_id IS NOT NULL
        |   AND quantity IS NOT NULL AND sale_amount IS NOT NULL
-       |   AND sale_date IS NOT NULL AND quantity > 0 AND sale_amount > 0""".stripMargin
-      .replace("\n", " ")
+       |   AND sale_date IS NOT NULL AND quantity > 0 AND sale_amount > 0"""
 
   private val runReportSql: String =
     s"""WITH c AS ($cleanSalesSql),
@@ -296,12 +375,12 @@ private[graft] object OracleSql {
        | n_clean > 0
        |  AND round((n_total - n_clean) * 1.0 / n_total, 6) <= 0.05
        |  AND date_diff('day', lo, hi) + 1 - nd = 0 AS ok
-       |FROM ca, ta""".stripMargin.replace("\n", " ")
+       |FROM ca, ta"""
 
   private val summarySql: String =
     s"""SELECT product_id, sum(quantity) AS total_quantity,
        | sum(sale_amount) AS total_sale_amount
-       |FROM ($cleanSalesSql) c GROUP BY product_id""".stripMargin.replace("\n", " ")
+       |FROM ($cleanSalesSql) c GROUP BY product_id"""
 
   /** Shared perceptual-hash CTE chain (DuckDB dialect): replays the
     * mixed PNG/BMP synth's PIXELS from the double-FNV recipe
@@ -312,7 +391,7 @@ private[graft] object OracleSql {
     * exhaustive tail - no candidate rule anywhere. */
   private val phashSigCtes: String =
     s"""fold1 AS (SELECT doc_id, i,
-        |  CAST(${fnv1aSql("s", p = "    ", pp = "      ")}
+        |  CAST(${fnv1aSql("s")}
         |    AS VARCHAR) AS s2
         | FROM (SELECT doc_id, i,
         |   CAST(CASE WHEN doc_id % 10 = 1 THEN doc_id - 1 ELSE doc_id END
@@ -327,7 +406,7 @@ private[graft] object OracleSql {
         |  CAST((h // 65536) % 256 AS BIGINT) AS g,
         |  CAST((h // 16777216) % 256 AS BIGINT) AS b
         | FROM (SELECT doc_id, i,
-        |  ${fnv1aSql("s2", p = "    ", pp = "      ")}
+        |  ${fnv1aSql("s2")}
         |    AS h
         |  FROM fold1) u) v),
         |lum AS (SELECT doc_id, i, 299 * r + 587 * g + 114 * b AS l FROM px),
@@ -336,13 +415,13 @@ private[graft] object OracleSql {
         |   THEN (CAST(1 AS BIGINT) << ((a.i // 8) * 7 + (a.i % 8)))
         |   ELSE 0 END) AS BIGINT) AS dhash
         | FROM lum a JOIN lum b ON b.doc_id = a.doc_id AND b.i = a.i + 1
-        | WHERE a.i % 8 < 7 GROUP BY 1)""".stripMargin.replace("\n", " ")
+        | WHERE a.i % 8 < 7 GROUP BY 1)"""
 
   /** Gopher per-doc repetition PROFILE as a composable CTE chain
     * (appended after [[linedCtes]]): ends in `rep_profile` with
     * the text_repetition_profile output columns. */
   private val gopherProfileCtes: String =
-    ("""|rp AS (SELECT doc_id, toks, lines, paras,
+    ("""rp AS (SELECT doc_id, toks, lines, paras,
         |  length(array_to_string(toks, ' ')) AS tok_chars,
         |  len(lines) AS n_lines, len(paras) AS n_paras,
         |  coalesce(list_sum(list_transform(lines, s ->
@@ -399,7 +478,7 @@ private[graft] object OracleSql {
         |   d -> len(list_filter(g4, x -> x = d)) = maxc4))) AS BIGINT) / tok_chars
         |  ELSE 0.0 END AS top4gram_char_fraction
         |FROM mx)"""
-      ).stripMargin.replace("\n", " ")
+      )
 
   /** Duplicated-n-gram char-coverage (the dup-mass half) as a
     * composable CTE chain (appended after [[linedCtes]]): ends in
@@ -408,12 +487,11 @@ private[graft] object OracleSql {
     val gs = (5 to 10).map(n =>
         s"""CASE WHEN len(toks) < $n THEN CAST([] AS VARCHAR[])
            | ELSE list_transform(range(1, len(toks) - $n + 2),
-           |  i -> array_to_string(toks[i:i + $n - 1], ' ')) END AS g$n"""
-          .stripMargin).mkString(", ")
+           |  i -> array_to_string(toks[i:i + $n - 1], ' ')) END AS g$n""").mkString(", ")
       val ds = (5 to 10).map(n =>
         s"""list_transform(list_filter(range(1, len(g$n) + 1),
            | i -> len(list_filter(g$n, x -> x = g$n[i])) >= 2),
-           | i -> i - 1) AS ds$n""".stripMargin).mkString(", ")
+           | i -> i - 1) AS ds$n""").mkString(", ")
       val fr = (5 to 10).map(n =>
         s"""CASE WHEN tok_chars > 0 THEN
            | CAST(coalesce(list_sum(list_transform(range(1, len(toks) + 1),
@@ -421,16 +499,16 @@ private[graft] object OracleSql {
            |    s2 -> s2 <= t - 1 AND t - 1 < s2 + $n)) > 0
            |   THEN length(toks[t]) ELSE 0 END)), 0) AS BIGINT)
            |  / CAST(tok_chars AS BIGINT)
-           | ELSE 0.0 END AS dup${n}gram_char_fraction""".stripMargin)
+           | ELSE 0.0 END AS dup${n}gram_char_fraction""")
         .mkString(", ")
-    (s"""|mb AS (SELECT doc_id, toks,
+    (s"""mb AS (SELECT doc_id, toks,
          |  coalesce(list_sum(list_transform(toks, t -> length(t))), 0)
          |   AS tok_chars FROM t2),
          |mg AS (SELECT doc_id, toks, tok_chars, $gs FROM mb),
          |md AS (SELECT doc_id, toks, tok_chars, $ds FROM mg)
        |, dng AS (SELECT doc_id, CAST(tok_chars AS BIGINT) AS tok_chars, $fr
          |FROM md)"""
-     ).stripMargin.replace("\n", " ")
+     )
   }
 
   /** Shared lined-corpus CTE chain (DuckDB dialect): replays the
@@ -462,7 +540,7 @@ private[graft] object OracleSql {
       |  list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS toks,
       |  list_filter(string_split(text, chr(10)), x -> x <> '') AS lines,
       |  list_filter(string_split(text, chr(10) || chr(10)), x -> x <> '') AS paras
-      | FROM txt)""".stripMargin.replace("\n", " ")
+      | FROM txt)"""
 
   private val linedCtes: String = linedCtesFrom("documents")
 
@@ -497,7 +575,7 @@ private[graft] object OracleSql {
        |  WHEN 8 THEN text || ' ' || array_to_string(list_transform(
        |   range(1, ${padWords + 1}), i -> 'pad' || i), ' ')
        |  ELSE text || ' $T' END AS text
-       | FROM qraw)""".stripMargin.replace("\n", " ")
+       | FROM qraw)"""
   }
 
   /** The 7 Gopher quality metrics as a CTE over [[linedCtesFrom]]'s
@@ -529,11 +607,11 @@ private[graft] object OracleSql {
       |  CAST(len(list_filter(t2.toks, x -> regexp_matches(x, '[A-Za-z]')))
       |   AS BIGINT) / CAST(len(t2.toks) AS BIGINT)
       |  ELSE 0.0 END AS alpha_word_fraction,
-      | CAST(len(list_filter(""".stripMargin.replace("\n", " ") +
+      | CAST(len(list_filter(""" +
       stops +
       """, s -> list_contains(list_transform(t2.toks, x -> lower(x)), s)))
       |  AS BIGINT) AS stop_word_hits
-      |FROM t2 JOIN txt USING (doc_id))""".stripMargin.replace("\n", " ")
+      |FROM t2 JOIN txt USING (doc_id))"""
   }
 
   /** Doc-grain coverage gate oracle — the coverage chain at doc
@@ -553,7 +631,7 @@ private[graft] object OracleSql {
         |  CAST(coalesce(cc.dup_chars, 0) AS BIGINT) / tc.tok_chars
         |  ELSE 0.0 END <= 0.5 AS keep
         |FROM documents dd JOIN tc USING (doc_id)
-        |LEFT JOIN cc USING (doc_id)""".stripMargin.replace("\n", " ")
+        |LEFT JOIN cc USING (doc_id)"""
 
   /** Residual-text span removal oracle — shared VERBATIM by
     * `docs_dup_spans_apply` and its intake twin
@@ -575,7 +653,7 @@ private[graft] object OracleSql {
           |    ELSE t.toks[i] END), x -> x IS NOT NULL), ' '), '')
           |  AS clean_text
           |FROM t JOIN documents d USING (doc_id)
-          |LEFT JOIN cv USING (doc_id)""".stripMargin.replace("\n", " "))
+          |LEFT JOIN cv USING (doc_id)""")
 
   /** Fixed-bin PSI per quality metric over the qprof chain —
     * shared VERBATIM by `docs_quality_drift` and its streaming twin
@@ -587,7 +665,7 @@ private[graft] object OracleSql {
       // fixed-bin PSI per metric over the qprof chain: Laplace-0.5
       // smoothing over each metric's theoretical bucket count, the
       // events_value_psi convention
-      (s"""WITH $qualCorpusCte, ${linedCtesFrom("qd")}, $qualProfileCtes,
+      s"""WITH $qualCorpusCte, ${linedCtesFrom("qd")}, $qualProfileCtes,
          |st AS (__STACK__),
          |tg AS (SELECT metric, value, doc_id % 2 = 0 AS is_a FROM st),
          |bk AS (SELECT metric, is_a, __BUCKET__ AS bucket FROM tg),
@@ -608,7 +686,7 @@ private[graft] object OracleSql {
          | round(p_a, 6) AS p_a, round(p_b, 6) AS p_b,
          | round(psi_term, 6) AS psi_term,
          | round(psi_raw, 6) AS psi_total, psi_raw > 0.2 AS drifted
-         |FROM tt""").stripMargin.replace("\n", " ")
+         |FROM tt"""
         .replace("__STACK__", "SELECT doc_id, 'n_words' AS metric, CAST(n_words AS DOUBLE) AS value FROM qprof UNION ALL SELECT doc_id, 'mean_word_len' AS metric, CAST(mean_word_len AS DOUBLE) AS value FROM qprof UNION ALL SELECT doc_id, 'symbol_word_ratio' AS metric, CAST(symbol_word_ratio AS DOUBLE) AS value FROM qprof UNION ALL SELECT doc_id, 'bullet_line_fraction' AS metric, CAST(bullet_line_fraction AS DOUBLE) AS value FROM qprof UNION ALL SELECT doc_id, 'ellipsis_line_fraction' AS metric, CAST(ellipsis_line_fraction AS DOUBLE) AS value FROM qprof UNION ALL SELECT doc_id, 'alpha_word_fraction' AS metric, CAST(alpha_word_fraction AS DOUBLE) AS value FROM qprof UNION ALL SELECT doc_id, 'stop_word_hits' AS metric, CAST(stop_word_hits AS DOUBLE) AS value FROM qprof")
         .replace("__BUCKET__", "CASE metric WHEN 'n_words' THEN CAST((CASE WHEN value > 25 THEN 1 ELSE 0 END) + (CASE WHEN value > 50 THEN 1 ELSE 0 END) + (CASE WHEN value > 100 THEN 1 ELSE 0 END) + (CASE WHEN value > 200 THEN 1 ELSE 0 END) + (CASE WHEN value > 500 THEN 1 ELSE 0 END) AS BIGINT) WHEN 'mean_word_len' THEN CAST((CASE WHEN value > 2 THEN 1 ELSE 0 END) + (CASE WHEN value > 3 THEN 1 ELSE 0 END) + (CASE WHEN value > 5 THEN 1 ELSE 0 END) + (CASE WHEN value > 7 THEN 1 ELSE 0 END) + (CASE WHEN value > 10 THEN 1 ELSE 0 END) + (CASE WHEN value > 15 THEN 1 ELSE 0 END) AS BIGINT) WHEN 'symbol_word_ratio' THEN CAST((CASE WHEN value > 0.01 THEN 1 ELSE 0 END) + (CASE WHEN value > 0.05 THEN 1 ELSE 0 END) + (CASE WHEN value > 0.1 THEN 1 ELSE 0 END) + (CASE WHEN value > 0.2 THEN 1 ELSE 0 END) AS BIGINT) WHEN 'bullet_line_fraction' THEN CAST((CASE WHEN value > 0.1 THEN 1 ELSE 0 END) + (CASE WHEN value > 0.5 THEN 1 ELSE 0 END) + (CASE WHEN value > 0.9 THEN 1 ELSE 0 END) AS BIGINT) WHEN 'ellipsis_line_fraction' THEN CAST((CASE WHEN value > 0.1 THEN 1 ELSE 0 END) + (CASE WHEN value > 0.3 THEN 1 ELSE 0 END) AS BIGINT) WHEN 'alpha_word_fraction' THEN CAST((CASE WHEN value > 0.5 THEN 1 ELSE 0 END) + (CASE WHEN value > 0.8 THEN 1 ELSE 0 END) + (CASE WHEN value > 0.95 THEN 1 ELSE 0 END) AS BIGINT) WHEN 'stop_word_hits' THEN CAST((CASE WHEN value > 0.5 THEN 1 ELSE 0 END) + (CASE WHEN value > 1.5 THEN 1 ELSE 0 END) + (CASE WHEN value > 3.5 THEN 1 ELSE 0 END) + (CASE WHEN value > 7.5 THEN 1 ELSE 0 END) AS BIGINT) END")
         .replace("__HALFN__", "CASE metric WHEN 'n_words' THEN 3.0 WHEN 'mean_word_len' THEN 3.5 WHEN 'symbol_word_ratio' THEN 2.5 WHEN 'bullet_line_fraction' THEN 2.0 WHEN 'ellipsis_line_fraction' THEN 1.5 WHEN 'alpha_word_fraction' THEN 2.0 WHEN 'stop_word_hits' THEN 2.5 END")
@@ -641,7 +719,7 @@ private[graft] object OracleSql {
        |gflag AS (SELECT r.doc_id
        | FROM rep_profile r JOIN dng gg ON gg.doc_id = r.doc_id
        | JOIN qprof qq ON qq.doc_id = r.doc_id
-       | WHERE ($repAnySql OR $qualAnySql))""".stripMargin.replace("\n", " ")
+       | WHERE ($repAnySql OR $qualAnySql))"""
 
   /** Corpus-duplicated n-gram coverage CTE chain (DuckDB dialect),
     * appended after [[toksCte]]: 8-gram occurrences, the ≥2-distinct
@@ -667,19 +745,14 @@ private[graft] object OracleSql {
       |cc AS (SELECT c.doc_id,
       |  CAST(sum(length(t.toks[c.p + 1])) AS BIGINT) AS dup_chars
       | FROM cpos c JOIN t USING (doc_id) GROUP BY c.doc_id) """
-      .stripMargin.replace("\n", " ")
 
-  /** Shared token-array CTE for the text oracles (DuckDB dialect). */
-  /** `name(cols, toks)`: each document's whitespace tokens. `p` is
-    * the host's indent of the tokens line; its FROM line sits one
-    * space less deep. */
-  private def toksCteAs(name: String, cols: String = "doc_id, text",
-      p: String = "  "): String =
+  /** `name(cols, toks)`: each document's whitespace tokens. */
+  private def toksCteAs(name: String, cols: String = "doc_id, text"): String =
     s"""$name AS (SELECT $cols,
-       |${p}list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS toks
-       |${p.tail}FROM documents)""".stripMargin.replace("\n", " ")
+       |  list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS toks
+       | FROM documents)"""
 
-  private val toksCte: String = "WITH " + toksCteAs("t", p = " ")
+  private val toksCte: String = "WITH " + toksCteAs("t")
 
   /** Learned-quality-filter training replay (r15): the
     * [[graft.operators.QualityLr]] full-batch GD unrolled — exact
@@ -709,7 +782,6 @@ private[graft] object OracleSql {
         |  THEN 1.0 ELSE 0.0 END AS y
         | FROM ffs),
         |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM ff)"""
-        .stripMargin.replace("\n", " ")
     def wCte(k: Int): String = {
       val prev = if (k == 1) (0 until 5).map(_ => "0.0")
         else (0 until 5).map(j => s"w${k - 1}.w$j")
@@ -746,7 +818,7 @@ private[graft] object OracleSql {
          | WHEN dp.a2 * c.p3 >= dp.a1 * c.p2
          |  AND dp.a2 * c.p3 >= dp.a0 * c.p1 THEN $expr3
          | WHEN dp.a1 * c.p2 >= dp.a0 * c.p1 THEN $expr2
-         | ELSE $expr1 END""".stripMargin.replace("\n", " ")
+         | ELSE $expr1 END"""
     s"""${name}_cand AS (SELECT w.word, i.i, l.l,
        |  substr(w.word, CAST(i.i - l.l + 1 AS INTEGER),
        |   CAST(l.l AS INTEGER)) AS piece
@@ -793,7 +865,7 @@ private[graft] object OracleSql {
        | SELECT word, CAST(len(word) AS BIGINT),
        |  list_transform(range(1, CAST(len(word) + 1 AS BIGINT)),
        |   i -> substr(word, CAST(i AS INTEGER), 1))
-       | FROM wt WHERE len(word) > 32)""".stripMargin.replace("\n", " ")
+       | FROM wt WHERE len(word) > 32)"""
   }
 
   private def unigramTrainCtes: String =
@@ -839,7 +911,7 @@ private[graft] object OracleSql {
        |  FROM v1 v LEFT JOIN u2 u USING (piece)) z WHERE sm > 0),
        |p2 AS MATERIALIZED (SELECT piece,
        |  CAST(sm / CAST((SELECT sum(sm) FROM v2) AS DOUBLE) AS FLOAT) AS p
-       | FROM v2)""".stripMargin.replace("\n", " ")
+       | FROM v2)"""
 
   /** Trigram document frequencies: `t` holds each doc's lower-cased
     * tokens, `g(doc_id, grams)` its distinct trigrams, `inv(doc_id,
@@ -850,7 +922,7 @@ private[graft] object OracleSql {
        | FROM documents),
        |g AS (SELECT doc_id, $trigramSetSql AS grams FROM t),
        |inv AS (SELECT doc_id, unnest(grams) AS gram FROM g),
-       |d AS (SELECT gram, count(*) AS df FROM inv GROUP BY 1)""".stripMargin.replace("\n", " ")
+       |d AS (SELECT gram, count(*) AS df FROM inv GROUP BY 1)"""
 
   /** [[gramDfCtes]] and the blocked candidate pairs `p(id_a, id_b)`:
     * at least three shared trigrams of df in [2, 64]. */
@@ -859,7 +931,7 @@ private[graft] object OracleSql {
        |p AS (SELECT a.doc_id AS id_a, c.doc_id AS id_b
        |  FROM inv a JOIN d ON d.gram = a.gram JOIN inv c ON c.gram = a.gram
        |  WHERE a.doc_id < c.doc_id AND d.df BETWEEN 2 AND 64
-       |  GROUP BY 1, 2 HAVING count(*) >= 3)""".stripMargin.replace("\n", " ")
+       |  GROUP BY 1, 2 HAVING count(*) >= 3)"""
 
   /** Verified blocked near-dup pairs as a CTE chain ending in
     * `m(id_a, id_b)` — the DuckDB mirror of
@@ -873,7 +945,6 @@ private[graft] object OracleSql {
       | WHERE CAST(len(list_intersect(ga.grams, gb.grams)) AS DOUBLE)
       |  / (len(ga.grams) + len(gb.grams)
       |     - len(list_intersect(ga.grams, gb.grams))) >= 0.5) """
-      .stripMargin.replace("\n", " ")
 
   // ---- minhash oracle machinery (r10) --------------------------------
   // The fused FNV shingle kernel + the 64 seeded minhash permutations
@@ -903,7 +974,7 @@ private[graft] object OracleSql {
     * (r, bucket) counter table. */
   private def cmsCtes: String =
     s"""ti AS MATERIALIZED (SELECT t,
-       |  ${fnv1aSql("t", b = "c", p = "   ", pp = "    ")}
+       |  ${fnv1aSql("t", b = "c")}
        |   AS th
        | FROM (SELECT list_filter(
        |    regexp_split_to_array(lower(text), '\\s+'), x -> x <> '') AS toks
@@ -915,7 +986,7 @@ private[graft] object OracleSql {
        | FROM (SELECT pm.r,
        |   CAST((a_lo * th + ((a_hi * th) % 4294967296) * 4294967296 + b)
        |    % 18446744073709551616 // 18014398509481984 AS BIGINT) AS bucket
-       |  FROM ti, pm) b GROUP BY 1, 2)""".stripMargin
+       |  FROM ti, pm) b GROUP BY 1, 2)"""
 
   /** Spherical-k-means replay, two Lloyd iterations unrolled (the
     * MMR/pagerank CTE pattern on VECTOR state): assignment =
@@ -929,7 +1000,7 @@ private[graft] object OracleSql {
   private def kmeansCtes: String = {
     def assign(cents: String) =
       s"""(SELECT vec_id, cell FROM (
-         | ${ivfRankSql(cents, p = "    ", pp = "      ")}) x WHERE rn = 1)"""
+         | ${ivfRankSql(cents)}) x WHERE rn = 1)"""
     def update(assigned: String, prev: String) =
       s"""(SELECT p.cell,
          |  coalesce(m.emb, CAST(p.embedding AS FLOAT[])) AS embedding
@@ -951,7 +1022,7 @@ private[graft] object OracleSql {
        |a1 AS MATERIALIZED ${assign("c1")},
        |c2 AS MATERIALIZED ${update("a1", "c1")},
        |fa AS MATERIALIZED (SELECT vec_id, CAST(cell AS BIGINT) AS cell
-       | FROM ${assign("c2")} f)""".stripMargin
+       | FROM ${assign("c2")} f)"""
   }
 
   /** Scene-structure replay: the frame grid + the stub decode's
@@ -970,7 +1041,6 @@ private[graft] object OracleSql {
       |  END AS ml FROM f),
       |d AS (SELECT doc_id, frame_idx, ml, lag(ml) OVER (
       |  PARTITION BY doc_id ORDER BY frame_idx) AS pml FROM l)"""
-      .stripMargin
 
   /** Shared BPE-training CTE chain: word counts → char split (`s0`)
     * → 6 unrolled (pair-count, argmax `b{i}`, merge-fold `s{i}`)
@@ -1001,7 +1071,7 @@ private[graft] object OracleSql {
          |     THEN acc[1:len(acc) - 1] || [bi.a || bi.b]
          |     ELSE acc || xs END)
          |  END AS syms
-         | FROM $prev LEFT JOIN b$i bi ON TRUE)""".stripMargin
+         | FROM $prev LEFT JOIN b$i bi ON TRUE)"""
     }.mkString(",\n")
     s"""w AS (SELECT tok AS word, CAST(count(*) AS BIGINT) AS n
        | FROM (SELECT unnest(list_filter(
@@ -1010,7 +1080,7 @@ private[graft] object OracleSql {
        |s0 AS MATERIALIZED (SELECT word, n,
        |  list_transform(range(1, length(word) + 1),
        |   i -> substr(word, i, 1)) AS syms FROM w),
-       |$iters""".stripMargin
+       |$iters"""
   }
 
   /** Shared CTE prefix: documents → token hashes → distinct shingle
@@ -1019,7 +1089,7 @@ private[graft] object OracleSql {
   private def shingleCtes: String =
     s"""tok AS MATERIALIZED (
        | SELECT doc_id, i AS pos,
-       |  ${fnv1aSql("t", b = "c", p = "   ", pp = "    ")}
+       |  ${fnv1aSql("t", b = "c")}
        |   AS th
        | FROM (SELECT doc_id, list_filter(
        |    regexp_split_to_array(lower(text), '\\s+'), x -> x <> '') AS toks
@@ -1043,7 +1113,7 @@ private[graft] object OracleSql {
        |    * 1099511628211 % 18446744073709551616) AS shv
        | FROM (SELECT a.doc_id, list_value(c.th, b.th, a.th) AS ths
        |  FROM tok a JOIN tok b ON b.doc_id = a.doc_id AND b.pos = a.pos - 1
-       |  JOIN tok c ON c.doc_id = a.doc_id AND c.pos = a.pos - 2) w)""".stripMargin
+       |  JOIN tok c ON c.doc_id = a.doc_id AND c.pos = a.pos - 2) w)"""
 
   /** [[shingleCtes]] → per-perm minhash (`mh`) → banded signature
     * slices (`sig`). Consumers append their own tail. */
@@ -1058,7 +1128,7 @@ private[graft] object OracleSql {
        | FROM sh, pm GROUP BY 1, 2),
        |sig AS MATERIALIZED (
        | SELECT doc_id, p // 4 AS band, list(mv ORDER BY p) AS band_key
-       | FROM mh GROUP BY doc_id, p // 4)""".stripMargin
+       | FROM mh GROUP BY doc_id, p // 4)"""
 
   /** [[minhashSigCtes]] extended through candidate generation and
     * exact-Jaccard verification: `verified` = (id_a, id_b, jaccard)
@@ -1083,7 +1153,7 @@ private[graft] object OracleSql {
        | JOIN sizes sa ON sa.doc_id = i.id_a
        | JOIN sizes sb ON sb.doc_id = i.id_b
        | WHERE CAST(i.n_shared AS DOUBLE)
-       |   / greatest(sa.n + sb.n - i.n_shared, 1) >= 0.4)""".stripMargin
+       |   / greatest(sa.n + sb.n - i.n_shared, 1) >= 0.4)"""
 
   /** SimHash oracle (r10): the same FNV token hashes, per-bit votes
     * folded as integer sums, 16-bit band slices, Hamming via
@@ -1091,7 +1161,7 @@ private[graft] object OracleSql {
   private def simhashOracle: String =
     s"""WITH tok AS MATERIALIZED (
        | SELECT doc_id,
-       |  ${fnv1aSql("t", b = "c", p = "   ", pp = "    ")}
+       |  ${fnv1aSql("t", b = "c")}
        |   AS th
        | FROM (SELECT doc_id, list_filter(regexp_split_to_array(
        |    trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), '\\s+'),
@@ -1126,7 +1196,6 @@ private[graft] object OracleSql {
        |${dupSidesCte("CAST(sim AS DOUBLE)")},
        |$dupPerdocCte
        |${dupKeepSql()}"""
-      .stripMargin.replace("\n", " ")
 
   /** Char-n-gram Jaccard oracle (r10): the rolling polynomial gram
     * hash has a CLOSED FORM (Σ byteⱼ·B^(n−1−j) mod 2⁶⁴ — no
@@ -1179,7 +1248,6 @@ private[graft] object OracleSql {
        |${dupSidesCte("jaccard")},
        |$dupPerdocCte
        |${dupKeepSql()}"""
-      .stripMargin.replace("\n", " ")
   }
 
   // ---- hyperplane-LSH oracle machinery (r10) -------------------------
@@ -1221,7 +1289,7 @@ private[graft] object OracleSql {
        |  CAST(list_sum(list_transform(range(1, 65), i ->
        |    pcomp.w[i] * (CAST(e.embedding[i] AS DOUBLE) - pmean.m[i])))
        |   AS FLOAT) AS v
-       | FROM embeddings e, pcomp, pmean)""".stripMargin
+       | FROM embeddings e, pcomp, pmean)"""
   }
 
   /** Signature CTE over `embeddings` for a plane set: one row per
@@ -1234,7 +1302,7 @@ private[graft] object OracleSql {
        |  CAST(sum(CASE WHEN list_inner_product(
        |    CAST(e.embedding AS DOUBLE[]), pl.w) > 0
        |   THEN CAST(1 AS BIGINT) << pl.p ELSE 0 END) AS BIGINT) AS sig
-       | FROM embeddings e, pl GROUP BY 1, 2)""".stripMargin
+       | FROM embeddings e, pl GROUP BY 1, 2)"""
 
   /** Candidate/verified-pair tail shared by the embedding dedup
     * oracles: bucket by (tbl, sig), cap 64, exact-cosine verify. */
@@ -1249,7 +1317,7 @@ private[graft] object OracleSql {
        | JOIN embeddings ea ON ea.vec_id = p.id_a
        | JOIN embeddings eb ON eb.vec_id = p.id_b
        | WHERE list_cosine_similarity(CAST(ea.embedding AS DOUBLE[]),
-       |   CAST(eb.embedding AS DOUBLE[])) >= $tau)""".stripMargin
+       |   CAST(eb.embedding AS DOUBLE[])) >= $tau)"""
 
   // ---- xxhash64 oracle machinery (r10) -------------------------------
   // Spark's xxhash64-of-long is xxHash64's one-round path with fixed
@@ -1338,7 +1406,7 @@ private[graft] object OracleSql {
     * `asg(doc_id, asig)`. */
   private lazy val audioSigCtes: String = {
     val (frags, ref) = Xx64Sql.hashLong("au", "base.k", "42")
-    (s"""base AS (SELECT doc_id, i,
+    s"""base AS (SELECT doc_id, i,
        |  CAST((CASE WHEN doc_id % 10 = 1 THEN doc_id - 1
        |    ELSE doc_id END) * 64 + i AS HUGEINT) AS k
        | FROM documents, LATERAL (SELECT
@@ -1356,7 +1424,7 @@ private[graft] object OracleSql {
        |   THEN (CAST(1 AS BIGINT) << CAST(a.i AS INTEGER))
        |   ELSE 0 END), 0) AS BIGINT) AS asig
        | FROM vv a JOIN vv b ON b.doc_id = a.doc_id AND b.i = a.i + 1
-       | WHERE a.i < 63 GROUP BY 1)""").stripMargin.replace("\n", " ")
+       | WHERE a.i < 63 GROUP BY 1)"""
   }
 
   /** EXHAUSTIVE corpus × benchmark-slice comparison (no candidate
@@ -1388,8 +1456,7 @@ private[graft] object OracleSql {
         | CAST(coalesce(a.bench_id, -1) AS BIGINT) AS bench_id,
         | coalesce(a.best_cosine, -1.0) AS best_cosine,
         | coalesce(a.n_bench_matches, 0) > 0 AS contaminated
-        |FROM cc LEFT JOIN agg a USING (vec_id)""".stripMargin
-        .replace("\n", " ")
+        |FROM cc LEFT JOIN agg a USING (vec_id)"""
 
   /** Offset-fixture winnowed-fingerprint replay (r14): xxhash64
     * samples (stride 192 = the fixture's nSamples; doc_id % 10 == 1
@@ -1399,7 +1466,7 @@ private[graft] object OracleSql {
     * `wsg(doc_id, wsig)`, the operator's fingerprint relation. */
   private lazy val audioWinnowCtes: String = {
     val (frags, ref) = Xx64Sql.hashLong("aw", "wbase.k", "42")
-    (s"""wbase AS (SELECT d.doc_id,
+    s"""wbase AS (SELECT d.doc_id,
        |  CAST(CASE WHEN d.doc_id % 20 = 1 THEN 155
        |   WHEN d.doc_id % 20 = 11 THEN 229 ELSE 192 END
        |   AS BIGINT) AS n, g.j,
@@ -1443,7 +1510,7 @@ private[graft] object OracleSql {
        |   AND ps.p >= ww.w AND ps.p <= least(ww.w + 15, ww.n - 64)
        | GROUP BY 1, 2),
        |wsg AS MATERIALIZED (SELECT DISTINCT doc_id, sel AS wsig
-       | FROM wsel)""").stripMargin.replace("\n", " ")
+       | FROM wsel)"""
   }
 
   /** Capped-bucket pair expansion over `wsg` — mirrors the operator's
@@ -1458,7 +1525,7 @@ private[graft] object OracleSql {
       |wpair AS (SELECT a.d AS id_a, b.d AS id_b
       | FROM wbkt, LATERAL (SELECT unnest(ds) AS d) a,
       |  LATERAL (SELECT unnest(ds) AS d) b
-      | WHERE a.d < b.d)""".stripMargin.replace("\n", " ")
+      | WHERE a.d < b.d)"""
 
   /** Crop-fixture winnowed image fingerprint replay (r15) — the
     * [[graft.operators.Multimodal.imageWinnowSignatures]] pipeline
@@ -1496,7 +1563,7 @@ private[graft] object OracleSql {
       |  AND gy.y < CASE WHEN d.doc_id % 20 = 1 THEN 8
       |   WHEN d.doc_id % 20 = 11 THEN 16 ELSE 12 END),
       |iwf1 AS (SELECT doc_id, w, x, y,
-      |  CAST(${fnv1aSql("s", p = "    ", pp = "      ")}
+      |  CAST(${fnv1aSql("s")}
       |    AS VARCHAR) AS s2
       | FROM iw0),
       |ilum AS (SELECT doc_id, w, x, y,
@@ -1504,7 +1571,7 @@ private[graft] object OracleSql {
       |   + 587 * CAST((h // 65536) % 256 AS BIGINT)
       |   + 114 * CAST((h // 16777216) % 256 AS BIGINT) AS l
       | FROM (SELECT doc_id, w, x, y,
-      |  ${fnv1aSql("s2", p = "    ", pp = "      ")}
+      |  ${fnv1aSql("s2")}
       |    AS h
       |  FROM iwf1) u),
       |ill AS MATERIALIZED (SELECT doc_id, w,
@@ -1547,7 +1614,7 @@ private[graft] object OracleSql {
       |ipair AS (SELECT a.d AS id_a, b.d AS id_b
       | FROM ibkt, LATERAL (SELECT unnest(ds) AS d) a,
       |  LATERAL (SELECT unnest(ds) AS d) b
-      | WHERE a.d < b.d)""".stripMargin.replace("\n", " ")
+      | WHERE a.d < b.d)"""
 
   /** IVF centroid-pick replay (r10): Similarity.pickCentroids over
     * `embeddings` rows matching `srcWhere` — hash-thin by
@@ -1575,7 +1642,7 @@ private[graft] object OracleSql {
        |${pfx}cents AS MATERIALIZED (SELECT row_number() OVER
        |  (ORDER BY ho, vec_id) - 1 AS cell, embedding
        | FROM (SELECT ho, vec_id, embedding FROM ${pfx}thin
-       |  ORDER BY ho, vec_id LIMIT $pick) s)""".stripMargin
+       |  ORDER BY ho, vec_id LIMIT $pick) s)"""
   }
 
   /** PQ tail over a pick of `nCodes` sample vectors (`cents` CTE,
@@ -1599,16 +1666,16 @@ private[graft] object OracleSql {
               |probes AS (SELECT vec_id AS query_id, cell FROM (
               | ${ivfRankSql("icents")} WHERE e.vec_id % 100 = 0) x
               | WHERE rn <= $nprobe),
-              |""".stripMargin
+              |"""
     val candSrc =
       if (useIvf)
         """FROM probes p JOIN assigned a ON a.cell = p.cell
           | JOIN recon r ON r.vec_id = a.vec_id
           | JOIN embeddings q ON q.vec_id = p.query_id
-          | WHERE a.vec_id != p.query_id""".stripMargin
+          | WHERE a.vec_id != p.query_id"""
       else
         """FROM embeddings q, recon r
-          | WHERE q.vec_id % 100 = 0 AND r.vec_id != q.vec_id""".stripMargin
+          | WHERE q.vec_id % 100 = 0 AND r.vec_id != q.vec_id"""
     val candSel =
       if (useIvf) "p.query_id, a.vec_id AS neighbor_id"
       else "q.vec_id AS query_id, r.vec_id AS neighbor_id"
@@ -1632,15 +1699,7 @@ private[graft] object OracleSql {
        |   ORDER BY list_cosine_similarity(
        |     CAST(q.embedding AS DOUBLE[]), r.x) DESC, $ordId) AS rn
        | $candSrc) s WHERE rn <= $budget)
-       |SELECT query_id, neighbor_id, cosine FROM (
-       | SELECT a.query_id, a.neighbor_id,
-       |  list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-       |    CAST(n.embedding AS DOUBLE[])) AS cosine
-       | FROM apx a
-       | JOIN embeddings q ON q.vec_id = a.query_id
-       | JOIN embeddings n ON n.vec_id = a.neighbor_id) s
-       |QUALIFY row_number() OVER (PARTITION BY query_id
-       | ORDER BY cosine DESC, neighbor_id) <= 10""".stripMargin
+       |${exactTop10Sql("apx", "a")}"""
   }
 
   /** Residual IVF-PQ oracle (r10): the full trained pipeline —
@@ -1734,16 +1793,7 @@ private[graft] object OracleSql {
        | JOIN recon r ON r.vec_id = a.vec_id
        | JOIN embeddings q ON q.vec_id = p.query_id
        | WHERE a.vec_id != p.query_id) s WHERE rn <= 160)
-       |SELECT query_id, neighbor_id, cosine FROM (
-       | SELECT a.query_id, a.neighbor_id,
-       |  list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-       |    CAST(n.embedding AS DOUBLE[])) AS cosine
-       | FROM apx a
-       | JOIN embeddings q ON q.vec_id = a.query_id
-       | JOIN embeddings n ON n.vec_id = a.neighbor_id) s
-       |QUALIFY row_number() OVER (PARTITION BY query_id
-       | ORDER BY cosine DESC, neighbor_id) <= 10"""
-      .stripMargin.replace("\n", " ")
+       |${exactTop10Sql("apx", "a")}"""
   }
 
   /** Argmax cell assignment + nprobe-cell probe + exact-cosine
@@ -1759,17 +1809,20 @@ private[graft] object OracleSql {
        |cand AS (SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id
        | FROM probes p JOIN assigned a ON a.cell = p.cell
        | WHERE a.vec_id != p.query_id)
-       |SELECT query_id, neighbor_id, cosine FROM (
-       | SELECT c.query_id, c.neighbor_id,
-       |  list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-       |    CAST(n.embedding AS DOUBLE[])) AS cosine
-       | FROM cand c
-       | JOIN embeddings q ON q.vec_id = c.query_id
-       | JOIN embeddings n ON n.vec_id = c.neighbor_id) s
-       |QUALIFY row_number() OVER (PARTITION BY query_id
-       | ORDER BY cosine DESC, neighbor_id) <= 10""".stripMargin
+       |${exactTop10Sql("cand", "c")}"""
 
-  /** Every key's oracle, built once per JVM. */
+  /** A quoted SQL literal ('…', whose '' escape reads as two adjacent
+    * literals) or identifier ("…"), else a run of whitespace. */
+  private val quotedOrSpace: Regex = """('[^']*'|"[^"]*")|\s+""".r
+
+  /** An oracle as it ships, on one line: the margins stripped, each
+    * run of whitespace outside quoted text one space, the ends
+    * trimmed. Quoted text is kept byte for byte. */
+  private[graft] def flat(sql: String): String =
+    quotedOrSpace.replaceAllIn(sql.stripMargin,
+      m => Regex.quoteReplacement(Option(m.group(1)).getOrElse(" "))).trim
+
+  /** Every key's oracle, built once per JVM and shipped [[flat]]. */
   lazy val oracleSql: Map[String, String] = {
     val m = base
     // result-parity keys: same semantics, different physical strategy
@@ -1830,7 +1883,7 @@ private[graft] object OracleSql {
           |  CAST(row_number() OVER (PARTITION BY source
           |    ORDER BY doc_id) AS BIGINT) AS admit_rank
           | FROM documents) r
-          |WHERE admit_rank <= 10""".stripMargin.replace("\n", " ")) +
+          |WHERE admit_rank <= 10""") +
       // doc_id-ordered running token sum == the cumulative window:
       // the sum only grows, so "admit while ≤ budget" is exactly
       // cumsum-including ≤ budget
@@ -1843,9 +1896,8 @@ private[graft] object OracleSql {
           |   ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND
           |   CURRENT ROW) AS BIGINT) AS used_tokens FROM n)
           |SELECT source, doc_id, n_tokens, used_tokens
-          |FROM c WHERE used_tokens <= 800""".stripMargin
-          .replace("\n", " "))
-  }
+          |FROM c WHERE used_tokens <= 800""")
+  }.map { case (k, sql) => k -> flat(sql) }
 
   /** Shared CTE chain of the full curation pipeline (through the
     * source-cap stage, plus the residual-token billing relation) —
@@ -1858,30 +1910,19 @@ private[graft] object OracleSql {
     * legacy stages keep their exact prior SQL (raw-corpus CTEs
     * renamed rt/cp to coexist with the fixture chain's t/p). */
   private val curateFullCtes: String =
-    (s"""WITH $qualCorpusCte, ${linedCtesFrom("qd")},
+    s"""WITH $qualCorpusCte, ${linedCtesFrom("qd")},
         |$gopherFlagCtes,
         |${toksCteAs("rt")},
         |sc AS (SELECT doc_id,
         |  CAST(len(toks) AS BIGINT) AS n_tokens,
-        |  ${qualityScoreSql()} FROM rt),
+        |  ${qualityScoreSql} FROM rt),
         |q AS (SELECT doc_id FROM sc
         | WHERE n_tokens >= 20 AND n_tokens <= 100000 AND quality_score >= 0.2
         |  AND doc_id NOT IN (SELECT doc_id FROM gflag)),
         |dd AS (SELECT min(doc_id) AS doc_id FROM (SELECT doc_id,
         |  trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS norm
         |  FROM documents WHERE doc_id IN (SELECT doc_id FROM q)) nn GROUP BY norm),
-        |rtc AS (SELECT doc_id, CAST(list_sum(list_transform(toks,
-        |  x -> length(x))) AS BIGINT) AS tok_chars FROM rt),
-        |og AS (SELECT rt.doc_id, u.i - 1 AS start,
-        |  array_to_string(rt.toks[u.i:u.i + 7], ' ') AS ng
-        | FROM rt, LATERAL (SELECT unnest(generate_series(1,
-        |   len(rt.toks) - 7)) AS i) u
-        | WHERE len(rt.toks) >= 8),
-        |du AS (SELECT ng FROM og GROUP BY ng
-        |  HAVING count(DISTINCT doc_id) >= 2),
-        |cpos AS (SELECT DISTINCT og.doc_id, u.p
-        | FROM og JOIN du USING (ng),
-        |  LATERAL (SELECT unnest(range(og.start, og.start + 8)) AS p) u),
+        |${ngramCoverCtes("rt")},
         |cc AS (SELECT c.doc_id,
         |  CAST(sum(length(rt.toks[c.p + 1])) AS BIGINT) AS dup_chars,
         |  CAST(count(*) AS BIGINT) AS n_cov
@@ -1936,8 +1977,7 @@ private[graft] object OracleSql {
         | FROM sup JOIN sc ON sc.doc_id = sup.doc_id) r WHERE rk <= 10),
         |rsc AS (SELECT sc.doc_id, sc.n_tokens,
         |  CAST(sc.n_tokens - coalesce(cc.n_cov, 0) AS BIGINT) AS n_res,
-        |  sc.quality_score FROM sc LEFT JOIN cc USING (doc_id))""")
-      .stripMargin.replace("\n", " ")
+        |  sc.quality_score FROM sc LEFT JOIN cc USING (doc_id))"""
 
   /** Shared front half of the etl_entity_* oracles: the dirty-CRM
     * derivation from `customer` (EntityResolution.synthCrmCorpus
@@ -1956,7 +1996,7 @@ private[graft] object OracleSql {
       |w AS (SELECT doc_id, unnest(list_distinct(CASE WHEN len(grams) >= 4
       |  THEN list_transform(range(1, len(grams) - 2),
       |   j -> list_min(grams[j:j+3]))
-      |  ELSE grams END)) AS fp FROM g)""".stripMargin
+      |  ELSE grams END)) AS fp FROM g)"""
 
   private val crmPairsCte: String =
     """WITH nm AS (SELECT c_custkey AS k,
@@ -1990,7 +2030,7 @@ private[graft] object OracleSql {
       |  CAST(levenshtein(a.norm, b.norm) AS BIGINT) AS lev
       | FROM nbk a JOIN nbk b ON a.block = b.block AND a.rec_id < b.rec_id
       |  AND abs(a.len - b.len) <= 1
-      | WHERE levenshtein(a.norm, b.norm) <= 1)""".stripMargin
+      | WHERE levenshtein(a.norm, b.norm) <= 1)"""
 
   /** [[crmPairsCte]] closed into entities: the min-label closure over
     * the `pr` edges, ending in `lab(rec_id, entity_id)`. */
@@ -2001,16 +2041,16 @@ private[graft] object OracleSql {
       |reach AS (SELECT rec_id, rec_id AS r FROM recs
       |  UNION
       |  SELECT reach.rec_id, e.dst FROM reach JOIN e ON e.src = reach.r),
-      |lab AS (SELECT rec_id, min(r) AS entity_id FROM reach GROUP BY 1)""".stripMargin
+      |lab AS (SELECT rec_id, min(r) AS entity_id FROM reach GROUP BY 1)"""
 
   private def base: Map[String, String] = Map(
     "etl_extract_typed" -> salesSql("WHERE l_linestatus = 'F'"),
     "etl_union_sources" ->
-      ("""SELECT l_orderkey * 10 + l_linenumber AS sale_id, l_partkey AS product_id,
+      """SELECT l_orderkey * 10 + l_linenumber AS sale_id, l_partkey AS product_id,
          | l_quantity AS quantity, l_extendedprice AS sale_amount,
          | CAST(l_shipdate AS DATE) AS sale_date,
          | CASE WHEN l_linestatus = 'O' THEN 'online' ELSE 'store' END AS source
-         |FROM lineitem""".stripMargin.replace("\n", " ")),
+         |FROM lineitem""",
     "etl_clean" -> cleanSalesSql,
     "etl_run_report" -> runReportSql,
     "etl_grain_check" ->
@@ -2034,8 +2074,7 @@ private[graft] object OracleSql {
          |   AS n_dup_rows,
          |  max(m) AS max_multiplicity FROM g2)
          |SELECT *, n_dup_keys = 0 AS grain_ok FROM r1
-         |UNION ALL SELECT *, n_dup_keys = 0 AS grain_ok FROM r2""".stripMargin
-        .replace("\n", " "),
+         |UNION ALL SELECT *, n_dup_keys = 0 AS grain_ok FROM r2""",
     "etl_freshness" ->
       // per-feed day-grain collapse → max_by scalars → cross-feed
       // global max; lag vs the freshest sibling feed, not wall-clock
@@ -2054,14 +2093,13 @@ private[graft] object OracleSql {
          |  AS days_behind,
          | n_rows, rows_last_day,
          | date_diff('day', last_day, global_day) > 2 AS stale
-         |FROM f, g""".stripMargin.replace("\n", " "),
+         |FROM f, g""",
     "etl_sales_summary" -> summarySql,
     "etl_daily_product_summary" ->
       s"""SELECT product_id, sale_date, sum(quantity) AS total_quantity,
          | sum(sale_amount) AS total_sale_amount, count(*) AS num_sales,
          | avg(sale_amount) AS avg_sale_amount
-         |FROM ($cleanSalesSql) c GROUP BY product_id, sale_date""".stripMargin
-        .replace("\n", " "),
+         |FROM ($cleanSalesSql) c GROUP BY product_id, sale_date""",
     "etl_load_validated" -> summarySql,
     "etl_upsert" -> {
       def src(status: String) =
@@ -2069,12 +2107,11 @@ private[graft] object OracleSql {
            | sum(sale_amount) AS total_sale_amount
            |FROM (${salesSql(s"WHERE l_linestatus = '$status'")}) s
            |WHERE quantity > 0 AND sale_amount > 0
-           |GROUP BY product_id""".stripMargin.replace("\n", " ")
+           |GROUP BY product_id"""
       s"""WITH f AS (${src("F")}), o AS (${src("O")})
          |SELECT * FROM o UNION ALL
          |SELECT f.* FROM f WHERE NOT EXISTS
-         | (SELECT 1 FROM o WHERE o.product_id = f.product_id)""".stripMargin
-        .replace("\n", " ")
+         | (SELECT 1 FROM o WHERE o.product_id = f.product_id)"""
     },
     "etl_sales_summary_salted" -> summarySql,
     "etl_backfill_plan" ->
@@ -2085,7 +2122,7 @@ private[graft] object OracleSql {
          |  AS DATE) AS day FROM b)
          |SELECT s.day, coalesce(d.n_rows, 0) AS n_rows,
          | d.n_rows IS NULL AS is_gap
-         |FROM s LEFT JOIN d ON d.day = s.day""".stripMargin.replace("\n", " "),
+         |FROM s LEFT JOIN d ON d.day = s.day""",
     // entity resolution: the dirty-CRM derivation (syllable-encoded
     // custkey names + deterministic deletion typos), normalization,
     // prefix blocking with the length band, and the thresholded
@@ -2095,11 +2132,11 @@ private[graft] object OracleSql {
       (crmPairsCte + """
         |SELECT rec_a, rec_b, lev,
         | CASE WHEN lev = 0 THEN 'exact_norm' ELSE 'fuzzy' END AS rule
-        |FROM pr""").stripMargin.replace("\n", " "),
+        |FROM pr"""),
     "etl_entity_groups" ->
       (crmEntityCtes + """
         |SELECT rec_id, entity_id, rec_id = entity_id AS keep
-        |FROM lab""").stripMargin.replace("\n", " "),
+        |FROM lab"""),
     "etl_entity_golden" ->
       (crmEntityCtes + """,
         |m AS (SELECT l.rec_id, l.entity_id, nb.src, nb.nationkey,
@@ -2117,7 +2154,7 @@ private[graft] object OracleSql {
         | r.nationkey, round(r.acctbal, 2) AS acctbal, a.n_members,
         | a.n_sources, a.nation_conflict, a.acctbal_max
         |FROM rn r JOIN ag a USING (entity_id)
-        |WHERE r.rk = 1""").stripMargin.replace("\n", " "),
+        |WHERE r.rk = 1"""),
     "etl_rtbf_plan" ->
       """WITH r AS (SELECT DISTINCT c_custkey FROM customer
         |  WHERE c_custkey % 53 = 3),
@@ -2131,7 +2168,7 @@ private[graft] object OracleSql {
         | 1 + coalesce(oc.n_orders, 0) + coalesce(lc.n_lineitems, 0)
         |  AS n_rows_total
         |FROM r LEFT JOIN oc USING (c_custkey)
-        | LEFT JOIN lc USING (c_custkey)""".stripMargin.replace("\n", " "),
+        | LEFT JOIN lc USING (c_custkey)""",
     "etl_rtbf_apply" ->
       """WITH r AS (SELECT DISTINCT c_custkey FROM customer
         |  WHERE c_custkey % 53 = 3),
@@ -2149,42 +2186,23 @@ private[graft] object OracleSql {
         | cb.b - ca.a AS rows_removed, ca.a AS rows_after FROM cb, ca
         |UNION ALL SELECT 'orders', ob.b, ob.b - oa.a, oa.a FROM ob, oa
         |UNION ALL SELECT 'lineitem', lb.b, lb.b - la.a, la.a
-        |FROM lb, la""".stripMargin.replace("\n", " "),
+        |FROM lb, la""",
     "rtbf_ml_plan" ->
       // per ML store: total rows + the subject's rows (fingerprints
       // 1/doc; winnow fps replayed through the shared MOSS CTE;
       // vectors 1/vec) — all exact integer counts
-      (s"""WITH $winnowFpCtes,
-         |f AS (SELECT CAST(count(*) AS BIGINT) AS t,
-         |  CAST(coalesce(sum(CASE WHEN doc_id % 53 = 3 THEN 1 ELSE 0 END),
-         |   0) AS BIGINT) AS e FROM documents),
-         |wn AS (SELECT CAST(count(*) AS BIGINT) AS t,
-         |  CAST(coalesce(sum(CASE WHEN doc_id % 53 = 3 THEN 1 ELSE 0 END),
-         |   0) AS BIGINT) AS e FROM w),
-         |av AS (SELECT CAST(count(*) AS BIGINT) AS t,
-         |  CAST(coalesce(sum(CASE WHEN vec_id % 53 = 3 THEN 1 ELSE 0 END),
-         |   0) AS BIGINT) AS e FROM embeddings)
+      s"""WITH $rtbfStoreCtes
          |SELECT 'fingerprints' AS store, f.t AS rows_total,
          | f.e AS rows_to_erase FROM f
          |UNION ALL SELECT 'winnow_fps', wn.t, wn.e FROM wn
-         |UNION ALL SELECT 'ann_vectors', av.t, av.e FROM av""")
-        .stripMargin.replace("\n", " "),
+         |UNION ALL SELECT 'ann_vectors', av.t, av.e FROM av""",
     "rtbf_ml_apply" ->
-      (s"""WITH $winnowFpCtes,
-         |f AS (SELECT CAST(count(*) AS BIGINT) AS t,
-         |  CAST(coalesce(sum(CASE WHEN doc_id % 53 = 3 THEN 1 ELSE 0 END),
-         |   0) AS BIGINT) AS e FROM documents),
-         |wn AS (SELECT CAST(count(*) AS BIGINT) AS t,
-         |  CAST(coalesce(sum(CASE WHEN doc_id % 53 = 3 THEN 1 ELSE 0 END),
-         |   0) AS BIGINT) AS e FROM w),
-         |av AS (SELECT CAST(count(*) AS BIGINT) AS t,
-         |  CAST(coalesce(sum(CASE WHEN vec_id % 53 = 3 THEN 1 ELSE 0 END),
-         |   0) AS BIGINT) AS e FROM embeddings)
+      s"""WITH $rtbfStoreCtes
          |SELECT 'fingerprints' AS store, f.t AS rows_before,
          | f.e AS rows_removed, f.t - f.e AS rows_after FROM f
          |UNION ALL SELECT 'winnow_fps', wn.t, wn.e, wn.t - wn.e FROM wn
          |UNION ALL SELECT 'ann_vectors', av.t, av.e, av.t - av.e
-         |FROM av""").stripMargin.replace("\n", " "),
+         |FROM av""",
     "etl_anonymity_audit" ->
       """SELECT c_nationkey,
         | CAST(floor(c_acctbal / 1000) AS BIGINT) AS bal_band,
@@ -2196,7 +2214,7 @@ private[graft] object OracleSql {
         |  WHEN count(DISTINCT c_mktsegment) < 2
         |   THEN 'attribute_disclosure'
         |  ELSE 'none' END AS risk
-        |FROM customer GROUP BY 1, 2""".stripMargin.replace("\n", " "),
+        |FROM customer GROUP BY 1, 2""",
     "etl_entity_incremental" ->
       // history = base (k%7≠0) + pos feeds resolved by their OWN
       // closure (never touching the delta); delta = web/legacy +
@@ -2231,7 +2249,7 @@ private[graft] object OracleSql {
         | GROUP BY 1)
         |SELECT rec_id, coalesce(matched, rec_id) AS entity_id,
         | matched IS NULL AS is_new
-        |FROM att""").stripMargin.replace("\n", " "),
+        |FROM att"""),
     "q1_pricing_summary" ->
       """SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty,
         | sum(l_extendedprice) AS sum_base_price,
@@ -2239,7 +2257,7 @@ private[graft] object OracleSql {
         | sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)) AS sum_charge,
         | avg(l_quantity) AS avg_qty, avg(l_extendedprice) AS avg_price,
         | avg(l_discount) AS avg_disc, count(*) AS count_order
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin.replace("\n", " "),
+        |FROM lineitem GROUP BY l_returnflag, l_linestatus""",
     "q3_top_unshipped" ->
       """SELECT o_orderkey, o_orderdate,
         | sum(l_extendedprice * (1 - l_discount)) AS revenue
@@ -2247,7 +2265,7 @@ private[graft] object OracleSql {
         | JOIN customer ON o_custkey = c_custkey
         |WHERE c_mktsegment = 'BUILDING'
         |GROUP BY o_orderkey, o_orderdate
-        |ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin.replace("\n", " "),
+        |ORDER BY revenue DESC, o_orderkey LIMIT 10""",
     "q5_regional_revenue" ->
       """SELECT n_name, sum(l_extendedprice * (1 - l_discount)) AS revenue
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
@@ -2255,18 +2273,18 @@ private[graft] object OracleSql {
         | JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
         | JOIN nation ON s_nationkey = n_nationkey
         | JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA' GROUP BY n_name""".stripMargin.replace("\n", " "),
+        |WHERE r_name = 'ASIA' GROUP BY n_name""",
     "q_customer_enrich" ->
       """SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus,
         | c_name AS customer_name, c_mktsegment AS segment, n_name AS nation
         |FROM orders JOIN customer ON o_custkey = c_custkey
-        | JOIN nation ON c_nationkey = n_nationkey""".stripMargin.replace("\n", " "),
+        | JOIN nation ON c_nationkey = n_nationkey""",
     "q_topn_per_group" ->
       """SELECT c_mktsegment, rank_in_segment, c_custkey, c_name, c_acctbal FROM (
         | SELECT c_mktsegment, c_custkey, c_name, c_acctbal,
         |  row_number() OVER (PARTITION BY c_mktsegment
         |    ORDER BY c_acctbal DESC, c_custkey) AS rank_in_segment
-        | FROM customer) r WHERE rank_in_segment <= 5""".stripMargin.replace("\n", " "),
+        | FROM customer) r WHERE rank_in_segment <= 5""",
     "q_running_totals" ->
       """SELECT o_custkey, o_orderkey, o_orderdate, o_totalprice,
         | sum(o_totalprice) OVER w AS running_total,
@@ -2275,21 +2293,19 @@ private[graft] object OracleSql {
         |   ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS moving_avg_3
         |FROM orders
         |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""".stripMargin
-        .replace("\n", " "),
+        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""",
     "q_semi_anti" ->
       """SELECT c_custkey, c_name, 'has_order' AS status FROM customer
         | WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
         |UNION ALL
         |SELECT c_custkey, c_name, 'no_order' AS status FROM customer
-        | WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)"""
-        .stripMargin.replace("\n", " "),
+        | WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)""",
     "q_rollup_revenue" ->
       """SELECT n_name, c_mktsegment,
         | sum(o_totalprice) AS revenue, count(*) AS num_orders
         |FROM orders JOIN customer ON o_custkey = c_custkey
         | JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY ROLLUP (n_name, c_mktsegment)""".stripMargin.replace("\n", " "),
+        |GROUP BY ROLLUP (n_name, c_mktsegment)""",
     "q_session_window" ->
       """WITH flagged AS (
         | SELECT user_id, ts, event_id, value,
@@ -2304,26 +2320,26 @@ private[graft] object OracleSql {
         |SELECT user_id, min(ts) AS session_start,
         | max(ts) + INTERVAL 30 MINUTE AS session_end,
         | count(*) AS num_events, sum(value) AS total_value
-        |FROM numbered GROUP BY user_id, session_seq""".stripMargin.replace("\n", " "),
+        |FROM numbered GROUP BY user_id, session_seq""",
     "q_events_unpivot" ->
       Seq("click", "purchase", "error", "signup", "view").map(t =>
         s"""SELECT user_id, '$t' AS event_type,
            | count(*) FILTER (WHERE event_type = '$t') AS n_events
-           |FROM events GROUP BY user_id""".stripMargin.replace("\n", " "))
+           |FROM events GROUP BY user_id""")
         .mkString(" UNION ALL "),
     "q_cube_revenue" ->
       """SELECT n_name, c_mktsegment,
         | sum(o_totalprice) AS revenue, count(*) AS num_orders
         |FROM orders JOIN customer ON o_custkey = c_custkey
         | JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY CUBE (n_name, c_mktsegment)""".stripMargin.replace("\n", " "),
+        |GROUP BY CUBE (n_name, c_mktsegment)""",
     "q_order_gaps" ->
       """SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS order_date,
         | date_diff('day',
         |  lag(CAST(o_orderdate AS DATE)) OVER (PARTITION BY o_custkey
         |    ORDER BY o_orderdate, o_orderkey),
         |  CAST(o_orderdate AS DATE)) AS days_since_prev
-        |FROM orders""".stripMargin.replace("\n", " "),
+        |FROM orders""",
     "q_set_ops" ->
       """WITH big AS (SELECT o_custkey AS c_custkey FROM orders
         |  GROUP BY o_custkey HAVING sum(o_totalprice) > 2500000.0),
@@ -2332,8 +2348,7 @@ private[graft] object OracleSql {
         | FROM (SELECT c_custkey FROM seg INTERSECT SELECT c_custkey FROM big) i
         |UNION ALL
         |SELECT c_custkey, 'segment_only' AS tag
-        | FROM (SELECT c_custkey FROM seg EXCEPT SELECT c_custkey FROM big) e"""
-        .stripMargin.replace("\n", " "),
+        | FROM (SELECT c_custkey FROM seg EXCEPT SELECT c_custkey FROM big) e""",
     "q_cohort_ltv" ->
       """WITH cohorts AS (SELECT o_custkey,
         |  date_trunc('month', min(o_orderdate)) AS cohort_month
@@ -2344,20 +2359,20 @@ private[graft] object OracleSql {
         | sum(o_totalprice) AS revenue,
         | count(DISTINCT o.o_custkey) AS active_customers
         |FROM orders o JOIN cohorts c ON o.o_custkey = c.o_custkey
-        |GROUP BY cohort_month, month_offset""".stripMargin.replace("\n", " "),
+        |GROUP BY cohort_month, month_offset""",
     "q_segment_quartiles" ->
       """SELECT c_mktsegment, c_custkey, c_acctbal,
         | dense_rank() OVER (PARTITION BY c_mktsegment
         |   ORDER BY c_acctbal DESC) AS balance_rank,
         | ntile(4) OVER (PARTITION BY c_mktsegment
         |   ORDER BY c_acctbal DESC, c_custkey) AS quartile
-        |FROM customer""".stripMargin.replace("\n", " "),
+        |FROM customer""",
     "q_brand_revenue" ->
       """SELECT p_brand, p_type,
         | sum(l_extendedprice * (1 - l_discount)) AS revenue,
         | sum(l_quantity) AS total_qty, count(*) AS num_lines
         |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY p_brand, p_type""".stripMargin.replace("\n", " "),
+        |GROUP BY p_brand, p_type""",
     "q_rolling_revenue" ->
       // revenue as exact integer (cents × integer discount-percent)
       // so the sliding RANGE-frame sum is order-independent; one
@@ -2371,8 +2386,7 @@ private[graft] object OracleSql {
         | CAST(sum(n) OVER w AS BIGINT) AS lines_window,
         | count(*) OVER w AS active_days
         |FROM d WINDOW w AS (ORDER BY day
-        | RANGE BETWEEN INTERVAL 6 DAY PRECEDING AND CURRENT ROW)"""
-        .stripMargin.replace("\n", " "),
+        | RANGE BETWEEN INTERVAL 6 DAY PRECEDING AND CURRENT ROW)""",
     "q_purchase_streaks" ->
       // gaps-and-islands: month_index − row_number is constant
       // within a consecutive-month run on both engines
@@ -2386,25 +2400,17 @@ private[graft] object OracleSql {
         | FROM runs GROUP BY 1, 2)
         |SELECT o_custkey, CAST(sum(len) AS BIGINT) AS n_active_months,
         | count(*) AS n_streaks, max(len) AS longest_streak
-        |FROM islands GROUP BY 1""".stripMargin.replace("\n", " "),
+        |FROM islands GROUP BY 1""",
     "events_rolling_active_users" ->
       // exact sliding COUNT DISTINCT via bounded fan-out of the
       // deduplicated user-day relation to its 7 target days; the
       // day-0 marker yields DAU from the same collapse
-      """WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
-        | FROM events),
-        |days AS (SELECT DISTINCT day AS target_day FROM ud),
-        |fan AS (SELECT ud.user_id, d.target_day,
-        |  CASE WHEN ud.day = d.target_day THEN 1 ELSE 0 END AS is_today
-        | FROM ud JOIN days d
-        |  ON d.target_day BETWEEN ud.day AND ud.day + 6),
-        |g AS (SELECT target_day, user_id, max(is_today) AS active_today
-        | FROM fan GROUP BY 1, 2)
+      s"""WITH $stickinessCtes
         |SELECT target_day AS day, count(*) AS wau,
         | CAST(sum(active_today) AS BIGINT) AS dau,
         | round(CAST(sum(active_today) AS BIGINT) * 1.0 / count(*), 6)
         |  AS stickiness
-        |FROM g GROUP BY 1""".stripMargin.replace("\n", " "),
+        |FROM g GROUP BY 1""",
     "q_revenue_changepoint" ->
       // cusum kept in the scaled integer form prefix·nd − rn·total
       // (int128 / decimal(38,0)) so the peak compare is exact; both
@@ -2425,7 +2431,7 @@ private[graft] object OracleSql {
         | CAST(cusum_scaled AS DOUBLE)
         |  / (CAST(nd AS DOUBLE) * 10000.0) AS cusum,
         | abs(cusum_scaled) = peak AS is_changepoint
-        |FROM pk""".stripMargin.replace("\n", " "),
+        |FROM pk""",
     "q_decile_lift" ->
       // plain ntile here; the Spark side reproduces ANSI ntile
       // arithmetically over its banded exact rank
@@ -2444,7 +2450,7 @@ private[graft] object OracleSql {
         | round(CAST(sum(dc) OVER (ORDER BY decile
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
         |   * 1.0 / CAST(sum(dc) OVER () AS BIGINT), 6) AS cum_share
-        |FROM g""".stripMargin.replace("\n", " "),
+        |FROM g""",
     "q_supplier_reliability" ->
       // the Wilson bound is a fixed closed form over the exact
       // (n_lines, n_late) integers — written with the identical
@@ -2464,8 +2470,7 @@ private[graft] object OracleSql {
         |    / CAST(n_lines AS DOUBLE)))
         | / (1.0 + 1.96 * 1.96 / CAST(n_lines AS DOUBLE))
         |  AS late_rate_wilson_lb
-        |FROM st JOIN supplier ON l_suppkey = s_suppkey"""
-        .stripMargin.replace("\n", " "),
+        |FROM st JOIN supplier ON l_suppkey = s_suppkey""",
     "q_copurchase_pagerank" ->
       // the three power iterations unrolled as CTEs; every engine-
       // crossing expression is written identically (frac, teleport,
@@ -2493,8 +2498,7 @@ private[graft] object OracleSql {
         |p3 AS (SELECT f.dst AS id,
         |  (1.0 - 0.85) / max(n.nn) + 0.85 * sum(p.pr * f.frac) AS pr
         | FROM f JOIN p2 p ON p.id = f.src, n GROUP BY f.dst)
-        |SELECT id AS part_id, round(pr, 9) AS pagerank FROM p3"""
-        .stripMargin.replace("\n", " "),
+        |SELECT id AS part_id, round(pr, 9) AS pagerank FROM p3""",
     "q_copurchase_triangles" ->
       // oriented a<b edges generate each triangle a<b<c exactly once
       // ((a,b)⋈(b,c) closed by (a,c)); wedges from the degree sums,
@@ -2520,7 +2524,7 @@ private[graft] object OracleSql {
         |  ELSE round(3.0 * (SELECT n_tri FROM tri)
         |   / CAST(CAST(sum(d * (d - 1)) // 2 AS BIGINT) AS DOUBLE), 9)
         | END AS global_clustering
-        |FROM deg""".stripMargin.replace("\n", " "),
+        |FROM deg""",
     "q_basket_chi2" ->
       // 2×2 contingency per guarded pair; delta exact in BIGINT,
       // then ONE float expression in the same multiply order
@@ -2552,7 +2556,7 @@ private[graft] object OracleSql {
         |    * CAST(n_b AS DOUBLE) * CAST(n_orders - n_b AS DOUBLE)), 6)
         | END AS chi2,
         | n_together * n_orders > n_a * n_b AS positive
-        |FROM j""".stripMargin.replace("\n", " "),
+        |FROM j""",
     "q_revenue_autocorr" ->
       // Pearson r per calendar lag from exact integer sum identities
       // (HUGEINT — cents² crosses 2^63); identical expression shape
@@ -2577,17 +2581,12 @@ private[graft] object OracleSql {
         |   / sqrt(CAST(n_pairs * saa - sa * sa AS DOUBLE)
         |        * CAST(n_pairs * sbb - sb * sb AS DOUBLE)), 9)
         | END AS autocorr
-        |FROM s""".stripMargin.replace("\n", " "),
+        |FROM s""",
     "q_forecast_backtest" ->
       // BOTH recursion chains composed verbatim (the holt and
       // holt-winters oracles' CTEs side by side over one monthly
       // series), errors on the ROUNDED published columns
-      """WITH RECURSIVE m AS (SELECT
-        |  date_trunc('month', CAST(l_shipdate AS DATE)) AS mth,
-        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-        |    * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS HUGEINT)
-        |   AS c
-        | FROM lineitem GROUP BY 1),
+      s"""WITH RECURSIVE $monthlyRevenueCte,
         |s AS (SELECT mth, c, CAST(c AS DOUBLE) / 10000.0 AS x,
         |  row_number() OVER (ORDER BY mth) AS i FROM m),
         |rh AS (
@@ -2600,13 +2599,7 @@ private[graft] object OracleSql {
         |   + (1 - 0.1) * rh.tr,
         |  rh.lvl + rh.tr
         | FROM rh JOIN s ON s.i = rh.i + 1),
-        |init AS (SELECT
-        |  (SELECT CAST(sum(c) AS DOUBLE) / 10000.0 / 12.0 FROM s
-        |    WHERE i <= 12) AS m1,
-        |  (SELECT CAST(sum(c) AS DOUBLE) / 10000.0 / 12.0 FROM s
-        |    WHERE i BETWEEN 13 AND 24) AS m2),
-        |seas0 AS (SELECT list(x - (SELECT m1 FROM init) ORDER BY i) AS sl
-        | FROM s WHERE i <= 12),
+        |$holtWintersInitCtes,
         |rw AS (
         | SELECT CAST(12 AS BIGINT) AS i, CAST(NULL AS DOUBLE) AS x,
         |  (SELECT m1 FROM init) AS lvl,
@@ -2630,7 +2623,7 @@ private[graft] object OracleSql {
         |SELECT model, count(*) AS n_months,
         | round(avg(abs(revenue - fitted)), 2) AS mae,
         | round(avg(abs(revenue - fitted) / revenue), 6) AS mape
-        |FROM u GROUP BY model""".stripMargin.replace("\n", " "),
+        |FROM u GROUP BY model""",
     "q_holtwinters_forecast" ->
       // the triple-smoothing recursion with the rotating seasonal
       // LIST as recursive state: sl[1] is the current month's index,
@@ -2638,21 +2631,10 @@ private[graft] object OracleSql {
       // l2 expression repeats inline in t2/s2/tail (a recursive CTE
       // step cannot name intermediates) and every (1 - k) stays
       // unevaluated — the holtForecast double-identity convention
-      """WITH RECURSIVE m AS (SELECT
-        |  date_trunc('month', CAST(l_shipdate AS DATE)) AS mth,
-        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-        |    * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS HUGEINT)
-        |   AS c
-        | FROM lineitem GROUP BY 1),
+      s"""WITH RECURSIVE $monthlyRevenueCte,
         |s AS (SELECT mth, c, CAST(c AS DOUBLE) / 10000.0 AS x,
         |  row_number() OVER (ORDER BY mth) AS i FROM m),
-        |init AS (SELECT
-        |  (SELECT CAST(sum(c) AS DOUBLE) / 10000.0 / 12.0 FROM s
-        |    WHERE i <= 12) AS m1,
-        |  (SELECT CAST(sum(c) AS DOUBLE) / 10000.0 / 12.0 FROM s
-        |    WHERE i BETWEEN 13 AND 24) AS m2),
-        |seas0 AS (SELECT list(x - (SELECT m1 FROM init) ORDER BY i) AS sl
-        | FROM s WHERE i <= 12),
+        |$holtWintersInitCtes,
         |r AS (
         | SELECT CAST(12 AS BIGINT) AS i, CAST(NULL AS DATE) AS mth,
         |  CAST(NULL AS DOUBLE) AS x,
@@ -2674,16 +2656,11 @@ private[graft] object OracleSql {
         |SELECT mth AS month, round(x, 4) AS revenue,
         | round(lvl, 4) AS level, round(tr, 4) AS trend,
         | round(snew, 4) AS seasonal, round(fitted, 4) AS fitted
-        |FROM r WHERE i > 12""".stripMargin.replace("\n", " "),
+        |FROM r WHERE i > 12""",
     "q_holt_forecast" ->
       // the identical recursion as a recursive CTE; (1 - 0.3) left
       // unevaluated — the literal 0.7 is a DIFFERENT double
-      """WITH RECURSIVE m AS (SELECT
-        |  date_trunc('month', CAST(l_shipdate AS DATE)) AS mth,
-        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-        |    * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS HUGEINT)
-        |   AS c
-        | FROM lineitem GROUP BY 1),
+      s"""WITH RECURSIVE $monthlyRevenueCte,
         |s AS (SELECT mth, CAST(c AS DOUBLE) / 10000.0 AS x,
         |  row_number() OVER (ORDER BY mth) AS i FROM m),
         |r AS (
@@ -2699,7 +2676,7 @@ private[graft] object OracleSql {
         |SELECT mth AS month, round(x, 6) AS revenue,
         | round(lvl, 6) AS level, round(tr, 6) AS trend,
         | round(fitted, 6) AS fitted
-        |FROM r""".stripMargin.replace("\n", " "),
+        |FROM r""",
     "stream_freshness" ->
       // per-feed last-seen day + count, lag vs the freshest sibling
       """WITH f AS (SELECT event_type AS feed, CAST(max(ts) AS DATE)
@@ -2709,7 +2686,7 @@ private[graft] object OracleSql {
         | CAST(date_diff('day', last_day, global_day) AS BIGINT)
         |  AS days_behind,
         | n_rows, date_diff('day', last_day, global_day) > 2 AS stale
-        |FROM f, g""".stripMargin.replace("\n", " "),
+        |FROM f, g""",
     "q_survival_curve" ->
       // KM product via DuckDB's windowed product() in ascending-t
       // order — the same multiply order as the Spark-side fold;
@@ -2735,7 +2712,7 @@ private[graft] object OracleSql {
         | round(product(1.0 - CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE))
         |   OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING
         |     AND CURRENT ROW), 9) AS survival
-        |FROM r""".stripMargin.replace("\n", " "),
+        |FROM r""",
     "emb_pair_histogram" ->
       // DOUBLE[] casts → bit-identical cosines (the bruteforce-tier
       // precedent), so the floor-bin boundary is safe cross-engine
@@ -2748,7 +2725,7 @@ private[graft] object OracleSql {
         |t AS (SELECT CAST(sum(n_pairs) AS BIGINT) AS total FROM h)
         |SELECT round(CAST(bin AS DOUBLE) / 20, 6) AS bin_lo, n_pairs,
         | round(CAST(n_pairs AS DOUBLE) / CAST(total AS DOUBLE), 6) AS share
-        |FROM h, t""".stripMargin.replace("\n", " "),
+        |FROM h, t""",
     "emb_hubness" ->
       // same DOUBLE[] cosine + id tie-break as the bruteforce tier;
       // in-degree/reciprocity counted over the exact top-10 graph of
@@ -2769,20 +2746,19 @@ private[graft] object OracleSql {
         |SELECT s.vec_id, coalesce(ind.in_degree, 0) AS in_degree,
         | coalesce(rec.reciprocal, 0) AS reciprocal
         |FROM s LEFT JOIN ind ON s.vec_id = ind.vec_id
-        |LEFT JOIN rec ON s.vec_id = rec.vec_id""".stripMargin.replace("\n", " "),
+        |LEFT JOIN rec ON s.vec_id = rec.vec_id""",
     "q_percentiles" ->
       """SELECT c_mktsegment,
         | quantile_cont(o_totalprice, 0.5) AS p50,
         | quantile_cont(o_totalprice, 0.9) AS p90,
         | quantile_cont(o_totalprice, 0.99) AS p99
         |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment""".stripMargin.replace("\n", " "),
+        |GROUP BY c_mktsegment""",
     "q_events_hourly" ->
       """SELECT date_trunc('hour', ts) AS hour, event_type,
         | count(*) AS num_events, sum(value) AS total_value,
         | avg(value) AS avg_value
-        |FROM events GROUP BY date_trunc('hour', ts), event_type""".stripMargin
-        .replace("\n", " "),
+        |FROM events GROUP BY date_trunc('hour', ts), event_type""",
     "q_events_sessionize" ->
       """WITH flagged AS (
         | SELECT user_id, ts, event_id, value,
@@ -2796,7 +2772,7 @@ private[graft] object OracleSql {
         | FROM flagged)
         |SELECT user_id, session_seq, min(ts) AS session_start,
         | max(ts) AS session_end, count(*) AS num_events, sum(value) AS total_value
-        |FROM numbered GROUP BY user_id, session_seq""".stripMargin.replace("\n", " "),
+        |FROM numbered GROUP BY user_id, session_seq""",
     "events_session_cooccur" ->
       // the shared lag+cumsum session CTE, then distinct
       // session×type sets self-joined (type alphabet bounds the
@@ -2824,8 +2800,7 @@ private[graft] object OracleSql {
         | round(CAST(n_together * n_sessions AS DOUBLE)
         |  / CAST(pa.n * pb.n AS DOUBLE), 6) AS lift
         |FROM pr JOIN pt pa ON pa.event_type = pr.type_a
-        | JOIN pt pb ON pb.event_type = pr.type_b, ns""".stripMargin
-        .replace("\n", " "),
+        | JOIN pt pb ON pb.event_type = pr.type_b, ns""",
     "q_events_funnel_windowed" ->
       """WITH s AS (SELECT user_id, min(ts) AS sts FROM events
         |  WHERE event_type = 'signup' GROUP BY 1),
@@ -2839,8 +2814,7 @@ private[graft] object OracleSql {
         |   AND e.ts <= c.cts + INTERVAL 60 MINUTE GROUP BY 1)
         |SELECT (SELECT count(*) FROM s) AS n_signup,
         | (SELECT count(*) FROM c) AS n_click_within,
-        | (SELECT count(*) FROM p) AS n_purchase_within"""
-        .stripMargin.replace("\n", " "),
+        | (SELECT count(*) FROM p) AS n_purchase_within""",
     "events_deseasonalized_anomaly" ->
       // LEAVE-ONE-OUT slot stats from exact integer sums; mean/
       // variance/z are the identical fixed expression in both
@@ -2867,8 +2841,7 @@ private[graft] object OracleSql {
         | FROM f JOIN p USING (dow, hour_of_day) WHERE cnt > 1)
         |SELECT hb AS hour_bucket, n_events, dow, hour_of_day,
         | m AS profile_mean, (n_events - m) / sqrt(v) AS z
-        |FROM j WHERE v > 0 AND abs((n_events - m) / sqrt(v)) > 3.0"""
-        .stripMargin.replace("\n", " "),
+        |FROM j WHERE v > 0 AND abs((n_events - m) / sqrt(v)) > 3.0""",
     "stream_deseasonalized" ->
       // batch degenerate of the streaming gate: observed (unspined)
       // hours scored PLAIN (not leave-one-out) against the
@@ -2897,8 +2870,7 @@ private[graft] object OracleSql {
         | FROM o JOIN p USING (dow, hour_of_day))
         |SELECT hb AS hour_bucket, n_events, dow, hour_of_day,
         | m AS profile_mean, (n_events - m) / sqrt(v) AS z
-        |FROM j WHERE v > 0 AND abs((n_events - m) / sqrt(v)) > 1.5"""
-        .stripMargin.replace("\n", " "),
+        |FROM j WHERE v > 0 AND abs((n_events - m) / sqrt(v)) > 1.5""",
     "events_cohort_retention" ->
       // offsets exact: both dates are week starts, day gap always a
       // multiple of seven; retention = one division of exact longs
@@ -2914,7 +2886,7 @@ private[graft] object OracleSql {
         |SELECT a.cohort_week, a.week_offset, a.n_active, s.cohort_size,
         | CAST(a.n_active AS DOUBLE) / CAST(s.cohort_size AS DOUBLE)
         |  AS retention
-        |FROM a JOIN s USING (cohort_week)""".stripMargin.replace("\n", " "),
+        |FROM a JOIN s USING (cohort_week)""",
     "events_bot_flag" ->
       // tightest 20-event span per user, exact integer microseconds
       """WITH g AS (SELECT user_id, epoch_us(ts) AS us,
@@ -2924,7 +2896,7 @@ private[graft] object OracleSql {
         |SELECT user_id, count(*) AS n_events,
         | min(us - prev) AS min_burst_span_us,
         | coalesce(min(us - prev) <= 60000000, false) AS is_bot
-        |FROM g GROUP BY user_id""".stripMargin.replace("\n", " "),
+        |FROM g GROUP BY user_id""",
     "events_session_entry_exit" ->
       // the sessionize CTE chain, endpoints picked by row_number on
       // the (ts, event_id) total order — mirrors min_by/max_by
@@ -2953,7 +2925,7 @@ private[graft] object OracleSql {
         |  max(n) AS n FROM r GROUP BY 1, 2)
         |SELECT entry_type, exit_type, count(*) AS n_sessions,
         | CAST(sum(n) AS BIGINT) AS total_events
-        |FROM sess GROUP BY 1, 2""".stripMargin.replace("\n", " "),
+        |FROM sess GROUP BY 1, 2""",
     "q_events_pivot" ->
       """SELECT user_id,
         | count(*) FILTER (WHERE event_type = 'click') AS click,
@@ -2961,25 +2933,25 @@ private[graft] object OracleSql {
         | count(*) FILTER (WHERE event_type = 'error') AS error,
         | count(*) FILTER (WHERE event_type = 'signup') AS signup,
         | count(*) FILTER (WHERE event_type = 'view') AS view
-        |FROM events GROUP BY user_id""".stripMargin.replace("\n", " "),
+        |FROM events GROUP BY user_id""",
     "q_events_json" ->
       """SELECT k % 10 AS k_bucket, count(*) AS num_events,
         | avg(value) AS avg_value, max(k) AS max_k
         |FROM (SELECT CAST(props->>'$.k' AS BIGINT) AS k, value FROM events) e
-        |WHERE k IS NOT NULL GROUP BY k % 10""".stripMargin.replace("\n", " "),
+        |WHERE k IS NOT NULL GROUP BY k % 10""",
     "q_events_retention" ->
       """WITH uh AS (SELECT DISTINCT user_id, date_trunc('hour', ts) AS h FROM events)
         |SELECT a.h AS hour, count(*) AS retained_users
         |FROM uh a JOIN uh b ON a.user_id = b.user_id
         | AND b.h = a.h + INTERVAL 1 HOUR
-        |GROUP BY a.h""".stripMargin.replace("\n", " "),
+        |GROUP BY a.h""",
     "q_asof_join" ->
       """SELECT p.event_id, p.user_id, p.ts, p.value, c.value AS asof_value
         |FROM (SELECT event_id, user_id, ts, value FROM events
         |      WHERE event_type = 'purchase') p
         |ASOF LEFT JOIN (SELECT user_id, ts, value FROM events
         |      WHERE event_type = 'click') c
-        |ON p.user_id = c.user_id AND p.ts >= c.ts""".stripMargin.replace("\n", " "),
+        |ON p.user_id = c.user_id AND p.ts >= c.ts""",
     "text_stats" ->
       (toksCte +
         """, s AS (SELECT doc_id,
@@ -2997,7 +2969,7 @@ private[graft] object OracleSql {
           |  * (1.0 - least(1.0, (punct_count / greatest(n_chars, 1)) * 4.0))
           |  * (0.3 + 0.7 * least(1.0, (stopword_count / greatest(n_tokens, 1)) * 5.0))
           |  AS quality_score
-          |FROM s""".stripMargin.replace("\n", " ")),
+          |FROM s"""),
     "text_readability" ->
       // exact counters (whitespace words, [.!?]+ sentence runs,
       // [aeiouy]+ vowel-group syllables) → one float score each,
@@ -3018,12 +2990,12 @@ private[graft] object OracleSql {
           | round(0.39 * (CAST(n_words AS DOUBLE) / CAST(n_sentences AS DOUBLE))
           |  + 11.8 * (CAST(n_syllables AS DOUBLE) / CAST(n_words AS DOUBLE))
           |  - 15.59, 6) AS fk_grade
-          |FROM c""".stripMargin.replace("\n", " ")),
+          |FROM c"""),
     "text_token_count" ->
       (toksCte +
         """ SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_ws_tokens,
           | CAST(len(regexp_extract_all(text, '\w+|[^\w\s]')) AS BIGINT) AS n_bpe_tokens
-          |FROM t""".stripMargin.replace("\n", " ")),
+          |FROM t"""),
     "text_tokenizer_fertility" ->
       // ratio of exact SUMS (mean-of-ratios would let short docs
       // dominate); the bpe regex is the token_count twin
@@ -3039,7 +3011,7 @@ private[graft] object OracleSql {
         | round(CAST(sum(bpe) AS BIGINT)
         |  / CAST(greatest(CAST(sum(ws) AS BIGINT), 1) AS DOUBLE), 6)
         |  AS fertility
-        |FROM c GROUP BY 1, 2""".stripMargin.replace("\n", " "),
+        |FROM c GROUP BY 1, 2""",
     "text_lang_id" ->
       (toksCte +
         """, h AS (SELECT doc_id,
@@ -3056,7 +3028,7 @@ private[graft] object OracleSql {
           |  WHEN hits_es = greatest(hits_en, hits_fr, hits_es, hits_de, hits_zh) THEN 'es'
           |  WHEN hits_de = greatest(hits_en, hits_fr, hits_es, hits_de, hits_zh) THEN 'de'
           |  ELSE 'zh' END AS predicted_lang
-          |FROM h""".stripMargin.replace("\n", " ")),
+          |FROM h"""),
     "text_lang_confusion" ->
       (toksCte +
         """, h AS (SELECT doc_id,
@@ -3075,17 +3047,15 @@ private[graft] object OracleSql {
           |  ELSE 'zh' END AS predicted_lang
           |FROM h)
           |SELECT d.lang AS labeled, p.predicted_lang, count(*) AS n_docs
-          |FROM p JOIN documents d USING (doc_id) GROUP BY 1, 2"""
-          .stripMargin.replace("\n", " ")),
+          |FROM p JOIN documents d USING (doc_id) GROUP BY 1, 2"""),
     "text_fingerprint" ->
       """SELECT doc_id,
         | md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fingerprint_md5
-        |FROM documents""".stripMargin.replace("\n", " "),
+        |FROM documents""",
     "text_cms_sketch" ->
-      (s"WITH $cmsCtes " +
-        "SELECT r, bucket, cnt FROM sk").replace("\n", " "),
+      s"WITH $cmsCtes SELECT r, bucket, cnt FROM sk",
     "text_cms_token_freq" ->
-      (s"""WITH $cmsCtes,
+      s"""WITH $cmsCtes,
         |ex AS (SELECT t AS tok, CAST(count(*) AS BIGINT) AS exact_cnt,
         |  min(th) AS th FROM ti GROUP BY 1),
         |top AS (SELECT * FROM ex ORDER BY exact_cnt DESC, tok LIMIT 30),
@@ -3096,7 +3066,7 @@ private[graft] object OracleSql {
         |SELECT pj.tok, pj.exact_cnt, min(sk.cnt) AS cms_est,
         | min(sk.cnt) - pj.exact_cnt AS overcount
         |FROM pj JOIN sk USING (r, bucket)
-        |GROUP BY 1, 2""").stripMargin.replace("\n", " "),
+        |GROUP BY 1, 2""",
     "text_pii_scrub" ->
       """SELECT doc_id,
         | CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
@@ -3106,22 +3076,20 @@ private[graft] object OracleSql {
         |   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
         |   'https?://[^\s]+', '<URL>', 'g'),
         |   '\+?[0-9][0-9()\- ]{7,}[0-9]', '<PHONE>', 'g')) AS scrubbed_md5
-        |FROM documents""".stripMargin.replace("\n", " "),
+        |FROM documents""",
     "text_quality_filter" ->
       (toksCte +
         s""" SELECT * FROM (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-          | ${qualityScoreSql("  ")}
+          | ${qualityScoreSql}
           |FROM t) q
-          |WHERE n_tokens >= 20 AND n_tokens <= 100000 AND quality_score >= 0.2"""
-          .stripMargin.replace("\n", " ")),
+          |WHERE n_tokens >= 20 AND n_tokens <= 100000 AND quality_score >= 0.2"""),
     "text_top_bigrams" ->
       (toksCte +
         """ SELECT bigram, count(*) AS n_occurrences
           |FROM (SELECT unnest(CASE WHEN len(toks) < 2 THEN CAST([] AS VARCHAR[])
           |  ELSE list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i + 1])
           |  END) AS bigram FROM t) b
-          |GROUP BY bigram ORDER BY n_occurrences DESC, bigram LIMIT 100"""
-          .stripMargin.replace("\n", " ")),
+          |GROUP BY bigram ORDER BY n_occurrences DESC, bigram LIMIT 100"""),
     "docs_quality_dup_profile" ->
       (blockedPairsCte +
         """, dd AS (SELECT DISTINCT doc_id FROM
@@ -3143,7 +3111,7 @@ private[graft] object OracleSql {
           | round(CAST(sum(CASE WHEN dd.doc_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
           |  / CAST(count(*) AS BIGINT), 6) AS near_dup_rate
           |FROM qb LEFT JOIN dd ON dd.doc_id = qb.doc_id
-          |GROUP BY q_bucket""".stripMargin.replace("\n", " ")),
+          |GROUP BY q_bucket"""),
     "events_attribution" ->
       """WITH ev AS (SELECT event_id, ts, user_id, event_type FROM events
         |  WHERE event_type IN ('click', 'purchase')),
@@ -3160,7 +3128,7 @@ private[graft] object OracleSql {
         |   AND last_click_ts >= ts - INTERVAL 1 HOUR THEN 1 ELSE 0 END)
         |  AS BIGINT) / CAST(count(*) AS BIGINT), 6) AS attribution_rate
         |FROM a WHERE event_type = 'purchase'
-        |GROUP BY CAST(ts AS DATE)""".stripMargin.replace("\n", " "),
+        |GROUP BY CAST(ts AS DATE)""",
     "text_pmi_bigrams" ->
       (toksCte +
         """, uni AS (SELECT w, count(*) AS c_w
@@ -3179,8 +3147,7 @@ private[graft] object OracleSql {
           |JOIN uni u2 ON u2.w = split_part(b.bigram, ' ', 2)
           |CROSS JOIN tot
           |WHERE b.n_ab >= 5
-          |ORDER BY pmi DESC, b.bigram LIMIT 100"""
-          .stripMargin.replace("\n", " ")),
+          |ORDER BY pmi DESC, b.bigram LIMIT 100"""),
     "q_events_anomaly" ->
       """WITH hourly AS (SELECT date_trunc('hour', ts) AS hour,
         |  count(*) AS n_events FROM events GROUP BY date_trunc('hour', ts)),
@@ -3189,8 +3156,7 @@ private[graft] object OracleSql {
         |SELECT hour, n_events,
         | (n_events - mean_events) / sd_events AS z_score
         |FROM hourly, g
-        |WHERE abs((n_events - mean_events) / sd_events) > 2.0""".stripMargin
-        .replace("\n", " "),
+        |WHERE abs((n_events - mean_events) / sd_events) > 2.0""",
     "events_user_lifespan" ->
       """WITH u AS (SELECT user_id,
         |  date_diff('day', CAST(min(ts) AS DATE), CAST(max(ts) AS DATE)) AS ld,
@@ -3205,7 +3171,7 @@ private[graft] object OracleSql {
         | round(CAST(sum(n) AS DOUBLE) / count(*), 6) AS mean_events_per_user,
         | round(CAST(sum(CASE WHEN ld = 0 THEN 1 ELSE 0 END) AS DOUBLE)
         |  / count(*), 6) AS single_day_frac
-        |FROM u""".stripMargin.replace("\n", " "),
+        |FROM u""",
     "stream_dq_profile" ->
       // calibration form (r16): exact per-column anchors + DuckDB's
       // own approx_count_distinct within the same integer tolerance
@@ -3228,8 +3194,7 @@ private[graft] object OracleSql {
         |  CAST(sum(CASE WHEN value IS NULL THEN 1 ELSE 0 END)
         |   AS BIGINT),
         |  count(DISTINCT value),
-        |  approx_count_distinct(value) FROM events) p""".stripMargin
-        .replace("\n", " "),
+        |  approx_count_distinct(value) FROM events) p""",
     "stream_sliding_actives" ->
       // calibration form (r16): the 7d/1d sliding windows replayed
       // by day fan-out (slide aligns to the epoch day grid), exact
@@ -3247,7 +3212,7 @@ private[graft] object OracleSql {
         | abs(approx_count_distinct(user_id) - count(DISTINCT user_id))
         |  <= greatest(2, (count(DISTINCT user_id) * 5) // 100)
         |  AS users_within_tol
-        |FROM f GROUP BY 1""".stripMargin.replace("\n", " "),
+        |FROM f GROUP BY 1""",
     "events_user_lifespan_approx" ->
       // calibration form (r16): exact rollup anchors + DuckDB's OWN
       // approx_quantile scored by the tie-safe rank-containment rule
@@ -3278,8 +3243,7 @@ private[graft] object OracleSql {
         |   <= 1.01 AND
         |  sum(CASE WHEN ld <= apx.p99 THEN 1 ELSE 0 END) * 1.0 / count(*)
         |   >= 0.97) AS p99_within_tol
-        |FROM u, apx GROUP BY apx.p50, apx.p90, apx.p99""".stripMargin
-        .replace("\n", " "),
+        |FROM u, apx GROUP BY apx.p50, apx.p90, apx.p99""",
     "events_inter_event_gaps" ->
       """WITH g AS (SELECT epoch_us(ts - lag(ts) OVER (PARTITION BY user_id
         |   ORDER BY ts, event_id)) // 1000000 AS gap_s
@@ -3288,7 +3252,7 @@ private[graft] object OracleSql {
         | quantile_cont(gap_s, 0.5) AS p50_s,
         | quantile_cont(gap_s, 0.9) AS p90_s,
         | quantile_cont(gap_s, 0.99) AS p99_s
-        |FROM g WHERE gap_s IS NOT NULL""".stripMargin.replace("\n", " "),
+        |FROM g WHERE gap_s IS NOT NULL""",
     "q_cart_abandonment" ->
       """WITH flagged AS (SELECT user_id, ts, event_id, event_type,
         |  CASE WHEN lag(ts) OVER w IS NULL
@@ -3306,8 +3270,7 @@ private[graft] object OracleSql {
         |SELECT day, count(*) AS n_click_sessions,
         | CAST(sum(1 - purchased) AS BIGINT) AS n_abandoned,
         | round(sum(1 - purchased) * 1.0 / count(*), 6) AS abandonment_rate
-        |FROM sess WHERE clicked = 1 GROUP BY 1""".stripMargin
-        .replace("\n", " "),
+        |FROM sess WHERE clicked = 1 GROUP BY 1""",
     "events_dow_hour_profile" ->
       // DuckDB dayofweek: Sunday=0; Spark: Sunday=1 → +1. Calendar
       // spine: zero-event hours count in the slot denominator
@@ -3322,7 +3285,7 @@ private[graft] object OracleSql {
         | CAST(hour(hb) AS BIGINT) AS hour_of_day,
         | CAST(sum(n) AS BIGINT) AS n_events, count(*) AS n_slots,
         | round(avg(n), 6) AS avg_events
-        |FROM f GROUP BY 1, 2""".stripMargin.replace("\n", " "),
+        |FROM f GROUP BY 1, 2""",
     "q_conversion_latency" ->
       """WITH s AS (SELECT user_id, min(ts) AS signup_ts FROM events
         |  WHERE event_type = 'signup' GROUP BY 1),
@@ -3335,7 +3298,7 @@ private[graft] object OracleSql {
         | quantile_cont(latency_min, 0.5) AS p50_min,
         | quantile_cont(latency_min, 0.9) AS p90_min,
         | quantile_cont(latency_min, 0.99) AS p99_min
-        |FROM l""".stripMargin.replace("\n", " "),
+        |FROM l""",
     "events_common_paths" ->
       """WITH flagged AS (SELECT user_id, ts, event_id, event_type,
         |  CASE WHEN lag(ts) OVER w IS NULL
@@ -3352,7 +3315,7 @@ private[graft] object OracleSql {
         |  string_agg(event_type, '>' ORDER BY ts, event_id) AS path
         | FROM ranked WHERE step <= 8 GROUP BY 1, 2)
         |SELECT path, count(*) AS n_sessions FROM paths
-        |GROUP BY 1 HAVING count(*) >= 5""".stripMargin.replace("\n", " "),
+        |GROUP BY 1 HAVING count(*) >= 5""",
     "q_mad_outliers" ->
       """WITH hourly AS (SELECT event_type, date_trunc('hour', ts) AS hour,
         |  count(*) AS n_events FROM events GROUP BY 1, 2),
@@ -3365,8 +3328,7 @@ private[graft] object OracleSql {
         |  FROM dev GROUP BY 1)
         |SELECT d.event_type, d.hour, d.n_events, d.med, mad.mad
         |FROM dev d JOIN mad USING (event_type)
-        |WHERE mad.mad > 0 AND d.abs_dev > 3.0 * mad.mad""".stripMargin
-        .replace("\n", " "),
+        |WHERE mad.mad > 0 AND d.abs_dev > 3.0 * mad.mad""",
     "ann_range_search" ->
       """SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
         | list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
@@ -3374,7 +3336,7 @@ private[graft] object OracleSql {
         |FROM embeddings q JOIN embeddings c ON c.vec_id != q.vec_id
         |WHERE q.vec_id % 100 = 0
         | AND list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-        |   CAST(c.embedding AS DOUBLE[])) >= 0.2""".stripMargin.replace("\n", " "),
+        |   CAST(c.embedding AS DOUBLE[])) >= 0.2""",
     "text_repetition" ->
       (toksCte +
         """, b AS (SELECT doc_id,
@@ -3386,7 +3348,7 @@ private[graft] object OracleSql {
           | CASE WHEN len(bigrams) > 0
           |  THEN 1.0 - len(list_distinct(bigrams)) / len(bigrams)
           |  ELSE 0.0 END AS dup_bigram_fraction
-          |FROM b""".stripMargin.replace("\n", " ")),
+          |FROM b"""),
     "text_repetition_profile" ->
       // replays the lined-corpus synth via the shared CTE prefix,
       // then computes every Gopher counter from exact integer
@@ -3423,7 +3385,7 @@ private[graft] object OracleSql {
           |  ELSE 0.0 END AS dup_char_fraction
           |FROM documents dd JOIN tc USING (doc_id)
           |LEFT JOIN cc USING (doc_id)
-          |GROUP BY 1""".stripMargin.replace("\n", " ")),
+          |GROUP BY 1"""),
     "docs_dup_ngram_apply" -> dupNgramApplySql,
     // the intake gate computes the SAME relation by definition (the
     // store probe reproduces the coverage chain exactly), so the
@@ -3456,8 +3418,7 @@ private[graft] object OracleSql {
           |   t.toks[sp.start_pos + 1:sp.end_pos + 1], x -> length(x)))
           |   AS BIGINT) / tc.tok_chars
           |  ELSE 0.0 END AS removal_fraction
-          |FROM sp JOIN t USING (doc_id) JOIN tc USING (doc_id)"""
-          .stripMargin.replace("\n", " ")),
+          |FROM sp JOIN t USING (doc_id) JOIN tc USING (doc_id)"""),
     "docs_dup_spans_apply" -> dupSpansApplySql,
     "stream_dup_span_scrub" -> dupSpansApplySql,
     "docs_quality_drift" -> qualityDriftSql,
@@ -3466,7 +3427,7 @@ private[graft] object OracleSql {
       // keep-first over identical lines corpus-wide: row_number on
       // the natural (doc_id, idx) order — discrete, tie-free; the
       // lined replay's t2.lines IS the operator's filtered line list
-      (s"""WITH $linedCtes,
+      s"""WITH $linedCtes,
         |lp AS (SELECT doc_id, u.i - 1 AS idx, lines[u.i] AS line
         | FROM t2, LATERAL (SELECT unnest(generate_series(1,
         |   len(lines))) AS i) u),
@@ -3494,10 +3455,10 @@ private[graft] object OracleSql {
         |   / CAST(sum(coalesce(pd.line_chars, 0)) AS BIGINT)
         |  ELSE 1.0 END AS char_retention
         |FROM documents d LEFT JOIN pd USING (doc_id)
-        |GROUP BY 1""").stripMargin.replace("\n", " "),
+        |GROUP BY 1""",
     "docs_gopher_cost" ->
       // survivors chain joined to RAW token counts; all sums exact
-      (s"""WITH $qualCorpusCte, ${linedCtesFrom("qd")},
+      s"""WITH $qualCorpusCte, ${linedCtesFrom("qd")},
          |$gopherProfileCtes, $dupMassCtes, $qualProfileCtes,
          |k AS (SELECT r.doc_id, NOT ($repAnySql OR $qualAnySql) AS keep
          | FROM rep_profile r JOIN dng g ON g.doc_id = r.doc_id
@@ -3516,23 +3477,23 @@ private[graft] object OracleSql {
          |  ELSE 0.0 END AS token_retention
          |FROM documents d JOIN k ON k.doc_id = d.doc_id
          |JOIN tc ON tc.doc_id = d.doc_id
-         |GROUP BY 1""").stripMargin.replace("\n", " "),
+         |GROUP BY 1""",
     "stream_gopher_gate" ->
       // survivors of the 20-threshold gate: same chains, NOT(any)
-      (s"""WITH $qualCorpusCte, ${linedCtesFrom("qd")},
+      s"""WITH $qualCorpusCte, ${linedCtesFrom("qd")},
          |$gopherProfileCtes, $dupMassCtes, $qualProfileCtes
          |SELECT r.doc_id, d.source
          |FROM rep_profile r JOIN dng g ON g.doc_id = r.doc_id
          |JOIN qprof q ON q.doc_id = r.doc_id
          |JOIN documents d ON d.doc_id = r.doc_id
-         |WHERE NOT ($repAnySql OR $qualAnySql)""").stripMargin.replace("\n", " "),
+         |WHERE NOT ($repAnySql OR $qualAnySql)""",
     "docs_gopher_quality" ->
       // the 7 quality metrics straight off the qprof chain
-      (s"""WITH $qualCorpusCte, ${linedCtesFrom("qd")}, $qualProfileCtes
+      s"""WITH $qualCorpusCte, ${linedCtesFrom("qd")}, $qualProfileCtes
          |SELECT doc_id, n_words, mean_word_len, symbol_word_ratio,
          | bullet_line_fraction, ellipsis_line_fraction,
          | alpha_word_fraction, stop_word_hits
-         |FROM qprof""").stripMargin.replace("\n", " "),
+         |FROM qprof""",
     "docs_gopher_apply" -> {
       // per-doc CASE in fixed family precedence (7 quality families
       // in table order, then the repetition four) over the same
@@ -3545,7 +3506,7 @@ private[graft] object OracleSql {
       val fTop = fam("top2gram_char_fraction", "top3gram_char_fraction",
         "top4gram_char_fraction")
       val fDup = fam((5 to 10).map(n => s"dup${n}gram_char_fraction"): _*)
-      (s"""WITH $qualCorpusCte, ${linedCtesFrom("qd")},
+      s"""WITH $qualCorpusCte, ${linedCtesFrom("qd")},
          |$gopherProfileCtes, $dupMassCtes, $qualProfileCtes,
          |j AS (SELECT d.doc_id, d.source,
          |  CASE WHEN ${qualFlagSql("n_words")} THEN 'word_count'
@@ -3563,7 +3524,7 @@ private[graft] object OracleSql {
          | JOIN qprof q ON q.doc_id = r.doc_id
          | JOIN documents d ON d.doc_id = r.doc_id)
          |SELECT doc_id, source, gate_family IS NULL AS keep, gate_family
-         |FROM j""").stripMargin.replace("\n", " ")
+         |FROM j"""
     },
     "docs_gopher_gate" -> {
       // all three per-doc profile chains joined to sources, then the
@@ -3582,7 +3543,7 @@ private[graft] object OracleSql {
       val fAny = s"($qualAnySql OR $fLine OR $fPara OR $fTop OR $fDup)"
       def cnt(f: String, as: String) =
         s"CAST(sum(CASE WHEN $f THEN 1 ELSE 0 END) AS BIGINT) AS $as"
-      (s"""WITH $qualCorpusCte, ${linedCtesFrom("qd")},
+      s"""WITH $qualCorpusCte, ${linedCtesFrom("qd")},
          |$gopherProfileCtes, $dupMassCtes, $qualProfileCtes,
          |j AS (SELECT d.source, r.dup_line_fraction, r.dup_para_fraction,
          |  r.dup_line_char_fraction, r.dup_para_char_fraction,
@@ -3606,7 +3567,7 @@ private[graft] object OracleSql {
          | ${cnt(fAny, "n_flagged")},
          | CAST(sum(CASE WHEN $fAny THEN 1 ELSE 0 END) AS BIGINT)
          |  / CAST(count(*) AS BIGINT) AS flag_share
-         |FROM j GROUP BY 1""").stripMargin.replace("\n", " ")
+         |FROM j GROUP BY 1"""
     },
     "text_source_stats" ->
       s"""WITH ${toksCteAs("t2", "source, text")},
@@ -3623,7 +3584,7 @@ private[graft] object OracleSql {
         |  * (1.0 - least(1.0, (punct_count / greatest(n_chars, 1)) * 4.0))
         |  * (0.3 + 0.7 * least(1.0, (stopword_count / greatest(n_tokens, 1)) * 5.0)))
         |  AS avg_quality
-        |FROM s GROUP BY source""".stripMargin.replace("\n", " "),
+        |FROM s GROUP BY source""",
     "q_events_funnel" ->
       """WITH s AS (SELECT user_id, min(ts) AS signup_ts FROM events
         |  WHERE event_type = 'signup' GROUP BY user_id),
@@ -3635,37 +3596,36 @@ private[graft] object OracleSql {
         |  WHERE e.event_type = 'purchase' GROUP BY e.user_id)
         |SELECT (SELECT count(*) FROM s) AS n_signup,
         | (SELECT count(*) FROM c) AS n_click_after,
-        | (SELECT count(*) FROM p) AS n_purchase_after""".stripMargin.replace("\n", " "),
+        | (SELECT count(*) FROM p) AS n_purchase_after""",
     "dedup_exact_apply" ->
       """SELECT doc_id, lang, source, n_chars FROM documents
         |WHERE doc_id IN (SELECT min(doc_id)
         | FROM (SELECT doc_id,
         |   trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS norm
-        |  FROM documents) n GROUP BY norm)""".stripMargin.replace("\n", " "),
+        |  FROM documents) n GROUP BY norm)""",
     "dedup_exact" ->
       """SELECT min(doc_id) AS doc_id, count(*) AS n_copies
         |FROM (SELECT doc_id,
         |  trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS norm FROM documents) n
-        |GROUP BY norm""".stripMargin.replace("\n", " "),
+        |GROUP BY norm""",
     "dedup_minhash_lsh" ->
       // the WHOLE minhash+LSH pipeline replayed bit-for-bit (r10):
       // fused FNV shingles, 64 embedded permutations, slice-keyed
       // banding, capped buckets, exact-Jaccard verification, pair
       // summary — see minhashSigCtes for the arithmetic decomposition
-      (s"""WITH $minhashVerifiedCtes,
+      s"""WITH $minhashVerifiedCtes,
           |sides AS (
           | SELECT id_a AS doc_id, jaccard AS score, false AS is_junior
           |  FROM verified
           | UNION ALL SELECT id_b, jaccard, true FROM verified),
           |$dupPerdocCte
-          |${dupKeepSql()}""")
-        .stripMargin.replace("\n", " "),
+          |${dupKeepSql()}""",
     "dedup_exact_jaccard_pairs" ->
       // the EXHAUSTIVE definition, no prefix rule: every sharing
       // pair's exact shingle Jaccard, thresholded — the Spark side's
       // prefix filter is provably lossless, so the row sets must
       // agree; jaccard is one division of exact integers, bit-stable
-      (s"""WITH $shingleCtes,
+      s"""WITH $shingleCtes,
           |sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n
           | FROM sh GROUP BY 1),
           |pr AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
@@ -3677,27 +3637,26 @@ private[graft] object OracleSql {
           |FROM pr
           |JOIN sz sa ON sa.doc_id = pr.id_a
           |JOIN sz sb ON sb.doc_id = pr.id_b
-          |WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.5""")
-        .stripMargin.replace("\n", " "),
+          |WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.5""",
     "dedup_lsh_band_stats" ->
       // the cheap PREFIX of the same pipeline: per-band bucket-size
       // histogram over the banded signature keys
-      (s"""WITH $minhashSigCtes,
+      s"""WITH $minhashSigCtes,
           |bs AS (SELECT band, band_key, CAST(count(*) AS BIGINT)
           |  AS bucket_size FROM sig GROUP BY 1, 2)
           |SELECT CAST(band AS INT) AS band, bucket_size,
           | CAST(count(*) AS BIGINT) AS n_buckets,
           | CAST(bucket_size * (bucket_size - 1) // 2 AS BIGINT)
           |  * count(*) AS implied_pairs
-          |FROM bs GROUP BY 1, 2""").stripMargin.replace("\n", " "),
+          |FROM bs GROUP BY 1, 2""",
     "stream_sig_dedup" ->
       // full-signature grouping over the replayed minhash state
-      (s"""WITH $minhashSigCtes,
+      s"""WITH $minhashSigCtes,
           |fullsig AS (SELECT doc_id, list(mv ORDER BY p) AS sig
           | FROM mh GROUP BY doc_id)
           |SELECT min(doc_id) AS doc_id, CAST(count(*) AS BIGINT)
           |  AS n_copies
-          |FROM fullsig GROUP BY sig""").stripMargin.replace("\n", " "),
+          |FROM fullsig GROUP BY sig""",
     "dedup_simhash" -> simhashOracle,
     "dedup_ngram_jaccard" -> ngramJaccardOracle,
     "split_assign" -> {
@@ -3712,7 +3671,7 @@ private[graft] object OracleSql {
          |  WHEN u < ${cuts(1)} THEN 'val' ELSE 'test' END AS split
          |FROM documents, $f1, $f2,
          | LATERAL (SELECT CAST(($h2) // 2048 AS DOUBLE)
-         |   / 9007199254740992.0 AS u) uu""".stripMargin.replace("\n", " ")
+         |   / 9007199254740992.0 AS u) uu"""
     },
     "ann_ivfpq_res_topk" ->
       // the RESIDUAL trained tier (r10): one Lloyd round on the
@@ -3726,70 +3685,64 @@ private[graft] object OracleSql {
       // slices of the xxhash64-picked sample, per-subspace L2-argmin
       // encode, cosine against the reconstruction, k·16 budget
       // (r17 rerank escalation), exact rerank
-      (s"""WITH ${ivfCentsCtes("", pick = 32)},
-          |${pqTail(useIvf = false, budget = 160)}""")
-        .stripMargin.replace("\n", " "),
+      s"""WITH ${ivfCentsCtes("", pick = 32)},
+          |${pqTail(useIvf = false, budget = 160)}""",
     "ann_ivfpq_topk" ->
       // the composed FAISS-style tier: cells = first 16 of the SAME
       // 32-vector pick (one sampling pass feeds both structures),
       // probe prune (nprobe=14, the r17 cell-miss escalation) then
       // code-space scoring, k·16 budget
-      (s"""WITH ${ivfCentsCtes("", pick = 32)},
-          |${pqTail(useIvf = true, budget = 160, nprobe = 14)}""")
-        .stripMargin.replace("\n", " "),
+      s"""WITH ${ivfCentsCtes("", pick = 32)},
+          |${pqTail(useIvf = true, budget = 160, nprobe = 14)}""",
     "ann_index_ivfpq_delete_probe" ->
       // the PQ layout under the delete batch (r15): same pick, same
       // code-space scoring and k·16 budget, candidates drop the
       // tombstoned ids — logically the survivor assignment (per-
       // vector, so probe-time masking coincides)
-      (s"""WITH ${ivfCentsCtes("", pick = 32)},
+      s"""WITH ${ivfCentsCtes("", pick = 32)},
           |${pqTail(useIvf = true, budget = 160, nprobe = 12,
-            assignWhere = "WHERE e.vec_id % 7 <> 3")}""")
-        .stripMargin.replace("\n", " "),
+            assignWhere = "WHERE e.vec_id % 7 <> 3")}""",
     "ann_index_ivfpq_append_probe" ->
       // incremental IVF-PQ: model state (cells + codebooks) from the
       // even half's pick, the full corpus encoded against it; probes
       // 14 of 16 cells — the append path's staleness-compensation
       // dial at the r18 step (see the queries entry)
-      (s"""WITH ${ivfCentsCtes("WHERE vec_id % 2 = 0", pick = 32)},
-          |${pqTail(useIvf = true, budget = 160, nprobe = 14)}""")
-        .stripMargin.replace("\n", " "),
+      s"""WITH ${ivfCentsCtes("WHERE vec_id % 2 = 0", pick = 32)},
+          |${pqTail(useIvf = true, budget = 160, nprobe = 14)}""",
     "ann_ivf_topk" ->
       // the IVF tier replayed end to end (r10): the xxhash64
       // centroid pick, argmax cell assignment, 12-cell probes (r15
       // escalation), exact cosine top-10 — "deterministic but not
       // SQL-expressible" no longer holds once xxhash64 itself is
       // decomposed
-      (s"""WITH ${ivfCentsCtes("")},
-          |${ivfProbeTail(nprobe = 12)}""").stripMargin.replace("\n", " "),
+      s"""WITH ${ivfCentsCtes("")},
+          |${ivfProbeTail(nprobe = 12)}""",
     "ann_ivf_filtered_topk" ->
       // shared index, filtered candidates: same centroids and
       // probes, the predicate drops ineligible vectors at
       // assignment time (one index serves every predicate)
-      (s"""WITH ${ivfCentsCtes("")},
-          |${ivfProbeTail("WHERE e.label % 3 = 0", nprobe = 12)}""")
-        .stripMargin.replace("\n", " "),
+      s"""WITH ${ivfCentsCtes("")},
+          |${ivfProbeTail("WHERE e.label % 3 = 0", nprobe = 12)}""",
     "ann_index_ivf_append_probe" ->
       // the incrementally-maintained index: centroids picked from
       // the even half ("yesterday's" build), the odd half appended
       // against those STORED centroids — assignment of the FULL
       // corpus to the half-corpus centroid pick (AnnIndexSpec's
       // append ≡ union-at-fixed-centroids identity)
-      (s"""WITH ${ivfCentsCtes("WHERE vec_id % 2 = 0")},
-          |${ivfProbeTail(nprobe = 12)}""").stripMargin.replace("\n", " "),
+      s"""WITH ${ivfCentsCtes("WHERE vec_id % 2 = 0")},
+          |${ivfProbeTail(nprobe = 12)}""",
     "ann_index_delete_probe" ->
       // tombstone-masked probe (r15): same pick, same 12-cell
       // probes, candidates drop the deleted ids — logically the
       // assignment of the SURVIVOR corpus (assignment is per-vector,
       // so probe-time masking and survivor-only assignment coincide)
-      (s"""WITH ${ivfCentsCtes("")},
-          |${ivfProbeTail("WHERE e.vec_id % 7 <> 3", nprobe = 12)}""")
-        .stripMargin.replace("\n", " "),
+      s"""WITH ${ivfCentsCtes("")},
+          |${ivfProbeTail("WHERE e.vec_id % 7 <> 3", nprobe = 12)}""",
     "ann_index_compact_plan" ->
       // the compaction-plan manifest replayed: argmax cell
       // assignment, live/dead counts per cell (dead = the tombstoned
       // vec_id % 7 == 3 set), rewrite at rounded dead_frac > 0.14
-      (s"""WITH ${ivfCentsCtes("")},
+      s"""WITH ${ivfCentsCtes("")},
           |$ivfCellDeadCtes
           |SELECT CAST(cell AS INT) AS cell, n_vecs, n_dead,
           | round(CASE WHEN n_vecs > 0
@@ -3798,11 +3751,11 @@ private[graft] object OracleSql {
           | round(CASE WHEN n_vecs > 0
           |  THEN CAST(n_dead AS DOUBLE) / n_vecs ELSE 0.0 END, 6) > 0.14
           |  AS rewrite
-          |FROM filled""").stripMargin.replace("\n", " "),
+          |FROM filled""",
     "ann_index_health" ->
       // the maintenance decision table replayed: compact-plan
       // arithmetic + per-cell balance + the two action columns
-      (s"""WITH ${ivfCentsCtes("")},
+      s"""WITH ${ivfCentsCtes("")},
           |$ivfCellDeadCtes,
           |tt AS (SELECT CAST(sum(n_vecs) AS BIGINT) AS total FROM filled),
           |hb AS (SELECT max(round(CASE WHEN tt.total > 0
@@ -3820,10 +3773,10 @@ private[graft] object OracleSql {
           |  THEN 'rewrite' ELSE 'ok' END AS cell_action,
           | CASE WHEN hb.mx > 1.25 THEN 'rebuild' ELSE 'ok' END
           |  AS index_action
-          |FROM filled, tt, hb""").stripMargin.replace("\n", " "),
+          |FROM filled, tt, hb""",
     "ann_ivf_cell_stats" ->
       // the cell-balance diagnostic over the same replayed pick
-      (s"""WITH ${ivfCentsCtes("")},
+      s"""WITH ${ivfCentsCtes("")},
           |assigned AS (SELECT vec_id, cell FROM (
           | ${ivfRankSql("cents")}) x WHERE rn = 1),
           |filled AS (SELECT s.cell,
@@ -3835,20 +3788,19 @@ private[graft] object OracleSql {
           |SELECT CAST(cell AS INT) AS cell, n_vecs,
           | round(CAST(n_vecs AS DOUBLE) / total, 6) AS share,
           | round(CAST(n_vecs AS DOUBLE) * 16.0 / total, 6) AS balance
-          |FROM filled, tt""").stripMargin.replace("\n", " "),
+          |FROM filled, tt""",
     "dedup_embedding" ->
       // the hyperplane-LSH embedding near-dup tier, planes embedded
       // (8 tables × 8 planes, seed 11), cosine verify at τ=0.9,
       // the standard pair-summary tail
-      (s"""WITH ${hyperplaneSigCte(8, 8, 11L)},
+      s"""WITH ${hyperplaneSigCte(8, 8, 11L)},
           |${hyperplanePairsCte(0.9)},
           |${dupSidesCte("cosine")},
           |$dupPerdocCte
           |SELECT e.vec_id AS doc_id, coalesce(p.n_dupes, 0) AS n_dupes,
           | coalesce(p.max_score, 0.0) AS max_score,
           | coalesce(NOT p.dominated, true) AS keep
-          |FROM embeddings e LEFT JOIN perdoc p ON p.doc_id = e.vec_id""")
-        .stripMargin.replace("\n", " "),
+          |FROM embeddings e LEFT JOIN perdoc p ON p.doc_id = e.vec_id""",
     "dedup_embedding_incremental" ->
       // EXHAUSTIVE new-batch × corpus comparison (no candidate
       // rule); best match on the 1e-6-rounded cosine then corpus_id
@@ -3874,8 +3826,7 @@ private[graft] object OracleSql {
         | CAST(coalesce(a.match_id, -1) AS BIGINT) AS match_id,
         | coalesce(a.best_cosine, -1.0) AS best_cosine,
         | coalesce(a.n_matches, 0) = 0 AS keep
-        |FROM nn LEFT JOIN agg a USING (vec_id)""".stripMargin
-        .replace("\n", " "),
+        |FROM nn LEFT JOIN agg a USING (vec_id)""",
     "text_unigram_train" ->
       // hard-EM unigram training replayed end to end: candidate
       // substrings, the top-V cut, two Viterbi re-segmentation
@@ -3885,7 +3836,7 @@ private[graft] object OracleSql {
         unigramTrainCtes +
         """ SELECT v2.piece, v2.uses AS n_uses,
           | CAST(p2.p AS DOUBLE) AS prob
-          |FROM v2 JOIN p2 USING (piece)""".stripMargin.replace("\n", " ")),
+          |FROM v2 JOIN p2 USING (piece)"""),
     "text_unigram_apply" ->
       // the trained tokenizer applied: one more Viterbi pass under
       // the final probs, per-doc fold with the FNV path signature
@@ -3914,8 +3865,7 @@ private[graft] object OracleSql {
         |  THEN round(CAST(a.n_pieces AS DOUBLE) / a.n_words, 6)
         |  ELSE 0.0 END AS pieces_per_word,
         | CAST(coalesce(a.sig, 0) AS BIGINT) AS path_sig
-        |FROM documents d LEFT JOIN da a USING (doc_id)""".stripMargin
-        .replace("\n", " ")),
+        |FROM documents d LEFT JOIN da a USING (doc_id)"""),
     "text_quality_lr_train" ->
       // the trained model row: three float-snapped GD iterations
       // unrolled, weights emitted as float-exact doubles
@@ -3937,7 +3887,7 @@ private[graft] object OracleSql {
         |SELECT doc_id, round(1.0 / (1.0 + exp(-m)), 6) AS score,
         | (m >= 0.0) AS predicted, (y = 1.0) AS label,
         | ((m >= 0.0) = (y = 1.0)) AS correct
-        |FROM mg""".stripMargin.replace("\n", " ")),
+        |FROM mg"""),
     "text_decontaminate_semantic" -> semanticDecontamSql,
     // the intake gate computes the SAME relation by definition (the
     // closure matrix replays the batch kernel's arithmetic exactly),
@@ -3948,7 +3898,7 @@ private[graft] object OracleSql {
       // the production SemDeDup path: closure over the REPLAYED
       // LSH-fed pair relation (same recursive tail as the exact
       // anchor, fed by banded candidates instead of all pairs)
-      (s"""WITH RECURSIVE ${hyperplaneSigCte(8, 8, 11L)},
+      s"""WITH RECURSIVE ${hyperplaneSigCte(8, 8, 11L)},
           |${hyperplanePairsCte(0.9)},
           |e2 AS (SELECT id_a AS src, id_b AS dst FROM verified
           | UNION ALL SELECT id_b AS src, id_a AS dst FROM verified),
@@ -3959,7 +3909,7 @@ private[graft] object OracleSql {
           |lab AS (SELECT vec_id, min(r) AS group_id
           | FROM reach GROUP BY vec_id)
           |SELECT vec_id, group_id, vec_id = group_id AS keep
-          |FROM lab""").stripMargin.replace("\n", " "),
+          |FROM lab""",
     "ann_lsh_topk" ->
       // the multiprobe LSH tier replayed: 24×8-plane signatures for
       // the corpus; per (query, table) the exact bucket + the 5
@@ -3967,7 +3917,7 @@ private[graft] object OracleSql {
       // order, ties by plane index — r18 table escalation 16→24 at
       // probes 6, the post-multiprobe-saturation axis);
       // candidates meet on (tbl, sig), exact cosine ranks the top-10
-      (s"""WITH ${hyperplaneSigCte(24, 8, 23L)},
+      s"""WITH ${hyperplaneSigCte(24, 8, 23L)},
           |proj AS MATERIALIZED (SELECT e.vec_id, pl.tbl, pl.p,
           |  list_inner_product(CAST(e.embedding AS DOUBLE[]), pl.w) AS s
           | FROM embeddings e, pl WHERE e.vec_id % 100 = 0),
@@ -3996,22 +3946,21 @@ private[graft] object OracleSql {
           | JOIN embeddings n ON n.vec_id = c.neighbor_id)
           |SELECT query_id, neighbor_id, cosine FROM scored
           |QUALIFY row_number() OVER (PARTITION BY query_id
-          | ORDER BY cosine DESC, neighbor_id) <= 10""")
-        .stripMargin.replace("\n", " "),
+          | ORDER BY cosine DESC, neighbor_id) <= 10""",
     "dedup_groups" ->
       // transitive closure over the REPLAYED minhash pair relation —
       // the same recursive-reachability tail as dedup_groups_blocked,
       // fed by minhashVerifiedCtes instead of the blocked trunk
-      (s"""WITH RECURSIVE $minhashVerifiedCtes,
+      s"""WITH RECURSIVE $minhashVerifiedCtes,
           |${minLabelCtes("verified")}
           |SELECT doc_id, group_id, doc_id = group_id AS keep
-          |FROM lab""").stripMargin.replace("\n", " "),
+          |FROM lab""",
     "dedup_exact_report" ->
       """SELECT md5(norm) AS group_md5, count(*) AS n_copies,
         | min(doc_id) AS min_doc_id, max(doc_id) AS max_doc_id
         |FROM (SELECT doc_id,
         |  trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS norm FROM documents) n
-        |GROUP BY norm HAVING count(*) > 1""".stripMargin.replace("\n", " "),
+        |GROUP BY norm HAVING count(*) > 1""",
     "dedup_token_inflation" ->
       // all sums CAST to BIGINT (HUGEINT trap); rate is exact
       // integer division on the 1e-6 grid, zero-token source → null
@@ -4032,7 +3981,7 @@ private[graft] object OracleSql {
         | CASE WHEN sum(n_tokens) = 0 THEN NULL
         |  ELSE round(sum(CASE WHEN NOT keep THEN n_tokens ELSE 0 END)
         |   * 1.0 / sum(n_tokens), 6) END AS dup_token_rate
-        |FROM d GROUP BY 1""".stripMargin.replace("\n", " "),
+        |FROM d GROUP BY 1""",
     "ann_bruteforce_topk" ->
       // DOUBLE[] casts: DuckDB accumulates FLOAT[] cosines in single
       // precision, which flips near-boundary ranks vs graft's
@@ -4044,7 +3993,7 @@ private[graft] object OracleSql {
         | FROM embeddings q JOIN embeddings c ON c.vec_id != q.vec_id
         | WHERE q.vec_id % 100 = 0) s
         |QUALIFY row_number() OVER (PARTITION BY query_id
-        |  ORDER BY cosine DESC, neighbor_id) <= 10""".stripMargin.replace("\n", " "),
+        |  ORDER BY cosine DESC, neighbor_id) <= 10""",
     "ann_matryoshka_topk" ->
       // stage 1 on the 32-dim PREFIX slice (1-based inclusive list
       // slice replays Spark's slice(emb, 1, 32)) with the cut ranked
@@ -4053,7 +4002,7 @@ private[graft] object OracleSql {
       // id identically cross-engine), exact full-dim rerank of the
       // k·32 candidates (r17 escalation) — the bruteforce exactness
       // argument at both stages
-      """WITH q AS (SELECT vec_id AS query_id, embedding
+      s"""WITH q AS (SELECT vec_id AS query_id, embedding
         | FROM embeddings WHERE vec_id % 100 = 0),
         |apx AS (SELECT query_id, neighbor_id FROM (
         | SELECT q.query_id, e.vec_id AS neighbor_id, row_number() OVER (
@@ -4062,31 +4011,23 @@ private[graft] object OracleSql {
         |     CAST(q.embedding[1:32] AS DOUBLE[])), 6) DESC, e.vec_id) AS rn
         | FROM embeddings e, q WHERE e.vec_id != q.query_id) x
         | WHERE rn <= 320)
-        |SELECT query_id, neighbor_id, cosine FROM (
-        | SELECT a.query_id, a.neighbor_id,
-        |  list_cosine_similarity(CAST(qq.embedding AS DOUBLE[]),
-        |    CAST(n.embedding AS DOUBLE[])) AS cosine
-        | FROM apx a
-        | JOIN embeddings qq ON qq.vec_id = a.query_id
-        | JOIN embeddings n ON n.vec_id = a.neighbor_id) s
-        |QUALIFY row_number() OVER (PARTITION BY query_id
-        |  ORDER BY cosine DESC, neighbor_id) <= 10""".stripMargin.replace("\n", " "),
+        |${exactTop10Sql("apx", "a", "qq")}""",
     "emb_pca_project" ->
       // the published transform replayed from the frozen-model
       // literals (r16): pval IS kernels.pcaProject — per-component
       // ascending double accumulate, snap to float — and the key's
       // 1e-6-rounded double widening on top
-      (s"""WITH $pcaFrozenCtes
+      s"""WITH $pcaFrozenCtes
          |SELECT vec_id, CAST(j AS INT) AS dim,
          | round(CAST(v AS DOUBLE), 6) AS value
-         |FROM pval""").stripMargin.replace("\n", " "),
+         |FROM pval""",
     "ann_pca_topk" ->
       // the matryoshka two-stage oracle with the PCA projection in
       // place of the prefix slice: stage 1 ranks the 1e-6-ROUNDED
       // cosine of the frozen-model projections (float-snapped per
       // component, then exact double widening — bit-identical to the
       // Spark stage), exact full-dim rerank of the k·16 candidates
-      (s"""WITH $pcaFrozenCtes,
+      s"""WITH $pcaFrozenCtes,
          |proj AS MATERIALIZED (SELECT vec_id,
          |  list(CAST(v AS DOUBLE) ORDER BY j) AS p
          | FROM pval GROUP BY 1),
@@ -4097,16 +4038,7 @@ private[graft] object OracleSql {
          |    DESC, cp.vec_id) AS rn
          | FROM proj qp JOIN proj cp ON cp.vec_id != qp.vec_id
          | WHERE qp.vec_id % 100 = 0) x WHERE rn <= 160)
-         |SELECT query_id, neighbor_id, cosine FROM (
-         | SELECT a.query_id, a.neighbor_id,
-         |  list_cosine_similarity(CAST(qq.embedding AS DOUBLE[]),
-         |    CAST(n.embedding AS DOUBLE[])) AS cosine
-         | FROM apx a
-         | JOIN embeddings qq ON qq.vec_id = a.query_id
-         | JOIN embeddings n ON n.vec_id = a.neighbor_id) s
-         |QUALIFY row_number() OVER (PARTITION BY query_id
-         |  ORDER BY cosine DESC, neighbor_id) <= 10""").stripMargin
-        .replace("\n", " "),
+         |${exactTop10Sql("apx", "a", "qq")}""",
     "ann_mmr_diverse" -> {
       // greedy MMR unrolled: k=10 fixed, so the 10 argmax steps chain
       // as CTEs (the q_copurchase_pagerank unrolling pattern). Pool =
@@ -4167,18 +4099,17 @@ private[graft] object OracleSql {
          |  ORDER BY relevance DESC, neighbor_id) = 1),
          |sel1 AS MATERIALIZED (SELECT query_id, neighbor_id FROM p1),
          |$steps
-         |$unions""".stripMargin.replace("\n", " ")
+         |$unions"""
     },
     "emb_kmeans_assign" ->
-      (s"WITH $kmeansCtes " +
-        "SELECT vec_id, cell FROM fa").replace("\n", " "),
+      s"WITH $kmeansCtes SELECT vec_id, cell FROM fa",
     // semantic-cluster temperature rebalancing: the kmeans loop's
     // final assignment becomes the STRATUM of the τ=1/2 sampler —
     // same rate arithmetic (one division + one sqrt, both
     // correctly-rounded IEEE) and hash filter as the source-keyed
     // temperature key, so the selected SET is engine-exact
     "docs_cluster_temperature" ->
-      (s"""WITH $kmeansCtes,
+      s"""WITH $kmeansCtes,
         |asg AS (SELECT vec_id AS doc_id, cell FROM fa),
         |cl AS (SELECT d.doc_id, a.cell
         | FROM documents d JOIN asg a USING (doc_id)),
@@ -4191,7 +4122,7 @@ private[graft] object OracleSql {
         |WHERE substring(md5(CAST(c.doc_id AS VARCHAR) || ':t42'), 1, 8) <
         | CASE WHEN r.rate >= 1.0 THEN 'g'
         |  ELSE printf('%08x', CAST(floor(r.rate * 4294967296.0) AS BIGINT))
-        |  END""").stripMargin.replace("\n", " "),
+        |  END""",
     "ann_rrf_hybrid" ->
       // both retrievers replayed in full: dense ranks from the same
       // DOUBLE[] cosine as ann_bruteforce_topk; lexical ranks from
@@ -4232,7 +4163,7 @@ private[graft] object OracleSql {
         |SELECT query_id, neighbor_id, rrf_score FROM (
         | SELECT *, row_number() OVER (PARTITION BY query_id
         |   ORDER BY rrf_score DESC, neighbor_id) AS rn FROM fused) f
-        |WHERE rn <= 10""".stripMargin.replace("\n", " "),
+        |WHERE rn <= 10""",
     "ann_sq_topk" ->
       // the dequantized reconstruction replays exactly: double grid
       // arithmetic (1-based lambda index j ↔ Spark's 0-based i+1),
@@ -4257,7 +4188,7 @@ private[graft] object OracleSql {
         | FROM embeddings q JOIN dq c ON c.vec_id != q.vec_id
         | WHERE q.vec_id % 100 = 0) s
         |QUALIFY row_number() OVER (PARTITION BY query_id
-        |  ORDER BY cosine DESC, neighbor_id) <= 10""".stripMargin.replace("\n", " "),
+        |  ORDER BY cosine DESC, neighbor_id) <= 10""",
     "ann_filtered_topk" ->
       // pre-filter semantics: the predicate restricts the corpus
       // BEFORE ranking, so this is the true top-k of the eligible set
@@ -4268,7 +4199,7 @@ private[graft] object OracleSql {
         | FROM embeddings q JOIN embeddings c ON c.vec_id != q.vec_id
         | WHERE q.vec_id % 100 = 0 AND c.label % 3 = 0) s
         |QUALIFY row_number() OVER (PARTITION BY query_id
-        |  ORDER BY cosine DESC, neighbor_id) <= 10""".stripMargin.replace("\n", " "),
+        |  ORDER BY cosine DESC, neighbor_id) <= 10""",
     "mm_near_dup_blobs" ->
       """WITH f AS (SELECT doc_id, md5(substr(text, i * 128 + 1, 64)) AS fmd5
         |  FROM documents, LATERAL (SELECT unnest(generate_series(0,
@@ -4283,8 +4214,7 @@ private[graft] object OracleSql {
         | round(n_shared * 1.0 / (sa.n + sb.n - n_shared), 6) AS chunk_jaccard
         |FROM sh JOIN sz sa ON sa.doc_id = sh.id_a
         | JOIN sz sb ON sb.doc_id = sh.id_b
-        |WHERE n_shared * 1.0 / (sa.n + sb.n - n_shared) >= 0.3"""
-        .stripMargin.replace("\n", " "),
+        |WHERE n_shared * 1.0 / (sa.n + sb.n - n_shared) >= 0.3""",
     "mm_blob_dedup_incremental" ->
       // new×history pairs only; chunk df capped over the union
       """WITH f AS (SELECT doc_id, md5(substr(text, i * 128 + 1, 64)) AS fmd5
@@ -4302,8 +4232,7 @@ private[graft] object OracleSql {
         | round(n_shared * 1.0 / (sa.n + sb.n - n_shared), 6) AS chunk_jaccard
         |FROM sh JOIN sz sa ON sa.doc_id = sh.new_id
         | JOIN sz sb ON sb.doc_id = sh.corpus_id
-        |WHERE n_shared * 1.0 / (sa.n + sb.n - n_shared) >= 0.3"""
-        .stripMargin.replace("\n", " "),
+        |WHERE n_shared * 1.0 / (sa.n + sb.n - n_shared) >= 0.3""",
     "mm_dedup_groups" ->
       // the blob pair relation + the shared recursive reachability
       // closure (dedup_groups_blocked / dedup_embedding_groups shape)
@@ -4321,9 +4250,9 @@ private[graft] object OracleSql {
         |  JOIN sz sa ON sa.doc_id = sh.id_a
         |  JOIN sz sb ON sb.doc_id = sh.id_b
         |  WHERE n_shared * 1.0 / (sa.n + sb.n - n_shared) >= 0.3),
-        |${minLabelCtes("m", p = "  ")}
+        |${minLabelCtes("m")}
         |SELECT doc_id, group_id, doc_id = group_id AS keep
-        |FROM lab""".stripMargin.replace("\n", " "),
+        |FROM lab""",
     "mm_pooled_topk" ->
       // the multimodal→embedding bridge, oracle-checked END TO END:
       // the stub decode's FNV-1a fold replays in DuckDB as a
@@ -4339,7 +4268,7 @@ private[graft] object OracleSql {
         |  FROM documents, LATERAL (SELECT unnest(generate_series(0,
         |   greatest((length(text) - 1) // 128, 0))) AS i) g),
         |d AS (SELECT doc_id,
-        |  ${fnv1aSql("frame", j = "i", p = "    ", pp = "      ")} AS h,
+        |  ${fnv1aSql("frame", j = "i")} AS h,
         |  CASE WHEN length(frame) = 0 THEN 0.0 ELSE
         |    CAST(list_sum(list_transform(range(1, length(frame) + 1),
         |      i -> ord(substr(frame, i, 1)))) AS DOUBLE) / length(frame)
@@ -4357,7 +4286,7 @@ private[graft] object OracleSql {
         | FROM p q JOIN p c ON c.doc_id != q.doc_id
         | WHERE q.doc_id % 50 = 0) s
         |QUALIFY row_number() OVER (PARTITION BY query_id
-        |  ORDER BY cosine DESC, neighbor_id) <= 10""".stripMargin.replace("\n", " "),
+        |  ORDER BY cosine DESC, neighbor_id) <= 10""",
     "ann_knn_classify" ->
       // exact top-10 neighbors, majority label (ties → smaller
       // label), leave-one-out correctness vs the query's own label
@@ -4380,8 +4309,7 @@ private[graft] object OracleSql {
         | FROM votes) v WHERE rn = 1)
         |SELECT w.query_id, w.n_label AS pred_label, w.n_votes,
         | q.label AS true_label, w.n_label = q.label AS correct
-        |FROM win w JOIN embeddings q ON q.vec_id = w.query_id"""
-        .stripMargin.replace("\n", " "),
+        |FROM win w JOIN embeddings q ON q.vec_id = w.query_id""",
     "ann_rerank" ->
       // stage 1: cosine top-40 per query (k·expand); stage 2: label
       // boost rerank, top-10 survive. DOUBLE[] casts as in
@@ -4402,12 +4330,11 @@ private[graft] object OracleSql {
         |    THEN 0.05 ELSE 0.0 END AS rerank_score
         | FROM s1 JOIN embeddings c ON c.vec_id = s1.neighbor_id) r
         |QUALIFY row_number() OVER (PARTITION BY query_id
-        |  ORDER BY rerank_score DESC, neighbor_id) <= 10""".stripMargin
-        .replace("\n", " "),
+        |  ORDER BY rerank_score DESC, neighbor_id) <= 10""",
     "q_embedding_centroids" ->
       """SELECT label, CAST(i AS INT) AS pos, avg(embedding[i + 1]) AS avg_val
         |FROM embeddings, range(64) t(i)
-        |GROUP BY label, i""".stripMargin.replace("\n", " "),
+        |GROUP BY label, i""",
     "emb_dim_stats" ->
       // parallel unnest pairs each element with its 1-based ordinal;
       // mean/var cross row order → rounded 1e-6, min/max exact
@@ -4419,7 +4346,7 @@ private[graft] object OracleSql {
         | round(var_samp(CAST(v AS DOUBLE)), 6) AS var_v,
         | min(CAST(v AS DOUBLE)) AS min_v,
         | max(CAST(v AS DOUBLE)) AS max_v
-        |FROM ex GROUP BY 1""".stripMargin.replace("\n", " "),
+        |FROM ex GROUP BY 1""",
     "emb_centroid_drift" ->
       // per-(label, dim) means at ≤ labels·dim grain, drift reduced
       // on the aggregates; cosine/norms rounded (summation-order
@@ -4439,7 +4366,7 @@ private[graft] object OracleSql {
         |SELECT label, n_a, n_b,
         | round(dot / (sqrt(na2) * sqrt(nb2)), 6) AS centroid_cosine,
         | round(sqrt(na2), 6) AS norm_a, round(sqrt(nb2), 6) AS norm_b
-        |FROM j""".stripMargin.replace("\n", " "),
+        |FROM j""",
     "emb_norm_profile" ->
       // the norm replays Spark's pinned left fold bit-for-bit:
       // list_prepend(0.0) = the explicit fold init, per-element
@@ -4455,11 +4382,11 @@ private[graft] object OracleSql {
         | min(nrm) AS min_norm, max(nrm) AS max_norm,
         | round(avg(nrm), 6) AS avg_norm,
         | CAST(sum(CASE WHEN nrm = 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS n_zero
-        |FROM n GROUP BY label""".stripMargin.replace("\n", " "),
+        |FROM n GROUP BY label""",
     "mm_blob_stats" ->
       """SELECT doc_id, CAST(length(text) AS BIGINT) AS n_bytes,
         | sha256(text) AS sha256, hex(substr(text, 1, 4)) AS magic_hex
-        |FROM documents""".stripMargin.replace("\n", " "),
+        |FROM documents""",
     "mm_thumbnail" ->
       // the resize replayed from the pixel recipe: 2×2 block floored
       // channel means over the FNV pixels, summed over the 4×4 grid —
@@ -4479,7 +4406,7 @@ private[graft] object OracleSql {
         | CAST(sum(orr) AS BIGINT) AS sum_r,
         | CAST(sum(og) AS BIGINT) AS sum_g,
         | CAST(sum(ob) AS BIGINT) AS sum_b
-        |FROM o GROUP BY 1""".stripMargin.replace("\n", " "),
+        |FROM o GROUP BY 1""",
     "mm_decode_png" ->
       // replay of the synthesized PIXELS, never the codec: pixel i's
       // channels are shifted windows of FNV-1a("doc_id:i") (the
@@ -4492,33 +4419,32 @@ private[graft] object OracleSql {
         | CAST(sum((h // 256) % 256) AS BIGINT) AS sum_r,
         | CAST(sum((h // 65536) % 256) AS BIGINT) AS sum_g,
         | CAST(sum((h // 16777216) % 256) AS BIGINT) AS sum_b
-        |FROM px GROUP BY 1""".stripMargin.replace("\n", " "),
+        |FROM px GROUP BY 1""",
     "mm_phash_pairs" ->
       // EXHAUSTIVE all-pairs tail over the shared signature replay
       // (no candidate rule - the banded plan must be lossless)
-      (s"""WITH $phashSigCtes
+      s"""WITH $phashSigCtes
         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
         | CAST(bit_count(xor(a.dhash, b.dhash)) AS INTEGER) AS hamming
         |FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.dhash, b.dhash)) <= 6""").stripMargin
-        .replace("\n", " "),
+        |WHERE bit_count(xor(a.dhash, b.dhash)) <= 6""",
     "mm_phash_groups" ->
       // recursive reachability closure over the exhaustive pair
       // relation: label = min id reachable through undirected edges
-      (s"""WITH RECURSIVE $phashSigCtes,
+      s"""WITH RECURSIVE $phashSigCtes,
          |pp AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
          | FROM sig a JOIN sig b ON a.doc_id < b.doc_id
          | WHERE bit_count(xor(a.dhash, b.dhash)) <= 6),
          |${minLabelCtes("pp")}
          |SELECT doc_id, group_id, doc_id = group_id AS keep
-         |FROM lab""").stripMargin.replace("\n", " "),
+         |FROM lab""",
     "mm_phash_keep_best" ->
       // the groups closure + the best-copy window: rank = decoded
       // pixel count, replayed from the fixture recipe (r16: the
       // % 20 == 11 class is a 2× upscale, 256 px vs 64) — padded
       // restorations out-rank their smaller-id masters, so the rank
       // ORDERING itself is oracle-covered, not just the tie-break
-      (s"""WITH RECURSIVE $phashSigCtes,
+      s"""WITH RECURSIVE $phashSigCtes,
          |pp AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
          | FROM sig a JOIN sig b ON a.doc_id < b.doc_id
          | WHERE bit_count(xor(a.dhash, b.dhash)) <= 6),
@@ -4531,72 +4457,68 @@ private[graft] object OracleSql {
          |    AS BIGINT) AS rank_key
          |   FROM lab) lr)
          |SELECT doc_id, group_id, rank_key, rn = 1 AS keep
-         |FROM rk""").stripMargin.replace("\n", " "),
+         |FROM rk""",
     "mm_phash_incremental" ->
       // EXHAUSTIVE new-batch x store comparison over the shared
       // signature replay (no candidate rule — the banded plan must
       // be lossless); best match = min (hamming, store_id)
-      (s"""WITH $phashSigCtes,
+      s"""WITH $phashSigCtes,
         |nd AS (SELECT doc_id, dhash FROM sig WHERE doc_id % 5 = 1),
         |st AS (SELECT doc_id AS store_id, dhash FROM sig
         | WHERE doc_id % 5 <> 1),
         |p AS (SELECT nd.doc_id, st.store_id,
         |  CAST(bit_count(xor(nd.dhash, st.dhash)) AS INTEGER) AS hamming
         | FROM nd JOIN st ON bit_count(xor(nd.dhash, st.dhash)) <= 6),
-        |$storeMatchSql""").stripMargin
-        .replace("\n", " "),
+        |$storeMatchSql""",
     "mm_phash_dedup" ->
       // per-blob summary tail: the keep decision over the same
       // exhaustive pair relation (keep = no smaller-id perceptual
       // dup), sim = 56 - hamming so bigger is more similar
-      (s"""WITH $phashSigCtes,
+      s"""WITH $phashSigCtes,
         |verified AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
         |  56 - bit_count(xor(a.dhash, b.dhash)) AS sim
         | FROM sig a JOIN sig b ON a.doc_id < b.doc_id
         | WHERE bit_count(xor(a.dhash, b.dhash)) <= 6),
         |${dupSidesCte("CAST(sim AS DOUBLE)")},
         |$dupPerdocCte
-        |${dupKeepSql()}""").stripMargin
-        .replace("\n", " "),
+        |${dupKeepSql()}""",
     "mm_audio_sig_pairs" ->
       // exhaustive all-pairs definition, no candidate rule: the
       // banding is pigeonhole-lossless; samples replay the xxhash64
       // recipe (Xx64Sql step chain) with the scaled-copy rule,
       // sig = 63 sign-of-delta bits
-      (s"""WITH $audioSigCtes
+      s"""WITH $audioSigCtes
          |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
          | CAST(bit_count(xor(a.asig, b.asig)) AS INTEGER) AS hamming
          |FROM asg a JOIN asg b ON a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.asig, b.asig)) <= 6""")
-        .stripMargin.replace("\n", " "),
+         |WHERE bit_count(xor(a.asig, b.asig)) <= 6""",
     "mm_audio_sig_dedup" ->
       // the pair-summary tail over the same exhaustive relation
-      (s"""WITH $audioSigCtes,
+      s"""WITH $audioSigCtes,
          |verified AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
          |  63 - bit_count(xor(a.asig, b.asig)) AS sim
          | FROM asg a JOIN asg b ON a.doc_id < b.doc_id
          | WHERE bit_count(xor(a.asig, b.asig)) <= 6),
          |${dupSidesCte("CAST(sim AS DOUBLE)")},
          |$dupPerdocCte
-         |${dupKeepSql()}""")
-        .stripMargin.replace("\n", " "),
+         |${dupKeepSql()}""",
     "mm_audio_sig_groups" ->
       // recursive reachability closure over the exhaustive pair
       // relation: label = min id reachable through undirected edges
-      (s"""WITH RECURSIVE $audioSigCtes,
+      s"""WITH RECURSIVE $audioSigCtes,
          |pp AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
          | FROM asg a JOIN asg b ON a.doc_id < b.doc_id
          | WHERE bit_count(xor(a.asig, b.asig)) <= 6),
          |${minLabelCtes("pp")}
          |SELECT doc_id, group_id, doc_id = group_id AS keep
-         |FROM lab""").stripMargin.replace("\n", " "),
+         |FROM lab""",
     "mm_audio_keep_best" ->
       // the audio closure + the best-copy window: rank = decoded
       // sample count, replayed from the fixture recipe (r16: the
       // % 20 == 11 class is a 96-sample extended master vs 64) —
       // the longer restoration out-ranks its smaller-id source, so
       // the rank ORDERING itself is oracle-covered
-      (s"""WITH RECURSIVE $audioSigCtes,
+      s"""WITH RECURSIVE $audioSigCtes,
          |pp AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
          | FROM asg a JOIN asg b ON a.doc_id < b.doc_id
          | WHERE bit_count(xor(a.asig, b.asig)) <= 6),
@@ -4609,7 +4531,7 @@ private[graft] object OracleSql {
          |    AS BIGINT) AS rank_key
          |   FROM lab) lr)
          |SELECT doc_id, group_id, rank_key, rn = 1 AS keep
-         |FROM rk""").stripMargin.replace("\n", " "),
+         |FROM rk""",
     "mm_audio_winnow_pairs" ->
       // exact fingerprint-match definition over the winnowed replay
       // (the production tier: shared-fingerprint equi-join, zero
@@ -4617,78 +4539,75 @@ private[graft] object OracleSql {
       // the robustness); buckets capped at the operator's 256
       // smallest ids (r15, mirroring the Spark-side maxBucket
       // guard); doc pairs fold to the shared count
-      (s"""WITH $audioWinnowCtes, $audioWinnowPairCte
+      s"""WITH $audioWinnowCtes, $audioWinnowPairCte
          |SELECT id_a, id_b,
          | CAST(0 AS INTEGER) AS best_hamming,
          | CAST(count(*) AS BIGINT) AS n_shared
          |FROM wpair
-         |GROUP BY 1, 2""").stripMargin.replace("\n", " "),
+         |GROUP BY 1, 2""",
     "mm_audio_winnow_dedup" ->
       // the pair-summary tail over the exact-match fingerprint pair
       // relation; score = shared count, keep = not dominated
-      (s"""WITH $audioWinnowCtes, $audioWinnowPairCte,
+      s"""WITH $audioWinnowCtes, $audioWinnowPairCte,
          |verified AS (SELECT id_a, id_b,
          |  CAST(count(*) AS DOUBLE) AS sim
          | FROM wpair
          | GROUP BY 1, 2),
          |${dupSidesCte("sim")},
          |$dupPerdocCte
-         |${dupKeepSql("(SELECT DISTINCT doc_id FROM wsg) d")}""").stripMargin
-        .replace("\n", " "),
+         |${dupKeepSql("(SELECT DISTINCT doc_id FROM wsg) d")}""",
     "mm_audio_winnow_groups" ->
       // recursive reachability closure over the exact-match
       // fingerprint pair relation (capped buckets, the operator's
       // guard); label = min reachable id
-      (s"""WITH RECURSIVE $audioWinnowCtes, $audioWinnowPairCte,
+      s"""WITH RECURSIVE $audioWinnowCtes, $audioWinnowPairCte,
          |pp AS (SELECT DISTINCT id_a, id_b FROM wpair),
          |${minLabelCtes("pp")}
          |SELECT doc_id, group_id, doc_id = group_id AS keep
-         |FROM lab""").stripMargin.replace("\n", " "),
+         |FROM lab""",
     "mm_audio_winnow_keep_best" ->
       // same closure, longest-recording survivor: rank = the decoded
       // sample count the fixture VARIES in both directions (trims
       // shorter than their smaller-id master, extensions LONGER), so
       // the ordering itself is oracle-covered, ties to min id
-      (s"""WITH RECURSIVE $audioWinnowCtes, $audioWinnowPairCte,
+      s"""WITH RECURSIVE $audioWinnowCtes, $audioWinnowPairCte,
          |pp AS (SELECT DISTINCT id_a, id_b FROM wpair),
          |${minLabelCtes("pp")}
          |SELECT l.doc_id, l.group_id,
          | CAST(w.n AS BIGINT) AS rank_key,
          | (row_number() OVER (PARTITION BY l.group_id
          |   ORDER BY w.n DESC, l.doc_id) = 1) AS keep
-         |FROM lab l JOIN wdn w USING (doc_id)""")
-        .stripMargin.replace("\n", " "),
+         |FROM lab l JOIN wdn w USING (doc_id)""",
     "mm_phash_winnow_pairs" ->
       // exact tile-fingerprint-match definition over the crop-fixture
       // winnowed replay (capped buckets, the operator's guard); doc
       // pairs fold to the shared-fingerprint count
-      (s"""WITH $imageWinnowCtes
+      s"""WITH $imageWinnowCtes
          |SELECT id_a, id_b, CAST(count(*) AS BIGINT) AS n_shared
-         |FROM ipair GROUP BY 1, 2""").stripMargin.replace("\n", " "),
+         |FROM ipair GROUP BY 1, 2""",
     "mm_phash_winnow_dedup" ->
       // the pair-summary tail over the crop pair relation
-      (s"""WITH $imageWinnowCtes,
+      s"""WITH $imageWinnowCtes,
          |verified AS (SELECT id_a, id_b,
          |  CAST(count(*) AS DOUBLE) AS sim
          | FROM ipair GROUP BY 1, 2),
          |${dupSidesCte("sim")},
          |$dupPerdocCte
-         |${dupKeepSql("(SELECT DISTINCT doc_id FROM iwsg) d")}""").stripMargin
-        .replace("\n", " "),
+         |${dupKeepSql("(SELECT DISTINCT doc_id FROM iwsg) d")}""",
     "mm_phash_winnow_groups" ->
       // recursive reachability closure over the crop pair relation
-      (s"""WITH RECURSIVE $imageWinnowCtes,
+      s"""WITH RECURSIVE $imageWinnowCtes,
          |pp AS (SELECT DISTINCT id_a, id_b FROM ipair),
          |${minLabelCtes("pp")}
          |SELECT doc_id, group_id, doc_id = group_id AS keep
-         |FROM lab""").stripMargin.replace("\n", " "),
+         |FROM lab""",
     "mm_phash_winnow_keep_best" ->
       // same closure, highest-resolution survivor: rank = the
       // decoded pixel count the fixture VARIES in both directions
       // (crops smaller than their smaller-id masters, padded
       // restorations LARGER), so the ordering itself is
       // oracle-covered, ties to min id
-      (s"""WITH RECURSIVE $imageWinnowCtes,
+      s"""WITH RECURSIVE $imageWinnowCtes,
          |pp AS (SELECT DISTINCT id_a, id_b FROM ipair),
          |${minLabelCtes("pp")},
          |iwn AS (SELECT DISTINCT doc_id,
@@ -4696,12 +4615,11 @@ private[graft] object OracleSql {
          |SELECT l.doc_id, l.group_id, iwn.px AS rank_key,
          | (row_number() OVER (PARTITION BY l.group_id
          |   ORDER BY iwn.px DESC, l.doc_id) = 1) AS keep
-         |FROM lab l JOIN iwn USING (doc_id)""")
-        .stripMargin.replace("\n", " "),
+         |FROM lab l JOIN iwn USING (doc_id)""",
     "mm_phash_winnow_incremental" ->
       // exact new-fingerprints x store match; n_matches = distinct
       // store docs sharing a tile fingerprint, best = min store_id
-      (s"""WITH $imageWinnowCtes,
+      s"""WITH $imageWinnowCtes,
          |nd AS (SELECT doc_id, fp FROM iwsg WHERE doc_id % 5 = 1),
          |st AS (SELECT doc_id AS store_id, fp AS sfp FROM iwsg
          | WHERE doc_id % 5 <> 1),
@@ -4716,12 +4634,12 @@ private[graft] object OracleSql {
          | CAST(coalesce(a.match_id, -1) AS BIGINT) AS match_id,
          | a.n_matches IS NULL AS keep
          |FROM (SELECT DISTINCT doc_id FROM nd) d
-         |LEFT JOIN agg a USING (doc_id)""").stripMargin.replace("\n", " "),
+         |LEFT JOIN agg a USING (doc_id)""",
     "mm_audio_winnow_incremental" ->
       // exact new-fingerprints x store match (the production tier);
       // n_matches = distinct store docs sharing a fingerprint, best
       // match = min store_id (every match is exact, hamming 0)
-      (s"""WITH $audioWinnowCtes,
+      s"""WITH $audioWinnowCtes,
          |nd AS (SELECT doc_id, wsig FROM wsg WHERE doc_id % 5 = 1),
          |st AS (SELECT doc_id AS store_id, wsig AS swsig FROM wsg
          | WHERE doc_id % 5 <> 1),
@@ -4738,20 +4656,19 @@ private[graft] object OracleSql {
          |  AS INTEGER) AS best_hamming,
          | a.n_matches IS NULL AS keep
          |FROM (SELECT DISTINCT doc_id FROM nd) d
-         |LEFT JOIN agg a USING (doc_id)""").stripMargin.replace("\n", " "),
+         |LEFT JOIN agg a USING (doc_id)""",
     "mm_audio_sig_incremental" ->
       // EXHAUSTIVE new-batch x store comparison over the xxhash64
       // signature replay (no candidate rule); best match =
       // min (hamming, store_id)
-      (s"""WITH $audioSigCtes,
+      s"""WITH $audioSigCtes,
         |nd AS (SELECT doc_id, asig FROM asg WHERE doc_id % 5 = 1),
         |st AS (SELECT doc_id AS store_id, asig FROM asg
         | WHERE doc_id % 5 <> 1),
         |p AS (SELECT nd.doc_id, st.store_id,
         |  CAST(bit_count(xor(nd.asig, st.asig)) AS INTEGER) AS hamming
         | FROM nd JOIN st ON bit_count(xor(nd.asig, st.asig)) <= 6),
-        |$storeMatchSql""").stripMargin
-        .replace("\n", " "),
+        |$storeMatchSql""",
     "mm_decode_wav" ->
       // replay of the synthesized SAMPLES, never the codec: sample i
       // is the sign-extended low-16 window of FNV-1a("doc_id:i")
@@ -4769,7 +4686,7 @@ private[graft] object OracleSql {
         | CAST(count(*) AS BIGINT) AS n_samples,
         | CAST(sum(smp) AS BIGINT) AS sum_samples,
         | CAST(sum(abs(smp)) AS BIGINT) AS sum_abs
-        |FROM v GROUP BY 1""".stripMargin.replace("\n", " "),
+        |FROM v GROUP BY 1""",
     "mm_audio_decimate" ->
       // the resample replayed from the sample recipe: keep i % 2 = 0,
       // half the rate — the Spark side's decode→decimate→encode→
@@ -4785,7 +4702,7 @@ private[graft] object OracleSql {
         | CAST(count(*) AS BIGINT) AS n_samples,
         | CAST(sum(smp) AS BIGINT) AS sum_samples,
         | CAST(sum(abs(smp)) AS BIGINT) AS sum_abs
-        |FROM v GROUP BY 1""".stripMargin.replace("\n", " "),
+        |FROM v GROUP BY 1""",
     "mm_audio_features" ->
       // same sample replay as mm_decode_wav, with per-sample index
       // kept for the lag-based zero-crossing count; Σv² is an exact
@@ -4806,13 +4723,13 @@ private[graft] object OracleSql {
         | CAST(sum(CASE WHEN prev IS NOT NULL
         |   AND ((smp >= 0) != (prev >= 0)) THEN 1 ELSE 0 END) AS BIGINT)
         |  AS zero_crossings
-        |FROM f GROUP BY 1""".stripMargin.replace("\n", " "),
+        |FROM f GROUP BY 1""",
     "mm_type_summary" ->
       """SELECT hex(substr(text, 1, 2)) AS magic2, count(*) AS n_blobs,
         | CAST(sum(length(text)) AS BIGINT) AS total_bytes,
         | CAST(min(length(text)) AS BIGINT) AS min_bytes,
         | CAST(max(length(text)) AS BIGINT) AS max_bytes
-        |FROM documents GROUP BY 1""".stripMargin.replace("\n", " "),
+        |FROM documents GROUP BY 1""",
     "mm_blob_policy" ->
       // byte_share is ONE division of two exact longs — replays
       // bit-for-bit, so the threshold CASE needs no rounding
@@ -4828,24 +4745,22 @@ private[graft] object OracleSql {
         |  WHEN CAST(total_bytes AS DOUBLE)
         |   / CAST(CAST(sum(total_bytes) OVER () AS BIGINT) AS DOUBLE) > 0.25
         |  THEN 'cap' ELSE 'keep' END AS action
-        |FROM t""".stripMargin.replace("\n", " "),
+        |FROM t""",
     "mm_frame_sample" ->
       """SELECT doc_id, CAST(i AS BIGINT) AS frame_idx,
         | CAST(i * 128 AS BIGINT) AS byte_offset,
         | CAST(length(substr(text, i * 128 + 1, 64)) AS BIGINT) AS frame_len,
         | md5(substr(text, i * 128 + 1, 64)) AS frame_md5
         |FROM documents, LATERAL (SELECT unnest(generate_series(0,
-        |  greatest((length(text) - 1) // 128, 0))) AS i) g""".stripMargin
-        .replace("\n", " "),
+        |  greatest((length(text) - 1) // 128, 0))) AS i) g""",
     "mm_scene_cuts" ->
-      (s"WITH $sceneLumaCtes " +
-        """SELECT doc_id, frame_idx, round(pml, 6) AS prev_luma,
+      s"""WITH $sceneLumaCtes
+        |SELECT doc_id, frame_idx, round(pml, 6) AS prev_luma,
           | round(ml, 6) AS luma, round(abs(ml - pml), 6) AS delta
-          |FROM d WHERE pml IS NOT NULL AND abs(ml - pml) > 6.0"""
-          .stripMargin).replace("\n", " "),
+          |FROM d WHERE pml IS NOT NULL AND abs(ml - pml) > 6.0""",
     "mm_shot_stats" ->
-      (s"WITH $sceneLumaCtes " +
-        """SELECT doc_id, count(*) AS n_frames,
+      s"""WITH $sceneLumaCtes
+        |SELECT doc_id, count(*) AS n_frames,
           | CAST(sum(CASE WHEN pml IS NOT NULL AND abs(ml - pml) > 6.0
           |  THEN 1 ELSE 0 END) AS BIGINT) AS n_cuts,
           | CAST(sum(CASE WHEN pml IS NOT NULL AND abs(ml - pml) > 6.0
@@ -4853,24 +4768,22 @@ private[graft] object OracleSql {
           | round(count(*) / (sum(CASE WHEN pml IS NOT NULL
           |   AND abs(ml - pml) > 6.0 THEN 1 ELSE 0 END) + 1.0), 6)
           |  AS avg_shot_len
-          |FROM d GROUP BY 1""".stripMargin).replace("\n", " "),
+          |FROM d GROUP BY 1""",
     "mm_keyframe_sample" ->
-      (s"WITH $sceneLumaCtes " +
-        """SELECT doc_id, frame_idx,
+      s"""WITH $sceneLumaCtes
+        |SELECT doc_id, frame_idx,
           | row_number() OVER (PARTITION BY doc_id ORDER BY frame_idx)
           |  - 1 AS shot_idx,
           | round(ml, 6) AS luma
           |FROM d WHERE frame_idx = 0
-          | OR (pml IS NOT NULL AND abs(ml - pml) > 6.0)"""
-          .stripMargin).replace("\n", " "),
+          | OR (pml IS NOT NULL AND abs(ml - pml) > 6.0)""",
     "mm_chunk_dedup" ->
       """SELECT frame_md5, count(DISTINCT doc_id) AS n_docs,
         | count(*) AS n_occurrences, min(doc_id) AS first_doc_id
         |FROM (SELECT doc_id, md5(substr(text, i * 128 + 1, 64)) AS frame_md5
         |  FROM documents, LATERAL (SELECT unnest(generate_series(0,
         |   greatest((length(text) - 1) // 128, 0))) AS i) g) f
-        |GROUP BY frame_md5 HAVING count(DISTINCT doc_id) > 1""".stripMargin
-        .replace("\n", " "),
+        |GROUP BY frame_md5 HAVING count(DISTINCT doc_id) > 1""",
     "q_segment_migration" ->
       """WITH a AS (SELECT o_custkey,
         |  CASE WHEN count(*) = 1 THEN 'one_time'
@@ -4887,7 +4800,7 @@ private[graft] object OracleSql {
         | round(CAST(n_customers AS DOUBLE)
         |  / CAST(sum(n_customers) OVER (PARTITION BY tier_from) AS DOUBLE), 6)
         |  AS from_share
-        |FROM m""".stripMargin.replace("\n", " "),
+        |FROM m""",
     "q_rfm_segments" ->
       // quintile cuts via quantile_cont (≡ Spark percentile); score =
       // 1 + #(cuts strictly below), recency inverted
@@ -4916,7 +4829,7 @@ private[graft] object OracleSql {
         |   + (frequency > fc[3])::BIGINT + (frequency > fc[4])::BIGINT)) * 10
         |  + (1 + ((monetary > mc[1])::BIGINT + (monetary > mc[2])::BIGINT
         |   + (monetary > mc[3])::BIGINT + (monetary > mc[4])::BIGINT)) AS rfm
-        |FROM per, c""".stripMargin.replace("\n", " "),
+        |FROM per, c""",
     "q_basket_affinity" ->
       // distinct parts per order, giant-order guard (≤20 parts),
       // unordered pair counts with support ≥ 2
@@ -4929,7 +4842,7 @@ private[graft] object OracleSql {
         | count(*) AS n_orders_together
         |FROM g a JOIN g b ON a.l_orderkey = b.l_orderkey
         | AND a.l_partkey < b.l_partkey
-        |GROUP BY 1, 2 HAVING count(*) >= 2""".stripMargin.replace("\n", " "),
+        |GROUP BY 1, 2 HAVING count(*) >= 2""",
     "q_basket_rules" ->
       // directed confidence/lift over the same guarded pairs
       """WITH po AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
@@ -4952,29 +4865,25 @@ private[graft] object OracleSql {
         | CAST(d.n_together AS DOUBLE) * tot.n_orders
         |  / (pa.n_orders_part * pb.n_orders_part) AS lift
         |FROM dir d JOIN pc pa ON pa.l_partkey = d.antecedent
-        | JOIN pc pb ON pb.l_partkey = d.consequent, tot"""
-        .stripMargin.replace("\n", " "),
+        | JOIN pc pb ON pb.l_partkey = d.consequent, tot""",
     "q_priority_mix" ->
       """SELECT date_trunc('month', o_orderdate) AS month, o_orderpriority,
         | count(*) AS num_orders, sum(o_totalprice) AS revenue
-        |FROM orders GROUP BY date_trunc('month', o_orderdate), o_orderpriority"""
-        .stripMargin.replace("\n", " "),
+        |FROM orders GROUP BY date_trunc('month', o_orderdate), o_orderpriority""",
     "stream_events_hourly" ->
       """SELECT date_trunc('hour', ts) AS window_start, event_type,
         | count(*) AS num_events, sum(value) AS total_value
-        |FROM events GROUP BY date_trunc('hour', ts), event_type""".stripMargin
-        .replace("\n", " "),
+        |FROM events GROUP BY date_trunc('hour', ts), event_type""",
     "stream_dedup" ->
       """SELECT event_id, ts, user_id, event_type, value FROM events
-        |QUALIFY row_number() OVER (PARTITION BY event_id ORDER BY ts) = 1"""
-        .stripMargin.replace("\n", " "),
+        |QUALIFY row_number() OVER (PARTITION BY event_id ORDER BY ts) = 1""",
     "stream_join" ->
       """SELECT p.event_id AS purchase_id, p.user_id, p.ts AS purchase_ts,
         | p.value AS purchase_value, c.event_id AS click_id, c.ts AS click_ts
         |FROM events p JOIN events c
         | ON p.event_type = 'purchase' AND c.event_type = 'click'
         | AND c.user_id = p.user_id AND c.ts <= p.ts
-        | AND c.ts >= p.ts - INTERVAL 30 MINUTE""".stripMargin.replace("\n", " "),
+        | AND c.ts >= p.ts - INTERVAL 30 MINUTE""",
     "q_min_cost_supplier" ->
       """WITH ps AS (
         | SELECT l_partkey, l_suppkey,
@@ -4985,7 +4894,7 @@ private[graft] object OracleSql {
         |SELECT p_partkey, p_name, s_suppkey, s_name, min_unit_price
         |FROM r JOIN part ON l_partkey = p_partkey
         | JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE rn = 1""".stripMargin.replace("\n", " "),
+        |WHERE rn = 1""",
     "q_nation_volume" ->
       """SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
         | year(l_shipdate) AS ship_year,
@@ -4997,7 +4906,7 @@ private[graft] object OracleSql {
         | JOIN customer ON o_custkey = c_custkey
         | JOIN nation cn ON c_nationkey = cn.n_nationkey
         |WHERE sn.n_name <> cn.n_name
-        |GROUP BY 1, 2, 3""".stripMargin.replace("\n", " "),
+        |GROUP BY 1, 2, 3""",
     "q_important_parts" ->
       """WITH pp AS (SELECT l_partkey,
         |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT) *
@@ -5007,14 +4916,13 @@ private[graft] object OracleSql {
         |m AS (SELECT avg(revenue) AS mean_revenue FROM pp)
         |SELECT p_partkey, p_name, p_brand, revenue
         |FROM pp CROSS JOIN m JOIN part ON l_partkey = p_partkey
-        |WHERE revenue > 1.5 * mean_revenue"""
-        .stripMargin.replace("\n", " "),
+        |WHERE revenue > 1.5 * mean_revenue""",
     "q_large_orders" ->
       """WITH s AS (SELECT l_orderkey, sum(l_quantity) AS sum_qty
         | FROM lineitem GROUP BY 1 HAVING sum(l_quantity) > 200)
         |SELECT o_orderkey, c_custkey, c_name, o_orderdate, o_totalprice, sum_qty
         |FROM orders JOIN s ON o_orderkey = l_orderkey
-        | JOIN customer ON o_custkey = c_custkey""".stripMargin.replace("\n", " "),
+        | JOIN customer ON o_custkey = c_custkey""",
     "q_window_features" ->
       """SELECT o_custkey, o_orderkey, o_orderdate, o_totalprice,
         | lead(o_totalprice) OVER w AS next_price,
@@ -5025,35 +4933,31 @@ private[graft] object OracleSql {
         |FROM orders WINDOW
         | w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
         | wf AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)"""
-        .stripMargin.replace("\n", " "),
+        |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)""",
     "sample_stratified" ->
       """SELECT doc_id, source, lang FROM documents
         |WHERE substring(md5(CAST(doc_id AS VARCHAR) || ':s42'), 1, 8) <
         | CASE source WHEN 'src0' THEN '80000000' WHEN 'src1' THEN '0ccccccc'
-        |  ELSE '40000000' END""".stripMargin.replace("\n", " "),
+        |  ELSE '40000000' END""",
     "events_heavy_hitters" ->
       """WITH c AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_events
         | FROM events GROUP BY 1)
         |SELECT user_id, n_events FROM c
-        |WHERE n_events > (SELECT avg(n_events) * 1.25 FROM c)""".stripMargin
-        .replace("\n", " "),
+        |WHERE n_events > (SELECT avg(n_events) * 1.25 FROM c)""",
     "stream_rtbf_gate" ->
       """SELECT event_id, user_id, event_type, value
-        |FROM events WHERE user_id % 53 <> 3"""
-        .stripMargin.replace("\n", " "),
+        |FROM events WHERE user_id % 53 <> 3""",
     "stream_enrich" ->
       """SELECT c_mktsegment, event_type, count(*) AS n_events,
         | sum(value) AS total_value
         |FROM events JOIN customer ON user_id = c_custkey
-        |GROUP BY 1, 2""".stripMargin.replace("\n", " "),
+        |GROUP BY 1, 2""",
     "docs_curate" ->
       s"""WITH ${curateCtes("0.2", 97)}
         |SELECT d.doc_id, d.lang, d.source, d.n_chars FROM documents d
         |WHERE d.doc_id IN (SELECT doc_id FROM dd)
         | AND d.doc_id % 97 <> 0
-        | AND d.doc_id NOT IN (SELECT doc_id FROM cont)"""
-        .stripMargin.replace("\n", " "),
+        | AND d.doc_id NOT IN (SELECT doc_id FROM cont)""",
     "docs_curate_full" ->
       // the whole nightly pipeline: 20-threshold Gopher gate →
       // quality bounds → exact dedup → corpus-duplication gate →
@@ -5070,7 +4974,7 @@ private[graft] object OracleSql {
           |    ORDER BY rsc.quality_score DESC, capped.doc_id
           |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_excl
           | FROM capped JOIN rsc ON rsc.doc_id = capped.doc_id) f
-          |WHERE cum_excl < 5000""".stripMargin.replace("\n", " ")),
+          |WHERE cum_excl < 5000"""),
     "docs_curate_funnel" ->
       // same CTE chain, counted per stage; n_dropped via lag
       (curateFullCtes +
@@ -5101,20 +5005,20 @@ private[graft] object OracleSql {
           | UNION ALL SELECT 9, 'token_budget', (SELECT count(*) FROM fin))
           |SELECT CAST(i AS BIGINT) AS stage_idx, stage, n AS n_docs,
           | lag(n) OVER (ORDER BY i) - n AS n_dropped
-          |FROM counts""".stripMargin.replace("\n", " ")),
+          |FROM counts"""),
     "docs_token_budget" ->
       // quality-order prefix under a global token budget; the doc
       // that crosses the line is kept (exclusive-cum < budget)
       (toksCte +
         s""", sc AS (SELECT doc_id,
           |  CAST(len(toks) AS BIGINT) AS n_tokens,
-          |  ${qualityScoreSql()} FROM t)
+          |  ${qualityScoreSql} FROM t)
           |SELECT doc_id, n_tokens, quality_score FROM (
           | SELECT doc_id, n_tokens, quality_score,
           |  COALESCE(sum(n_tokens) OVER (ORDER BY quality_score DESC, doc_id
           |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_excl
           | FROM sc) c
-          |WHERE cum_excl < 10000""".stripMargin.replace("\n", " ")),
+          |WHERE cum_excl < 10000"""),
     "stream_intake_gate" -> {
       // every intake gate composed over the INTAKE fixture (raw
       // text + per-doc-unique stop-word tails, lined): quality score
@@ -5127,7 +5031,7 @@ private[graft] object OracleSql {
         .map { case (w, i) =>
           s"' $w s' || CAST(doc_id AS VARCHAR) || 'x$i'" }
         .mkString(" || ")
-      (s"""WITH qd2 AS (SELECT doc_id, source,
+      s"""WITH qd2 AS (SELECT doc_id, source,
           |  text || $tailSql AS text FROM documents),
           |${linedCtesFrom("qd2")},
           |$gopherFlagCtes,
@@ -5135,21 +5039,10 @@ private[graft] object OracleSql {
           | FROM t2 JOIN txt USING (doc_id)),
           |sc AS (SELECT doc_id,
           |  CAST(len(toks) AS BIGINT) AS n_tokens,
-          |  ${qualityScoreSql()} FROM lt),
+          |  ${qualityScoreSql} FROM lt),
           |dgr AS (SELECT doc_id, unnest(list_distinct($trigramsSql)) AS gram FROM lt),
           |dbench AS (SELECT DISTINCT gram FROM dgr WHERE doc_id % 97 = 0),
-          |rtc AS (SELECT doc_id, CAST(list_sum(list_transform(toks,
-          |  x -> length(x))) AS BIGINT) AS tok_chars FROM lt),
-          |og AS (SELECT lt.doc_id, u.i - 1 AS start,
-          |  array_to_string(lt.toks[u.i:u.i + 7], ' ') AS ng
-          | FROM lt, LATERAL (SELECT unnest(generate_series(1,
-          |   len(lt.toks) - 7)) AS i) u
-          | WHERE len(lt.toks) >= 8),
-          |du AS (SELECT ng FROM og GROUP BY ng
-          |  HAVING count(DISTINCT doc_id) >= 2),
-          |cpos AS (SELECT DISTINCT og.doc_id, u.p
-          | FROM og JOIN du USING (ng),
-          |  LATERAL (SELECT unnest(range(og.start, og.start + 8)) AS p) u),
+          |${ngramCoverCtes("lt")},
           |cc AS (SELECT c.doc_id,
           |  CAST(sum(length(lt.toks[c.p + 1])) AS BIGINT) AS dup_chars
           | FROM cpos c JOIN lt USING (doc_id) GROUP BY c.doc_id)
@@ -5165,7 +5058,7 @@ private[graft] object OracleSql {
           | AND sc.doc_id NOT IN (SELECT doc_id FROM gflag)
           | AND (CASE WHEN rtc.tok_chars > 0 THEN
           |   CAST(coalesce(cc.dup_chars, 0) AS BIGINT) / rtc.tok_chars
-          |   ELSE 0.0 END) <= 0.5""").stripMargin.replace("\n", " ")
+          |   ELSE 0.0 END) <= 0.5"""
     },
     "stream_curate_gate" ->
       // the stateless curation prefix: quality band + benchmark-slice
@@ -5173,14 +5066,13 @@ private[graft] object OracleSql {
       (toksCte +
         s""", sc AS (SELECT doc_id,
           |  CAST(len(toks) AS BIGINT) AS n_tokens,
-          |  ${qualityScoreSql()} FROM t),
+          |  ${qualityScoreSql} FROM t),
           |g AS (SELECT doc_id, unnest(list_distinct($trigramsSql)) AS gram FROM t),
           |bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 97 = 0)
           |SELECT doc_id, n_tokens, quality_score FROM sc
           |WHERE n_tokens >= 20 AND n_tokens <= 100000 AND quality_score >= 0.2
           | AND doc_id % 97 <> 0
-          | AND doc_id NOT IN (SELECT c.doc_id FROM g c JOIN bench USING (gram))"""
-          .stripMargin.replace("\n", " ")),
+          | AND doc_id NOT IN (SELECT c.doc_id FROM g c JOIN bench USING (gram))"""),
     "docs_context_chunks" ->
       // window=32, stride=24; chunk count 1 + ceil(max(0,n-32)/24)
       (toksCte +
@@ -5190,15 +5082,14 @@ private[graft] object OracleSql {
           |  md5(array_to_string(toks[i * 24 + 1 : i * 24 + 32], ' ')) AS chunk_md5
           |FROM t, LATERAL (SELECT unnest(range(
           |  CASE WHEN len(toks) = 0 THEN 0
-          |   ELSE 1 + ((greatest(0, len(toks) - 32) + 23) // 24) END)) AS i) g"""
-          .stripMargin.replace("\n", " ")),
+          |   ELSE 1 + ((greatest(0, len(toks) - 32) + 23) // 24) END)) AS i) g"""),
     "docs_curate_capped" ->
       // curate's survivor set, then the per-source quality cap —
       // same CTEs as docs_curate plus a scored rank over survivors
       s"""WITH ${toksCteAs("t")},
         |sc AS (SELECT doc_id,
         |  CAST(len(toks) AS BIGINT) AS n_tokens,
-        |  ${qualityScoreSql()} FROM t),
+        |  ${qualityScoreSql} FROM t),
         |q AS (SELECT doc_id FROM sc
         | WHERE n_tokens >= 20 AND n_tokens <= 100000 AND quality_score >= 0.2),
         |${curateDedupCtes(97)},
@@ -5212,7 +5103,7 @@ private[graft] object OracleSql {
         |    ORDER BY sc.quality_score DESC, cur.doc_id) AS BIGINT)
         |   AS rank_in_source
         | FROM cur JOIN sc ON sc.doc_id = cur.doc_id) r
-        |WHERE rank_in_source <= 10""".stripMargin.replace("\n", " "),
+        |WHERE rank_in_source <= 10""",
     "docs_curate_manifest" ->
       s"""WITH ${curateCtes("0.2", 97)}
         |SELECT source,
@@ -5222,14 +5113,14 @@ private[graft] object OracleSql {
         |      WHEN doc_id IN (SELECT doc_id FROM cont) THEN 'contaminated'
         |      ELSE 'kept' END AS reason,
         | count(*) AS n_docs
-        |FROM documents GROUP BY 1, 2""".stripMargin.replace("\n", " "),
+        |FROM documents GROUP BY 1, 2""",
     "text_decontaminate" ->
       s"""WITH ${toksCteAs("t", "doc_id")},
         |g AS (SELECT doc_id, unnest(list_distinct($trigramsSql)) AS gram FROM t),
         |bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 97 = 0),
         |corpus AS (SELECT doc_id, gram FROM g WHERE doc_id % 97 <> 0)
         |SELECT doc_id, count(*) AS n_overlap
-        |FROM corpus JOIN bench USING (gram) GROUP BY 1""".stripMargin.replace("\n", " "),
+        |FROM corpus JOIN bench USING (gram) GROUP BY 1""",
     "docs_contamination_by_source" ->
       s"""WITH ${toksCteAs("t", "doc_id")},
         |g AS (SELECT doc_id, unnest(list_distinct($trigramsSql)) AS gram FROM t),
@@ -5245,7 +5136,7 @@ private[graft] object OracleSql {
         |   AS BIGINT) / CAST(count(*) AS BIGINT), 6) AS contamination_rate
         |FROM documents d LEFT JOIN o USING (doc_id)
         |WHERE d.doc_id % 97 <> 0
-        |GROUP BY d.source""".stripMargin.replace("\n", " "),
+        |GROUP BY d.source""",
     "events_key_skew" ->
       """WITH c AS (SELECT user_id AS key, count(*) AS n_rows
         |  FROM events GROUP BY 1),
@@ -5256,7 +5147,7 @@ private[graft] object OracleSql {
         | (SELECT min(key) FROM c WHERE n_rows = s.max_rows) AS top_key,
         | round(CAST(n_rows_total AS DOUBLE) / n_keys, 6) AS avg_rows,
         | round(CAST(max_rows * n_keys AS DOUBLE) / n_rows_total, 6) AS skew_ratio
-        |FROM s""".stripMargin.replace("\n", " "),
+        |FROM s""",
     "sample_poisson_k" ->
       """WITH r AS (SELECT doc_id,
         |  (CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR) || ':p42'), 1, 8)
@@ -5264,14 +5155,14 @@ private[graft] object OracleSql {
         | FROM documents WHERE n_chars > 0)
         |SELECT CAST(row_number() OVER (ORDER BY xi, doc_id) AS BIGINT)
         |  AS sample_rank, doc_id, xi
-        |FROM r QUALIFY sample_rank <= 100""".stripMargin.replace("\n", " "),
+        |FROM r QUALIFY sample_rank <= 100""",
     "sample_weighted" ->
       """SELECT doc_id, source, n_chars FROM documents
         |WHERE substring(md5(CAST(doc_id AS VARCHAR) || ':w42'), 1, 8) <
         | CASE WHEN least(1.0, n_chars / 2000.0) >= 1.0 THEN 'g'
         |  ELSE printf('%08x',
         |   CAST(floor(greatest(least(1.0, n_chars / 2000.0), 0.0) * 4294967296)
-        |    AS BIGINT)) END""".stripMargin.replace("\n", " "),
+        |    AS BIGINT)) END""",
     "stream_heavy_hitters" ->
       "SELECT user_id, count(*) AS n_events FROM events GROUP BY 1",
     "stream_impact_join" ->
@@ -5280,7 +5171,7 @@ private[graft] object OracleSql {
         |FROM events e JOIN events p
         | ON p.user_id = e.user_id
         |  AND p.ts >= e.ts AND p.ts < e.ts + INTERVAL 300 SECONDS
-        |WHERE e.event_type = 'error'""".stripMargin.replace("\n", " "),
+        |WHERE e.event_type = 'error'""",
     "q_profit_nation_year" ->
       """SELECT n_name AS nation,
         | CAST(year(CAST(o_orderdate AS DATE)) AS BIGINT) AS o_year,
@@ -5290,14 +5181,14 @@ private[graft] object OracleSql {
         | JOIN supplier ON s_suppkey = l_suppkey
         | JOIN nation ON n_nationkey = s_nationkey
         | JOIN orders ON o_orderkey = l_orderkey
-        |GROUP BY 1, 2""".stripMargin.replace("\n", " "),
+        |GROUP BY 1, 2""",
     "q_interval_join" ->
       """SELECT e.event_id AS window_id, p.event_type,
         | count(*) AS n_events
         |FROM events e JOIN events p
         | ON p.ts >= e.ts AND p.ts < e.ts + INTERVAL 300 SECONDS
         |WHERE e.event_type = 'error'
-        |GROUP BY 1, 2""".stripMargin.replace("\n", " "),
+        |GROUP BY 1, 2""",
     "docs_curate_mixture" ->
       // curate's survivor set (same CTE chain as docs_curate), then
       // the mixture rate derivation REPLAYED OVER THE CURATED COUNTS
@@ -5318,8 +5209,7 @@ private[graft] object OracleSql {
         |SELECT c.doc_id, c.source FROM cur c JOIN r ON c.source = r.source
         |WHERE substring(md5(CAST(c.doc_id AS VARCHAR) || ':m42'), 1, 8) <
         | CASE WHEN r.rate >= 1.0 THEN 'g'
-        |  ELSE printf('%08x', CAST(floor(r.rate * 4294967296.0) AS BIGINT)) END"""
-        .stripMargin.replace("\n", " "),
+        |  ELSE printf('%08x', CAST(floor(r.rate * 4294967296.0) AS BIGINT)) END""",
     "docs_curate_temperature" ->
       // curate's survivor set (same CTE chain as docs_curate_mixture),
       // then the τ=1/2 temperature rate derivation REPLAYED OVER THE
@@ -5339,8 +5229,7 @@ private[graft] object OracleSql {
         |SELECT c.doc_id, c.source FROM cur c JOIN r ON c.source = r.source
         |WHERE substring(md5(CAST(c.doc_id AS VARCHAR) || ':t42'), 1, 8) <
         | CASE WHEN r.rate >= 1.0 THEN 'g'
-        |  ELSE printf('%08x', CAST(floor(r.rate * 4294967296.0) AS BIGINT)) END"""
-        .stripMargin.replace("\n", " "),
+        |  ELSE printf('%08x', CAST(floor(r.rate * 4294967296.0) AS BIGINT)) END""",
     "sample_mixture" ->
       """WITH cnt AS (SELECT source, count(*) AS n,
         |  CASE source WHEN 'src0' THEN CAST(0.5 AS DOUBLE)
@@ -5354,8 +5243,7 @@ private[graft] object OracleSql {
         |SELECT d.doc_id, d.source FROM documents d JOIN r ON d.source = r.source
         |WHERE substring(md5(CAST(d.doc_id AS VARCHAR) || ':m42'), 1, 8) <
         | CASE WHEN r.rate >= 1.0 THEN 'g'
-        |  ELSE printf('%08x', CAST(floor(r.rate * 4294967296.0) AS BIGINT)) END"""
-        .stripMargin.replace("\n", " "),
+        |  ELSE printf('%08x', CAST(floor(r.rate * 4294967296.0) AS BIGINT)) END""",
     "sample_temperature" ->
       """WITH cnt AS (SELECT source, count(*) AS n FROM documents
         | WHERE source IS NOT NULL GROUP BY source),
@@ -5366,8 +5254,7 @@ private[graft] object OracleSql {
         |SELECT d.doc_id, d.source FROM documents d JOIN r ON d.source = r.source
         |WHERE substring(md5(CAST(d.doc_id AS VARCHAR) || ':t42'), 1, 8) <
         | CASE WHEN r.rate >= 1.0 THEN 'g'
-        |  ELSE printf('%08x', CAST(floor(r.rate * 4294967296.0) AS BIGINT)) END"""
-        .stripMargin.replace("\n", " "),
+        |  ELSE printf('%08x', CAST(floor(r.rate * 4294967296.0) AS BIGINT)) END""",
     "text_chunk_dedup" ->
       s"""WITH ${toksCteAs("t", "doc_id")},
         |c AS (SELECT doc_id, unnest(CASE WHEN len(toks) >= 8
@@ -5376,24 +5263,22 @@ private[graft] object OracleSql {
         |  ELSE CAST([] AS VARCHAR[]) END) AS chunk_md5 FROM t)
         |SELECT chunk_md5, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
         | count(*) AS n_occurrences
-        |FROM c GROUP BY 1 HAVING count(DISTINCT doc_id) > 1""".stripMargin
-        .replace("\n", " "),
+        |FROM c GROUP BY 1 HAVING count(DISTINCT doc_id) > 1""",
     "text_winnow_dedup" ->
       // front half shared with the r16 ML-erasure oracles (winnowFpCtes)
-      (s"""WITH $winnowFpCtes
+      s"""WITH $winnowFpCtes
         |SELECT fp, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
         | count(*) AS n_occurrences
-        |FROM w GROUP BY 1 HAVING count(DISTINCT doc_id) > 1""").stripMargin
-        .replace("\n", " "),
+        |FROM w GROUP BY 1 HAVING count(DISTINCT doc_id) > 1""",
     "text_winnow_pairs" ->
       // front half shared with the r16 ML-erasure oracles (winnowFpCtes)
-      (s"""WITH $winnowFpCtes,
+      s"""WITH $winnowFpCtes,
         |d AS (SELECT fp FROM w GROUP BY fp
         |  HAVING count(*) BETWEEN 2 AND 64)
         |SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_shared
         |FROM w a JOIN d ON a.fp = d.fp JOIN w b ON b.fp = a.fp
         |WHERE a.doc_id < b.doc_id
-        |GROUP BY 1, 2 HAVING count(*) >= 2""").stripMargin.replace("\n", " "),
+        |GROUP BY 1, 2 HAVING count(*) >= 2""",
     "split_kfold" ->
       // 5 equal hex-range cuts of md5(doc_id || ':cv42')
       """SELECT doc_id, source,
@@ -5406,7 +5291,7 @@ private[graft] object OracleSql {
         |      WHEN substring(md5(CAST(doc_id AS VARCHAR) || ':cv42'), 1, 8)
         |        < 'cccccccc' THEN 3
         |      ELSE 4 END::BIGINT AS fold
-        |FROM documents""".stripMargin.replace("\n", " "),
+        |FROM documents""",
     "split_stratified" ->
       // same portable md5 rank; quota cuts floor(cum·n) with the
       // IEEE-exact cumulative literals 0.8 / 0.9
@@ -5420,7 +5305,7 @@ private[graft] object OracleSql {
         | CASE WHEN rk <= floor(0.8 * n) THEN 'train'
         |      WHEN rk <= floor(0.9 * n) THEN 'val'
         |      ELSE 'test' END AS split
-        |FROM r""".stripMargin.replace("\n", " "),
+        |FROM r""",
     "split_assign_md5" ->
       """SELECT doc_id,
         | CASE WHEN substring(md5(CAST(doc_id AS VARCHAR) || ':split42'), 1, 8)
@@ -5428,7 +5313,7 @@ private[graft] object OracleSql {
         |      WHEN substring(md5(CAST(doc_id AS VARCHAR) || ':split42'), 1, 8)
         |        < 'f3333333' THEN 'val'
         |      ELSE 'test' END AS split
-        |FROM documents""".stripMargin.replace("\n", " "),
+        |FROM documents""",
     "split_leakage_pairs" ->
       // verified blocked pairs labeled by the md5 split; least/
       // greatest normalizes the edge, O(splits²) output
@@ -5449,7 +5334,7 @@ private[graft] object OracleSql {
           |SELECT sa AS split_a, sb AS split_b, n_pairs,
           | sa <> sb AS cross_split,
           | round(CAST(n_pairs AS DOUBLE) / CAST(total AS DOUBLE), 6) AS share
-          |FROM lg, lt""".stripMargin.replace("\n", " ")),
+          |FROM lg, lt"""),
     "split_group_assign" ->
       // md5 of the GROUP value: every doc of a source shares the
       // split; 0.6/0.2/0.2 cuts = floor(w·16^8) hex thresholds
@@ -5459,7 +5344,7 @@ private[graft] object OracleSql {
         |      WHEN substring(md5(source || ':gsplit42'), 1, 8)
         |        < 'cccccccc' THEN 'val'
         |      ELSE 'test' END AS split
-        |FROM documents""".stripMargin.replace("\n", " "),
+        |FROM documents""",
     "docs_ngram_diversity" ->
       // per-doc-distinct grams (the token_ngrams kernel's SQL
       // spelling twin); diversity = one division of two exact longs
@@ -5471,7 +5356,7 @@ private[graft] object OracleSql {
         | count(*) AS total_grams, count(DISTINCT gram) AS vocab,
         | CAST(count(DISTINCT gram) AS DOUBLE) / CAST(count(*) AS DOUBLE)
         |  AS diversity
-        |FROM j GROUP BY 1""".stripMargin.replace("\n", " "),
+        |FROM j GROUP BY 1""",
     "docs_interleave_order" ->
       // strict round-robin across sources: doc i of source s lands
       // at (i-1)·n_sources + src_idx — all integer-exact
@@ -5484,7 +5369,7 @@ private[graft] object OracleSql {
         |   AS rank_in_source FROM documents)
         |SELECT r.doc_id, r.source, r.rank_in_source,
         | (r.rank_in_source - 1) * s.n_sources + s.src_idx AS interleave_pos
-        |FROM r JOIN s ON r.source = s.source""".stripMargin.replace("\n", " "),
+        |FROM r JOIN s ON r.source = s.source""",
     "docs_shuffle_shard" ->
       // 4 equal hex-range cuts of the salted md5 key; position =
       // rank within shard in key order (ties → doc_id)
@@ -5500,27 +5385,27 @@ private[graft] object OracleSql {
         | CAST(row_number() OVER (PARTITION BY shard
         |   ORDER BY shuffle_key, doc_id) AS BIGINT) AS pos_in_shard,
         | shuffle_key
-        |FROM s""".stripMargin.replace("\n", " "),
+        |FROM s""",
     "q_forecast_revenue" ->
       """SELECT CAST(year(CAST(l_shipdate AS DATE)) AS BIGINT) AS ship_year,
         | sum(l_extendedprice * l_discount) AS forecast_revenue,
         | count(*) AS n_lines
         |FROM lineitem
         |WHERE l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24
-        |GROUP BY 1""".stripMargin.replace("\n", " "),
+        |GROUP BY 1""",
     "q_customer_distribution" ->
       """SELECT c_count, count(*) AS custdist FROM (
         | SELECT c_custkey, count(o_orderkey) AS c_count
         | FROM customer LEFT JOIN orders ON c_custkey = o_custkey
         | GROUP BY 1) pc
-        |GROUP BY 1""".stripMargin.replace("\n", " "),
+        |GROUP BY 1""",
     "q_priority_check" ->
       """SELECT o_orderpriority, count(*) AS order_count
         |FROM orders
         |WHERE o_orderdate >= DATE '1996-01-01' AND o_orderdate < DATE '1997-01-01'
         |  AND EXISTS (SELECT 1 FROM lineitem
         |   WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-        |GROUP BY 1""".stripMargin.replace("\n", " "),
+        |GROUP BY 1""",
     "q_promo_share" ->
       """SELECT CAST(date_trunc('month', CAST(l_shipdate AS DATE)) AS DATE) AS ship_month,
         | sum(CASE WHEN p_type = 'PROMO'
@@ -5530,7 +5415,7 @@ private[graft] object OracleSql {
         |   THEN l_extendedprice * (1 - l_discount) ELSE 0 END) /
         |  sum(l_extendedprice * (1 - l_discount)), 6) AS promo_share
         |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY 1""".stripMargin.replace("\n", " "),
+        |GROUP BY 1""",
     "q_disjunctive_revenue" ->
       """SELECT p_brand,
         | sum(l_extendedprice * (1 - l_discount)) AS revenue,
@@ -5539,7 +5424,7 @@ private[graft] object OracleSql {
         |WHERE (p_brand = 'Brand#1' AND l_quantity BETWEEN 1 AND 11)
         |   OR (p_brand = 'Brand#2' AND l_quantity BETWEEN 10 AND 20)
         |   OR (p_brand = 'Brand#3' AND l_quantity BETWEEN 20 AND 30)
-        |GROUP BY 1""".stripMargin.replace("\n", " "),
+        |GROUP BY 1""",
     "q_sole_blame_supplier" ->
       """WITH per AS (
         | SELECT l_orderkey, l_suppkey,
@@ -5554,7 +5439,7 @@ private[graft] object OracleSql {
         |FROM flagged JOIN supplier ON l_suppkey = s_suppkey
         |WHERE has_return = 1 AND n_suppliers > 1 AND n_with_returns = 1
         |GROUP BY 1, 2
-        |ORDER BY numwait DESC, s_suppkey ASC LIMIT 100""".stripMargin.replace("\n", " "),
+        |ORDER BY numwait DESC, s_suppkey ASC LIMIT 100""",
     "q_idle_rich_customers" ->
       """SELECT c_mktsegment, count(*) AS n_customers,
         | sum(c_acctbal) AS total_acctbal
@@ -5562,7 +5447,7 @@ private[graft] object OracleSql {
         |WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer)
         |  AND NOT EXISTS (SELECT 1 FROM orders
         |   WHERE o_custkey = c_custkey AND o_orderdate >= DATE '2000-01-01')
-        |GROUP BY 1""".stripMargin.replace("\n", " "),
+        |GROUP BY 1""",
     "q_returned_customers" ->
       """WITH rev AS (
         | SELECT o_custkey,
@@ -5572,14 +5457,14 @@ private[graft] object OracleSql {
         |SELECT c_custkey, c_name, n_name, c_acctbal, revenue
         |FROM rev JOIN customer ON o_custkey = c_custkey
         | JOIN nation ON c_nationkey = n_nationkey
-        |ORDER BY revenue DESC, c_custkey ASC LIMIT 20""".stripMargin.replace("\n", " "),
+        |ORDER BY revenue DESC, c_custkey ASC LIMIT 20""",
     "sample_uniform_k" ->
       """WITH r AS (SELECT source, doc_id, row_number() OVER (
         |  PARTITION BY source
         |  ORDER BY substring(md5(CAST(doc_id AS VARCHAR) || ':s42'), 1, 8), doc_id
         | ) AS sample_rank FROM documents)
         |SELECT source, CAST(sample_rank AS BIGINT) AS sample_rank, doc_id
-        |FROM r WHERE sample_rank <= 5""".stripMargin.replace("\n", " "),
+        |FROM r WHERE sample_rank <= 5""",
     "docs_padding_efficiency" ->
       """WITH t AS (SELECT doc_id,
         |  CAST(len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> ''))
@@ -5592,13 +5477,13 @@ private[graft] object OracleSql {
         | CASE WHEN padded_len = 0 THEN 0.0
         |  ELSE 1.0 - CAST(sum(tokens) AS BIGINT) / (count(*) * padded_len)
         |  END AS waste_frac
-        |FROM b GROUP BY padded_len""".stripMargin.replace("\n", " "),
+        |FROM b GROUP BY padded_len""",
     "docs_source_cap" ->
       // shared quality score (same expression as text_quality_filter),
       // capped per source: row_number twin of the bounded-heap agg
       (toksCte +
         s""", q AS (SELECT doc_id,
-          | ${qualityScoreSql("  ")}
+          | ${qualityScoreSql}
           | FROM t)
           |SELECT source, rank_in_source, doc_id, quality_score FROM (
           | SELECT d.source, d.doc_id, q.quality_score,
@@ -5606,12 +5491,12 @@ private[graft] object OracleSql {
           |    ORDER BY q.quality_score DESC, d.doc_id) AS BIGINT)
           |   AS rank_in_source
           | FROM documents d JOIN q ON q.doc_id = d.doc_id) r
-          |WHERE rank_in_source <= 10""".stripMargin.replace("\n", " ")),
+          |WHERE rank_in_source <= 10"""),
     "sketch_compact" ->
       """SELECT date_trunc('month', CAST(ts AS DATE)) AS month, event_type,
         | count(DISTINCT CAST(ts AS DATE)) AS n_day_rows,
         | count(*) AS n_events
-        |FROM events GROUP BY 1, 2""".stripMargin.replace("\n", " "),
+        |FROM events GROUP BY 1, 2""",
     "docs_pack_sequences" ->
       """WITH t AS (SELECT doc_id,
         |  CAST(len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> ''))
@@ -5624,7 +5509,7 @@ private[graft] object OracleSql {
         |SELECT CAST(cum_excl // 2048 AS BIGINT) AS seq_bin,
         | count(*) AS n_docs, CAST(sum(tokens) AS BIGINT) AS bin_tokens,
         | min(doc_id) AS first_doc, max(doc_id) AS last_doc
-        |FROM c GROUP BY 1""".stripMargin.replace("\n", " "),
+        |FROM c GROUP BY 1""",
     "text_tfidf_top3" ->
       (toksCte +
         """, tok AS (SELECT doc_id, unnest(toks) AS term FROM t),
@@ -5637,7 +5522,7 @@ private[graft] object OracleSql {
           |r AS (SELECT *, row_number() OVER (
           |  PARTITION BY doc_id ORDER BY score DESC, term) AS term_rank FROM s)
           |SELECT doc_id, CAST(term_rank AS BIGINT) AS term_rank, term, tf, df, score
-          |FROM r WHERE term_rank <= 3""".stripMargin.replace("\n", " ")),
+          |FROM r WHERE term_rank <= 3"""),
     "text_length_histogram" ->
       """WITH d AS (SELECT lang,
         |  CAST(len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> ''))
@@ -5646,7 +5531,7 @@ private[graft] object OracleSql {
         |SELECT lang, n_tokens // 16 AS bucket, count(*) AS n_docs,
         | CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
         | min(n_tokens) AS min_tokens, max(n_tokens) AS max_tokens
-        |FROM d GROUP BY 1, 2""".stripMargin.replace("\n", " "),
+        |FROM d GROUP BY 1, 2""",
     "text_lm_score" ->
       (toksCte +
         """, p AS (SELECT doc_id,
@@ -5657,7 +5542,7 @@ private[graft] object OracleSql {
           |SELECT doc_id, count(*) AS n_bigrams,
           | round(avg(-ln(c_bigram / c_first)), 6) AS avg_surprisal
           |FROM p JOIN b USING (w1, w2) JOIN f USING (w1)
-          |GROUP BY doc_id""".stripMargin.replace("\n", " ")),
+          |GROUP BY doc_id"""),
     "text_lm_kn_score" ->
       // the KN arithmetic replayed term-by-term in the SAME
       // expression order (greatest-discount + lambda*continuation;
@@ -5688,7 +5573,7 @@ private[graft] object OracleSql {
           | round(avg(CASE WHEN c IS NULL THEN 1.0 ELSE 0.0 END), 6)
           |  AS oov_rate,
           | doc_id % 10 = 7 AS held_out
-          |FROM s3 GROUP BY doc_id""".stripMargin.replace("\n", " ")),
+          |FROM s3 GROUP BY doc_id"""),
     "docs_vocab_growth" ->
       (toksCte +
         """, f AS (SELECT unnest(list_distinct(toks)) AS word,
@@ -5701,7 +5586,7 @@ private[graft] object OracleSql {
           | CAST(sum(count(*)) OVER (ORDER BY checkpoint
           |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
           |  AS vocab_size
-          |FROM b GROUP BY 1""".stripMargin.replace("\n", " ")),
+          |FROM b GROUP BY 1"""),
     "docs_augment_dropout" ->
       // drop token i of doc d iff md5('d:i:aug0')[:8] < 0x19999999
       // (rate 0.1); DuckDB lambda index is 1-based → i - 1
@@ -5712,7 +5597,7 @@ private[graft] object OracleSql {
           |  AS ktoks FROM t)
           |SELECT doc_id, array_to_string(ktoks, ' ') AS text_aug,
           | CAST(len(ktoks) AS BIGINT) AS n_kept
-          |FROM kept""".stripMargin.replace("\n", " ")),
+          |FROM kept"""),
     "docs_perplexity_filter" ->
       (toksCte +
         """, p AS (SELECT doc_id,
@@ -5725,15 +5610,14 @@ private[graft] object OracleSql {
           | FROM p JOIN b USING (w1, w2) JOIN f USING (w1) GROUP BY doc_id),
           |c AS (SELECT quantile_cont(avg_surprisal, 0.9) AS cut FROM s)
           |SELECT s.doc_id, s.n_bigrams, s.avg_surprisal
-          |FROM s, c WHERE s.avg_surprisal <= c.cut"""
-          .stripMargin.replace("\n", " ")),
+          |FROM s, c WHERE s.avg_surprisal <= c.cut"""),
     "q_shipping_delay" ->
       """SELECT o_orderpriority, count(*) AS n_lines,
         | avg(datediff('day', o_orderdate, CAST(l_shipdate AS DATE))) AS avg_delay,
         | min(datediff('day', o_orderdate, CAST(l_shipdate AS DATE))) AS min_delay,
         | max(datediff('day', o_orderdate, CAST(l_shipdate AS DATE))) AS max_delay
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1""".stripMargin.replace("\n", " "),
+        |GROUP BY 1""",
     "q_return_rate" ->
       """SELECT p_brand, count(*) AS n_lines,
         | CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT)
@@ -5744,7 +5628,7 @@ private[graft] object OracleSql {
         |   THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END)
         |  / sum(l_extendedprice * (1 - l_discount)), 6) AS returned_revenue_share
         |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY 1""".stripMargin.replace("\n", " "),
+        |GROUP BY 1""",
     "text_trigram_affinity" ->
       """WITH g AS (SELECT DISTINCT doc_id, lang, trigram FROM (
         |  SELECT doc_id, lang, substr(text,
@@ -5763,8 +5647,7 @@ private[graft] object OracleSql {
         |SELECT t.doc_id, t.lang, t.n_trigrams,
         | COALESCE(h.n_profile_hits, 0) AS n_profile_hits,
         | round(COALESCE(h.n_profile_hits, 0) / t.n_trigrams, 6) AS affinity
-        |FROM t LEFT JOIN h ON t.doc_id = h.doc_id"""
-        .stripMargin.replace("\n", " "),
+        |FROM t LEFT JOIN h ON t.doc_id = h.doc_id""",
     "q_event_transitions" ->
       """WITH s AS (SELECT event_type, lag(event_type) OVER (
         |  PARTITION BY user_id ORDER BY ts, event_id) AS prev_type FROM events),
@@ -5773,7 +5656,7 @@ private[graft] object OracleSql {
         |SELECT prev_type, next_type, n_transitions,
         | round(n_transitions / CAST(sum(n_transitions) OVER (
         |  PARTITION BY prev_type) AS BIGINT), 6) AS p_transition
-        |FROM c""".stripMargin.replace("\n", " "),
+        |FROM c""",
     "q_above_avg_orders" ->
       """WITH a AS (SELECT *,
         | CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) OVER (
@@ -5781,11 +5664,11 @@ private[graft] object OracleSql {
         |  (count(*) OVER (PARTITION BY o_custkey) * 100.0)
         |  AS cust_avg FROM orders)
         |SELECT o_orderkey, o_custkey, o_orderdate, o_totalprice, cust_avg
-        |FROM a WHERE o_totalprice > cust_avg""".stripMargin.replace("\n", " "),
+        |FROM a WHERE o_totalprice > cust_avg""",
     "q_status_priority" ->
       """SELECT o_orderstatus, o_orderpriority, count(*) AS num_orders,
         | sum(o_totalprice) AS revenue, avg(o_totalprice) AS avg_price
-        |FROM orders GROUP BY 1, 2""".stripMargin.replace("\n", " "),
+        |FROM orders GROUP BY 1, 2""",
     "q_brand_trend" ->
       """WITH m AS (SELECT p_brand,
         |  CAST(date_trunc('month', l_shipdate) AS DATE) AS month,
@@ -5799,7 +5682,7 @@ private[graft] object OracleSql {
         | round(regr_r2(revenue, 12 * year(month) + month(month)), 6) AS r2,
         | CAST(regr_count(revenue, 12 * year(month) + month(month)) AS BIGINT)
         |  AS n_months
-        |FROM m GROUP BY 1""".stripMargin.replace("\n", " "),
+        |FROM m GROUP BY 1""",
     "q_price_fill" ->
       """WITH prods AS (SELECT p_partkey FROM part WHERE p_brand = 'Brand#11'),
         |m AS (SELECT l_partkey AS product_id,
@@ -5816,30 +5699,27 @@ private[graft] object OracleSql {
         |  ORDER BY s.month ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
         |  AS price_filled,
         | m.avg_price IS NOT NULL AS is_observed
-        |FROM spine s LEFT JOIN m USING (product_id, month)"""
-        .stripMargin.replace("\n", " "),
+        |FROM spine s LEFT JOIN m USING (product_id, month)""",
     "q_skyline" ->
       """SELECT p_partkey, p_retailprice, p_size FROM part p
         |WHERE NOT EXISTS (SELECT 1 FROM part q
         | WHERE q.p_retailprice <= p.p_retailprice AND q.p_size <= p.p_size
-        |  AND (q.p_retailprice < p.p_retailprice OR q.p_size < p.p_size))"""
-        .stripMargin.replace("\n", " "),
+        |  AND (q.p_retailprice < p.p_retailprice OR q.p_size < p.p_size))""",
     "q_part_size_stats" ->
       """SELECT p_brand, CAST(p_size // 10 AS BIGINT) AS size_band,
         | count(*) AS num_parts, avg(p_retailprice) AS avg_retail,
         | min(p_retailprice) AS min_retail, max(p_retailprice) AS max_retail
-        |FROM part GROUP BY 1, 2""".stripMargin.replace("\n", " "),
+        |FROM part GROUP BY 1, 2""",
     "q_supplier_variety" ->
       """SELECT p_brand, p_type, count(DISTINCT l_suppkey) AS supplier_cnt
         |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY 1, 2""".stripMargin.replace("\n", " "),
+        |GROUP BY 1, 2""",
     "q_heavy_suppliers" ->
       """SELECT s_suppkey, s_name, s_acctbal FROM supplier
         |WHERE s_suppkey IN (SELECT l_suppkey FROM lineitem
-        | GROUP BY l_suppkey, l_partkey HAVING sum(l_quantity) > 90)"""
-        .stripMargin.replace("\n", " "),
+        | GROUP BY l_suppkey, l_partkey HAVING sum(l_quantity) > 90)""",
     "etl_quarantine" ->
-      (s"""SELECT *, CASE
+      s"""SELECT *, CASE
          | WHEN sale_id IS NULL OR product_id IS NULL OR quantity IS NULL
          |   OR sale_amount IS NULL OR sale_date IS NULL
          |   OR isnan(quantity) OR isnan(sale_amount) THEN 'missing_field'
@@ -5849,7 +5729,7 @@ private[graft] object OracleSql {
          |WHERE sale_id IS NULL OR product_id IS NULL OR quantity IS NULL
          |  OR sale_amount IS NULL OR sale_date IS NULL
          |  OR isnan(quantity) OR isnan(sale_amount)
-         |  OR quantity <= 0 OR sale_amount <= 0""".stripMargin.replace("\n", " ")),
+         |  OR quantity <= 0 OR sale_amount <= 0""",
     "q_yoy_growth" ->
       """WITH y AS (SELECT n_name, year(o_orderdate) AS order_year,
         |  sum(o_totalprice) AS revenue
@@ -5859,7 +5739,7 @@ private[graft] object OracleSql {
         |SELECT n_name, order_year, revenue,
         | round(revenue / lag(revenue) OVER (
         |  PARTITION BY n_name ORDER BY order_year) - 1, 6) AS yoy_growth
-        |FROM y""".stripMargin.replace("\n", " "),
+        |FROM y""",
     "q_market_share" ->
       """SELECT year(o_orderdate) AS order_year,
         | sum(CASE WHEN sn.n_name = 'NATION_3'
@@ -5875,7 +5755,7 @@ private[graft] object OracleSql {
         | JOIN region ON cn.n_regionkey = r_regionkey AND r_name = 'ASIA'
         | JOIN supplier ON l_suppkey = s_suppkey
         | JOIN nation sn ON s_nationkey = sn.n_nationkey
-        |GROUP BY 1""".stripMargin.replace("\n", " "),
+        |GROUP BY 1""",
     "q_grouping_sets" ->
       """SELECT n_name, c_mktsegment,
         | CAST(grouping(n_name) AS BIGINT) AS g_nation,
@@ -5883,8 +5763,7 @@ private[graft] object OracleSql {
         | sum(o_totalprice) AS revenue, count(*) AS num_orders
         |FROM orders JOIN customer ON o_custkey = c_custkey
         | JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY GROUPING SETS ((n_name), (c_mktsegment))"""
-        .stripMargin.replace("\n", " "),
+        |GROUP BY GROUPING SETS ((n_name), (c_mktsegment))""",
     "q_events_engagement" ->
       """WITH ud AS (SELECT DISTINCT user_id,
         |  CAST(date_trunc('day', ts) AS DATE) AS day FROM events),
@@ -5893,8 +5772,7 @@ private[graft] object OracleSql {
         |  CAST(unnest(generate_series(CAST(day AS TIMESTAMP),
         |   CAST(day + 6 AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE) AS day FROM ud),
         |wau AS (SELECT day, count(DISTINCT user_id) AS wau FROM contrib GROUP BY 1)
-        |SELECT day, dau, wau FROM dau JOIN wau USING (day)"""
-        .stripMargin.replace("\n", " "),
+        |SELECT day, dau, wau FROM dau JOIN wau USING (day)""",
     "dedup_blocked_suppress" ->
       // blocked pairs + quality domination: the beaten side of every
       // pair drops (tie → higher id drops)
@@ -5906,7 +5784,7 @@ private[graft] object OracleSql {
         |     - len(list_intersect(ga.grams, gb.grams))) >= 0.5),
         |${toksCteAs("tq")},
         |sc AS (SELECT doc_id,
-        |  ${qualityScoreSql()} FROM tq),
+        |  ${qualityScoreSql} FROM tq),
         |losers AS (SELECT DISTINCT
         |  CASE WHEN qa.quality_score < qb.quality_score THEN j.id_a
         |       WHEN qb.quality_score < qa.quality_score THEN j.id_b
@@ -5914,8 +5792,7 @@ private[graft] object OracleSql {
         | FROM j JOIN sc qa ON qa.doc_id = j.id_a
         |  JOIN sc qb ON qb.doc_id = j.id_b)
         |SELECT doc_id, lang, source, n_chars FROM documents
-        |WHERE doc_id NOT IN (SELECT doc_id FROM losers)"""
-        .stripMargin.replace("\n", " "),
+        |WHERE doc_id NOT IN (SELECT doc_id FROM losers)""",
     "dedup_ngram_blocked" ->
       s"""WITH $blockedCandCtes,
         |j AS (SELECT p.id_a, p.id_b,
@@ -5925,8 +5802,7 @@ private[graft] object OracleSql {
         | FROM p JOIN g ga ON ga.doc_id = p.id_a
         |  JOIN g gb ON gb.doc_id = p.id_b)
         |SELECT id_a, id_b, CAST(inter AS DOUBLE) / uni AS jaccard
-        |FROM j WHERE CAST(inter AS DOUBLE) / uni >= 0.5"""
-        .stripMargin.replace("\n", " "),
+        |FROM j WHERE CAST(inter AS DOUBLE) / uni >= 0.5""",
     "dedup_threshold_histogram" ->
       // same blocking as dedup_ngram_blocked but UNFILTERED verify;
       // bucket = (10·inter) // union in exact integers
@@ -5943,7 +5819,7 @@ private[graft] object OracleSql {
         | CAST(sum(n_pairs) OVER (ORDER BY bucket DESC
         |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
         |  AS pairs_at_or_above
-        |FROM h""".stripMargin.replace("\n", " "),
+        |FROM h""",
     "dedup_source_matrix" ->
       (blockedPairsCte +
         """SELECT least(da.source, db.source) AS source_x,
@@ -5951,7 +5827,7 @@ private[graft] object OracleSql {
           | count(*) AS n_pairs
           |FROM m JOIN documents da ON da.doc_id = m.id_a
           | JOIN documents db ON db.doc_id = m.id_b
-          |GROUP BY 1, 2""".stripMargin.replace("\n", " ")),
+          |GROUP BY 1, 2"""),
     "dedup_source_rate" ->
       (blockedPairsCte +
         """, ids AS (SELECT DISTINCT doc_id FROM
@@ -5962,7 +5838,7 @@ private[graft] object OracleSql {
           | round(CAST(count(ids.doc_id) AS DOUBLE) / count(*), 6)
           |  AS near_dup_rate
           |FROM documents d LEFT JOIN ids ON ids.doc_id = d.doc_id
-          |GROUP BY 1""".stripMargin.replace("\n", " ")),
+          |GROUP BY 1"""),
     "dedup_embedding_groups" ->
       // exact cosine pair relation (list_cosine_similarity over
       // DOUBLE[] replays Spark's kernel — ann_range_search
@@ -5972,21 +5848,21 @@ private[graft] object OracleSql {
         | FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
         | WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
         |   CAST(b.embedding AS DOUBLE[])) >= 0.9),
-        |${minLabelCtes("m", "embeddings", "vec_id", "  ")}
+        |${minLabelCtes("m", "embeddings", "vec_id")}
         |SELECT vec_id, group_id, vec_id = group_id AS keep
-        |FROM lab""".stripMargin.replace("\n", " "),
+        |FROM lab""",
     "dedup_groups_blocked" ->
       // transitive closure by recursive reachability: label = min id
       // reachable through the undirected blocked-pair edge set
       (blockedPairsCte.replaceFirst("WITH ", "WITH RECURSIVE ") +
-        s""", ${minLabelCtes("m", p = "  ")}
+        s""", ${minLabelCtes("m")}
           |SELECT doc_id, group_id, doc_id = group_id AS keep
-          |FROM lab""".stripMargin.replace("\n", " ")),
+          |FROM lab"""),
     "dedup_keep_best" ->
       // same recursive closure; survivor = most tokens then min id —
       // both rank keys integers, the cut is discrete
       (blockedPairsCte.replaceFirst("WITH ", "WITH RECURSIVE ") +
-        s""", ${minLabelCtes("m", p = "  ")},
+        s""", ${minLabelCtes("m")},
           |nt AS (SELECT doc_id, CAST(len(list_filter(
           |   regexp_split_to_array(text, '\\s+'), x -> x <> ''))
           |  AS BIGINT) AS n_tokens FROM documents),
@@ -5995,14 +5871,14 @@ private[graft] object OracleSql {
           |   ORDER BY nt.n_tokens DESC, lab.doc_id) AS rn
           | FROM lab JOIN nt USING (doc_id))
           |SELECT doc_id, group_id, n_tokens, rn = 1 AS keep
-          |FROM rk""".stripMargin.replace("\n", " ")),
+          |FROM rk"""),
     "dedup_cluster_sizes" ->
       (blockedPairsCte.replaceFirst("WITH ", "WITH RECURSIVE ") +
-        s""", ${minLabelCtes("m", p = "  ")},
+        s""", ${minLabelCtes("m")},
           |sizes AS (SELECT group_id, count(*) AS cluster_size
           |  FROM lab GROUP BY 1)
           |SELECT cluster_size, count(*) AS n_clusters
-          |FROM sizes GROUP BY 1""".stripMargin.replace("\n", " ")),
+          |FROM sizes GROUP BY 1"""),
     "docs_novelty" ->
       // string grams stand in for the 64-bit shingle hashes — same
       // cardinalities absent a hash collision (blockingTrunk note)
@@ -6016,7 +5892,7 @@ private[graft] object OracleSql {
         |  AS n_novel,
         | round(sum(CASE WHEN doc_id = first_doc THEN 1 ELSE 0 END) * 1.0
         |  / count(*), 6) AS novelty_frac
-        |FROM g JOIN f USING (gram) GROUP BY 1""".stripMargin.replace("\n", " "),
+        |FROM g JOIN f USING (gram) GROUP BY 1""",
     "docs_boilerplate_prefix" ->
       """WITH p AS (SELECT source, md5(array_to_string(
         |  list_filter(regexp_split_to_array(lower(text), '\s+'),
@@ -6027,7 +5903,7 @@ private[graft] object OracleSql {
         | count(*) AS n_prefixes,
         | CAST(max(n) AS BIGINT) AS top_prefix_docs,
         | round(CAST(max(n) AS DOUBLE) / CAST(sum(n) AS DOUBLE), 6) AS top_share
-        |FROM c GROUP BY 1""".stripMargin.replace("\n", " "),
+        |FROM c GROUP BY 1""",
     "docs_source_policy" ->
       (blockedPairsCte +
         s""", ids AS (SELECT DISTINCT doc_id FROM
@@ -6042,7 +5918,7 @@ private[graft] object OracleSql {
           |  list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')
           |   AS toks FROM documents),
           |sc AS (SELECT source,
-          |  ${qualityScoreSql()} FROM tq),
+          |  ${qualityScoreSql} FROM tq),
           |qual AS (SELECT source, round(avg(quality_score), 6)
           |  AS avg_quality FROM sc GROUP BY 1)
           |SELECT rate.source, rate.n_docs, rate.near_dup_rate,
@@ -6050,8 +5926,7 @@ private[graft] object OracleSql {
           | CASE WHEN rate.near_dup_rate >= 0.18 THEN 'drop'
           |      WHEN qual.avg_quality < 0.2 THEN 'cap'
           |      ELSE 'keep' END AS policy
-          |FROM rate JOIN qual ON qual.source = rate.source"""
-        .stripMargin.replace("\n", " ")),
+          |FROM rate JOIN qual ON qual.source = rate.source"""),
     "docs_source_policy_apply" ->
       (blockedPairsCte +
         s""", ids AS (SELECT DISTINCT doc_id FROM
@@ -6066,7 +5941,7 @@ private[graft] object OracleSql {
           |  list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')
           |   AS toks FROM documents),
           |sc AS (SELECT doc_id, source, lang, n_chars,
-          |  ${qualityScoreSql()} FROM tq),
+          |  ${qualityScoreSql} FROM tq),
           |qual AS (SELECT source, round(avg(quality_score), 6)
           |  AS avg_quality FROM sc GROUP BY 1),
           |pol AS (SELECT rate.source,
@@ -6079,16 +5954,14 @@ private[graft] object OracleSql {
           |SELECT rk.doc_id, rk.lang, rk.source, rk.n_chars
           |FROM rk JOIN pol ON pol.source = rk.source
           |WHERE pol.policy = 'keep'
-          |  OR (pol.policy = 'cap' AND rk.rk <= 8)"""
-        .stripMargin.replace("\n", " ")),
+          |  OR (pol.policy = 'cap' AND rk.rk <= 8)"""),
     "dedup_edit_distance" ->
       s"""WITH $blockedCandCtes
         |SELECT p.id_a, p.id_b,
         | CAST(levenshtein(ta.text, tb.text) AS BIGINT) AS edit_distance
         |FROM p JOIN documents ta ON ta.doc_id = p.id_a
         | JOIN documents tb ON tb.doc_id = p.id_b
-        |WHERE levenshtein(ta.text, tb.text) <= 80"""
-        .stripMargin.replace("\n", " "),
+        |WHERE levenshtein(ta.text, tb.text) <= 80""",
     "dedup_ngram_contain" ->
       s"""WITH $blockedCandCtes,
         |j AS (SELECT p.id_a, p.id_b,
@@ -6097,16 +5970,14 @@ private[graft] object OracleSql {
         | FROM p JOIN g ga ON ga.doc_id = p.id_a
         |  JOIN g gb ON gb.doc_id = p.id_b)
         |SELECT id_a, id_b, CAST(inter AS DOUBLE) / mn AS containment
-        |FROM j WHERE CAST(inter AS DOUBLE) / mn >= 0.8"""
-        .stripMargin.replace("\n", " "),
+        |FROM j WHERE CAST(inter AS DOUBLE) / mn >= 0.8""",
     "dedup_incremental" ->
       """WITH c AS (SELECT DISTINCT
         |  trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS norm
         | FROM documents WHERE doc_id % 10 <> 0)
         |SELECT doc_id, lang, source, n_chars FROM documents n
         |WHERE doc_id % 10 = 0 AND NOT EXISTS (SELECT 1 FROM c
-        | WHERE c.norm = trim(regexp_replace(lower(n.text), '\s+', ' ', 'g')))"""
-        .stripMargin.replace("\n", " "),
+        | WHERE c.norm = trim(regexp_replace(lower(n.text), '\s+', ' ', 'g')))""",
     "dedup_incremental_pairs" ->
       s"""WITH $gramDfCtes,
         |p AS (SELECT a.doc_id AS new_id, c.doc_id AS corpus_id
@@ -6121,8 +5992,7 @@ private[graft] object OracleSql {
         | FROM p JOIN g ga ON ga.doc_id = p.new_id
         |  JOIN g gb ON gb.doc_id = p.corpus_id)
         |SELECT new_id, corpus_id, CAST(inter AS DOUBLE) / uni AS jaccard
-        |FROM j WHERE CAST(inter AS DOUBLE) / uni >= 0.5"""
-        .stripMargin.replace("\n", " "),
+        |FROM j WHERE CAST(inter AS DOUBLE) / uni >= 0.5""",
     "docs_curate_incremental" ->
       // the daily-ingest curation gate, every stage deterministic:
       // Gopher 20-threshold gate on the delta (fixture chain
@@ -6131,12 +6001,12 @@ private[graft] object OracleSql {
       // HISTORY-built store, near-dup-vs-history (df over
       // gated-delta ∪ history), benchmark slice + decontamination
       // vs the static benchmark
-        (s"""WITH $qualCorpusCte, ${linedCtesFrom("qd")},
+        s"""WITH $qualCorpusCte, ${linedCtesFrom("qd")},
         |$gopherFlagCtes,
         |${toksCteAs("rt")},
         |q AS (SELECT doc_id FROM (SELECT doc_id,
         |  CAST(len(toks) AS BIGINT) AS n_tokens,
-        |  ${qualityScoreSql()} FROM rt WHERE doc_id % 10 = 0) s
+        |  ${qualityScoreSql} FROM rt WHERE doc_id % 10 = 0) s
         | WHERE n_tokens >= 20 AND n_tokens <= 100000 AND quality_score >= 0.2
         |  AND doc_id NOT IN (SELECT doc_id FROM gflag)),
         |bx AS (SELECT min(doc_id) AS doc_id FROM (SELECT doc_id,
@@ -6203,8 +6073,7 @@ private[graft] object OracleSql {
         | AND d.doc_id % 97 <> 0
         | AND d.doc_id NOT IN (SELECT doc_id FROM nd)
         | AND d.doc_id NOT IN (SELECT doc_id FROM cont)
-        | AND d.doc_id NOT IN (SELECT doc_id FROM semc)""")
-        .stripMargin.replace("\n", " "),
+        | AND d.doc_id NOT IN (SELECT doc_id FROM semc)""",
     "q_top_supplier" ->
       """WITH rev AS (SELECT l_suppkey,
         |  sum(l_extendedprice * (1 - l_discount)) AS total_revenue
@@ -6213,15 +6082,13 @@ private[graft] object OracleSql {
         | GROUP BY 1)
         |SELECT s_suppkey, s_name, total_revenue
         |FROM rev JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE total_revenue = (SELECT max(total_revenue) FROM rev)"""
-        .stripMargin.replace("\n", " "),
+        |WHERE total_revenue = (SELECT max(total_revenue) FROM rev)""",
     "q_small_qty_revenue" ->
       """SELECT sum(l_extendedprice) / 7.0 AS avg_yearly
         |FROM lineitem JOIN part ON p_partkey = l_partkey
         |WHERE p_brand = 'Brand#23'
         | AND l_quantity < (SELECT 0.2 * avg(l_quantity)
-        |  FROM lineitem l2 WHERE l2.l_partkey = part.p_partkey)"""
-        .stripMargin.replace("\n", " "),
+        |  FROM lineitem l2 WHERE l2.l_partkey = part.p_partkey)""",
     "q_discount_elasticity" ->
       """SELECT p_brand, count(*) AS n_lines,
         | round(regr_slope(l_quantity, l_discount), 4)
@@ -6230,7 +6097,7 @@ private[graft] object OracleSql {
         |  AS qty_per_discount_pct,
         | round(regr_r2(l_quantity, l_discount), 6) AS r2
         |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY 1""".stripMargin.replace("\n", " "),
+        |GROUP BY 1""",
     "q_supplier_hhi" ->
       """WITH s AS (SELECT p_type, l_suppkey,
         |  sum(l_extendedprice * (1 - l_discount)) AS supp_rev
@@ -6239,8 +6106,7 @@ private[graft] object OracleSql {
         |  count(*) AS n_suppliers FROM s GROUP BY 1)
         |SELECT s.p_type, t.n_suppliers,
         | round(sum(pow(s.supp_rev / t.type_rev, 2)), 6) AS hhi
-        |FROM s JOIN t USING (p_type) GROUP BY 1, 2""".stripMargin
-        .replace("\n", " "),
+        |FROM s JOIN t USING (p_type) GROUP BY 1, 2""",
     "q_basket_sizes" ->
       """WITH b AS (SELECT l_orderkey,
         |  count(DISTINCT l_partkey) AS n_parts FROM lineitem GROUP BY 1)
@@ -6248,7 +6114,7 @@ private[graft] object OracleSql {
         | quantile_cont(n_parts, 0.5) AS p50_parts,
         | quantile_cont(n_parts, 0.9) AS p90_parts,
         | quantile_cont(n_parts, 0.99) AS p99_parts,
-        | max(n_parts) AS max_parts FROM b""".stripMargin.replace("\n", " "),
+        | max(n_parts) AS max_parts FROM b""",
     "q_gini_revenue" ->
       """WITH rev AS (SELECT l_partkey,
         |  sum(l_extendedprice * (1 - l_discount)) AS revenue
@@ -6258,7 +6124,7 @@ private[graft] object OracleSql {
         |SELECT count(*) AS n_products,
         | round(2.0 * sum(rank * revenue) / (count(*) * sum(revenue))
         |  - (count(*) + 1.0) / count(*), 6) AS gini
-        |FROM rk""".stripMargin.replace("\n", " "),
+        |FROM rk""",
     "q_order_backlog" ->
       """WITH ls AS (SELECT l_orderkey, CAST(max(l_shipdate) AS DATE)
         |   AS last_ship FROM lineitem GROUP BY 1),
@@ -6279,8 +6145,7 @@ private[graft] object OracleSql {
         |  (ORDER BY month
         |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
         |  AS backlog
-        |FROM spine LEFT JOIN o USING (month) LEFT JOIN c USING (month)"""
-        .stripMargin.replace("\n", " "),
+        |FROM spine LEFT JOIN o USING (month) LEFT JOIN c USING (month)""",
     "q_abc_class" ->
       """WITH rev AS (SELECT l_partkey,
         |  sum(l_extendedprice * (1 - l_discount)) AS revenue
@@ -6293,7 +6158,7 @@ private[graft] object OracleSql {
         |SELECT l_partkey AS product_id,
         | CASE WHEN cum_share <= 0.8 THEN 'A'
         |  WHEN cum_share <= 0.95 THEN 'B' ELSE 'C' END AS abc_class
-        |FROM rk""".stripMargin.replace("\n", " "),
+        |FROM rk""",
     "q_pareto_revenue" ->
       """WITH rev AS (SELECT l_partkey,
         |  sum(l_extendedprice * (1 - l_discount)) AS revenue
@@ -6308,15 +6173,14 @@ private[graft] object OracleSql {
         | min(rank) AS n_products
         |FROM rk JOIN (VALUES (0.5), (0.8), (0.9), (0.95), (0.99)) t(threshold)
         | ON cum_share >= threshold
-        |GROUP BY 1""".stripMargin.replace("\n", " "),
+        |GROUP BY 1""",
     "etl_cdc_apply" ->
       """WITH last AS (SELECT user_id, event_type, value, ts,
         |  row_number() OVER (PARTITION BY user_id
         |    ORDER BY ts DESC, event_id DESC) AS rn
         | FROM events)
         |SELECT user_id, event_type AS state, value, ts
-        |FROM last WHERE rn = 1 AND event_type <> 'error'"""
-        .stripMargin.replace("\n", " "),
+        |FROM last WHERE rn = 1 AND event_type <> 'error'""",
     "etl_dq_profile" ->
       """SELECT col_name, n_rows, n_nulls,
         | n_distinct, round(n_nulls * 1.0 / n_rows, 6) AS null_frac
@@ -6336,8 +6200,7 @@ private[graft] object OracleSql {
         | UNION ALL SELECT 'l_quantity', count(*),
         |  CAST(sum(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END)
         |   AS BIGINT),
-        |  count(DISTINCT l_quantity) FROM lineitem) p"""
-        .stripMargin.replace("\n", " "),
+        |  count(DISTINCT l_quantity) FROM lineitem) p""",
     "etl_dq_profile_approx" ->
       // calibration form (r16): the exact profile anchor + a
       // within-5% claim over DuckDB's OWN approx_count_distinct per
@@ -6366,8 +6229,7 @@ private[graft] object OracleSql {
         |  CAST(sum(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END)
         |   AS BIGINT),
         |  count(DISTINCT l_quantity),
-        |  approx_count_distinct(l_quantity) FROM lineitem) p"""
-        .stripMargin.replace("\n", " "),
+        |  approx_count_distinct(l_quantity) FROM lineitem) p""",
     "etl_check_constraints" -> {
       // CASE … THEN 0 ELSE 1 sends NULL predicates to ELSE —
       // matching the Spark side's coalesce(pred, false)
@@ -6420,7 +6282,6 @@ private[graft] object OracleSql {
            |SELECT '$name' AS relationship, tot.n_rows, tot.n_null_fk,
            | orph.n_orphan_rows, orph.n_orphan_keys,
            | orph.n_orphan_rows = 0 AS intact FROM tot, orph)"""
-          .stripMargin.replace("\n", " ")
       Seq(
         rel("lineitem_orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
         rel("lineitem_part", "lineitem", "l_partkey", "part", "p_partkey"),
@@ -6446,7 +6307,7 @@ private[graft] object OracleSql {
          | CASE WHEN a.n_distinct = 0 THEN NULL
          |  ELSE round(CAST(b.n_distinct AS DOUBLE)
          |   / CAST(a.n_distinct AS DOUBLE), 6) END AS distinct_ratio
-         |FROM a JOIN b USING (col_name)""".stripMargin.replace("\n", " ")
+         |FROM a JOIN b USING (col_name)"""
     },
     "etl_table_diff" ->
       """WITH o AS (SELECT l_partkey AS product_id,
@@ -6468,7 +6329,7 @@ private[graft] object OracleSql {
         |  o.q AS old_total_quantity, n.q AS new_total_quantity,
         |  o.a AS old_total_sale_amount, n.a AS new_total_sale_amount
         | FROM o FULL OUTER JOIN n ON o.product_id = n.product_id) d
-        |WHERE diff_type IS NOT NULL""".stripMargin.replace("\n", " "),
+        |WHERE diff_type IS NOT NULL""",
     "etl_scd2_user_state" ->
       s"""WITH ${scdVersionCtes()},
         |g AS (SELECT user_id, CAST(version AS BIGINT) AS version,
@@ -6477,8 +6338,7 @@ private[graft] object OracleSql {
         |SELECT user_id, version, state, valid_from,
         | lead(valid_from) OVER w AS valid_to, n_events,
         | lead(valid_from) OVER w IS NULL AS is_current
-        |FROM g WINDOW w AS (PARTITION BY user_id ORDER BY version)"""
-        .stripMargin.replace("\n", " "),
+        |FROM g WINDOW w AS (PARTITION BY user_id ORDER BY version)""",
     "etl_dim_asof_enrich" ->
       s"""WITH ${scdVersionCtes("events WHERE event_type <> 'purchase'")},
         |g0 AS (SELECT user_id, CAST(version AS BIGINT) AS version,
@@ -6491,8 +6351,7 @@ private[graft] object OracleSql {
         |FROM (SELECT event_id, user_id, ts, value FROM events
         |  WHERE event_type = 'purchase') f
         |ASOF LEFT JOIN g d
-        | ON f.user_id = d.user_id AND f.ts >= d.valid_from"""
-        .stripMargin.replace("\n", " "),
+        | ON f.user_id = d.user_id AND f.ts >= d.valid_from""",
     "etl_dim_asof_coverage" ->
       // the enrichment CTE chain aggregated to the per-day coverage
       // report; n_early sum CAST to BIGINT (HUGEINT trap), rate on
@@ -6513,7 +6372,7 @@ private[graft] object OracleSql {
         |  AS BIGINT) AS n_early,
         | round(sum(CASE WHEN dim_version IS NULL THEN 1 ELSE 0 END)
         |  * 1.0 / count(*), 6) AS early_rate
-        |FROM enr GROUP BY 1""".stripMargin.replace("\n", " "),
+        |FROM enr GROUP BY 1""",
     "q_new_vs_returning" ->
       """WITH daily AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
         |  FROM events),
@@ -6524,8 +6383,7 @@ private[graft] object OracleSql {
         | CAST(sum(CASE WHEN day <> first_day THEN 1 ELSE 0 END) AS BIGINT)
         |  AS n_returning,
         | count(*) AS n_active
-        |FROM daily JOIN f USING (user_id) GROUP BY 1"""
-        .stripMargin.replace("\n", " "),
+        |FROM daily JOIN f USING (user_id) GROUP BY 1""",
     "text_source_divergence" ->
       // absent-term complement folded into the ½·(1 − coverage)
       // closed form — no corpus-sized anti join; log-sums rounded
@@ -6548,8 +6406,7 @@ private[graft] object OracleSql {
         |  sum(pc) AS cov FROM j GROUP BY 1)
         |SELECT source, n_tokens, vocab,
         | round(core + 0.5 * (1.0 - cov), 6) AS js_divergence,
-        | round(cov, 6) AS corpus_coverage FROM g"""
-        .stripMargin.replace("\n", " "),
+        | round(cov, 6) AS corpus_coverage FROM g""",
     "events_markov_stationary" -> {
       // the power iterations unrolled as CTEs (the pagerank oracle
       // pattern); identical frac/seed expressions, rounded 1e-9
@@ -6570,7 +6427,7 @@ private[graft] object OracleSql {
         | FROM tr JOIN deg ON tr.prev_type = deg.prev_type),
         |s0 AS (SELECT prev_type AS state,
         |  1.0 / (SELECT count(*) FROM deg) AS p FROM deg),
-        |""".stripMargin.replace("\n", " ") + body +
+        |""" + body +
         s" SELECT state, round(p, 9) AS p_stationary FROM s$steps"
     },
     "q_seasonality_strength" ->
@@ -6597,7 +6454,7 @@ private[graft] object OracleSql {
         |     / CAST(n AS DOUBLE))
         |   / (CAST(q AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)
         |     / CAST(n AS DOUBLE)), 6) END AS seasonality_r2
-        |FROM t""".stripMargin.replace("\n", " "),
+        |FROM t""",
     "mm_dedup_by_type" ->
       // payloads never aggregate: the inner (type, sha) collapse
       // carries hashes + byte counts; a sha group's representative
@@ -6611,7 +6468,7 @@ private[graft] object OracleSql {
         | round(1.0 - count(*) * 1.0 / CAST(sum(n) AS BIGINT), 6)
         |  AS dup_ratio,
         | CAST(sum(bytes) - sum(len1) AS BIGINT) AS reclaimable_bytes
-        |FROM g GROUP BY 1""".stripMargin.replace("\n", " "),
+        |FROM g GROUP BY 1""",
     "etl_benford_check" ->
       // leading digit from the STRING rendering of exact cents —
       // no float log10 boundary hazards; χ² over the 9-row relation
@@ -6626,8 +6483,7 @@ private[graft] object OracleSql {
         |  pow(n - total * e, 2) / (total * e) AS chi2_term FROM t)
         |SELECT digit, n, round(share, 6) AS share,
         | round(e, 6) AS benford_p, round(chi2_term, 6) AS chi2_term,
-        | round(sum(chi2_term) OVER (), 6) AS chi2_total FROM c"""
-        .stripMargin.replace("\n", " "),
+        | round(sum(chi2_term) OVER (), 6) AS chi2_total FROM c""",
     "events_activity_powerlaw" ->
       // Clauset–Shalizi–Newman continuous-approx MLE at xmin=2
       """WITH pu AS (SELECT user_id, count(*) AS x FROM events GROUP BY 1),
@@ -6640,7 +6496,7 @@ private[graft] object OracleSql {
         | round(n_tail * 1.0 / n_users, 6) AS tail_frac,
         | CASE WHEN logsum = 0.0 THEN NULL
         |  ELSE round(1.0 + n_tail / logsum, 6) END AS alpha
-        |FROM a""".stripMargin.replace("\n", " "),
+        |FROM a""",
     "split_temporal_leakage" -> {
       def sideRow(s: String, n: String): String =
         s"SELECT '$s' AS split, " +
@@ -6659,7 +6515,7 @@ private[graft] object OracleSql {
         |   THEN 0 ELSE 1 END) AS BIGINT) AS n_test
         |FROM events GROUP BY 1),
         |l AS (SELECT *, n_train > 0 AND n_test > 0 AS leaky FROM pe)
-        |""".stripMargin.replace("\n", " ") +
+        |""" +
         sideRow("train", "n_train") + " UNION ALL " + sideRow("test", "n_test")
     },
     "mm_format_psi" ->
@@ -6684,8 +6540,7 @@ private[graft] object OracleSql {
         |q AS (SELECT *, (p_b - p_a) * ln(p_b / p_a) AS psi FROM p)
         |SELECT magic2, n_a, n_b, round(p_a, 6) AS p_a,
         | round(p_b, 6) AS p_b, round(psi, 6) AS psi_term,
-        | round(sum(psi) OVER (), 6) AS psi_total FROM q"""
-        .stripMargin.replace("\n", " "),
+        | round(sum(psi) OVER (), 6) AS psi_total FROM q""",
     "events_audience_overlap_exact" ->
       // distinct (type,user) self-join, every pair emits (zero
       // overlap included); Jaccard = one quotient of exact longs
@@ -6702,7 +6557,7 @@ private[graft] object OracleSql {
         |  / CAST(pa.n + pb.n - coalesce(iv.ov, 0) AS DOUBLE), 6) AS jaccard
         |FROM pt pa JOIN pt pb ON pa.event_type < pb.event_type
         | LEFT JOIN iv ON iv.type_a = pa.event_type
-        |  AND iv.type_b = pb.event_type""".stripMargin.replace("\n", " "),
+        |  AND iv.type_b = pb.event_type""",
     "events_disorder_profile" ->
       // per-user running-max lateness in exact µs, ingest order =
       // event_id; O(buckets) histogram with one share quotient
@@ -6728,14 +6583,14 @@ private[graft] object OracleSql {
         |SELECT bucket_idx, bucket, n_events,
         | round(CAST(n_events AS DOUBLE) / CAST(total AS DOUBLE), 6) AS share,
         | max_late_us
-        |FROM h, tt""".stripMargin.replace("\n", " "),
+        |FROM h, tt""",
     "events_ab_ttest" ->
       // identical op tree to the Spark side: same md5 coin, same
       // (1, value, value²) conditional sums, same closed-form Welch
       // expressions — only summation order can differ (last-ulp, the
       // q_events_anomaly class); moments ship unrounded
       s"""WITH $abMomentsCtes,
-        |$welchSql""".stripMargin.replace("\n", " "),
+        |$welchSql""",
     "events_ab_mde" -> {
       // same six sufficient statistics + clamps as events_ab_ttest;
       // the z-quantile sum is ONE pre-added double literal on both
@@ -6750,7 +6605,7 @@ private[graft] object OracleSql {
          |SELECT event_type, n_a, n_b,
          | $z * sqrt(se2) AS mde_abs,
          | ($z * sqrt(se2)) / (s_b / n_b) AS mde_rel
-         |FROM w WHERE se2 > 0 AND s_b != 0""".stripMargin.replace("\n", " ")
+         |FROM w WHERE se2 > 0 AND s_b != 0"""
     },
     "emb_label_outliers" ->
       // centroid = the q_embedding_centroids avg replay; cosine from
@@ -6770,7 +6625,7 @@ private[graft] object OracleSql {
         | CASE WHEN n2 > 0.0 AND c2 > 0.0
         |  THEN dot / (sqrt(n2) * sqrt(c2)) ELSE 0.0
         | END AS centroid_cosine
-        |FROM j""".stripMargin.replace("\n", " "),
+        |FROM j""",
     "events_sketch_calibration" ->
       // the calibration CLAIM is engine-agnostic even though the raw
       // sketch estimate is not: DuckDB checks ITS approx_count_distinct
@@ -6785,7 +6640,7 @@ private[graft] object OracleSql {
         |FROM events
         |WHERE CAST(ts AS DATE) >= DATE '2024-01-05'
         | AND CAST(ts AS DATE) < DATE '2024-01-15'
-        |GROUP BY 1""".stripMargin.replace("\n", " "),
+        |GROUP BY 1""",
     "events_approx_stats" ->
       // calibration form (r16): DuckDB scores its OWN
       // approx_count_distinct + t-digest approx_quantile against the
@@ -6815,7 +6670,7 @@ private[graft] object OracleSql {
         | (r.lt50 <= 0.52 AND r.le50 >= 0.48) AS p50_within_tol,
         | (r.lt90 <= 0.92 AND r.le90 >= 0.88) AS p90_within_tol
         |FROM ex JOIN apx a USING (event_type)
-        | JOIN r USING (event_type)""".stripMargin.replace("\n", " "),
+        | JOIN r USING (event_type)""",
     "events_sketch_reach" ->
       // calibration form (r16, the compacted-lifecycle route): each
       // engine checks its OWN sketch pipeline against the same exact
@@ -6830,7 +6685,7 @@ private[graft] object OracleSql {
         |FROM events
         |WHERE CAST(ts AS DATE) >= DATE '2024-01-01'
         | AND CAST(ts AS DATE) < DATE '2024-02-01'
-        |GROUP BY 1""".stripMargin.replace("\n", " "),
+        |GROUP BY 1""",
     "events_audience_overlap" ->
       // calibration form (r16): exact anchors + the within-tol claim
       // over DuckDB's OWN approx_count_distinct inclusion–exclusion —
@@ -6863,21 +6718,13 @@ private[graft] object OracleSql {
         | JOIN ta aa ON aa.event_type = pa.event_type
         | JOIN ta ab ON ab.event_type = pb.event_type
         | JOIN uni u ON u.type_a = pa.event_type
-        |  AND u.type_b = pb.event_type""".stripMargin.replace("\n", " "),
+        |  AND u.type_b = pb.event_type""",
     "events_rolling_active_approx" ->
       // calibration form (r16): the exact rolling WAU/DAU anchor
       // (events_rolling_active_users' fan-out collapse) + within-5%
       // claims over DuckDB's OWN approx_count_distinct of the same
       // fan-out; tolerance max(2, exact·5%) in floored integers
-      """WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
-        | FROM events),
-        |days AS (SELECT DISTINCT day AS target_day FROM ud),
-        |fan AS (SELECT ud.user_id, d.target_day,
-        |  CASE WHEN ud.day = d.target_day THEN 1 ELSE 0 END AS is_today
-        | FROM ud JOIN days d
-        |  ON d.target_day BETWEEN ud.day AND ud.day + 6),
-        |g AS (SELECT target_day, user_id, max(is_today) AS active_today
-        | FROM fan GROUP BY 1, 2),
+      s"""WITH $stickinessCtes,
         |ex AS (SELECT target_day AS day, count(*) AS wau,
         |  CAST(sum(active_today) AS BIGINT) AS dau,
         |  round(CAST(sum(active_today) AS BIGINT) * 1.0 / count(*), 6)
@@ -6893,7 +6740,7 @@ private[graft] object OracleSql {
         |  AS wau_within_tol,
         | abs(ap.dau_apx - ex.dau) <= greatest(2, (ex.dau * 5) // 100)
         |  AS dau_within_tol
-        |FROM ex JOIN ap ON ap.day = ex.day""".stripMargin.replace("\n", " "),
+        |FROM ex JOIN ap ON ap.day = ex.day""",
     "events_ab_srm" ->
       // distinct USERS per arm (the randomization unit), chi-square
       // GOF vs 50/50, flag at the fixed χ²₁(0.95) literal — exact
@@ -6917,7 +6764,7 @@ private[graft] object OracleSql {
         | FROM a)
         |SELECT event_type, n_a, n_b, chi2,
         | chi2 > 3.841458820694124 AS srm_flag
-        |FROM c""".stripMargin.replace("\n", " "),
+        |FROM c""",
     "q_revenue_sample_estimate" -> {
       val thr = operators.Sampling.hexThreshold(0.1)
       s"""WITH f AS (SELECT l_returnflag,
@@ -6941,7 +6788,7 @@ private[graft] object OracleSql {
          | CASE WHEN exact_value != 0.0 THEN
          |  abs(coalesce(s_rev, 0.0) / 0.1 - exact_value) / exact_value
          | END AS rel_err
-         |FROM a""".stripMargin.replace("\n", " ")
+         |FROM a"""
     },
     "events_attribution_markov" -> {
       // the 12 clamped value-iteration rounds unrolled as CTEs over
@@ -7000,7 +6847,7 @@ private[graft] object OracleSql {
          | CASE WHEN sum(1.0 - p_removed / p_conv) OVER () = 0.0 THEN 0.0
          |  ELSE (1.0 - p_removed / p_conv) /
          |   sum(1.0 - p_removed / p_conv) OVER () END AS share
-         |FROM fin WHERE p_conv > 0""".stripMargin.replace("\n", " ")
+         |FROM fin WHERE p_conv > 0"""
     },
     "events_ab_mannwhitney" ->
       // rank-sum robustness twin of events_ab_ttest: same md5 coin,
@@ -7034,7 +6881,7 @@ private[graft] object OracleSql {
         | FROM a WHERE n_a > 0 AND n_b > 0)
         |SELECT event_type, n_a, n_b, r_a AS rank_sum_a, u_a,
         | (u_a - CAST(n_a AS DOUBLE) * n_b / 2.0) / sqrt(var_u) AS z_u
-        |FROM s WHERE var_u > 0""".stripMargin.replace("\n", " "),
+        |FROM s WHERE var_u > 0""",
     "stream_ab_readout" ->
       // mirrors the streaming two-level plan: daily partials of the
       // six sufficient statistics, THEN the per-type total, THEN the
@@ -7047,7 +6894,7 @@ private[graft] object OracleSql {
         |  sum(d_sa) AS s_a, sum(d_sb) AS s_b,
         |  sum(d_qa) AS q_a, sum(d_qb) AS q_b
         | FROM d GROUP BY 1 HAVING sum(d_na) > 1 AND sum(d_nb) > 1),
-        |$welchSql""".stripMargin.replace("\n", " "),
+        |$welchSql""",
     "lake_vacuum_plan" ->
       // the manifest's snapshot lineage + the retention rule, all
       // integer arithmetic (horizon = 8 − 2 = 6)
@@ -7064,7 +6911,7 @@ private[graft] object OracleSql {
         |  ELSE 'expire' END AS action FROM m)
         |SELECT part, file_id, bytes, created_snap, removed_snap, action,
         | CASE WHEN action = 'expire' THEN bytes ELSE 0 END AS reclaim_bytes
-        |FROM p""".stripMargin.replace("\n", " "),
+        |FROM p""",
     "lake_vacuum_apply" ->
       // the post-vacuum manifest: exactly the plan's keep rows
       // (removed_snap null = live, or inside the [6, 8] window)
@@ -7077,8 +6924,7 @@ private[graft] object OracleSql {
         |   ELSE NULL END AS removed_snap
         | FROM documents GROUP BY 1, 2)
         |SELECT part, file_id, bytes, created_snap, removed_snap
-        |FROM m WHERE removed_snap IS NULL OR removed_snap >= 6"""
-        .stripMargin.replace("\n", " "),
+        |FROM m WHERE removed_snap IS NULL OR removed_snap >= 6""",
     "lake_time_travel_read" ->
       // live files at snapshot 6 read from the VACUUMED manifest:
       // created at-or-before 6 and not removed at-or-before 6
@@ -7094,8 +6940,7 @@ private[graft] object OracleSql {
         | WHERE removed_snap IS NULL OR removed_snap >= 6)
         |SELECT part, file_id, bytes, created_snap, removed_snap
         |FROM v WHERE created_snap <= 6
-        | AND (removed_snap IS NULL OR removed_snap > 6)"""
-        .stripMargin.replace("\n", " "),
+        | AND (removed_snap IS NULL OR removed_snap > 6)""",
     "lake_compaction_plan" ->
       // same manifest + the same prefix-sum rule in window SQL;
       // everything integer, bit-replayable
@@ -7114,7 +6959,7 @@ private[graft] object OracleSql {
         |  AS BIGINT) AS bin_bytes,
         | CAST(count(*) OVER (PARTITION BY part, cum_before // 4096)
         |  AS BIGINT) AS bin_files
-        |FROM b""".stripMargin.replace("\n", " "),
+        |FROM b""",
     "lake_compaction_apply" ->
       // the same plan chain folded per (part, bin): bytes conserve,
       // input files count — everything integer, bit-replayable
@@ -7130,7 +6975,7 @@ private[graft] object OracleSql {
         |SELECT part, CAST(cum_before // 4096 AS BIGINT) AS file_id,
         | CAST(sum(bytes) AS BIGINT) AS bytes,
         | CAST(count(*) AS BIGINT) AS files_merged
-        |FROM b GROUP BY 1, 2""".stripMargin.replace("\n", " "),
+        |FROM b GROUP BY 1, 2""",
     "lake_zorder_plan" -> {
       // the 2×16-bit Morton interleave unrolled term-by-term (dim 0
       // at even bit positions, dim 1 at odd — zorderValue's layout),
@@ -7157,7 +7002,7 @@ private[graft] object OracleSql {
          | CAST(max(x) AS BIGINT) AS max_cust16,
          | CAST(min(y) AS BIGINT) AS min_day16,
          | CAST(max(y) AS BIGINT) AS max_day16
-         |FROM z GROUP BY 1""".stripMargin.replace("\n", " ")
+         |FROM z GROUP BY 1"""
     },
     "lake_zorder_apply" -> {
       // the zorder_plan interleave chain + the per-file byte mass
@@ -7185,7 +7030,7 @@ private[graft] object OracleSql {
          | CAST(max(x) AS BIGINT) AS max_cust16,
          | CAST(min(y) AS BIGINT) AS min_day16,
          | CAST(max(y) AS BIGINT) AS max_day16
-         |FROM z GROUP BY 1""".stripMargin.replace("\n", " ")
+         |FROM z GROUP BY 1"""
     },
     "stream_compaction_monitor" ->
       // same manifest, same counters in plain SQL; all exact longs
@@ -7199,7 +7044,7 @@ private[graft] object OracleSql {
         |  AS n_small,
         | sum(CASE WHEN bytes < 300 THEN 1 ELSE 0 END) >= 12
         |  AS compact_now
-        |FROM m GROUP BY 1""".stripMargin.replace("\n", " "),
+        |FROM m GROUP BY 1""",
     "lake_file_skipping" -> {
       // both manifests + the probe workload replayed in integer SQL:
       // the z interleave shared with lake_zorder_plan, the
@@ -7239,8 +7084,7 @@ private[graft] object OracleSql {
          | CAST(h.files_hit AS BIGINT) AS files_hit,
          | CAST(nf.n_files - h.files_hit AS BIGINT)
          |  / CAST(nf.n_files AS BIGINT) AS skip_rate
-         |FROM hits h JOIN nf USING (layout)""".stripMargin
-        .replace("\n", " ")
+         |FROM hits h JOIN nf USING (layout)"""
     },
     "text_bm25_topk" ->
       // same tokenization + df-capped postings trunk as the RRF
@@ -7291,8 +7135,7 @@ private[graft] object OracleSql {
         | GROUP BY 1, 2)
         |SELECT query_id, neighbor_id, bm25 FROM s
         |QUALIFY row_number() OVER (PARTITION BY query_id
-        |  ORDER BY bm25 DESC, neighbor_id) <= 10"""
-        .stripMargin.replace("\n", " "),
+        |  ORDER BY bm25 DESC, neighbor_id) <= 10""",
     "text_bpe_train" -> {
       // the Sennrich training loop unrolled: per iteration, weighted
       // adjacent-pair counts over the VOCABULARY relation, a 1-row
@@ -7303,9 +7146,9 @@ private[graft] object OracleSql {
       val unions = (1 to 6).map(i =>
         s"""SELECT CAST($i AS BIGINT) AS merge_idx, a AS left_sym,
            | b AS right_sym, a || b AS merged, cnt AS pair_count
-           |FROM b$i""".stripMargin).mkString(" UNION ALL ")
+           |FROM b$i""").mkString(" UNION ALL ")
       s"""WITH $bpeCtes
-         |$unions""".stripMargin.replace("\n", " ")
+         |$unions"""
     },
     "text_bpe_vocab" ->
       // the same unrolled chain, final symbol state emitted: the
@@ -7314,7 +7157,7 @@ private[graft] object OracleSql {
          |SELECT word, n, CAST(length(word) AS BIGINT) AS n_chars,
          | CAST(len(syms) AS BIGINT) AS n_tokens,
          | list_aggregate(syms, 'string_agg', ' ') AS token_seq
-         |FROM s6""".stripMargin.replace("\n", " "),
+         |FROM s6""",
     "text_bpe_apply" ->
       // the unrolled training chain's final state joined back to the
       // exploded corpus — per-source budget under the LEARNED
@@ -7336,7 +7179,7 @@ private[graft] object OracleSql {
          |  / CAST(greatest(CAST(sum(coalesce(len(s6.syms),
          |     length(cw.word))) AS BIGINT), 1) AS DOUBLE), 6) AS compression
          |FROM cw LEFT JOIN s6 ON s6.word = cw.word
-         |GROUP BY 1""".stripMargin.replace("\n", " "),
+         |GROUP BY 1""",
     "text_bm25_maxscore" ->
       // the EXHAUSTIVE exact ranking, no candidate rule at all: the
       // Spark side's MaxScore pruning is provably lossless, so its
@@ -7359,8 +7202,7 @@ private[graft] object OracleSql {
         | FROM terms GROUP BY 1, 2)
         |SELECT query_id, neighbor_id, bm25 FROM s
         |QUALIFY row_number() OVER (PARTITION BY query_id
-        |  ORDER BY bm25 DESC, neighbor_id) <= 10"""
-        .stripMargin.replace("\n", " "),
+        |  ORDER BY bm25 DESC, neighbor_id) <= 10""",
     "events_ab_cuped" ->
       // same coin; per-user (pre, post) means at the typePsi calendar
       // midpoint, pooled moments in one conditional aggregate, then
@@ -7422,8 +7264,7 @@ private[graft] object OracleSql {
         |  AS cuped_mean_b,
         | cov_pp / var_pre AS theta,
         | cov_pp * cov_pp / (var_pre * var_post) AS var_reduction
-        |FROM s WHERE var_pre > 0 AND var_post > 0"""
-        .stripMargin.replace("\n", " "),
+        |FROM s WHERE var_pre > 0 AND var_post > 0""",
     "events_ab_sequential" ->
       // same coin + expression tree as events_ab_ttest, cumulated by
       // day: daily partials of the six sufficient statistics, then a
@@ -7448,7 +7289,7 @@ private[graft] object OracleSql {
         | (mean_a - mean_b) / sqrt(se_a + se_b) AS welch_t,
         | (se_a + se_b) * (se_a + se_b) / (se_a * se_a / (n_a - 1)
         |   + se_b * se_b / (n_b - 1)) AS welch_df
-        |FROM w WHERE se_a + se_b > 0""".stripMargin.replace("\n", " "),
+        |FROM w WHERE se_a + se_b > 0""",
     "events_type_psi" ->
       // categorical drift: the types ARE the buckets; Laplace term
       // count is data-dependent (count(*) OVER ()), same half split
@@ -7471,8 +7312,7 @@ private[graft] object OracleSql {
         |q AS (SELECT *, (p_b - p_a) * ln(p_b / p_a) AS psi FROM p)
         |SELECT event_type, n_a, n_b, round(p_a, 6) AS p_a,
         | round(p_b, 6) AS p_b, round(psi, 6) AS psi_term,
-        | round(sum(psi) OVER (), 6) AS psi_total FROM q"""
-        .stripMargin.replace("\n", " "),
+        | round(sum(psi) OVER (), 6) AS psi_total FROM q""",
     "events_value_psi" -> {
       val probs = (1 to 9).map(_ / 10.0)
       val bucketExpr = probs.indices.map(i =>
@@ -7499,15 +7339,13 @@ private[graft] object OracleSql {
          |SELECT bucket, n_a, n_b, round(p_a, 6) AS p_a,
          | round(p_b, 6) AS p_b, round(psi, 6) AS psi_term,
          | round(sum(psi) OVER (), 6) AS psi_total FROM q"""
-        .stripMargin.replace("\n", " ")
     },
     "text_zipf_spectrum" ->
       """WITH tok AS (SELECT unnest(list_filter(
         |  regexp_split_to_array(lower(text), '\s+'), x -> x <> '')) AS token
         | FROM documents),
         |c AS (SELECT token, count(*) AS occurrences FROM tok GROUP BY 1)
-        |SELECT occurrences, count(*) AS n_tokens FROM c GROUP BY 1"""
-        .stripMargin.replace("\n", " "),
+        |SELECT occurrences, count(*) AS n_tokens FROM c GROUP BY 1""",
     "q_concurrent_sessions" ->
       """WITH flagged AS (
         | SELECT user_id, ts, event_id,
@@ -7527,14 +7365,14 @@ private[graft] object OracleSql {
         |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS conc FROM b)
         |SELECT date_trunc('hour', ts) AS hour,
         | CAST(max(conc) AS BIGINT) AS max_concurrent
-        |FROM c GROUP BY 1""".stripMargin.replace("\n", " "),
+        |FROM c GROUP BY 1""",
     "stream_user_state" ->
       """SELECT user_id, event_type AS state, ts AS state_ts,
         | event_id AS state_event_id
         |FROM (SELECT user_id, event_type, ts, event_id,
         |  row_number() OVER (PARTITION BY user_id
         |    ORDER BY ts DESC, event_id DESC) AS rn FROM events) r
-        |WHERE rn = 1""".stripMargin.replace("\n", " "),
+        |WHERE rn = 1""",
     "text_token_entropy" ->
       """WITH tok AS (SELECT doc_id, unnest(list_filter(
         |  regexp_split_to_array(lower(text), '\s+'), x -> x <> '')) AS token
@@ -7543,6 +7381,6 @@ private[graft] object OracleSql {
         |a AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
         |  sum(c * log2(c)) AS clog FROM c GROUP BY 1)
         |SELECT doc_id, n_tokens, log2(n_tokens) - clog / n_tokens AS entropy_bits
-        |FROM a""".stripMargin.replace("\n", " "),
+        |FROM a""",
   )
 }

@@ -122,4 +122,36 @@ class BenchSpec extends AnyFunSuite {
     assert(!Bench.midRunNoisy(Seq(26.0), Some(13.0)),
       "boundary is exclusive, matching the startup verdict")
   }
+
+  test("measureKey on random attempt streams: ships the min valid " +
+    "attempt, never retries a failed first/second run, caps at 4") {
+    val rnd = new scala.util.Random(163)
+    for (_ <- 1 to 200) {
+      val bm = 1.0
+      // scripted attempts: occasional failures (-1), values around the band
+      def draw(): Double =
+        if (rnd.nextInt(8) == 0) -1.0 else 0.5 + rnd.nextDouble() * 4.0
+      val script = Vector.fill(8)(draw())
+      val it = script.iterator
+      var consumed = 0
+      def next(): Double = { consumed += 1; it.next() }
+      val (shipped, attempts) = Bench.measureKey(next _, next _, bm)
+      assert(attempts === script.take(consumed), "attempt trail mismatch")
+      assert(attempts.size <= 4, s"cap broke: $attempts")
+      if (attempts.head < 0) {
+        assert(shipped === -1.0 && attempts.size === 1)
+      } else if (attempts.size >= 2 && attempts(1) < 0) {
+        assert(shipped === -1.0 && attempts.size === 2)
+      } else {
+        val valid = attempts.filter(_ >= 0)
+        assert(valid.nonEmpty && shipped === valid.min,
+          s"shipped $shipped != min valid of $attempts")
+        // the loop only continues while the running min is over band
+        // and fewer than 4 attempts are in hand
+        if (attempts.size < 4 && attempts.last >= 0)
+          assert(attempts.min <= 2 * bm,
+            s"stopped early while over band: $attempts")
+      }
+    }
+  }
 }

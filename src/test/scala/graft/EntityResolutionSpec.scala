@@ -9,6 +9,7 @@ import graft.operators.EntityResolution
   * match/closure/survivorship chain, and the plan shape (blocked
   * equi-join, never a cartesian). */
 class EntityResolutionSpec extends SparkSpec {
+  import spark.implicits._
 
   private lazy val customer: DataFrame =
     spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
@@ -191,7 +192,6 @@ class EntityResolutionSpec extends SparkSpec {
 
   test("maxBlock cap bounds a planted 1000-record hot block (and never " +
     "binds on the uniform driver fixture)") {
-    import spark.implicits._
     // a production hot prefix: 1000 records sharing one block with
     // identical normalized names — uncapped that is C(1000,2) =
     // 499 500 candidate pairs from ONE block
@@ -226,5 +226,47 @@ class EntityResolutionSpec extends SparkSpec {
       .groupBy("block").count().agg(max("count")).head().getLong(0)
     assert(blockSizes <= 128,
       s"driver fixture max block $blockSizes exceeds half the 256 cap")
+  }
+
+  test("capBlocks laws on random skewed corpora: capped pairs are a " +
+    "subset, per-block fan-out is bounded, survivors are the smallest ids") {
+    val rnd = new scala.util.Random(161)
+    for (round <- 1 to 3) {
+      // a few hot prefixes + a uniform tail; identical names inside a
+      // prefix so every in-block pair matches at lev 0. The block key
+      // is the first SIX normalized chars, so the hot-block id must
+      // land inside them (f"hot$b%02dx") — a suffix-varied name would
+      // collapse every "hot" corpus into ONE block and leave the
+      // per-block assertions vacuous for b >= 1 (r16 review finding)
+      val hotBlocks = 2 + rnd.nextInt(3)
+      val rows = (0 until hotBlocks).flatMap { b =>
+        val size = 20 + rnd.nextInt(60)
+        (0 until size).map(i =>
+          (b * 1000L + i, f"hot$b%02dx-common"))
+      } ++ (0 until 30).map(i => (90000L + i, s"tail${i}name"))
+      val recs = rnd.shuffle(rows).toDF("rec_id", "raw_name")
+      val cap = 5 + rnd.nextInt(12)
+      def pairSet(maxBlock: Int) =
+        EntityResolution.entityPairs(recs, maxBlock = maxBlock)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val capped = pairSet(cap)
+      val full = pairSet(Int.MaxValue)
+      assert(capped.subsetOf(full), s"round $round: cap invented a pair")
+      // fan-out bound: pairs per block <= C(cap, 2)
+      val byBlock = capped.groupBy(_._1 / 1000L)
+      byBlock.foreach { case (b, ps) =>
+        assert(ps.size <= cap * (cap - 1) / 2,
+          s"round $round block $b: ${ps.size} pairs exceed C($cap,2)") }
+      // determinism: EVERY hot block must pair (>= 20 identical
+      // names against cap <= 16 — a vacuous block means the fixture
+      // broke), and its participants are exactly the smallest ids
+      (0 until hotBlocks).foreach { b =>
+        val ids = capped.filter(_._1 / 1000L == b)
+          .flatMap(p => Seq(p._1, p._2))
+        assert(ids == (0 until cap).map(b * 1000L + _).toSet,
+          s"round $round block $b: survivor subset not the min ids " +
+            s"(${ids.size} participants)")
+      }
+    }
   }
 }

@@ -921,4 +921,23 @@ class EventOpsSpec extends SparkSpec {
       }
     }
   }
+
+  test("rank containment is sound at true order statistics for any " +
+    "random discrete multiset (eps >= 1/n)") {
+    val rnd = new scala.util.Random(164)
+    for (_ <- 1 to 100) {
+      val n = 20 + rnd.nextInt(200)
+      // heavy ties on purpose: values from a tiny alphabet
+      val xs = Vector.fill(n)(rnd.nextInt(6).toDouble).sorted
+      val eps = 1.0 / n + 1e-12
+      for (q <- Seq(0.5, 0.9, 0.99)) {
+        // the lower q-order statistic: smallest v with frac(<= v) >= q
+        val v = xs(math.min(n - 1, math.max(0, math.ceil(q * n).toInt - 1)))
+        val lt = xs.count(_ < v).toDouble / n
+        val le = xs.count(_ <= v).toDouble / n
+        assert(lt <= q + eps && le >= q - eps,
+          s"containment failed at q=$q for n=$n: lt=$lt le=$le v=$v")
+      }
+    }
+  }
 }

@@ -456,4 +456,41 @@ class LakeSpec extends SparkSpec {
         s"probe $p sorted_x: ($sn, $sHit, $sSkip)")
     }
   }
+
+  test("vacuum + time travel on random manifests: kept+reclaimed " +
+    "conservation, and every in-window as-of read is vacuum-invariant") {
+    val rnd = new scala.util.Random(162)
+    for (round <- 1 to 4) {
+      val current = 6L + rnd.nextInt(6)
+      val retain = rnd.nextInt(4).toLong
+      val mf = (0 until 120).map { i =>
+        val created = rnd.nextInt(current.toInt).toLong
+        val removed =
+          if (rnd.nextBoolean()) None
+          else Some(created + 1 + rnd.nextInt(6).toLong)
+        ("p" + rnd.nextInt(3), i.toLong, 10L + rnd.nextInt(500),
+          created, removed)
+      }.toDF("part", "file_id", "bytes", "created_snap", "removed_snap")
+        .localCheckpoint(true)
+      val plan = Lake.vacuumPlan(mf, current, retain)
+      val vac = Lake.vacuumApply(mf, current, retain).localCheckpoint(true)
+      val kept = vac.agg(sum("bytes")).first().getLong(0)
+      val reclaimed = plan.agg(sum("reclaim_bytes")).first().getLong(0)
+      assert(kept + reclaimed === mf.agg(sum("bytes")).first().getLong(0),
+        s"round $round: conservation broke")
+      def files(df: org.apache.spark.sql.DataFrame, snap: Long) =
+        Lake.timeTravelRead(df, snap, current, retain)
+          .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+      ((current - retain) to current).foreach { snap =>
+        assert(files(vac, snap) === files(mf, snap),
+          s"round $round: as-of $snap differs post-vacuum " +
+            s"(current $current retain $retain)")
+      }
+      // below-horizon reads refuse (when a below-horizon snap exists)
+      if (current - retain > 0)
+        intercept[IllegalArgumentException] {
+          Lake.timeTravelRead(vac, current - retain - 1, current, retain)
+        }
+    }
+  }
 }
