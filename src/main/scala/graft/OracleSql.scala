@@ -347,6 +347,70 @@ private[graft] object OracleSql {
       |seas0 AS (SELECT list(x - (SELECT m1 FROM init) ORDER BY i) AS sl
       | FROM s WHERE i <= 12)"""
 
+  /** `new_session`, then the FROM clause over `events`: 1 where a
+    * user's event comes more than 30 minutes after their previous one
+    * in (ts, event_id) order, or is their first. */
+  private val newSessionSql: String =
+    """CASE WHEN lag(ts) OVER w IS NULL
+      |   OR ts > lag(ts) OVER w + INTERVAL 30 MINUTE THEN 1 ELSE 0 END
+      |   AS new_session
+      | FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)"""
+
+  /** The events flagged by [[newSessionSql]], then `numbered`: every
+    * event column with its user's running `session_seq`. */
+  private val sessionSeqCtes: String =
+    s"""flagged AS (SELECT user_id, ts, event_id, event_type,
+       |  $newSessionSql),
+       |numbered AS (SELECT *, sum(new_session) OVER (PARTITION BY user_id
+       |  ORDER BY ts, event_id
+       |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
+       | FROM flagged)"""
+
+  /** The events per hour `h(hb, n)` and every hour `spine(hb)` from
+    * the first event's to the last's. */
+  private val hourSpineCtes: String =
+    """h AS (SELECT date_trunc('hour', ts) AS hb, count(*) AS n
+      |  FROM events GROUP BY 1),
+      |b AS (SELECT min(hb) AS lo, max(hb) AS hi FROM h),
+      |spine AS (SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR))
+      |   AS hb FROM b)"""
+
+  /** [[hourSpineCtes]] with the events of every hour `f(hb, n, dow,
+    * hour_of_day)`, zero-event hours included, and each weekly slot's
+    * hour count and first two moments `p(dow, hour_of_day, cnt, s1,
+    * s2)`. DuckDB's dayofweek counts Sunday as 0, Spark's as 1. */
+  private val hourSlotCtes: String =
+    s"""$hourSpineCtes,
+       |f AS (SELECT spine.hb, coalesce(h.n, 0) AS n,
+       |  CAST(dayofweek(spine.hb) + 1 AS BIGINT) AS dow,
+       |  CAST(hour(spine.hb) AS BIGINT) AS hour_of_day
+       | FROM spine LEFT JOIN h USING (hb)),
+       |p AS (SELECT dow, hour_of_day, count(*) AS cnt,
+       |  CAST(sum(n) AS BIGINT) AS s1, CAST(sum(n * n) AS BIGINT) AS s2
+       | FROM f GROUP BY 1, 2)"""
+
+  /** `h(doc_id, hits_en, …, hits_zh)`: each doc's tokens `t(doc_id,
+    * toks)` among five stop words of each language. */
+  private val langHitsCte: String =
+    """h AS (SELECT doc_id,
+      | CAST(len(list_filter(toks, x -> x IN ('the','and','of','to','in'))) AS BIGINT) AS hits_en,
+      | CAST(len(list_filter(toks, x -> x IN ('le','la','et','les','des'))) AS BIGINT) AS hits_fr,
+      | CAST(len(list_filter(toks, x -> x IN ('el','los','de','que','y'))) AS BIGINT) AS hits_es,
+      | CAST(len(list_filter(toks, x -> x IN ('der','die','und','das','ist'))) AS BIGINT) AS hits_de,
+      | CAST(len(list_filter(toks, x -> x IN ('的','是','在','了','和'))) AS BIGINT) AS hits_zh
+      | FROM t)"""
+
+  /** `predicted_lang` over [[langHitsCte]]'s counts: the language with
+    * the most hits, the first in en, fr, es, de, zh order on a tie,
+    * 'und' with none. */
+  private val predictedLangSql: String =
+    """CASE WHEN greatest(hits_en, hits_fr, hits_es, hits_de, hits_zh) = 0 THEN 'und'
+      |  WHEN hits_en = greatest(hits_en, hits_fr, hits_es, hits_de, hits_zh) THEN 'en'
+      |  WHEN hits_fr = greatest(hits_en, hits_fr, hits_es, hits_de, hits_zh) THEN 'fr'
+      |  WHEN hits_es = greatest(hits_en, hits_fr, hits_es, hits_de, hits_zh) THEN 'es'
+      |  WHEN hits_de = greatest(hits_en, hits_fr, hits_es, hits_de, hits_zh) THEN 'de'
+      |  ELSE 'zh' END AS predicted_lang"""
+
   // ---- DuckDB oracles --------------------------------------------------
 
   /** The lineitem→sales mapping as a SQL fragment (SURVEY.md §1). */
@@ -2760,11 +2824,9 @@ private[graft] object OracleSql {
         | avg(value) AS avg_value
         |FROM events GROUP BY date_trunc('hour', ts), event_type""",
     "q_events_sessionize" ->
-      """WITH flagged AS (
+      s"""WITH flagged AS (
         | SELECT user_id, ts, event_id, value,
-        |  CASE WHEN lag(ts) OVER w IS NULL
-        |       OR ts > lag(ts) OVER w + INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS new_session
-        | FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+        |  $newSessionSql),
         |numbered AS (
         | SELECT user_id, ts, value,
         |  CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -2777,11 +2839,9 @@ private[graft] object OracleSql {
       // the shared lag+cumsum session CTE, then distinct
       // session×type sets self-joined (type alphabet bounds the
       // fan-out); lift = n_together·N / (n_a·n_b) on exact longs
-      """WITH flagged AS (
+      s"""WITH flagged AS (
         | SELECT user_id, ts, event_id, event_type,
-        |  CASE WHEN lag(ts) OVER w IS NULL
-        |       OR ts > lag(ts) OVER w + INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS new_session
-        | FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+        |  $newSessionSql),
         |numbered AS (
         | SELECT user_id, event_type,
         |  CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -2820,18 +2880,7 @@ private[graft] object OracleSql {
       // variance/z are the identical fixed expression in both
       // engines — bit-exact, no rounding. dayofweek: DuckDB
       // Sunday=0 → +1 to match Spark.
-      """WITH h AS (SELECT date_trunc('hour', ts) AS hb, count(*) AS n
-        |  FROM events GROUP BY 1),
-        |b AS (SELECT min(hb) AS lo, max(hb) AS hi FROM h),
-        |spine AS (SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR))
-        |   AS hb FROM b),
-        |f AS (SELECT spine.hb, coalesce(h.n, 0) AS n,
-        |  CAST(dayofweek(spine.hb) + 1 AS BIGINT) AS dow,
-        |  CAST(hour(spine.hb) AS BIGINT) AS hour_of_day
-        | FROM spine LEFT JOIN h USING (hb)),
-        |p AS (SELECT dow, hour_of_day, count(*) AS cnt,
-        |  CAST(sum(n) AS BIGINT) AS s1, CAST(sum(n * n) AS BIGINT) AS s2
-        | FROM f GROUP BY 1, 2),
+      s"""WITH $hourSlotCtes,
         |j AS (SELECT f.hb, CAST(f.n AS BIGINT) AS n_events, f.dow,
         |  f.hour_of_day,
         |  CAST(s1 - n AS DOUBLE) / CAST(cnt - 1 AS DOUBLE) AS m,
@@ -2848,18 +2897,7 @@ private[graft] object OracleSql {
       // spine-filled slot profile — the profile is external to the
       // scorer, so no self-exclusion; 1.5σ because the batch run
       // trains and scores on the same log (see the gate's scaladoc)
-      """WITH h AS (SELECT date_trunc('hour', ts) AS hb, count(*) AS n
-        |  FROM events GROUP BY 1),
-        |b AS (SELECT min(hb) AS lo, max(hb) AS hi FROM h),
-        |spine AS (SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR))
-        |   AS hb FROM b),
-        |f AS (SELECT spine.hb, coalesce(h.n, 0) AS n,
-        |  CAST(dayofweek(spine.hb) + 1 AS BIGINT) AS dow,
-        |  CAST(hour(spine.hb) AS BIGINT) AS hour_of_day
-        | FROM spine LEFT JOIN h USING (hb)),
-        |p AS (SELECT dow, hour_of_day, count(*) AS cnt,
-        |  CAST(sum(n) AS BIGINT) AS s1, CAST(sum(n * n) AS BIGINT) AS s2
-        | FROM f GROUP BY 1, 2),
+      s"""WITH $hourSlotCtes,
         |o AS (SELECT hb, n, CAST(dayofweek(hb) + 1 AS BIGINT) AS dow,
         |  CAST(hour(hb) AS BIGINT) AS hour_of_day FROM h),
         |j AS (SELECT o.hb, CAST(o.n AS BIGINT) AS n_events, o.dow,
@@ -2900,11 +2938,9 @@ private[graft] object OracleSql {
     "events_session_entry_exit" ->
       // the sessionize CTE chain, endpoints picked by row_number on
       // the (ts, event_id) total order — mirrors min_by/max_by
-      """WITH flagged AS (
+      s"""WITH flagged AS (
         | SELECT user_id, ts, event_id, event_type,
-        |  CASE WHEN lag(ts) OVER w IS NULL
-        |       OR ts > lag(ts) OVER w + INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS new_session
-        | FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+        |  $newSessionSql),
         |numbered AS (
         | SELECT user_id, event_type, ts, event_id,
         |  sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -3013,41 +3049,17 @@ private[graft] object OracleSql {
         |  AS fertility
         |FROM c GROUP BY 1, 2""",
     "text_lang_id" ->
-      (toksCte +
-        """, h AS (SELECT doc_id,
-          | CAST(len(list_filter(toks, x -> x IN ('the','and','of','to','in'))) AS BIGINT) AS hits_en,
-          | CAST(len(list_filter(toks, x -> x IN ('le','la','et','les','des'))) AS BIGINT) AS hits_fr,
-          | CAST(len(list_filter(toks, x -> x IN ('el','los','de','que','y'))) AS BIGINT) AS hits_es,
-          | CAST(len(list_filter(toks, x -> x IN ('der','die','und','das','ist'))) AS BIGINT) AS hits_de,
-          | CAST(len(list_filter(toks, x -> x IN ('的','是','在','了','和'))) AS BIGINT) AS hits_zh
-          | FROM t)
-          |SELECT doc_id, hits_en, hits_fr, hits_es, hits_de, hits_zh,
-          | CASE WHEN greatest(hits_en, hits_fr, hits_es, hits_de, hits_zh) = 0 THEN 'und'
-          |  WHEN hits_en = greatest(hits_en, hits_fr, hits_es, hits_de, hits_zh) THEN 'en'
-          |  WHEN hits_fr = greatest(hits_en, hits_fr, hits_es, hits_de, hits_zh) THEN 'fr'
-          |  WHEN hits_es = greatest(hits_en, hits_fr, hits_es, hits_de, hits_zh) THEN 'es'
-          |  WHEN hits_de = greatest(hits_en, hits_fr, hits_es, hits_de, hits_zh) THEN 'de'
-          |  ELSE 'zh' END AS predicted_lang
-          |FROM h"""),
+      s"""$toksCte, $langHitsCte
+        |SELECT doc_id, hits_en, hits_fr, hits_es, hits_de, hits_zh,
+        | $predictedLangSql
+        |FROM h""",
     "text_lang_confusion" ->
-      (toksCte +
-        """, h AS (SELECT doc_id,
-          | CAST(len(list_filter(toks, x -> x IN ('the','and','of','to','in'))) AS BIGINT) AS hits_en,
-          | CAST(len(list_filter(toks, x -> x IN ('le','la','et','les','des'))) AS BIGINT) AS hits_fr,
-          | CAST(len(list_filter(toks, x -> x IN ('el','los','de','que','y'))) AS BIGINT) AS hits_es,
-          | CAST(len(list_filter(toks, x -> x IN ('der','die','und','das','ist'))) AS BIGINT) AS hits_de,
-          | CAST(len(list_filter(toks, x -> x IN ('的','是','在','了','和'))) AS BIGINT) AS hits_zh
-          | FROM t),
-          |p AS (SELECT doc_id,
-          | CASE WHEN greatest(hits_en, hits_fr, hits_es, hits_de, hits_zh) = 0 THEN 'und'
-          |  WHEN hits_en = greatest(hits_en, hits_fr, hits_es, hits_de, hits_zh) THEN 'en'
-          |  WHEN hits_fr = greatest(hits_en, hits_fr, hits_es, hits_de, hits_zh) THEN 'fr'
-          |  WHEN hits_es = greatest(hits_en, hits_fr, hits_es, hits_de, hits_zh) THEN 'es'
-          |  WHEN hits_de = greatest(hits_en, hits_fr, hits_es, hits_de, hits_zh) THEN 'de'
-          |  ELSE 'zh' END AS predicted_lang
-          |FROM h)
-          |SELECT d.lang AS labeled, p.predicted_lang, count(*) AS n_docs
-          |FROM p JOIN documents d USING (doc_id) GROUP BY 1, 2"""),
+      s"""$toksCte, $langHitsCte,
+        |p AS (SELECT doc_id,
+        | $predictedLangSql
+        |FROM h)
+        |SELECT d.lang AS labeled, p.predicted_lang, count(*) AS n_docs
+        |FROM p JOIN documents d USING (doc_id) GROUP BY 1, 2""",
     "text_fingerprint" ->
       """SELECT doc_id,
         | md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fingerprint_md5
@@ -3254,15 +3266,7 @@ private[graft] object OracleSql {
         | quantile_cont(gap_s, 0.99) AS p99_s
         |FROM g WHERE gap_s IS NOT NULL""",
     "q_cart_abandonment" ->
-      """WITH flagged AS (SELECT user_id, ts, event_id, event_type,
-        |  CASE WHEN lag(ts) OVER w IS NULL
-        |   OR ts > lag(ts) OVER w + INTERVAL 30 MINUTE THEN 1 ELSE 0 END
-        |   AS new_session
-        | FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |numbered AS (SELECT *, sum(new_session) OVER (PARTITION BY user_id
-        |  ORDER BY ts, event_id
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
-        | FROM flagged),
+      s"""WITH $sessionSeqCtes,
         |sess AS (SELECT user_id, session_seq, CAST(min(ts) AS DATE) AS day,
         |  max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS clicked,
         |  max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS purchased
@@ -3274,11 +3278,7 @@ private[graft] object OracleSql {
     "events_dow_hour_profile" ->
       // DuckDB dayofweek: Sunday=0; Spark: Sunday=1 → +1. Calendar
       // spine: zero-event hours count in the slot denominator
-      """WITH h AS (SELECT date_trunc('hour', ts) AS hb, count(*) AS n
-        |  FROM events GROUP BY 1),
-        |b AS (SELECT min(hb) AS lo, max(hb) AS hi FROM h),
-        |spine AS (SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR))
-        |   AS hb FROM b),
+      s"""WITH $hourSpineCtes,
         |f AS (SELECT spine.hb, coalesce(h.n, 0) AS n
         |  FROM spine LEFT JOIN h USING (hb))
         |SELECT CAST(dayofweek(hb) + 1 AS BIGINT) AS dow,
@@ -3300,15 +3300,7 @@ private[graft] object OracleSql {
         | quantile_cont(latency_min, 0.99) AS p99_min
         |FROM l""",
     "events_common_paths" ->
-      """WITH flagged AS (SELECT user_id, ts, event_id, event_type,
-        |  CASE WHEN lag(ts) OVER w IS NULL
-        |   OR ts > lag(ts) OVER w + INTERVAL 30 MINUTE THEN 1 ELSE 0 END
-        |   AS new_session
-        | FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |numbered AS (SELECT *, sum(new_session) OVER (PARTITION BY user_id
-        |  ORDER BY ts, event_id
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
-        | FROM flagged),
+      s"""WITH $sessionSeqCtes,
         |ranked AS (SELECT *, row_number() OVER (PARTITION BY user_id,
         |  session_seq ORDER BY ts, event_id) AS step FROM numbered),
         |paths AS (SELECT user_id, session_seq,
@@ -7347,11 +7339,9 @@ private[graft] object OracleSql {
         |c AS (SELECT token, count(*) AS occurrences FROM tok GROUP BY 1)
         |SELECT occurrences, count(*) AS n_tokens FROM c GROUP BY 1""",
     "q_concurrent_sessions" ->
-      """WITH flagged AS (
+      s"""WITH flagged AS (
         | SELECT user_id, ts, event_id,
-        |  CASE WHEN lag(ts) OVER w IS NULL
-        |       OR ts > lag(ts) OVER w + INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS new_session
-        | FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+        |  $newSessionSql),
         |numbered AS (
         | SELECT user_id, ts,
         |  sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
