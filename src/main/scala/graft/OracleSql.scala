@@ -411,6 +411,22 @@ private[graft] object OracleSql {
       |  WHEN hits_de = greatest(hits_en, hits_fr, hits_es, hits_de, hits_zh) THEN 'de'
       |  ELSE 'zh' END AS predicted_lang"""
 
+  /** FROM each document's 128-char frames, numbered `i` from 0; an
+    * empty text has one empty frame. */
+  private val framesFromSql: String =
+    """FROM documents, LATERAL (SELECT unnest(generate_series(0,
+      |   greatest((length(text) - 1) // 128, 0))) AS i) g"""
+
+  /** The md5 of the first 64 chars of every frame: `pd(doc_id, fmd5)`
+    * holds each document's distinct ones, `sz(doc_id, n)` counts them
+    * and `d(fmd5, df)` counts the documents of each. */
+  private val frameMd5Ctes: String =
+    s"""f AS (SELECT doc_id, md5(substr(text, i * 128 + 1, 64)) AS fmd5
+       |  $framesFromSql),
+       |pd AS (SELECT DISTINCT doc_id, fmd5 FROM f),
+       |sz AS (SELECT doc_id, count(*) AS n FROM pd GROUP BY 1),
+       |d AS (SELECT fmd5, count(*) AS df FROM pd GROUP BY 1)"""
+
   // ---- DuckDB oracles --------------------------------------------------
 
   /** The lineitem→sales mapping as a SQL fragment (SURVEY.md §1). */
@@ -768,12 +784,22 @@ private[graft] object OracleSql {
     operators.TextAnalysis.GopherQualityThresholds
       .map(t => qualFlagSql(t._1)).mkString("(", " OR ", ")")
 
-  /** Any Gopher repetition threshold broken, over the
-    * [[gopherProfileCtes]] columns. */
-  private def repAnySql: String = {
+  /** Any of the Gopher repetition thresholds `names` broken, over the
+    * [[gopherProfileCtes]] and [[dupMassCtes]] columns. */
+  private def repBrokenSql(names: String*): String = {
     val th = operators.TextAnalysis.GopherGateThresholds.toMap
-    th.keys.toSeq.sorted.map(n => s"$n > ${th(n)}").mkString("(", " OR ", ")")
+    names.map(n => s"$n > ${th(n)}").mkString("(", " OR ", ")")
   }
+
+  /** The repetition families: duplicated lines, paragraphs, top
+    * n-grams and duplicated n-grams, and any threshold at all. */
+  private val repLineSql = repBrokenSql("dup_line_fraction", "dup_line_char_fraction")
+  private val repParaSql = repBrokenSql("dup_para_fraction", "dup_para_char_fraction")
+  private val repTopSql = repBrokenSql("top2gram_char_fraction",
+    "top3gram_char_fraction", "top4gram_char_fraction")
+  private val repDupSql = repBrokenSql((5 to 10).map(n => s"dup${n}gram_char_fraction"): _*)
+  private def repAnySql: String =
+    repBrokenSql(operators.TextAnalysis.GopherGateThresholds.map(_._1).sorted: _*)
 
   /** The 20-threshold Gopher gate, appended after [[linedCtesFrom]]:
     * the profile chains and `gflag(doc_id)`, every doc that breaks a
@@ -1094,10 +1120,9 @@ private[graft] object OracleSql {
     * frame's predecessor luma — shared front half of the two
     * scene keys so the cut rule is written once. */
   private def sceneLumaCtes: String =
-    """f AS (SELECT doc_id, i AS frame_idx, substr(text, i * 128 + 1, 64)
+    s"""f AS (SELECT doc_id, i AS frame_idx, substr(text, i * 128 + 1, 64)
       |  AS frame
-      | FROM documents, LATERAL (SELECT unnest(generate_series(0,
-      |   greatest((length(text) - 1) // 128, 0))) AS i) g),
+      | $framesFromSql),
       |l AS (SELECT doc_id, CAST(frame_idx AS BIGINT) AS frame_idx,
       |  CASE WHEN length(frame) = 0 THEN 0.0 ELSE
       |   CAST(list_sum(list_transform(range(1, length(frame) + 1),
@@ -3490,14 +3515,6 @@ private[graft] object OracleSql {
       // per-doc CASE in fixed family precedence (7 quality families
       // in table order, then the repetition four) over the same
       // joined profile relations; keep = no family fired
-      val th = operators.TextAnalysis.GopherGateThresholds.toMap
-      def fam(names: String*): String =
-        names.map(n => s"$n > ${th(n)}").mkString("(", " OR ", ")")
-      val fLine = fam("dup_line_fraction", "dup_line_char_fraction")
-      val fPara = fam("dup_para_fraction", "dup_para_char_fraction")
-      val fTop = fam("top2gram_char_fraction", "top3gram_char_fraction",
-        "top4gram_char_fraction")
-      val fDup = fam((5 to 10).map(n => s"dup${n}gram_char_fraction"): _*)
       s"""WITH $qualCorpusCte, ${linedCtesFrom("qd")},
          |$gopherProfileCtes, $dupMassCtes, $qualProfileCtes,
          |j AS (SELECT d.doc_id, d.source,
@@ -3508,10 +3525,10 @@ private[graft] object OracleSql {
          |   WHEN ${qualFlagSql("ellipsis_line_fraction")} THEN 'ellipsis_line'
          |   WHEN ${qualFlagSql("alpha_word_fraction")} THEN 'alpha'
          |   WHEN ${qualFlagSql("stop_word_hits")} THEN 'stop_word'
-         |   WHEN $fLine THEN 'line'
-         |   WHEN $fPara THEN 'para'
-         |   WHEN $fTop THEN 'top_gram'
-         |   WHEN $fDup THEN 'dup_gram' END AS gate_family
+         |   WHEN $repLineSql THEN 'line'
+         |   WHEN $repParaSql THEN 'para'
+         |   WHEN $repTopSql THEN 'top_gram'
+         |   WHEN $repDupSql THEN 'dup_gram' END AS gate_family
          | FROM rep_profile r JOIN dng g ON g.doc_id = r.doc_id
          | JOIN qprof q ON q.doc_id = r.doc_id
          | JOIN documents d ON d.doc_id = r.doc_id)
@@ -3524,15 +3541,7 @@ private[graft] object OracleSql {
       // deterministic double (one exact-integer division) against a
       // shared literal, every output an integer count or one final
       // division
-      val th = operators.TextAnalysis.GopherGateThresholds.toMap
-      def fam(names: String*): String =
-        names.map(n => s"$n > ${th(n)}").mkString("(", " OR ", ")")
-      val fLine = fam("dup_line_fraction", "dup_line_char_fraction")
-      val fPara = fam("dup_para_fraction", "dup_para_char_fraction")
-      val fTop = fam("top2gram_char_fraction", "top3gram_char_fraction",
-        "top4gram_char_fraction")
-      val fDup = fam((5 to 10).map(n => s"dup${n}gram_char_fraction"): _*)
-      val fAny = s"($qualAnySql OR $fLine OR $fPara OR $fTop OR $fDup)"
+      val fAny = s"($qualAnySql OR $repLineSql OR $repParaSql OR $repTopSql OR $repDupSql)"
       def cnt(f: String, as: String) =
         s"CAST(sum(CASE WHEN $f THEN 1 ELSE 0 END) AS BIGINT) AS $as"
       s"""WITH $qualCorpusCte, ${linedCtesFrom("qd")},
@@ -3552,10 +3561,10 @@ private[graft] object OracleSql {
          | JOIN documents d ON d.doc_id = r.doc_id)
          |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
          | ${cnt(qualAnySql, "n_quality_gate")},
-         | ${cnt(fLine, "n_dup_line_gate")},
-         | ${cnt(fPara, "n_dup_para_gate")},
-         | ${cnt(fTop, "n_top_gram_gate")},
-         | ${cnt(fDup, "n_dup_gram_gate")},
+         | ${cnt(repLineSql, "n_dup_line_gate")},
+         | ${cnt(repParaSql, "n_dup_para_gate")},
+         | ${cnt(repTopSql, "n_top_gram_gate")},
+         | ${cnt(repDupSql, "n_dup_gram_gate")},
          | ${cnt(fAny, "n_flagged")},
          | CAST(sum(CASE WHEN $fAny THEN 1 ELSE 0 END) AS BIGINT)
          |  / CAST(count(*) AS BIGINT) AS flag_share
@@ -4193,12 +4202,7 @@ private[graft] object OracleSql {
         |QUALIFY row_number() OVER (PARTITION BY query_id
         |  ORDER BY cosine DESC, neighbor_id) <= 10""",
     "mm_near_dup_blobs" ->
-      """WITH f AS (SELECT doc_id, md5(substr(text, i * 128 + 1, 64)) AS fmd5
-        |  FROM documents, LATERAL (SELECT unnest(generate_series(0,
-        |   greatest((length(text) - 1) // 128, 0))) AS i) g),
-        |pd AS (SELECT DISTINCT doc_id, fmd5 FROM f),
-        |sz AS (SELECT doc_id, count(*) AS n FROM pd GROUP BY 1),
-        |d AS (SELECT fmd5, count(*) AS df FROM pd GROUP BY 1),
+      s"""WITH $frameMd5Ctes,
         |sh AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_shared
         |  FROM pd a JOIN d USING (fmd5) JOIN pd b USING (fmd5)
         |  WHERE a.doc_id < b.doc_id AND d.df BETWEEN 2 AND 64 GROUP BY 1, 2)
@@ -4209,12 +4213,7 @@ private[graft] object OracleSql {
         |WHERE n_shared * 1.0 / (sa.n + sb.n - n_shared) >= 0.3""",
     "mm_blob_dedup_incremental" ->
       // new×history pairs only; chunk df capped over the union
-      """WITH f AS (SELECT doc_id, md5(substr(text, i * 128 + 1, 64)) AS fmd5
-        |  FROM documents, LATERAL (SELECT unnest(generate_series(0,
-        |   greatest((length(text) - 1) // 128, 0))) AS i) g),
-        |pd AS (SELECT DISTINCT doc_id, fmd5 FROM f),
-        |sz AS (SELECT doc_id, count(*) AS n FROM pd GROUP BY 1),
-        |d AS (SELECT fmd5, count(*) AS df FROM pd GROUP BY 1),
+      s"""WITH $frameMd5Ctes,
         |sh AS (SELECT a.doc_id AS new_id, b.doc_id AS corpus_id,
         |  count(*) AS n_shared
         |  FROM pd a JOIN d USING (fmd5) JOIN pd b USING (fmd5)
@@ -4228,13 +4227,7 @@ private[graft] object OracleSql {
     "mm_dedup_groups" ->
       // the blob pair relation + the shared recursive reachability
       // closure (dedup_groups_blocked / dedup_embedding_groups shape)
-      s"""WITH RECURSIVE f AS (SELECT doc_id,
-        |  md5(substr(text, i * 128 + 1, 64)) AS fmd5
-        |  FROM documents, LATERAL (SELECT unnest(generate_series(0,
-        |   greatest((length(text) - 1) // 128, 0))) AS i) g),
-        |pd AS (SELECT DISTINCT doc_id, fmd5 FROM f),
-        |sz AS (SELECT doc_id, count(*) AS n FROM pd GROUP BY 1),
-        |d AS (SELECT fmd5, count(*) AS df FROM pd GROUP BY 1),
+      s"""WITH RECURSIVE $frameMd5Ctes,
         |sh AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_shared
         |  FROM pd a JOIN d USING (fmd5) JOIN pd b USING (fmd5)
         |  WHERE a.doc_id < b.doc_id AND d.df BETWEEN 2 AND 64 GROUP BY 1, 2),
@@ -4257,8 +4250,7 @@ private[graft] object OracleSql {
       // pure ASCII (asserted at all SFs; the other mm oracles already
       // lean on char-index == byte-offset).
       s"""WITH f AS (SELECT doc_id, substr(text, i * 128 + 1, 64) AS frame
-        |  FROM documents, LATERAL (SELECT unnest(generate_series(0,
-        |   greatest((length(text) - 1) // 128, 0))) AS i) g),
+        |  $framesFromSql),
         |d AS (SELECT doc_id,
         |  ${fnv1aSql("frame", j = "i")} AS h,
         |  CASE WHEN length(frame) = 0 THEN 0.0 ELSE
@@ -4739,20 +4731,19 @@ private[graft] object OracleSql {
         |  THEN 'cap' ELSE 'keep' END AS action
         |FROM t""",
     "mm_frame_sample" ->
-      """SELECT doc_id, CAST(i AS BIGINT) AS frame_idx,
+      s"""SELECT doc_id, CAST(i AS BIGINT) AS frame_idx,
         | CAST(i * 128 AS BIGINT) AS byte_offset,
         | CAST(length(substr(text, i * 128 + 1, 64)) AS BIGINT) AS frame_len,
         | md5(substr(text, i * 128 + 1, 64)) AS frame_md5
-        |FROM documents, LATERAL (SELECT unnest(generate_series(0,
-        |  greatest((length(text) - 1) // 128, 0))) AS i) g""",
+        |$framesFromSql""",
     "mm_scene_cuts" ->
       s"""WITH $sceneLumaCtes
-        |SELECT doc_id, frame_idx, round(pml, 6) AS prev_luma,
+          |SELECT doc_id, frame_idx, round(pml, 6) AS prev_luma,
           | round(ml, 6) AS luma, round(abs(ml - pml), 6) AS delta
           |FROM d WHERE pml IS NOT NULL AND abs(ml - pml) > 6.0""",
     "mm_shot_stats" ->
       s"""WITH $sceneLumaCtes
-        |SELECT doc_id, count(*) AS n_frames,
+          |SELECT doc_id, count(*) AS n_frames,
           | CAST(sum(CASE WHEN pml IS NOT NULL AND abs(ml - pml) > 6.0
           |  THEN 1 ELSE 0 END) AS BIGINT) AS n_cuts,
           | CAST(sum(CASE WHEN pml IS NOT NULL AND abs(ml - pml) > 6.0
@@ -4763,18 +4754,17 @@ private[graft] object OracleSql {
           |FROM d GROUP BY 1""",
     "mm_keyframe_sample" ->
       s"""WITH $sceneLumaCtes
-        |SELECT doc_id, frame_idx,
+          |SELECT doc_id, frame_idx,
           | row_number() OVER (PARTITION BY doc_id ORDER BY frame_idx)
           |  - 1 AS shot_idx,
           | round(ml, 6) AS luma
           |FROM d WHERE frame_idx = 0
           | OR (pml IS NOT NULL AND abs(ml - pml) > 6.0)""",
     "mm_chunk_dedup" ->
-      """SELECT frame_md5, count(DISTINCT doc_id) AS n_docs,
+      s"""SELECT frame_md5, count(DISTINCT doc_id) AS n_docs,
         | count(*) AS n_occurrences, min(doc_id) AS first_doc_id
         |FROM (SELECT doc_id, md5(substr(text, i * 128 + 1, 64)) AS frame_md5
-        |  FROM documents, LATERAL (SELECT unnest(generate_series(0,
-        |   greatest((length(text) - 1) // 128, 0))) AS i) g) f
+        |  $framesFromSql) f
         |GROUP BY frame_md5 HAVING count(DISTINCT doc_id) > 1""",
     "q_segment_migration" ->
       """WITH a AS (SELECT o_custkey,
