@@ -427,6 +427,41 @@ private[graft] object OracleSql {
        |sz AS (SELECT doc_id, count(*) AS n FROM pd GROUP BY 1),
        |d AS (SELECT fmd5, count(*) AS df FROM pd GROUP BY 1)"""
 
+  /** The exact-match tail over the new items `nd(doc_id, …)` and
+    * their store matches `p(doc_id, store_id)`: each new item's match
+    * count, its least store_id as `match_id` and then `cols`; an item
+    * with no match is kept. */
+  private def exactStoreMatchSql(cols: String = ""): String =
+    s"""agg AS (SELECT doc_id,
+       |  CAST(count(*) AS BIGINT) AS n_matches,
+       |  CAST(min(store_id) AS BIGINT) AS match_id
+       | FROM p GROUP BY 1)
+       |SELECT d.doc_id,
+       | CAST(coalesce(a.n_matches, 0) AS BIGINT) AS n_matches,
+       | CAST(coalesce(a.match_id, -1) AS BIGINT) AS match_id,
+       | $cols
+       | a.n_matches IS NULL AS keep
+       |FROM (SELECT DISTINCT doc_id FROM nd) d
+       |LEFT JOIN agg a USING (doc_id)"""
+
+  /** `p(key, n_a, n_b, p_a, p_b)`: the A and B shares of each
+    * category of `g(key, n_a, n_b)`, half a count added to each. */
+  private def laplaceShareCte(key: String): String =
+    s"""p AS (SELECT $key, n_a, n_b,
+       |  (n_a + 0.5) / (CAST(sum(n_a) OVER () AS BIGINT)
+       |    + 0.5 * count(*) OVER ()) AS p_a,
+       |  (n_b + 0.5) / (CAST(sum(n_b) OVER () AS BIGINT)
+       |    + 0.5 * count(*) OVER ()) AS p_b
+       | FROM g)"""
+
+  /** The population stability index over the shares `p(key, n_a,
+    * n_b, p_a, p_b)`: each category's term and their total. */
+  private def psiTermsSql(key: String): String =
+    s"""q AS (SELECT *, (p_b - p_a) * ln(p_b / p_a) AS psi FROM p)
+       |SELECT $key, n_a, n_b, round(p_a, 6) AS p_a,
+       | round(p_b, 6) AS p_b, round(psi, 6) AS psi_term,
+       | round(sum(psi) OVER (), 6) AS psi_total FROM q"""
+
   // ---- DuckDB oracles --------------------------------------------------
 
   /** The lineitem→sales mapping as a SQL fragment (SURVEY.md §1). */
@@ -4609,16 +4644,7 @@ private[graft] object OracleSql {
          | WHERE doc_id % 5 <> 1),
          |p AS (SELECT DISTINCT nd.doc_id, st.store_id
          | FROM nd JOIN st ON st.sfp = nd.fp),
-         |agg AS (SELECT doc_id,
-         |  CAST(count(*) AS BIGINT) AS n_matches,
-         |  CAST(min(store_id) AS BIGINT) AS match_id
-         | FROM p GROUP BY 1)
-         |SELECT d.doc_id,
-         | CAST(coalesce(a.n_matches, 0) AS BIGINT) AS n_matches,
-         | CAST(coalesce(a.match_id, -1) AS BIGINT) AS match_id,
-         | a.n_matches IS NULL AS keep
-         |FROM (SELECT DISTINCT doc_id FROM nd) d
-         |LEFT JOIN agg a USING (doc_id)""",
+         |${exactStoreMatchSql()}""",
     "mm_audio_winnow_incremental" ->
       // exact new-fingerprints x store match (the production tier);
       // n_matches = distinct store docs sharing a fingerprint, best
@@ -4629,18 +4655,8 @@ private[graft] object OracleSql {
          | WHERE doc_id % 5 <> 1),
          |p AS (SELECT DISTINCT nd.doc_id, st.store_id
          | FROM nd JOIN st ON st.swsig = nd.wsig),
-         |agg AS (SELECT doc_id,
-         |  CAST(count(*) AS BIGINT) AS n_matches,
-         |  CAST(min(store_id) AS BIGINT) AS match_id
-         | FROM p GROUP BY 1)
-         |SELECT d.doc_id,
-         | CAST(coalesce(a.n_matches, 0) AS BIGINT) AS n_matches,
-         | CAST(coalesce(a.match_id, -1) AS BIGINT) AS match_id,
-         | CAST(CASE WHEN a.n_matches IS NULL THEN -1 ELSE 0 END
-         |  AS INTEGER) AS best_hamming,
-         | a.n_matches IS NULL AS keep
-         |FROM (SELECT DISTINCT doc_id FROM nd) d
-         |LEFT JOIN agg a USING (doc_id)""",
+         |${exactStoreMatchSql(
+           "CAST(CASE WHEN a.n_matches IS NULL THEN -1 ELSE 0 END AS INTEGER) AS best_hamming,")}""",
     "mm_audio_sig_incremental" ->
       // EXHAUSTIVE new-batch x store comparison over the xxhash64
       // signature replay (no candidate rule); best match =
@@ -6503,7 +6519,7 @@ private[graft] object OracleSql {
     "mm_format_psi" ->
       // categorical PSI over sniffed formats, halves at the doc_id
       // midpoint; Laplace term count is the format universe
-      """WITH b AS (SELECT doc_id, hex(substr(text, 1, 2)) AS magic2
+      s"""WITH b AS (SELECT doc_id, hex(substr(text, 1, 2)) AS magic2
         | FROM documents),
         |m AS (SELECT CAST(floor((min(doc_id) + max(doc_id)) / 2) AS BIGINT)
         |  AS mid FROM documents),
@@ -6513,16 +6529,8 @@ private[graft] object OracleSql {
         |  CAST(sum(CASE WHEN doc_id <= m.mid THEN 0 ELSE 1 END) AS BIGINT)
         |   AS n_b
         | FROM b, m GROUP BY 1),
-        |p AS (SELECT magic2, n_a, n_b,
-        |  (n_a + 0.5) / (CAST(sum(n_a) OVER () AS BIGINT)
-        |    + 0.5 * count(*) OVER ()) AS p_a,
-        |  (n_b + 0.5) / (CAST(sum(n_b) OVER () AS BIGINT)
-        |    + 0.5 * count(*) OVER ()) AS p_b
-        | FROM g),
-        |q AS (SELECT *, (p_b - p_a) * ln(p_b / p_a) AS psi FROM p)
-        |SELECT magic2, n_a, n_b, round(p_a, 6) AS p_a,
-        | round(p_b, 6) AS p_b, round(psi, 6) AS psi_term,
-        | round(sum(psi) OVER (), 6) AS psi_total FROM q""",
+        |${laplaceShareCte("magic2")},
+        |${psiTermsSql("magic2")}""",
     "events_audience_overlap_exact" ->
       // distinct (type,user) self-join, every pair emits (zero
       // overlap included); Jaccard = one quotient of exact longs
@@ -7275,7 +7283,7 @@ private[graft] object OracleSql {
     "events_type_psi" ->
       // categorical drift: the types ARE the buckets; Laplace term
       // count is data-dependent (count(*) OVER ()), same half split
-      """WITH e AS (SELECT event_type, CAST(ts AS DATE) AS day FROM events),
+      s"""WITH e AS (SELECT event_type, CAST(ts AS DATE) AS day FROM events),
         |m AS (SELECT min(day) + CAST(floor(
         |  date_diff('day', min(day), max(day)) / 2) AS INTEGER) AS mid
         | FROM e),
@@ -7285,16 +7293,8 @@ private[graft] object OracleSql {
         |  CAST(sum(CASE WHEN day <= m.mid THEN 0 ELSE 1 END) AS BIGINT)
         |   AS n_b
         | FROM e, m GROUP BY 1),
-        |p AS (SELECT event_type, n_a, n_b,
-        |  (n_a + 0.5) / (CAST(sum(n_a) OVER () AS BIGINT)
-        |    + 0.5 * count(*) OVER ()) AS p_a,
-        |  (n_b + 0.5) / (CAST(sum(n_b) OVER () AS BIGINT)
-        |    + 0.5 * count(*) OVER ()) AS p_b
-        | FROM g),
-        |q AS (SELECT *, (p_b - p_a) * ln(p_b / p_a) AS psi FROM p)
-        |SELECT event_type, n_a, n_b, round(p_a, 6) AS p_a,
-        | round(p_b, 6) AS p_b, round(psi, 6) AS psi_term,
-        | round(sum(psi) OVER (), 6) AS psi_total FROM q""",
+        |${laplaceShareCte("event_type")},
+        |${psiTermsSql("event_type")}""",
     "events_value_psi" -> {
       val probs = (1 to 9).map(_ / 10.0)
       val bucketExpr = probs.indices.map(i =>
@@ -7317,10 +7317,7 @@ private[graft] object OracleSql {
          |  (n_a + 0.5) / (CAST(sum(n_a) OVER () AS BIGINT) + 5.0) AS p_a,
          |  (n_b + 0.5) / (CAST(sum(n_b) OVER () AS BIGINT) + 5.0) AS p_b
          | FROM g),
-         |q AS (SELECT *, (p_b - p_a) * ln(p_b / p_a) AS psi FROM p)
-         |SELECT bucket, n_a, n_b, round(p_a, 6) AS p_a,
-         | round(p_b, 6) AS p_b, round(psi, 6) AS psi_term,
-         | round(sum(psi) OVER (), 6) AS psi_total FROM q"""
+         |${psiTermsSql("bucket")}"""
     },
     "text_zipf_spectrum" ->
       """WITH tok AS (SELECT unnest(list_filter(
