@@ -462,6 +462,51 @@ private[graft] object OracleSql {
        | round(p_b, 6) AS p_b, round(psi, 6) AS psi_term,
        | round(sum(psi) OVER (), 6) AS psi_total FROM q"""
 
+  /** Per event type between the days `from` (inclusive) and `to`:
+    * the exact distinct users and events, and whether DuckDB's own
+    * approx_count_distinct lands within 5% of the exact users. */
+  private def approxUsersSql(from: String, to: String): String =
+    s"""SELECT event_type,
+       | CAST(count(DISTINCT user_id) AS BIGINT) AS exact_users,
+       | CAST(count(*) AS BIGINT) AS n_events,
+       | abs(CAST(approx_count_distinct(user_id) AS DOUBLE)
+       |   / count(DISTINCT user_id) - 1.0) <= 0.05 AS est_within_tol
+       |FROM events
+       |WHERE CAST(ts AS DATE) >= DATE '$from'
+       | AND CAST(ts AS DATE) < DATE '$to'
+       |GROUP BY 1"""
+
+  /** The lake's file manifest `m(part, file_id, bytes)`: the
+    * documents of each source binned into 37 files by doc_id. */
+  private val lakeFileCte: String =
+    """m AS (SELECT source AS part,
+      |  CAST(doc_id % 37 AS BIGINT) AS file_id,
+      |  CAST(sum(n_chars) AS BIGINT) AS bytes
+      | FROM documents GROUP BY 1, 2)"""
+
+  /** The manifest of [[lakeFileCte]] with each file's snapshot life:
+    * `created_snap`, and `removed_snap` for a third of the files. */
+  private val lakeSnapshotCte: String =
+    """m AS (SELECT source AS part,
+      |  CAST(doc_id % 37 AS BIGINT) AS file_id,
+      |  CAST(sum(n_chars) AS BIGINT) AS bytes,
+      |  CAST(min(doc_id) % 7 AS BIGINT) AS created_snap,
+      |  CASE WHEN max(doc_id) % 3 = 0
+      |   THEN CAST(min(doc_id) % 7 + 1 + max(doc_id) % 4 AS BIGINT)
+      |   ELSE NULL END AS removed_snap
+      | FROM documents GROUP BY 1, 2)"""
+
+  /** [[lakeFileCte]] with `b(part, file_id, bytes, cum_before)`: the
+    * bytes of the part's larger files before each one, the compaction
+    * prefix sum. */
+  private val lakeBinCtes: String =
+    s"""$lakeFileCte,
+       |b AS (SELECT part, file_id, bytes,
+       |  COALESCE(sum(bytes) OVER (PARTITION BY part
+       |    ORDER BY bytes DESC, file_id
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+       |   AS cum_before FROM m)"""
+
   // ---- DuckDB oracles --------------------------------------------------
 
   /** The lineitem→sales mapping as a SQL fragment (SURVEY.md §1). */
@@ -6622,15 +6667,7 @@ private[graft] object OracleSql {
       // against the same exact anchor Spark checks its HLL++ store
       // against — the boolean and the exact columns hash-match, and a
       // decalibrated sketch on either side fails the row
-      """SELECT event_type,
-        | CAST(count(DISTINCT user_id) AS BIGINT) AS exact_users,
-        | CAST(count(*) AS BIGINT) AS n_events,
-        | abs(CAST(approx_count_distinct(user_id) AS DOUBLE)
-        |   / count(DISTINCT user_id) - 1.0) <= 0.05 AS est_within_tol
-        |FROM events
-        |WHERE CAST(ts AS DATE) >= DATE '2024-01-05'
-        | AND CAST(ts AS DATE) < DATE '2024-01-15'
-        |GROUP BY 1""",
+      approxUsersSql("2024-01-05", "2024-01-15"),
     "events_approx_stats" ->
       // calibration form (r16): DuckDB scores its OWN
       // approx_count_distinct + t-digest approx_quantile against the
@@ -6667,15 +6704,7 @@ private[graft] object OracleSql {
       // month-window anchor — DuckDB's approx_count_distinct stands
       // in for its day-sketch→compact→merge (its HLL union is
       // equally lossless), and the boolean + exact columns hash
-      """SELECT event_type,
-        | CAST(count(DISTINCT user_id) AS BIGINT) AS exact_users,
-        | CAST(count(*) AS BIGINT) AS n_events,
-        | abs(CAST(approx_count_distinct(user_id) AS DOUBLE)
-        |   / count(DISTINCT user_id) - 1.0) <= 0.05 AS est_within_tol
-        |FROM events
-        |WHERE CAST(ts AS DATE) >= DATE '2024-01-01'
-        | AND CAST(ts AS DATE) < DATE '2024-02-01'
-        |GROUP BY 1""",
+      approxUsersSql("2024-01-01", "2024-02-01"),
     "events_audience_overlap" ->
       // calibration form (r16): exact anchors + the within-tol claim
       // over DuckDB's OWN approx_count_distinct inclusion–exclusion —
@@ -6888,14 +6917,7 @@ private[graft] object OracleSql {
     "lake_vacuum_plan" ->
       // the manifest's snapshot lineage + the retention rule, all
       // integer arithmetic (horizon = 8 − 2 = 6)
-      """WITH m AS (SELECT source AS part,
-        |  CAST(doc_id % 37 AS BIGINT) AS file_id,
-        |  CAST(sum(n_chars) AS BIGINT) AS bytes,
-        |  CAST(min(doc_id) % 7 AS BIGINT) AS created_snap,
-        |  CASE WHEN max(doc_id) % 3 = 0
-        |   THEN CAST(min(doc_id) % 7 + 1 + max(doc_id) % 4 AS BIGINT)
-        |   ELSE NULL END AS removed_snap
-        | FROM documents GROUP BY 1, 2),
+      s"""WITH $lakeSnapshotCte,
         |p AS (SELECT *, CASE WHEN removed_snap IS NULL THEN 'keep-live'
         |  WHEN removed_snap >= 6 THEN 'keep-travel'
         |  ELSE 'expire' END AS action FROM m)
@@ -6905,27 +6927,13 @@ private[graft] object OracleSql {
     "lake_vacuum_apply" ->
       // the post-vacuum manifest: exactly the plan's keep rows
       // (removed_snap null = live, or inside the [6, 8] window)
-      """WITH m AS (SELECT source AS part,
-        |  CAST(doc_id % 37 AS BIGINT) AS file_id,
-        |  CAST(sum(n_chars) AS BIGINT) AS bytes,
-        |  CAST(min(doc_id) % 7 AS BIGINT) AS created_snap,
-        |  CASE WHEN max(doc_id) % 3 = 0
-        |   THEN CAST(min(doc_id) % 7 + 1 + max(doc_id) % 4 AS BIGINT)
-        |   ELSE NULL END AS removed_snap
-        | FROM documents GROUP BY 1, 2)
+      s"""WITH $lakeSnapshotCte
         |SELECT part, file_id, bytes, created_snap, removed_snap
         |FROM m WHERE removed_snap IS NULL OR removed_snap >= 6""",
     "lake_time_travel_read" ->
       // live files at snapshot 6 read from the VACUUMED manifest:
       // created at-or-before 6 and not removed at-or-before 6
-      """WITH m AS (SELECT source AS part,
-        |  CAST(doc_id % 37 AS BIGINT) AS file_id,
-        |  CAST(sum(n_chars) AS BIGINT) AS bytes,
-        |  CAST(min(doc_id) % 7 AS BIGINT) AS created_snap,
-        |  CASE WHEN max(doc_id) % 3 = 0
-        |   THEN CAST(min(doc_id) % 7 + 1 + max(doc_id) % 4 AS BIGINT)
-        |   ELSE NULL END AS removed_snap
-        | FROM documents GROUP BY 1, 2),
+      s"""WITH $lakeSnapshotCte,
         |v AS (SELECT * FROM m
         | WHERE removed_snap IS NULL OR removed_snap >= 6)
         |SELECT part, file_id, bytes, created_snap, removed_snap
@@ -6934,15 +6942,7 @@ private[graft] object OracleSql {
     "lake_compaction_plan" ->
       // same manifest + the same prefix-sum rule in window SQL;
       // everything integer, bit-replayable
-      """WITH m AS (SELECT source AS part,
-        |  CAST(doc_id % 37 AS BIGINT) AS file_id,
-        |  CAST(sum(n_chars) AS BIGINT) AS bytes
-        | FROM documents GROUP BY 1, 2),
-        |b AS (SELECT part, file_id, bytes,
-        |  COALESCE(sum(bytes) OVER (PARTITION BY part
-        |    ORDER BY bytes DESC, file_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |   AS cum_before FROM m)
+      s"""WITH $lakeBinCtes
         |SELECT part, file_id, bytes,
         | CAST(cum_before // 4096 AS BIGINT) AS bin,
         | CAST(sum(bytes) OVER (PARTITION BY part, cum_before // 4096)
@@ -6953,15 +6953,7 @@ private[graft] object OracleSql {
     "lake_compaction_apply" ->
       // the same plan chain folded per (part, bin): bytes conserve,
       // input files count — everything integer, bit-replayable
-      """WITH m AS (SELECT source AS part,
-        |  CAST(doc_id % 37 AS BIGINT) AS file_id,
-        |  CAST(sum(n_chars) AS BIGINT) AS bytes
-        | FROM documents GROUP BY 1, 2),
-        |b AS (SELECT part, file_id, bytes,
-        |  COALESCE(sum(bytes) OVER (PARTITION BY part
-        |    ORDER BY bytes DESC, file_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |   AS cum_before FROM m)
+      s"""WITH $lakeBinCtes
         |SELECT part, CAST(cum_before // 4096 AS BIGINT) AS file_id,
         | CAST(sum(bytes) AS BIGINT) AS bytes,
         | CAST(count(*) AS BIGINT) AS files_merged
@@ -7024,10 +7016,7 @@ private[graft] object OracleSql {
     },
     "stream_compaction_monitor" ->
       // same manifest, same counters in plain SQL; all exact longs
-      """WITH m AS (SELECT source AS part,
-        |  CAST(doc_id % 37 AS BIGINT) AS file_id,
-        |  CAST(sum(n_chars) AS BIGINT) AS bytes
-        | FROM documents GROUP BY 1, 2)
+      s"""WITH $lakeFileCte
         |SELECT part, CAST(count(*) AS BIGINT) AS n_files,
         | CAST(sum(bytes) AS BIGINT) AS total_bytes,
         | CAST(sum(CASE WHEN bytes < 300 THEN 1 ELSE 0 END) AS BIGINT)
