@@ -507,6 +507,35 @@ private[graft] object OracleSql {
        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
        |   AS cum_before FROM m)"""
 
+  /** The orders' largest custkey and day offset from 1992-01-01,
+    * `mm(max_c, max_d)`, the extent of the 65536 × 65536 grid. */
+  private val orderGridCte: String =
+    """mm AS (SELECT max(o_custkey) AS max_c,
+      |  max(CAST(date_diff('day', DATE '1992-01-01', o_orderdate)
+      |    AS BIGINT)) AS max_d FROM orders)"""
+
+  /** An order's cell `x, y` of the [[orderGridCte]] grid. */
+  private val orderCellSql: String =
+    """least(greatest((o_custkey * 65536) // (mm.max_c + 1), 0),
+      |    65535) AS x,
+      |  least(greatest((CAST(date_diff('day', DATE '1992-01-01',
+      |    o_orderdate) AS BIGINT) * 65536) // (mm.max_d + 1), 0),
+      |    65535) AS y"""
+
+  /** The 32-bit Morton key of the cell (x, y): dim 0 at the even bit
+    * positions, dim 1 at the odd ones. */
+  private val mortonSql: String = (0 until 16).flatMap { bit =>
+    Seq(s"((x // ${1L << bit}) % 2) * ${1L << (2 * bit)}",
+      s"((y // ${1L << bit}) % 2) * ${1L << (2 * bit + 1)}")
+  }.mkString(" + ")
+
+  /** A z-order file's cell bounds, over its rows' (x, y). */
+  private val zBoundsSql: String =
+    """CAST(min(x) AS BIGINT) AS min_cust16,
+      | CAST(max(x) AS BIGINT) AS max_cust16,
+      | CAST(min(y) AS BIGINT) AS min_day16,
+      | CAST(max(y) AS BIGINT) AS max_day16"""
+
   // ---- DuckDB oracles --------------------------------------------------
 
   /** The lineitem→sales mapping as a SQL fragment (SURVEY.md §1). */
@@ -6958,62 +6987,32 @@ private[graft] object OracleSql {
         | CAST(sum(bytes) AS BIGINT) AS bytes,
         | CAST(count(*) AS BIGINT) AS files_merged
         |FROM b GROUP BY 1, 2""",
-    "lake_zorder_plan" -> {
+    "lake_zorder_plan" ->
       // the 2×16-bit Morton interleave unrolled term-by-term (dim 0
       // at even bit positions, dim 1 at odd — zorderValue's layout),
       // bucket = top 6 bits of the 32-bit key; pure integer math,
       // bit-exact
-      val terms = (0 until 16).flatMap { bit =>
-        Seq(s"((x // ${1L << bit}) % 2) * ${1L << (2 * bit)}",
-          s"((y // ${1L << bit}) % 2) * ${1L << (2 * bit + 1)}")
-      }.mkString(" + ")
-      s"""WITH mm AS (SELECT max(o_custkey) AS max_c,
-         |  max(CAST(date_diff('day', DATE '1992-01-01', o_orderdate)
-         |    AS BIGINT)) AS max_d FROM orders),
-         |q AS (SELECT
-         |  least(greatest((o_custkey * 65536) // (mm.max_c + 1), 0),
-         |    65535) AS x,
-         |  least(greatest((CAST(date_diff('day', DATE '1992-01-01',
-         |    o_orderdate) AS BIGINT) * 65536) // (mm.max_d + 1), 0),
-         |    65535) AS y
+      s"""WITH $orderGridCte,
+         |q AS (SELECT $orderCellSql
          | FROM orders, mm),
-         |z AS (SELECT x, y, ($terms) // ${1L << 26} AS file_bucket FROM q)
+         |z AS (SELECT x, y, ($mortonSql) // ${1L << 26} AS file_bucket FROM q)
          |SELECT CAST(file_bucket AS BIGINT) AS file_bucket,
          | CAST(count(*) AS BIGINT) AS n_rows,
-         | CAST(min(x) AS BIGINT) AS min_cust16,
-         | CAST(max(x) AS BIGINT) AS max_cust16,
-         | CAST(min(y) AS BIGINT) AS min_day16,
-         | CAST(max(y) AS BIGINT) AS max_day16
-         |FROM z GROUP BY 1"""
-    },
-    "lake_zorder_apply" -> {
+         | $zBoundsSql
+         |FROM z GROUP BY 1""",
+    "lake_zorder_apply" ->
       // the zorder_plan interleave chain + the per-file byte mass
       // (o_comment's exact char count) — all integer, bit-replayable
-      val terms = (0 until 16).flatMap { bit =>
-        Seq(s"((x // ${1L << bit}) % 2) * ${1L << (2 * bit)}",
-          s"((y // ${1L << bit}) % 2) * ${1L << (2 * bit + 1)}")
-      }.mkString(" + ")
-      s"""WITH mm AS (SELECT max(o_custkey) AS max_c,
-         |  max(CAST(date_diff('day', DATE '1992-01-01', o_orderdate)
-         |    AS BIGINT)) AS max_d FROM orders),
-         |q AS (SELECT
-         |  least(greatest((o_custkey * 65536) // (mm.max_c + 1), 0),
-         |    65535) AS x,
-         |  least(greatest((CAST(date_diff('day', DATE '1992-01-01',
-         |    o_orderdate) AS BIGINT) * 65536) // (mm.max_d + 1), 0),
-         |    65535) AS y,
+      s"""WITH $orderGridCte,
+         |q AS (SELECT $orderCellSql,
          |  CAST(o_orderkey % 1901 + 128 AS BIGINT) AS b
          | FROM orders, mm),
-         |z AS (SELECT x, y, b, ($terms) // ${1L << 26} AS file_id FROM q)
+         |z AS (SELECT x, y, b, ($mortonSql) // ${1L << 26} AS file_id FROM q)
          |SELECT CAST(file_id AS BIGINT) AS file_id,
          | CAST(count(*) AS BIGINT) AS n_rows,
          | CAST(sum(b) AS BIGINT) AS bytes,
-         | CAST(min(x) AS BIGINT) AS min_cust16,
-         | CAST(max(x) AS BIGINT) AS max_cust16,
-         | CAST(min(y) AS BIGINT) AS min_day16,
-         | CAST(max(y) AS BIGINT) AS max_day16
-         |FROM z GROUP BY 1"""
-    },
+         | $zBoundsSql
+         |FROM z GROUP BY 1""",
     "stream_compaction_monitor" ->
       // same manifest, same counters in plain SQL; all exact longs
       s"""WITH $lakeFileCte
@@ -7024,27 +7023,16 @@ private[graft] object OracleSql {
         | sum(CASE WHEN bytes < 300 THEN 1 ELSE 0 END) >= 12
         |  AS compact_now
         |FROM m GROUP BY 1""",
-    "lake_file_skipping" -> {
+    "lake_file_skipping" ->
       // both manifests + the probe workload replayed in integer SQL:
       // the z interleave shared with lake_zorder_plan, the
       // single-sort bucket a plain top-bit prefix of the leading dim,
       // the hit test the same [min,max]-intersects-band predicate
-      val terms = (0 until 16).flatMap { bit =>
-        Seq(s"((x // ${1L << bit}) % 2) * ${1L << (2 * bit)}",
-          s"((y // ${1L << bit}) % 2) * ${1L << (2 * bit + 1)}")
-      }.mkString(" + ")
-      s"""WITH mm AS (SELECT max(o_custkey) AS max_c,
-         |  max(CAST(date_diff('day', DATE '1992-01-01', o_orderdate)
-         |    AS BIGINT)) AS max_d FROM orders),
-         |q AS (SELECT
-         |  least(greatest((o_custkey * 65536) // (mm.max_c + 1), 0),
-         |    65535) AS x,
-         |  least(greatest((CAST(date_diff('day', DATE '1992-01-01',
-         |    o_orderdate) AS BIGINT) * 65536) // (mm.max_d + 1), 0),
-         |    65535) AS y
+      s"""WITH $orderGridCte,
+         |q AS (SELECT $orderCellSql
          | FROM orders, mm),
          |zm AS (SELECT 'zorder' AS layout,
-         |  ($terms) // ${1L << 26} AS file_bucket,
+         |  ($mortonSql) // ${1L << 26} AS file_bucket,
          |  min(y) AS min_day16, max(y) AS max_day16 FROM q GROUP BY 2),
          |sm AS (SELECT 'sorted_cust16' AS layout, x // ${1L << 10}
          |   AS file_bucket,
@@ -7063,8 +7051,7 @@ private[graft] object OracleSql {
          | CAST(h.files_hit AS BIGINT) AS files_hit,
          | CAST(nf.n_files - h.files_hit AS BIGINT)
          |  / CAST(nf.n_files AS BIGINT) AS skip_rate
-         |FROM hits h JOIN nf USING (layout)"""
-    },
+         |FROM hits h JOIN nf USING (layout)""",
     "text_bm25_topk" ->
       // same tokenization + df-capped postings trunk as the RRF
       // lexical side; candidate generation (apx) is restricted to
