@@ -536,6 +536,27 @@ private[graft] object OracleSql {
       | CAST(min(y) AS BIGINT) AS min_day16,
       | CAST(max(y) AS BIGINT) AS max_day16"""
 
+  /** Each scored posting `c` of [[bm25StatsCtes]] that shares a token
+    * with a query doc (doc_id % 100 = 0) as a BM25 term (k1 = 1.2,
+    * b = 0.75): rows (query_id, neighbor_id, tok, term). */
+  private val bm25TermsSql: String =
+    """SELECT q.doc_id AS query_id,
+      |  c.doc_id AS neighbor_id, c.tok,
+      |  ln((cs.n_docs - c.df + 0.5) / (c.df + 0.5) + 1.0) *
+      |   ((c.tf * 2.2) / (c.tf + 1.2 * (0.25 + 0.75 * dl.dl / cs.avgdl)))
+      |   AS term
+      | FROM p q JOIN p c ON c.tok = q.tok AND c.doc_id != q.doc_id
+      | JOIN dl ON dl.doc_id = c.doc_id, cs
+      | WHERE q.doc_id % 100 = 0"""
+
+  /** The sum of a group's BM25 `term`s folded in `tok` order, so that
+    * both engines add them in the same order. */
+  private def bm25FoldSql(tok: String, term: String): String =
+    s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+       |  list_transform(list_sort(list({'tok': $tok, 'term': $term})),
+       |    x -> struct_extract(x, 'term'))),
+       |  (acc, v) -> acc + v)"""
+
   // ---- DuckDB oracles --------------------------------------------------
 
   /** The lineitem→sales mapping as a SQL fragment (SURVEY.md §1). */
@@ -7072,31 +7093,18 @@ private[graft] object OracleSql {
         |    PARTITION BY tok, doc_id % 32
         |    ORDER BY tf DESC, doc_id) AS rc FROM p) c
         | WHERE rc <= 2),
-        |terms AS MATERIALIZED (SELECT q.doc_id AS query_id,
-        |  c.doc_id AS neighbor_id, c.tok,
-        |  ln((cs.n_docs - c.df + 0.5) / (c.df + 0.5) + 1.0) *
-        |   ((c.tf * 2.2) / (c.tf + 1.2 * (0.25 + 0.75 * dl.dl / cs.avgdl)))
-        |   AS term
-        | FROM p q JOIN p c ON c.tok = q.tok AND c.doc_id != q.doc_id
-        | JOIN dl ON dl.doc_id = c.doc_id, cs
-        | WHERE q.doc_id % 100 = 0),
+        |terms AS MATERIALIZED ($bm25TermsSql),
         |apx AS (SELECT query_id, neighbor_id FROM (
         |  SELECT query_id, neighbor_id, row_number() OVER (
         |    PARTITION BY query_id ORDER BY round(s1, 6) DESC,
         |      neighbor_id) AS rn
         |  FROM (SELECT t.query_id, t.neighbor_id,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |      list_transform(list_sort(list({'tok': t.tok, 'term': t.term})),
-        |        x -> struct_extract(x, 'term'))),
-        |      (acc, v) -> acc + v) AS s1
+        |    ${bm25FoldSql("t.tok", "t.term")} AS s1
         |   FROM terms t JOIN champ ch ON ch.doc_id = t.neighbor_id
         |    AND ch.tok = t.tok
         |   GROUP BY 1, 2) g) a WHERE rn <= 50),
         |s AS (SELECT query_id, neighbor_id,
-        |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |    list_transform(list_sort(list({'tok': tok, 'term': term})),
-        |      x -> struct_extract(x, 'term'))),
-        |    (acc, v) -> acc + v) AS bm25
+        |  ${bm25FoldSql("tok", "term")} AS bm25
         | FROM terms JOIN apx USING (query_id, neighbor_id)
         | GROUP BY 1, 2)
         |SELECT query_id, neighbor_id, bm25 FROM s
@@ -7152,19 +7160,9 @@ private[graft] object OracleSql {
       // output must equal the brute-force fold over every sharing
       // pair — the strongest possible oracle for a pruned plan
       s"""WITH $bm25StatsCtes,
-        |terms AS (SELECT q.doc_id AS query_id,
-        |  c.doc_id AS neighbor_id, c.tok,
-        |  ln((cs.n_docs - c.df + 0.5) / (c.df + 0.5) + 1.0) *
-        |   ((c.tf * 2.2) / (c.tf + 1.2 * (0.25 + 0.75 * dl.dl / cs.avgdl)))
-        |   AS term
-        | FROM p q JOIN p c ON c.tok = q.tok AND c.doc_id != q.doc_id
-        | JOIN dl ON dl.doc_id = c.doc_id, cs
-        | WHERE q.doc_id % 100 = 0),
+        |terms AS ($bm25TermsSql),
         |s AS (SELECT query_id, neighbor_id,
-        |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |    list_transform(list_sort(list({'tok': tok, 'term': term})),
-        |      x -> struct_extract(x, 'term'))),
-        |    (acc, v) -> acc + v) AS bm25
+        |  ${bm25FoldSql("tok", "term")} AS bm25
         | FROM terms GROUP BY 1, 2)
         |SELECT query_id, neighbor_id, bm25 FROM s
         |QUALIFY row_number() OVER (PARTITION BY query_id
