@@ -557,6 +557,16 @@ private[graft] object OracleSql {
        |    x -> struct_extract(x, 'term'))),
        |  (acc, v) -> acc + v)"""
 
+  /** Every pair of a query embedding (vec_id % `mod` = 0) and another
+    * embedding, with their exact cosine: rows (query_id, neighbor_id,
+    * cosine). */
+  private def queryPairsSql(mod: Int = 100): String =
+    s"""SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+       |  list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
+       |    CAST(c.embedding AS DOUBLE[])) AS cosine
+       | FROM embeddings q JOIN embeddings c ON c.vec_id != q.vec_id
+       | WHERE q.vec_id % $mod = 0"""
+
   // ---- DuckDB oracles --------------------------------------------------
 
   /** The lineitem→sales mapping as a SQL fragment (SURVEY.md §1). */
@@ -3477,11 +3487,7 @@ private[graft] object OracleSql {
         |FROM dev d JOIN mad USING (event_type)
         |WHERE mad.mad > 0 AND d.abs_dev > 3.0 * mad.mad""",
     "ann_range_search" ->
-      """SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        | list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-        |   CAST(c.embedding AS DOUBLE[])) AS cosine
-        |FROM embeddings q JOIN embeddings c ON c.vec_id != q.vec_id
-        |WHERE q.vec_id % 100 = 0
+      s"""${queryPairsSql()}
         | AND list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
         |   CAST(c.embedding AS DOUBLE[])) >= 0.2""",
     "text_repetition" ->
@@ -4117,12 +4123,8 @@ private[graft] object OracleSql {
       // DOUBLE[] casts: DuckDB accumulates FLOAT[] cosines in single
       // precision, which flips near-boundary ranks vs graft's
       // double-accumulating kernel
-      """SELECT query_id, neighbor_id, cosine FROM (
-        | SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |  list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-        |    CAST(c.embedding AS DOUBLE[])) AS cosine
-        | FROM embeddings q JOIN embeddings c ON c.vec_id != q.vec_id
-        | WHERE q.vec_id % 100 = 0) s
+      s"""SELECT query_id, neighbor_id, cosine FROM (
+        | ${queryPairsSql()}) s
         |QUALIFY row_number() OVER (PARTITION BY query_id
         |  ORDER BY cosine DESC, neighbor_id) <= 10""",
     "ann_matryoshka_topk" ->
@@ -4209,11 +4211,7 @@ private[graft] object OracleSql {
           s" relevance, mmr_score FROM p$s").mkString(" UNION ALL ")
       s"""WITH pool AS MATERIALIZED (SELECT query_id, neighbor_id, cosine AS relevance
          | FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |   list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-         |     CAST(c.embedding AS DOUBLE[])) AS cosine
-         |  FROM embeddings q JOIN embeddings c ON c.vec_id != q.vec_id
-         |  WHERE q.vec_id % 100 = 0) s
+         |  ${queryPairsSql()}) s
          | QUALIFY row_number() OVER (PARTITION BY query_id
          |  ORDER BY cosine DESC, neighbor_id) <= 50),
          |sim AS MATERIALIZED (SELECT a.query_id, a.neighbor_id AS id_a,
@@ -4261,8 +4259,8 @@ private[graft] object OracleSql {
       // CAST(1.0 AS DOUBLE)/(60+rank) per list, summed as a pair add
       // (commutative, order-free) — rank ties break by neighbor id in
       // every window on both engines
-      """WITH t AS (SELECT doc_id, unnest(list_distinct(
-        |  list_filter(regexp_split_to_array(text, '\s+'), x -> x <> ''))) AS tok
+      s"""WITH t AS (SELECT doc_id, unnest(list_distinct(
+        |  list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> ''))) AS tok
         | FROM documents),
         |r AS (SELECT tok FROM t GROUP BY tok
         |  HAVING count(*) BETWEEN 2 AND 64),
@@ -4279,11 +4277,7 @@ private[graft] object OracleSql {
         |  SELECT query_id, neighbor_id, row_number() OVER (
         |    PARTITION BY query_id ORDER BY cosine DESC, neighbor_id)
         |    AS rank_d FROM (
-        |   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-        |      CAST(c.embedding AS DOUBLE[])) AS cosine
-        |   FROM embeddings q JOIN embeddings c ON c.vec_id != q.vec_id
-        |   WHERE q.vec_id % 100 = 0) s) x WHERE rank_d <= 20),
+        |   ${queryPairsSql()}) s) x WHERE rank_d <= 20),
         |fused AS (SELECT coalesce(d.query_id, l.query_id) AS query_id,
         |  coalesce(d.neighbor_id, l.neighbor_id) AS neighbor_id,
         |  coalesce(CAST(1.0 AS DOUBLE) / (60 + d.rank_d), CAST(0 AS DOUBLE))
@@ -4323,12 +4317,8 @@ private[graft] object OracleSql {
     "ann_filtered_topk" ->
       // pre-filter semantics: the predicate restricts the corpus
       // BEFORE ranking, so this is the true top-k of the eligible set
-      """SELECT query_id, neighbor_id, cosine FROM (
-        | SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |  list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-        |    CAST(c.embedding AS DOUBLE[])) AS cosine
-        | FROM embeddings q JOIN embeddings c ON c.vec_id != q.vec_id
-        | WHERE q.vec_id % 100 = 0 AND c.label % 3 = 0) s
+      s"""SELECT query_id, neighbor_id, cosine FROM (
+        | ${queryPairsSql()} AND c.label % 3 = 0) s
         |QUALIFY row_number() OVER (PARTITION BY query_id
         |  ORDER BY cosine DESC, neighbor_id) <= 10""",
     "mm_near_dup_blobs" ->
@@ -4404,13 +4394,9 @@ private[graft] object OracleSql {
     "ann_knn_classify" ->
       // exact top-10 neighbors, majority label (ties → smaller
       // label), leave-one-out correctness vs the query's own label
-      """WITH nn AS (
+      s"""WITH nn AS (
         | SELECT query_id, neighbor_id FROM (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |   list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-        |     CAST(c.embedding AS DOUBLE[])) AS cosine
-        |  FROM embeddings q JOIN embeddings c ON c.vec_id != q.vec_id
-        |  WHERE q.vec_id % 20 = 0) s
+        |  ${queryPairsSql(20)}) s
         | QUALIFY row_number() OVER (PARTITION BY query_id
         |   ORDER BY cosine DESC, neighbor_id) <= 10),
         |votes AS (SELECT nn.query_id, c.label AS n_label,
