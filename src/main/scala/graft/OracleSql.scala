@@ -121,6 +121,15 @@ private[graft] object OracleSql {
        | WHERE n_tokens >= 20 AND n_tokens <= 100000 AND quality_score >= $minScore),
        |${curateDedupCtes(benchMod)}"""
 
+  /** `cur(doc_id, source)`: the documents that [[curateDedupCtes]]
+    * keeps, each the least doc_id of its text, off the benchmark slice
+    * and not contaminated. */
+  private def curCte(benchMod: Int): String =
+    s"""cur AS (SELECT d.doc_id, d.source FROM documents d
+       | WHERE d.doc_id IN (SELECT doc_id FROM dd)
+       |  AND d.doc_id % $benchMod <> 0
+       |  AND d.doc_id NOT IN (SELECT doc_id FROM cont))"""
+
   /** `name(id_a, id_b)`: every id pair inside one row of
     * `bucket(ids)`, each bucket capped at its first 64 ids. */
   private def bucketPairsCte(name: String): String =
@@ -566,6 +575,46 @@ private[graft] object OracleSql {
        |    CAST(c.embedding AS DOUBLE[])) AS cosine
        | FROM embeddings q JOIN embeddings c ON c.vec_id != q.vec_id
        | WHERE q.vec_id % $mod = 0"""
+
+  /** The md5 coin of `a.doc_id` under `salt` falls below the row's
+    * sampling rate `r.rate`: its first 8 hex digits against the rate
+    * scaled to 2^32, every row kept at a rate of 1 or more. */
+  private def md5BelowRateSql(a: String, salt: String): String =
+    s"""substring(md5(CAST($a.doc_id AS VARCHAR) || ':$salt'), 1, 8) <
+       | CASE WHEN r.rate >= 1.0 THEN 'g'
+       |  ELSE printf('%08x', CAST(floor(r.rate * 4294967296.0) AS BIGINT)) END"""
+
+  /** The rows of `src(doc_id, source)`, aliased `a`, sampled at their
+    * source's rate `r(source, rate)` by [[md5BelowRateSql]]. */
+  private def rateSampleSql(src: String, a: String, salt: String): String =
+    s"""SELECT $a.doc_id, $a.source FROM $src $a JOIN r ON $a.source = r.source
+       |WHERE ${md5BelowRateSql(a, salt)}"""
+
+  /** The mixture sample of `src(doc_id, source)`: src0 weighted 0.5 and
+    * src1, src2 0.25 each, each rate the largest that the scarcest
+    * source allows. */
+  private def mixtureSampleSql(src: String, a: String): String =
+    s"""cnt AS (SELECT source, count(*) AS n,
+       |  CASE source WHEN 'src0' THEN CAST(0.5 AS DOUBLE)
+       |   ELSE CAST(0.25 AS DOUBLE) END AS p
+       | FROM $src WHERE source IN ('src0', 'src1', 'src2')
+       | GROUP BY source),
+       |tot AS (SELECT min(n / p) AS total FROM cnt),
+       |r AS (SELECT source,
+       |  least(p * (SELECT total FROM tot) / n, CAST(1 AS DOUBLE)) AS rate
+       | FROM cnt)
+       |${rateSampleSql(src, a, "m42")}"""
+
+  /** The τ = 1/2 temperature sample of `src(doc_id, source)`: each
+    * source at rate sqrt(n_min / n). */
+  private def temperatureSampleSql(src: String, a: String): String =
+    s"""cnt AS (SELECT source, count(*) AS n FROM $src
+       | WHERE source IS NOT NULL GROUP BY source),
+       |m AS (SELECT min(n) AS nmin FROM cnt),
+       |r AS (SELECT source,
+       |  sqrt(CAST((SELECT nmin FROM m) AS DOUBLE) / CAST(n AS DOUBLE)) AS rate
+       | FROM cnt)
+       |${rateSampleSql(src, a, "t42")}"""
 
   // ---- DuckDB oracles --------------------------------------------------
 
@@ -4248,10 +4297,7 @@ private[graft] object OracleSql {
         |  sqrt(CAST((SELECT nmin FROM m) AS DOUBLE) / CAST(n AS DOUBLE))
         |   AS rate FROM cnt)
         |SELECT c.doc_id, c.cell FROM cl c JOIN r USING (cell)
-        |WHERE substring(md5(CAST(c.doc_id AS VARCHAR) || ':t42'), 1, 8) <
-        | CASE WHEN r.rate >= 1.0 THEN 'g'
-        |  ELSE printf('%08x', CAST(floor(r.rate * 4294967296.0) AS BIGINT))
-        |  END""",
+        |WHERE ${md5BelowRateSql("c", "t42")}""",
     "ann_rrf_hybrid" ->
       // both retrievers replayed in full: dense ranks from the same
       // DOUBLE[] cosine as ann_bruteforce_topk; lexical ranks from
@@ -5172,10 +5218,7 @@ private[graft] object OracleSql {
         |q AS (SELECT doc_id FROM sc
         | WHERE n_tokens >= 20 AND n_tokens <= 100000 AND quality_score >= 0.2),
         |${curateDedupCtes(97)},
-        |cur AS (SELECT d.doc_id, d.source FROM documents d
-        | WHERE d.doc_id IN (SELECT doc_id FROM dd)
-        |  AND d.doc_id % 97 <> 0
-        |  AND d.doc_id NOT IN (SELECT doc_id FROM cont))
+        |${curCte(97)}
         |SELECT source, rank_in_source, doc_id, quality_score FROM (
         | SELECT cur.source, cur.doc_id, sc.quality_score,
         |  CAST(row_number() OVER (PARTITION BY cur.source
@@ -5272,68 +5315,20 @@ private[graft] object OracleSql {
       // curate's survivor set (same CTE chain as docs_curate), then
       // the mixture rate derivation REPLAYED OVER THE CURATED COUNTS
       s"""WITH ${curateCtes("0.05", 997)},
-        |cur AS (SELECT d.doc_id, d.source FROM documents d
-        | WHERE d.doc_id IN (SELECT doc_id FROM dd)
-        |  AND d.doc_id % 997 <> 0
-        |  AND d.doc_id NOT IN (SELECT doc_id FROM cont)),
-        |cnt AS (SELECT source, count(*) AS n,
-        |  CASE source WHEN 'src0' THEN CAST(0.5 AS DOUBLE)
-        |   ELSE CAST(0.25 AS DOUBLE) END AS p
-        | FROM cur WHERE source IN ('src0', 'src1', 'src2')
-        | GROUP BY source),
-        |tot AS (SELECT min(n / p) AS total FROM cnt),
-        |r AS (SELECT source,
-        |  least(p * (SELECT total FROM tot) / n, CAST(1 AS DOUBLE)) AS rate
-        | FROM cnt)
-        |SELECT c.doc_id, c.source FROM cur c JOIN r ON c.source = r.source
-        |WHERE substring(md5(CAST(c.doc_id AS VARCHAR) || ':m42'), 1, 8) <
-        | CASE WHEN r.rate >= 1.0 THEN 'g'
-        |  ELSE printf('%08x', CAST(floor(r.rate * 4294967296.0) AS BIGINT)) END""",
+        |${curCte(997)},
+        |${mixtureSampleSql("cur", "c")}""",
     "docs_curate_temperature" ->
       // curate's survivor set (same CTE chain as docs_curate_mixture),
       // then the τ=1/2 temperature rate derivation REPLAYED OVER THE
       // CURATED COUNTS — sqrt(n_min/n) is a single correctly-rounded
       // IEEE op, so the rates (and the selected set) are engine-exact
       s"""WITH ${curateCtes("0.05", 997)},
-        |cur AS (SELECT d.doc_id, d.source FROM documents d
-        | WHERE d.doc_id IN (SELECT doc_id FROM dd)
-        |  AND d.doc_id % 997 <> 0
-        |  AND d.doc_id NOT IN (SELECT doc_id FROM cont)),
-        |cnt AS (SELECT source, count(*) AS n FROM cur
-        | WHERE source IS NOT NULL GROUP BY source),
-        |m AS (SELECT min(n) AS nmin FROM cnt),
-        |r AS (SELECT source,
-        |  sqrt(CAST((SELECT nmin FROM m) AS DOUBLE) / CAST(n AS DOUBLE)) AS rate
-        | FROM cnt)
-        |SELECT c.doc_id, c.source FROM cur c JOIN r ON c.source = r.source
-        |WHERE substring(md5(CAST(c.doc_id AS VARCHAR) || ':t42'), 1, 8) <
-        | CASE WHEN r.rate >= 1.0 THEN 'g'
-        |  ELSE printf('%08x', CAST(floor(r.rate * 4294967296.0) AS BIGINT)) END""",
+        |${curCte(997)},
+        |${temperatureSampleSql("cur", "c")}""",
     "sample_mixture" ->
-      """WITH cnt AS (SELECT source, count(*) AS n,
-        |  CASE source WHEN 'src0' THEN CAST(0.5 AS DOUBLE)
-        |   ELSE CAST(0.25 AS DOUBLE) END AS p
-        | FROM documents WHERE source IN ('src0', 'src1', 'src2')
-        | GROUP BY source),
-        |tot AS (SELECT min(n / p) AS total FROM cnt),
-        |r AS (SELECT source,
-        |  least(p * (SELECT total FROM tot) / n, CAST(1 AS DOUBLE)) AS rate
-        | FROM cnt)
-        |SELECT d.doc_id, d.source FROM documents d JOIN r ON d.source = r.source
-        |WHERE substring(md5(CAST(d.doc_id AS VARCHAR) || ':m42'), 1, 8) <
-        | CASE WHEN r.rate >= 1.0 THEN 'g'
-        |  ELSE printf('%08x', CAST(floor(r.rate * 4294967296.0) AS BIGINT)) END""",
+      s"""WITH ${mixtureSampleSql("documents", "d")}""",
     "sample_temperature" ->
-      """WITH cnt AS (SELECT source, count(*) AS n FROM documents
-        | WHERE source IS NOT NULL GROUP BY source),
-        |m AS (SELECT min(n) AS nmin FROM cnt),
-        |r AS (SELECT source,
-        |  sqrt(CAST((SELECT nmin FROM m) AS DOUBLE) / CAST(n AS DOUBLE)) AS rate
-        | FROM cnt)
-        |SELECT d.doc_id, d.source FROM documents d JOIN r ON d.source = r.source
-        |WHERE substring(md5(CAST(d.doc_id AS VARCHAR) || ':t42'), 1, 8) <
-        | CASE WHEN r.rate >= 1.0 THEN 'g'
-        |  ELSE printf('%08x', CAST(floor(r.rate * 4294967296.0) AS BIGINT)) END""",
+      s"""WITH ${temperatureSampleSql("documents", "d")}""",
     "text_chunk_dedup" ->
       s"""WITH ${toksCteAs("t", "doc_id")},
         |c AS (SELECT doc_id, unnest(CASE WHEN len(toks) >= 8
