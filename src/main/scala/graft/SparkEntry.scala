@@ -475,7 +475,8 @@ object SparkEntry {
 
   // ---- the inventory ---------------------------------------------------
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Every key's Spark query, built once per JVM. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // §2.A retail ETL
     "etl_extract_typed" -> ((s, dir) => extractTyped(s, dir)),
     "etl_union_sources" -> ((s, dir) => unionSources(s, dir)),

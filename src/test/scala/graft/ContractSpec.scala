@@ -33,9 +33,22 @@ class ContractSpec extends AnyFunSuite {
     SparkEntry.oracleSql.foreach { case (k, sql) =>
       assert(sql.trim.nonEmpty, s"$k: empty oracle")
       assert(!sql.contains("\n"), s"$k: embedded newline breaks the one-line JSON dump")
+      assert(sql == OracleSql.flat(sql), s"$k: oracle is not shipped flat")
     }
     assert(SparkEntry.oracleSql eq SparkEntry.oracleSql,
       "the oracle map is built once per JVM, not on every call")
+    assert(SparkEntry.queries eq SparkEntry.queries,
+      "the query map is built once per JVM, not on every call")
+  }
+
+  test("flat collapses whitespace outside quoted SQL text and keeps quoted text") {
+    assert(OracleSql.flat("SELECT  a,\n\t b\n  FROM t") == "SELECT a, b FROM t")
+    assert(OracleSql.flat("SELECT x\n       |  FROM t") == "SELECT x FROM t",
+      "the margin is stripped first")
+    assert(OracleSql.flat("SELECT '  ' || x") == "SELECT '  ' || x")
+    assert(OracleSql.flat("SELECT 'a''  b'  AS  y") == "SELECT 'a''  b' AS y")
+    assert(OracleSql.flat("SELECT \"x  y\"  FROM  t") == "SELECT \"x  y\" FROM t")
+    assert(OracleSql.flat(" \n SELECT 1 \n ") == "SELECT 1")
   }
 
   test("rows-only queries are down to ZERO (r17)") {
