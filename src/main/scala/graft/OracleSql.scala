@@ -1,7 +1,5 @@
 package graft
 
-import scala.util.matching.Regex
-
 /** The DuckDB oracle: one SQL string per `SparkEntry.queries` key,
   * written in DuckDB's dialect against the raw testdata tables. A key
   * is correct when its rows match its oracle's. The SQL is written
@@ -2089,16 +2087,28 @@ private[graft] object OracleSql {
        | WHERE a.vec_id != p.query_id)
        |${exactTop10Sql("cand", "c")}"""
 
-  /** A quoted SQL literal ('…', whose '' escape reads as two adjacent
-    * literals) or identifier ("…"), else a run of whitespace. */
-  private val quotedOrSpace: Regex = """('[^']*'|"[^"]*")|\s+""".r
-
   /** An oracle as it ships, on one line: the margins stripped, each
     * run of whitespace outside quoted text one space, the ends
-    * trimmed. Quoted text is kept byte for byte. */
-  private[graft] def flat(sql: String): String =
-    quotedOrSpace.replaceAllIn(sql.stripMargin,
-      m => Regex.quoteReplacement(Option(m.group(1)).getOrElse(" "))).trim
+    * trimmed. Quoted text, a '…' literal (whose '' escape reads as two
+    * adjacent literals) or a "…" identifier, is kept byte for byte. */
+  private[graft] def flat(sql: String): String = {
+    val out = new StringBuilder(sql.length)
+    var quote = ' ' // the open quote, or a space outside quoted text
+    var gap = false // whitespace since the last character kept
+    for (c <- sql.stripMargin) {
+      if (quote != ' ') {
+        out += c
+        if (c == quote) quote = ' '
+      } else if (c.isWhitespace) gap = true
+      else {
+        if (gap && out.nonEmpty) out += ' '
+        gap = false
+        out += c
+        if (c == '\'' || c == '"') quote = c
+      }
+    }
+    out.result()
+  }
 
   /** Every key's oracle, built once per JVM and shipped [[flat]]. */
   lazy val oracleSql: Map[String, String] = {
