@@ -688,7 +688,7 @@ private[graft] object OracleSql {
     * (appended after [[linedCtes]]): ends in `rep_profile` with
     * the text_repetition_profile output columns. */
   private val gopherProfileCtes: String =
-    ("""rp AS (SELECT doc_id, toks, lines, paras,
+    """rp AS (SELECT doc_id, toks, lines, paras,
         |  length(array_to_string(toks, ' ')) AS tok_chars,
         |  len(lines) AS n_lines, len(paras) AS n_paras,
         |  coalesce(list_sum(list_transform(lines, s ->
@@ -745,7 +745,6 @@ private[graft] object OracleSql {
         |   d -> len(list_filter(g4, x -> x = d)) = maxc4))) AS BIGINT) / tok_chars
         |  ELSE 0.0 END AS top4gram_char_fraction
         |FROM mx)"""
-      )
 
   /** Duplicated-n-gram char-coverage (the dup-mass half) as a
     * composable CTE chain (appended after [[linedCtes]]): ends in
@@ -768,14 +767,13 @@ private[graft] object OracleSql {
            |  / CAST(tok_chars AS BIGINT)
            | ELSE 0.0 END AS dup${n}gram_char_fraction""")
         .mkString(", ")
-    (s"""mb AS (SELECT doc_id, toks,
+    s"""mb AS (SELECT doc_id, toks,
          |  coalesce(list_sum(list_transform(toks, t -> length(t))), 0)
          |   AS tok_chars FROM t2),
          |mg AS (SELECT doc_id, toks, tok_chars, $gs FROM mb),
          |md AS (SELECT doc_id, toks, tok_chars, $ds FROM mg)
        |, dng AS (SELECT doc_id, CAST(tok_chars AS BIGINT) AS tok_chars, $fr
          |FROM md)"""
-     )
   }
 
   /** Shared lined-corpus CTE chain (DuckDB dialect): replays the
