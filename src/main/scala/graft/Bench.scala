@@ -439,19 +439,6 @@ object Bench {
       else growthNote(total, primeSec, refTotal, refPrime,
         sys.env.get("SPARK_GRAFT_GROWTH_NOTE"), noisy)
     growth.foreach(g => System.err.println(s"[bench] GROWTH: $g"))
-    // JSON string escape incl. ALL control chars (r18 review): a tab
-    // or CR in SPARK_GRAFT_GROWTH_NOTE would otherwise make the
-    // contract line invalid JSON — and the next round's band-ref
-    // load silently drops every band when the artifact won't parse
-    def jstr(s: String) = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // mid-run noisy verdict: any trail sample > 2× the committed
     // reference — same bar as the startup stamp, applied to the
     // whole run's duration instead of its first second
@@ -471,8 +458,8 @@ object Bench {
       s""""spin_ref_ms":${refSpinMs.map(fmt).getOrElse("null")},""" +
       s""""noisy":$noisy,""" +
       s""""spin_trail":$spinTrailJson,"noisy_mid":$noisyMid,""" +
-      s""""prime_warm":${if (primeWarmed) jstr(primeWarmDir) else "null"},""" +
-      s""""growth_note":${growth.map(jstr).getOrElse("null")},""" +
+      s""""prime_warm":${if (primeWarmed) Verify.jsonString(primeWarmDir) else "null"},""" +
+      s""""growth_note":${growth.map(Verify.jsonString).getOrElse("null")},""" +
       s""""sf":"$sfDir"}"""
     // best-effort: an unwritable detail path (read-only target/, bad
     // SPARK_GRAFT_BENCH_OUT) must not kill the run after all timing

@@ -24,6 +24,71 @@ private[graft] object OracleSql {
        | * (0.3 + 0.7 * least(1.0, (len(list_filter(toks, x -> x IN ('the','a','and','of','to','in','is','it','for','on'))) / greatest(len(toks), 1)) * 5.0))
        | AS quality_score"""
 
+  /** The loser of each verified near-dup pair `j(id_a, id_b)` by the
+    * quality score `sc(doc_id, quality_score)`: the lower score drops,
+    * a tie drops the higher id. */
+  private val losersCte: String =
+    """losers AS (SELECT DISTINCT
+      |  CASE WHEN qa.quality_score < qb.quality_score THEN j.id_a
+      |       WHEN qb.quality_score < qa.quality_score THEN j.id_b
+      |       ELSE greatest(j.id_a, j.id_b) END AS doc_id
+      | FROM j JOIN sc qa ON qa.doc_id = j.id_a
+      |  JOIN sc qb ON qb.doc_id = j.id_b)"""
+
+  /** The 90/5/5 split of `doc_id` by its salted md5 prefix
+    * (`DataSplit.assignPortable`), `AS split`. */
+  private val md5SplitSql: String =
+    """CASE WHEN substring(md5(CAST(doc_id AS VARCHAR) || ':split42'), 1, 8)
+      |        < 'e6666666' THEN 'train'
+      |      WHEN substring(md5(CAST(doc_id AS VARCHAR) || ':split42'), 1, 8)
+      |        < 'f3333333' THEN 'val'
+      |      ELSE 'test' END AS split"""
+
+  /** The select list of a column-profile calibration over a
+    * subquery of per-column (col_name, n_rows, n_nulls, n_distinct,
+    * apx) rows, up to its opening parenthesis. */
+  private val dqCalibrationHead: String =
+    """SELECT col_name, n_rows, n_nulls, n_distinct,
+      | round(n_nulls * 1.0 / n_rows, 6) AS null_frac,
+      | abs(apx - n_distinct) <= greatest(2, (n_distinct * 5) // 100)
+      |  AS distinct_within_tol
+      |FROM ("""
+
+  /** `daily(day, x)`: lineitem revenue per ship day, in exact cents
+    * times percent (a HUGEINT). */
+  private val dailyRevenueCte: String =
+    """daily AS (SELECT CAST(l_shipdate AS DATE) AS day,
+      | CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
+      |   * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS HUGEINT)
+      |  AS x
+      | FROM lineitem GROUP BY 1)"""
+
+  /** The signed 16-bit sample in bits 8..23 of the hash `h`. */
+  private val sample16Sql: String =
+    """CASE WHEN (h // 256) % 65536 >= 32768
+      |   THEN (h // 256) % 65536 - 65536
+      |   ELSE (h // 256) % 65536 END"""
+
+  /** Per doc of `v(doc_id, smp)`: the mono decode statistics at
+    * `rate`. */
+  private def monoSampleStats(rate: Int): String =
+    s"""SELECT doc_id, CAST($rate AS INTEGER) AS sample_rate,
+       | CAST(1 AS INTEGER) AS channels,
+       | CAST(count(*) AS BIGINT) AS n_samples,
+       | CAST(sum(smp) AS BIGINT) AS sum_samples,
+       | CAST(sum(abs(smp)) AS BIGINT) AS sum_abs
+       |FROM v GROUP BY 1"""
+
+  /** One grain claim's row over the key multiplicities `g(m)`. */
+  private def grainStatsSql(grain: String, g: String): String =
+    s"""$grain AS grain,
+       |  CAST(sum(m) AS BIGINT) AS n_rows, count(*) AS n_keys,
+       |  CAST(sum(CASE WHEN m > 1 THEN 1 ELSE 0 END) AS BIGINT)
+       |   AS n_dup_keys,
+       |  CAST(sum(CASE WHEN m > 1 THEN m - 1 ELSE 0 END) AS BIGINT)
+       |   AS n_dup_rows,
+       |  max(m) AS max_multiplicity FROM $g"""
+
   /** Min-label connected components of the undirected edges
     * `pairs(id_a, id_b)` over the nodes `nodes(id)`: `e` holds both
     * edge directions, `reach` is the recursive closure and `lab(id,
@@ -1687,9 +1752,7 @@ private[graft] object OracleSql {
        |   unnest(generate_series(0, 63)) AS i) g),
        |hh AS (SELECT doc_id, i, $ref AS h FROM base, $frags),
        |v AS (SELECT doc_id, i,
-       |  CAST(CASE WHEN (h // 256) % 65536 >= 32768
-       |   THEN (h // 256) % 65536 - 65536
-       |   ELSE (h // 256) % 65536 END AS BIGINT) AS smp0 FROM hh),
+       |  CAST($sample16Sql AS BIGINT) AS smp0 FROM hh),
        |vv AS (SELECT doc_id, i,
        |  CASE WHEN doc_id % 20 = 1 THEN (smp0 - (smp0 % 2)) // 2
        |   ELSE smp0 END AS smp FROM v),
@@ -1758,9 +1821,7 @@ private[graft] object OracleSql {
        |   WHEN d.doc_id % 20 = 11 THEN 229 ELSE 192 END),
        |whh AS (SELECT doc_id, n, j, $ref AS h FROM wbase, $frags),
        |wv AS MATERIALIZED (SELECT doc_id, n, j,
-       |  CAST(CASE WHEN (h // 256) % 65536 >= 32768
-       |   THEN (h // 256) % 65536 - 65536
-       |   ELSE (h // 256) % 65536 END AS BIGINT) AS smp FROM whh),
+       |  CAST($sample16Sql AS BIGINT) AS smp FROM whh),
        |wdb AS MATERIALIZED (SELECT a.doc_id, a.n, a.j AS i,
        |  CASE WHEN b.smp > a.smp THEN 1 ELSE 0 END AS bit
        | FROM wv a JOIN wv b ON b.doc_id = a.doc_id AND b.j = a.j + 1),
@@ -2248,12 +2309,7 @@ private[graft] object OracleSql {
         | WHERE CAST(len(list_intersect(ga.grams, gb.grams)) AS DOUBLE)
         |  / (len(ga.grams) + len(gb.grams)
         |     - len(list_intersect(ga.grams, gb.grams))) >= 0.5),
-        |losers AS (SELECT DISTINCT
-        |  CASE WHEN qa.quality_score < qb.quality_score THEN j.id_a
-        |       WHEN qb.quality_score < qa.quality_score THEN j.id_b
-        |       ELSE greatest(j.id_a, j.id_b) END AS doc_id
-        | FROM j JOIN sc qa ON qa.doc_id = j.id_a
-        |  JOIN sc qb ON qb.doc_id = j.id_b),
+        |$losersCte,
         |sup AS (SELECT cur.doc_id, cur.source FROM cur
         | WHERE cur.doc_id NOT IN (SELECT doc_id FROM losers)),
         |capped AS (SELECT doc_id, source FROM (
@@ -2343,22 +2399,10 @@ private[graft] object OracleSql {
       // one hash aggregate per grain claim, collapsed to one row
       s"""WITH s AS (${salesSql("")}),
          |g1 AS (SELECT sale_id, count(*) AS m FROM s GROUP BY 1),
-         |r1 AS (SELECT 'sale_id' AS grain,
-         |  CAST(sum(m) AS BIGINT) AS n_rows, count(*) AS n_keys,
-         |  CAST(sum(CASE WHEN m > 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |   AS n_dup_keys,
-         |  CAST(sum(CASE WHEN m > 1 THEN m - 1 ELSE 0 END) AS BIGINT)
-         |   AS n_dup_rows,
-         |  max(m) AS max_multiplicity FROM g1),
+         |r1 AS (SELECT ${grainStatsSql("'sale_id'", "g1")}),
          |g2 AS (SELECT product_id, sale_date, count(*) AS m FROM s
          |  GROUP BY 1, 2),
-         |r2 AS (SELECT 'product_day' AS grain,
-         |  CAST(sum(m) AS BIGINT) AS n_rows, count(*) AS n_keys,
-         |  CAST(sum(CASE WHEN m > 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |   AS n_dup_keys,
-         |  CAST(sum(CASE WHEN m > 1 THEN m - 1 ELSE 0 END) AS BIGINT)
-         |   AS n_dup_rows,
-         |  max(m) AS max_multiplicity FROM g2)
+         |r2 AS (SELECT ${grainStatsSql("'product_day'", "g2")})
          |SELECT *, n_dup_keys = 0 AS grain_ok FROM r1
          |UNION ALL SELECT *, n_dup_keys = 0 AS grain_ok FROM r2""",
     "etl_freshness" ->
@@ -2847,11 +2891,7 @@ private[graft] object OracleSql {
       // Pearson r per calendar lag from exact integer sum identities
       // (HUGEINT — cents² crosses 2^63); identical expression shape
       // both engines: ints → double casts → one quotient → round
-      """WITH daily AS (SELECT CAST(l_shipdate AS DATE) AS day,
-        | CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-        |   * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS HUGEINT)
-        |  AS x
-        | FROM lineitem GROUP BY 1),
+      s"""WITH $dailyRevenueCte,
         |d AS (SELECT date_diff('day', DATE '1970-01-01', day) AS ed, x
         | FROM daily),
         |l AS (SELECT CAST(range AS BIGINT) AS lag FROM range(1, 8)),
@@ -3409,11 +3449,7 @@ private[graft] object OracleSql {
     "stream_dq_profile" ->
       // calibration form (r16): exact per-column anchors + DuckDB's
       // own approx_count_distinct within the same integer tolerance
-      """SELECT col_name, n_rows, n_nulls, n_distinct,
-        | round(n_nulls * 1.0 / n_rows, 6) AS null_frac,
-        | abs(apx - n_distinct) <= greatest(2, (n_distinct * 5) // 100)
-        |  AS distinct_within_tol
-        |FROM (
+      s"""$dqCalibrationHead
         | SELECT 'user_id' AS col_name, count(*) AS n_rows,
         |  CAST(sum(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END)
         |   AS BIGINT) AS n_nulls,
@@ -4812,32 +4848,18 @@ private[graft] object OracleSql {
       // trip must return exactly these integers
       s"""WITH ${sampleHashCte("sm", "doc_id")},
         |v AS (SELECT doc_id,
-        |  CASE WHEN (h // 256) % 65536 >= 32768
-        |   THEN (h // 256) % 65536 - 65536
-        |   ELSE (h // 256) % 65536 END AS smp
+        |  $sample16Sql AS smp
         | FROM sm)
-        |SELECT doc_id, CAST(8000 AS INTEGER) AS sample_rate,
-        | CAST(1 AS INTEGER) AS channels,
-        | CAST(count(*) AS BIGINT) AS n_samples,
-        | CAST(sum(smp) AS BIGINT) AS sum_samples,
-        | CAST(sum(abs(smp)) AS BIGINT) AS sum_abs
-        |FROM v GROUP BY 1""",
+        |${monoSampleStats(8000)}""",
     "mm_audio_decimate" ->
       // the resample replayed from the sample recipe: keep i % 2 = 0,
       // half the rate — the Spark side's decode→decimate→encode→
       // decode chain must return exactly these integers
       s"""WITH ${sampleHashCte("sm", "doc_id, i")},
         |v AS (SELECT doc_id,
-        |  CASE WHEN (h // 256) % 65536 >= 32768
-        |   THEN (h // 256) % 65536 - 65536
-        |   ELSE (h // 256) % 65536 END AS smp
+        |  $sample16Sql AS smp
         | FROM sm WHERE i % 2 = 0)
-        |SELECT doc_id, CAST(4000 AS INTEGER) AS sample_rate,
-        | CAST(1 AS INTEGER) AS channels,
-        | CAST(count(*) AS BIGINT) AS n_samples,
-        | CAST(sum(smp) AS BIGINT) AS sum_samples,
-        | CAST(sum(abs(smp)) AS BIGINT) AS sum_abs
-        |FROM v GROUP BY 1""",
+        |${monoSampleStats(4000)}""",
     "mm_audio_features" ->
       // same sample replay as mm_decode_wav, with per-sample index
       // kept for the lag-based zero-crossing count; Σv² is an exact
@@ -4845,9 +4867,7 @@ private[graft] object OracleSql {
       // float column is bit-stable
       s"""WITH ${sampleHashCte("sm", "doc_id, i")},
         |v AS (SELECT doc_id, i,
-        |  CAST(CASE WHEN (h // 256) % 65536 >= 32768
-        |   THEN (h // 256) % 65536 - 65536
-        |   ELSE (h // 256) % 65536 END AS BIGINT) AS smp
+        |  CAST($sample16Sql AS BIGINT) AS smp
         | FROM sm),
         |f AS (SELECT doc_id, smp,
         |  lag(smp) OVER (PARTITION BY doc_id ORDER BY i) AS prev
@@ -5389,23 +5409,15 @@ private[graft] object OracleSql {
         |      ELSE 'test' END AS split
         |FROM r""",
     "split_assign_md5" ->
-      """SELECT doc_id,
-        | CASE WHEN substring(md5(CAST(doc_id AS VARCHAR) || ':split42'), 1, 8)
-        |        < 'e6666666' THEN 'train'
-        |      WHEN substring(md5(CAST(doc_id AS VARCHAR) || ':split42'), 1, 8)
-        |        < 'f3333333' THEN 'val'
-        |      ELSE 'test' END AS split
+      s"""SELECT doc_id,
+        | $md5SplitSql
         |FROM documents""",
     "split_leakage_pairs" ->
       // verified blocked pairs labeled by the md5 split; least/
       // greatest normalizes the edge, O(splits²) output
       (blockedPairsCte +
-        """, asg AS (SELECT doc_id,
-          | CASE WHEN substring(md5(CAST(doc_id AS VARCHAR) || ':split42'), 1, 8)
-          |        < 'e6666666' THEN 'train'
-          |      WHEN substring(md5(CAST(doc_id AS VARCHAR) || ':split42'), 1, 8)
-          |        < 'f3333333' THEN 'val'
-          |      ELSE 'test' END AS split
+        s""", asg AS (SELECT doc_id,
+          | $md5SplitSql
           | FROM documents),
           |lab AS (SELECT least(a.split, b.split) AS sa,
           |  greatest(a.split, b.split) AS sb
@@ -5867,12 +5879,7 @@ private[graft] object OracleSql {
         |${toksCteAs("tq")},
         |sc AS (SELECT doc_id,
         |  ${qualityScoreSql} FROM tq),
-        |losers AS (SELECT DISTINCT
-        |  CASE WHEN qa.quality_score < qb.quality_score THEN j.id_a
-        |       WHEN qb.quality_score < qa.quality_score THEN j.id_b
-        |       ELSE greatest(j.id_a, j.id_b) END AS doc_id
-        | FROM j JOIN sc qa ON qa.doc_id = j.id_a
-        |  JOIN sc qb ON qb.doc_id = j.id_b)
+        |$losersCte
         |SELECT doc_id, lang, source, n_chars FROM documents
         |WHERE doc_id NOT IN (SELECT doc_id FROM losers)""",
     "dedup_ngram_blocked" ->
@@ -6287,11 +6294,7 @@ private[graft] object OracleSql {
       // calibration form (r16): the exact profile anchor + a
       // within-5% claim over DuckDB's OWN approx_count_distinct per
       // column; tolerance max(2, n_distinct·5%) in floored integers
-      """SELECT col_name, n_rows, n_nulls, n_distinct,
-        | round(n_nulls * 1.0 / n_rows, 6) AS null_frac,
-        | abs(apx - n_distinct) <= greatest(2, (n_distinct * 5) // 100)
-        |  AS distinct_within_tol
-        |FROM (
+      s"""$dqCalibrationHead
         | SELECT 'l_partkey' AS col_name, count(*) AS n_rows,
         |  CAST(sum(CASE WHEN l_partkey IS NULL THEN 1 ELSE 0 END)
         |   AS BIGINT) AS n_nulls,
@@ -6516,11 +6519,7 @@ private[graft] object OracleSql {
       // ANOVA sum identities on exact integers (S, Q, per-group
       // S_g/n_g); dow LABELS differ across engines (Spark 1–7,
       // DuckDB 0–6) but only the grouping partition matters
-      """WITH daily AS (SELECT CAST(l_shipdate AS DATE) AS day,
-        | CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-        |   * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS HUGEINT)
-        |  AS x
-        | FROM lineitem GROUP BY 1),
+      s"""WITH $dailyRevenueCte,
         |g AS (SELECT dayofweek(day) AS dow, count(*) AS n_g,
         |  sum(x) AS s_g, sum(x * x) AS q_g FROM daily GROUP BY 1),
         |t AS (SELECT CAST(sum(n_g) AS BIGINT) AS n, sum(s_g) AS s,

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -432,13 +432,51 @@ object SparkEntry {
     Tables.documents(s, dir).select(col("doc_id"), explode(
       graft.functions.gf.winnowFingerprints(col("text"), 3, 4)).as("fp")))
 
+  // the per-source synthetic file grain shared by the lake and
+  // compaction keys: file = doc_id % 37 within each source
+  private def docFiles(s: SparkSession, dir: String): RelationalGroupedDataset =
+    Tables.documents(s, dir)
+      .groupBy(col("source").as("part"),
+        (col("doc_id") % 37).as("file_id"))
+
+  // the synthetic file manifest: bytes = exact char mass per file
+  private def docFileManifest(s: SparkSession, dir: String): DataFrame =
+    docFiles(s, dir).agg(sum("n_chars").as("bytes"))
+
+  // the orders dims range-scaled into the full 16-bit grid via exact
+  // integer division (an unscaled dim leaves the key prefix constant
+  // and every row lands in one bucket), then `extra`; the max() pair
+  // is a one-row broadcast, same pattern as the calendar midpoints
+  private def ordersGrid16(s: SparkSession, dir: String, extra: Column*): DataFrame = {
+    val o = Tables.orders(s, dir)
+    val stats = o.agg(
+      max(col("o_custkey")).as("max_c"),
+      max(datediff(col("o_orderdate"), lit("1992-01-01"))).cast("long")
+        .as("max_d"))
+    o.crossJoin(broadcast(stats)).select(Seq(
+      expr("(o_custkey * 65536) div (max_c + 1)").as("cust16"),
+      expr(s"(CAST(datediff(o_orderdate, DATE '1992-01-01') AS BIGINT)" +
+        s" * 65536) div (max_d + 1)").as("day16")) ++ extra: _*)
+  }
+
+  // the RTBF ML-store inputs: subject docs and vectors (id % 53 == 3),
+  // the shared fingerprint and winnow stores, and the ANN vector ids
+  private def rtbfMlInputs[T](s: SparkSession, dir: String)(
+      f: (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) => T): T = {
+    val docs = Tables.documents(s, dir)
+    val emb = Tables.embeddings(s, dir)
+    f(docs.filter(col("doc_id") % 53 === 3),
+      emb.filter(col("vec_id") % 53 === 3),
+      sharedFingerprintRows(s, dir),
+      sharedWinnowFps(s, dir),
+      emb.select("vec_id"))
+  }
+
   // the synthetic file manifest with snapshot lineage shared by the
   // lake retention keys (vacuum plan/apply + as-of read): one
   // documents collapse, O(files) rows, pure metadata
   private def snapManifest(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir)
-      .groupBy(col("source").as("part"),
-        (col("doc_id") % 37).as("file_id"))
+    docFiles(s, dir)
       .agg(sum("n_chars").as("bytes"),
         (min("doc_id") % 7).as("created_snap"),
         when(max("doc_id") % 3 === 0,
@@ -528,26 +566,10 @@ object SparkEntry {
     // vector rows — plan counts, apply = anti-join erasure readout;
     // the physical index path (deleteIvf tombstones) is spec-driven
     // on a scratch index so the shared fixtures stay untouched
-    "rtbf_ml_plan" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val emb = Tables.embeddings(s, dir)
-      operators.MlErasure.rtbfMlPlan(
-        docs.filter(col("doc_id") % 53 === 3),
-        emb.filter(col("vec_id") % 53 === 3),
-        sharedFingerprintRows(s, dir),
-        sharedWinnowFps(s, dir),
-        emb.select("vec_id"))
-    }),
-    "rtbf_ml_apply" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val emb = Tables.embeddings(s, dir)
-      operators.MlErasure.rtbfMlApply(
-        docs.filter(col("doc_id") % 53 === 3),
-        emb.filter(col("vec_id") % 53 === 3),
-        sharedFingerprintRows(s, dir),
-        sharedWinnowFps(s, dir),
-        emb.select("vec_id"))
-    }),
+    "rtbf_ml_plan" -> ((s, dir) =>
+      rtbfMlInputs(s, dir)(operators.MlErasure.rtbfMlPlan)),
+    "rtbf_ml_apply" -> ((s, dir) =>
+      rtbfMlInputs(s, dir)(operators.MlErasure.rtbfMlApply(_, _, _, _, _))),
     // privacy-release audit (r15): k-anonymity + l-diversity per
     // (nation, balance-band) class with the market segment as the
     // sensitive attribute — the band makes classes fine enough that
@@ -1937,30 +1959,17 @@ object SparkEntry {
     // MemoryStream micro-batches
     "stream_ab_readout" -> ((s, dir) =>
       graft.streaming.EventStream.abReadout(Tables.events(s, dir))),
-    // z-order layout plan: per file-bucket pruning-stat manifest
-    // from the fixed-prefix interleaved key — bucket assignment is a
-    // pure projection (no range sampling, no global sort). Dims are
-    // range-scaled into the full 16-bit grid via exact integer
-    // division (an unscaled dim leaves the key prefix constant and
-    // every row lands in one bucket); the max() pair is a one-row
-    // broadcast, same pattern as the calendar midpoints
     // compaction planner over a per-source synthetic file manifest
     // (file grain = doc_id % 37, bytes = exact char mass)
     "lake_compaction_plan" -> ((s, dir) =>
       graft.sources.Lake.compactionPlan(
-        Tables.documents(s, dir)
-          .groupBy(col("source").as("part"),
-            (col("doc_id") % 37).as("file_id"))
-          .agg(sum("n_chars").as("bytes")))),
+        docFileManifest(s, dir))),
     // EXECUTE the plan's bins (r13): post-compaction manifest — one
     // merged file per (part, bin), byte mass conserved, parity specs
     // prove row identity and the monitor's trigger reset
     "lake_compaction_apply" -> ((s, dir) =>
       graft.sources.Lake.compactionApply(
-        Tables.documents(s, dir)
-          .groupBy(col("source").as("part"),
-            (col("doc_id") % 37).as("file_id"))
-          .agg(sum("n_chars").as("bytes")))),
+        docFileManifest(s, dir))),
     // VACUUM planner (r15): snapshot-expiry decisions over the same
     // synthetic file manifest, extended with deterministic snapshot
     // lineage — live files keep, files removed inside the 2-snapshot
@@ -1988,23 +1997,13 @@ object SparkEntry {
     // files accumulate (own oracle below)
     "stream_compaction_monitor" -> ((s, dir) =>
       graft.streaming.DocStream.compactionMonitorState(
-        Tables.documents(s, dir)
-          .groupBy(col("source").as("part"),
-            (col("doc_id") % 37).as("file_id"))
-          .agg(sum("n_chars").as("bytes")))),
-    "lake_zorder_plan" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      val stats = o.agg(
-        max(col("o_custkey")).as("max_c"),
-        max(datediff(col("o_orderdate"), lit("1992-01-01"))).cast("long")
-          .as("max_d"))
-      graft.sources.Lake.zorderPlan(
-        o.crossJoin(broadcast(stats)).select(
-          expr("(o_custkey * 65536) div (max_c + 1)").as("cust16"),
-          expr(s"(CAST(datediff(o_orderdate, DATE '1992-01-01') AS BIGINT)" +
-            s" * 65536) div (max_d + 1)").as("day16")),
-        Seq("cust16", "day16"))
-    }),
+        docFileManifest(s, dir))),
+    // z-order layout plan: per file-bucket pruning-stat manifest
+    // from the fixed-prefix interleaved key — bucket assignment is a
+    // pure projection (no range sampling, no global sort); dims on
+    // the 16-bit grid of ordersGrid16
+    "lake_zorder_plan" -> ((s, dir) =>
+      graft.sources.Lake.zorderPlan(ordersGrid16(s, dir), Seq("cust16", "day16"))),
     // EXECUTE the z-order plan (r14): every row routes to its
     // planned file, the POST-layout manifest emits with byte mass
     // (synthetic per-row payload, exact integers — the orders
@@ -2012,36 +2011,16 @@ object SparkEntry {
     // written footers would carry; LakeSpec closes the loop —
     // fileSkippingOf over this manifest reproduces fileSkipping's
     // z-order skip rates
-    "lake_zorder_apply" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      val stats = o.agg(
-        max(col("o_custkey")).as("max_c"),
-        max(datediff(col("o_orderdate"), lit("1992-01-01"))).cast("long")
-          .as("max_d"))
+    "lake_zorder_apply" -> ((s, dir) =>
       graft.sources.Lake.zorderApply(
-        o.crossJoin(broadcast(stats)).select(
-          expr("(o_custkey * 65536) div (max_c + 1)").as("cust16"),
-          expr(s"(CAST(datediff(o_orderdate, DATE '1992-01-01') AS BIGINT)" +
-            s" * 65536) div (max_d + 1)").as("day16"),
+        ordersGrid16(s, dir,
           (col("o_orderkey") % 1901 + 128).cast("long").as("row_bytes")),
-        Seq("cust16", "day16"), col("row_bytes"))
-    }),
+        Seq("cust16", "day16"), col("row_bytes"))),
     // the skip-rate readout BEHIND the z-order plan: same quantized
     // dims, same file count — z-order skips on the non-leading dim,
     // the single-sort layout cannot
-    "lake_file_skipping" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      val stats = o.agg(
-        max(col("o_custkey")).as("max_c"),
-        max(datediff(col("o_orderdate"), lit("1992-01-01"))).cast("long")
-          .as("max_d"))
-      graft.sources.Lake.fileSkipping(
-        o.crossJoin(broadcast(stats)).select(
-          expr("(o_custkey * 65536) div (max_c + 1)").as("cust16"),
-          expr(s"(CAST(datediff(o_orderdate, DATE '1992-01-01') AS BIGINT)" +
-            s" * 65536) div (max_d + 1)").as("day16")),
-        Seq("cust16", "day16"))
-    }),
+    "lake_file_skipping" -> ((s, dir) =>
+      graft.sources.Lake.fileSkipping(ordersGrid16(s, dir), Seq("cust16", "day16"))),
     // BM25 lexical retrieval over the SHARED scored-postings index
     // (billed to prime — the persisted-index economics: term
     // weights are computed at index time, queries only join + fold)

@@ -633,11 +633,9 @@ object Analytics {
     // threshold comparison is then raw — only the mean is a float
     // sum, and a membership flip needs an exact revenue within ulps
     // of factor*mean (see docs/ORACLE_NOTES.md).
-    val scaled = round(col("l_extendedprice") * 100, 0).cast("long") *
-      (lit(100L) - round(col("l_discount") * 100, 0).cast("long"))
     val perPart = lineitem
       .groupBy("l_partkey")
-      .agg((sum(scaled).cast("double") / 10000.0).as("revenue"))
+      .agg((sum(centsX).cast("double") / 10000.0).as("revenue"))
     val meanRev = perPart.agg(avg("revenue").as("mean_revenue"))
     perPart
       .crossJoin(broadcast(meanRev))
@@ -1004,6 +1002,25 @@ object Analytics {
       .agg((sum("l_extendedprice") / 7.0).as("avg_yearly"))
   }
 
+  /** A line's revenue as an exact integer: price in cents times
+    * the integer discount-complement percent (scale 10⁴). */
+  private def centsX: Column =
+    round(col("l_extendedprice") * 100, 0).cast("long") *
+      (lit(100L) - round(col("l_discount") * 100, 0).cast("long"))
+
+  /** Revenue per part: |parts| rows, bounded; checkpointed because
+    * the band-total collect and the final ranking both consume it
+    * (recomputing would rescan + reshuffle the whole fact twice).
+    */
+  private def partRevenue(lineitem: DataFrame): DataFrame =
+    lineitem.groupBy("l_partkey")
+      .agg(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
+      .localCheckpoint(true)
+
+  /** log2 of `revenue`, floored at the smallest positive double. */
+  private def revenueLog2: Column =
+    log2(greatest(col("revenue"), lit(java.lang.Double.MIN_VALUE)))
+
   /** Pareto concentration of revenue: for each coverage threshold,
     * the number of top products (ranked by revenue) needed to reach
     * that share of total revenue.
@@ -1029,18 +1046,11 @@ object Analytics {
                     thresholds: Seq[Double] = Seq(0.5, 0.8, 0.9, 0.95, 0.99)): DataFrame = {
     val spark = lineitem.sparkSession
     import spark.implicits._
-    // |parts| rows, bounded; checkpointed because the band-total
-    // collect and the final ranking both consume it (recomputing
-    // would rescan + reshuffle the whole fact twice)
-    val rev = lineitem.groupBy("l_partkey")
-      .agg(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
-      .localCheckpoint(true)
     // quarter-octave bands: each spans a 2^(1/4) revenue ratio, so a
     // band can't degenerate into "most of the corpus" unless revenues
     // are near-constant (in which case any split is balanced anyway)
-    val banded = rev.withColumn("band",
-      (-floor(log2(greatest(col("revenue"), lit(java.lang.Double.MIN_VALUE))) * 4))
-        .cast("long"))
+    val banded = partRevenue(lineitem)
+      .withColumn("band", (-floor(revenueLog2 * 4)).cast("long"))
     val totals = banded.groupBy("band")
       .agg(count(lit(1)).as("cnt"), sum("revenue").as("brev"))
       .as[(Long, Long, Double)].collect().sortBy(_._1)
@@ -1220,12 +1230,8 @@ object Analytics {
   def giniRevenue(lineitem: DataFrame): DataFrame = {
     val spark = lineitem.sparkSession
     import spark.implicits._
-    val rev = lineitem.groupBy("l_partkey")
-      .agg(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
-      .localCheckpoint(true)
-    val banded = rev.withColumn("band",
-      floor(log2(greatest(col("revenue"), lit(java.lang.Double.MIN_VALUE))) * 4)
-        .cast("long"))
+    val banded = partRevenue(lineitem)
+      .withColumn("band", floor(revenueLog2 * 4).cast("long"))
     val totals = banded.groupBy("band")
       .agg(count(lit(1)).as("cnt"))
       .as[(Long, Long)].collect().sortBy(_._1)
@@ -1304,12 +1310,8 @@ object Analytics {
                bShare: Double = 0.95): DataFrame = {
     val spark = lineitem.sparkSession
     import spark.implicits._
-    val rev = lineitem.groupBy("l_partkey")
-      .agg(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
-      .localCheckpoint(true)
-    val banded = rev.withColumn("band",
-      (-floor(log2(greatest(col("revenue"), lit(java.lang.Double.MIN_VALUE))) * 4))
-        .cast("long"))
+    val banded = partRevenue(lineitem)
+      .withColumn("band", (-floor(revenueLog2 * 4)).cast("long"))
     val totals = banded.groupBy("band")
       .agg(sum("revenue").as("brev"))
       .as[(Long, Double)].collect().sortBy(_._1)
@@ -1590,8 +1592,6 @@ object Analytics {
       lineitem: DataFrame): Array[(java.sql.Date, Long)] = {
     val spark = lineitem.sparkSession
     import spark.implicits._
-    val centsX = round(col("l_extendedprice") * 100, 0).cast("long") *
-      (lit(100L) - round(col("l_discount") * 100, 0).cast("long"))
     lineitem
       .groupBy(date_trunc("month", to_date(col("l_shipdate"))).cast("date")
         .as("mth"))
@@ -1807,8 +1807,6 @@ object Analytics {
     */
   def revenueAutocorr(lineitem: DataFrame, maxLag: Int = 7): DataFrame = {
     val spark = lineitem.sparkSession
-    val centsX = round(col("l_extendedprice") * 100, 0).cast("long") *
-      (lit(100L) - round(col("l_discount") * 100, 0).cast("long"))
     val daily = lineitem
       .groupBy(to_date(col("l_shipdate")).as("day"))
       .agg(sum(centsX).as("x"))
@@ -1857,8 +1855,6 @@ object Analytics {
     * same correct-by-construction case as [[orderBacklog]].
     */
   def rollingRevenue(lineitem: DataFrame, days: Int = 7): DataFrame = {
-    val centsX = round(col("l_extendedprice") * 100, 0).cast("long") *
-      (lit(100L) - round(col("l_discount") * 100, 0).cast("long"))
     val daily = lineitem
       .groupBy(to_date(col("l_shipdate")).as("day"))
       .agg(sum(centsX).as("c"), count(lit(1)).as("n"))
@@ -1902,6 +1898,36 @@ object Analytics {
         max("len").as("longest_streak"))
   }
 
+  /** Each distinct (user, day) pair fanned out to the `days` target
+    * days it makes active: `cols` are selected over
+    * (user_id, day, i), i the offset in days, and must name
+    * `target_day`; target days are semi-joined to the days present.
+    * The fan-out and the present-days spine share the pinned
+    * relation.
+    */
+  private def activeDayFanOut(events: DataFrame, days: Int)(cols: Column*): DataFrame = {
+    val userDays = events
+      .select(col("user_id"), to_date(col("ts")).as("day"))
+      .distinct()
+      .localCheckpoint(true)
+    val present = userDays.select(col("day").as("target_day")).distinct()
+    userDays
+      .select(col("user_id"), col("day"),
+        explode(sequence(lit(0), lit(days - 1))).as("i"))
+      .select(cols: _*)
+      .join(present, Seq("target_day"), "left_semi")
+  }
+
+  /** The exact (target_day, user) collapse of [[activeDayFanOut]],
+    * carrying the day-0 marker as `active_today`.
+    */
+  private def activeUserDays(events: DataFrame, days: Int): DataFrame =
+    activeDayFanOut(events, days)(col("user_id"), col("day"),
+        date_add(col("day"), col("i")).as("target_day"),
+        when(col("i") === 0, 1L).otherwise(0L).as("is_today"))
+      .groupBy("target_day", "user_id")
+      .agg(max("is_today").as("active_today"))
+
   /** Daily + trailing-window distinct actives (DAU / WAU /
     * stickiness) — the hard sliding op done the scale-safe way:
     * exact sliding COUNT DISTINCT cannot ride a window frame
@@ -1918,21 +1944,7 @@ object Analytics {
     * ([[EventOps.sketchReach]]'s pattern) — same fan-out shape.
     */
   def rollingActiveUsers(events: DataFrame, days: Int = 7): DataFrame = {
-    // fan-out + present-days spine share the pinned relation
-    val userDays = events
-      .select(col("user_id"), to_date(col("ts")).as("day"))
-      .distinct()
-      .localCheckpoint(true)
-    val present = userDays.select(col("day").as("target_day")).distinct()
-    userDays
-      .select(col("user_id"), col("day"),
-        explode(sequence(lit(0), lit(days - 1))).as("i"))
-      .select(col("user_id"), col("day"),
-        date_add(col("day"), col("i")).as("target_day"),
-        when(col("i") === 0, 1L).otherwise(0L).as("is_today"))
-      .join(present, Seq("target_day"), "left_semi")
-      .groupBy("target_day", "user_id")
-      .agg(max("is_today").as("active_today"))
+    activeUserDays(events, days)
       .groupBy(col("target_day").as("day"))
       .agg(
         count(lit(1)).as("wau"),
@@ -1953,8 +1965,6 @@ object Analytics {
     * → 7-row weekday grain → single row.
     */
   def seasonalityStrength(lineitem: DataFrame): DataFrame = {
-    val centsX = round(col("l_extendedprice") * 100, 0).cast("long") *
-      (lit(100L) - round(col("l_discount") * 100, 0).cast("long"))
     val daily = lineitem
       .groupBy(to_date(col("l_shipdate")).as("day"))
       .agg(sum(centsX).as("x"))
@@ -2063,17 +2073,8 @@ object Analytics {
     */
   def rollingActiveUsersApprox(events: DataFrame, days: Int = 7,
                                rsd: Double = 0.02): DataFrame = {
-    val userDays = events
-      .select(col("user_id"), to_date(col("ts")).as("day"))
-      .distinct()
-      .localCheckpoint(true)
-    val present = userDays.select(col("day").as("target_day")).distinct()
-    userDays
-      .select(col("user_id"), col("day"),
-        explode(sequence(lit(0), lit(days - 1))).as("i"))
-      .select(col("user_id"),
+    activeDayFanOut(events, days)(col("user_id"),
         date_add(col("day"), col("i")).as("target_day"), col("i"))
-      .join(present, Seq("target_day"), "left_semi")
       .groupBy(col("target_day").as("day"))
       .agg(
         approx_count_distinct(col("user_id"), rsd).as("wau_approx"),
@@ -2105,20 +2106,7 @@ object Analytics {
     // fan-out — the boolean still scores the sketch route. Fusing
     // drops the approx tier's second fan-out chain and the day join
     // a naive twin-query composition pays.
-    val userDays = events
-      .select(col("user_id"), to_date(col("ts")).as("day"))
-      .distinct()
-      .localCheckpoint(true)
-    val present = userDays.select(col("day").as("target_day")).distinct()
-    userDays
-      .select(col("user_id"), col("day"),
-        explode(sequence(lit(0), lit(days - 1))).as("i"))
-      .select(col("user_id"), col("day"),
-        date_add(col("day"), col("i")).as("target_day"),
-        when(col("i") === 0, 1L).otherwise(0L).as("is_today"))
-      .join(present, Seq("target_day"), "left_semi")
-      .groupBy("target_day", "user_id")
-      .agg(max("is_today").as("active_today"))
+    activeUserDays(events, days)
       .groupBy(col("target_day").as("day"))
       .agg(
         count(lit(1)).as("wau"),
@@ -2154,8 +2142,6 @@ object Analytics {
     * [[orderBacklog]] correct-by-construction case).
     */
   def revenueChangepoint(lineitem: DataFrame): DataFrame = {
-    val centsX = round(col("l_extendedprice") * 100, 0).cast("long") *
-      (lit(100L) - round(col("l_discount") * 100, 0).cast("long"))
     val daily = lineitem
       .groupBy(to_date(col("l_shipdate")).as("day"))
       .agg(sum(centsX).as("c"))

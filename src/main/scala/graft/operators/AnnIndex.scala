@@ -158,9 +158,7 @@ object AnnIndex {
         col("cell"))
     Similarity.topKPerQuery(
       probed.join(vectors, Seq("cell"))
-        .filter(col("neighbor_id") =!= col("query_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          gf.cosineSim(col("q_emb"), col("n_emb")).as("cosine")), k)
+        .transform(Similarity.scoredPairs(gf.cosineSim(col("q_emb"), col("n_emb")))), k)
   }
 
   /** DELETE lifecycle, step 1 of 2 — the tombstone write: dead ids
@@ -458,8 +456,8 @@ object AnnIndex {
     val cbs = loadCodebooks(spark, path)
     val q = queries.select(col("vec_id").as("query_id"),
       col("embedding").as("q_emb"))
-    val probed = broadcast(q.select(col("query_id"), col("q_emb"),
-      explode(gf.nearestCentroids(col("q_emb"), centroids, nprobe)).as("cell")))
+    val probed = q.select(col("query_id"), col("q_emb"),
+      explode(gf.nearestCentroids(col("q_emb"), centroids, nprobe)).as("cell"))
     val cells = probed.select("cell").distinct().collect().map(_.getInt(0))
     val dead = if (maskDeletes) Some(broadcast(tombstones(spark, path)))
       else None
@@ -470,10 +468,12 @@ object AnnIndex {
         .select(col("vec_id").as("neighbor_id") +: cols.map(col): _*)
     }
     val approx = Similarity.topKPerQuery(
-      probed.join(prunedScan(Seq("codes", "cell")), Seq("cell"))
-        .filter(col("neighbor_id") =!= col("query_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          gf.pqCosine(col("q_emb"), col("codes"), cbs).as("cosine")), k * rerank)
+      // the hint sits on the join it steers: on `probed` itself it
+      // would also ride the join-less cell collect above, which
+      // Spark's HintErrorLogger reports as an unused hint
+      broadcast(probed).join(prunedScan(Seq("codes", "cell")), Seq("cell"))
+        .transform(Similarity.scoredPairs(gf.pqCosine(col("q_emb"), col("codes"), cbs))),
+      k * rerank)
     val exact = broadcast(approx.select("query_id", "neighbor_id"))
       .join(prunedScan(Seq("embedding")), Seq("neighbor_id"))
       .join(broadcast(q), Seq("query_id"))

@@ -13,6 +13,14 @@ import org.apache.spark.sql.functions._
   */
 object DataSplit {
 
+  /** Split weights must be non-empty, non-negative and sum to 1. */
+  private def requireWeights(weights: Seq[(String, Double)]): Unit = {
+    require(weights.nonEmpty, "need at least one split")
+    require(weights.forall(_._2 >= 0), s"weights must be non-negative: $weights")
+    require(math.abs(weights.map(_._2).sum - 1.0) < 1e-9,
+      s"weights must sum to 1, got ${weights.map(_._2).sum}")
+  }
+
   /** Assign each row a split label by hashing `idCol` into [0,1) and
     * cutting at the cumulative weights.
     *
@@ -23,10 +31,7 @@ object DataSplit {
     */
   def assign(df: DataFrame, idCol: String,
              weights: Seq[(String, Double)], seed: Long = 42L): DataFrame = {
-    require(weights.nonEmpty, "need at least one split")
-    require(weights.forall(_._2 >= 0), s"weights must be non-negative: $weights")
-    require(math.abs(weights.map(_._2).sum - 1.0) < 1e-9,
-      s"weights must sum to 1, got ${weights.map(_._2).sum}")
+    requireWeights(weights)
     // xxhash64 → [0,1): shift to 53 usable mantissa bits
     val u = (shiftrightunsigned(xxhash64(col(idCol), lit(seed)), 11)
       .cast("double") / lit((1L << 53).toDouble))
@@ -47,10 +52,7 @@ object DataSplit {
   def assignPortable(df: DataFrame, idCol: String,
                      weights: Seq[(String, Double)],
                      salt: String = "split42"): DataFrame = {
-    require(weights.nonEmpty, "need at least one split")
-    require(weights.forall(_._2 >= 0), s"weights must be non-negative: $weights")
-    require(math.abs(weights.map(_._2).sum - 1.0) < 1e-9,
-      s"weights must sum to 1, got ${weights.map(_._2).sum}")
+    requireWeights(weights)
     val key = Sampling.sampleKey(col(idCol), salt)
     val cuts = weights.scanLeft(0.0) { case (acc, (_, w)) => acc + w }.tail
     // a cut of 1.0 maps to "g" (> every hex key): otherwise the
@@ -139,10 +141,7 @@ object DataSplit {
   def stratifiedSplit(df: DataFrame, idCol: String, strataCol: String,
                       weights: Seq[(String, Double)],
                       salt: String = "strat42"): DataFrame = {
-    require(weights.nonEmpty, "need at least one split")
-    require(weights.forall(_._2 >= 0), s"weights must be non-negative: $weights")
-    require(math.abs(weights.map(_._2).sum - 1.0) < 1e-9,
-      s"weights must sum to 1, got ${weights.map(_._2).sum}")
+    requireWeights(weights)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(strataCol)
       .orderBy(Sampling.sampleKey(col(idCol), salt), col(idCol))

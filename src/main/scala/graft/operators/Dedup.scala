@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.gf
@@ -747,18 +747,31 @@ object Dedup {
   private def blockedCandidates(sets: DataFrame, maxDf: Int,
                                 minShared: Int): DataFrame = {
     val inv = sets.select(col("doc_id"), explode(col("shingles")).as("gram"))
-    inv.groupBy("gram")
-      .agg(graft.functions.BoundedCollectSetAgg
-        .boundedCollectSet(col("doc_id"), maxDf + 1).as("ids"))
-      .filter(size(col("ids")).between(2, maxDf))
-      .select(explode(col("ids")).as("id_a"), col("ids"))
-      .select(col("id_a"), explode(col("ids")).as("id_b"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("n_rare_shared"))
+    sharedPostings(inv, "gram", maxDf, col("id_a") < col("id_b"), "n_rare_shared")
       .filter(col("n_rare_shared") >= minShared)
       .select("id_a", "id_b")
   }
+
+  /** Every ordered pair (`a`, `b`) of `id`s that share a `key`
+    * posting of df 2..maxDf, through the bounded collector above: one
+    * row per shared posting. */
+  private[graft] def postingPairs(inv: DataFrame, key: String, id: String,
+                                  maxDf: Int, a: String, b: String): DataFrame =
+    inv.groupBy(key)
+      .agg(graft.functions.BoundedCollectSetAgg
+        .boundedCollectSet(col(id), maxDf + 1).as("ids"))
+      .filter(size(col("ids")).between(2, maxDf))
+      .select(explode(col("ids")).as(a), col("ids"))
+      .select(col(a), explode(col("ids")).as(b))
+
+  /** [[postingPairs]] of `doc_id`s kept by `keep`, counted per
+    * (id_a, id_b) as `n`. */
+  private[graft] def sharedPostings(inv: DataFrame, key: String, maxDf: Int,
+                                    keep: Column, n: String): DataFrame =
+    postingPairs(inv, key, "doc_id", maxDf, "id_a", "id_b")
+      .filter(keep)
+      .groupBy("id_a", "id_b")
+      .agg(count(lit(1)).as(n))
 
   /** The deterministic blocking trunk shared by the whole blocked
     * near-dup family at one parameterization: the distinct
@@ -961,12 +974,7 @@ object Dedup {
       explode(col("shingles")).as("gram"))
     // cross-pairs only: the old×old combinations die map-side inside
     // the (≤ maxDf²-bounded) bucket enumeration, before any shuffle
-    val pairs = inv.groupBy("gram")
-      .agg(graft.functions.BoundedCollectSetAgg
-        .boundedCollectSet(col("tagged_id"), maxDf + 1).as("ids"))
-      .filter(size(col("ids")).between(2, maxDf))
-      .select(explode(col("ids")).as("a"), col("ids"))
-      .select(col("a"), explode(col("ids")).as("b"))
+    val pairs = postingPairs(inv, "gram", "tagged_id", maxDf, "a", "b")
       .filter(col("a") % 2 === 1 && col("b") % 2 === 0)
       .select(expr("a div 2").as("id_a"), expr("b div 2").as("id_b"))
       .groupBy("id_a", "id_b")

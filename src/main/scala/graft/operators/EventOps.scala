@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Event-log operators over the `events` table (event_id, ts,
@@ -119,20 +119,7 @@ object EventOps {
       .filter(col("user_id").isNotNull).as[Long]
       .mapPartitions { it =>
         val counters = scala.collection.mutable.LinkedHashMap.empty[Long, Long]
-        it.foreach { u =>
-          counters.get(u) match {
-            case Some(c) => counters.update(u, c + 1)
-            case None if counters.size < k => counters.update(u, 1L)
-            case None =>
-              // decrement-all: one shared "charge" against every
-              // counter and the incoming key; zeros evict
-              val dead = List.newBuilder[Long]
-              counters.foreach { case (key, c) =>
-                if (c == 1L) dead += key else counters.update(key, c - 1)
-              }
-              dead.result().foreach(counters.remove)
-          }
-        }
+        mgFold(counters, it, k)
         counters.iterator.map { case (u, c) => (u, c) }
       }
     val merged = summaries.toDF("user_id", "est_count")
@@ -142,6 +129,25 @@ object EventOps {
       .filter(col("n_events") > col("thr"))
       .select(col("user_id"), col("n_events"))
   }
+
+  /** Misra–Gries update of `counters` (at most `k`) by every key
+    * of `it`. */
+  private[graft] def mgFold(counters: scala.collection.mutable.LinkedHashMap[Long, Long],
+                            it: Iterator[Long], k: Int): Unit =
+    it.foreach { u =>
+      counters.get(u) match {
+        case Some(c) => counters.update(u, c + 1)
+        case None if counters.size < k => counters.update(u, 1L)
+        case None =>
+          // decrement-all: one shared "charge" against every
+          // counter and the incoming key; zeros evict
+          val dead = List.newBuilder[Long]
+          counters.foreach { case (key, c) =>
+            if (c == 1L) dead += key else counters.update(key, c - 1)
+          }
+          dead.result().foreach(counters.remove)
+      }
+    }
 
   /** Approximate audience overlap between event-type pairs:
     * |A∩B| ≈ |A| + |B| − |A∪B| via HLL sketch ALGEBRA — one scan
@@ -236,8 +242,14 @@ object EventOps {
     * of raw ids.
     */
   def reachFromSketches(sketches: DataFrame, lo: String, hi: String): DataFrame =
+    reachOver(sketches, "day", lo, hi)
+
+  /** Per type, the union of the sketch rows whose `grain` column
+    * lies in `[lo, hi)`: estimated distinct users and event count. */
+  private def reachOver(sketches: DataFrame, grain: String,
+                        lo: String, hi: String): DataFrame =
     sketches
-      .filter(col("day") >= lit(lo) && col("day") < lit(hi))
+      .filter(col(grain) >= lit(lo) && col(grain) < lit(hi))
       .groupBy("event_type")
       .agg(
         hll_sketch_estimate(hll_union_agg(col("sk"), lit(false)))
@@ -267,13 +279,26 @@ object EventOps {
     * month-aligned `[lo, hi)` ranges — same sketch algebra, month
     * rows in place of day rows. */
   def reachFromCompacted(monthly: DataFrame, lo: String, hi: String): DataFrame =
-    monthly
-      .filter(col("month") >= lit(lo) && col("month") < lit(hi))
+    reachOver(monthly, "month", lo, hi)
+
+  /** Per type over `[lo, hi)`: the exact distinct-user anchor and
+    * event count, joined to the sketch route's `approx_users`, with
+    * the claim that the estimate lands within `tol` of the anchor.
+    */
+  private def calibrated(events: DataFrame, lo: String, hi: String,
+                         tol: Double, reach: DataFrame): DataFrame = {
+    val approx = reach.select(col("event_type"), col("approx_users"))
+    events
+      .filter(to_date(col("ts")) >= lit(lo) && to_date(col("ts")) < lit(hi))
       .groupBy("event_type")
-      .agg(
-        hll_sketch_estimate(hll_union_agg(col("sk"), lit(false)))
-          .as("approx_users"),
-        sum("n_events").as("n_events"))
+      .agg(countDistinct(col("user_id")).as("exact_users"),
+        count(lit(1)).as("n_events"))
+      .join(approx, Seq("event_type"))
+      .select(col("event_type"), col("exact_users"), col("n_events"),
+        (abs(col("approx_users").cast("double") /
+          col("exact_users").cast("double") - lit(1.0)) <= lit(tol))
+          .as("est_within_tol"))
+  }
 
   /** Sketch CALIBRATION audit — the oracled bridge into the
     * rows-only sketch family: per type over `[lo, hi)`, the exact
@@ -293,20 +318,9 @@ object EventOps {
     * ≈ 3σ.
     */
   def sketchCalibration(events: DataFrame, lo: String, hi: String,
-                        tol: Double = 0.05): DataFrame = {
-    val approx = reachFromSketches(dailyAudienceSketches(events), lo, hi)
-      .select(col("event_type"), col("approx_users"))
-    events
-      .filter(to_date(col("ts")) >= lit(lo) && to_date(col("ts")) < lit(hi))
-      .groupBy("event_type")
-      .agg(countDistinct(col("user_id")).as("exact_users"),
-        count(lit(1)).as("n_events"))
-      .join(approx, Seq("event_type"))
-      .select(col("event_type"), col("exact_users"), col("n_events"),
-        (abs(col("approx_users").cast("double") /
-          col("exact_users").cast("double") - lit(1.0)) <= lit(tol))
-          .as("est_within_tol"))
-  }
+                        tol: Double = 0.05): DataFrame =
+    calibrated(events, lo, hi, tol,
+      reachFromSketches(dailyAudienceSketches(events), lo, hi))
 
   /** Reach CALIBRATION through the COMPACTED store route (r16) —
     * what graduates `events_sketch_reach` from rows-only: per type
@@ -322,21 +336,9 @@ object EventOps {
     * lgConfigK=12, rsd ≈ 1.6% → 5% ≈ 3σ; sparse-exact at small
     * cardinalities). */
   def reachCalibration(events: DataFrame, lo: String, hi: String,
-                       tol: Double = 0.05): DataFrame = {
-    val approx = reachFromCompacted(
-        compactSketches(dailyAudienceSketches(events)), lo, hi)
-      .select(col("event_type"), col("approx_users"))
-    events
-      .filter(to_date(col("ts")) >= lit(lo) && to_date(col("ts")) < lit(hi))
-      .groupBy("event_type")
-      .agg(countDistinct(col("user_id")).as("exact_users"),
-        count(lit(1)).as("n_events"))
-      .join(approx, Seq("event_type"))
-      .select(col("event_type"), col("exact_users"), col("n_events"),
-        (abs(col("approx_users").cast("double") /
-          col("exact_users").cast("double") - lit(1.0)) <= lit(tol))
-          .as("est_within_tol"))
-  }
+                       tol: Double = 0.05): DataFrame =
+    calibrated(events, lo, hi, tol, reachFromCompacted(
+      compactSketches(dailyAudienceSketches(events)), lo, hi))
 
   /** Overlap CALIBRATION — [[sketchCalibration]]'s pattern applied
     * to the pairwise-audience tier, which is what graduates the
@@ -596,16 +598,7 @@ object EventOps {
     * keeps partial weeks honest too. Output ≤ 168 rows, always.
     */
   def dowHourProfile(events: DataFrame): DataFrame = {
-    val hourly = events
-      .groupBy(date_trunc("hour", col("ts")).as("hour_bucket"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint(true) // bounds agg + spine join share it
-    val bounds = hourly.agg(
-      min("hour_bucket").as("lo"), max("hour_bucket").as("hi"))
-    val spine = bounds.select(explode(
-      sequence(col("lo"), col("hi"), expr("interval 1 hour")))
-      .as("hour_bucket"))
-    spine.join(hourly, Seq("hour_bucket"), "left")
+    filledHours(events)
       .select(col("hour_bucket"), coalesce(col("n"), lit(0L)).as("n"))
       .groupBy(
         dayofweek(col("hour_bucket")).cast("long").as("dow"),
@@ -826,23 +819,37 @@ object EventOps {
     * grid by contract.
     */
   def userLifespan(events: DataFrame): DataFrame =
+    userLifespans(events)
+      .agg(
+        count(lit(1)).as("n_users"),
+        Seq(
+          expr("percentile(lifespan_days, 0.5)").as("p50_lifespan_days"),
+          expr("percentile(lifespan_days, 0.9)").as("p90_lifespan_days"),
+          expr("percentile(lifespan_days, 0.99)").as("p99_lifespan_days"))
+          ++ lifespanMeans: _*)
+
+  /** Per user: days from first to last event, distinct active days
+    * and event count. */
+  private def userLifespans(events: DataFrame): DataFrame =
     events
       .groupBy("user_id")
       .agg(
         datediff(to_date(max("ts")), to_date(min("ts"))).as("lifespan_days"),
         countDistinct(to_date(col("ts"))).as("active_days"),
         count(lit(1)).as("n_events"))
-      .agg(
-        count(lit(1)).as("n_users"),
-        expr("percentile(lifespan_days, 0.5)").as("p50_lifespan_days"),
-        expr("percentile(lifespan_days, 0.9)").as("p90_lifespan_days"),
-        expr("percentile(lifespan_days, 0.99)").as("p99_lifespan_days"),
+
+  /** The exact per-user means and single-day fraction over
+    * [[userLifespans]]. */
+  private def lifespanMeans: Seq[Column] = Seq(
         round(sum("active_days").cast("double") / count(lit(1)), 6)
           .as("mean_active_days"),
         round(sum("n_events").cast("double") / count(lit(1)), 6)
           .as("mean_events_per_user"),
         round(sum(when(col("lifespan_days") === 0, 1L).otherwise(0L))
           .cast("double") / count(lit(1)), 6).as("single_day_frac"))
+
+  private def approxLifespan(q: Double, accuracy: Int): Column =
+    percentile_approx(col("lifespan_days"), lit(q), lit(accuracy)).cast("double")
 
   /** Lifespan CALIBRATION (r16) — what graduates
     * `events_user_lifespan_approx` from rows-only: the exact rollup
@@ -857,19 +864,11 @@ object EventOps {
     * the sketch pass and the rank pass (pinned). */
   def lifespanCalibration(events: DataFrame, accuracy: Int = 10000,
                           rankEps: Double = 0.02): DataFrame = {
-    val per = events.groupBy("user_id")
-      .agg(
-        datediff(to_date(max("ts")), to_date(min("ts"))).as("lifespan_days"),
-        countDistinct(to_date(col("ts"))).as("active_days"),
-        count(lit(1)).as("n_events"))
-      .localCheckpoint(true)
+    val per = userLifespans(events).localCheckpoint(true)
     val apx = per.agg(
-      percentile_approx(col("lifespan_days"), lit(0.5), lit(accuracy))
-        .cast("double").as("p50"),
-      percentile_approx(col("lifespan_days"), lit(0.9), lit(accuracy))
-        .cast("double").as("p90"),
-      percentile_approx(col("lifespan_days"), lit(0.99), lit(accuracy))
-        .cast("double").as("p99"))
+      approxLifespan(0.5, accuracy).as("p50"),
+      approxLifespan(0.9, accuracy).as("p90"),
+      approxLifespan(0.99, accuracy).as("p99"))
     def frac(cmp: Column): Column =
       sum(when(cmp, 1L).otherwise(0L)).cast("double") / count(lit(1))
     def contained(q: Double, lo: Column, hi: Column): Column =
@@ -877,18 +876,13 @@ object EventOps {
     per.crossJoin(broadcast(apx))
       .agg(
         count(lit(1)).as("n_users"),
-        round(sum("active_days").cast("double") / count(lit(1)), 6)
-          .as("mean_active_days"),
-        round(sum("n_events").cast("double") / count(lit(1)), 6)
-          .as("mean_events_per_user"),
-        round(sum(when(col("lifespan_days") === 0, 1L).otherwise(0L))
-          .cast("double") / count(lit(1)), 6).as("single_day_frac"),
-        frac(col("lifespan_days") < col("p50")).as("lt50"),
-        frac(col("lifespan_days") <= col("p50")).as("le50"),
-        frac(col("lifespan_days") < col("p90")).as("lt90"),
-        frac(col("lifespan_days") <= col("p90")).as("le90"),
-        frac(col("lifespan_days") < col("p99")).as("lt99"),
-        frac(col("lifespan_days") <= col("p99")).as("le99"))
+        lifespanMeans ++ Seq(
+          frac(col("lifespan_days") < col("p50")).as("lt50"),
+          frac(col("lifespan_days") <= col("p50")).as("le50"),
+          frac(col("lifespan_days") < col("p90")).as("lt90"),
+          frac(col("lifespan_days") <= col("p90")).as("le90"),
+          frac(col("lifespan_days") < col("p99")).as("lt99"),
+          frac(col("lifespan_days") <= col("p99")).as("le99")): _*)
       .select(col("n_users"), col("mean_active_days"),
         col("mean_events_per_user"), col("single_day_frac"),
         contained(0.5, col("lt50"), col("le50")).as("p50_within_tol"),
@@ -908,26 +902,14 @@ object EventOps {
     * against the exact profile.
     */
   def userLifespanApprox(events: DataFrame, accuracy: Int = 10000): DataFrame =
-    events
-      .groupBy("user_id")
-      .agg(
-        datediff(to_date(max("ts")), to_date(min("ts"))).as("lifespan_days"),
-        countDistinct(to_date(col("ts"))).as("active_days"),
-        count(lit(1)).as("n_events"))
+    userLifespans(events)
       .agg(
         count(lit(1)).as("n_users"),
-        percentile_approx(col("lifespan_days"), lit(0.5), lit(accuracy))
-          .cast("double").as("p50_lifespan_days"),
-        percentile_approx(col("lifespan_days"), lit(0.9), lit(accuracy))
-          .cast("double").as("p90_lifespan_days"),
-        percentile_approx(col("lifespan_days"), lit(0.99), lit(accuracy))
-          .cast("double").as("p99_lifespan_days"),
-        round(sum("active_days").cast("double") / count(lit(1)), 6)
-          .as("mean_active_days"),
-        round(sum("n_events").cast("double") / count(lit(1)), 6)
-          .as("mean_events_per_user"),
-        round(sum(when(col("lifespan_days") === 0, 1L).otherwise(0L))
-          .cast("double") / count(lit(1)), 6).as("single_day_frac"))
+        Seq(
+          approxLifespan(0.5, accuracy).as("p50_lifespan_days"),
+          approxLifespan(0.9, accuracy).as("p90_lifespan_days"),
+          approxLifespan(0.99, accuracy).as("p99_lifespan_days"))
+          ++ lifespanMeans: _*)
 
   /** Weekly cohort retention matrix — THE product-analytics
     * artifact: users cohorted by first-activity week, each
@@ -1214,21 +1196,39 @@ object EventOps {
     val v = ((col("s2") - col("n") * col("n")).cast("double") -
       (col("s1") - col("n")).cast("double") *
         (col("s1") - col("n")).cast("double") / rest) / rest
-    slotted.join(broadcast(profile), Seq("dow", "hour_of_day"))
-      .filter(col("cnt") > 1L)
+    slotZScores(
+      slotted.join(broadcast(profile), Seq("dow", "hour_of_day"))
+        .filter(col("cnt") > 1L), m, v, sigmas)
+  }
+
+  /** Hours of a slot-profile join whose z-score against the slot
+    * mean `m` and variance `v` exceeds `sigmas`; zero-variance slots
+    * never score. */
+  private[graft] def slotZScores(joined: DataFrame, m: Column, v: Column,
+                                 sigmas: Double): DataFrame =
+    joined
       .select(col("hour_bucket"), col("n").as("n_events"),
         col("dow"), col("hour_of_day"),
         m.as("profile_mean"), v.as("variance"),
         ((col("n").cast("double") - m) / sqrt(v)).as("z"))
       .filter(col("variance") > 0.0 && abs(col("z")) > sigmas)
       .drop("variance")
-  }
 
   /** The spine-filled hourly series with (dow, hour-of-day) slot
     * keys — shared by [[deseasonalizedAnomaly]] (profile + residual
     * join) and [[slotProfile]]. Pinned: both consumers would
     * otherwise re-aggregate the event log. */
-  private def slottedHours(events: DataFrame): DataFrame = {
+  private def slottedHours(events: DataFrame): DataFrame =
+    filledHours(events)
+      .select(col("hour_bucket"), coalesce(col("n"), lit(0L)).as("n"),
+        dayofweek(col("hour_bucket")).cast("long").as("dow"),
+        hour(col("hour_bucket")).cast("long").as("hour_of_day"))
+      .localCheckpoint(true) // profile agg + residual join share it
+
+  /** Hourly event counts left-joined onto the spine of every hour
+    * between the first and the last event; empty hours carry a null
+    * `n`. */
+  private def filledHours(events: DataFrame): DataFrame = {
     val hourly = events
       .groupBy(date_trunc("hour", col("ts")).as("hour_bucket"))
       .agg(count(lit(1)).as("n"))
@@ -1239,10 +1239,6 @@ object EventOps {
       sequence(col("lo"), col("hi"), expr("interval 1 hour")))
       .as("hour_bucket"))
     spine.join(hourly, Seq("hour_bucket"), "left")
-      .select(col("hour_bucket"), coalesce(col("n"), lit(0L)).as("n"),
-        dayofweek(col("hour_bucket")).cast("long").as("dow"),
-        hour(col("hour_bucket")).cast("long").as("hour_of_day"))
-      .localCheckpoint(true) // profile agg + residual join share it
   }
 
   private def slotProfileOf(slotted: DataFrame): DataFrame =
@@ -1392,6 +1388,14 @@ object EventOps {
       .select(col("state"), round(col("p"), 9).as("p_stationary"))
   }
 
+  /** The day halfway between the first and last event day, `mid`:
+    * days up to it form the baseline half. */
+  private def midDay(events: DataFrame): DataFrame =
+    events
+      .agg(date_add(min(to_date(col("ts"))),
+        floor(datediff(max(to_date(col("ts"))), min(to_date(col("ts")))) / 2)
+          .cast("int")).as("mid"))
+
   /** Population-stability index of the event `value` distribution
     * between the corpus's first and second half (by day) — the
     * standard model-monitoring drift score: decile cut-points come
@@ -1412,10 +1416,7 @@ object EventOps {
     val probs = (1 to 9).map(_ / 10.0)
     val tagged = events
       .select(col("value"), to_date(col("ts")).as("day"))
-      .crossJoin(broadcast(events
-        .agg(date_add(min(to_date(col("ts"))),
-          floor(datediff(max(to_date(col("ts"))), min(to_date(col("ts")))) / 2)
-            .cast("int")).as("mid"))))
+      .crossJoin(broadcast(midDay(events)))
       .withColumn("is_a", col("day") <= col("mid"))
       .localCheckpoint(true) // percentile pass + bucketing share it
     val cuts = tagged.filter(col("is_a"))
@@ -1429,21 +1430,7 @@ object EventOps {
       .agg(
         sum(when(col("is_a"), 1L).otherwise(0L)).as("n_a"),
         sum(when(col("is_a"), 0L).otherwise(1L)).as("n_b"))
-    val all = Window.orderBy("bucket")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val pa = (col("n_a") + lit(0.5)) /
-      (sum("n_a").over(all) + lit(0.5 * nBuckets))
-    val pb = (col("n_b") + lit(0.5)) /
-      (sum("n_b").over(all) + lit(0.5 * nBuckets))
-    counts
-      .withColumn("p_a", pa).withColumn("p_b", pb)
-      .withColumn("psi_term", (col("p_b") - col("p_a")) *
-        log(col("p_b") / col("p_a")))
-      .withColumn("psi_total", sum("psi_term").over(all))
-      .select(col("bucket"), col("n_a"), col("n_b"),
-        round(col("p_a"), 6).as("p_a"), round(col("p_b"), 6).as("p_b"),
-        round(col("psi_term"), 6).as("psi_term"),
-        round(col("psi_total"), 6).as("psi_total"))
+    psi(counts, "bucket")(_ => lit(0.5 * nBuckets))
   }
 
   /** Out-of-order (disorder) profile of the event feed — the
@@ -1518,19 +1505,22 @@ object EventOps {
     * docs/ORACLE_NOTES.md). Scale: the aggregate carries O(types)
     * groups of 6 doubles; nothing else leaves the map side.
     */
-  def abTest(events: DataFrame, salt: String = "ab42"): DataFrame = {
+  def abTest(events: DataFrame, salt: String = "ab42"): DataFrame =
+    welchReadout(armMoments(events, salt), keyCols = Seq(col("event_type")))
+
+  /** Per event type, the sufficient statistics (n, Σv, Σv²) of each
+    * arm of the `salt`-keyed 50/50 user coin, in one aggregate. */
+  private def armMoments(events: DataFrame, salt: String): DataFrame = {
     val isA = Sampling.sampleKey(col("user_id"), salt) < lit("80000000")
     val va = when(col("is_a"), col("value")).otherwise(lit(0.0))
     val vb = when(!col("is_a"), col("value")).otherwise(lit(0.0))
-    welchReadout(
-      events.select(col("event_type"), isA.as("is_a"), col("value"))
-        .groupBy("event_type")
-        .agg(
-          sum(when(col("is_a"), 1L).otherwise(0L)).as("n_a"),
-          sum(when(!col("is_a"), 1L).otherwise(0L)).as("n_b"),
-          sum(va).as("s_a"), sum(vb).as("s_b"),
-          sum(va * col("value")).as("q_a"), sum(vb * col("value")).as("q_b")),
-      keyCols = Seq(col("event_type")))
+    events.select(col("event_type"), isA.as("is_a"), col("value"))
+      .groupBy("event_type")
+      .agg(
+        sum(when(col("is_a"), 1L).otherwise(0L)).as("n_a"),
+        sum(when(!col("is_a"), 1L).otherwise(0L)).as("n_b"),
+        sum(va).as("s_a"), sum(vb).as("s_b"),
+        sum(va * col("value")).as("q_a"), sum(vb * col("value")).as("q_b"))
   }
 
   /** Closed-form Welch t / Welch–Satterthwaite df over the six
@@ -1649,22 +1639,13 @@ object EventOps {
   def abTestMde(events: DataFrame, salt: String = "ab42"): DataFrame = {
     val zAlpha = 1.959963984540054 // Φ⁻¹(0.975)
     val zBeta = 0.8416212335729143 // Φ⁻¹(0.80)
-    val isA = Sampling.sampleKey(col("user_id"), salt) < lit("80000000")
-    val va = when(col("is_a"), col("value")).otherwise(lit(0.0))
-    val vb = when(!col("is_a"), col("value")).otherwise(lit(0.0))
     val varA = greatest((col("q_a") - col("s_a") * col("s_a") / col("n_a")) /
       (col("n_a") - lit(1)), lit(0.0))
     val varB = greatest((col("q_b") - col("s_b") * col("s_b") / col("n_b")) /
       (col("n_b") - lit(1)), lit(0.0))
     val se2 = varA / col("n_a") + varB / col("n_b")
     val mde = lit(zAlpha + zBeta) * sqrt(se2)
-    events.select(col("event_type"), isA.as("is_a"), col("value"))
-      .groupBy("event_type")
-      .agg(
-        sum(when(col("is_a"), 1L).otherwise(0L)).as("n_a"),
-        sum(when(!col("is_a"), 1L).otherwise(0L)).as("n_b"),
-        sum(va).as("s_a"), sum(vb).as("s_b"),
-        sum(va * col("value")).as("q_a"), sum(vb * col("value")).as("q_b"))
+    armMoments(events, salt)
       .filter(col("n_a") > 1 && col("n_b") > 1 && se2 > 0 &&
         col("s_b") =!= 0.0)
       .select(col("event_type"), col("n_a"), col("n_b"),
@@ -1903,28 +1884,40 @@ object EventOps {
   def typePsi(events: DataFrame): DataFrame = {
     val counts = events
       .select(col("event_type"), to_date(col("ts")).as("day"))
-      .crossJoin(broadcast(events
-        .agg(date_add(min(to_date(col("ts"))),
-          floor(datediff(max(to_date(col("ts"))), min(to_date(col("ts")))) / 2)
-            .cast("int")).as("mid"))))
+      .crossJoin(broadcast(midDay(events)))
       .groupBy("event_type")
       .agg(
         sum(when(col("day") <= col("mid"), 1L).otherwise(0L)).as("n_a"),
         sum(when(col("day") <= col("mid"), 0L).otherwise(1L)).as("n_b"))
-    val all = Window.orderBy("event_type")
+    categoricalPsi(counts, "event_type")
+  }
+
+  /** Population-stability index over per-`key` half counts
+    * (`n_a`, `n_b`): Laplace-smoothed shares `(c + ½)/(n + smoothing)`,
+    * the smoothing term built over the whole-relation window; then
+    * each key's `(p_b − p_a)·ln(p_b/p_a)` term and their total. The
+    * windows run over the bounded key relation only.
+    */
+  private[graft] def psi(counts: DataFrame, key: String)(
+      smoothing: WindowSpec => Column): DataFrame = {
+    val all = Window.orderBy(key)
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val pa = (col("n_a") + lit(0.5)) /
-      (sum("n_a").over(all) + lit(0.5) * count(lit(1)).over(all))
+      (sum("n_a").over(all) + smoothing(all))
     val pb = (col("n_b") + lit(0.5)) /
-      (sum("n_b").over(all) + lit(0.5) * count(lit(1)).over(all))
+      (sum("n_b").over(all) + smoothing(all))
     counts
       .withColumn("p_a", pa).withColumn("p_b", pb)
       .withColumn("psi_term", (col("p_b") - col("p_a")) *
         log(col("p_b") / col("p_a")))
       .withColumn("psi_total", sum("psi_term").over(all))
-      .select(col("event_type"), col("n_a"), col("n_b"),
+      .select(col(key), col("n_a"), col("n_b"),
         round(col("p_a"), 6).as("p_a"), round(col("p_b"), 6).as("p_b"),
         round(col("psi_term"), 6).as("psi_term"),
         round(col("psi_total"), 6).as("psi_total"))
   }
+
+  /** [[psi]] smoothed over the categories present: ½ per key row. */
+  private[graft] def categoricalPsi(counts: DataFrame, key: String): DataFrame =
+    psi(counts, key)(all => lit(0.5) * count(lit(1)).over(all))
 }

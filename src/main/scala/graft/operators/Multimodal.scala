@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -129,27 +129,27 @@ object Multimodal {
     */
   def blobNearDupPairs(docs: DataFrame, frameSize: Int = 64,
                        stride: Int = 128, tau: Double = 0.3,
-                       maxDf: Int = 64): DataFrame = {
+                       maxDf: Int = 64): DataFrame =
+    framePairs(docs, frameSize, stride, maxDf, col("id_a") < col("id_b"), tau)
+      .select("id_a", "id_b", "n_shared", "chunk_jaccard")
+
+  /** Blob pairs kept by `keep` whose Jaccard over their distinct
+    * frame hashes (df-capped at `maxDf`) reaches `tau`, with
+    * `n_shared` and `chunk_jaccard`. */
+  private def framePairs(docs: DataFrame, frameSize: Int, stride: Int,
+                         maxDf: Int, keep: Column, tau: Double): DataFrame = {
     val perDoc = frameSample(docs, frameSize, stride)
       .select(col("doc_id"), col("frame_md5")).distinct()
       .localCheckpoint(true) // consumed by sizes, postings, and nothing re-derives frames
     val sizes = perDoc.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val shared = perDoc.groupBy("frame_md5")
-      .agg(graft.functions.BoundedCollectSetAgg
-        .boundedCollectSet(col("doc_id"), maxDf + 1).as("ids"))
-      .filter(size(col("ids")).between(2, maxDf))
-      .select(explode(col("ids")).as("id_a"), col("ids"))
-      .select(col("id_a"), explode(col("ids")).as("id_b"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("n_shared"))
+    val shared = Dedup.sharedPostings(perDoc, "frame_md5", maxDf,
+      keep, "n_shared")
     shared
       .join(sizes.select(col("doc_id").as("id_a"), col("n").as("n_a")), Seq("id_a"))
       .join(sizes.select(col("doc_id").as("id_b"), col("n").as("n_b")), Seq("id_b"))
       .withColumn("chunk_jaccard",
         round(col("n_shared") / (col("n_a") + col("n_b") - col("n_shared")), 6))
       .filter(col("chunk_jaccard") >= tau)
-      .select("id_a", "id_b", "n_shared", "chunk_jaccard")
   }
 
   /** INCREMENTAL blob near-dup — the daily-ingest shape for binary
@@ -171,25 +171,8 @@ object Multimodal {
                            tau: Double = 0.3, maxDf: Int = 64): DataFrame = {
     val tagged = newDocs.select((col("doc_id") * 2 + 1).as("doc_id"), col("text"))
       .unionByName(corpus.select((col("doc_id") * 2).as("doc_id"), col("text")))
-    val perDoc = frameSample(tagged, frameSize, stride)
-      .select(col("doc_id"), col("frame_md5")).distinct()
-      .localCheckpoint(true) // sizes + postings share it
-    val sizes = perDoc.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val shared = perDoc.groupBy("frame_md5")
-      .agg(graft.functions.BoundedCollectSetAgg
-        .boundedCollectSet(col("doc_id"), maxDf + 1).as("ids"))
-      .filter(size(col("ids")).between(2, maxDf))
-      .select(explode(col("ids")).as("id_a"), col("ids"))
-      .select(col("id_a"), explode(col("ids")).as("id_b"))
-      .filter(col("id_a") % 2 === 1 && col("id_b") % 2 === 0)
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("n_shared"))
-    shared
-      .join(sizes.select(col("doc_id").as("id_a"), col("n").as("n_a")), Seq("id_a"))
-      .join(sizes.select(col("doc_id").as("id_b"), col("n").as("n_b")), Seq("id_b"))
-      .withColumn("chunk_jaccard",
-        round(col("n_shared") / (col("n_a") + col("n_b") - col("n_shared")), 6))
-      .filter(col("chunk_jaccard") >= tau)
+    framePairs(tagged, frameSize, stride, maxDf,
+        col("id_a") % 2 === 1 && col("id_b") % 2 === 0, tau)
       .select(expr("id_a div 2").as("new_id"), expr("id_b div 2").as("corpus_id"),
         col("n_shared"), col("chunk_jaccard"))
   }
@@ -329,6 +312,20 @@ object Multimodal {
     imageIoMemCache
     javax.imageio.ImageIO.read(in)
   }
+
+  /** The (doc_id, payload) pairs of `blobs` as a typed dataset. */
+  private def payloads(blobs: DataFrame): Dataset[(Long, Array[Byte])] = {
+    import blobs.sparkSession.implicits._
+    blobs.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
+  }
+
+  /** `bytes` decoded by ImageIO; a payload no codec reads fails,
+    * naming doc `d`. */
+  private def decodedImage(d: Long, bytes: Array[Byte]): java.awt.image.BufferedImage = {
+    val img = ioRead(new java.io.ByteArrayInputStream(bytes))
+    require(img != null, s"undecodable payload for doc $d")
+    img
+  }
   private def ioWrite(img: java.awt.image.RenderedImage, fmt: String,
                       out: java.io.OutputStream): Unit = {
     imageIoMemCache
@@ -412,12 +409,9 @@ object Multimodal {
   def decodeImageStats(blobs: DataFrame): DataFrame = {
     val spark = blobs.sparkSession
     import spark.implicits._
-    blobs.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
+    payloads(blobs)
       .map { case (d, bytes) =>
-        val img = ioRead(
-          new java.io.ByteArrayInputStream(bytes))
-        require(img != null, s"undecodable payload for doc $d")
+        val img = decodedImage(d, bytes)
         val w = img.getWidth; val h = img.getHeight
         var sr = 0L; var sg = 0L; var sb = 0L
         var y = 0
@@ -454,12 +448,9 @@ object Multimodal {
     require(factor >= 1, s"factor must be >= 1, got $factor")
     val spark = blobs.sparkSession
     import spark.implicits._
-    blobs.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
+    payloads(blobs)
       .map { case (d, bytes) => attributed(d) {
-        val img = ioRead(
-          new java.io.ByteArrayInputStream(bytes))
-        require(img != null, s"undecodable payload for doc $d")
+        val img = decodedImage(d, bytes)
         val w = img.getWidth; val h = img.getHeight
         require(w % factor == 0 && h % factor == 0,
           s"doc $d: ${w}x$h not tileable by factor $factor")
@@ -583,12 +574,9 @@ object Multimodal {
   def phashSignatures(blobs: DataFrame, side: Int = 8): DataFrame = {
     val spark = blobs.sparkSession
     import spark.implicits._
-    blobs.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
+    payloads(blobs)
       .map { case (d, bytes) =>
-        val img = ioRead(
-          new java.io.ByteArrayInputStream(bytes))
-        require(img != null, s"undecodable payload for doc $d")
+        val img = decodedImage(d, bytes)
         require(img.getWidth == img.getHeight && img.getWidth % side == 0,
           s"doc $d: expected a square multiple of ${side}x$side, " +
             s"got ${img.getWidth}x${img.getHeight}")
@@ -651,15 +639,20 @@ object Multimodal {
   def phashPairs(sigs: DataFrame, side: Int = 8, maxHamming: Int = 6,
                  bands: Int = 7, maxBucket: Int = 256): DataFrame = {
     val totalBits = side * (side - 1)
-    require(totalBits % bands == 0,
-      s"bands must divide $totalBits, got $bands")
-    require(bands > maxHamming,
-      s"lossless banding needs bands > maxHamming ($bands vs $maxHamming)")
+    requireLosslessBands(totalBits, bands, maxHamming)
     // `sigs` is the persisted signature store (the production shape —
     // perceptual hashes are written once per corpus snapshot, two
     // longs per doc): every band group reads it, and none re-runs the
     // decode that is the tier's dominant cost
     bandedHammingPairs(sigs, "dhash", totalBits, maxHamming, bands, maxBucket)
+  }
+
+  /** `bands` must tile `totalBits` and exceed `maxHamming`: then
+    * any two signatures within `maxHamming` agree on a whole band. */
+  private def requireLosslessBands(totalBits: Int, bands: Int, maxHamming: Int): Unit = {
+    require(totalBits % bands == 0, s"bands must divide $totalBits, got $bands")
+    require(bands > maxHamming,
+      s"lossless banding needs bands > maxHamming ($bands vs $maxHamming)")
   }
 
   /** Pigeonhole-lossless banded Hamming self-join over any integer
@@ -674,7 +667,17 @@ object Multimodal {
     * O(bucket²). */
   private def bandedHammingPairs(sg: DataFrame, sigCol: String,
                                  totalBits: Int, maxHamming: Int,
-                                 bands: Int, maxBucket: Int): DataFrame = {
+                                 bands: Int, maxBucket: Int): DataFrame =
+    bandedHammingMatches(sg, sigCol, totalBits, maxHamming, bands, maxBucket, "h")
+      .select("id_a", "id_b", "hamming")
+
+  /** [[bandedHammingPairs]] before the projection: every verified
+    * (id_a, id_b) match once per distinct signature pair, the two
+    * signatures named `<sigName>_a` and `<sigName>_b`. */
+  private def bandedHammingMatches(sg: DataFrame, sigCol: String,
+                                   totalBits: Int, maxHamming: Int,
+                                   bands: Int, maxBucket: Int,
+                                   sigName: String): DataFrame = {
     val bits = totalBits / bands
     val mask = (1L << bits) - 1
     val banded = sg.select(col("doc_id"), col(sigCol).as("sig"),
@@ -691,11 +694,11 @@ object Multimodal {
       .select(col("a"), explode(col("ms")).as("b"))
       .filter(col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        col("a.sig").as("h_a"), col("b.sig").as("h_b"))
+        col("a.sig").as(s"${sigName}_a"), col("b.sig").as(s"${sigName}_b"))
       .distinct()
-      .withColumn("hamming", bit_count(col("h_a").bitwiseXOR(col("h_b"))))
+      .withColumn("hamming",
+        bit_count(col(s"${sigName}_a").bitwiseXOR(col(s"${sigName}_b"))))
       .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
   }
 
   /** Per-blob perceptual-dup summary — the keep/suppress decision
@@ -777,10 +780,7 @@ object Multimodal {
                        side: Int = 8, maxHamming: Int = 6,
                        bands: Int = 7): DataFrame = {
     val totalBits = side * (side - 1)
-    require(totalBits % bands == 0,
-      s"bands must divide $totalBits, got $bands")
-    require(bands > maxHamming,
-      s"lossless banding needs bands > maxHamming ($bands vs $maxHamming)")
+    requireLosslessBands(totalBits, bands, maxHamming)
     bandedHammingIncremental(newSigs.withColumnRenamed("dhash", "sig"),
       storeSigs.withColumnRenamed("dhash", "sig"),
       totalBits, maxHamming, bands)
@@ -812,15 +812,23 @@ object Multimodal {
       .withColumn("hamming",
         bit_count(col("h_n").bitwiseXOR(col("h_s"))).cast("int"))
       .filter(col("hamming") <= maxHamming)
+    bestStoreMatch(ns.select("doc_id"), pairs, count(lit(1)))
+  }
+
+  /** One row per id of `newIds`: `nMatches` over its store matches
+    * in `pairs` (doc_id, store_id, hamming), the best match (min
+    * (hamming, store_id)) and keep = no match at all. */
+  private def bestStoreMatch(newIds: DataFrame, pairs: DataFrame,
+                             nMatches: Column): DataFrame = {
     val w = Window.partitionBy("doc_id")
       .orderBy(col("hamming"), col("store_id"))
     val best = pairs
       .withColumn("rn", row_number().over(w))
       .groupBy("doc_id").agg(
-        count(lit(1)).as("n_matches"),
+        nMatches.as("n_matches"),
         max(when(col("rn") === 1, col("store_id"))).as("match_id"),
         max(when(col("rn") === 1, col("hamming"))).as("best_hamming"))
-    ns.select("doc_id").join(best, Seq("doc_id"), "left")
+    newIds.join(best, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_matches"), lit(0L)).as("n_matches"),
         coalesce(col("match_id"), lit(-1L)).as("match_id"),
@@ -848,9 +856,7 @@ object Multimodal {
     */
   def audioSigIncremental(newSigs: DataFrame, storeSigs: DataFrame,
                           maxHamming: Int = 6, bands: Int = 7): DataFrame = {
-    require(63 % bands == 0, s"bands must divide 63, got $bands")
-    require(bands > maxHamming,
-      s"lossless banding needs bands > maxHamming ($bands vs $maxHamming)")
+    requireLosslessBands(63, bands, maxHamming)
     bandedHammingIncremental(newSigs.withColumnRenamed("asig", "sig"),
       storeSigs.withColumnRenamed("asig", "sig"), 63, maxHamming, bands)
   }
@@ -988,7 +994,6 @@ object Multimodal {
     * run over that bounded relation only.
     */
   def formatPsi(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val counts = asBlobs(docs)
       .select(hex(substring(col("payload"), 1, 2)).as("magic2"),
         col("doc_id"))
@@ -998,24 +1003,48 @@ object Multimodal {
       .agg(
         sum(when(col("doc_id") <= col("mid"), 1L).otherwise(0L)).as("n_a"),
         sum(when(col("doc_id") <= col("mid"), 0L).otherwise(1L)).as("n_b"))
-    val all = Window.orderBy("magic2")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val pa = (col("n_a") + lit(0.5)) /
-      (sum("n_a").over(all) + lit(0.5) * count(lit(1)).over(all))
-    val pb = (col("n_b") + lit(0.5)) /
-      (sum("n_b").over(all) + lit(0.5) * count(lit(1)).over(all))
-    counts
-      .withColumn("p_a", pa).withColumn("p_b", pb)
-      .withColumn("psi_term", (col("p_b") - col("p_a")) *
-        log(col("p_b") / col("p_a")))
-      .withColumn("psi_total", sum("psi_term").over(all))
-      .select(col("magic2"), col("n_a"), col("n_b"),
-        round(col("p_a"), 6).as("p_a"), round(col("p_b"), 6).as("p_b"),
-        round(col("psi_term"), 6).as("psi_term"),
-        round(col("psi_total"), 6).as("psi_total"))
+    EventOps.categoricalPsi(counts, "magic2")
+  }
+
+  private def wavStream(bytes: Array[Byte]): javax.sound.sampled.AudioInputStream =
+    javax.sound.sampled.AudioSystem.getAudioInputStream(
+      new java.io.ByteArrayInputStream(bytes))
+
+  /** The format and sample bytes of WAV `bytes`; anything but MONO
+    * signed 16-bit PCM fails, naming doc `d`. */
+  private def monoPcm16(d: Long, bytes: Array[Byte])
+      : (javax.sound.sampled.AudioFormat, Array[Byte]) = {
+    val ais = wavStream(bytes)
+    val fmt = ais.getFormat
+    require(fmt.getEncoding ==
+      javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED &&
+      fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1,
+      s"doc $d: expected MONO signed 16-bit PCM, got $fmt")
+    (fmt, ais.readAllBytes())
+  }
+
+  /** Sample `i` of 16-bit PCM `data`, sign-extended; `le` when the
+    * bytes are little-endian. */
+  private def sample16(data: Array[Byte], le: Boolean, i: Int): Int = {
+    val lo = data(if (le) 2 * i else 2 * i + 1) & 0xff
+    val hi = data(if (le) 2 * i + 1 else 2 * i).toInt
+    (hi << 8) | lo
   }
 
   case class WavBlob(doc_id: Long, payload: Array[Byte])
+
+  /** Doc `d`'s WAV container around `n` mono signed 16-bit
+    * little-endian samples `pcm` at `sampleRate`, written by the
+    * JDK's WAV writer. */
+  private def wavBlob(d: Long, pcm: Array[Byte], sampleRate: Float, n: Long): WavBlob = {
+    val fmt = new javax.sound.sampled.AudioFormat(sampleRate, 16, 1, true, false)
+    val ais = new javax.sound.sampled.AudioInputStream(
+      new java.io.ByteArrayInputStream(pcm), fmt, n)
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.sound.sampled.AudioSystem.write(ais,
+      javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
+    WavBlob(d, bos.toByteArray)
+  }
   case class DecodedAudio(doc_id: Long, sample_rate: Int, channels: Int,
                           n_samples: Long, sum_samples: Long, sum_abs: Long)
 
@@ -1046,14 +1075,7 @@ object Multimodal {
         pcm(2 * i + 1) = ((v >> 8) & 0xff).toByte
         i += 1
       }
-      val fmt = new javax.sound.sampled.AudioFormat(
-        sampleRate.toFloat, 16, 1, true, false)
-      val ais = new javax.sound.sampled.AudioInputStream(
-        new java.io.ByteArrayInputStream(pcm), fmt, nSamples.toLong)
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.sound.sampled.AudioSystem.write(ais,
-        javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-      WavBlob(d, bos.toByteArray)
+      wavBlob(d, pcm, sampleRate.toFloat, nSamples)
     }.toDF()
   }
 
@@ -1117,14 +1139,7 @@ object Multimodal {
         pcm(2 * i + 1) = ((v >> 8) & 0xff).toByte
         i += 1
       }
-      val fmt = new javax.sound.sampled.AudioFormat(
-        sampleRate.toFloat, 16, 1, true, false)
-      val ais = new javax.sound.sampled.AudioInputStream(
-        new java.io.ByteArrayInputStream(pcm), fmt, n.toLong)
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.sound.sampled.AudioSystem.write(ais,
-        javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-      WavBlob(d, bos.toByteArray)
+      wavBlob(d, pcm, sampleRate.toFloat, n)
     }.toDF()
   }
 
@@ -1142,25 +1157,13 @@ object Multimodal {
   def audioSignatures(blobs: DataFrame): DataFrame = {
     val spark = blobs.sparkSession
     import spark.implicits._
-    blobs.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
+    payloads(blobs)
       .map { case (d, bytes) =>
-        val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(bytes))
-        val fmt = ais.getFormat
-        require(fmt.getEncoding ==
-          javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED &&
-          fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1,
-          s"doc $d: expected MONO signed 16-bit PCM, got $fmt")
-        val data = ais.readAllBytes()
+        val (fmt, data) = monoPcm16(d, bytes)
         require(data.length >= 128,
           s"doc $d: signature needs >= 64 samples, got ${data.length / 2}")
         val le = !fmt.isBigEndian
-        def smp(i: Int): Int = {
-          val lo = data(if (le) 2 * i else 2 * i + 1) & 0xff
-          val hi = data(if (le) 2 * i + 1 else 2 * i).toInt
-          (hi << 8) | lo
-        }
+        def smp(i: Int): Int = sample16(data, le, i)
         var sig = 0L
         var i = 0
         while (i < 63) {
@@ -1221,14 +1224,7 @@ object Multimodal {
         pcm(2 * i + 1) = ((v >> 8) & 0xff).toByte
         i += 1
       }
-      val fmt = new javax.sound.sampled.AudioFormat(
-        sampleRate.toFloat, 16, 1, true, false)
-      val ais = new javax.sound.sampled.AudioInputStream(
-        new java.io.ByteArrayInputStream(pcm), fmt, n.toLong)
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.sound.sampled.AudioSystem.write(ais,
-        javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-      WavBlob(d, bos.toByteArray)
+      wavBlob(d, pcm, sampleRate.toFloat, n)
     }.toDF()
   }
 
@@ -1253,26 +1249,14 @@ object Multimodal {
                             wSel: Int = 16): DataFrame = {
     val spark = blobs.sparkSession
     import spark.implicits._
-    blobs.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
+    payloads(blobs)
       .flatMap { case (d, bytes) =>
-        val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(bytes))
-        val fmt = ais.getFormat
-        require(fmt.getEncoding ==
-          javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED &&
-          fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1,
-          s"doc $d: expected MONO signed 16-bit PCM, got $fmt")
-        val data = ais.readAllBytes()
+        val (fmt, data) = monoPcm16(d, bytes)
         val n = data.length / 2
         require(n >= win,
           s"doc $d: winnow signatures need >= $win samples, got $n")
         val le = !fmt.isBigEndian
-        def smp(i: Int): Int = {
-          val lo = data(if (le) 2 * i else 2 * i + 1) & 0xff
-          val hi = data(if (le) 2 * i + 1 else 2 * i).toInt
-          (hi << 8) | lo
-        }
+        def smp(i: Int): Int = sample16(data, le, i)
         val nPos = n - win + 1
         val sigs = new Array[Long](nPos)
         var s = 0L
@@ -1320,41 +1304,14 @@ object Multimodal {
     * mm_phash_pairs pattern). */
   def audioWinnowPairs(sigs: DataFrame, maxHamming: Int = 0,
                        bands: Int = 7, maxBucket: Int = 256): DataFrame = {
-    require(63 % bands == 0, s"bands must divide 63, got $bands")
-    require(bands > maxHamming,
-      s"lossless banding needs bands > maxHamming ($bands vs $maxHamming)")
+    requireLosslessBands(63, bands, maxHamming)
     if (maxHamming == 0) {
-      return sigs.groupBy("wsig")
-        .agg(collect_set(col("doc_id")).as("ds"))
-        .filter(size(col("ds")) > 1)
-        .select(slice(sort_array(col("ds")), 1, maxBucket).as("ds"))
-        .select(explode(col("ds")).as("id_a"), col("ds"))
-        .select(col("id_a"), explode(col("ds")).as("id_b"))
-        .filter(col("id_a") < col("id_b"))
+      return bucketPairs(sigs, "wsig", maxBucket)
         .groupBy("id_a", "id_b")
         .agg(min(lit(0)).cast("int").as("best_hamming"),
           count(lit(1)).as("n_shared"))
     }
-    val bits = 63 / bands
-    val mask = (1L << bits) - 1
-    val banded = sigs.select(col("doc_id"), col("wsig").as("sig"),
-      posexplode(expr(
-        s"transform(sequence(0, ${bands - 1}), " +
-          s"b -> shiftright(wsig, b * $bits) & ${mask}L)")))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_bits")
-    banded
-      .groupBy("band", "band_bits")
-      .agg(collect_set(struct(col("doc_id"), col("sig"))).as("ms"))
-      .filter(size(col("ms")) > 1)
-      .select(slice(sort_array(col("ms")), 1, maxBucket).as("ms"))
-      .select(explode(col("ms")).as("a"), col("ms"))
-      .select(col("a"), explode(col("ms")).as("b"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        col("a.sig").as("s_a"), col("b.sig").as("s_b"))
-      .distinct()
-      .withColumn("hamming", bit_count(col("s_a").bitwiseXOR(col("s_b"))))
-      .filter(col("hamming") <= maxHamming)
+    bandedHammingMatches(sigs, "wsig", 63, maxHamming, bands, maxBucket, "s")
       .groupBy("id_a", "id_b")
       .agg(min(col("hamming")).cast("int").as("best_hamming"),
         count(lit(1)).as("n_shared"))
@@ -1392,14 +1349,7 @@ object Multimodal {
                              maxHamming: Int = 0, bands: Int = 7): DataFrame = {
     require(63 % bands == 0 && bands > maxHamming, "lossless banding")
     if (maxHamming == 0) {
-      val p = newSigs.join(storeSigs
-          .select(col("doc_id").as("store_id"), col("wsig")), Seq("wsig"))
-        .select("doc_id", "store_id").distinct()
-      val best = p.groupBy("doc_id").agg(
-        count(lit(1)).as("n_matches"),
-        min(col("store_id")).as("match_id"))
-      return newSigs.select("doc_id").distinct()
-        .join(best, Seq("doc_id"), "left")
+      return exactStoreMatch(newSigs, storeSigs, "wsig")
         .select(col("doc_id"),
           coalesce(col("n_matches"), lit(0L)).as("n_matches"),
           coalesce(col("match_id"), lit(-1L)).as("match_id"),
@@ -1428,21 +1378,8 @@ object Multimodal {
       .filter(col("hamming") <= maxHamming)
       .select("doc_id", "store_id", "sig_doc_id", "sig_store_id", "hamming")
       .distinct()
-    val w = Window.partitionBy("doc_id")
-      .orderBy(col("hamming"), col("store_id"))
-    val best = qualifying
-      .withColumn("rn", row_number().over(w))
-      .groupBy("doc_id").agg(
-        countDistinct(col("store_id")).as("n_matches"),
-        max(when(col("rn") === 1, col("store_id"))).as("match_id"),
-        max(when(col("rn") === 1, col("hamming"))).as("best_hamming"))
-    newSigs.select("doc_id").distinct().join(best, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_matches"), lit(0L)).as("n_matches"),
-        coalesce(col("match_id"), lit(-1L)).as("match_id"),
-        coalesce(col("best_hamming"), lit(-1)).cast("int")
-          .as("best_hamming"),
-        (coalesce(col("n_matches"), lit(0L)) === 0).as("keep"))
+    bestStoreMatch(newSigs.select("doc_id").distinct(), qualifying,
+      countDistinct(col("store_id")))
   }
 
   /** Keep-THE-BEST-copy over the OFFSET-duplicate groups — the
@@ -1550,12 +1487,9 @@ object Multimodal {
                             win: Int = 3): DataFrame = {
     val spark = blobs.sparkSession
     import spark.implicits._
-    blobs.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
+    payloads(blobs)
       .flatMap { case (d, bytes) =>
-        val img = ioRead(
-          new java.io.ByteArrayInputStream(bytes))
-        require(img != null, s"undecodable payload for doc $d")
+        val img = decodedImage(d, bytes)
         val w = img.getWidth
         val h = img.getHeight
         require(w >= tile && h >= tile,
@@ -1649,15 +1583,20 @@ object Multimodal {
     * pairs the whole-image tier structurally cannot see
     * (spec-pinned, the audio-winnow pattern). */
   def imageWinnowPairs(sigs: DataFrame, maxBucket: Int = 256): DataFrame =
-    sigs.groupBy("fp")
+    bucketPairs(sigs, "fp", maxBucket)
+      .groupBy("id_a", "id_b")
+      .agg(count(lit(1)).as("n_shared"))
+
+  /** Every doc pair (id_a < id_b) sharing a `key` value, one row per
+    * shared value; each bucket keeps its `maxBucket` smallest ids. */
+  private def bucketPairs(sigs: DataFrame, key: String, maxBucket: Int): DataFrame =
+    sigs.groupBy(key)
       .agg(collect_set(col("doc_id")).as("ds"))
       .filter(size(col("ds")) > 1)
       .select(slice(sort_array(col("ds")), 1, maxBucket).as("ds"))
       .select(explode(col("ds")).as("id_a"), col("ds"))
       .select(col("id_a"), explode(col("ds")).as("id_b"))
       .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("n_shared"))
 
   /** Per-blob crop-duplicate summary over [[imageWinnowPairs]]:
     * keep = no smaller-id crop-duplicate, score = the shared
@@ -1689,6 +1628,21 @@ object Multimodal {
     keepBestOf(groups,
       sigs.groupBy("doc_id").agg(max(col("px")).as("rank_key")))
 
+  /** Each new doc left-joined to its exact `key` matches in the
+    * store: distinct matching store ids counted as `n_matches`, the
+    * smallest as `match_id` (both null when nothing matches). */
+  private def exactStoreMatch(newSigs: DataFrame, storeSigs: DataFrame,
+                              key: String): DataFrame = {
+    val p = newSigs.join(storeSigs
+        .select(col("doc_id").as("store_id"), col(key)), Seq(key))
+      .select("doc_id", "store_id").distinct()
+    val best = p.groupBy("doc_id").agg(
+      count(lit(1)).as("n_matches"),
+      min(col("store_id")).as("match_id"))
+    newSigs.select("doc_id").distinct()
+      .join(best, Seq("doc_id"), "left")
+  }
+
   /** Nightly-ingest twin of [[imageWinnowPairs]]: NEW images decode
     * and winnow once, their fingerprints probe the persisted store
     * by exact equi-join — history pays zero codec work. One row per
@@ -1697,14 +1651,7 @@ object Multimodal {
     * crop-duplicate in the store. */
   def imageWinnowIncremental(newSigs: DataFrame,
                              storeSigs: DataFrame): DataFrame = {
-    val p = newSigs.join(storeSigs
-        .select(col("doc_id").as("store_id"), col("fp")), Seq("fp"))
-      .select("doc_id", "store_id").distinct()
-    val best = p.groupBy("doc_id").agg(
-      count(lit(1)).as("n_matches"),
-      min(col("store_id")).as("match_id"))
-    newSigs.select("doc_id").distinct()
-      .join(best, Seq("doc_id"), "left")
+    exactStoreMatch(newSigs, storeSigs, "fp")
       .select(col("doc_id"),
         coalesce(col("n_matches"), lit(0L)).as("n_matches"),
         coalesce(col("match_id"), lit(-1L)).as("match_id"),
@@ -1720,9 +1667,7 @@ object Multimodal {
     * pair with their sources. */
   def audioSigPairs(sigs: DataFrame, maxHamming: Int = 6,
                     bands: Int = 7, maxBucket: Int = 256): DataFrame = {
-    require(63 % bands == 0, s"bands must divide 63, got $bands")
-    require(bands > maxHamming,
-      s"lossless banding needs bands > maxHamming ($bands vs $maxHamming)")
+    requireLosslessBands(63, bands, maxHamming)
     bandedHammingPairs(sigs, "asig", 63, maxHamming, bands, maxBucket)
   }
 
@@ -1770,17 +1715,9 @@ object Multimodal {
   def audioFeatures(blobs: DataFrame): DataFrame = {
     val spark = blobs.sparkSession
     import spark.implicits._
-    blobs.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
+    payloads(blobs)
       .map { case (d, bytes) =>
-        val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(bytes))
-        val fmt = ais.getFormat
-        require(fmt.getEncoding ==
-          javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED &&
-          fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1,
-          s"doc $d: expected MONO signed 16-bit PCM, got $fmt")
-        val data = ais.readAllBytes()
+        val (fmt, data) = monoPcm16(d, bytes)
         val le = !fmt.isBigEndian
         var i = 0; var n = 0L; var sumSq = 0L; var peak = 0L; var zc = 0L
         var prevNonNeg = true; var first = true
@@ -1800,20 +1737,6 @@ object Multimodal {
       }.toDF()
   }
 
-  /** REAL-decode audit over a WAV corpus, the audio twin of
-    * [[decodeImageStats]]: parse the container with the JDK's
-    * `javax.sound.sampled` reader (no external codec), reconstruct
-    * the signed 16-bit samples with the format's own endianness, and
-    * emit exact integer aggregates (Σ sample, Σ |sample|). PCM is
-    * lossless, so over a [[synthWavCorpus]] input the encode→decode
-    * round trip cancels and the output is bit-for-bit
-    * oracle-checkable from the sample recipe alone — a decoder that
-    * swapped endianness, dropped a frame, or mis-signed a sample
-    * would hash-mismatch. Throws on undecodable/non-16-bit payloads:
-    * audit tier, same contract as [[decodeImageStats]]; the
-    * never-throw production router remains [[decodeFrame]] (which
-    * stubs formats outside its codec set).
-    */
   /** REAL-codec audio DECIMATION resample (r16 — [[thumbnail]]'s
     * audio twin): whole-blob decode, keep every `factor`-th sample
     * (mono 16-bit contract), real WAV re-encode at
@@ -1831,20 +1754,12 @@ object Multimodal {
     require(factor >= 1, s"factor must be >= 1, got $factor")
     val spark = blobs.sparkSession
     import spark.implicits._
-    blobs.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
+    payloads(blobs)
       .map { case (d, bytes) => attributed(d) {
-        val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(bytes))
-        val fmt = ais.getFormat
-        require(fmt.getEncoding ==
-          javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED &&
-          fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1,
-          s"doc $d: expected MONO signed 16-bit PCM, got $fmt")
+        val (fmt, data) = monoPcm16(d, bytes)
         val rate = fmt.getSampleRate.toInt
         require(rate % factor == 0,
           s"doc $d: rate $rate not divisible by factor $factor")
-        val data = ais.readAllBytes()
         val le = !fmt.isBigEndian
         val n = data.length / 2
         val kept = (n + factor - 1) / factor
@@ -1856,25 +1771,30 @@ object Multimodal {
           pcm(2 * o + 1) = data(if (le) 2 * i + 1 else 2 * i)
           o += 1; i += factor
         }
-        val outFmt = new javax.sound.sampled.AudioFormat(
-          (rate / factor).toFloat, 16, 1, true, false)
-        val outAis = new javax.sound.sampled.AudioInputStream(
-          new java.io.ByteArrayInputStream(pcm), outFmt, kept.toLong)
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.sound.sampled.AudioSystem.write(outAis,
-          javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-        WavBlob(d, bos.toByteArray)
+        wavBlob(d, pcm, (rate / factor).toFloat, kept)
       } }.toDF()
   }
 
+  /** REAL-decode audit over a WAV corpus, the audio twin of
+    * [[decodeImageStats]]: parse the container with the JDK's
+    * `javax.sound.sampled` reader (no external codec), reconstruct
+    * the signed 16-bit samples with the format's own endianness, and
+    * emit exact integer aggregates (Σ sample, Σ |sample|). PCM is
+    * lossless, so over a [[synthWavCorpus]] input the encode→decode
+    * round trip cancels and the output is bit-for-bit
+    * oracle-checkable from the sample recipe alone — a decoder that
+    * swapped endianness, dropped a frame, or mis-signed a sample
+    * would hash-mismatch. Throws on undecodable/non-16-bit payloads:
+    * audit tier, same contract as [[decodeImageStats]]; the
+    * never-throw production router remains [[decodeFrame]] (which
+    * stubs formats outside its codec set).
+    */
   def decodeAudioStats(blobs: DataFrame): DataFrame = {
     val spark = blobs.sparkSession
     import spark.implicits._
-    blobs.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
+    payloads(blobs)
       .map { case (d, bytes) =>
-        val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(bytes))
+        val ais = wavStream(bytes)
         val fmt = ais.getFormat
         require(fmt.getEncoding ==
           javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED &&

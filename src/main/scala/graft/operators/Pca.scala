@@ -202,21 +202,10 @@ object Pca {
     val pq = broadcast(project(
       queries.select(col("vec_id").as("query_id"), col("embedding")), m)
       .withColumnRenamed("embedding", "pq_emb"))
-    val wApprox = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(round(col("cosine"), 6).desc, col("neighbor_id"))
-    val approx = pCorpus.crossJoin(pq)
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        gf.cosineSim(col("pq_emb"), col("p_emb")).as("cosine"))
-      .withColumn("rn", row_number().over(wApprox))
-      .filter(col("rn") <= k * rerank).drop("rn")
-    val exact = broadcast(approx.select("query_id", "neighbor_id"))
-      .join(corpus.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("n_emb")), Seq("neighbor_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        gf.cosineSim(col("q_emb"), col("n_emb")).as("cosine"))
-    Similarity.topKPerQuery(exact, k)
+    val approx = Similarity.roundedTopK(pCorpus.crossJoin(pq)
+      .transform(Similarity.scoredPairs(gf.cosineSim(col("pq_emb"), col("p_emb")))),
+      k * rerank)
+    Similarity.exactRerank(broadcast(approx.select("query_id", "neighbor_id")),
+      Similarity.neighborEmb(corpus), broadcast(q), k)
   }
 }

@@ -28,6 +28,47 @@ object Similarity {
     scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k).drop("rn")
   }
 
+  /** The top `k` neighbors per query by `bm25`, ties to the smaller
+    * neighbor id. */
+  private def topBm25(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("query_id")
+      .orderBy(col("bm25").desc, col("neighbor_id"))
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("neighbor_id"), col("bm25"))
+  }
+
+  /** Candidate (query, neighbor) pairs scored by `score` as
+    * `cosine`, self-matches dropped. */
+  private[operators] def scoredPairs(score: Column)(cands: DataFrame): DataFrame =
+    cands.filter(col("neighbor_id") =!= col("query_id"))
+      .select(col("query_id"), col("neighbor_id"), score.as("cosine"))
+
+  /** Stage-1 cut of a two-stage search: the top `n` scored
+    * candidates per query on the 1e-6-ROUNDED cosine, ties to the
+    * smaller neighbor id. */
+  private[operators] def roundedTopK(scored: DataFrame, n: Int): DataFrame = {
+    val w = Window.partitionBy("query_id")
+      .orderBy(round(col("cosine"), 6).desc, col("neighbor_id"))
+    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= n).drop("rn")
+  }
+
+  /** The exact rerank of a two-stage search: each (query_id,
+    * neighbor_id) candidate re-scored by cosine between its query's
+    * `q_emb` (from `q`) and its neighbor's `n_emb` (from `nEmb`);
+    * the top k per query. */
+  private[operators] def exactRerank(cands: DataFrame, nEmb: DataFrame,
+                                     q: DataFrame, k: Int): DataFrame =
+    topKPerQuery(cands
+      .join(nEmb, Seq("neighbor_id"))
+      .join(q, Seq("query_id"))
+      .select(col("query_id"), col("neighbor_id"),
+        gf.cosineSim(col("q_emb"), col("n_emb")).as("cosine")), k)
+
+  /** Each corpus vector as a (neighbor_id, n_emb) rerank side. */
+  private[operators] def neighborEmb(corpus: DataFrame): DataFrame =
+    corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb"))
+
   /** Exact top-k cosine neighbors of each query vector (self-matches
     * excluded; ties broken by neighbor id for determinism).
     */
@@ -91,9 +132,7 @@ object Similarity {
       .select(col("vec_id").as("neighbor_id"),
         dequant(col("embedding")).as("dq_emb"))
       .crossJoin(q)
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        gf.cosineSim(col("q_emb"), col("dq_emb")).as("cosine")), k)
+      .transform(scoredPairs(gf.cosineSim(col("q_emb"), col("dq_emb")))), k)
   }
 
   /** FILTERED vector search: top-k under a metadata predicate, with
@@ -126,17 +165,7 @@ object Similarity {
                       predicate: Column, k: Int = 10,
                       nlist: Int = 16, nprobe: Int = 4): DataFrame = {
     val centroids = pickCentroids(corpus, nlist)
-    val assigned = corpus.filter(predicate)
-      .select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("n_emb"),
-        gf.nearestCentroids(col("embedding"), centroids, 1)(0).as("cell"))
-    val probed = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("q_emb"),
-      explode(gf.nearestCentroids(col("embedding"), centroids, nprobe)).as("cell"))
-    topKPerQuery(probed.join(assigned, Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        gf.cosineSim(col("q_emb"), col("n_emb")).as("cosine")), k)
+    ivfSearch(corpus.filter(predicate), queries, k, centroids, nprobe)
   }
 
   /** Range search: ALL corpus vectors with cosine ≥ tau per query
@@ -333,21 +362,27 @@ object Similarity {
   private[operators] def trainCentroidsOn(trainOn: DataFrame, nlist: Int,
                                           iters: Int): Array[Array[Float]] = {
     var cents = pickCentroids(trainOn, nlist)
-    for (_ <- 0 until iters) {
-      val byCell = trainOn
-        .select(gf.nearestCentroids(col("embedding"), cents, 1)(0).as("cell"),
-          posexplode(col("embedding")))
-        .groupBy("cell", "pos")
-        .agg(avg("col").as("v"))
-        .collect()
-        .groupBy(_.getInt(0))
-      cents = cents.indices.map { c =>
-        byCell.get(c)
-          .map(_.sortBy(_.getInt(1)).map(_.getDouble(2).toFloat))
-          .getOrElse(cents(c)) // empty cell keeps its centroid
-      }.toArray
-    }
+    for (_ <- 0 until iters) cents = lloydStep(trainOn, cents)
     cents
+  }
+
+  /** One spherical k-means update: each centroid becomes the
+    * per-dimension mean of the vectors assigned to it (cosine
+    * argmax); the driver collects k·dim scalars, never vectors. */
+  private def lloydStep(data: DataFrame,
+                        cents: Array[Array[Float]]): Array[Array[Float]] = {
+    val byCell = data
+      .select(gf.nearestCentroids(col("embedding"), cents, 1)(0).as("cell"),
+        posexplode(col("embedding")))
+      .groupBy("cell", "pos")
+      .agg(avg("col").as("v"))
+      .collect()
+      .groupBy(_.getInt(0))
+    cents.indices.map { c =>
+      byCell.get(c)
+        .map(_.sortBy(_.getInt(1)).map(_.getDouble(2).toFloat))
+        .getOrElse(cents(c)) // empty cell keeps its centroid
+    }.toArray
   }
 
   /** K-means cluster ASSIGNMENT as a first-class operator (spherical
@@ -372,20 +407,7 @@ object Similarity {
       .sort("vec_id").limit(k)
       .collect()
       .map(_.getAs[scala.collection.Seq[Float]]("embedding").toArray)
-    for (_ <- 0 until iters) {
-      val byCell = corpus
-        .select(gf.nearestCentroids(col("embedding"), cents, 1)(0).as("cell"),
-          posexplode(col("embedding")))
-        .groupBy("cell", "pos")
-        .agg(avg("col").as("v"))
-        .collect()
-        .groupBy(_.getInt(0))
-      cents = cents.indices.map(c =>
-        byCell.get(c)
-          .map(_.sortBy(_.getInt(1)).map(_.getDouble(2).toFloat))
-          .getOrElse(cents(c))) // empty cell keeps its centroid
-        .toArray
-    }
+    for (_ <- 0 until iters) cents = lloydStep(corpus, cents)
     corpus.select(col("vec_id"),
       gf.nearestCentroids(col("embedding"), cents, 1)(0).cast("long").as("cell"))
   }
@@ -499,14 +521,22 @@ object Similarity {
         .groupBy("subspace", "code", "sub_pos")
         .agg(avg("v").as("mean_v"))
         .collect()
-      val next = cbs.map(_.map(_.clone()))
-      stats.foreach { r =>
-        next(r.getInt(0))(r.getInt(1))(r.getInt(2)) = r.getDouble(3).toFloat
-      }
-      cbs = next
+      cbs = withCodeMeans(cbs, stats)
     }
     if (thinned) trainOn.unpersist(false)
     cbs
+  }
+
+  /** A copy of codebooks `cbs` with each (subspace, code, sub_pos)
+    * entry of `stats` set to its `mean_v`; codes nothing was
+    * assigned to keep their centroid. */
+  private def withCodeMeans(cbs: Array[Array[Array[Float]]],
+                            stats: Array[org.apache.spark.sql.Row]): Array[Array[Array[Float]]] = {
+    val next = cbs.map(_.map(_.clone()))
+    stats.foreach { r =>
+      next(r.getInt(0))(r.getInt(1))(r.getInt(2)) = r.getDouble(3).toFloat
+    }
+    next
   }
 
   /** Product-quantization ANN: corpus vectors compressed to m
@@ -527,16 +557,9 @@ object Similarity {
     val q = broadcast(queries.select(
       col("vec_id").as("query_id"), col("embedding").as("q_emb")))
     val approx = topKPerQuery(encoded.crossJoin(q)
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        gf.pqCosine(col("q_emb"), col("codes"), cbs).as("cosine")), k * rerank)
-    val exact = approx.select("query_id", "neighbor_id")
-      .join(corpus.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("n_emb")), Seq("neighbor_id"))
-      .join(q, Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        gf.cosineSim(col("q_emb"), col("n_emb")).as("cosine"))
-    topKPerQuery(exact, k)
+      .transform(scoredPairs(gf.pqCosine(col("q_emb"), col("codes"), cbs))),
+      k * rerank)
+    exactRerank(approx.select("query_id", "neighbor_id"), neighborEmb(corpus), q, k)
   }
 
   /** IVF+PQ composed index (the FAISS-style 100 TB layout): vectors
@@ -579,16 +602,10 @@ object Similarity {
     val probed = broadcast(q.select(col("query_id"), col("q_emb"),
       explode(gf.nearestCentroids(col("q_emb"), cents, nprobe)).as("cell")))
     val approx = topKPerQuery(probed.join(encoded, Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        gf.pqCosine(col("q_emb"), col("codes"), cbs).as("cosine")), k * rerank)
-    val exact = approx.select("query_id", "neighbor_id")
-      .join(corpus.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("n_emb")), Seq("neighbor_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        gf.cosineSim(col("q_emb"), col("n_emb")).as("cosine"))
-    topKPerQuery(exact, k)
+      .transform(scoredPairs(gf.pqCosine(col("q_emb"), col("codes"), cbs))),
+      k * rerank)
+    exactRerank(approx.select("query_id", "neighbor_id"), neighborEmb(corpus),
+      broadcast(q), k)
   }
 
   /** Residual codebooks for IVF-PQ: trained on `v − nearestCentroid(v)`
@@ -678,11 +695,7 @@ object Similarity {
         .groupBy("subspace", "code", "sub_pos")
         .agg(avg("rv").as("mean_v"))
         .collect()
-      val next = cbs.map(_.map(_.clone()))
-      stats.foreach { r =>
-        next(r.getInt(0))(r.getInt(1))(r.getInt(2)) = r.getDouble(3).toFloat
-      }
-      cbs = next
+      cbs = withCodeMeans(cbs, stats)
     }
     cbs
   }
@@ -733,17 +746,11 @@ object Similarity {
     val probed = broadcast(q.select(col("query_id"), col("q_emb"),
       explode(gf.nearestCentroids(col("q_emb"), cents, nprobe)).as("cell")))
     val approx = topKPerQuery(probed.join(encoded, Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        gf.pqCosineResidual(col("q_emb"), col("codes"), col("cell"), cents, cbs)
-          .as("cosine")), k * rerank)
-    val exact = approx.select("query_id", "neighbor_id")
-      .join(corpus.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("n_emb")), Seq("neighbor_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        gf.cosineSim(col("q_emb"), col("n_emb")).as("cosine"))
-    topKPerQuery(exact, k)
+      .transform(scoredPairs(
+        gf.pqCosineResidual(col("q_emb"), col("codes"), col("cell"), cents, cbs))),
+      k * rerank)
+    exactRerank(approx.select("query_id", "neighbor_id"), neighborEmb(corpus),
+      broadcast(q), k)
   }
 
   /** Two-stage retrieve-then-rerank — the cross-encoder serving
@@ -828,9 +835,7 @@ object Similarity {
       col("embedding").as("q_emb"),
       explode(gf.nearestCentroids(col("embedding"), centroids, nprobe)).as("cell"))
     topKPerQuery(probed.join(assigned, Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        gf.cosineSim(col("q_emb"), col("n_emb")).as("cosine")), k)
+      .transform(scoredPairs(gf.cosineSim(col("q_emb"), col("n_emb")))), k)
   }
 
   /** Embedding QA profile — the sanity pass run before any vectors
@@ -1266,11 +1271,7 @@ object Similarity {
       .repartition(col("query_id")) // same one-exchange agg → window ride
       .groupBy("query_id", "neighbor_id")
       .agg(tokenOrderedSum.as("bm25"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("bm25").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("bm25"))
+    topBm25(scored, k)
   }
 
   /** The per-query θ for MaxScore pruning, from a HASH-SAMPLE
@@ -1534,11 +1535,7 @@ object Similarity {
       .repartition(col("query_id"))
       .groupBy("query_id", "neighbor_id")
       .agg(bm25TokenOrderedSum.as("bm25"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("bm25").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("bm25"))
+    topBm25(scored, k)
   }
 
   /** Two-stage ANN over PREFIX-truncated embeddings — the
@@ -1571,24 +1568,14 @@ object Similarity {
     // trade a candidate on last-ulp cross-engine noise — rounding
     // snaps boundary ties to the id tie-break identically in both
     // engines. The exact rerank below re-scores on raw doubles.
-    val wApprox = Window.partitionBy("query_id")
-      .orderBy(round(col("cosine"), 6).desc, col("neighbor_id"))
-    val approx = corpus
+    val approx = roundedTopK(corpus
       .withColumn("p_emb", slice(col("embedding"), 1, prefixDims))
       .crossJoin(pq)
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        gf.cosineSim(col("pq_emb"), col("p_emb")).as("cosine"))
-      .withColumn("rn", row_number().over(wApprox))
-      .filter(col("rn") <= k * rerank).drop("rn")
-    val exact = broadcast(approx.select("query_id", "neighbor_id"))
-      .join(corpus.select(col("neighbor_id"),
-        col("embedding").as("n_emb")), Seq("neighbor_id"))
-      .join(broadcast(queries.select(col("vec_id").as("query_id"),
-        col("embedding").as("q_emb"))), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        gf.cosineSim(col("q_emb"), col("n_emb")).as("cosine"))
-    topKPerQuery(exact, k)
+      .transform(scoredPairs(gf.cosineSim(col("pq_emb"), col("p_emb")))), k * rerank)
+    exactRerank(broadcast(approx.select("query_id", "neighbor_id")),
+      corpus.select(col("neighbor_id"), col("embedding").as("n_emb")),
+      broadcast(queries.select(col("vec_id").as("query_id"),
+        col("embedding").as("q_emb"))), k)
   }
 
   /** Hubness diagnostic over the exact kNN graph of a sampled slice

@@ -496,6 +496,17 @@ object TextAnalysis {
       .withColumn("tok_chars",
         expr("aggregate(toks, 0L, (a, t) -> a + length(t))"))
 
+  /** Every n-gram occurrence of a [[dupNgramToks]] projection, one
+    * row per (doc_id, o) with `o` the struct (start, ng). */
+  private def ngramStructs(docs: DataFrame, n: Int): DataFrame =
+    docs
+      .filter(size(col("toks")) >= n)
+      .select(col("doc_id"), explode(expr(
+        s"""transform(sequence(0, size(toks) - $n),
+           |  i -> struct(i AS start,
+           |    array_join(slice(toks, i + 1, $n), ' ') AS ng))"""
+          .stripMargin.replace("\n", " "))).as("o"))
+
   /** Corpus-DUPLICATED n-gram occurrences (doc_id, start, ng) — the
     * ONE n-gram-key shuffle the whole family (rollup, per-doc gate,
     * span extraction, intake store) rides: occurrences explode off
@@ -504,13 +515,7 @@ object TextAnalysis {
     * is a [[dupNgramToks]] projection; output is proportional to
     * DUPLICATED occurrences, the relation callers pin. */
   def dupNgramDupOcc(docs: DataFrame, n: Int = 8): DataFrame = {
-    val occ = docs
-      .filter(size(col("toks")) >= n)
-      .select(col("doc_id"), explode(expr(
-        s"""transform(sequence(0, size(toks) - $n),
-           |  i -> struct(i AS start,
-           |    array_join(slice(toks, i + 1, $n), ' ') AS ng))"""
-          .stripMargin.replace("\n", " "))).as("o"))
+    val occ = ngramStructs(docs, n)
       .select(col("doc_id"), col("o.start"), col("o.ng"))
     val w = Window.partitionBy("ng")
     occ
@@ -668,19 +673,12 @@ object TextAnalysis {
   def dupNgramDocsVsStore(newDocs0: DataFrame, store: DataFrame,
                           n: Int = 8): DataFrame = {
     val d = dupNgramToks(newDocs0)
-    val occ = d
-      .filter(size(col("toks")) >= n)
-      .select(col("doc_id"), explode(expr(
-        s"""transform(sequence(0, size(toks) - $n),
-           |  i -> struct(i AS start,
-           |    array_join(slice(toks, i + 1, $n), ' ') AS ng))"""
-          .stripMargin.replace("\n", " "))).as("o"))
+    val occ = ngramStructs(d, n)
       .select(col("doc_id"), col("o.start").as("start"), col("o.ng").as("ng"))
       .join(org.apache.spark.sql.functions.broadcast(store.select("ng")),
         Seq("ng"), "left_semi")
       .select("doc_id", "start")
-    dupNgramDocsOf2(d,
-      occ.groupBy("doc_id").agg(collect_list(col("start")).as("starts")), n)
+    dupNgramDocsOf2(d, startsOfOcc(occ), n)
   }
 
   /** The per-doc KEEP/DROP readout of the corpus-duplication gate —
@@ -1625,15 +1623,7 @@ object TextAnalysis {
                   maxDf: Int = 64, minShared: Int = 2): DataFrame = {
     val inv = docs.select(col("doc_id"),
       explode(graft.functions.gf.winnowFingerprints(col("text"), n, window)).as("fp"))
-    inv.groupBy("fp")
-      .agg(graft.functions.BoundedCollectSetAgg
-        .boundedCollectSet(col("doc_id"), maxDf + 1).as("ids"))
-      .filter(size(col("ids")).between(2, maxDf))
-      .select(explode(col("ids")).as("id_a"), col("ids"))
-      .select(col("id_a"), explode(col("ids")).as("id_b"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("n_shared"))
+    Dedup.sharedPostings(inv, "fp", maxDf, col("id_a") < col("id_b"), "n_shared")
       .filter(col("n_shared") >= minShared)
   }
 
@@ -1998,16 +1988,6 @@ object TextAnalysis {
     // comparator mirrors Spark's UTF8String BINARY order so the
     // chosen pair matches the relational `orderBy(a, b)` even on
     // non-ASCII symbols.
-    def u8lt(x: String, y: String): Boolean = {
-      val a = x.getBytes("UTF-8"); val b = y.getBytes("UTF-8")
-      var i = 0
-      while (i < a.length && i < b.length) {
-        val c = (a(i) & 0xff) - (b(i) & 0xff)
-        if (c != 0) return c < 0
-        i += 1
-      }
-      a.length < b.length
-    }
     // per-CODE-POINT split, matching SQL substring's character grain
     def charSplit(w: String): List[String] = {
       val out = scala.collection.mutable.ListBuffer.empty[String]
@@ -2045,7 +2025,8 @@ object TextAnalysis {
         else {
           val ((a, b), cnt) = counts.minBy { case ((a, b), c) => (c, a, b) }(
             Ordering.Tuple3(Ordering.Long.reverse,
-              Ordering.fromLessThan(u8lt), Ordering.fromLessThan(u8lt)))
+              Ordering.fromLessThan(Unigram.u8lt),
+              Ordering.fromLessThan(Unigram.u8lt)))
           out += ((i.toLong, a, b, a + b, cnt))
           // left-to-right adjacent-pair merge — the exact fold the SQL
           // `aggregate(...)` expression ran: a freshly merged symbol

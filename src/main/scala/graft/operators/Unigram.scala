@@ -129,7 +129,9 @@ object Unigram {
     * counts, UTF8-binary tie-breaks, the same [[viterbi]] kernel). */
   private val DriverFoldMaxWords = 65536L
 
-  private def u8lt(x: String, y: String): Boolean = {
+  /** `x` sorts before `y` in Spark's UTF8String BINARY order
+    * (unsigned UTF-8 bytes, then length). */
+  private[operators] def u8lt(x: String, y: String): Boolean = {
     val a = x.getBytes("UTF-8"); val b = y.getBytes("UTF-8")
     var i = 0
     while (i < a.length && i < b.length) {

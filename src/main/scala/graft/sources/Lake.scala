@@ -62,18 +62,26 @@ object Lake {
     * sort.
     */
   def zorderPlan(df: DataFrame, dimNames: Seq[String],
-                 bitsPerDim: Int = 16, bucketBits: Int = 6): DataFrame = {
+                 bitsPerDim: Int = 16, bucketBits: Int = 6): DataFrame =
+    withFileBucket(df, dimNames, bitsPerDim, bucketBits)
+      .groupBy("file_bucket")
+      .agg(count(lit(1)).as("n_rows"), dimBounds(dimNames): _*)
+
+  /** `df` with `file_bucket`: the top `bucketBits` bits of the rows'
+    * z-order key over `dimNames`. */
+  private def withFileBucket(df: DataFrame, dimNames: Seq[String],
+                             bitsPerDim: Int, bucketBits: Int): DataFrame = {
     val width = bitsPerDim * dimNames.size
     require(bucketBits >= 1 && bucketBits <= width,
       s"bucketBits $bucketBits outside 1..$width")
     df.withColumn("file_bucket",
         shiftright(zorderValue(dimNames.map(col), bitsPerDim),
           width - bucketBits))
-      .groupBy("file_bucket")
-      .agg(count(lit(1)).as("n_rows"),
-        dimNames.flatMap(n =>
-          Seq(min(col(n)).as(s"min_$n"), max(col(n)).as(s"max_$n"))): _*)
   }
+
+  /** Per-dimension min/max pruning stats, `min_<dim>`, `max_<dim>`. */
+  private def dimBounds(dimNames: Seq[String]): Seq[Column] =
+    dimNames.flatMap(n => Seq(min(col(n)).as(s"min_$n"), max(col(n)).as(s"max_$n")))
 
   /** Small-file COMPACTION plan over a file manifest — the other
     * half of lakehouse layout maintenance beside [[zorderPlan]]
@@ -152,21 +160,13 @@ object Lake {
     * (plan → apply → measured skip-rate, nothing hypothetical left).
     */
   def zorderApply(df: DataFrame, dimNames: Seq[String], byteCol: Column,
-                  bitsPerDim: Int = 16, bucketBits: Int = 6): DataFrame = {
-    val width = bitsPerDim * dimNames.size
-    require(bucketBits >= 1 && bucketBits <= width,
-      s"bucketBits $bucketBits outside 1..$width")
-    df.withColumn("file_bucket",
-        shiftright(zorderValue(dimNames.map(col), bitsPerDim),
-          width - bucketBits))
+                  bitsPerDim: Int = 16, bucketBits: Int = 6): DataFrame =
+    withFileBucket(df, dimNames, bitsPerDim, bucketBits)
       .withColumn("__bytes", byteCol.cast("long"))
       .groupBy("file_bucket")
       .agg(count(lit(1)).as("n_rows"),
-        sum(col("__bytes")).as("bytes") +:
-          dimNames.flatMap(n =>
-            Seq(min(col(n)).as(s"min_$n"), max(col(n)).as(s"max_$n"))): _*)
+        sum(col("__bytes")).as("bytes") +: dimBounds(dimNames): _*)
       .withColumnRenamed("file_bucket", "file_id")
-  }
 
   /** Probe replay against an EXISTING post-layout manifest — the
     * loop-closer behind [[zorderApply]]: the same deterministic

@@ -273,6 +273,30 @@ object DocStream extends Serializable {
       .stat.bloomFilter("h", math.max(nGrams, 1L), 0.01)
   }
 
+  private def tokenized(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), col("source"),
+      TextAnalysis.tokens(col("text")).as("toks"))
+
+  /** The docs of `base` with at least `n` tokens, each with `cand`:
+    * the start positions whose n-gram hash might be in `bf`. */
+  private def bloomCandidates(base: DataFrame, n: Int,
+                              bf: org.apache.spark.util.sketch.BloomFilter): DataFrame =
+    base
+      .filter(size(col("toks")) >= n)
+      // the hash array is the HOF's INPUT child (evaluated once per
+      // row, then iterated) — binding it as a separate column and
+      // probing element_at(hs, i) inside the lambda lets
+      // CollapseProject inline the kernel into the lambda body and
+      // re-run it per position, O(len²) (measured 6.4 s at sf0.1)
+      .withColumn("cand",
+        org.apache.spark.sql.functions.filter(
+          org.apache.spark.sql.functions.transform(
+            graft.functions.gf.shingleHashes(col("toks"), n),
+            (h, i) => when(
+              graft.functions.gf.bloomMightContain(h, bf), i)
+              .otherwise(lit(-1))),
+          x => x >= 0))
+
   /** Corpus-duplication gate at STREAM intake — the
     * `docs_dup_ngram_apply` twin probing the PERSISTED dup-gram
     * store ([[TextAnalysis.dupNgramStore]], built by the nightly
@@ -299,8 +323,7 @@ object DocStream extends Serializable {
     val spark = docs.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions.broadcast
-    val base = docs.select(col("doc_id"), col("source"),
-        TextAnalysis.tokens(col("text")).as("toks"))
+    val base = tokenized(docs)
       .withColumn("tok_chars",
         expr("aggregate(toks, 0L, (a, t) -> a + length(t))"))
     val baseRows = base.select(col("doc_id"), col("source"),
@@ -316,21 +339,7 @@ object DocStream extends Serializable {
     // join then drops the false positives, so results are exactly
     // unchanged and the batch twin's oracle still applies verbatim.
     val bf = bloom.getOrElse(storeBloom(store, n))
-    val pruned = base
-      .filter(size(col("toks")) >= n)
-      // the hash array is the HOF's INPUT child (evaluated once per
-      // row, then iterated) — binding it as a separate column and
-      // probing element_at(hs, i) inside the lambda lets
-      // CollapseProject inline the kernel into the lambda body and
-      // re-run it per position, O(len²) (measured 6.4 s at sf0.1)
-      .withColumn("cand",
-        org.apache.spark.sql.functions.filter(
-          org.apache.spark.sql.functions.transform(
-            graft.functions.gf.shingleHashes(col("toks"), n),
-            (h, i) => when(
-              graft.functions.gf.bloomMightContain(h, bf), i)
-              .otherwise(lit(-1))),
-          x => x >= 0))
+    val pruned = bloomCandidates(base, n, bf)
       .select(col("doc_id"), col("source"), col("tok_chars"),
         explode(org.apache.spark.sql.functions.transform(col("cand"),
           i => struct(
@@ -418,29 +427,14 @@ object DocStream extends Serializable {
     val spark = docs.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions.broadcast
-    val base = docs.select(col("doc_id"), col("source"),
-      TextAnalysis.tokens(col("text")).as("toks"))
+    val base = tokenized(docs)
     val baseRows = base.select(col("doc_id"), col("source"), col("toks"),
       lit(-1).as("start"))
     // r14: same in-array Bloom position filter as [[dupNgramGate]] —
     // clean documents' positions never build a gram string or an
     // exploded row; the store join drops the ~1% FPP survivors
     val bf = bloom.getOrElse(storeBloom(store, n))
-    val matched = base
-      .filter(size(col("toks")) >= n)
-      // the hash array is the HOF's INPUT child (evaluated once per
-      // row, then iterated) — binding it as a separate column and
-      // probing element_at(hs, i) inside the lambda lets
-      // CollapseProject inline the kernel into the lambda body and
-      // re-run it per position, O(len²) (measured 6.4 s at sf0.1)
-      .withColumn("cand",
-        org.apache.spark.sql.functions.filter(
-          org.apache.spark.sql.functions.transform(
-            graft.functions.gf.shingleHashes(col("toks"), n),
-            (h, i) => when(
-              graft.functions.gf.bloomMightContain(h, bf), i)
-              .otherwise(lit(-1))),
-          x => x >= 0))
+    val matched = bloomCandidates(base, n, bf)
       .select(col("doc_id"), col("source"),
         explode(org.apache.spark.sql.functions.transform(col("cand"),
           i => struct(

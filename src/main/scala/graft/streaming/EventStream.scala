@@ -241,14 +241,8 @@ object EventStream extends Serializable {
     */
   def sessionWindowAgg(events: DataFrame, gapMinutes: Int = 30,
                        watermark: String = "1 hour"): DataFrame =
-    withWatermarkIfStreaming(events, watermark)
-      .groupBy(col("user_id"), session_window(col("ts"), s"$gapMinutes minutes"))
-      .agg(count(lit(1)).as("num_events"), sum("value").as("total_value"))
-      .select(
-        col("user_id"),
-        col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("num_events"), col("total_value"))
+    graft.operators.EventOps.sessionWindows(
+      withWatermarkIfStreaming(events, watermark), gapMinutes)
 
   case class Event(event_id: Long, ts: LocalDateTime, user_id: Long,
                    event_type: String, value: Double)
@@ -707,13 +701,8 @@ object EventStream extends Serializable {
     val v = (col("s2").cast("double") -
       col("s1").cast("double") * col("s1").cast("double") /
         col("cnt").cast("double")) / col("cnt").cast("double")
-    slotted.join(broadcast(profile), Seq("dow", "hour_of_day"))
-      .select(col("hour_bucket"), col("n").as("n_events"),
-        col("dow"), col("hour_of_day"),
-        m.as("profile_mean"), v.as("variance"),
-        ((col("n").cast("double") - m) / sqrt(v)).as("z"))
-      .filter(col("variance") > 0.0 && abs(col("z")) > sigmas)
-      .drop("variance")
+    graft.operators.EventOps.slotZScores(
+      slotted.join(broadcast(profile), Seq("dow", "hour_of_day")), m, v, sigmas)
   }
 
   case class BotEv(event_id: Long, ts_us: Long, user_id: Long)
@@ -798,21 +787,6 @@ object EventStream extends Serializable {
     val spark = events.sparkSession
     import spark.implicits._
 
-    def mgFold(counters: scala.collection.mutable.LinkedHashMap[Long, Long],
-               it: Iterator[Long]): Unit =
-      it.foreach { u =>
-        counters.get(u) match {
-          case Some(c) => counters.update(u, c + 1)
-          case None if counters.size < k => counters.update(u, 1L)
-          case None =>
-            val dead = List.newBuilder[Long]
-            counters.foreach { case (key, c) =>
-              if (c == 1L) dead += key else counters.update(key, c - 1)
-            }
-            dead.result().foreach(counters.remove)
-        }
-      }
-
     val typed = events.toDF()
       .select(col("user_id").cast("long").as("u"))
       .filter(col("u").isNotNull).as[Long]
@@ -822,7 +796,7 @@ object EventStream extends Serializable {
              state: GroupState[MgState]): Iterator[UserCount] = {
         val counters = scala.collection.mutable.LinkedHashMap.empty[Long, Long]
         state.getOption.foreach(_.users.foreach { case (u, c) => counters.update(u, c) })
-        mgFold(counters, it)
+        graft.operators.EventOps.mgFold(counters, it, k)
         state.update(MgState(counters.toMap))
         counters.iterator.map { case (u, c) => UserCount(u, c) }
       }
@@ -831,7 +805,7 @@ object EventStream extends Serializable {
     } else {
       typed.flatMapGroups { (_: Long, it: Iterator[Long]) =>
         val counters = scala.collection.mutable.LinkedHashMap.empty[Long, Long]
-        mgFold(counters, it)
+        graft.operators.EventOps.mgFold(counters, it, k)
         counters.iterator.map { case (u, c) => UserCount(u, c) }
       }.toDF()
     }

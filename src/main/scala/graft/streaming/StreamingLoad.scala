@@ -83,12 +83,7 @@ object StreamingLoad {
       .option("checkpointLocation", checkpoint)
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.EventOps.dailyAudienceSketches(batch, lgConfigK)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(path)
+        overwriteBatch(graft.operators.EventOps.dailyAudienceSketches(batch, lgConfigK), batchId, path)
       }
       .start()
 
@@ -109,12 +104,19 @@ object StreamingLoad {
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.DedupStore.fingerprintRows(batch)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(path)
+        overwriteBatch(graft.operators.DedupStore.fingerprintRows(batch), batchId, path)
       }
       .start()
+
+  /** `rows` written over the `batch_id=<batchId>` partition of the
+    * parquet store at `path` (dynamic partition overwrite), so a
+    * replayed micro-batch replaces its own rows and touches no other
+    * batch's partition. */
+  private def overwriteBatch(rows: DataFrame, batchId: Long, path: String): Unit =
+    rows
+      .withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id")
+      .parquet(path)
 }

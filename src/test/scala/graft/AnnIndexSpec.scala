@@ -284,6 +284,45 @@ class AnnIndexSpec extends SparkSpec {
       s"candidate scan must not read embeddings:\n$codeScan")
   }
 
+  test("IVF-PQ probe: its broadcast hint sits on a join, so Spark logs " +
+    "no unused-hint warning") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val base = Files.createTempDirectory("graft_ann").toString
+    val corpus = Tables.embeddings(spark, dir)
+    val queries = corpus.filter(col("vec_id") % 100 === 0)
+    AnnIndex.buildIvfPq(corpus, s"$base/ivfpq")
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("hint-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          warned.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.catalyst.analysis.HintErrorLogger").asInstanceOf[Logger]
+    val level = logger.getLevel
+    logger.addAppender(appender)
+    logger.setLevel(Level.WARN)
+    try {
+      // the capture works: a hint outside any join is reported
+      broadcast(queries.select("vec_id")).distinct().collect()
+      assert(!warned.isEmpty, "the appender must see HintErrorLogger warnings")
+      warned.clear()
+      AnnIndex.probeIvfPq(spark, s"$base/ivfpq", queries).collect()
+      AnnIndex.probeIvfPq(spark, s"$base/ivfpq", queries, maskDeletes = true)
+        .collect()
+    } finally {
+      logger.removeAppender(appender)
+      logger.setLevel(level)
+      appender.stop()
+    }
+    assert(warned.isEmpty, s"unused hint warnings: ${warned.toArray.mkString("; ")}")
+  }
+
   test("rebuild: retrained centroids consume the tombstones, reset the " +
     "log, improve assignment quality, and hold the survivor recall floor") {
     val base = Files.createTempDirectory("graft_ann").toString

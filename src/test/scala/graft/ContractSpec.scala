@@ -65,4 +65,14 @@ class ContractSpec extends AnyFunSuite {
     assert(rowsOnly.isEmpty,
       s"every key must carry an oracle now: $rowsOnly")
   }
+
+  test("the JSON string escaper round-trips quotes, backslash, controls " +
+    "and non-ASCII through a JSON parser") {
+    val input = "say \"hi\" \\ path\nline\rcr\ttab\u0001soh é ✓ \uD83D\uDE00"
+    val json = Verify.jsonString(input)
+    assert(!json.exists(_ < ' '), s"raw control char in $json")
+    val back = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(json, classOf[String])
+    assert(back == input)
+  }
 }

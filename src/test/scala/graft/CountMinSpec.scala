@@ -102,4 +102,39 @@ class CountMinSpec extends SparkSpec {
       .sortBy(_._1)
     assert(got.toSeq === exp.toSeq)
   }
+
+  test("CountMin: est >= exact and merge associativity hold on " +
+    "adversarial random multisets (hot keys + long tail)") {
+    val rnd = new scala.util.Random(152)
+    for (round <- 1 to 2) {
+      // a few very hot tokens + a wide tail, shuffled into docs
+      val hot = (0 until 5).flatMap(h =>
+        Seq.fill(200 + rnd.nextInt(300))(s"hot$h"))
+      val tail = (0 until 2000).map(t => s"t${rnd.nextInt(5000)}")
+      val toks = rnd.shuffle(hot ++ tail)
+      val docs = toks.grouped(97).zipWithIndex
+        .map { case (g, i) => (i.toLong, g.mkString(" ")) }.toSeq
+        .toDF("doc_id", "text").localCheckpoint(true)
+      val exact = toks.groupBy(identity).map { case (t, xs) =>
+        t -> xs.size.toLong }
+      val sk = CountMin.sketch(docs).collect()
+        .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
+      // every key's min-over-rows estimate dominates its true count
+      val consts = CountMin.rowConsts
+      exact.foreach { case (t, c) =>
+        val h = graft.functions.TextHashes.hash64(
+          org.apache.spark.unsafe.types.UTF8String.fromString(t))
+        val est = consts.zipWithIndex.map { case ((a, b), r) =>
+          sk((r, (a * h + b) >>> CountMin.Shift)) }.min
+        assert(est >= c, s"round $round: undercount for $t: $est < $c")
+      }
+      // merge associativity on a random 3-way split
+      val parts = (0 until 3).map(i =>
+        CountMin.sketch(docs.filter(pmod(col("doc_id"), lit(3)) === i)))
+      val merged = parts.reduce(_ unionByName _)
+        .groupBy("r", "bucket").agg(sum("cnt").as("cnt")).collect()
+        .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
+      assert(merged === sk, s"round $round: 3-way merge must be exact")
+    }
+  }
 }

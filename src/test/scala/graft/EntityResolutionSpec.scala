@@ -269,4 +269,47 @@ class EntityResolutionSpec extends SparkSpec {
       }
     }
   }
+
+  private def lev(a: String, b: String): Int = {
+    val m = a.length; val n = b.length
+    var prev = (0 to n).toArray
+    for (i <- 1 to m) {
+      val cur = new Array[Int](n + 1); cur(0) = i
+      for (j <- 1 to n)
+        cur(j) = math.min(math.min(prev(j) + 1, cur(j - 1) + 1),
+          prev(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1))
+      prev = cur
+    }
+    prev(n)
+  }
+
+  test("entityPairs == brute-force blocked Levenshtein over ALL pairs " +
+    "(random customer subsets)") {
+    val rnd = new scala.util.Random(151)
+    val customer = spark.read
+      .parquet("/root/testdata/sf0.001/customer.parquet")
+      .localCheckpoint(true)
+    for (round <- 1 to 3) {
+      val mod = 2 + rnd.nextInt(3)
+      val res = rnd.nextInt(mod)
+      val recs = EntityResolution
+        .synthCrmCorpus(customer.filter(col("c_custkey") % mod === res))
+        .localCheckpoint(true)
+      val norm = recs.select(col("rec_id"),
+        EntityResolution.normName(col("raw_name")).as("n")).collect()
+        .map(r => r.getLong(0) -> r.getString(1))
+      // the reference: every pair, the FULL match rule re-derived
+      val expect = (for {
+        (ra, na) <- norm; (rb, nb) <- norm
+        if ra < rb && na.take(6) == nb.take(6) &&
+          math.abs(na.length - nb.length) <= 1 && lev(na, nb) <= 1
+      } yield (ra, rb, lev(na, nb).toLong)).toSet
+      val got = EntityResolution.entityPairs(recs).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(got === expect,
+        s"round $round (mod=$mod res=$res): " +
+          s"missing=${(expect -- got).take(3)} extra=${(got -- expect).take(3)}")
+      assert(expect.nonEmpty, s"round $round must exercise matches")
+    }
+  }
 }

@@ -493,4 +493,33 @@ class LakeSpec extends SparkSpec {
         }
     }
   }
+
+  test("vacuumPlan: the action column partitions every random manifest " +
+    "exactly by the retention rule") {
+    val rnd = new scala.util.Random(153)
+    for (round <- 1 to 3) {
+      val current = 5L + rnd.nextInt(10)
+      val retain = rnd.nextInt(6).toLong
+      val mf = (0 until 200).map { i =>
+        val created = rnd.nextInt(current.toInt).toLong
+        val removed = if (rnd.nextBoolean()) None
+          else Some(created + rnd.nextInt(5).toLong)
+        ("p" + rnd.nextInt(4), i.toLong, 10L + rnd.nextInt(1000),
+          created, removed)
+      }.toDF("part", "file_id", "bytes", "created_snap", "removed_snap")
+      val out = Lake.vacuumPlan(mf, current, retain).collect()
+      out.foreach { r =>
+        val removed = if (r.isNullAt(4)) None else Some(r.getLong(4))
+        val expected = removed match {
+          case None => "keep-live"
+          case Some(x) if x >= current - retain => "keep-travel"
+          case _ => "expire"
+        }
+        assert(r.getString(5) === expected, s"round $round: $r")
+        assert(r.getLong(6) ===
+          (if (expected == "expire") r.getLong(2) else 0L))
+      }
+      assert(out.length === 200)
+    }
+  }
 }

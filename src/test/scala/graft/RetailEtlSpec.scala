@@ -6,7 +6,7 @@ import org.apache.spark.ShuffleDependency
 import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, count, lit, sum}
 import org.apache.spark.sql.catalyst.expressions.RaiseError
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.graft.PlanShim
@@ -707,5 +707,30 @@ class RetailEtlSpec extends SparkSpec {
       RetailEtl.dqCalibrationOneScan(li, Seq("no_such_col"))
     }
     assert(missing.getMessage.contains("no_such_col"))
+  }
+
+  test("rtbf conservation: random request sets never lose or invent " +
+    "rows, and zero requests remove nothing") {
+    val rnd = new scala.util.Random(154)
+    val dir = "/root/testdata/sf0.001"
+    val cust = graft.sources.Tables.customer(spark, dir)
+    val ords = graft.sources.Tables.orders(spark, dir)
+    val li = graft.sources.Tables.lineitem(spark, dir)
+    for (round <- 1 to 2) {
+      val mod = 11 + rnd.nextInt(40)
+      val reqs = cust.filter(col("c_custkey") % mod === rnd.nextInt(mod))
+      val plan = RetailEtl.rtbfPlan(reqs, cust, ords, li)
+        .agg(count(lit(1)), sum("n_orders"), sum("n_lineitems")).head()
+      val apply = RetailEtl.rtbfApply(reqs, cust, ords, li).collect()
+        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
+        .toMap
+      apply.values.foreach { case (b, r, a) => assert(b === r + a) }
+      assert(apply("customer")._2 === plan.getLong(0))
+      assert(apply("orders")._2 === plan.getLong(1))
+      assert(apply("lineitem")._2 === plan.getLong(2))
+    }
+    val none = RetailEtl.rtbfApply(cust.filter(lit(false)), cust, ords, li)
+      .collect()
+    assert(none.forall(_.getLong(2) == 0L), "empty queue removes nothing")
   }
 }
