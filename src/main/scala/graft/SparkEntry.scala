@@ -95,11 +95,11 @@ object SparkEntry {
   // only the sets, and must not pay the inverted-index candidate build
   // as a side effect of asking for them
   private val sharedBlockedCands = sharedFrame("blocked_cands")((s, dir) =>
-    Dedup.candidatesOf(sharedShingleSets(s, dir)))
+    Dedup.blockedCandidates(sharedShingleSets(s, dir)))
   private def sharedTrunk(s: SparkSession, dir: String): Dedup.BlockingTrunk =
     Dedup.BlockingTrunk(sharedShingleSets(s, dir), sharedBlockedCands(s, dir))
   private val sharedBlockedPairs = sharedFrame("blocked_pairs")((s, dir) =>
-    Dedup.blockedJaccardPairsOf(sharedTrunk(s, dir)))
+    Dedup.blockedJaccardPairs(sharedTrunk(s, dir)))
 
   // the 20-threshold Gopher metric+flag pass over the quality
   // fixture: gate, apply, cost, and the quality profile all read this
@@ -148,8 +148,9 @@ object SparkEntry {
   // artifact the composed intake gate probes, built from the same
   // fixture corpus the gate streams
   private val sharedQualityDupStore = shared("quality_dup_store") { (s, dir) =>
-    val store = pinned(TextAnalysis.dupNgramStore(
-      TextAnalysis.synthIntakeCorpus(Tables.documents(s, dir))))
+    val store = pinned(TextAnalysis.dupNgramStore(TextAnalysis.dupNgramDupOcc(
+      TextAnalysis.dupNgramToks(
+        TextAnalysis.synthIntakeCorpus(Tables.documents(s, dir))))))
     (store, graft.streaming.DocStream.storeBloom(store))
   }
 
@@ -159,8 +160,9 @@ object SparkEntry {
   // the delta must NOT appear, so this is NOT a filter of the
   // full-corpus store
   private val sharedHistDupStore = sharedFrame("hist_dup_store")((s, dir) =>
-    TextAnalysis.dupNgramStore(
-      Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0)))
+    TextAnalysis.dupNgramStore(TextAnalysis.dupNgramDupOcc(
+      TextAnalysis.dupNgramToks(
+        Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0)))))
 
   // the family's ONE corpus-wide n-gram window, pinned as the
   // DUPLICATED-occurrence relation (proportional to duplicated
@@ -173,7 +175,7 @@ object SparkEntry {
   // the corpus-duplication coverage trunk: the doc-grain relation both
   // the source rollup and the per-doc gate read
   private val sharedDupNgramDocs = sharedFrame("dup_ngram_docs")((s, dir) =>
-    TextAnalysis.dupNgramDocsOf2(
+    TextAnalysis.dupNgramDocs(
       TextAnalysis.dupNgramToks(Tables.documents(s, dir)),
       TextAnalysis.startsOfOcc(sharedDupNgramOcc(s, dir))))
 
@@ -195,8 +197,7 @@ object SparkEntry {
   // the shared build, every gate construction would pay the store
   // count + Bloom aggregate as serial driver actions.
   private val sharedDupStore = shared("dup_store_bloom") { (s, dir) =>
-    val store = pinned(TextAnalysis.dupNgramStore(Tables.documents(s, dir),
-      occ = Some(sharedDupNgramOcc(s, dir))))
+    val store = pinned(TextAnalysis.dupNgramStore(sharedDupNgramOcc(s, dir)))
     (store, graft.streaming.DocStream.storeBloom(store))
   }
 
@@ -340,9 +341,9 @@ object SparkEntry {
     * Derived from the pinned trunk (identical composition to
     * basketAffinity). */
   private val sharedBasketTrunk = sharedFrame("basket_trunk")((s, dir) =>
-    operators.Analytics.guardedBasketsShared(Tables.lineitem(s, dir)))
+    operators.Analytics.guardedBaskets(Tables.lineitem(s, dir)))
   private val sharedBasketPairs = sharedFrame("basket_pairs")((s, dir) =>
-    operators.Analytics.basketAffinityOf(sharedBasketTrunk(s, dir)))
+    operators.Analytics.basketAffinity(sharedBasketTrunk(s, dir)))
 
   // shared lexical trunk: one tokenize+count pass (doc_id, tok, tf)
   // for the BM25 family — at 100 TB this is the postings table a
@@ -803,19 +804,19 @@ object SparkEntry {
     // applied as a per-source removal gate over the combined fixture
     // (quality plants per doc_id % 17 class + planted dup paragraphs)
     "docs_gopher_gate" -> ((s, dir) =>
-      TextAnalysis.gopherGateOf(Tables.documents(s, dir),
+      TextAnalysis.gopherGate(Tables.documents(s, dir),
         sharedGopherFlagged(s, dir))),
     "docs_gopher_apply" -> ((s, dir) =>
-      TextAnalysis.gopherGateApplyOf(Tables.documents(s, dir),
+      TextAnalysis.gopherGateApply(Tables.documents(s, dir),
         sharedGopherFlagged(s, dir))),
     // what the gate costs the budget: per-source kept docs/tokens
     "docs_gopher_cost" -> ((s, dir) =>
-      TextAnalysis.gopherGateCostOf(Tables.documents(s, dir),
+      TextAnalysis.gopherGateCost(Tables.documents(s, dir),
         sharedGopherFlagged(s, dir))),
     // the QUALITY half's per-doc metric profile (r13): the 7 paper
     // metrics over the combined fixture, off the same pinned pass
     "docs_gopher_quality" -> ((s, dir) =>
-      TextAnalysis.gopherQualityOf(sharedGopherFlagged(s, dir))),
+      TextAnalysis.gopherQuality(sharedGopherFlagged(s, dir))),
     // the same gate at STREAM intake: one row-local projection,
     // append mode, zero state stores
     "stream_gopher_gate" -> ((s, dir) =>
@@ -825,11 +826,11 @@ object SparkEntry {
     // corpus-grain dup n-grams: char coverage of n-grams occurring
     // in >= 2 distinct docs, rolled up per source (n=8)
     "docs_dup_ngram_corpus" -> ((s, dir) =>
-      TextAnalysis.dupNgramCorpusOf(sharedDupNgramDocs(s, dir))),
+      TextAnalysis.dupNgramCorpus(sharedDupNgramDocs(s, dir))),
     // per-doc keep/drop under the corpus-duplication gate (same
     // pinned doc-grain relation the rollup above aggregates)
     "docs_dup_ngram_apply" -> ((s, dir) =>
-      TextAnalysis.dupNgramApplyOf(sharedDupNgramDocs(s, dir))),
+      TextAnalysis.dupNgramApply(sharedDupNgramDocs(s, dir))),
     // maximal duplicate SPANS (r13, Lee et al. exact-substring
     // target): adjacent corpus-duplicated positions chain into
     // per-doc spans via gaps-and-islands over the SAME pinned trunk
@@ -959,16 +960,17 @@ object SparkEntry {
     // SemDeDup clusters over the EXACT pair relation — the O(n²)
     // brute-force ANCHOR tier (fully oracle-checked incl. closure);
     // the production key at scale is dedup_embedding_groups_lsh below
-    "dedup_embedding_groups" -> ((s, dir) =>
-      Dedup.embeddingGroups(Tables.embeddings(s, dir), tau = 0.9)),
+    "dedup_embedding_groups" -> ((s, dir) => {
+      val e = Tables.embeddings(s, dir)
+      Dedup.embeddingGroups(e, Dedup.embeddingPairsExact(e, tau = 0.9))
+    }),
     // the SCALE form of SemDeDup clustering: LSH candidate pairs
     // (banded equi-joins, never all-pairs) feed the same min-label
     // closure — rows-only; DedupRecallSpec pins pair recall and
     // keep-decision parity against the exact anchor above
     "dedup_embedding_groups_lsh" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
-      Dedup.embeddingGroups(e, tau = 0.9,
-        pairs = Some(Dedup.embeddingPairs(e, tau = 0.9)))
+      Dedup.embeddingGroups(e, Dedup.embeddingPairs(e, tau = 0.9))
     }),
     // nightly-ingest semantic dedup: new vectors (vec_id % 10 == 3)
     // vs the stored corpus, exact tier (new side broadcasts, corpus
@@ -1754,7 +1756,7 @@ object SparkEntry {
     // blocked-pair relation — computed once via [[sharedBlockedPairs]]
     "dedup_blocked_suppress" -> ((s, dir) =>
       Dedup.nearDupSuppress(Tables.documents(s, dir),
-        pairs = Some(sharedBlockedPairs(s, dir)))),
+        sharedBlockedPairs(s, dir))),
     "dedup_ngram_blocked" -> ((s, dir) => sharedBlockedPairs(s, dir)),
     "dedup_threshold_histogram" -> ((s, dir) =>
       Dedup.thresholdHistogram(sharedTrunk(s, dir))),
@@ -1763,12 +1765,12 @@ object SparkEntry {
     "docs_boilerplate_prefix" -> ((s, dir) =>
       TextAnalysis.boilerplatePrefix(Tables.documents(s, dir))),
     "dedup_ngram_contain" -> ((s, dir) =>
-      Dedup.blockedContainmentPairsOf(sharedTrunk(s, dir))),
+      Dedup.blockedContainmentPairs(sharedTrunk(s, dir))),
     "dedup_source_matrix" -> ((s, dir) =>
-      Dedup.crossSourceMatrixOf(sharedBlockedPairs(s, dir),
+      Dedup.crossSourceMatrix(sharedBlockedPairs(s, dir),
         Tables.documents(s, dir))),
     "dedup_source_rate" -> ((s, dir) =>
-      Dedup.nearDupRateBySourceOf(sharedBlockedPairs(s, dir),
+      Dedup.nearDupRateBySource(sharedBlockedPairs(s, dir),
         Tables.documents(s, dir))),
     // oracle-checked components twin: deterministic blocked pairs in,
     // DuckDB WITH RECURSIVE transitive closure as the ground truth
@@ -1799,7 +1801,7 @@ object SparkEntry {
       operators.Curation.qualityDupProfile(Tables.documents(s, dir),
         pairs = sharedBlockedPairs(s, dir))),
     "dedup_edit_distance" -> ((s, dir) =>
-      Dedup.editDistancePairsOf(sharedTrunk(s, dir),
+      Dedup.editDistancePairs(sharedTrunk(s, dir),
         Tables.documents(s, dir))),
     // incremental ingest split: doc_id % 10 == 0 plays the new batch
     "dedup_incremental" -> ((s, dir) => {

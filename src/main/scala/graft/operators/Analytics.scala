@@ -367,22 +367,17 @@ object Analytics {
         col("r_score") * 100 + col("f_score") * 10 + col("m_score"))
   }
 
-  /** Market-basket affinity: part pairs co-purchased in the same
-    * order, with support counts — the retail association-rules
-    * input. The pair fan-out is the quadratic hazard: it's bounded
-    * per order by (distinct parts choose 2), so orders with more
-    * than `maxParts` distinct parts are excluded FIRST (standard
-    * basket hygiene — a 10k-line procurement order would contribute
-    * 50M pairs and no signal). After the guard, the self-join on
-    * l_orderkey fans out ≤ maxParts²/2 per order: linear in orders,
-    * one shuffle for the join, one for the pair count.
-    */
   /** The shared basket core: (order, part) distinct rows surviving
     * the giant-order guard. Lazy: [[basketAffinity]]'s lone
     * self-join gets exchange reuse for free, and callers with several
     * independent consumers ([[basketRules]]: pairs, per-part counts,
-    * order total) read it pinned ([[guardedBasketsShared]]). */
-  private def guardedBaskets(lineitem: DataFrame, maxParts: Int): DataFrame = {
+    * order total) read it pinned — the driver's shared cache builds
+    * it once at the family defaults and passes it into
+    * [[basketAffinity]], [[basketRules]] and [[basketChi2]] as their
+    * `baskets` input (the pair relation alone is not enough for the
+    * last two: both also need per-part order counts and the guarded
+    * order total from the SAME trunk). */
+  def guardedBaskets(lineitem: DataFrame, maxParts: Int = 20): DataFrame = {
     val perOrder = lineitem.select("l_orderkey", "l_partkey").distinct()
     val small = perOrder.groupBy("l_orderkey")
       .agg(count(lit(1)).as("n_parts"))
@@ -402,26 +397,20 @@ object Analytics {
       .agg(count(lit(1)).as("n_orders_together"))
       .filter(col("n_orders_together") >= minOrders)
 
-  def basketAffinity(lineitem: DataFrame, minOrders: Long = 2,
-                     maxParts: Int = 20): DataFrame =
-    guardedPairs(guardedBaskets(lineitem, maxParts), minOrders)
-
-  /** [[basketAffinity]] from an already-built (typically pinned)
-    * [[guardedBasketsShared]] relation — the driver's shared cache
-    * builds the trunk once and derives the pair engine from it
-    * instead of paying a second guarded-basket pass. */
-  def basketAffinityOf(baskets: DataFrame, minOrders: Long = 2): DataFrame =
+  /** Market-basket affinity: part pairs co-purchased in the same
+    * order, with support counts — the retail association-rules
+    * input. The pair fan-out is the quadratic hazard: it's bounded
+    * per order by (distinct parts choose 2), so orders with more
+    * than `maxParts` distinct parts are excluded FIRST (standard
+    * basket hygiene — a 10k-line procurement order would contribute
+    * 50M pairs and no signal); that guard is the
+    * [[guardedBaskets]] trunk this reads. After the guard, the
+    * self-join on l_orderkey fans out ≤ maxParts²/2 per order:
+    * linear in orders, one shuffle for the join, one for the pair
+    * count.
+    */
+  def basketAffinity(baskets: DataFrame, minOrders: Long = 2): DataFrame =
     guardedPairs(baskets, minOrders)
-
-  /** The pinned guarded (order, part) basket relation at the family
-    * defaults — built once by the driver's shared cache and passed
-    * into [[basketRules]]/[[basketChi2]] as their `baskets` input
-    * (the pair relation alone is not enough for them: both also
-    * need per-part order counts and the guarded order total from
-    * the SAME trunk). */
-  def guardedBasketsShared(lineitem: DataFrame,
-                           maxParts: Int = 20): DataFrame =
-    guardedBaskets(lineitem, maxParts)
 
   /** Association rules over [[basketAffinity]]'s pairs: directed
     * confidence(a→b) = together/orders(a) and lift =
@@ -1445,7 +1434,7 @@ object Analytics {
     */
   def copurchasePagerank(pairs: DataFrame, iters: Int = 3,
                          damping: Double = 0.85): DataFrame = {
-    // `pairs` (a pinned [[basketAffinityOf]] relation) is ONE
+    // `pairs` (a pinned [[basketAffinity]] relation) is ONE
     // pair-engine build shared across the whole basket family —
     // affinity, rules, pagerank, triangles, chi2 all ride the same
     // guarded pair counts, and at 100 TB building it once is the

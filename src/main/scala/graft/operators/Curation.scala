@@ -103,7 +103,7 @@ object Curation {
       .join(gopherDrop, Seq("doc_id"), "left_anti")
     val gated = delta.join(quality, Seq("doc_id"), "left_semi")
     val dupDrop = TextAnalysis
-      .dupNgramApplyOf(TextAnalysis.dupNgramDocsVsStore(delta, dupStore),
+      .dupNgramApply(TextAnalysis.dupNgramDocsVsStore(delta, dupStore),
         maxDupFrac)
       .filter(!col("keep")).select("doc_id")
     // exact: within-batch keep-min, then anti-join history fingerprints
@@ -219,9 +219,9 @@ object Curation {
     val scored = Some(flags.select("doc_id", "n_tokens", "quality_score"))
     val residual = flags.select(col("doc_id"), col("n_res").as("n_tokens"),
       col("quality_score"))
-    val suppressed = restrict(Dedup.nearDupSuppress(
-      restrict(curatedIdsOf(flags)), scored = scored,
-      shingles = Some(shingles)))
+    val survivors = restrict(curatedIdsOf(flags))
+    val suppressed = restrict(Dedup.nearDupSuppress(survivors,
+      survivorPairs(survivors, shingles), scored = scored))
     // pin the post-cap survivors: the budget walk consumes its input
     // twice (band totals + final window), and without this pin both
     // consumers would re-run the whole gate chain incl. the near-dup
@@ -234,6 +234,18 @@ object Curation {
       .join(docs.select("doc_id", "source"), Seq("doc_id"))
       .select("doc_id", "source", "n_tokens", "n_tokens_kept",
         "quality_score")
+  }
+
+  /** Verified near-dup pairs among `survivors`, off the pinned
+    * corpus `shingles`: sets are per-doc pure, so restricting them to
+    * the survivors is exactly re-shingling the survivors, and the
+    * gram df caps count over the survivors alone. */
+  private def survivorPairs(survivors: DataFrame,
+                            shingles: DataFrame): DataFrame = {
+    val sets = shingles.join(survivors.select("doc_id"), Seq("doc_id"),
+      "left_semi")
+    Dedup.blockedJaccardPairs(
+      Dedup.BlockingTrunk(sets, Dedup.blockedCandidates(sets)))
   }
 
   /** The fused per-doc gate relation under [[curateFull]] and
@@ -280,7 +292,7 @@ object Curation {
       .join(gopherDrop, Seq("doc_id"), "left_anti")
     val keeperIds = Dedup.exact(
       docs.join(qualityIds, Seq("doc_id"), "left_semi")).select("doc_id")
-    val dupDrop = TextAnalysis.dupNgramApplyOf(dupDocs, maxDupFrac)
+    val dupDrop = TextAnalysis.dupNgramApply(dupDocs, maxDupFrac)
       .filter(!col("keep")).select("doc_id")
     val contaminated = TextAnalysis
       .decontaminate(docs, n = 3, benchMod = benchMod).select("doc_id")
@@ -361,9 +373,9 @@ object Curation {
     // stay lazy: off the pinned suppressed + flags they are one
     // aggregate + one banded fold, cheaper to recompute than a
     // checkpoint job's fixed overhead.
-    val suppressed = restrict(Dedup.nearDupSuppress(
-        restrict(curatedIdsOf(flags)), scored = scored,
-        shingles = Some(shingles)))
+    val survivors = restrict(curatedIdsOf(flags))
+    val suppressed = restrict(Dedup.nearDupSuppress(survivors,
+        survivorPairs(survivors, shingles), scored = scored))
       .localCheckpoint(true)
     val capped = restrict(sourceCap(suppressed, cap, scored))
     val budgeted = selectToBudget(capped, tokenBudget, Some(residual))
@@ -607,8 +619,8 @@ object Curation {
                    capQuality: Double = 0.35): DataFrame = {
     // the near-dup pair list (the expensive half) comes in built — a
     // pipeline running several of the source-diagnostic operators
-    // blocks the corpus once ([[Dedup.blockedJaccardPairsOf]])
-    val rate = Dedup.nearDupRateBySourceOf(pairs, docs)
+    // blocks the corpus once ([[Dedup.blockedJaccardPairs]])
+    val rate = Dedup.nearDupRateBySource(pairs, docs)
       .select("source", "n_docs", "near_dup_rate")
     val qual = TextAnalysis.stats(docs, keep = Seq("source"))
       .groupBy("source")

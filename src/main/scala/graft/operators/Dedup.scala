@@ -685,52 +685,19 @@ object Dedup {
     * paraphrase chains (a≈b, b≈c, a̸≈c) are exactly what embedding
     * similarity surfaces, and cluster-then-keep-one (min id, like
     * every dedup family here) is the SemDeDup selection rule.
-    * Composes [[embeddingPairsExact]] (oracle anchor) with
-    * [[dedupGroups]]'s min-label propagation; the closure code is
-    * pair-source-agnostic, and the PRODUCTION pair source is
-    * [[embeddingPairs]] (LSH candidates, banded equi-joins) — both
-    * forms ship as driver keys (`dedup_embedding_groups` = exact
-    * anchor, `dedup_embedding_groups_lsh` = scale path), with pair
-    * recall and keep-parity spec'd against each other.
+    * Runs [[dedupGroups]]'s min-label propagation over a `pairs`
+    * relation; the closure code is pair-source-agnostic. The oracle
+    * anchor's pairs come from [[embeddingPairsExact]], the
+    * PRODUCTION pairs from [[embeddingPairs]] (LSH candidates,
+    * banded equi-joins) — both forms ship as driver keys
+    * (`dedup_embedding_groups` = exact anchor,
+    * `dedup_embedding_groups_lsh` = scale path), with pair recall
+    * and keep-parity spec'd against each other.
     */
-  def embeddingGroups(embeddings: DataFrame, tau: Double = 0.95,
-                      pairs: Option[DataFrame] = None): DataFrame =
-    dedupGroups(
-      embeddings.select(col("vec_id").as("doc_id")),
-      pairs.getOrElse(embeddingPairsExact(embeddings, tau)))
+  def embeddingGroups(embeddings: DataFrame, pairs: DataFrame): DataFrame =
+    dedupGroups(embeddings.select(col("vec_id").as("doc_id")), pairs)
       .select(col("doc_id").as("vec_id"), col("group_id"), col("keep"))
 
-  /** Deterministic near-dup pairs: token-n-gram INVERTED-INDEX
-    * blocking + exact Jaccard. Unlike the MinHash/SimHash paths there
-    * is no randomness anywhere, so the complete output — candidate
-    * generation included — is replayable in any engine and
-    * oracle-checked end to end (the LSH variants get rows-only
-    * checks; this operator is their exactness anchor).
-    *
-    * Blocking rule: a pair becomes a candidate iff it shares at least
-    * `minShared` n-grams whose document frequency is ≤ `maxDf`. Both
-    * knobs are scale guards. The DF cap bounds the inverted-index
-    * fan-out — an n-gram shared by df documents contributes O(df²)
-    * pair slots, so boilerplate grams ("terms of service apply")
-    * would otherwise quadratically explode one shuffle bucket;
-    * capped, the worst bucket is maxDf², independent of corpus size.
-    * The cap is enforced WHILE postings collect, not after: the
-    * bounded collector stops growing at maxDf+1 elements, so no
-    * aggregation buffer ever holds more than maxDf+1 ids regardless
-    * of a gram's true document frequency.
-    * The min-shared floor is applied as a HASH AGGREGATE over the
-    * exploded pair slots (count per pair), so only pairs with real
-    * overlap ever reach the array-payload verification join — on a
-    * template-heavy corpus this cuts verified pairs by ~100× (almost
-    * every doc pair shares SOME 3-gram; near-dups share many).
-    * Verification Jaccard runs on the FULL distinct-gram sets, not
-    * the DF-filtered ones, so reported similarity is the true value.
-    *
-    * Gram identity is the codegen'd 64-bit rolling shingle hash (same
-    * kernel as [[minhashPairs]]); the oracle uses the literal gram
-    * strings — identical set cardinalities absent a 64-bit collision
-    * inside one document's gram set (~|grams|²/2⁶⁴, negligible).
-    */
   /** DF-capped inverted-index candidate pairs — the shared blocking
     * of the deterministic verifiers ([[blockedJaccardPairs]],
     * [[blockedContainmentPairs]]).
@@ -743,9 +710,15 @@ object Dedup {
     * list before discarding it — an executor OOM at scale). A group
     * that reaches the cap has df > maxDf by definition and the
     * `size ≤ maxDf` filter drops it; `size ≥ 2` needs a partner.
+    *
+    * The candidate half of the trunk over an existing (possibly
+    * materialized) shingle-set relation — lets a caller cache the
+    * sets and the candidates independently: signature-based
+    * consumers (minhash) need only the sets, and must not pay the
+    * inverted-index candidate build to get them.
     */
-  private def blockedCandidates(sets: DataFrame, maxDf: Int,
-                                minShared: Int): DataFrame = {
+  def blockedCandidates(sets: DataFrame, maxDf: Int = 64,
+                        minShared: Int = 3): DataFrame = {
     val inv = sets.select(col("doc_id"), explode(col("shingles")).as("gram"))
     sharedPostings(inv, "gram", maxDf, col("id_a") < col("id_b"), "n_rare_shared")
       .filter(col("n_rare_shared") >= minShared)
@@ -789,37 +762,44 @@ object Dedup {
   def blockingTrunk(docs: DataFrame, n: Int = 3, maxDf: Int = 64,
                     minShared: Int = 3): BlockingTrunk = {
     val sets = shingleSets(docs, n)
-    BlockingTrunk(sets, candidatesOf(sets, maxDf, minShared))
+    BlockingTrunk(sets, blockedCandidates(sets, maxDf, minShared))
   }
 
-  /** The candidate half of the trunk from an existing (possibly
-    * materialized) shingle-set relation — lets a caller cache the
-    * sets and the candidates independently: signature-based
-    * consumers (minhash) need only the sets, and must not pay the
-    * inverted-index candidate build to get them. */
-  def candidatesOf(sets: DataFrame, maxDf: Int = 64,
-                   minShared: Int = 3): DataFrame =
-    blockedCandidates(sets, maxDf, minShared)
-
-  /** Shingle sets are PER-DOC pure, so a precomputed corpus-wide
-    * relation restricted to `docs`' ids is exactly
-    * `shingleSets(docs, n)` — a caller holding the shared trunk
-    * (e.g. the curation funnel over a survivor subset) threads it in
-    * and skips re-shingling; the df caps still compute over the
-    * restricted set, so results are identical either way. */
-  def blockedJaccardPairs(docs: DataFrame, n: Int = 3, tau: Double = 0.5,
-                          maxDf: Int = 64, minShared: Int = 3,
-                          shingles: Option[DataFrame] = None): DataFrame = {
-    val sets = shingles
-      .map(_.join(docs.select("doc_id"), Seq("doc_id"), "left_semi"))
-      .getOrElse(shingleSets(docs, n))
-    blockedJaccardPairsOf(
-      BlockingTrunk(sets, candidatesOf(sets, maxDf, minShared)), tau)
-  }
-
-  /** [[blockedJaccardPairs]] over a prebuilt [[BlockingTrunk]]. */
-  def blockedJaccardPairsOf(trunk: BlockingTrunk,
-                            tau: Double = 0.5): DataFrame =
+  /** Deterministic near-dup pairs: token-n-gram INVERTED-INDEX
+    * blocking + exact Jaccard. Unlike the MinHash/SimHash paths there
+    * is no randomness anywhere, so the complete output — candidate
+    * generation included — is replayable in any engine and
+    * oracle-checked end to end (the LSH variants get rows-only
+    * checks; this operator is their exactness anchor).
+    *
+    * Blocking rule: a pair becomes a candidate iff it shares at least
+    * `minShared` n-grams whose document frequency is ≤ `maxDf`. Both
+    * knobs are scale guards. The DF cap bounds the inverted-index
+    * fan-out — an n-gram shared by df documents contributes O(df²)
+    * pair slots, so boilerplate grams ("terms of service apply")
+    * would otherwise quadratically explode one shuffle bucket;
+    * capped, the worst bucket is maxDf², independent of corpus size.
+    * The cap is enforced WHILE postings collect, not after: the
+    * bounded collector stops growing at maxDf+1 elements, so no
+    * aggregation buffer ever holds more than maxDf+1 ids regardless
+    * of a gram's true document frequency.
+    * The min-shared floor is applied as a HASH AGGREGATE over the
+    * exploded pair slots (count per pair), so only pairs with real
+    * overlap ever reach the array-payload verification join — on a
+    * template-heavy corpus this cuts verified pairs by ~100× (almost
+    * every doc pair shares SOME 3-gram; near-dups share many).
+    * Verification Jaccard runs on the FULL distinct-gram sets, not
+    * the DF-filtered ones, so reported similarity is the true value.
+    *
+    * Gram identity is the codegen'd 64-bit rolling shingle hash (same
+    * kernel as [[minhashPairs]]); the oracle uses the literal gram
+    * strings — identical set cardinalities absent a 64-bit collision
+    * inside one document's gram set (~|grams|²/2⁶⁴, negligible).
+    * Verifies a [[BlockingTrunk]]'s candidates, kept at Jaccard ≥
+    * `tau`.
+    */
+  def blockedJaccardPairs(trunk: BlockingTrunk,
+                          tau: Double = 0.5): DataFrame =
     verifiedJaccard(trunk.candidates, trunk.sets, tau)
 
   /** Threshold-tuning histogram over the VERIFIED candidate pairs —
@@ -864,20 +844,13 @@ object Dedup {
     * cost = the blocked pair generation + one |pairs|-row join
     * against the quality projection.
     */
-  def nearDupSuppress(docs: DataFrame, n: Int = 3, tau: Double = 0.5,
-                      maxDf: Int = 64, minShared: Int = 3,
-                      scored: Option[DataFrame] = None,
-                      pairs: Option[DataFrame] = None,
-                      shingles: Option[DataFrame] = None): DataFrame = {
+  def nearDupSuppress(docs: DataFrame, pairs: DataFrame,
+                      scored: Option[DataFrame] = None): DataFrame = {
     // scores are per-doc pure, so a caller composing several gates
     // can thread one precomputed stats relation through all of them
-    // (and likewise a precomputed pair list or shingle relation —
-    // blocking is the expensive half of this operator)
     val q = scored.getOrElse(TextAnalysis.stats(docs))
       .select(col("doc_id"), col("quality_score"))
     val losers = pairs
-      .getOrElse(blockedJaccardPairs(docs, n, tau, maxDf, minShared,
-        shingles))
       .join(q.select(col("doc_id").as("id_a"), col("quality_score").as("q_a")),
         Seq("id_a"))
       .join(q.select(col("doc_id").as("id_b"), col("quality_score").as("q_b")),
@@ -896,7 +869,8 @@ object Dedup {
     * edit distance is the character-level ground truth): the shared
     * DF-capped inverted-index blocking ([[blockedCandidates]], so
     * never an all-pairs join), then banded Levenshtein on the
-    * candidates. The distance call carries the `maxDist` threshold
+    * candidates (only the trunk's candidate side is consumed — the
+    * verify payload is `docs`' raw text, not the shingles). The distance call carries the `maxDist` threshold
     * down into the kernel — Spark's thresholded `levenshtein` runs
     * the O(len·k) diagonal band and bails to -1 past the bound,
     * instead of filling the full O(len²) matrix per pair; at
@@ -905,16 +879,8 @@ object Dedup {
     * (the oracle computes the unbanded distance and filters — same
     * result by definition).
     */
-  def editDistancePairs(docs: DataFrame, n: Int = 3, maxDist: Int = 80,
-                        maxDf: Int = 64, minShared: Int = 3): DataFrame =
-    editDistancePairsOf(blockingTrunk(docs, n, maxDf, minShared), docs,
-      maxDist)
-
-  /** [[editDistancePairs]] over a prebuilt [[BlockingTrunk]] (only
-    * the candidate side is consumed — the verify payload is the raw
-    * text, not the shingles). */
-  def editDistancePairsOf(trunk: BlockingTrunk, docs: DataFrame,
-                          maxDist: Int = 80): DataFrame = {
+  def editDistancePairs(trunk: BlockingTrunk, docs: DataFrame,
+                        maxDist: Int = 80): DataFrame = {
     val texts = docs.select(col("doc_id"), col("text"))
     trunk.candidates
       .join(texts.select(col("doc_id").as("id_a"), col("text").as("t_a")),
@@ -994,13 +960,8 @@ object Dedup {
     * its size has containment 1.0 but Jaccard ≤ 0.1. Fully
     * deterministic → oracle-checked end to end like its Jaccard twin.
     */
-  def blockedContainmentPairs(docs: DataFrame, n: Int = 3, tau: Double = 0.8,
-                              maxDf: Int = 64, minShared: Int = 3): DataFrame =
-    blockedContainmentPairsOf(blockingTrunk(docs, n, maxDf, minShared), tau)
-
-  /** [[blockedContainmentPairs]] over a prebuilt [[BlockingTrunk]]. */
-  def blockedContainmentPairsOf(trunk: BlockingTrunk,
-                                tau: Double = 0.8): DataFrame = {
+  def blockedContainmentPairs(trunk: BlockingTrunk,
+                              tau: Double = 0.8): DataFrame = {
     joinPairPayload(trunk.candidates, trunk.sets, "doc_id", "shingles")
       .withColumn("containment",
         size(array_intersect(col("shingles_a"), col("shingles_b"))) /
@@ -1060,23 +1021,17 @@ object Dedup {
     * (doc_id, source) projection — two separate source-lookup joins
     * would evaluate the projection subtree, and therefore the
     * corpus scan, twice. Output is at most |sources|² rows.
-    */
-  def crossSourceMatrix(docs: DataFrame, n: Int = 3, tau: Double = 0.5,
-                        maxDf: Int = 64, minShared: Int = 3): DataFrame =
-    crossSourceMatrixOf(blockedJaccardPairs(docs, n, tau, maxDf, minShared),
-      docs)
-
-  /** [[crossSourceMatrix]] over an already-computed pair list — a
-    * pipeline that also runs [[nearDupRateBySourceOf]] or
+    *
+    * A pipeline that also runs [[nearDupRateBySource]] or
     * [[nearDupSuppress]] should materialize the (expensive) pairs
     * once and feed all three, not re-block the corpus per report.
-    *
     * `pairs` ids should come from `docs`; if one doesn't (pairs
     * computed against a wider corpus), its side is reported under
     * the sentinel source `<missing>` rather than silently folding
     * into a null row — the inconsistency stays visible in the
-    * matrix. Left join so the absent id can't drop the pair. */
-  def crossSourceMatrixOf(pairs: DataFrame, docs: DataFrame): DataFrame = {
+    * matrix. Left join so the absent id can't drop the pair.
+    */
+  def crossSourceMatrix(pairs: DataFrame, docs: DataFrame): DataFrame = {
     val src = docs.select(col("doc_id"), col("source"))
     pairs
       .select(col("id_a"), col("id_b"),
@@ -1102,16 +1057,10 @@ object Dedup {
     * pair-level dedup. Left join of the corpus against the distinct
     * paired-id set — the pair side is tiny, the corpus side is one
     * pruned (doc_id, source) scan; rate rounded to 6 dp for
-    * cross-engine float stability.
+    * cross-engine float stability. Shares its pair list with
+    * [[crossSourceMatrix]].
     */
-  def nearDupRateBySource(docs: DataFrame, n: Int = 3, tau: Double = 0.5,
-                          maxDf: Int = 64, minShared: Int = 3): DataFrame =
-    nearDupRateBySourceOf(blockedJaccardPairs(docs, n, tau, maxDf, minShared),
-      docs)
-
-  /** [[nearDupRateBySource]] over an already-computed pair list (see
-    * [[crossSourceMatrixOf]]). */
-  def nearDupRateBySourceOf(pairs: DataFrame, docs: DataFrame): DataFrame = {
+  def nearDupRateBySource(pairs: DataFrame, docs: DataFrame): DataFrame = {
     val dupIds = pairs
       .select(explode(array(col("id_a"), col("id_b"))).as("doc_id"))
       .distinct()

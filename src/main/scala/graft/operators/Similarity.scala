@@ -232,8 +232,7 @@ object Similarity {
   /** Per-label centroid components: mean of each embedding dimension
     * per label, flat (label, pos, avg_val) shape. posexplode + a
     * two-key aggregate — one shuffle of (n·dim) scalars, no vector
-    * objects on the heap. `assembleCentroids` folds the flat shape
-    * back into vectors for model use.
+    * objects on the heap.
     */
   def labelCentroids(embeddings: DataFrame): DataFrame =
     embeddings
@@ -274,12 +273,6 @@ object Similarity {
           .otherwise(lit(0.0))
           .as("centroid_cosine"))
   }
-
-  def assembleCentroids(flat: DataFrame): DataFrame =
-    flat.groupBy("label")
-      .agg(transform(
-        array_sort(collect_list(struct(col("pos"), col("avg_val")))),
-        s => s.getField("avg_val")).as("centroid"))
 
   /** Deterministic IVF "training" init: a pseudo-random (but
     * run-stable) hash-thinned sample of ~4×nlist vectors, cut to
@@ -412,14 +405,6 @@ object Similarity {
       gf.nearestCentroids(col("embedding"), cents, 1)(0).cast("long").as("cell"))
   }
 
-  /** IVF search with k-means-trained centroids (trained on a
-    * bounded sample by default — see [[trainSample]]). */
-  def ivfTopKTrained(corpus: DataFrame, queries: DataFrame, k: Int = 10,
-                     nlist: Int = 16, nprobe: Int = 4, iters: Int = 3,
-                     sampleCap: Int = 4096): DataFrame =
-    ivfSearch(corpus, queries, k,
-      trainCentroids(corpus, nlist, iters, sampleCap), nprobe)
-
   /** IVF search: corpus vectors live in their nearest-centroid cell
     * (nprobe=1 assignment); queries probe `nprobe` cells. One
     * equi-join on cell id — the 100 TB plan is a co-partitioned join
@@ -428,15 +413,6 @@ object Similarity {
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int = 10,
               nlist: Int = 16, nprobe: Int = 4): DataFrame =
     ivfSearch(corpus, queries, k, pickCentroids(corpus, nlist), nprobe)
-
-  /** IVF search against an EXPLICIT centroid matrix — the in-memory
-    * twin of probing a persisted index whose centroids are already
-    * fixed ([[graft.operators.AnnIndex.probeIvf]]); the parity
-    * reference for incremental append. */
-  def ivfTopKWith(corpus: DataFrame, queries: DataFrame,
-                  centroids: Array[Array[Float]], k: Int = 10,
-                  nprobe: Int = 4): DataFrame =
-    ivfSearch(corpus, queries, k, centroids, nprobe)
 
   /** IVF cell-balance diagnostic: occupancy of every cell (empty
     * cells included via an `nlist`-row spine), its share of the
@@ -586,7 +562,7 @@ object Similarity {
     * codebooks) — the in-memory twin of probing a persisted IVF-PQ
     * index whose model is already fixed
     * ([[graft.operators.AnnIndex.probeIvfPq]]); the parity reference
-    * for incremental append, mirroring [[ivfTopKWith]]. */
+    * for incremental append, mirroring [[ivfSearch]]. */
   def ivfPqTopKWith(corpus: DataFrame, queries: DataFrame,
                     cents: Array[Array[Float]],
                     cbs: Array[Array[Array[Float]]], k: Int = 10,
@@ -826,8 +802,14 @@ object Similarity {
         (col("n_label") === col("true_label")).as("correct"))
   }
 
-  private def ivfSearch(corpus: DataFrame, queries: DataFrame, k: Int,
-                        centroids: Array[Array[Float]], nprobe: Int): DataFrame = {
+  /** IVF search against an EXPLICIT centroid matrix — the in-memory
+    * twin of probing a persisted index whose centroids are already
+    * fixed ([[graft.operators.AnnIndex.probeIvf]]), and the parity
+    * reference for incremental append; [[trainCentroids]] supplies
+    * k-means-trained centroids. */
+  private[graft] def ivfSearch(corpus: DataFrame, queries: DataFrame, k: Int,
+                               centroids: Array[Array[Float]],
+                               nprobe: Int): DataFrame = {
     val assigned = corpus.select(col("vec_id").as("neighbor_id"),
       col("embedding").as("n_emb"),
       gf.nearestCentroids(col("embedding"), centroids, 1)(0).as("cell"))
@@ -838,19 +820,6 @@ object Similarity {
       .transform(scoredPairs(gf.cosineSim(col("q_emb"), col("n_emb")))), k)
   }
 
-  /** Embedding QA profile — the sanity pass run before any vectors
-    * enter an index: per label, vector count, dimension spread, and
-    * the L2-norm envelope (a zero-norm or wildly-scaled batch is an
-    * upstream encoder bug; cosine silently hides scale, MIPS does
-    * not). The norm is a LEFT-FOLD over the float array with every
-    * element cast to double — the fold order is pinned, so DuckDB's
-    * `list_reduce` replays it bit-for-bit ([[Multimodal]]'s pooled-
-    * feature oracle trick) and min/max over bit-identical doubles
-    * are exact; the mean alone crosses row order, so it is rounded
-    * (1e-6, error ~1e-13/row — docs/ORACLE_NOTES.md). One narrow
-    * scan, one tiny aggregate; per-row work is O(dim). A diagnostic,
-    * so the interpreted HOF lambda is acceptable off the hot path.
-    */
   /** Per-dimension distribution profile — the OTHER embedding QA
     * axis ([[normProfile]] checks rows; this checks columns): count,
     * mean, sample variance and range of every coordinate across the
@@ -976,6 +945,19 @@ object Similarity {
       .withColumn("rank", col("rank").cast("long"))
   }
 
+  /** Embedding QA profile — the sanity pass run before any vectors
+    * enter an index: per label, vector count, dimension spread, and
+    * the L2-norm envelope (a zero-norm or wildly-scaled batch is an
+    * upstream encoder bug; cosine silently hides scale, MIPS does
+    * not). The norm is a LEFT-FOLD over the float array with every
+    * element cast to double — the fold order is pinned, so DuckDB's
+    * `list_reduce` replays it bit-for-bit ([[Multimodal]]'s pooled-
+    * feature oracle trick) and min/max over bit-identical doubles
+    * are exact; the mean alone crosses row order, so it is rounded
+    * (1e-6, error ~1e-13/row — docs/ORACLE_NOTES.md). One narrow
+    * scan, one tiny aggregate; per-row work is O(dim). A diagnostic,
+    * so the interpreted HOF lambda is acceptable off the hot path.
+    */
   def normProfile(embeddings: DataFrame): DataFrame = {
     val norm = sqrt(aggregate(col("embedding"), lit(0.0d),
       (acc, x) => acc + x.cast("double") * x.cast("double")))

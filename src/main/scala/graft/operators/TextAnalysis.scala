@@ -457,14 +457,12 @@ object TextAnalysis {
     * lands in one window partition; that is the same skew any
     * per-n-gram aggregate carries, and it sorts — never joins —
     * so the hot key costs O(occ log occ), not O(occ²).
+    *
+    * The rollup reads a prebuilt [[dupNgramDocs]] relation (rollup
+    * and gate read one pinned doc-grain pass instead of re-running
+    * the corpus window).
     */
-  def dupNgramCorpus(docs0: DataFrame, n: Int = 8): DataFrame =
-    dupNgramCorpusOf(dupNgramDocs(docs0, n))
-
-  /** Source rollup over a prebuilt [[dupNgramDocs]] relation — the
-    * shared-trunk entry point (rollup and gate read one pinned
-    * doc-grain pass instead of re-running the corpus window). */
-  def dupNgramCorpusOf(perDoc: DataFrame): DataFrame =
+  def dupNgramCorpus(perDoc: DataFrame): DataFrame =
     perDoc
       .groupBy("source").agg(
         count(lit(1)).as("n_docs"),
@@ -476,20 +474,9 @@ object TextAnalysis {
         when(col("tok_chars") > 0, col("dup_chars") / col("tok_chars"))
           .otherwise(lit(0.0)))
 
-  /** Doc-grain relation under [[dupNgramCorpus]] — one row per
-    * document with its exact corpus-duplicated character coverage
-    * (`dup_chars` already coalesced to 0 for untouched docs). The
-    * source rollup above and the per-doc gate readout
-    * ([[dupNgramApply]]) both derive from this single definition.
-    */
-  def dupNgramDocs(docs0: DataFrame, n: Int = 8): DataFrame = {
-    val docs = dupNgramToks(docs0)
-    dupNgramDocsOf2(docs, dupNgramStarts(docs, n), n)
-  }
-
   /** Token projection under the corpus-duplication family — cheap
     * and row-local, re-derived per consumer; the expensive piece
-    * ([[dupNgramStarts]]'s corpus window) is what callers pin. */
+    * ([[dupNgramDupOcc]]'s corpus window) is what callers pin. */
   def dupNgramToks(docs0: DataFrame): DataFrame =
     Spread.spread(docs0.select(col("doc_id"), col("source"), col("text")))
       .select(col("doc_id"), col("source"), tokens(col("text")).as("toks"))
@@ -533,21 +520,22 @@ object TextAnalysis {
   /** The persisted dup-gram STORE a streaming intake gate probes:
     * the distinct corpus-duplicated n-grams of the nightly corpus —
     * what [[graft.streaming.DocStream.dupNgramGate]] joins new
-    * documents against (history never re-explodes at intake time). */
-  def dupNgramStore(docs0: DataFrame, n: Int = 8,
-                    occ: Option[DataFrame] = None): DataFrame =
-    occ.getOrElse(dupNgramDupOcc(dupNgramToks(docs0), n))
-      .select("ng").distinct()
+    * documents against (history never re-explodes at intake time),
+    * read off the corpus's [[dupNgramDupOcc]] occurrences. */
+  def dupNgramStore(occ: DataFrame): DataFrame =
+    occ.select("ng").distinct()
 
-  /** (doc_id, starts) of corpus-duplicated n-gram occurrence
-    * positions — [[dupNgramDupOcc]] + the per-doc fold. */
-  private[graft] def dupNgramStarts(docs: DataFrame, n: Int = 8): DataFrame =
-    startsOfOcc(dupNgramDupOcc(docs, n))
-
-  /** Doc-grain coverage fold over a prebuilt [[dupNgramStarts]]
-    * relation — the row-local tail of [[dupNgramDocs]]. */
-  private[graft] def dupNgramDocsOf2(docs: DataFrame, starts: DataFrame,
-                                     n: Int = 8): DataFrame = {
+  /** Doc-grain relation under [[dupNgramCorpus]] — one row per
+    * document with its exact corpus-duplicated character coverage
+    * (`dup_chars` already coalesced to 0 for untouched docs), folded
+    * row-locally over a [[dupNgramToks]] projection and its
+    * duplicated start positions ([[startsOfOcc]] of
+    * [[dupNgramDupOcc]]). The source rollup and the per-doc gate
+    * readout ([[dupNgramApply]]) both derive from this single
+    * definition.
+    */
+  def dupNgramDocs(docs: DataFrame, starts: DataFrame,
+                   n: Int = 8): DataFrame = {
     val coveredChars = starts
       .join(docs.select("doc_id", "toks"), Seq("doc_id"))
       .select(col("doc_id"), expr(
@@ -563,8 +551,8 @@ object TextAnalysis {
 
   /** Maximal duplicate-SPAN extraction (Lee et al. 2022's
     * exact-substring dedup target, at token grain): chain ADJACENT
-    * corpus-duplicated n-gram positions — the per-position flags the
-    * [[dupNgramStarts]] trunk already holds — into maximal per-doc
+    * corpus-duplicated n-gram positions — the per-doc `starts` folded
+    * off the pinned [[dupNgramDupOcc]] trunk — into maximal per-doc
     * spans. A position is duplicated iff it lies inside ANY
     * occurrence of an n-gram shared by ≥ 2 distinct docs (the same
     * position-union billing as [[dupNgramDocs]]); a span is a
@@ -678,24 +666,19 @@ object TextAnalysis {
       .join(org.apache.spark.sql.functions.broadcast(store.select("ng")),
         Seq("ng"), "left_semi")
       .select("doc_id", "start")
-    dupNgramDocsOf2(d, startsOfOcc(occ), n)
+    dupNgramDocs(d, startsOfOcc(occ), n)
   }
 
   /** The per-doc KEEP/DROP readout of the corpus-duplication gate —
     * [[dupNgramCorpus]]'s `docs_gopher_apply`-shaped twin: each doc
     * carries its exact duplicated-character fraction and drops iff
     * the fraction crosses `maxDupFrac` (the RefinedWeb-style "mostly
-    * shared boilerplate" cut). Same single doc-grain definition as
-    * the rollup, so gate and audit can never drift.
+    * shared boilerplate" cut). Reads the same prebuilt
+    * [[dupNgramDocs]] relation as the rollup, so gate and audit can
+    * never drift.
     */
-  def dupNgramApply(docs0: DataFrame, n: Int = 8,
+  def dupNgramApply(perDoc: DataFrame,
                     maxDupFrac: Double = 0.5): DataFrame =
-    dupNgramApplyOf(dupNgramDocs(docs0, n), maxDupFrac)
-
-  /** Gate readout over a prebuilt [[dupNgramDocs]] relation (the
-    * shared-trunk twin of [[dupNgramCorpusOf]]). */
-  def dupNgramApplyOf(perDoc: DataFrame,
-                      maxDupFrac: Double = 0.5): DataFrame =
     perDoc
       .withColumn("dup_char_fraction",
         when(col("tok_chars") > 0, col("dup_chars") / col("tok_chars"))
@@ -835,17 +818,12 @@ object TextAnalysis {
     }
 
   /** Per-doc Gopher QUALITY profile — the driver key's shape: one
-    * row per document with the 7 paper metrics, over the quality
-    * fixture ([[synthQualityCorpus]]). Pure row-local projection,
+    * row per document with the 7 paper metrics, projected from any
+    * relation carrying the [[gopherQualityCols]] metric columns (the
+    * pinned [[gopherFlagged]] pass over the quality fixture,
+    * [[synthQualityCorpus]], qualifies). Pure row-local projection,
     * scales with the scan. */
-  def gopherQuality(lined: DataFrame): DataFrame =
-    gopherQualityOf(gopherQualityCols(
-      Spread.spread(lined.select("doc_id", "text"))))
-
-  /** The profile projection over any relation carrying the
-    * [[gopherQualityCols]] metric columns (the pinned
-    * [[gopherFlagged]] pass qualifies). */
-  def gopherQualityOf(metrics: DataFrame): DataFrame =
+  def gopherQuality(metrics: DataFrame): DataFrame =
     metrics
       .select("doc_id", "n_words", "mean_word_len", "symbol_word_ratio",
         "bullet_line_fraction", "ellipsis_line_fraction",
@@ -945,19 +923,6 @@ object TextAnalysis {
     anyQualityFlag || col("f_line") || col("f_para") ||
       col("f_top") || col("f_dup")
 
-  /** Per-document APPLY form of [[gopherGate]] — the decision a
-    * curation pipeline actually consumes: one row per doc with
-    * `keep` and, for dropped docs, the FIRST firing gate family in
-    * fixed precedence (the 7 quality families in table order, then
-    * line → para → top-gram → dup-gram — quality before repetition,
-    * the paper's filter order; a deterministic CASE both engines
-    * evaluate identically). Same threshold tables, same
-    * single-projection metric pass (quality metrics reuse the
-    * repetition pass's token/line arrays — one tokenization).
-    */
-  def gopherGateApply(docs: DataFrame, linedDocs: DataFrame): DataFrame =
-    gopherGateApplyOf(docs, gopherFlagged(linedDocs))
-
   /** The ONE metric-and-flag pass all three batch gate keys read —
     * all 20 thresholds' flag columns over a single tokenization.
     * The driver pins this per (session, dir) so gate/apply/cost
@@ -966,8 +931,18 @@ object TextAnalysis {
     gopherQualityFlags(gopherQualityCols(gopherFlagCols(gopherMetricCols(
       Spread.spread(linedDocs.select("doc_id", "text"))))))
 
-  /** [[gopherGateApply]] over a prebuilt [[gopherFlagged]] relation. */
-  def gopherGateApplyOf(docs: DataFrame, flagged: DataFrame): DataFrame =
+  /** Per-document APPLY form of [[gopherGate]] — the decision a
+    * curation pipeline actually consumes: one row per doc with
+    * `keep` and, for dropped docs, the FIRST firing gate family in
+    * fixed precedence (the 7 quality families in table order, then
+    * line → para → top-gram → dup-gram — quality before repetition,
+    * the paper's filter order; a deterministic CASE both engines
+    * evaluate identically). Same threshold tables, same
+    * single-projection metric pass (quality metrics reuse the
+    * repetition pass's token/line arrays — one tokenization), read
+    * from a prebuilt [[gopherFlagged]] relation.
+    */
+  def gopherGateApply(docs: DataFrame, flagged: DataFrame): DataFrame =
     flagged
       .join(docs.select("doc_id", "source"), Seq("doc_id"))
       .withColumn("gate_family",
@@ -996,13 +971,10 @@ object TextAnalysis {
     * single division. Plan: ONE row-local metric projection (both
     * fused kernels + the segment folds — [[gopherMetricCols]] +
     * [[gopherQualityCols]] sharing its arrays, the stream-safe
-    * shape) joined to sources, one hash aggregate.
+    * shape, the prebuilt [[gopherFlagged]] relation) joined to
+    * sources, one hash aggregate.
     */
-  def gopherGate(docs: DataFrame, linedDocs: DataFrame): DataFrame =
-    gopherGateOf(docs, gopherFlagged(linedDocs))
-
-  /** [[gopherGate]] over a prebuilt [[gopherFlagged]] relation. */
-  def gopherGateOf(docs: DataFrame, flagged0: DataFrame): DataFrame = {
+  def gopherGate(docs: DataFrame, flagged0: DataFrame): DataFrame = {
     def cnt(c: Column) = sum(when(c, 1L).otherwise(0L))
     val flagged = flagged0
       .join(docs.select("doc_id", "source"), Seq("doc_id"))
@@ -1024,14 +996,11 @@ object TextAnalysis {
     * lined fixture exists only to exercise the gate) split into kept
     * vs total, with retention as one division of exact sums. The
     * gate decision joins back to the raw token counts on doc_id —
-    * 8-byte keys, one aggregate.
+    * 8-byte keys, one aggregate. Reads a prebuilt [[gopherFlagged]]
+    * relation.
     */
-  def gopherGateCost(docs: DataFrame, linedDocs: DataFrame): DataFrame =
-    gopherGateCostOf(docs, gopherFlagged(linedDocs))
-
-  /** [[gopherGateCost]] over a prebuilt [[gopherFlagged]] relation. */
-  def gopherGateCostOf(docs: DataFrame, flagged: DataFrame): DataFrame =
-    gopherGateApplyOf(docs, flagged).select("doc_id", "source", "keep")
+  def gopherGateCost(docs: DataFrame, flagged: DataFrame): DataFrame =
+    gopherGateApply(docs, flagged).select("doc_id", "source", "keep")
       .join(docs.select(col("doc_id"),
         size(tokens(col("text"))).cast("long").as("n_toks")), Seq("doc_id"))
       .groupBy("source")

@@ -29,21 +29,18 @@ import graft.operators.AnnIndex
   */
 object AnnStream {
 
-  /** The per-micro-batch kernel — exactly the persisted-index batch
-    * probe, so stream output ≡ batch output by construction. */
-  def probeBatch(spark: SparkSession, path: String, batch: DataFrame,
-                 k: Int = 10, nprobe: Int = 12): DataFrame =
-    AnnIndex.probeIvf(spark, path, batch, k, nprobe)
-
   /** Streaming sink: probe each arriving query micro-batch against
-    * the index at `path` and hand the per-batch top-k to `onBatch`. */
+    * the index at `path` and hand the per-batch top-k to `onBatch`.
+    * The per-batch kernel is exactly the persisted-index batch probe
+    * ([[AnnIndex.probeIvf]]), so stream output ≡ batch output by
+    * construction. */
   def probeSink(queryStream: DataFrame, path: String,
                 k: Int = 10, nprobe: Int = 12)
                (onBatch: DataFrame => Unit): StreamingQuery =
     queryStream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        onBatch(probeBatch(batch.sparkSession, path, batch, k, nprobe))
+        onBatch(AnnIndex.probeIvf(batch.sparkSession, path, batch, k, nprobe))
       }
       .start()
 
@@ -58,7 +55,7 @@ object AnnStream {
                   k: Int = 10, nprobe: Int = 12,
                   batches: Int = 2): DataFrame =
     (0 until batches).map { i =>
-      probeBatch(spark, path,
+      AnnIndex.probeIvf(spark, path,
         queries.filter(pmod(xxhash64(col("vec_id")), lit(batches)) === i),
         k, nprobe)
     }.reduce(_ unionByName _)

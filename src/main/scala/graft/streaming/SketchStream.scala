@@ -8,6 +8,10 @@ import graft.operators.CountMin
 /** Streaming Count-Min maintenance — the sketch as LIVE state
   * (SURVEY §2.G × §2.E).
   *
+  * The streaming query is the batch build itself: [[CountMin.sketch]]
+  * is one projection + one groupBy-count, both streamable; run it
+  * with `outputMode("update"|"complete")`.
+  *
   * Unlike the zero-state intake gates, this stream is stateful on
   * purpose — and the point is that its state is CAPPED: the
   * streaming aggregation keys on (r, bucket), so the state store
@@ -24,13 +28,6 @@ import graft.operators.CountMin
   * oracle verbatim.
   */
 object SketchStream {
-
-  /** The streaming sketch query: the SAME kernel as the batch build
-    * ([[CountMin.sketch]] is one projection + one groupBy-count,
-    * both streamable); run it with `outputMode("update"|"complete")`
-    * and the state store maintains the ≤ depth·width counters. */
-  def sketchQuery(docStream: DataFrame): DataFrame =
-    CountMin.sketch(docStream)
 
   /** Batch replay of the stream path (the driver key): the corpus
     * split into deterministic micro-batches, each batch's partial

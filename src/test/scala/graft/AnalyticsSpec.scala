@@ -200,7 +200,8 @@ class AnalyticsSpec extends SparkSpec {
       Seq((1L, 1L), (1L, 2L), (1L, 2L), (1L, 3L), (2L, 1L), (2L, 2L),
         (3L, 1L), (3L, 2L)) ++ (1L to 25L).map(p => (9L, p))
     val li = rows.toDF("l_orderkey", "l_partkey")
-    val out = Analytics.basketAffinity(li, minOrders = 2, maxParts = 20)
+    val out = Analytics.basketAffinity(
+        Analytics.guardedBaskets(li, maxParts = 20), minOrders = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(out == Map((1L, 2L) -> 3L),
       s"expected only (1,2)->3 (giant order excluded, dup line ignored): $out")

@@ -43,7 +43,7 @@ class AnnIndexSpec extends SparkSpec {
     // parity: identical to the in-memory search over the UNION corpus
     // with the index's stored (fixed) centroids
     val cents = AnnIndex.loadCentroids(spark, s"$base/ivf")
-    assert(probed == pairs(Similarity.ivfTopKWith(corpus, queries, cents)))
+    assert(probed == pairs(Similarity.ivfSearch(corpus, queries, 10, cents, 4)))
     // the appended batch is really searchable (odd ids appear)
     assert(probed.exists { case (_, n) => n % 2 != 0 },
       "day-2 vectors must be reachable after append")
@@ -88,8 +88,8 @@ class AnnIndexSpec extends SparkSpec {
     //    the same (full-pick) centroids — per-vector assignment makes
     //    probe-time masking and survivor-only assignment coincide
     val cents = AnnIndex.loadCentroids(spark, s"$base/ivf")
-    assert(masked == pairs(Similarity.ivfTopKWith(
-      corpus.filter(!deadPred), queries, cents)))
+    assert(masked == pairs(Similarity.ivfSearch(
+      corpus.filter(!deadPred), queries, 10, cents, 4)))
     // 3. the plan flags exactly the cells above the dead-frac cut,
     //    and apply rewrites exactly those
     val plan = AnnIndex.compactPlanIvf(spark, s"$base/ivf")
@@ -177,8 +177,8 @@ class AnnIndexSpec extends SparkSpec {
       val cents = AnnIndex.loadCentroids(spark, s"$base/ivf")
       val survivors = corpus.filter(!col("vec_id")
         .isin(dead.toSeq.map(java.lang.Long.valueOf): _*))
-      assert(masked == pairs(Similarity.ivfTopKWith(survivors, queries,
-        cents)), s"round $round: masked != survivor search")
+      assert(masked == pairs(Similarity.ivfSearch(survivors, queries, 10,
+        cents, 4)), s"round $round: masked != survivor search")
       val flagged = AnnIndex.compactPlanIvf(spark, s"$base/ivf", thr)
         .filter(col("rewrite")).select("cell")
         .collect().map(_.getInt(0)).toSet

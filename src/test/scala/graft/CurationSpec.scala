@@ -105,7 +105,8 @@ class CurationSpec extends SparkSpec {
       .collect().map(_.getAs[Long]("doc_id")).toSet
     assert(keptIds.intersect(gflagged).isEmpty,
       "a Gopher-flagged doc must never survive the composition")
-    val dupDropped = graft.operators.TextAnalysis.dupNgramApply(docs)
+    val dupDropped = graft.operators.TextAnalysis
+      .dupNgramApply(SharedTrunks.dupDocs(docs))
       .filter(!col("keep")).collect().map(_.getAs[Long]("doc_id")).toSet
     assert(keptIds.intersect(dupDropped).isEmpty,
       "a corpus-duplication-gated doc must never survive")
@@ -394,8 +395,7 @@ class CurationSpec extends SparkSpec {
                           tau: Double = 0.5) =
     Curation.curateIncremental(delta, history,
       gopherFlags = SharedTrunks.gopherFlagged(delta.unionByName(history)),
-      dupStore = SharedTrunks.pin(
-        graft.operators.TextAnalysis.dupNgramStore(history)),
+      dupStore = SharedTrunks.dupStore(history),
       embeddings = embeddings,
       minTokens = minTokens, minQuality = minQuality, tau = tau)
 

@@ -41,7 +41,7 @@ class DedupRecallSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
   private lazy val anchor: Set[(Long, Long)] =
-    pairSet(Dedup.blockedJaccardPairs(docs, n = 3, tau = 0.5))
+    pairSet(Dedup.blockedJaccardPairs(Dedup.blockingTrunk(docs, n = 3), tau = 0.5))
 
   private def recall(found: Set[(Long, Long)], truth: Set[(Long, Long)]): Double =
     if (truth.isEmpty) 1.0 else (found & truth).size.toDouble / truth.size
@@ -123,9 +123,10 @@ class DedupRecallSpec extends SparkSpec {
     def keeps(df: org.apache.spark.sql.DataFrame): Map[Long, Boolean] =
       df.select(col("vec_id"), col("keep")).collect()
         .map(row => row.getLong(0) -> row.getBoolean(1)).toMap
-    val exactKeep = keeps(Dedup.embeddingGroups(emb, tau = 0.9))
-    val lshKeep = keeps(Dedup.embeddingGroups(emb, tau = 0.9,
-      pairs = Some(Dedup.embeddingPairs(emb, tau = 0.9))))
+    val exactKeep = keeps(Dedup.embeddingGroups(emb,
+      Dedup.embeddingPairsExact(emb, tau = 0.9)))
+    val lshKeep = keeps(Dedup.embeddingGroups(emb,
+      Dedup.embeddingPairs(emb, tau = 0.9)))
     assert(exactKeep.keySet == lshKeep.keySet)
     val agree = exactKeep.count { case (id, k) => lshKeep(id) == k }
     val parity = agree.toDouble / exactKeep.size

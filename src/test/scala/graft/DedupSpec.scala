@@ -73,7 +73,7 @@ class DedupSpec extends SparkSpec {
       j = shared.size.toDouble / gramSets(a).union(gramSets(b)).size
       if j >= 0.5
     } yield (a, b) -> j).toMap
-    val got = Dedup.blockedJaccardPairs(docs).collect()
+    val got = Dedup.blockedJaccardPairs(Dedup.blockingTrunk(docs)).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(got.keySet == expected.keySet)
     expected.foreach { case (k, j) => assert(math.abs(got(k) - j) < 1e-12) }
@@ -108,7 +108,7 @@ class DedupSpec extends SparkSpec {
     // postings collect through the BOUNDED aggregator (buffer capped
     // at maxDf+1), never a plain collect_set whose buffer grows with
     // a boilerplate gram's document frequency
-    val p = Dedup.blockedJaccardPairs(docs, maxDf = 2)
+    val p = Dedup.blockedJaccardPairs(Dedup.blockingTrunk(docs, maxDf = 2))
       .queryExecution.executedPlan.toString
     assert(!p.contains("collect_set"),
       s"no unbounded collect_set may appear in the blocking:\n$p")
@@ -130,7 +130,7 @@ class DedupSpec extends SparkSpec {
       (2L, "shared boilerplate header " + nearDup),
       (3L, "shared boilerplate header " + unrelated))
       .toDF("doc_id", "text")
-    val pairs = Dedup.blockedJaccardPairs(boiler, maxDf = 3)
+    val pairs = Dedup.blockedJaccardPairs(Dedup.blockingTrunk(boiler, maxDf = 3))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // "shared boilerplate header ..." grams have df=4 > maxDf=3 →
     // pruned; unrelated doc must still not pair via boilerplate alone
@@ -147,8 +147,8 @@ class DedupSpec extends SparkSpec {
     val many = (0L until 60L).map { i =>
       i -> Seq.fill(20)(vocab(rnd.nextInt(vocab.length))).mkString(" ")
     }
-    def pairsOf(parts: Int) = Dedup.blockedJaccardPairs(
-        many.toDF("doc_id", "text").repartition(parts), tau = 0.2)
+    def pairsOf(parts: Int) = Dedup.blockedJaccardPairs(Dedup.blockingTrunk(
+        many.toDF("doc_id", "text").repartition(parts)), tau = 0.2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(pairsOf(1) == pairsOf(13),
       "pair set must not change with partitioning")
@@ -160,14 +160,14 @@ class DedupSpec extends SparkSpec {
     val superdoc = base + " " + unrelated
     val d = Seq((0L, base), (1L, superdoc), (2L, unrelated))
       .toDF("doc_id", "text")
-    val contain = Dedup.blockedContainmentPairs(d, tau = 0.9)
+    val contain = Dedup.blockedContainmentPairs(Dedup.blockingTrunk(d), tau = 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(contain.contains((0L, 1L)), "contained doc must pair with its superset")
     assert(contain((0L, 1L)) == 1.0, "full containment scores exactly 1.0")
     assert(contain.contains((1L, 2L)), "the other embedded doc pairs too")
     // the symmetric verifier rejects the same pair at matched strictness:
     // jaccard(0,1) ~ |G_base| / (|G_base| + |G_unrelated| + junction) < 0.6
-    val jac = Dedup.blockedJaccardPairs(d, tau = 0.9)
+    val jac = Dedup.blockedJaccardPairs(Dedup.blockingTrunk(d), tau = 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(!jac.contains((0L, 1L)), "jaccard at 0.9 must miss the subset pair")
   }
@@ -188,7 +188,8 @@ class DedupSpec extends SparkSpec {
       .withColumn("lang", lit("en"))
       .withColumn("source", lit("s"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val kept = Dedup.nearDupSuppress(fam).collect().map(_.getLong(0)).toSet
+    val kept = Dedup.nearDupSuppress(fam, SharedTrunks.blockedPairs(fam))
+      .collect().map(_.getLong(0)).toSet
     assert(kept.contains(3L), "unrelated doc must survive")
     assert(kept.contains(5L), "the best-quality copy must survive")
     assert(!kept.contains(0L) && !kept.contains(1L),
@@ -323,7 +324,8 @@ class DedupSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((10L, 11L), (11L, 12L)),
       s"chain must pair only adjacent members at tau=$tau: $pairs")
-    val groups = Dedup.embeddingGroups(vecs, tau).collect()
+    val groups = Dedup.embeddingGroups(vecs,
+        Dedup.embeddingPairsExact(vecs, tau)).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
     assert(groups(10L) == ((10L, true)), "min id keeps")
     assert(groups(11L) == ((10L, false)) && groups(12L) == ((10L, false)),
@@ -493,12 +495,12 @@ class DedupSpec extends SparkSpec {
         "about other things for quite a while longer than before it did"),
       (3L, unrelated))
       .toDF("doc_id", "text")
-    val out = Dedup.editDistancePairs(d, maxDist = 10)
+    val out = Dedup.editDistancePairs(Dedup.blockingTrunk(d), d, maxDist = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(out.keySet == Set((0L, 1L)), s"only the small edit survives: $out")
     assert(out((0L, 1L)) == 3L, "morning -> evening is 3 substitutions")
     // raising the threshold admits the candidate it previously banded out
-    val wide = Dedup.editDistancePairs(d, maxDist = 200)
+    val wide = Dedup.editDistancePairs(Dedup.blockingTrunk(d), d, maxDist = 200)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(wide.contains((0L, 2L)),
       "the rewritten doc is a candidate and verifies at a loose bound")
@@ -510,15 +512,15 @@ class DedupSpec extends SparkSpec {
       (0L, base, "srcA"), (1L, caseDup, "srcB"),
       (2L, nearDup, "srcA"), (3L, unrelated, "srcC"))
       .toDF("doc_id", "text", "source")
-    val pairs = Dedup.blockedJaccardPairs(srcDocs)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val lazyPairs = Dedup.blockedJaccardPairs(Dedup.blockingTrunk(srcDocs))
+    val pairs = lazyPairs.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.nonEmpty, "fixture must produce near-dup pairs")
 
     val expMatrix = pairs.groupBy { case (a, b) =>
       val (x, y) = (src(a), src(b))
       if (x <= y) (x, y) else (y, x)
     }.map { case (k, v) => k -> v.length.toLong }
-    val gotMatrix = Dedup.crossSourceMatrix(srcDocs).collect()
+    val gotMatrix = Dedup.crossSourceMatrix(lazyPairs, srcDocs).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(gotMatrix == expMatrix)
 
@@ -528,17 +530,17 @@ class DedupSpec extends SparkSpec {
       val hit = m.keys.count(involved).toLong
       s -> ((n, hit, hit.toDouble / n))
     }
-    val gotRate = Dedup.nearDupRateBySource(srcDocs).collect()
+    val gotRate = Dedup.nearDupRateBySource(lazyPairs, srcDocs).collect()
       .map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
     assert(gotRate == expRate)
 
-    // pair-reuse overloads: identical results from a materialized list
-    val pairList = Dedup.blockedJaccardPairs(srcDocs).localCheckpoint(true)
-    assert(Dedup.crossSourceMatrixOf(pairList, srcDocs).collect()
+    // pair reuse: identical results from a materialized list
+    val pairList = lazyPairs.localCheckpoint(true)
+    assert(Dedup.crossSourceMatrix(pairList, srcDocs).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
       == gotMatrix)
-    assert(Dedup.nearDupRateBySourceOf(pairList, srcDocs).collect()
+    assert(Dedup.nearDupRateBySource(pairList, srcDocs).collect()
       .map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap == gotRate)
   }
@@ -546,7 +548,8 @@ class DedupSpec extends SparkSpec {
   test("blocked components close transitively to the min-id label") {
     // fixture pairs: (0,1) exact dup, (0,2)/(1,2) near dup → one
     // triangle {0,1,2} labeled 0; doc 3 is its own singleton
-    val labels = Dedup.dedupGroups(docs, Dedup.blockedJaccardPairs(docs))
+    val labels = Dedup.dedupGroups(docs,
+        Dedup.blockedJaccardPairs(Dedup.blockingTrunk(docs)))
       .localCheckpoint(true)
     val got = labels.collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap

@@ -940,4 +940,45 @@ class EventOpsSpec extends SparkSpec {
       }
     }
   }
+
+  test("abTestMannWhitney: rank-sum identity holds on random ties") {
+    val rnd = new scala.util.Random(31)
+    for (round <- 1 to 3) {
+      // coarse value grid → heavy ties, the midrank stress case
+      val rows = (1L to 80L).map(u =>
+        (u, "2024-01-01 10:00:00", u, "exp", rnd.nextInt(4).toDouble))
+      val e = rows.toDF("event_id", "ts", "user_id", "event_type", "value")
+        .withColumn("ts", col("ts").cast("timestamp"))
+      EventOps.abTestMannWhitney(e).collect().foreach { r =>
+        val (nA, nB) = (r.getLong(1), r.getLong(2))
+        val n = (nA + nB).toDouble
+        val rA = r.getDouble(3)
+        // R_a + R_b = N(N+1)/2 and U ∈ [0, n_a·n_b]
+        val rB = n * (n + 1.0) / 2.0 - rA
+        assert(rB > 0, s"round $round: rank mass: $r")
+        val u = r.getDouble(4)
+        assert(u >= 0 && u <= nA.toDouble * nB,
+          s"round $round: U out of range: $r")
+      }
+    }
+  }
+
+  test("abSrmCheck: chi2 grows monotonically with planted imbalance") {
+    def isA(u: Long): Boolean = {
+      val d = java.security.MessageDigest.getInstance("MD5")
+        .digest(s"$u:ab42".getBytes("UTF-8"))
+      d.take(4).map(b => f"$b%02x").mkString < "80000000"
+    }
+    val all = (1L to 300L)
+    def chi2Of(bKeep: Int): Double = {
+      val users = all.filter(isA) ++ all.filterNot(isA).take(bKeep)
+      val df = users.zipWithIndex
+        .map { case (u, i) => (i.toLong, "2024-01-01 10:00:00", u, "x", 1.0) }
+        .toDF("event_id", "ts", "user_id", "event_type", "value")
+        .withColumn("ts", col("ts").cast("timestamp"))
+      EventOps.abSrmCheck(df).head().getDouble(3)
+    }
+    val c = Seq(120, 60, 20, 5).map(chi2Of)
+    assert(c == c.sorted, s"chi2 must grow as arm B drains: $c")
+  }
 }

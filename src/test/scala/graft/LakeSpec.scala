@@ -522,4 +522,21 @@ class LakeSpec extends SparkSpec {
       assert(out.length === 200)
     }
   }
+
+  test("zorderValue round-trips: de-interleaving recovers both dims") {
+    val rnd = new scala.util.Random(37)
+    val pts = Seq.fill(200)((rnd.nextInt(65536).toLong, rnd.nextInt(65536).toLong))
+    val got = pts.toDF("x", "y")
+      .select($"x", $"y", Lake.zorderValue(Seq($"x", $"y"), 16).as("z"))
+      .collect()
+    got.foreach { r =>
+      val (x, y, z) = (r.getLong(0), r.getLong(1), r.getLong(2))
+      var (rx, ry) = (0L, 0L)
+      for (b <- 0 until 16) {
+        rx |= ((z >> (2 * b)) & 1L) << b
+        ry |= ((z >> (2 * b + 1)) & 1L) << b
+      }
+      assert((rx, ry) == ((x, y)), s"($x,$y) -> $z -> ($rx,$ry)")
+    }
+  }
 }

@@ -208,9 +208,11 @@ class PlanSpec extends SparkSpec {
     // and must appear exactly once — a second narrow scan would mean
     // the corpus was consumed per side instead of per pair list
     val narrow = "ReadSchema: struct<doc_id:bigint,source:string>"
-    for (q <- Seq(
-      graft.operators.Dedup.crossSourceMatrix(Tables.documents(spark, dir)),
-      graft.operators.Dedup.nearDupRateBySource(Tables.documents(spark, dir)))) {
+    val dd = graft.operators.Dedup
+    val docs = Tables.documents(spark, dir)
+    val pairs = dd.blockedJaccardPairs(dd.blockingTrunk(docs))
+    for (q <- Seq(dd.crossSourceMatrix(pairs, docs),
+                  dd.nearDupRateBySource(pairs, docs))) {
       val p = plan(q)
       val n = p.sliding(narrow.length).count(_ == narrow)
       assert(n == 1, s"expected exactly one narrow (doc_id, source) scan, got $n:\n$p")
@@ -489,8 +491,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("dupNgramDocs: occurrences explode ONCE, dup test is a window, no semi-join") {
-    val p = plan(graft.operators.TextAnalysis.dupNgramDocs(
-      Tables.documents(spark, dir)))
+    val ta = graft.operators.TextAnalysis
+    val toks = ta.dupNgramToks(Tables.documents(spark, dir))
+    val p = plan(ta.dupNgramDocs(toks, ta.startsOfOcc(ta.dupNgramDupOcc(toks))))
     assert("Generate explode".r.findAllIn(p).length == 1,
       s"the n-gram explode must run once (the rejected dup-set + " +
         s"semi-join plan re-explodes the corpus):\n$p")
@@ -536,7 +539,7 @@ class PlanSpec extends SparkSpec {
     val ta = graft.operators.TextAnalysis
     val toks = ta.dupNgramToks(Tables.documents(spark, dir))
     val p = plan(ta.dupSpans(Tables.documents(spark, dir),
-      ta.dupNgramStarts(toks)))
+      ta.startsOfOcc(ta.dupNgramDupOcc(toks))))
     // exchanges: the n-gram window (trunk), the starts fold, and the
     // doc_id window the islands/group/span-index chain SHARES — the
     // subset-key reuse means no fourth hash exchange appears
@@ -550,7 +553,8 @@ class PlanSpec extends SparkSpec {
 
   test("dupNgramGate / dupSpanScrub: the store BROADCASTS, never sort-merges") {
     val docs = Tables.documents(spark, dir)
-    val store = graft.operators.TextAnalysis.dupNgramStore(docs)
+    val ta = graft.operators.TextAnalysis
+    val store = ta.dupNgramStore(ta.dupNgramDupOcc(ta.dupNgramToks(docs)))
     Seq(
       graft.streaming.DocStream.dupNgramGate(docs, store),
       graft.streaming.DocStream.dupSpanScrub(docs, store)
@@ -580,7 +584,7 @@ class PlanSpec extends SparkSpec {
     val gf = ta.gopherFlagged(ta.synthQualityCorpus(docs))
       .localCheckpoint(true)
     val occ = ta.dupNgramDupOcc(ta.dupNgramToks(docs)).localCheckpoint(true)
-    val dd = ta.dupNgramDocsOf2(ta.dupNgramToks(docs), ta.startsOfOcc(occ))
+    val dd = ta.dupNgramDocs(ta.dupNgramToks(docs), ta.startsOfOcc(occ))
       .localCheckpoint(true)
     val flags = graft.operators.Curation.curateFlags(docs, gopherFlags = gf,
       dupDocs = dd, dupStarts = ta.startsOfOcc(occ),

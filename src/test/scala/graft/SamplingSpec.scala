@@ -223,4 +223,45 @@ class SamplingSpec extends SparkSpec {
       col("v") * lit(1.0), "grp", rate = 0.1).head()
     assert(again.getLong(2) == nSampled && again.getDouble(3) == r.getDouble(3))
   }
+
+  test("sampleEstimate: estimator is exactly sample-sum/rate on random values") {
+    val rnd = new scala.util.Random(41)
+    val rows = (1L to 600L).map(i => (i, s"g${i % 3}", rnd.nextDouble() * 10))
+    val df = rows.toDF("id", "grp", "v")
+    val got = Sampling.sampleEstimate(df, "id", col("v"), "grp", rate = 0.2)
+      .collect()
+    // replay the md5 coin driver-side
+    val thr = Sampling.hexThreshold(0.2)
+    def key(i: Long): String = {
+      val d = java.security.MessageDigest.getInstance("MD5")
+        .digest(s"$i:aqp42".getBytes("UTF-8"))
+      d.take(4).map(b => f"$b%02x").mkString
+    }
+    got.foreach { r =>
+      val g = r.getString(0)
+      val sampled = rows.filter(t => t._2 == g && key(t._1) < thr)
+      assert(r.getLong(2) == sampled.size, s"$g: n_sampled: $r")
+      val est = sampled.map(_._3).sum / 0.2
+      assert(math.abs(r.getDouble(3) - est) < 1e-9, s"$g: est: $r vs $est")
+    }
+  }
+
+  test("sampleEstimate: small-group CI flag and zero-sum rel_err guard") {
+    // crafted skew: one big group (CLT regime), one 5-row group
+    // whose half-width is NOT nominal, one group summing to exactly
+    // zero (rel_err has no meaning — must be NULL, not inf/NaN)
+    val rows = (1L to 400L).map(i => (i, "big", 1.0)) ++
+      (401L to 405L).map(i => (i, "tiny", 2.0)) ++
+      Seq((406L, "zero", 3.0), (407L, "zero", -3.0))
+    val got = Sampling.sampleEstimate(rows.toDF("id", "grp", "v"),
+        "id", col("v"), "grp", rate = 0.5)
+      .collect().map(r => r.getString(0) -> r).toMap
+    assert(got("big").getBoolean(5), s"big group CI must be nominal: $got")
+    assert(!got("tiny").getBoolean(5),
+      s"5-row group CI must be flagged non-nominal: $got")
+    assert(!got("zero").getBoolean(5) || got("zero").getLong(2) >= 30)
+    assert(got("zero").isNullAt(7),
+      s"zero-sum group rel_err must be NULL: ${got("zero")}")
+    assert(!got("big").isNullAt(7), "nonzero group keeps its rel_err")
+  }
 }

@@ -18,12 +18,24 @@ object SharedTrunks {
 
   /** `blocked_pairs`: verified Jaccard pairs over the blocking trunk. */
   def blockedPairs(docs: DataFrame): DataFrame =
-    pin(Dedup.blockedJaccardPairsOf(Dedup.blockingTrunk(docs)))
+    pin(Dedup.blockedJaccardPairs(Dedup.blockingTrunk(docs)))
 
   /** `dup_ngram_occ`, folded to per-doc duplicated start positions. */
   def dupStarts(docs: DataFrame, n: Int = 8): DataFrame =
     TextAnalysis.startsOfOcc(pin(
       TextAnalysis.dupNgramDupOcc(TextAnalysis.dupNgramToks(docs), n)))
+
+  /** `dup_ngram_docs`: the doc-grain coverage fold over
+    * [[dupStarts]]. */
+  def dupDocs(docs: DataFrame, n: Int = 8): DataFrame =
+    pin(TextAnalysis.dupNgramDocs(TextAnalysis.dupNgramToks(docs),
+      dupStarts(docs, n), n))
+
+  /** The dup-gram store `hist_dup_store` and `quality_dup_store`
+    * build: the distinct n-grams of `dup_ngram_occ`. */
+  def dupStore(docs: DataFrame): DataFrame =
+    pin(TextAnalysis.dupNgramStore(
+      TextAnalysis.dupNgramDupOcc(TextAnalysis.dupNgramToks(docs))))
 
   /** `gopher_flagged`: the 20-threshold Gopher pass over the quality
     * fixture. */
@@ -38,7 +50,7 @@ object SharedTrunks {
     val occ = pin(TextAnalysis.dupNgramDupOcc(TextAnalysis.dupNgramToks(docs)))
     pin(Curation.curateFlags(docs,
       gopherFlags = gopherFlags,
-      dupDocs = pin(TextAnalysis.dupNgramDocsOf2(
+      dupDocs = pin(TextAnalysis.dupNgramDocs(
         TextAnalysis.dupNgramToks(docs), TextAnalysis.startsOfOcc(occ))),
       dupStarts = TextAnalysis.startsOfOcc(occ),
       embeddings = embeddings, benchMod = benchMod))
@@ -50,9 +62,9 @@ object SharedTrunks {
 
   /** `basket_trunk`: the guarded (order, part) baskets. */
   def baskets(lineitem: DataFrame): DataFrame =
-    pin(Analytics.guardedBasketsShared(lineitem))
+    pin(Analytics.guardedBaskets(lineitem))
 
   /** `basket_pairs` over `basket_trunk`. */
   def basketPairs(lineitem: DataFrame): DataFrame =
-    pin(Analytics.basketAffinityOf(baskets(lineitem)))
+    pin(Analytics.basketAffinity(baskets(lineitem)))
 }

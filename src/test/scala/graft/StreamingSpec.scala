@@ -915,8 +915,7 @@ class StreamingSpec extends SparkSpec {
         "unique2 words2 here2 nothing2 repeats2 at2 all2 ever2", "s1"),
       StreamingSpec.LinedDoc(3L, s"lead3 $shared tail3a tail3b", "s1"))
     val docs = corpus.toDF()
-    val store = graft.operators.TextAnalysis.dupNgramStore(docs)
-      .localCheckpoint(true)
+    val store = SharedTrunks.dupStore(docs)
     def fold(rows: Array[org.apache.spark.sql.Row]) = rows
       .map(r => r.getLong(0) ->
         (r.getLong(2), r.getLong(3), r.getString(4))).toMap
@@ -1016,16 +1015,15 @@ class StreamingSpec extends SparkSpec {
         (1 to 30).map(i => s"c$i").mkString(" "), "s1"),
       StreamingSpec.LinedDoc(3L, "tiny doc here", "s1"))
     val docs = corpus.toDF()
-    val store = graft.operators.TextAnalysis.dupNgramStore(docs)
-      .localCheckpoint(true)
+    val store = SharedTrunks.dupStore(docs)
     def fold(rows: Array[org.apache.spark.sql.Row]) = rows
       .map(r => r.getLong(0) ->
         (r.getLong(2), r.getLong(3), r.getBoolean(5))).toMap
     val batch = fold(graft.streaming.DocStream.dupNgramGate(docs, store)
       .collect())
     // the batch run IS docs_dup_ngram_apply's relation
-    val applyTwin = fold(graft.operators.TextAnalysis.dupNgramApplyOf(
-      graft.operators.TextAnalysis.dupNgramDocs(docs)).collect())
+    val applyTwin = fold(graft.operators.TextAnalysis.dupNgramApply(
+      SharedTrunks.dupDocs(docs)).collect())
     assert(batch == applyTwin, s"store probe must reproduce the " +
       s"coverage chain:\n$batch\nvs\n$applyTwin")
     assert(!batch(1L)._3 && batch(0L)._3 && batch(2L)._3 && batch(3L)._3,
@@ -1062,8 +1060,7 @@ class StreamingSpec extends SparkSpec {
       (60L, s"$shared " + (1 to 25).map(i => s"a$i").mkString(" "), "s"),
       (61L, s"$shared " + (1 to 25).map(i => s"b$i").mkString(" "), "s")))
       .toDF("doc_id", "text", "source")
-    val store = graft.operators.TextAnalysis.dupNgramStore(docs)
-      .localCheckpoint(true)
+    val store = SharedTrunks.dupStore(docs)
     val grams = docs
       .select(org.apache.spark.sql.functions.col("doc_id"),
         org.apache.spark.sql.functions.explode(
@@ -1124,8 +1121,7 @@ class StreamingSpec extends SparkSpec {
       spark.read.parquet("/root/testdata/sf0.001/documents.parquet"))
       .localCheckpoint(true)
     val bench = docs.filter($"doc_id" % 97 === 0)
-    val store = graft.operators.TextAnalysis.dupNgramStore(docs)
-      .localCheckpoint(true)
+    val store = SharedTrunks.dupStore(docs)
     val batch = graft.streaming.DocStream
       .fullIntakeGate(docs, bench, store)
       .collect().map(_.getLong(0)).toSet
@@ -1889,7 +1885,7 @@ class StreamingSpec extends SparkSpec {
     assert(counters(graft.streaming.SketchStream.sketchReplay(docs)) == batch)
     // the live path: a real streaming aggregation in complete mode
     val mem = MemoryStream[StreamingSpec.Doc]
-    val q = graft.streaming.SketchStream.sketchQuery(mem.toDF())
+    val q = CountMin.sketch(mem.toDF())
       .writeStream.format("memory").queryName("cms_live")
       .outputMode("complete").start()
     try {

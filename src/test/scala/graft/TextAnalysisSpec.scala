@@ -80,7 +80,7 @@ class TextAnalysisSpec extends SparkSpec {
       // 8-gram repeated WITHIN one doc only -> 1 distinct doc, ignored
       (3L, "s2", "m n o p q r s t m n o p q r s t"))
       .toDF("doc_id", "source", "text")
-    val out = TextAnalysis.dupNgramCorpus(docs).collect()
+    val out = TextAnalysis.dupNgramCorpus(SharedTrunks.dupDocs(docs)).collect()
       .map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
           r.getDouble(5))).toMap
@@ -97,7 +97,7 @@ class TextAnalysisSpec extends SparkSpec {
       (2L, "s2", "p q r"),
       (3L, "s2", "m n o p q r s t m n o p q r s t"))
       .toDF("doc_id", "source", "text")
-    val out = TextAnalysis.dupNgramApply(docs).collect()
+    val out = TextAnalysis.dupNgramApply(SharedTrunks.dupDocs(docs)).collect()
       .map(r => r.getLong(0) ->
         (r.getLong(2), r.getLong(3), r.getDouble(4), r.getBoolean(5))).toMap
     // docs 0/1: 8 of 9 single-char tokens covered -> 8/9 > 0.5 -> drop
@@ -140,7 +140,8 @@ class TextAnalysisSpec extends SparkSpec {
     val docs = Seq((0L, "dirty"), (1L, "clean")).toDF("doc_id", "source")
     val cols = Seq("n_docs", "n_quality_gate", "n_dup_line_gate",
       "n_dup_para_gate", "n_dup_gram_gate", "n_flagged", "flag_share")
-    val out = TextAnalysis.gopherGate(docs, lined).collect()
+    val out = TextAnalysis.gopherGate(docs, TextAnalysis.gopherFlagged(lined))
+      .collect()
       .map(r => r.getString(0) -> cols.map(r.getAs[Any])).toMap
     assert(out("dirty") == Seq(1L, 1L, 1L, 1L, 1L, 1L, 1.0),
       s"${out("dirty")}")
@@ -159,7 +160,8 @@ class TextAnalysisSpec extends SparkSpec {
       (2L, "a b c d e\na b c d e\na b c d e\nz z z z z"),
       (1L, healthyLined)).toDF("doc_id", "text")
     val docs = Seq((0L, "s"), (1L, "s"), (2L, "s")).toDF("doc_id", "source")
-    val out = TextAnalysis.gopherGateApply(docs, lined).collect()
+    val out = TextAnalysis.gopherGateApply(docs,
+        TextAnalysis.gopherFlagged(lined)).collect()
       .map(r => r.getLong(0) -> (r.getBoolean(2), Option(r.getString(3)))).toMap
     assert(out(0L) == ((false, Some("line"))), s"${out(0L)}")
     assert(out(2L) == ((false, Some("word_count"))), s"${out(2L)}")
@@ -174,7 +176,8 @@ class TextAnalysisSpec extends SparkSpec {
     val docs = Seq((0L, "s", "w x y z"),
       (1L, "s", ('a' to 'z').map(_.toString).mkString(" ")))
       .toDF("doc_id", "source", "text")
-    val r = TextAnalysis.gopherGateCost(docs, lined).collect()(0)
+    val r = TextAnalysis.gopherGateCost(docs, TextAnalysis.gopherFlagged(lined))
+      .collect()(0)
     assert((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)) ==
       ((2L, 1L, 30L, 26L)), s"$r")
     assert(math.abs(r.getDouble(5) - 26.0 / 30) < 1e-15)
@@ -187,7 +190,7 @@ class TextAnalysisSpec extends SparkSpec {
       .toDF("doc_id", "text", "source")
     val out = TextAnalysis.gopherGateApply(
         docs.select("doc_id", "source"),
-        TextAnalysis.synthQualityCorpus(docs)).collect()
+        SharedTrunks.gopherFlagged(docs)).collect()
       .map(r => r.getLong(0) -> (r.getBoolean(2), Option(r.getString(3)))).toMap
     val want = Map(1L -> "word_count", 2L -> "word_len", 3L -> "word_len",
       4L -> "symbol", 5L -> "bullet", 6L -> "ellipsis_line",
@@ -211,8 +214,8 @@ class TextAnalysisSpec extends SparkSpec {
     val docs = (0L until 17L).map(id =>
       (id, (1 to 10).map(i => s"tok${id}x$i").mkString(" ")))
       .toDF("doc_id", "text")
-    val out = TextAnalysis.gopherQuality(
-        TextAnalysis.synthQualityCorpus(docs)).collect()
+    val out = TextAnalysis.gopherQuality(SharedTrunks.gopherFlagged(docs))
+      .collect()
       .map(r => r.getLong(0) -> r).toMap
     // class 1: exactly 3 words survive the truncation
     assert(out(1L).getAs[Long]("n_words") == 3L)
@@ -245,8 +248,7 @@ class TextAnalysisSpec extends SparkSpec {
     // discrimination would otherwise weaken silently as the corpus
     // grows longer docs)
     val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    val class4 = TextAnalysis.gopherQuality(
-        TextAnalysis.synthQualityCorpus(docs))
+    val class4 = TextAnalysis.gopherQuality(SharedTrunks.gopherFlagged(docs))
       .filter($"doc_id" % 17 === 4)
     val n = class4.count()
     val firing = class4.filter($"symbol_word_ratio" > 0.1).count()
