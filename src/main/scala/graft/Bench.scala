@@ -10,18 +10,6 @@ package graft
   */
 object Bench {
 
-  /** The per-key measurement protocol, extracted pure so BenchSpec
-    * can pin it (r16, ADVICE): a failing FIRST run ships -1 without
-    * paying a retry (the retry would pay the same time-to-failure
-    * for the same -1); otherwise the key is measured twice, and
-    * while the running min exceeds 2× `bandMax` (and fewer than 4
-    * attempts are in hand) one more `retry()` attempt is taken —
-    * `retry` is the caller's primed+instrumented wrapper around the
-    * timed run. A THROWN retry returns -1, which (a) stops the loop
-    * (the min goes negative) and (b) is DROPPED before shipping, so
-    * a twice-measured key can never be failed by its own retry: the
-    * honest min of the valid attempts ships. Returns
-    * (shipped value, every attempt in order). */
   /** Machine-noise verdict (r17, verdict ask): the artifact stamps
     * itself `noisy` when the calibration spin — a fixed CPU-bound
     * probe whose cost cannot move with the code — reads more than 2×
@@ -77,6 +65,18 @@ object Bench {
       explain.filter(_.nonEmpty).map(" — " + _).getOrElse(""))
   }
 
+  /** The per-key measurement protocol, extracted pure so BenchSpec
+    * can pin it (r16, ADVICE): a failing FIRST run ships -1 without
+    * paying a retry (the retry would pay the same time-to-failure
+    * for the same -1); otherwise the key is measured twice, and
+    * while the running min exceeds 2× `bandMax` (and fewer than 4
+    * attempts are in hand) one more `retry()` attempt is taken —
+    * `retry` is the caller's primed+instrumented wrapper around the
+    * timed run. A THROWN retry returns -1, which (a) stops the loop
+    * (the min goes negative) and (b) is DROPPED before shipping, so
+    * a twice-measured key can never be failed by its own retry: the
+    * honest min of the valid attempts ships. Returns
+    * (shipped value, every attempt in order). */
   private[graft] def measureKey(once: () => Double, retry: () => Double,
                                 bandMax: Double): (Double, Seq[Double]) = {
     val first = once()

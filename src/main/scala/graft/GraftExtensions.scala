@@ -1,14 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.graft.ColumnShim
 
-import org.apache.spark.sql.graft.{CharShingleHashes, ChunkMd5s, CosineSimilarity, DeflateRatio, DupNgramCoverage, Hash64, MinHashSignature, ShingleHashes, SimHash64, TokenDropout, TokenNgrams, TopNgramStats, WinnowMd5Fingerprints}
+import graft.functions.gf
 
 /** SparkSessionExtensions entry point: registers graft's native
-  * expressions as SQL functions, so plain `spark.sql` users get them
-  * too:
+  * kernels as SQL functions, so plain `spark.sql` users get them
+  * too. Each SQL function calls the `gf` function of the same kernel:
   *
   * {{{
   *   SparkSession.builder()
@@ -18,9 +19,6 @@ import org.apache.spark.sql.graft.{CharShingleHashes, ChunkMd5s, CosineSimilarit
   * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
 
   private def intLit(e: Expression, what: String): Int = e match {
     case Literal(v: Int, _) => v
@@ -42,88 +40,60 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      info("cosine_sim", "cosine_sim(a, b) - cosine similarity of two float vectors"),
-      (args: Seq[Expression]) => CosineSimilarity(args(0), args(1))))
+    def fn(name: String, usage: String)(build: Seq[Expression] => Column): Unit =
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, ""),
+        (args: Seq[Expression]) => ColumnShim.expression(build(args))))
+    def col(e: Expression): Column = ColumnShim.column(e)
 
-    ext.injectFunction((
-      FunctionIdentifier("deflate_ratio"),
-      info("deflate_ratio",
-        "deflate_ratio(text) - compressed/raw byte ratio (low = repetitive text)"),
-      (args: Seq[Expression]) => DeflateRatio(args(0))))
+    fn("cosine_sim", "cosine_sim(a, b) - cosine similarity of two float vectors") {
+      a => gf.cosineSim(col(a(0)), col(a(1))) }
 
-    ext.injectFunction((
-      FunctionIdentifier("graft_hash64"),
-      info("graft_hash64", "graft_hash64(s) - 64-bit FNV-1a fingerprint"),
-      (args: Seq[Expression]) => Hash64(args(0))))
+    fn("deflate_ratio",
+      "deflate_ratio(text) - compressed/raw byte ratio (low = repetitive text)") {
+      a => gf.deflateRatio(col(a(0))) }
 
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(tokens) - 64-bit SimHash of a token array"),
-      (args: Seq[Expression]) => SimHash64(args(0))))
+    fn("graft_hash64", "graft_hash64(s) - 64-bit FNV-1a fingerprint") {
+      a => gf.hash64(col(a(0))) }
 
-    ext.injectFunction((
-      FunctionIdentifier("shingle_hashes"),
-      info("shingle_hashes", "shingle_hashes(tokens, k) - hashes of k-token shingles"),
-      (args: Seq[Expression]) =>
-        ShingleHashes(args(0), intLit(args(1), "shingle size"))))
+    fn("simhash64", "simhash64(tokens) - 64-bit SimHash of a token array") {
+      a => gf.simhash64(col(a(0))) }
 
-    ext.injectFunction((
-      FunctionIdentifier("char_shingle_hashes"),
-      info("char_shingle_hashes",
-        "char_shingle_hashes(s, n) - rolling hashes of char n-grams, O(len)"),
-      (args: Seq[Expression]) =>
-        CharShingleHashes(args(0), intLit(args(1), "n-gram size"))))
+    fn("shingle_hashes", "shingle_hashes(tokens, k) - hashes of k-token shingles") {
+      a => gf.shingleHashes(col(a(0)), intLit(a(1), "shingle size")) }
 
-    ext.injectFunction((
-      FunctionIdentifier("minhash_signature"),
-      info("minhash_signature",
-        "minhash_signature(hashes, numPerms, seed) - MinHash signature"),
-      (args: Seq[Expression]) => MinHashSignature(args(0),
-        intLit(args(1), "numPerms"), longLit(args(2), "seed"))))
+    fn("char_shingle_hashes",
+      "char_shingle_hashes(s, n) - rolling hashes of char n-grams, O(len)") {
+      a => gf.charShingleHashes(col(a(0)), intLit(a(1), "n-gram size")) }
 
-    ext.injectFunction((
-      FunctionIdentifier("chunk_md5s"),
-      info("chunk_md5s",
-        "chunk_md5s(text, n) - md5s of non-overlapping n-token chunks (fused)"),
-      (args: Seq[Expression]) =>
-        ChunkMd5s(args(0), intLit(args(1), "chunk size"))))
+    fn("minhash_signature",
+      "minhash_signature(hashes, numPerms, seed) - MinHash signature") {
+      a => gf.minhashSignature(col(a(0)), intLit(a(1), "numPerms"), longLit(a(2), "seed")) }
 
-    ext.injectFunction((
-      FunctionIdentifier("token_ngrams"),
-      info("token_ngrams",
-        "token_ngrams(text, n) - distinct space-joined token n-grams (fused)"),
-      (args: Seq[Expression]) =>
-        TokenNgrams(args(0), intLit(args(1), "gram size"))))
+    fn("chunk_md5s",
+      "chunk_md5s(text, n) - md5s of non-overlapping n-token chunks (fused)") {
+      a => gf.chunkMd5s(col(a(0)), intLit(a(1), "chunk size")) }
 
-    ext.injectFunction((
-      FunctionIdentifier("winnow_fingerprints"),
-      info("winnow_fingerprints",
-        "winnow_fingerprints(text, n, window) - winnowing fingerprints (windowed-min gram md5s)"),
-      (args: Seq[Expression]) => WinnowMd5Fingerprints(args(0),
-        intLit(args(1), "gram size"), intLit(args(2), "window"))))
+    fn("token_ngrams",
+      "token_ngrams(text, n) - distinct space-joined token n-grams (fused)") {
+      a => gf.tokenNgrams(col(a(0)), intLit(a(1), "gram size")) }
 
-    ext.injectFunction((
-      FunctionIdentifier("dup_ngram_coverage"),
-      info("dup_ngram_coverage",
-        "dup_ngram_coverage(tokens, minN, maxN) - [tok_chars, covered chars of duplicated n-grams per n]"),
-      (args: Seq[Expression]) => DupNgramCoverage(args(0),
-        intLit(args(1), "minN"), intLit(args(2), "maxN"))))
+    fn("winnow_fingerprints",
+      "winnow_fingerprints(text, n, window) - winnowing fingerprints (windowed-min gram md5s)") {
+      a => gf.winnowFingerprints(col(a(0)), intLit(a(1), "gram size"), intLit(a(2), "window")) }
 
-    ext.injectFunction((
-      FunctionIdentifier("top_ngram_stats"),
-      info("top_ngram_stats",
-        "top_ngram_stats(tokens, minK, maxK) - [max count, top-gram char length per k]"),
-      (args: Seq[Expression]) => TopNgramStats(args(0),
-        intLit(args(1), "minK"), intLit(args(2), "maxK"))))
+    fn("dup_ngram_coverage",
+      "dup_ngram_coverage(tokens, minN, maxN) - [tok_chars, covered chars of duplicated n-grams per n]") {
+      a => gf.dupNgramCoverage(col(a(0)), intLit(a(1), "minN"), intLit(a(2), "maxN")) }
 
-    ext.injectFunction((
-      FunctionIdentifier("token_dropout"),
-      info("token_dropout",
-        "token_dropout(text, doc_id, threshold_hex, salt) - deterministic " +
-          "positional token dropout (fused; drop iff md5(id:pos:salt)[:8] < threshold)"),
-      (args: Seq[Expression]) => TokenDropout(args(0), args(1),
-        stringLit(args(2), "threshold_hex"), stringLit(args(3), "salt"))))
+    fn("top_ngram_stats",
+      "top_ngram_stats(tokens, minK, maxK) - [max count, top-gram char length per k]") {
+      a => gf.topNgramStats(col(a(0)), intLit(a(1), "minK"), intLit(a(2), "maxK")) }
+
+    fn("token_dropout",
+      "token_dropout(text, doc_id, threshold_hex, salt) - deterministic " +
+        "positional token dropout (fused; drop iff md5(id:pos:salt)[:8] < threshold)") {
+      a => gf.tokenDropoutAt(col(a(0)), col(a(1)),
+        stringLit(a(2), "threshold_hex"), stringLit(a(3), "salt")) }
   }
 }

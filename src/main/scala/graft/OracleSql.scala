@@ -841,13 +841,6 @@ private[graft] object OracleSql {
          |FROM md)"""
   }
 
-  /** Shared lined-corpus CTE chain (DuckDB dialect): replays the
-    * [[graft.operators.TextAnalysis.synthLinedCorpus]] synth (a
-    * newline before every 2nd token, a blank line before every 8th,
-    * the first paragraph re-appended on doc_id % 5 = 0) and
-    * re-tokenizes the LINED text — the planted copy adds tokens.
-    * Ends in `t2(doc_id, toks, lines, paras)`; consumers needing
-    * only the token stream let the optimizer prune lines/paras. */
   /** [[linedCtes]] parameterized on the source relation, so the
     * quality-fixture oracles can run the SAME lining replay over the
     * defect-planted corpus (`qd`) that the plain profile keys run
@@ -872,6 +865,13 @@ private[graft] object OracleSql {
       |  list_filter(string_split(text, chr(10) || chr(10)), x -> x <> '') AS paras
       | FROM txt)"""
 
+  /** Shared lined-corpus CTE chain (DuckDB dialect): replays the
+    * [[graft.operators.TextAnalysis.synthLinedCorpus]] synth (a
+    * newline before every 2nd token, a blank line before every 8th,
+    * the first paragraph re-appended on doc_id % 5 = 0) and
+    * re-tokenizes the LINED text — the planted copy adds tokens.
+    * Ends in `t2(doc_id, toks, lines, paras)`; consumers needing
+    * only the token stream let the optimizer prune lines/paras. */
   private val linedCtes: String = linedCtesFrom("documents")
 
   /** Quality-defect fixture replay (DuckDB dialect) — the verbatim
@@ -2321,10 +2321,6 @@ private[graft] object OracleSql {
         |  CAST(sc.n_tokens - coalesce(cc.n_cov, 0) AS BIGINT) AS n_res,
         |  sc.quality_score FROM sc LEFT JOIN cc USING (doc_id))"""
 
-  /** Shared front half of the etl_entity_* oracles: the dirty-CRM
-    * derivation from `customer` (EntityResolution.synthCrmCorpus
-    * replayed), normalization, prefix blocking with the length
-    * band, and the Levenshtein-≤1 match pairs. */
   /** The MOSS winnow fingerprint inversion as a CTE chain — ends in
     * `w(doc_id, fp)`, one row per per-doc-distinct winnow
     * fingerprint (the text_winnow_dedup front half, shared by the
@@ -2340,6 +2336,10 @@ private[graft] object OracleSql {
       |   j -> list_min(grams[j:j+3]))
       |  ELSE grams END)) AS fp FROM g)"""
 
+  /** Shared front half of the etl_entity_* oracles: the dirty-CRM
+    * derivation from `customer` (EntityResolution.synthCrmCorpus
+    * replayed), normalization, prefix blocking with the length
+    * band, and the Levenshtein-≤1 match pairs. */
   private val crmPairsCte: String =
     """WITH nm AS (SELECT c_custkey AS k,
       |  list_aggregate(list_transform(range(1, 7), i ->

@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.sketch.BloomFilter
 
-/** JVM kernels behind graft's native Catalyst expressions. Static
+/** JVM kernels behind graft's native `gf` functions. Static
   * forwarders (standalone Scala objects) make these callable from
   * whole-stage-codegen'd Java, so the expressions stay inside the
   * codegen pipeline instead of falling back to interpreted eval.
@@ -663,6 +664,14 @@ object TextHashes {
     while (i < bytes.length) { h ^= (bytes(i) & 0xffL); h *= FnvPrime; i += 1 }
     h
   }
+
+  /** Count-Min multiply-shift bucket (Dietzfelbinger): the top
+    * `64 − shift` bits of the wraparound `a·h + b` mix every input
+    * bit, so the depth rows are pairwise-independent-ish. */
+  def cmsBucket(h: Long, a: Long, b: Long, shift: Int): Long = (a * h + b) >>> shift
+
+  /** Bloom membership of a long key. */
+  def mightContainLong(h: Long, bf: BloomFilter): Boolean = bf.mightContainLong(h)
 
   private def mix(h0: Long, s: UTF8String): Long = {
     val bytes = s.getBytes

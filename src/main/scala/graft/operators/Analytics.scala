@@ -288,18 +288,6 @@ object Analytics {
       ntile(4).over(total).cast("long").as("quartile"))
   }
 
-  /** RFM customer segmentation — recency / frequency / monetary
-    * quintile scores, the classic retail marketing cut. The global
-    * quintile boundaries are computed EXACTLY on the |customers|-row
-    * aggregate with interpolated percentiles and collected — 12
-    * scalars — then applied as broadcast cut-point comparisons: a
-    * `ntile(5) OVER (ORDER BY …)` would funnel every customer
-    * through one task, three times. Scores are
-    * `1 + #(cuts strictly below the value)` (recency inverted —
-    * fresher is better), so boundary semantics are explicit and
-    * replay identically in the oracle (`quantile_cont` ≡ Spark's
-    * `percentile`, the q_percentiles-proven pairing).
-    */
   /** Customer lifecycle migration between two periods — where did
     * each tier's customers GO (the question RFM snapshots can't
     * answer alone): activity tiers from fixed order-count bands
@@ -334,6 +322,18 @@ object Analytics {
         sum("n_customers").over(Window.partitionBy("tier_from")), 6))
   }
 
+  /** RFM customer segmentation — recency / frequency / monetary
+    * quintile scores, the classic retail marketing cut. The global
+    * quintile boundaries are computed EXACTLY on the |customers|-row
+    * aggregate with interpolated percentiles and collected — 12
+    * scalars — then applied as broadcast cut-point comparisons: a
+    * `ntile(5) OVER (ORDER BY …)` would funnel every customer
+    * through one task, three times. Scores are
+    * `1 + #(cuts strictly below the value)` (recency inverted —
+    * fresher is better), so boundary semantics are explicit and
+    * replay identically in the oracle (`quantile_cont` ≡ Spark's
+    * `percentile`, the q_percentiles-proven pairing).
+    */
   def rfmSegments(orders: DataFrame): DataFrame = {
     // corpus max date rides in as a broadcast 1-row frame (no typed
     // driver collect — the column may be date or ntz timestamp)
@@ -1554,22 +1554,6 @@ object Analytics {
             col("n_wedges").cast("double"), 9)).as("global_clustering"))
   }
 
-  /** Holt linear (double-exponential) smoothing over the monthly
-    * revenue series — level + trend state per month and the
-    * one-step-ahead `fitted` forecast, the actual forecasting
-    * primitive this library's Q6-style `forecastRevenue` (a revenue
-    * WHAT-IF, not a predictor) does not provide. The recursion
-    * `l_t = αx_t + (1−α)(l_{t−1}+b_{t−1})`,
-    * `b_t = β(l_t−l_{t−1}) + (1−β)b_{t−1}` is inherently sequential
-    * — but sequential in MONTHS, not rows: the fact table collapses
-    * to the O(months) calendar-bounded series (one shuffle), which
-    * then folds driver-side (the [[decileLift]] collect class); the
-    * oracle replays the identical recursion as a `WITH RECURSIVE`
-    * CTE, every float expression spelled the same (including
-    * `(1 − α)` left as an expression — the literal 0.7 is NOT the
-    * double `1 − 0.3`). Init: l₁ = x₁, b₁ = 0. Revenue is exact
-    * cents until the single division; outputs rounded once.
-    */
   /** The shared exact-cents monthly series both smoothers fold over:
     * one distributed aggregate, one O(months) collect. Extracted
     * (r18 optimization round) so [[forecastBacktest]] scans lineitem
@@ -1589,6 +1573,22 @@ object Analytics {
       .as[(java.sql.Date, Long)].collect() // O(months), calendar-bounded
   }
 
+  /** Holt linear (double-exponential) smoothing over the monthly
+    * revenue series — level + trend state per month and the
+    * one-step-ahead `fitted` forecast, the actual forecasting
+    * primitive this library's Q6-style `forecastRevenue` (a revenue
+    * WHAT-IF, not a predictor) does not provide. The recursion
+    * `l_t = αx_t + (1−α)(l_{t−1}+b_{t−1})`,
+    * `b_t = β(l_t−l_{t−1}) + (1−β)b_{t−1}` is inherently sequential
+    * — but sequential in MONTHS, not rows: the fact table collapses
+    * to the O(months) calendar-bounded series (one shuffle), which
+    * then folds driver-side (the [[decileLift]] collect class); the
+    * oracle replays the identical recursion as a `WITH RECURSIVE`
+    * CTE, every float expression spelled the same (including
+    * `(1 − α)` left as an expression — the literal 0.7 is NOT the
+    * double `1 − 0.3`). Init: l₁ = x₁, b₁ = 0. Revenue is exact
+    * cents until the single division; outputs rounded once.
+    */
   def holtForecast(lineitem: DataFrame, alpha: Double = 0.3,
                    beta: Double = 0.1,
                    series: Option[Array[(java.sql.Date, Long)]] = None): DataFrame = {

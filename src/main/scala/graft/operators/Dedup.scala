@@ -313,6 +313,16 @@ object Dedup {
     pairSummary(docs, minhashPairs(shingles, numPerms, bands, tau, seed),
       "jaccard")
 
+  /** The full-signature column both [[signatureDedup]] forms key
+    * on — ONE expression builder, so the batch fold and the
+    * streaming dropDuplicates can never silently diverge on
+    * (shingleSize, numPerms, seed). */
+  private def signatureCol(shingleSize: Int, numPerms: Int,
+                           seed: Long): org.apache.spark.sql.Column =
+    gf.minhashSignature(
+      array_distinct(gf.tokenShingleHashes(col("text"), shingleSize)),
+      numPerms, seed)
+
   /** Near-exact dedup on the FULL minhash signature: documents whose
     * 64 permuted minima ALL collide have (w.h.p.) near-identical
     * shingle sets — a much tighter test than any single band, tuned
@@ -326,16 +336,6 @@ object Dedup {
     * form, the arrival-order stream is the deployment form
     * (StreamingSpec pins that both drop the same duplicates).
     */
-  /** The full-signature column both [[signatureDedup]] forms key
-    * on — ONE expression builder, so the batch fold and the
-    * streaming dropDuplicates can never silently diverge on
-    * (shingleSize, numPerms, seed). */
-  private def signatureCol(shingleSize: Int, numPerms: Int,
-                           seed: Long): org.apache.spark.sql.Column =
-    gf.minhashSignature(
-      array_distinct(gf.tokenShingleHashes(col("text"), shingleSize)),
-      numPerms, seed)
-
   def signatureDedup(docs: DataFrame, shingleSize: Int = 3,
                      numPerms: Int = 64, seed: Long = 42L): DataFrame =
     docs.select(col("doc_id"),
@@ -970,14 +970,6 @@ object Dedup {
       .select("id_a", "id_b", "containment")
   }
 
-  /** Dup-cluster size histogram from a components labeling
-    * ([[dedupGroups]] output): how many clusters have 1, 2, 3, …
-    * members. The curation read: a long tail of big clusters means
-    * template/mirror content the pair-level dedup is fighting
-    * one edge at a time — cap or drop at the source instead. Two
-    * count aggregates over the (doc_id, group_id) relation; output
-    * is O(max cluster size) rows.
-    */
   /** Per-document n-gram NOVELTY against the whole corpus — how much
     * of each document is genuinely first (in stable doc_id order),
     * versus re-treading grams some earlier document already
@@ -1005,6 +997,14 @@ object Dedup {
         round(col("n_novel").cast("double") / col("n_grams"), 6))
   }
 
+  /** Dup-cluster size histogram from a components labeling
+    * ([[dedupGroups]] output): how many clusters have 1, 2, 3, …
+    * members. The curation read: a long tail of big clusters means
+    * template/mirror content the pair-level dedup is fighting
+    * one edge at a time — cap or drop at the source instead. Two
+    * count aggregates over the (doc_id, group_id) relation; output
+    * is O(max cluster size) rows.
+    */
   def clusterSizeHistogram(labels: DataFrame): DataFrame =
     labels.groupBy("group_id").agg(count(lit(1)).as("cluster_size"))
       .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))

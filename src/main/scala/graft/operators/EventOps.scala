@@ -377,10 +377,6 @@ object EventOps {
           .as("ov_within_tol"))
   }
 
-  /** Sessionization: a new session starts after `gapMinutes` of
-    * inactivity per user. Classic lag+cumsum — one shuffle on
-    * user_id, session assignment is then per-partition.
-    */
   /** The SHARED session-assignment core: every event gains its
     * `session_seq` via the classic lag+cumsum over one user_id
     * shuffle. Native timestamp comparison at full µs precision —
@@ -401,6 +397,10 @@ object EventOps {
         byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
   }
 
+  /** Sessionization: a new session starts after `gapMinutes` of
+    * inactivity per user. Classic lag+cumsum — one shuffle on
+    * user_id, session assignment is then per-partition.
+    */
   def sessionize(events: DataFrame, gapMinutes: Int = 30): DataFrame =
     assignSessions(events, gapMinutes)
       .groupBy("user_id", "session_seq")
@@ -1474,18 +1474,6 @@ object EventOps {
         col("max_late_us"))
   }
 
-  /** Categorical PSI over the event-type mix — [[valuePsi]]'s
-    * sibling for the OTHER drift axis: the VALUE distribution can be
-    * rock-stable while the type mix shifts under it (a new event
-    * type ships, an old one dies, a client update reroutes traffic),
-    * and categorical drift needs no cut-points — the types ARE the
-    * buckets. Same half-split convention (calendar midpoint), same
-    * Laplace smoothing — which here is doing real work: a type
-    * absent from one half (the "new type appeared" / "type died"
-    * alarm this monitor exists for) degrades to a large finite term
-    * instead of ±∞. One fact scan into an O(types) relation; the
-    * windows run over that bounded relation only.
-    */
   /** A/B experiment readout: Welch's unequal-variance t-test of
     * `value` between two user cohorts, per event type. Assignment is
     * the portable salted-md5 coin ([[DataSplit.assignPortable]]'s
@@ -1881,6 +1869,18 @@ object EventOps {
         (covPP * covPP / (varPre * varPost)).as("var_reduction"))
   }
 
+  /** Categorical PSI over the event-type mix — [[valuePsi]]'s
+    * sibling for the OTHER drift axis: the VALUE distribution can be
+    * rock-stable while the type mix shifts under it (a new event
+    * type ships, an old one dies, a client update reroutes traffic),
+    * and categorical drift needs no cut-points — the types ARE the
+    * buckets. Same half-split convention (calendar midpoint), same
+    * Laplace smoothing — which here is doing real work: a type
+    * absent from one half (the "new type appeared" / "type died"
+    * alarm this monitor exists for) degrades to a large finite term
+    * instead of ±∞. One fact scan into an O(types) relation; the
+    * windows run over that bounded relation only.
+    */
   def typePsi(events: DataFrame): DataFrame = {
     val counts = events
       .select(col("event_type"), to_date(col("ts")).as("day"))

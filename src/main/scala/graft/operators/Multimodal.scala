@@ -861,15 +861,6 @@ object Multimodal {
       storeSigs.withColumnRenamed("asig", "sig"), 63, maxHamming, bands)
   }
 
-  /** Per-document pooled feature embedding: decode frames, mean-pool
-    * their (stub) features into one `array<float>` per document —
-    * the bridge from binary payloads into the [[Similarity]] ANN /
-    * [[Dedup]] embedding operators (`embedding-cosine dedup over
-    * video corpora` is exactly this composition). Pooling is an
-    * ordinary partial-friendly aggregate; with a real encoder the
-    * mapPartitions step emits model features and nothing else
-    * changes.
-    */
   /** Frames with their predecessor's luma — the shared front half of
     * the two scene-structure keys, so the cut rule cannot drift
     * between them. The window partitions by doc_id (frames per
@@ -944,6 +935,15 @@ object Multimodal {
         round(col("mean_luma"), 6).as("luma"))
   }
 
+  /** Per-document pooled feature embedding: decode frames, mean-pool
+    * their (stub) features into one `array<float>` per document —
+    * the bridge from binary payloads into the [[Similarity]] ANN /
+    * [[Dedup]] embedding operators (`embedding-cosine dedup over
+    * video corpora` is exactly this composition). Pooling is an
+    * ordinary partial-friendly aggregate; with a real encoder the
+    * mapPartitions step emits model features and nothing else
+    * changes.
+    */
   def pooledFeatures(docs: DataFrame, frameSize: Int = 64,
                      stride: Int = 128): DataFrame =
     decodeFrames(docs, frameSize, stride).toDF()

@@ -66,17 +66,13 @@ object RetailEtl {
 
   /** Schema validation (extraction.py:70-96): fails fast at plan time
     * when required columns are missing. The reference also raises on
-    * an empty frame — an action-forcing check; callers that need it
-    * use [[requireNonEmpty]] so the common path stays lazy.
+    * an empty frame; this check does not, since it would cost an
+    * action. An empty extract runs through [[pipeline]] without error
+    * and its sinks write an empty summary.
     */
   def validateColumns(df: DataFrame, required: Seq[String] = RequiredColumns): DataFrame = {
     val missing = required.filterNot(df.columns.contains)
     require(missing.isEmpty, s"Missing required columns: ${missing.mkString(", ")}")
-    df
-  }
-
-  def requireNonEmpty(df: DataFrame): DataFrame = {
-    require(!df.isEmpty, "DataFrame is empty")
     df
   }
 
@@ -320,19 +316,6 @@ object RetailEtl {
           greatest(lit(2L), expr(s"n_distinct * $tolPct div 100")))
           .as("distinct_within_tol"))
 
-  /** Stringified stack-unpivot shared by the dq calibration family —
-    * batch ([[dqCalibrationOneScan]]) and stream
-    * ([[graft.streaming.EventStream.dqProfileState]] /
-    * `dqStateCalibration`); ONE copy of the normalization rule (r17
-    * review), because the rule exists precisely to keep cross-engine
-    * distinct counts aligned and two drifting copies would undo it.
-    * Columns resolve like the rest of the engine: exact name first,
-    * else a UNIQUE case-insensitive match (ambiguity or absence
-    * throws naming the column). Floating-point values normalize
-    * with `+ 0.0` before the cast so the stringified distinct
-    * matches the NATIVE distinct both engines compute (-0.0 and 0.0
-    * compare equal natively but stringify differently; NaN needs no
-    * help — every rendering casts to "NaN"). */
   /** The dq family's ONE column-resolution rule (r18, ADVICE —
     * previously only the stringified path had it, so case-variant
     * callers got differing `col_name` rows from the composed and
@@ -358,6 +341,19 @@ object RetailEtl {
     field
   }
 
+  /** Stringified stack-unpivot shared by the dq calibration family —
+    * batch ([[dqCalibrationOneScan]]) and stream
+    * ([[graft.streaming.EventStream.dqProfileState]] /
+    * `dqStateCalibration`); ONE copy of the normalization rule (r17
+    * review), because the rule exists precisely to keep cross-engine
+    * distinct counts aligned and two drifting copies would undo it.
+    * Columns resolve like the rest of the engine: exact name first,
+    * else a UNIQUE case-insensitive match (ambiguity or absence
+    * throws naming the column). Floating-point values normalize
+    * with `+ 0.0` before the cast so the stringified distinct
+    * matches the NATIVE distinct both engines compute (-0.0 and 0.0
+    * compare equal natively but stringify differently; NaN needs no
+    * help — every rendering casts to "NaN"). */
   private[graft] def stackStringified(df: DataFrame,
                                       cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "dq profile needs at least one column")

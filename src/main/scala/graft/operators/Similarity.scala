@@ -974,23 +974,6 @@ object Similarity {
         sum(when(col("nrm") === 0.0d, 1L).otherwise(0L)).as("n_zero"))
   }
 
-  /** Pairwise-cosine histogram over a deterministic corpus sample —
-    * the embedding-geometry gauge that PREDICTS how every
-    * approximate tier will behave before an index is built: mass
-    * piled near 0 means near-isotropic vectors (the measured reason
-    * this testdata's PCA/IVF recall is hard — docs/ANN_SWEEP.md), a
-    * multimodal histogram means real cluster structure (IVF will
-    * shine), a heavy right tail near 1 predicts the SemDeDup
-    * threshold's yield. Sample is the deterministic `vec_id %
-    * sampleMod` slice; within it the all-pairs cosine runs as a
-    * broadcast cross join — quadratic IN THE SAMPLE only, so at
-    * scale `sampleMod` is chosen to keep the sample O(1k) (the
-    * [[Similarity]] trainSample posture: diagnostics run on capped
-    * samples, never the corpus). Bins are `floor(cos·bins)`: both
-    * engines compute bit-identical doubles (same in-order kernel),
-    * so the boundary is safe; counts exact, one share quotient
-    * rounded once.
-    */
   /** Reciprocal-rank fusion of ranked candidate lists — the standard
     * way to combine a dense (embedding) retriever with a lexical one
     * without score calibration: each list contributes
@@ -1082,53 +1065,6 @@ object Similarity {
         explode(TextAnalysis.tokens(col("text"))).as("tok"))
       .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
 
-  /** BM25 lexical top-k — the classic probabilistic ranking function
-    * (Robertson–Spärck Jones), the retrieval-quality upgrade over
-    * [[hybridRrfTopK]]'s raw shared-token count: per shared term,
-    * idf = ln(1 + (N − df + ½)/(df + ½)) weighs rarity and the
-    * (k1, b) saturation normalizes term frequency by document length.
-    * Scale posture — CHAMPION LISTS (impact-ordered truncated
-    * postings, the classic IR index trick). SCORING keeps the full
-    * vocabulary up to a STOPWORD-FRACTION cap: tokens in more than
-    * `maxDfFrac` of documents are dropped (df = 1 hapaxes too — a
-    * token in one document can never be shared); retrieval quality
-    * needs every surviving term to contribute to the final score.
-    * CANDIDATE GENERATION (stage 1) instead joins the query tokens
-    * against each token's CHAMPION LIST — ~`championR` docs chosen
-    * by (tf DESC, doc_id), the frequency-ordered proxy for impact
-    * order — so per-token fan-out in the stage-1 equi-join is
-    * bounded by a CONSTANT instead of maxDfFrac·N: stage-1 work is
-    * O(|query postings| · championR) regardless of corpus size, and
-    * no hot token can concentrate 0.9·N postings on one shuffle
-    * partition. An absolute mid-band df window (the dedup-family
-    * cap) is NOT used here because it silently empties on small-
-    * vocabulary corpora where every token is stopword-class — the
-    * champion list degrades gracefully instead (every token always
-    * contributes ~min(df, championR) candidates). Ranking champions
-    * by integer tf with doc_id tie-break (rather than the float
-    * impact itself) makes list membership a DISCRETE, bit-stable
-    * set — no cross-engine ulp noise can flip who is in the index.
-    * The champion build is STRATIFIED for skew-proofness: ceil(R/32)
-    * champions per (tok, doc_id % 32) stratum, one window whose
-    * partitions each hold at most a 1/32 slice of a hot token's
-    * posting list — strata are selected independently, so the list
-    * is also hash-diverse across the corpus rather than biased to
-    * one region of the tf distribution's head. Block-max/WAND early
-    * termination is the next tier if exhaustive common-token
-    * scoring must also be rank-safe.
-    *
-    * Per-pair scores fold their term contributions in TOKEN order
-    * (array_sort → sequential `aggregate`), not hash-aggregate
-    * order — in BOTH stages: exact-duplicate documents then score
-    * bit-identically within each engine, so their rank tie breaks by
-    * neighbor_id the same way everywhere. The stage-1 cut at rank
-    * k·5 additionally orders by the 1e-6-rounded fold (then
-    * neighbor_id), so the candidate SET — a discrete output — can't
-    * be split across engines by last-ulp ln() noise either; a flip
-    * now needs two fold sums straddling a 1e-6 grid edge within one
-    * ulp. The fold is affordable in stage 1 precisely because
-    * champion lists bound the rows it runs over.
-    */
   /** The scored BM25 postings index: `(doc_id, tok, tf, term)` with
     * `term` the full idf·saturation contribution of `tok` in
     * `doc_id`, band-filtered to 2 ≤ df ≤ maxDfFrac·N. This is the
@@ -1186,6 +1122,53 @@ object Similarity {
       s => s.getField("term")),
     lit(0.0), (acc, x) => acc + x)
 
+  /** BM25 lexical top-k — the classic probabilistic ranking function
+    * (Robertson–Spärck Jones), the retrieval-quality upgrade over
+    * [[hybridRrfTopK]]'s raw shared-token count: per shared term,
+    * idf = ln(1 + (N − df + ½)/(df + ½)) weighs rarity and the
+    * (k1, b) saturation normalizes term frequency by document length.
+    * Scale posture — CHAMPION LISTS (impact-ordered truncated
+    * postings, the classic IR index trick). SCORING keeps the full
+    * vocabulary up to a STOPWORD-FRACTION cap: tokens in more than
+    * `maxDfFrac` of documents are dropped (df = 1 hapaxes too — a
+    * token in one document can never be shared); retrieval quality
+    * needs every surviving term to contribute to the final score.
+    * CANDIDATE GENERATION (stage 1) instead joins the query tokens
+    * against each token's CHAMPION LIST — ~`championR` docs chosen
+    * by (tf DESC, doc_id), the frequency-ordered proxy for impact
+    * order — so per-token fan-out in the stage-1 equi-join is
+    * bounded by a CONSTANT instead of maxDfFrac·N: stage-1 work is
+    * O(|query postings| · championR) regardless of corpus size, and
+    * no hot token can concentrate 0.9·N postings on one shuffle
+    * partition. An absolute mid-band df window (the dedup-family
+    * cap) is NOT used here because it silently empties on small-
+    * vocabulary corpora where every token is stopword-class — the
+    * champion list degrades gracefully instead (every token always
+    * contributes ~min(df, championR) candidates). Ranking champions
+    * by integer tf with doc_id tie-break (rather than the float
+    * impact itself) makes list membership a DISCRETE, bit-stable
+    * set — no cross-engine ulp noise can flip who is in the index.
+    * The champion build is STRATIFIED for skew-proofness: ceil(R/32)
+    * champions per (tok, doc_id % 32) stratum, one window whose
+    * partitions each hold at most a 1/32 slice of a hot token's
+    * posting list — strata are selected independently, so the list
+    * is also hash-diverse across the corpus rather than biased to
+    * one region of the tf distribution's head. Block-max/WAND early
+    * termination is the next tier if exhaustive common-token
+    * scoring must also be rank-safe.
+    *
+    * Per-pair scores fold their term contributions in TOKEN order
+    * (array_sort → sequential `aggregate`), not hash-aggregate
+    * order — in BOTH stages: exact-duplicate documents then score
+    * bit-identically within each engine, so their rank tie breaks by
+    * neighbor_id the same way everywhere. The stage-1 cut at rank
+    * k·5 additionally orders by the 1e-6-rounded fold (then
+    * neighbor_id), so the candidate SET — a discrete output — can't
+    * be split across engines by last-ulp ln() noise either; a flip
+    * now needs two fold sums straddling a 1e-6 grid edge within one
+    * ulp. The fold is affordable in stage 1 precisely because
+    * champion lists bound the rows it runs over.
+    */
   def bm25TopK(posts: DataFrame, queryMod: Int = 100, k: Int = 10,
                championR: Int = 64): DataFrame = {
     val qPosts = posts.filter(col("doc_id") % queryMod === 0)
@@ -1606,6 +1589,23 @@ object Similarity {
         coalesce(col("reciprocal"), lit(0L)).as("reciprocal"))
   }
 
+  /** Pairwise-cosine histogram over a deterministic corpus sample —
+    * the embedding-geometry gauge that PREDICTS how every
+    * approximate tier will behave before an index is built: mass
+    * piled near 0 means near-isotropic vectors (the measured reason
+    * this testdata's PCA/IVF recall is hard — docs/ANN_SWEEP.md), a
+    * multimodal histogram means real cluster structure (IVF will
+    * shine), a heavy right tail near 1 predicts the SemDeDup
+    * threshold's yield. Sample is the deterministic `vec_id %
+    * sampleMod` slice; within it the all-pairs cosine runs as a
+    * broadcast cross join — quadratic IN THE SAMPLE only, so at
+    * scale `sampleMod` is chosen to keep the sample O(1k) (the
+    * [[Similarity]] trainSample posture: diagnostics run on capped
+    * samples, never the corpus). Bins are `floor(cos·bins)`: both
+    * engines compute bit-identical doubles (same in-order kernel),
+    * so the boundary is safe; counts exact, one share quotient
+    * rounded once.
+    */
   def pairDistanceHistogram(embeddings: DataFrame, sampleMod: Int = 10,
                             bins: Int = 20): DataFrame = {
     val s = embeddings.filter(col("vec_id") % sampleMod === 0)

@@ -139,17 +139,6 @@ object TextAnalysis {
           lit(1.0) - col("n_distinct_bigrams") / col("n_bigrams"))
           .otherwise(lit(0.0)))
 
-  /** Line/paragraph structure synthesized onto the flat test corpus —
-    * the fixture [[gopherRepetition]] needs: the synthetic documents
-    * carry no newlines, so Gopher's line/paragraph counters would be
-    * degenerate (every doc one line, every fraction zero). This
-    * rebuilds each doc's text with a `\n` before every `lineTok`-th
-    * token and `\n\n` before every `paraTok`-th, and PLANTS a
-    * duplicated paragraph (a verbatim copy of the first paragraph
-    * appended) on docs with `doc_id % dupMod == 0` so the
-    * paragraph-dup counters have deterministic nonzero signal. Pure
-    * per-row string arithmetic, replayed verbatim by the oracle.
-    */
   /** The lining recipe DECOMPOSED — (doc_id, base, copy, keep...)
     * where `base` is the lined text and `copy` the planted
     * first-paragraph duplicate ('' for non-planted docs). The ONE
@@ -175,6 +164,17 @@ object TextAnalysis {
           .otherwise(lit("")))
       .select((Seq("doc_id", "base", "copy") ++ keep).map(col): _*)
 
+  /** Line/paragraph structure synthesized onto the flat test corpus —
+    * the fixture [[gopherRepetition]] needs: the synthetic documents
+    * carry no newlines, so Gopher's line/paragraph counters would be
+    * degenerate (every doc one line, every fraction zero). This
+    * rebuilds each doc's text with a `\n` before every `lineTok`-th
+    * token and `\n\n` before every `paraTok`-th, and PLANTS a
+    * duplicated paragraph (a verbatim copy of the first paragraph
+    * appended) on docs with `doc_id % dupMod == 0` so the
+    * paragraph-dup counters have deterministic nonzero signal. Pure
+    * per-row string arithmetic, replayed verbatim by the oracle.
+    */
   def synthLinedCorpus(docs: DataFrame, lineTok: Int = 2, paraTok: Int = 8,
                        dupMod: Int = 5, keep: Seq[String] = Nil): DataFrame =
     linedParts(docs, lineTok, paraTok, dupMod, keep)
@@ -259,10 +259,6 @@ object TextAnalysis {
       .select((Seq("doc_id", "text") ++ keep).map(col): _*)
   }
 
-  /** The COMBINED Gopher fixture: quality plants at token level
-    * ([[synthQualityDefects]]) then line/paragraph structure with
-    * planted duplicate paragraphs ([[synthLinedCorpus]]) — the input
-    * the full 20-threshold gate family runs on. */
   /** The composed-intake-gate fixture: raw text + a PER-DOC-UNIQUE
     * stop-word tail — each of the 8 [[GopherQualityStopWords]]
     * interleaved with a doc-specific token (`the s{id}x0 be s{id}x1
@@ -287,24 +283,14 @@ object TextAnalysis {
       keep = Seq("source"))
   }
 
+  /** The COMBINED Gopher fixture: quality plants at token level
+    * ([[synthQualityDefects]]) then line/paragraph structure with
+    * planted duplicate paragraphs ([[synthLinedCorpus]]) — the input
+    * the full 20-threshold gate family runs on. */
   def synthQualityCorpus(docs: DataFrame,
                          keep: Seq[String] = Nil): DataFrame =
     synthLinedCorpus(synthQualityDefects(docs, keep), keep = keep)
 
-  /** The REST of the Gopher repetition suite (Rae et al. 2021,
-    * table A1) beside [[repetition]]'s duplicate-bigram fraction:
-    * duplicate-LINE and duplicate-PARAGRAPH fractions (1 −
-    * distinct/total over `\n` / `\n\n` segments), the CHARACTER mass
-    * trapped in duplicated lines/paragraphs (chars of every segment
-    * whose in-doc count ≥ 2, over total segment chars), and the
-    * top-{2,3,4}-gram mass (occurrences × chars of the single most
-    * frequent token n-gram, over the token-stream chars; ties break
-    * to the lexicographically smallest gram so the readout is
-    * discrete-deterministic). Every fraction is ONE division of
-    * exact integer counters — bit-replayable cross-engine — and the
-    * whole profile is per-row array arithmetic over one tokenize +
-    * two splits: no shuffle, scales with the scan like the sibling.
-    */
   /** ALL 13 Gopher repetition metrics as ONE row-local projection
     * over (…, text) — the single definition the batch profile pair,
     * the gate keys, and the streaming intake gate share, so the
@@ -396,6 +382,20 @@ object TextAnalysis {
         s"dup${n}gram_char_fraction"): _*))
   }
 
+  /** The REST of the Gopher repetition suite (Rae et al. 2021,
+    * table A1) beside [[repetition]]'s duplicate-bigram fraction:
+    * duplicate-LINE and duplicate-PARAGRAPH fractions (1 −
+    * distinct/total over `\n` / `\n\n` segments), the CHARACTER mass
+    * trapped in duplicated lines/paragraphs (chars of every segment
+    * whose in-doc count ≥ 2, over total segment chars), and the
+    * top-{2,3,4}-gram mass (occurrences × chars of the single most
+    * frequent token n-gram, over the token-stream chars; ties break
+    * to the lexicographically smallest gram so the readout is
+    * discrete-deterministic). Every fraction is ONE division of
+    * exact integer counters — bit-replayable cross-engine — and the
+    * whole profile is per-row array arithmetic over one tokenize +
+    * two splits: no shuffle, scales with the scan like the sibling.
+    */
   def gopherRepetition(docs0: DataFrame): DataFrame =
     gopherMetricCols(Spread.spread(docs0.select("doc_id", "text")))
       .select("doc_id", "n_lines", "n_paras", "dup_line_fraction",
@@ -1207,6 +1207,17 @@ object TextAnalysis {
       .select("doc_id", "term_rank", "term", "tf", "df", "score")
   }
 
+  /** (doc_id, w1, w2) bigram instances — the shared postings shape
+    * under both LM scorers. */
+  private def bigramPairs(docs: DataFrame): DataFrame =
+    docs
+      .select(col("doc_id"), tokens(col("text")).as("toks"))
+      .select(col("doc_id"), explode(expr(
+        "CASE WHEN size(toks) < 2 THEN array() " +
+          "ELSE transform(sequence(0, size(toks) - 2), " +
+          "i -> struct(toks[i] AS w1, toks[i + 1] AS w2)) END")).as("bg"))
+      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
+
   /** Per-document bigram-LM surprisal (CCNet/KenLM-style perplexity
     * filtering, with the corpus as its own model): score(doc) =
     * mean over its bigrams of −ln p(w2|w1), where p(w2|w1) =
@@ -1220,17 +1231,6 @@ object TextAnalysis {
     * size is unbounded. Score rounded to 6 decimals (ln differs in
     * the last ulp across engines).
     */
-  /** (doc_id, w1, w2) bigram instances — the shared postings shape
-    * under both LM scorers. */
-  private def bigramPairs(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .select(col("doc_id"), explode(expr(
-        "CASE WHEN size(toks) < 2 THEN array() " +
-          "ELSE transform(sequence(0, size(toks) - 2), " +
-          "i -> struct(toks[i] AS w1, toks[i + 1] AS w2)) END")).as("bg"))
-      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-
   def lmScore(docs: DataFrame): DataFrame = {
     val pairs = bigramPairs(docs)
     // the [[knScore]] model shape, back-ported (r18 optimization
@@ -1433,21 +1433,6 @@ object TextAnalysis {
         round(col("n_profile_hits") / col("n_trigrams"), 6))
   }
 
-  /** Token-length histogram per language: fixed-width buckets of the
-    * whitespace token count. Integer-only arithmetic (portable), one
-    * narrow projection + one aggregation.
-    */
-  /** Benchmark decontamination: flag corpus documents sharing any
-    * token n-gram with a held-out benchmark set (here: a deterministic
-    * doc_id slice standing in for an eval suite). The real-world
-    * contract — tiny benchmark, vast corpus — is what makes this
-    * scale: the benchmark's distinct n-grams broadcast, so the corpus
-    * side is a map-side hash semi-join with no shuffle; only matched
-    * (doc, gram) rows reach the per-doc count exchange. N-grams are
-    * kept as plain strings so any engine can replay the check
-    * bit-for-bit; at 100 TB you'd hash them to 8 bytes first (same
-    * plan shape, smaller broadcast).
-    */
   /** DISTINCT space-joined token n-grams from an already-tokenized
     * array column — the shared gram extractor for [[decontaminate]]
     * and the streaming curation gate. Pass a toks column bound to
@@ -1461,6 +1446,17 @@ object TextAnalysis {
         i => array_join(slice(toks, i + lit(1), lit(n)), " "))))
       .otherwise(array().cast("array<string>"))
 
+  /** Benchmark decontamination: flag corpus documents sharing any
+    * token n-gram with a held-out benchmark set (here: a deterministic
+    * doc_id slice standing in for an eval suite). The real-world
+    * contract — tiny benchmark, vast corpus — is what makes this
+    * scale: the benchmark's distinct n-grams broadcast, so the corpus
+    * side is a map-side hash semi-join with no shuffle; only matched
+    * (doc, gram) rows reach the per-doc count exchange. N-grams are
+    * kept as plain strings so any engine can replay the check
+    * bit-for-bit; at 100 TB you'd hash them to 8 bytes first (same
+    * plan shape, smaller broadcast).
+    */
   def decontaminate(docs: DataFrame, n: Int = 3, benchMod: Int = 97): DataFrame = {
     // gram extraction runs as the fused codegen'd kernel
     // (gf.tokenNgrams); [[ngramArrayFromToks]] is the SQL-spelling
@@ -1674,6 +1670,10 @@ object TextAnalysis {
       .select(col("doc_id"), col("n_tokens"),
         (log2(col("n_tokens")) - col("clog") / col("n_tokens")).as("entropy_bits"))
 
+  /** Token-length histogram per language: fixed-width buckets of the
+    * whitespace token count. Integer-only arithmetic (portable), one
+    * narrow projection + one aggregation.
+    */
   def lengthHistogram(docs: DataFrame, bucketWidth: Int = 16): DataFrame =
     docs
       .select(col("lang"),

@@ -657,23 +657,6 @@ object DocStream extends Serializable {
   case class CapCount(admitted: Long)
   case class CapRow(source: String, admit_rank: Long, doc_id: Long)
 
-  /** Streaming per-source admission quota — the intake-side spelling
-    * of [[graft.operators.Curation.sourceCap]]: admit at most `cap`
-    * documents per source, deciding AT ARRIVAL (the quality-ranked
-    * cap needs the whole day's corpus and stays in the nightly
-    * batch; an always-on intake can only meter). State is ONE
-    * counter per source — O(1), strictly smaller than the
-    * reservoir's O(k) — and an admitted doc emits exactly once, so
-    * the query runs in append mode. Admission order is pinned to
-    * doc_id WITHIN each micro-batch (ingest order across batches),
-    * which makes a failed-batch replay fold identically from the
-    * rolled-back state version; a cross-batch straggler with a
-    * smaller doc_id than an admitted doc is DROPPED once the quota
-    * filled — the documented disorder contract (StreamingSpec), the
-    * price of O(1) state. A batch run folds the whole corpus as one
-    * sorted group pass, reproducing `row_number() OVER (PARTITION BY
-    * source ORDER BY doc_id) <= cap` — the driver oracle.
-    */
   /** Continuously-maintained compaction MONITOR over a stream of
     * file-commit events (part, file_id, bytes) — the live trigger
     * feeding the nightly [[graft.sources.Lake.compactionPlan]]:
@@ -694,6 +677,23 @@ object DocStream extends Serializable {
           .as("n_small"))
       .withColumn("compact_now", col("n_small") >= minSmall)
 
+  /** Streaming per-source admission quota — the intake-side spelling
+    * of [[graft.operators.Curation.sourceCap]]: admit at most `cap`
+    * documents per source, deciding AT ARRIVAL (the quality-ranked
+    * cap needs the whole day's corpus and stays in the nightly
+    * batch; an always-on intake can only meter). State is ONE
+    * counter per source — O(1), strictly smaller than the
+    * reservoir's O(k) — and an admitted doc emits exactly once, so
+    * the query runs in append mode. Admission order is pinned to
+    * doc_id WITHIN each micro-batch (ingest order across batches),
+    * which makes a failed-batch replay fold identically from the
+    * rolled-back state version; a cross-batch straggler with a
+    * smaller doc_id than an admitted doc is DROPPED once the quota
+    * filled — the documented disorder contract (StreamingSpec), the
+    * price of O(1) state. A batch run folds the whole corpus as one
+    * sorted group pass, reproducing `row_number() OVER (PARTITION BY
+    * source ORDER BY doc_id) <= cap` — the driver oracle.
+    */
   def capState(docs: DataFrame, cap: Long = 10L): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._

@@ -837,21 +837,6 @@ object EventStream extends Serializable {
       .toDF()
   }
 
-  /** Live data-quality profile — the always-on spelling of
-    * [[graft.operators.RetailEtl.dqProfileApprox]]: per monitored
-    * column, running row count, null count/fraction and HLL distinct
-    * cardinality, maintained as ONE streaming aggregate keyed on
-    * column name. Rows unpivot with `stack` before the aggregate, so
-    * adding a column adds one state row (count + sum + fixed-size
-    * HLL sketch — state is O(cols), never data-sized); update mode
-    * re-emits the refreshed profile each trigger, which is exactly
-    * what a feed monitor polls. Values stringify for a uniform
-    * sketch domain — cardinality semantics match the batch profile
-    * (distinct VALUES, not distinct bytes). Batch fold of the whole
-    * corpus is the driver key (rows-only; ApproxSpec bounds the HLL
-    * error vs the exact profile, StreamingSpec holds cross-batch
-    * accumulation).
-    */
   /** The streaming half of the feed-freshness monitor
     * ([[graft.operators.RetailEtl.feedFreshness]]'s always-on
     * spelling, feeds keyed by event_type): ONE streaming aggregate
@@ -895,6 +880,21 @@ object EventStream extends Serializable {
                                cols: Seq[String]): DataFrame =
     graft.operators.RetailEtl.stackStringified(events, cols)
 
+  /** Live data-quality profile — the always-on spelling of
+    * [[graft.operators.RetailEtl.dqProfileApprox]]: per monitored
+    * column, running row count, null count/fraction and HLL distinct
+    * cardinality, maintained as ONE streaming aggregate keyed on
+    * column name. Rows unpivot with `stack` before the aggregate, so
+    * adding a column adds one state row (count + sum + fixed-size
+    * HLL sketch — state is O(cols), never data-sized); update mode
+    * re-emits the refreshed profile each trigger, which is exactly
+    * what a feed monitor polls. Values stringify for a uniform
+    * sketch domain — cardinality semantics match the batch profile
+    * (distinct VALUES, not distinct bytes). Batch fold of the whole
+    * corpus is the driver key (rows-only; ApproxSpec bounds the HLL
+    * error vs the exact profile, StreamingSpec holds cross-batch
+    * accumulation).
+    */
   def dqProfileState(events: DataFrame, cols: Seq[String],
                      rsd: Double = 0.02): DataFrame = {
     stackStringified(events, cols)

@@ -1,630 +1,37 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.types.{AbstractDataType, DataType}
 
-import graft.functions.{TextChars, TextHashes, TextMd5, VectorOps}
-
-/** Native Catalyst expressions for graft's vector/text kernels.
+/** One call of a static kernel in `graft.functions` (`VectorOps`,
+  * `TextHashes`, `TextChars`, `TextMd5`) — the one Catalyst
+  * expression behind every `gf` function.
   *
-  * Each generates code that calls the static kernels in
-  * [[VectorOps]]/[[TextHashes]], so they participate in whole-stage
-  * codegen (no Scala-UDF ser/de, no interpreted fallback in the hot
-  * path). Reference data (hyperplanes, centroids) rides along via
-  * `ctx.addReferenceObj`, the standard pattern for
-  * broadcast-small-model-into-expression.
+  * Analysis sees this node: it checks the column arguments against
+  * `argTypes` (a wrong type fails with `DATATYPE_MISMATCH`, with no
+  * implicit cast) and labels an unaliased column `name(cols)`. The
+  * optimizer then swaps in Spark's own [[StaticInvoke]] of
+  * `kernel.method(cols ++ consts)`, which joins whole-stage codegen
+  * and returns null iff a column argument is null. The constants
+  * (sizes, seeds, model arrays, sketches) are literals that are not
+  * children; model arrays and sketches ride along as codegen
+  * reference objects, shipped once per task binary.
   */
-case class CosineSimilarity(left: Expression, right: Expression)
-  extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(FloatType), ArrayType(FloatType))
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "cosine_sim"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorOps.cosine($a, $b)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** 64-bit FNV-1a of a string — document fingerprinting. */
-case class Hash64(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_hash64"
-
-  override protected def nullSafeEval(s: Any): Any =
-    TextHashes.hash64(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, s => s"graft.functions.TextHashes.hash64($s)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Count-Min multiply-shift bucket (Dietzfelbinger): take the TOP
-  * `64 − shift` bits of the wraparound product `a·h + b mod 2⁶⁴` —
-  * the high bits mix every input bit, unlike a low-bit mask, so the
-  * depth rows are pairwise-independent-ish as the sketch bound
-  * needs. Exists as a native expression because ANSI-mode Column
-  * arithmetic rejects the deliberate overflow. */
-case class CmsBucket(child: Expression, a: Long, b: Long, shift: Int)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  require(shift > 0 && shift < 64, s"shift must be in (0,64), got $shift")
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "cms_bucket"
-
-  override protected def nullSafeEval(h: Any): Any =
-    (a * h.asInstanceOf[Long] + b) >>> shift
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, h => s"((${a}L * $h + ${b}L) >>> $shift)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Hashes of all k-token shingles of a token array. */
-case class ShingleHashes(child: Expression, k: Int)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  require(k >= 1, s"shingle size must be >= 1, got $k")
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "shingle_hashes"
-
-  override protected def nullSafeEval(tokens: Any): Any =
-    TextHashes.shingleHashes(tokens.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.functions.TextHashes.shingleHashes($t, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Hashes of all character n-grams of a string (rolling polynomial
-  * hash, O(len) — see [[graft.functions.TextHashes.charShingleHashes]]).
-  */
-case class CharShingleHashes(child: Expression, n: Int)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  require(n >= 1, s"n-gram size must be >= 1, got $n")
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "char_shingle_hashes"
-
-  override protected def nullSafeEval(s: Any): Any =
-    TextHashes.charShingleHashes(s.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, s => s"graft.functions.TextHashes.charShingleHashes($s, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Fused canonicalize+tokenize+k-shingle of raw text in one byte
-  * pass (see [[graft.functions.TextHashes.tokenShingleHashesFused]]).
-  */
-case class TokenShingleHashes(child: Expression, k: Int)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  require(k >= 1, s"shingle size must be >= 1, got $k")
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "token_shingle_hashes"
-
-  override protected def nullSafeEval(s: Any): Any =
-    TextHashes.tokenShingleHashesFused(s.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      s => s"graft.functions.TextHashes.tokenShingleHashesFused($s, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Duplicated-n-gram character-coverage counters over a token
-  * array — `[tok_chars, cov_minN, …, cov_maxN]` in ONE codegen'd
-  * pass (see [[graft.functions.TextChars.dupNgramCoverage]]); the
-  * interpreted sort/fold HOF spelling it replaces evaluated a
-  * lambda per array element per n.
-  */
-case class DupNgramCoverage(child: Expression, minN: Int, maxN: Int)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  require(1 <= minN && minN <= maxN,
-    s"need 1 <= minN <= maxN, got ($minN, $maxN)")
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "dup_ngram_coverage"
-
-  override protected def nullSafeEval(a: Any): Any =
-    TextChars.dupNgramCoverage(a.asInstanceOf[ArrayData], minN, maxN)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      a => s"graft.functions.TextChars.dupNgramCoverage($a, $minN, $maxN)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Top-n-gram argmax stats over a token array —
-  * `[maxc_minK, toplen_minK, …]` in one codegen'd pass (see
-  * [[graft.functions.TextChars.topNgramStats]]).
-  */
-case class TopNgramStats(child: Expression, minK: Int, maxK: Int)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  require(1 <= minK && minK <= maxK,
-    s"need 1 <= minK <= maxK, got ($minK, $maxK)")
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "top_ngram_stats"
-
-  override protected def nullSafeEval(a: Any): Any =
-    TextChars.topNgramStats(a.asInstanceOf[ArrayData], minK, maxK)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      a => s"graft.functions.TextChars.topNgramStats($a, $minK, $maxK)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** All consecutive 3-char windows of a string — the codegen'd form
-  * of `transform(sequence(1, length-2), i -> substring(text, i, 3))`
-  * (which runs interpreted per element).
-  */
-case class CharTrigrams(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "char_trigrams"
-
-  override protected def nullSafeEval(s: Any): Any =
-    TextChars.charTrigrams(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, s => s"graft.functions.TextChars.charTrigrams($s)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** md5s of the non-overlapping n-token chunks of raw text — fused
-  * tokenize+join+digest, value-identical to the
-  * `md5(array_join(slice(tokens, i+1, n), ' '))` SQL spelling (see
-  * [[graft.functions.TextMd5.chunkMd5s]]).
-  */
-case class ChunkMd5s(child: Expression, n: Int)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  require(n >= 1, s"chunk size must be >= 1, got $n")
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "chunk_md5s"
-
-  override protected def nullSafeEval(s: Any): Any =
-    TextMd5.chunkMd5s(s.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, s => s"graft.functions.TextMd5.chunkMd5s($s, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Distinct space-joined token n-grams of raw text, first-occurrence
-  * order — fused tokenize+join+dedup, value-identical to the
-  * `array_distinct(transform(..., i -> array_join(slice(toks, i+1,
-  * n), ' ')))` SQL spelling (see
-  * [[graft.functions.TextMd5.tokenNgrams]]).
-  */
-case class TokenNgrams(child: Expression, n: Int)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  require(n >= 1, s"gram size must be >= 1, got $n")
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "token_ngrams"
-
-  override protected def nullSafeEval(s: Any): Any =
-    TextMd5.tokenNgrams(s.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, s => s"graft.functions.TextMd5.tokenNgrams($s, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Winnowing fingerprints (distinct windowed-min gram md5s) of raw
-  * text — one fused pass (see
-  * [[graft.functions.TextMd5.winnowMd5Fingerprints]]).
-  */
-case class WinnowMd5Fingerprints(child: Expression, n: Int, window: Int)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  require(n >= 1 && window >= 1, s"need n,window >= 1, got $n,$window")
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "winnow_md5_fingerprints"
-
-  override protected def nullSafeEval(s: Any): Any =
-    TextMd5.winnowMd5Fingerprints(s.asInstanceOf[UTF8String], n, window)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      s => s"graft.functions.TextMd5.winnowMd5Fingerprints($s, $n, $window)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Bloom-filter membership test over a long key — the codegen'd
-  * replacement for a per-row Scala UDF closing over a broadcast
-  * sketch: the filter rides along as a plan reference object (shipped
-  * once per executor inside the task binary, Spark's own broadcast
-  * path), and the probe inlines into whole-stage codegen on the scan,
-  * so the fattest table's pre-shuffle filter stays fused with the
-  * parquet read.
-  */
-case class BloomMightContainLong(child: Expression,
-                                 bf: org.apache.spark.util.sketch.BloomFilter)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "bloom_might_contain_long"
-
-  override protected def nullSafeEval(k: Any): Any =
-    bf.mightContainLong(k.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloomFilter", bf,
-      classOf[org.apache.spark.util.sketch.BloomFilter].getName)
-    defineCodeGen(ctx, ev, k => s"$ref.mightContainLong($k)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** 64-bit SimHash of a token array. */
-case class SimHash64(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "simhash64"
-
-  override protected def nullSafeEval(tokens: Any): Any =
-    TextHashes.simhash64(tokens.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.functions.TextHashes.simhash64($t)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** MinHash signature (array of `numPerms` unsigned mins) of a
-  * shingle-hash array.
-  */
-case class MinHashSignature(child: Expression, numPerms: Int, seed: Long)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  require(numPerms >= 1, s"numPerms must be >= 1, got $numPerms")
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(LongType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "minhash_signature"
-
-  override protected def nullSafeEval(hashes: Any): Any =
-    TextHashes.minhashSignature(hashes.asInstanceOf[ArrayData], numPerms, seed)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      h => s"graft.functions.TextHashes.minhashSignature($h, $numPerms, ${seed}L)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Random-hyperplane LSH signature of a float vector (≤64 planes →
-  * one long). The plane matrix is attached as a codegen reference
-  * object — generated per plan, broadcast with the task binary.
-  */
-case class HyperplaneSignature(child: Expression, planes: Array[Array[Float]])
-  extends UnaryExpression with ExpectsInputTypes {
-
-  require(planes.nonEmpty && planes.length <= 64, "need 1..64 hyperplanes")
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType))
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "hyperplane_sig"
-
-  override protected def nullSafeEval(v: Any): Any =
-    VectorOps.hyperplaneSig(v.asInstanceOf[ArrayData], planes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("planes", planes, "float[][]")
-    defineCodeGen(ctx, ev, v => s"graft.functions.VectorOps.hyperplaneSig($v, $ref)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Margin-ordered multiprobe LSH bucket list: the exact signature
-  * plus `probes−1` single-bit flips ordered by plane margin. Same
-  * codegen-reference plane matrix as [[HyperplaneSignature]]. */
-case class MultiprobeSignatures(child: Expression, planes: Array[Array[Float]],
-                                probes: Int)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  require(planes.nonEmpty && planes.length <= 64, "need 1..64 hyperplanes")
-  require(probes >= 1, "need at least the exact bucket")
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "multiprobe_sigs"
-
-  override protected def nullSafeEval(v: Any): Any =
-    VectorOps.multiprobeSigs(v.asInstanceOf[ArrayData], planes, probes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("planes", planes, "float[][]")
-    defineCodeGen(ctx, ev,
-      v => s"graft.functions.VectorOps.multiprobeSigs($v, $ref, $probes)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Deflate compression ratio of a string — the low-entropy text
-  * signal (templated text compresses far below prose). */
-case class DeflateRatio(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "deflate_ratio"
-
-  override protected def nullSafeEval(v: Any): Any =
-    TextChars.deflateRatio(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v => s"graft.functions.TextChars.deflateRatio($v)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** PCA projection of a float vector onto `components` after mean
-  * centering — model state (mean + component matrix) rides along as
-  * codegen reference objects, like [[HyperplaneSignature]]'s planes.
-  */
-case class PcaProject(child: Expression, mean: Array[Float],
-                      components: Array[Array[Float]])
-  extends UnaryExpression with ExpectsInputTypes {
-
-  require(components.nonEmpty, "need at least one component")
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType))
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "pca_project"
-
-  override protected def nullSafeEval(v: Any): Any =
-    VectorOps.pcaProject(v.asInstanceOf[ArrayData], mean, components)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val m = ctx.addReferenceObj("mean", mean, "float[]")
-    val comps = ctx.addReferenceObj("components", components, "float[][]")
-    defineCodeGen(ctx, ev, v => s"graft.functions.VectorOps.pcaProject($v, $m, $comps)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Product-quantization encode — per-subspace L2-nearest codebook
-  * index; the codebooks ride along as a codegen reference object. */
-case class PqEncode(child: Expression, codebooks: Array[Array[Array[Float]]])
-  extends UnaryExpression with ExpectsInputTypes {
-
-  require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty), "empty codebook")
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType))
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "pq_encode"
-
-  override protected def nullSafeEval(v: Any): Any =
-    VectorOps.pqEncode(v.asInstanceOf[ArrayData], codebooks)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("codebooks", codebooks, "float[][][]")
-    defineCodeGen(ctx, ev, v => s"graft.functions.VectorOps.pqEncode($v, $ref)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Approximate cosine from PQ codes (asymmetric: full query vector ×
-  * reconstructed corpus vector) — the ANN scan reads only the codes. */
-case class PqCosine(left: Expression, right: Expression,
-                    codebooks: Array[Array[Array[Float]]])
-  extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(FloatType), ArrayType(IntegerType))
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "pq_cosine"
-
-  override protected def nullSafeEval(q: Any, codes: Any): Any =
-    VectorOps.pqCosine(q.asInstanceOf[ArrayData], codes.asInstanceOf[ArrayData], codebooks)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("codebooks", codebooks, "float[][][]")
-    defineCodeGen(ctx, ev,
-      (q, c) => s"graft.functions.VectorOps.pqCosine($q, $c, $ref)")
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** IVF-PQ residual encode: PQ codes of `vec − centroids(cell)` (see
-  * [[graft.functions.VectorOps.pqEncodeResidual]]). */
-case class PqEncodeResidual(left: Expression, right: Expression,
-                            centroids: Array[Array[Float]],
-                            codebooks: Array[Array[Array[Float]]])
-  extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(FloatType), IntegerType)
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "pq_encode_residual"
-
-  override protected def nullSafeEval(v: Any, cell: Any): Any =
-    VectorOps.pqEncodeResidual(v.asInstanceOf[ArrayData],
-      cell.asInstanceOf[Int], centroids, codebooks)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cref = ctx.addReferenceObj("centroids", centroids, "float[][]")
-    val ref = ctx.addReferenceObj("codebooks", codebooks, "float[][][]")
-    defineCodeGen(ctx, ev,
-      (v, cell) => s"graft.functions.VectorOps.pqEncodeResidual($v, $cell, $cref, $ref)")
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Approximate cosine against an IVF-PQ reconstruction
-  * `centroids(cell) + residual(codes)` (see
-  * [[graft.functions.VectorOps.pqCosineResidual]]). */
-case class PqCosineResidual(first: Expression, second: Expression, third: Expression,
-                            centroids: Array[Array[Float]],
-                            codebooks: Array[Array[Array[Float]]])
-  extends TernaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(FloatType), ArrayType(IntegerType), IntegerType)
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "pq_cosine_residual"
-
-  override protected def nullSafeEval(q: Any, codes: Any, cell: Any): Any =
-    VectorOps.pqCosineResidual(q.asInstanceOf[ArrayData],
-      codes.asInstanceOf[ArrayData], cell.asInstanceOf[Int], centroids, codebooks)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cref = ctx.addReferenceObj("centroids", centroids, "float[][]")
-    val ref = ctx.addReferenceObj("codebooks", codebooks, "float[][][]")
-    defineCodeGen(ctx, ev, (q, codes, cell) =>
-      s"graft.functions.VectorOps.pqCosineResidual($q, $codes, $cell, $cref, $ref)")
-  }
+case class KernelCall(name: String, kernel: AnyRef, method: String,
+                      resultType: DataType, argTypes: Seq[DataType],
+                      children: Seq[Expression], consts: Seq[Expression])
+  extends RuntimeReplaceable with ExpectsInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] = argTypes
+  override def prettyName: String = name
+  override def stringArgs: Iterator[Any] = children.iterator
+
+  override lazy val replacement: Expression =
+    StaticInvoke(kernel.getClass, resultType, method, children ++ consts,
+      returnNullable = false)
 
   override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-/** IVF probe list: indices of the `nprobe` nearest centroids. */
-case class NearestCentroids(child: Expression, centroids: Array[Array[Float]], nprobe: Int)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  require(centroids.nonEmpty, "need at least one centroid")
-  require(nprobe >= 1 && nprobe <= centroids.length, s"bad nprobe $nprobe")
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType))
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "nearest_centroids"
-
-  override protected def nullSafeEval(v: Any): Any =
-    VectorOps.nearestCentroids(v.asInstanceOf[ArrayData], centroids, nprobe)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("centroids", centroids, "float[][]")
-    defineCodeGen(ctx, ev,
-      v => s"graft.functions.VectorOps.nearestCentroids($v, $ref, $nprobe)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Deterministic token dropout (fused tokenize+hash+filter+rejoin;
-  * see [[graft.functions.TextMd5.tokenDropout]]): token i of a doc
-  * drops iff md5("docId:i:salt")'s first 8 hex chars sort below the
-  * threshold — value-identical to the indexed-lambda SQL spelling,
-  * one pass over the document bytes.
-  */
-case class TokenDropout(left: Expression, right: Expression,
-                        thresholdHex: String, salt: String)
-  extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, LongType)
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "token_dropout"
-
-  override protected def nullSafeEval(s: Any, docId: Any): Any =
-    graft.functions.TextMd5.tokenDropout(s.asInstanceOf[UTF8String],
-      docId.asInstanceOf[Long],
-      UTF8String.fromString(thresholdHex), UTF8String.fromString(salt))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val thr = ctx.addReferenceObj("thr", UTF8String.fromString(thresholdHex),
-      "org.apache.spark.unsafe.types.UTF8String")
-    val sl = ctx.addReferenceObj("salt", UTF8String.fromString(salt),
-      "org.apache.spark.unsafe.types.UTF8String")
-    defineCodeGen(ctx, ev,
-      (s, id) => s"graft.functions.TextMd5.tokenDropout($s, $id, $thr, $sl)")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+      newChildren: IndexedSeq[Expression]): Expression =
+    copy(children = newChildren)
 }

@@ -180,6 +180,62 @@ class FunctionsSpec extends SparkSpec {
         "top_ngram_stats(array('a','b','a','b'), 2, 2) AS top").head()
     assert(rk.getSeq[Long](0) == Seq(4L, 4L))
     assert(rk.getSeq[Long](1) == Seq(2L, 3L))
+    // the fused md5/gram kernels and deflate_ratio: SQL gives the
+    // Column API's value, and the md5s are SQL md5s of the grams
+    val text = "a b a b c"
+    val tx = spark.sql(
+      s"SELECT chunk_md5s('$text', 2) AS ch, token_ngrams('$text', 2) AS ng, " +
+        s"winnow_fingerprints('$text', 2, 2) AS wf, deflate_ratio('$text') AS dr, " +
+        "array(md5('a b'), md5('a b')) AS chRef, " +
+        "array(md5('a b'), md5('b a'), md5('b c')) AS gramMd5s").head()
+    val api = Seq(text).toDF("t").select(gf.chunkMd5s($"t", 2), gf.tokenNgrams($"t", 2),
+      gf.winnowFingerprints($"t", 2, 2), gf.deflateRatio($"t")).head()
+    (0 until 4).foreach(i => assert(tx.get(i) == api.get(i), s"column $i"))
+    assert(tx.getSeq[String](0) == tx.getSeq[String](4))
+    assert(tx.getSeq[String](1) == Seq("a b", "b a", "b c"))
+    val wf = tx.getSeq[String](2)
+    assert(wf.nonEmpty && wf.forall(tx.getSeq[String](5).contains))
+    assert(tx.getDouble(3) > 0.0)
+  }
+
+  test("a wrong-typed column fails analysis, through the Column API and SQL") {
+    val df = Seq((1, "x")).toDF("i", "s")
+    df.createOrReplaceTempView("fn_typed")
+    def mismatch(run: => Any): Unit = {
+      val e = intercept[org.apache.spark.sql.AnalysisException](run)
+      assert(e.getMessage.contains("DATATYPE_MISMATCH"), e.getMessage)
+    }
+    mismatch(df.select(gf.hash64($"i")).collect())
+    mismatch(df.select(gf.cosineSim($"s", $"s")).collect())
+    mismatch(spark.sql("SELECT graft_hash64(i) FROM fn_typed").collect())
+    mismatch(spark.sql("SELECT cosine_sim(s, s) FROM fn_typed").collect())
+  }
+
+  test("unaliased kernel columns are labelled by SQL name and columns only") {
+    val df = Seq(("a b", Seq(1f, 0f))).toDF("text", "v")
+    assert(df.select($"text".as("t")).select(gf.hash64($"t")).columns.toSeq ==
+      Seq("graft_hash64(t)"))
+    assert(df.select(gf.tokenShingleHashes($"text", 2),
+      gf.nearestCentroids($"v", Array(Array(1f, 0f), Array(0f, 1f)), 1)).columns.toSeq ==
+      Seq("token_shingle_hashes(text)", "nearest_centroids(v)"))
+  }
+
+  test("a null input gives a null output: unary, binary, model and constant kernels") {
+    val centroids = Array(Array(1f, 0f), Array(0f, 1f))
+    // v is never null, so cosineSim(v, w) has one null argument of two
+    val kernels = Seq(gf.hash64($"s"), gf.cosineSim($"v", $"w"),
+      gf.nearestCentroids($"w", centroids, 1), gf.tokenDropout($"s", $"id", 0.5, "salt"))
+    // a local relation (evaluated on the driver) ...
+    val local = Seq[(Option[String], Option[Long], Seq[Float], Option[Seq[Float]])](
+      (None, None, Seq(1f, 0f), None)).toDF("s", "id", "v", "w")
+    // ... and generated code over a scan, where the nulls are not constants
+    val scanned = spark.range(1).select(
+      when($"id" > 0, "a b").as("s"), when($"id" > 0, 7L).as("id"),
+      array(lit(1f), lit(0f)).as("v"), when($"id" > 0, array(lit(0f), lit(1f))).as("w"))
+    for (df <- Seq(local, scanned)) {
+      val r = df.select(kernels: _*).head()
+      assert((0 until 4).forall(r.isNullAt), r)
+    }
   }
 
   test("charTrigrams matches sliding substring semantics, multibyte-safe") {

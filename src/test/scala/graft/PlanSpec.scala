@@ -127,7 +127,7 @@ class PlanSpec extends SparkSpec {
     val p = plan(Analytics.topRevenueOrdersBloom(Tables.customer(spark, dir),
       Tables.orders(spark, dir), Tables.lineitem(spark, dir)))
     assert(!p.contains("UDF"), s"no ScalaUDF may survive in the plan:\n$p")
-    assert(p.contains("bloom_might_contain_long"),
+    assert(p.contains("TextHashes.mightContainLong"),
       s"expected the native bloom probe on the lineitem scan:\n$p")
   }
 
@@ -416,10 +416,10 @@ class PlanSpec extends SparkSpec {
   test("kmeansAssign output plan: codegen'd argmax projection, no vector shuffle") {
     val p = plan(graft.operators.Similarity.kmeansAssign(
       Tables.embeddings(spark, dir), k = 4, iters = 1))
-    // the assignment is scan → project(nearest_centroids) — the
-    // centroid table rides as a codegen reference object, so the
+    // the assignment is scan → project(VectorOps.nearestCentroids) —
+    // the centroid table rides as a codegen reference object, so the
     // final pass has NO join and NO exchange at all
-    assert(p.contains("nearest_centroids"), s"expected native argmax:\n$p")
+    assert(p.contains("VectorOps.nearestCentroids"), s"expected native argmax:\n$p")
     assert(!p.contains("Exchange"), s"assignment must not shuffle:\n$p")
     assert(!p.contains("Join"), s"no centroid lookup join:\n$p")
   }
