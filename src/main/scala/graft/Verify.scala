@@ -19,9 +19,10 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.registry.values
+      .filter(key => only.forall(_.contains(key.name)))
+      .map(key => s"${jsonString(key.name)}: ${jsonString(key.oracle)}")
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

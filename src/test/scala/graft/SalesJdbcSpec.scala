@@ -158,6 +158,47 @@ class SalesJdbcSpec extends SparkSpec {
     assert(readBack().size == 3)
   }
 
+  test("upsertInto commits per partition: a failing partition rolls back alone") {
+    withStatement { st =>
+      try st.execute("DROP TABLE checked_summary") catch { case _: java.sql.SQLException => }
+      st.execute("CREATE TABLE checked_summary (" +
+        "product_id INT PRIMARY KEY, " +
+        "total_quantity INT NOT NULL CHECK (total_quantity >= 0), " +
+        "total_sale_amount DECIMAL(10,2) NOT NULL)")
+    }
+    val checked = cfg.copy(table = "checked_summary")
+    def table(): Map[Int, (Int, BigDecimal)] =
+      spark.read.format("jdbc")
+        .options(Map("url" -> url, "dbtable" -> "checked_summary"))
+        .load().collect()
+        .map(r => r.getInt(0) -> (r.getInt(1), BigDecimal(r.getDecimal(2)))).toMap
+    def rows(r: (Int, Int, String)*) = r.map { case (k, q, a) => (k, q, BigDecimal(a)) }
+    SalesJdbc.writeSummary(rows((1, 1, "1.00"), (2, 2, "2.00"), (3, 3, "3.00"),
+      (4, 4, "4.00")).toDF("product_id", "total_quantity", "total_sale_amount"), checked)
+    val base = table()
+    // three partitions of two rows each; the middle one updates key 2,
+    // then breaks the CHECK on key 3 within the same batch. It starts
+    // late, so the other two partitions have committed when it fails.
+    def delta(badQuantity: Int) = spark.sparkContext
+      .parallelize(rows((1, 11, "11.00"), (5, 15, "15.00"),
+        (2, 12, "12.00"), (3, badQuantity, "13.00"),
+        (4, 14, "14.00"), (6, 16, "16.00")), numSlices = 3)
+      .mapPartitionsWithIndex { (i, it) => if (i == 1) Thread.sleep(2000); it }
+      .toDF("product_id", "total_quantity", "total_sale_amount")
+    assert(delta(-3).rdd.getNumPartitions == 3)
+    intercept[org.apache.spark.SparkException] {
+      SalesJdbc.upsertInto(delta(-3), checked, Seq("product_id"))
+    }
+    assert(table() == base ++ Map(
+      1 -> ((11, BigDecimal("11.00"))), 5 -> ((15, BigDecimal("15.00"))),
+      4 -> ((14, BigDecimal("14.00"))), 6 -> ((16, BigDecimal("16.00")))),
+      "the other partitions commit; the failing one leaves keys 2 and 3 as they were")
+    // a rerun with the fixed delta completes the table
+    SalesJdbc.upsertInto(delta(13), checked, Seq("product_id"))
+    assert(table() == Map(1 -> 11, 2 -> 12, 3 -> 13, 4 -> 14, 5 -> 15, 6 -> 16)
+      .map { case (k, q) => k -> ((q, BigDecimal(s"$q.00"))) })
+  }
+
   // ——— read side ———
 
   private val readUrl = "jdbc:derby:memory:graftjdbcread;create=true"

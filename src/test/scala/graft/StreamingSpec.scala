@@ -414,6 +414,43 @@ class StreamingSpec extends SparkSpec {
       s"the summary must still hold the first batch: $out")
   }
 
+  test("streaming upsert sink restarted on its checkpoint equals one uninterrupted run") {
+    val first = Seq((101L, 1.0, 10.0), (102L, 2.0, 20.0))
+    val second = Seq((102L, 9.0, 90.0), (103L, 3.0, 30.0))
+    def frame(rows: Seq[(Long, Double, Double)]) =
+      rows.toDF("product_id", "total_quantity", "total_sale_amount")
+    def write(rows: Seq[(Long, Double, Double)], in: String): Unit =
+      frame(rows).coalesce(1).write.mode("append").parquet(in)
+    /** The summary rows after both file batches, with the query
+      * stopped and started again on the same checkpoint between them
+      * or not, and the ids of the batches the last query ran on data. */
+    def run(restart: Boolean): (Seq[(Long, Double, Double)], Seq[Long]) = {
+      val base = java.nio.file.Files.createTempDirectory("graft_restart").toString
+      val in = s"$base/in"
+      def start() = graft.streaming.StreamingLoad.upsertSink(
+        spark.readStream.schema(frame(first).schema).parquet(in),
+        path = s"$base/summary", checkpoint = s"$base/chk")
+      write(first, in)
+      var q = start()
+      val batchIds = try {
+        q.processAllAvailable()
+        if (restart) { q.stop(); write(second, in); q = start() }
+        else write(second, in)
+        q.processAllAvailable()
+        q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSeq
+      } finally q.stop()
+      val out = spark.read.parquet(s"$base/summary").as[(Long, Double, Double)]
+        .collect().toSeq.sorted
+      (out, batchIds)
+    }
+    val (once, _) = run(restart = false)
+    val (restarted, resumedBatches) = run(restart = true)
+    assert(once == Seq((101L, 1.0, 10.0), (102L, 9.0, 90.0), (103L, 3.0, 30.0)))
+    assert(restarted == once, s"the restarted run's summary: $restarted")
+    assert(resumedBatches == Seq(1L),
+      s"the restarted query must run only the batch after the committed one: $resumedBatches")
+  }
+
   test("continuous hourly rollup materializes via the upsert sink") {
     implicit val sqlCtx = spark.sqlContext
     val base = java.nio.file.Files.createTempDirectory("graft_rollup").toString
