@@ -72,6 +72,23 @@ private[graft] object SharedArtifacts {
       })
   }
 
+  /** Folds every file's (name, length, mtime) in name order, so the
+    * stamp does not depend on the order the file system lists them. */
+  private[graft] def stampOf(statuses: Seq[org.apache.hadoop.fs.FileStatus]): Long =
+    statuses.sortBy(_.getPath.getName).foldLeft(0L) { (acc, st) =>
+      var h = acc * 1000003L + st.getPath.getName.hashCode
+      h = h * 1000003L + st.getLen
+      h * 1000003L + st.getModificationTime
+    }
+
+  /** The [[stampOf]] of a file, or of a directory's files: an entry
+    * derived from what is stored at `path` keeps this stamp beside it,
+    * and a rewrite of the file changes it. */
+  def pathStamp(s: SparkSession, path: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    stampOf(p.getFileSystem(s.sparkContext.hadoopConfiguration).listStatus(p).toSeq)
+  }
+
   /** Live entries of `s`, across every artifact. */
   private[graft] def sessionCacheEntries(s: SparkSession): Int =
     store.keys.count(_._1 eq s)

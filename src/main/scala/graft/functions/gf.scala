@@ -80,6 +80,15 @@ object gf {
       Seq(StringType), Seq(text), n)
   }
 
+  /** Spark's `lower` (UTF8_BINARY, ICU case mappings), value for
+    * value, without loading Spark's collation-aware string class. */
+  def lowerText(s: Column): Column =
+    call("lower_icu", TextChars, "lowerIcu", StringType, Seq(StringType), Seq(s))
+
+  /** Spark's `upper`, the same way as [[lowerText]]. */
+  def upperText(s: Column): Column =
+    call("upper_icu", TextChars, "upperIcu", StringType, Seq(StringType), Seq(s))
+
   /** All consecutive 3-char windows of a string (codegen'd). */
   def charTrigrams(text: Column): Column =
     call("char_trigrams", TextChars, "charTrigrams", Strs, Seq(StringType), Seq(text))

@@ -390,6 +390,22 @@ object TextChars {
     new GenericArrayData(out)
   }
 
+  /** Spark's `lower` at the default UTF8_BINARY collation with ICU
+    * case mappings, step for step: an all-ASCII string maps byte by
+    * byte, anything else through ICU's full (locale-free) mapping of
+    * the valid string, invalid bytes first replaced by U+FFFD. Spark's
+    * own path loads `CollationAwareUTF8String`, whose static
+    * initializer title-cases all 1,114,112 code points (about 1.7 s,
+    * once per JVM); this one touches only ICU's `UCharacter`. */
+  def lowerIcu(s: UTF8String): UTF8String =
+    if (s.isFullAscii) s.toLowerCaseAscii
+    else UTF8String.fromString(com.ibm.icu.lang.UCharacter.toLowerCase(s.toValidString))
+
+  /** Spark's `upper`, the same way as [[lowerIcu]]. */
+  def upperIcu(s: UTF8String): UTF8String =
+    if (s.isFullAscii) s.toUpperCaseAscii
+    else UTF8String.fromString(com.ibm.icu.lang.UCharacter.toUpperCase(s.toValidString))
+
   /** Deflate compression ratio (compressed ÷ raw bytes, zlib level
     * 6, raw stream): the classic low-entropy text signal —
     * templated/repetitive text compresses far below natural prose.

@@ -65,31 +65,18 @@ object AnnIndex {
     * Spark job (file listing + scan + collect) paid for nothing.
     * Entries live in [[graft.SharedArtifacts]] per (session, model
     * dir), so they are evicted with the session's context, and each
-    * carries the dir's [[dirStamp]]: [[rebuildIvf]]'s in-place
-    * centroid rewrite — the one mutation of model files this layout
-    * has — changes the stamp, and a stamp mismatch reloads and
-    * replaces the entry. Appends/deletes touch only
+    * carries the dir's [[graft.SharedArtifacts.pathStamp]]:
+    * [[rebuildIvf]]'s in-place centroid rewrite — the one mutation of
+    * model files this layout has — changes the stamp, and a stamp
+    * mismatch reloads and replaces the entry. Appends/deletes touch only
     * `vectors`/`tombstones`, never the model dirs, so their hits are
     * correct by construction. */
   private val modelMemo =
     graft.SharedArtifacts.key[(Long, AnyRef)]("ann_model")
 
-  /** Folds every file's (name, length, mtime) in name order, so the
-    * stamp does not depend on the order the file system lists them. */
-  private[graft] def stampOf(statuses: Seq[org.apache.hadoop.fs.FileStatus]): Long =
-    statuses.sortBy(_.getPath.getName).foldLeft(0L) { (acc, st) =>
-      var h = acc * 1000003L + st.getPath.getName.hashCode
-      h = h * 1000003L + st.getLen
-      h * 1000003L + st.getModificationTime
-    }
-  private def dirStamp(spark: SparkSession, dir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    stampOf(p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(p).toSeq)
-  }
   private def cachedModel[T <: AnyRef](spark: SparkSession, dir: String)
                                       (load: => T): T = {
-    val stamp = dirStamp(spark, dir)
+    val stamp = graft.SharedArtifacts.pathStamp(spark, dir)
     graft.SharedArtifacts.get(spark, modelMemo, dir) match {
       case Some((`stamp`, v)) => v.asInstanceOf[T]
       case _ =>

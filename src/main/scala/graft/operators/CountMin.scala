@@ -59,7 +59,7 @@ object CountMin {
   /** One token instance per row, lowercased — the same tokenization
     * every text operator here uses. */
   private def instances(docs: DataFrame): DataFrame =
-    docs.select(explode(TextAnalysis.tokens(lower(col("text")))).as("tok"))
+    docs.select(explode(TextAnalysis.tokens(gf.lowerText(col("text")))).as("tok"))
 
   /** The sketch relation: (r, bucket, cnt), ≤ depth·width rows.
     * Build = one codegen'd projection + one partial-aggregable

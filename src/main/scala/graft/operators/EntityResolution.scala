@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.gf
+
 /** Entity resolution / master-data-management over the customer
   * dimension — the retail warehouse's "same customer, four feeds"
   * problem (the reference's cleaning step, scripts/transform.py,
@@ -101,7 +103,7 @@ object EntityResolution {
       col("nat").as("nationkey"), col("bal").as("acctbal"))
     val web = named.filter(col("k") % 5 === 2)
       .select((col("k") * 4 + 1).as("rec_id"),
-        concat(lit("  "), upper(col("name")), lit(" ")).as("raw_name"),
+        concat(lit("  "), gf.upperText(col("name")), lit(" ")).as("raw_name"),
         lit("web").as("src"), col("nat").as("nationkey"),
         col("bal").as("acctbal"))
     val pos = named.filter(col("k") % 3 === 1)
@@ -119,7 +121,7 @@ object EntityResolution {
     * same convention every text operator here uses, so `web`-feed
     * case/padding noise disappears before any distance is paid. */
   def normName(raw: Column): Column =
-    lower(trim(regexp_replace(raw, "\\s+", " ")))
+    gf.lowerText(trim(regexp_replace(raw, "\\s+", " ")))
 
   private def normalized(recs: DataFrame): DataFrame =
     recs.select(col("rec_id"), normName(col("raw_name")).as("norm"))

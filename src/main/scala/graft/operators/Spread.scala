@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Repartition}
 
 /** Round-robin input spread for COMPUTE-DENSE per-row stages
   * (codec decodes, per-doc sort/fold kernels): when the scan arrives
@@ -24,6 +25,23 @@ object Spread {
     // source, so the fixture-side skew this fixes cannot occur there
     if (df.isStreaming) return df
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
+    if (numPartitions(df) < target) df.repartition(target) else df
+  }
+
+  /** The partition count of `df`, read without running a job where
+    * that is possible: from an explicit `repartition(n)` under
+    * partition-preserving nodes (adaptive execution never coalesces a
+    * shuffle whose count the user set), or from `.rdd` when the plan
+    * has no exchange, since building a scan's RDD starts no job.
+    * Otherwise `.rdd` of an adaptive plan runs its map stages, and the
+    * count it reports may be smaller than planned after coalescing. */
+  private def numPartitions(df: DataFrame): Int = {
+    def planned(p: LogicalPlan): Option[Int] = p match {
+      case Repartition(n, true, _) => Some(n)
+      case Project(_, child) => planned(child)
+      case Filter(_, child) => planned(child)
+      case _ => None
+    }
+    planned(df.queryExecution.analyzed).getOrElse(df.rdd.getNumPartitions)
   }
 }

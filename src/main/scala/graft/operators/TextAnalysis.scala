@@ -805,7 +805,7 @@ object TextAnalysis {
         frac(size(expr("filter(toks, t -> t rlike '[A-Za-z]')")).cast("long"),
           nWords))
       .withColumn("stop_word_hits",
-        size(array_intersect(expr("transform(toks, t -> lower(t))"),
+        size(array_intersect(transform(col("toks"), gf.lowerText(_)),
           typedlit(GopherQualityStopWords))).cast("long"))
   }
 
@@ -1107,7 +1107,7 @@ object TextAnalysis {
     docs
       .select(col("source"),
         md5(concat_ws(" ",
-          slice(tokens(lower(col("text"))), 1, k))).as("pfx"))
+          slice(tokens(gf.lowerText(col("text"))), 1, k))).as("pfx"))
       .groupBy("source", "pfx")
       .agg(count(lit(1)).as("n"))
       .groupBy("source")
@@ -1160,7 +1160,7 @@ object TextAnalysis {
   /** Canonical form used for fingerprinting/exact dedup: lowercase,
     * collapsed whitespace, trimmed. */
   def canonical(text: Column): Column =
-    trim(regexp_replace(lower(text), "\\s+", " "))
+    trim(regexp_replace(gf.lowerText(text), "\\s+", " "))
 
   /** Document fingerprints: md5 of the canonical text (portable) and
     * a 64-bit FNV-1a (graft native, join-friendly). */
@@ -1836,7 +1836,7 @@ object TextAnalysis {
       size(regexp_extract_all(col("text"), lit("[.!?]+"), lit(0))).cast("long"),
       lit(1L))
     val syllables = size(
-      regexp_extract_all(lower(col("text")), lit("[aeiouy]+"), lit(0)))
+      regexp_extract_all(gf.lowerText(col("text")), lit("[aeiouy]+"), lit(0)))
       .cast("long")
     docs.select(
       col("doc_id"),

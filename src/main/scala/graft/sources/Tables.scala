@@ -2,7 +2,9 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
+
+import graft.SharedArtifacts
 
 /** Parquet table catalog over a driver testdata directory
   * (`/root/testdata/sf*`). One parquet file per TPC-H-ish table —
@@ -18,8 +20,28 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Inferred schemas, one per (session, table file): inference reads
+    * parquet footers in a Spark job, and a session's keys load the same
+    * few files again and again. An entry keeps the file's
+    * [[SharedArtifacts.pathStamp]] and the session's parquet reader
+    * settings, so a rewritten file, or a changed setting, is inferred
+    * again. */
+  private val schemas =
+    SharedArtifacts.key[(Long, Map[String, String], StructType)]("table_schema")
+
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val stamp = SharedArtifacts.pathStamp(spark, path)
+    val settings = spark.conf.getAll.filter(_._1.contains(".parquet."))
+    val schema = SharedArtifacts.get(spark, schemas, path) match {
+      case Some((`stamp`, `settings`, known)) => known
+      case _ =>
+        val inferred = spark.read.parquet(path).schema
+        SharedArtifacts.put(spark, schemas, path, (stamp, settings, inferred))
+        inferred
+    }
+    spark.read.schema(schema).parquet(path)
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "nation")

@@ -519,10 +519,10 @@ class AnnIndexSpec extends SparkSpec {
       new FileStatus(len, false, 1, 1L, mtime, new Path(s"/idx/centroids/$name"))
     val files = Seq(st("_SUCCESS", 0L, 10L), st("part-0.parquet", 812L, 11L),
       st("part-1.parquet", 640L, 12L))
-    val stamp = AnnIndex.stampOf(files)
-    assert(AnnIndex.stampOf(files.reverse) === stamp)
-    assert(AnnIndex.stampOf(Seq(files(1), files(2), files(0))) === stamp)
-    assert(AnnIndex.stampOf(files.updated(1, st("part-0.parquet", 812L, 99L))) !== stamp,
+    val stamp = SharedArtifacts.stampOf(files)
+    assert(SharedArtifacts.stampOf(files.reverse) === stamp)
+    assert(SharedArtifacts.stampOf(Seq(files(1), files(2), files(0))) === stamp)
+    assert(SharedArtifacts.stampOf(files.updated(1, st("part-0.parquet", 812L, 99L))) !== stamp,
       "a rewritten file must change the stamp")
   }
 

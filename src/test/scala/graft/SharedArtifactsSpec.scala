@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 
 import graft.operators.AnnIndex
+import graft.sources.Tables
 
 /** The session-scoped store behind SparkEntry's shared artifacts and
   * AnnIndex's model memo: per-artifact keys, eviction when a context
@@ -163,5 +164,28 @@ class SharedArtifactsSpec extends SparkSpec {
     assert(graftBusListeners.size === 1,
       "the memo must share the store's one eviction listener")
     SharedArtifacts.sessionCacheSweep(spark.sparkContext)
+  }
+
+  test("a table file's schema is inferred once per session: the " +
+    "second load starts no job") {
+    val s = spark.newSession()
+    Tables.documents(s, sf)
+    val jobs = jobsStarted(Tables.documents(s, sf))
+    assert(jobs === 0, s"a second load of one file started $jobs job(s)")
+  }
+
+  test("a table file rewritten with another schema is read with its " +
+    "new schema") {
+    val s = spark.newSession()
+    val dir = Files.createTempDirectory("graft_schema").toString
+    def write(df: org.apache.spark.sql.DataFrame): Unit =
+      df.repartition(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    write(Seq((1L, "a")).toDF("doc_id", "text"))
+    assert(Tables.documents(s, dir).columns.toSeq === Seq("doc_id", "text"))
+    write(Seq((2L, 0.5)).toDF("doc_id", "score"))
+    val reread = Tables.documents(s, dir)
+    assert(reread.columns.toSeq === Seq("doc_id", "score"),
+      "a rewritten file must be inferred again, not read with the old schema")
+    assert(reread.as[(Long, Double)].collect().toSeq === Seq((2L, 0.5)))
   }
 }

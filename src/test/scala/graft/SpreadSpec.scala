@@ -21,4 +21,21 @@ class SpreadSpec extends SparkSpec {
     assert(Spread.spread(wide) eq wide,
       "a well-split input must pass through untouched")
   }
+
+  test("spread reads a planned repartition's count without running a job") {
+    // under adaptive execution, `.rdd` of a plan with an exchange runs
+    // its map stage: the outer spread must read the inner one's count
+    // from the plan, through the filter and projection above it
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val narrow = spark.range(1000).toDF("id").coalesce(1)
+    val inner = Spread.spread(narrow).filter("id % 2 = 0").select("id")
+    var twice = narrow
+    val jobs = jobsStarted {
+      twice = Spread.spread(Spread.spread(narrow))
+      assert(Spread.spread(inner) eq inner,
+        "a repartitioned input already has defaultParallelism partitions")
+    }
+    assert(jobs == 0, s"spreading a spread input started $jobs job(s)")
+    assert(twice.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
+  }
 }

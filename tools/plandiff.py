@@ -9,8 +9,11 @@ suffix may differ between the two directories). Before comparing, each
 plan is masked:
 
 1. what varies from run to run: expression ids (`#123`), `plan_id=N`,
-   RDD ids (`MapPartitionsRDD[N]`), source lines (`.scala:N`), lambda
-   class names, and the checkout's path in files it writes under
+   RDD ids (`MapPartitionsRDD[N]`), source lines (`.scala:N`), the
+   source file of an RDD's call site (`at X.scala:`), lambda class
+   names, the numbers of Column-API lambda variables (`lambda x_12`,
+   drawn from one counter per JVM, so they shift with every lambda
+   built before), and the checkout's path in files it writes under
    `target/`;
 2. object hashes (`@1a2b3c`), such as the model arrays and sketches a
    kernel carries;
@@ -35,12 +38,12 @@ import sys
 KERNELS = (
     "bloom_might_contain_long", "char_shingle_hashes", "char_trigrams",
     "chunk_md5s", "cms_bucket", "cosine_sim", "deflate_ratio",
-    "dup_ngram_coverage", "graft_hash64", "hyperplane_sig",
+    "dup_ngram_coverage", "graft_hash64", "hyperplane_sig", "lower_icu",
     "minhash_signature", "multiprobe_sigs", "nearest_centroids",
     "pca_project", "pq_cosine", "pq_cosine_residual", "pq_encode",
     "pq_encode_residual", "shingle_hashes", "simhash64", "token_dropout",
     "token_ngrams", "token_shingle_hashes", "top_ngram_stats",
-    "winnow_md5_fingerprints",
+    "upper_icu", "winnow_md5_fingerprints",
 )
 # a kernel call's opening: `static_invoke(graft.functions.X.m(` (two
 # parentheses to close) or `name(` (one)
@@ -50,10 +53,12 @@ CALL = re.compile(
 
 MASKS = (
     (re.compile(r"\$\$Lambda[\w$/]*"), "$$Lambda"),
+    (re.compile(r"\b(lambda [a-z]+)_\d+\b"), r"\1_"),
     (re.compile(r"@[0-9a-f]+\b"), "@"),
     (re.compile(r"#\d+"), "#"),
     (re.compile(r"plan_id=\d+"), "plan_id="),
     (re.compile(r"RDD\[\d+\]"), "RDD[]"),
+    (re.compile(r"\bat [\w$]+\.scala:\d+"), "at X.scala:"),
     (re.compile(r"\.scala:\d+"), ".scala:"),
     (re.compile(r"file:\S*?/target/"), "file:target/"),
 )
