@@ -356,40 +356,25 @@ object Bench {
     // a correctness-of-approximation number the timing loop can't
     // see. Computed here (untimed) and carried in the contract line
     // so the recall specs' thresholds can be TRENDED per round, not
-    // just gated at test time. Each is two bounded top-k relations
-    // joined on (query_id, neighbor_id): O(|queries|·k) rows.
+    // just gated at test time. Each side is a bounded top-k relation,
+    // O(|queries|·k) rows, collected to the driver.
     val recallPairs = RecallFloors.tiers.map { case (a, e, _) => a -> e }
     // a recall failure must not cost the contract line (the timing
     // data is already in hand) — report -1 like a failed timing; the
     // exact anchor is evaluated once per KEY, not once per tier.
-    // Metric: per-query MACRO mean (group hits by query_id, average
-    // hit/n_exact) — the SAME definition SweepMain and the recall
-    // specs use, so the trended number is directly comparable to the
-    // spec floors even when the anchor returns < k rows for a query
-    // (e.g. ann_filtered_topk under a sparse filter).
-    val cols = Seq("query_id", "neighbor_id")
-    import org.apache.spark.sql.functions.{avg, coalesce, count, lit, col}
-    val exactCache = scala.collection.mutable.Map.empty[String, (Long, org.apache.spark.sql.DataFrame)]
+    // Metric: RecallFloors.macroRecall, the one definition SweepMain
+    // and the recall specs also call, so the trended number is
+    // directly comparable to the spec floors.
+    val exactCache = scala.collection.mutable.Map.empty[String, Map[Long, Set[Long]]]
     val recalls = recallPairs.collect {
       case (approx, exactKey) if selected.contains(approx) =>
         approx -> (try {
-          val (nExact, exact) = exactCache.getOrElseUpdate(exactKey, {
-            val df = SparkEntry.queries(exactKey)(spark, sfDir)
-              .select(cols.head, cols.tail: _*).localCheckpoint(true)
-            (df.count(), df)
-          })
-          val got = SparkEntry.queries(approx)(spark, sfDir)
-            .select(cols.head, cols.tail: _*)
-          if (nExact == 0L) -1.0
-          else {
-            val perQuery = exact.groupBy("query_id")
-              .agg(count(lit(1)).as("n_exact"))
-              .join(exact.join(got, cols).groupBy("query_id")
-                .agg(count(lit(1)).as("n_hit")), Seq("query_id"), "left")
-            perQuery
-              .agg(avg(coalesce(col("n_hit"), lit(0L)) / col("n_exact")))
-              .first().getDouble(0)
-          }
+          val exact = exactCache.getOrElseUpdate(exactKey,
+            RecallFloors.neighborSets(SparkEntry.queries(exactKey)(spark, sfDir)))
+          if (exact.isEmpty) -1.0
+          else RecallFloors.macroRecall(
+            RecallFloors.neighborSets(SparkEntry.queries(approx)(spark, sfDir)),
+            exact)
         } catch { case scala.util.control.NonFatal(e) =>
           System.err.println(s"[bench] recall($approx) failed: ${e.getMessage}")
           -1.0

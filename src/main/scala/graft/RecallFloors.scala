@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+
 /** The approximate-ANN tier contract: each driver key, its exact
   * anchor key, and the recall@10 FLOOR it must clear at sf0.1.
   *
@@ -17,6 +19,30 @@ package graft
   * tuning drift.
   */
 object RecallFloors {
+  /** Each query's neighbour set in a top-k relation with
+    * (query_id, neighbor_id) columns, collected to the driver (the
+    * relations are O(queries·k) rows). */
+  def neighborSets(topk: DataFrame): Map[Long, Set[Long]] =
+    topk.select("query_id", "neighbor_id").collect()
+      .groupBy(_.getLong(0))
+      .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
+
+  /** recall@k as every consumer of the floors measures it: per query
+    * of `exact`, the share of its exact neighbours `approx` returned
+    * (0 for a query `approx` lacks), averaged over those queries. The
+    * divisor is the query's own exact set size, so a query whose
+    * anchor returns fewer than k rows (a sparse filter) still scores
+    * on [0, 1]. */
+  def macroRecall(approx: Map[Long, Set[Long]],
+                  exact: Map[Long, Set[Long]]): Double =
+    // .toSeq before .map: mapping the key SET would dedup equal
+    // per-query recalls (all on the 1/k grid) before the sum
+    exact.keys.toSeq.map { q =>
+      val truth = exact(q)
+      approx.getOrElse(q, Set.empty[Long]).intersect(truth).size.toDouble /
+        truth.size
+    }.sum / exact.size
+
   /** approx driver key -> (exact anchor driver key, recall floor). */
   val tiers: Seq[(String, String, Double)] = Seq(
     // r10: margin-ordered multiprobe (16×8×4) lifted 0.575 → 0.710;

@@ -16,151 +16,38 @@ object SweepMain {
         sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
       .cache()
     val queries = emb.filter(col("vec_id") % 100 === 0)
-    def sets(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
-      df.collect().groupBy(_.getLong(0))
-        .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-    val exact = sets(Similarity.bruteForceTopK(emb, queries, k = 10))
-    // .toSeq before .map: mapping over the KEY SET would collapse
-    // queries with EQUAL per-query recall (all on the 1/k grid) into
-    // one element before the sum — a silent undercount that skewed
-    // every pre-r8 sweep (docs/ANN_SWEEP.md history)
-    def recall(m: Map[Long, Set[Long]]): Double =
-      exact.keys.toSeq.map(q => (m.getOrElse(q, Set.empty[Long])
-        .intersect(exact(q)).size / 10.0)).sum / exact.size
-    // r15 escalation axis: the five sub-0.80 tiers' dials only —
-    // LSH probe-budget at fixed 16×8 geometry, plain-IVF nprobe,
-    // residual-IVF-PQ nprobe (the r13/r14 dial applied to the
-    // stragglers). SPARK_GRAFT_SWEEP=r15 runs ONLY this axis.
-    // r17 escalation axis: the four sub-0.85 stragglers' dials —
-    // rerank depth for the rank-error-bound tiers (PQ, matryoshka,
-    // IVF-PQ; the stage-1 scan is unchanged, the rerank join grows
-    // O(queries·rerank) exact re-reads) and one nprobe step beside
-    // it to confirm the loss is rank error, not cell miss.
-    if (sys.env.get("SPARK_GRAFT_SWEEP").contains("r17")) {
-      println("| PQ m=16 nCodes=32 rerank | recall@10 |")
-      println("| --- | --- |")
-      for (rerank <- Seq(8, 16, 24, 32)) {
-        val r = recall(sets(Similarity.pqTopK(emb, queries, 10, m = 16,
-          nCodes = 32, rerank = rerank)))
-        println(f"| $rerank | $r%.3f |")
-      }
-      println("| Matryoshka prefix=32 rerank | recall@10 |")
-      println("| --- | --- |")
-      for (rerank <- Seq(16, 24, 32)) {
-        val r = recall(sets(Similarity.matryoshkaTopK(emb,
-          k = 10, prefixDims = 32, rerank = rerank)
-          .select("query_id", "neighbor_id")))
-        println(f"| $rerank | $r%.3f |")
-      }
-      println("| IVF-PQ m=16 nCodes=32 nprobe | rerank | recall@10 |")
-      println("| --- | --- | --- |")
-      for (nprobe <- Seq(12, 14); rerank <- Seq(16, 24, 32)) {
-        val r = recall(sets(Similarity.ivfPqTopK(emb, queries, 10,
-          nlist = 16, nprobe = nprobe, m = 16, nCodes = 32,
-          rerank = rerank)))
-        println(f"| $nprobe | $rerank | $r%.3f |")
-      }
-      spark.stop(); return
-    }
-    // r18 escalation axis: the two 0.86 stragglers' own dials.
-    // LSH: probe budget (the r15 dial, two more steps). IVF-PQ
-    // APPEND probe: nprobe on the PERSISTED appended layout (the
-    // build-on-even / append-odd store the driver key reads — the
-    // sweep builds its own scratch copy), rerank held at 16 since
-    // the r11 grid showed the append loss is cell miss, not rank.
-    if (sys.env.get("SPARK_GRAFT_SWEEP").contains("r18")) {
-      println("| LSH tables | planes | probes | budget | recall@10 |")
-      println("| --- | --- | --- | --- | --- |")
-      for ((tables, planes, probes) <- Seq(
-        (16, 8, 8), (16, 8, 10), (16, 8, 12), (16, 9, 10), (20, 9, 10),
-        (24, 9, 10), (24, 9, 12), (28, 9, 10), (20, 8, 8), (24, 8, 6),
-        (24, 8, 8))) {
-        val r = recall(sets(Similarity.lshTopK(emb, queries, 10,
-          tables = tables, planesPerTable = planes, multiprobe = probes)))
-        val budget = tables.toDouble * probes / (1 << planes)
-        println(f"| $tables | $planes | $probes | $budget%.3f | $r%.3f |")
-      }
-      val base = java.nio.file.Files
-        .createTempDirectory("sweep-ivfpq-incr").toString
-      graft.operators.AnnIndex.buildIvfPq(
-        emb.filter(col("vec_id") % 2 === 0), s"$base/ivfpq_incr",
-        m = 16, nCodes = 32)
-      graft.operators.AnnIndex.appendIvfPq(
-        emb.filter(col("vec_id") % 2 =!= 0), s"$base/ivfpq_incr")
-      println("| IVF-PQ APPEND probe nprobe | rerank | recall@10 |")
-      println("| --- | --- | --- |")
-      for (nprobe <- Seq(12, 13, 14); rerank <- Seq(16)) {
-        val r = recall(sets(graft.operators.AnnIndex.probeIvfPq(spark,
-          s"$base/ivfpq_incr", queries, k = 10, nprobe = nprobe,
-          rerank = rerank).select("query_id", "neighbor_id")))
-        println(f"| $nprobe | $rerank | $r%.3f |")
-      }
-      spark.stop(); return
-    }
-    if (sys.env.get("SPARK_GRAFT_SWEEP").contains("r15")) {
-      println("| LSH 16×8 probes | budget | recall@10 |")
-      println("| --- | --- | --- |")
-      for (probes <- Seq(4, 6, 8, 9)) {
-        val r = recall(sets(Similarity.lshTopK(emb, queries, 10,
-          tables = 16, planesPerTable = 8, multiprobe = probes)))
-        println(f"| $probes | ${16.0 * probes / 256}%.3f | $r%.3f |")
-      }
-      println("| IVF nlist=16 nprobe | recall@10 |")
-      println("| --- | --- |")
-      for (nprobe <- Seq(8, 10, 12, 14)) {
-        val r = recall(sets(Similarity.ivfTopK(emb, queries, 10, 16, nprobe)))
-        println(f"| $nprobe | $r%.3f |")
-      }
-      println("| IVF-PQ residual nprobe | rerank | recall@10 |")
-      println("| --- | --- | --- |")
-      for (nprobe <- Seq(8, 12); rerank <- Seq(16)) {
-        val r = recall(sets(Similarity.ivfPqResidualTopK(emb, queries, 10,
-          nlist = 16, nprobe = nprobe, m = 16, nCodes = 32, rerank = rerank,
-          kmeansIters = 1)))
-        println(f"| $nprobe | $rerank | $r%.3f |")
-      }
-      println("| PCA dims | rerank | recall@10 |")
-      println("| --- | --- | --- |")
-      for (rerank <- Seq(8, 16, 24)) {
-        val r = recall(sets(graft.operators.Pca.pcaTopK(emb, queries, 10,
-          pcaDims = 32, rerank = rerank)))
-        println(f"| 32 | $rerank | $r%.3f |")
-      }
-      spark.stop(); return
-    }
+    val exact = RecallFloors.neighborSets(
+      Similarity.bruteForceTopK(emb, queries, k = 10))
+    def recall(approx: org.apache.spark.sql.DataFrame): Double =
+      RecallFloors.macroRecall(RecallFloors.neighborSets(approx), exact)
     // multiprobe axis at FIXED candidate budget: expected candidate
     // fraction ≈ tables·probes/2^planes — all 0.250 rows spend what
     // the r9 driver point (16×6×1) spends; margin-ordered adjacent
     // buckets vs independent tables is the only variable.
-    // SPARK_GRAFT_SWEEP=multiprobe runs ONLY this axis (the full
-    // sweep re-trains every tier — minutes)
     println("| LSH tables | planes | probes | budget | recall@10 |")
     println("| --- | --- | --- | --- | --- |")
     for ((tables, planes, probes) <- Seq(
       (16, 6, 1), (8, 6, 2), (4, 6, 4), (16, 7, 2), (8, 7, 4),
       (4, 7, 8), (8, 8, 8), (16, 8, 4), (8, 7, 2), (16, 8, 2))) {
-      val r = recall(sets(Similarity.lshTopK(emb, queries, 10,
-        tables = tables, planesPerTable = planes, multiprobe = probes)))
+      val r = recall(Similarity.lshTopK(emb, queries, 10,
+        tables = tables, planesPerTable = planes, multiprobe = probes))
       val budget = tables.toDouble * probes / (1 << planes)
       println(f"| $tables | $planes | $probes | $budget%.3f | $r%.3f |")
-    }
-    if (sys.env.get("SPARK_GRAFT_SWEEP").contains("multiprobe")) {
-      spark.stop(); return
     }
     println("| index | nlist | nprobe | m | recall@10 |")
     println("| --- | --- | --- | --- | --- |")
     for (nlist <- Seq(16, 64); nprobe <- Seq(2, 4, 8)) {
-      val r = recall(sets(Similarity.ivfTopK(emb, queries, 10, nlist, nprobe)))
+      val r = recall(Similarity.ivfTopK(emb, queries, 10, nlist, nprobe))
       println(f"| IVF | $nlist | $nprobe | – | $r%.3f |")
     }
     for (m <- Seq(8, 16)) {
-      val r = recall(sets(Similarity.pqTopK(emb, queries, 10, m = m,
-        nCodes = 16, rerank = 4)))
+      val r = recall(Similarity.pqTopK(emb, queries, 10, m = m,
+        nCodes = 16, rerank = 4))
       println(f"| PQ (rerank 4) | – | – | $m | $r%.3f |")
     }
     for (m <- Seq(8, 16); rerank <- Seq(8); nCodes <- Seq(16, 32)) {
-      val r = recall(sets(Similarity.pqTopK(emb, queries, 10, m = m,
-        nCodes = nCodes, rerank = rerank)))
+      val r = recall(Similarity.pqTopK(emb, queries, 10, m = m,
+        nCodes = nCodes, rerank = rerank))
       println(f"| PQ (rerank $rerank, nCodes $nCodes) | – | – | $m | $r%.3f |")
     }
     // LSH axis: bucket width (planes/table) vs table count — recall
@@ -168,15 +55,15 @@ object SweepMain {
     println("| LSH tables | planes | recall@10 |")
     println("| --- | --- | --- |")
     for (tables <- Seq(8, 16); planes <- Seq(5, 6, 8)) {
-      val r = recall(sets(Similarity.lshTopK(emb, queries, 10,
-        tables = tables, planesPerTable = planes)))
+      val r = recall(Similarity.lshTopK(emb, queries, 10,
+        tables = tables, planesPerTable = planes))
       println(f"| $tables | $planes | $r%.3f |")
     }
     for (nprobe <- Seq(4, 8); m <- Seq(8, 16)) {
-      val plain = recall(sets(Similarity.ivfPqTopK(emb, queries, 10,
-        nlist = 16, nprobe = nprobe, m = m)))
-      val res = recall(sets(Similarity.ivfPqResidualTopK(emb, queries, 10,
-        nlist = 16, nprobe = nprobe, m = m)))
+      val plain = recall(Similarity.ivfPqTopK(emb, queries, 10,
+        nlist = 16, nprobe = nprobe, m = m))
+      val res = recall(Similarity.ivfPqResidualTopK(emb, queries, 10,
+        nlist = 16, nprobe = nprobe, m = m))
       println(f"| IVF-PQ plain | 16 | $nprobe | $m | $plain%.3f |")
       println(f"| IVF-PQ residual | 16 | $nprobe | $m | $res%.3f |")
     }
@@ -187,14 +74,14 @@ object SweepMain {
     println("| index | nCodes | rerank | recall@10 |")
     println("| --- | --- | --- | --- |")
     for (nCodes <- Seq(16, 32); rerank <- Seq(4, 8, 16)) {
-      val plain = recall(sets(Similarity.ivfPqTopK(emb, queries, 10,
-        nlist = 16, nprobe = 8, m = 16, nCodes = nCodes, rerank = rerank)))
+      val plain = recall(Similarity.ivfPqTopK(emb, queries, 10,
+        nlist = 16, nprobe = 8, m = 16, nCodes = nCodes, rerank = rerank))
       println(f"| IVF-PQ plain | $nCodes | $rerank | $plain%.3f |")
     }
     for (nCodes <- Seq(16, 32); rerank <- Seq(8, 16)) {
-      val res = recall(sets(Similarity.ivfPqResidualTopK(emb, queries, 10,
+      val res = recall(Similarity.ivfPqResidualTopK(emb, queries, 10,
         nlist = 16, nprobe = 8, m = 16, nCodes = nCodes, rerank = rerank,
-        kmeansIters = 1)))
+        kmeansIters = 1))
       println(f"| IVF-PQ residual | $nCodes | $rerank | $res%.3f |")
     }
     // codebook-size axis: residual coding error vs code budget
@@ -202,8 +89,8 @@ object SweepMain {
     println("| index | nprobe | m | nCodes | recall@10 |")
     println("| --- | --- | --- | --- | --- |")
     for (nCodes <- Seq(8, 16, 64); m <- Seq(8, 16)) {
-      val r = recall(sets(Similarity.ivfPqResidualTopK(emb, queries, 10,
-        nlist = 16, nprobe = 4, m = m, nCodes = nCodes)))
+      val r = recall(Similarity.ivfPqResidualTopK(emb, queries, 10,
+        nlist = 16, nprobe = 4, m = m, nCodes = nCodes))
       println(f"| IVF-PQ residual | 4 | $m | $nCodes | $r%.3f |")
     }
     // PCA axis: projected-space cosine pre-pass — pcaDims sets the
@@ -211,8 +98,8 @@ object SweepMain {
     println("| index | pcaDims | rerank | recall@10 |")
     println("| --- | --- | --- | --- |")
     for (pcaDims <- Seq(16, 32, 48); rerank <- Seq(4, 8)) {
-      val r = recall(sets(graft.operators.Pca.pcaTopK(emb, queries, 10,
-        pcaDims = pcaDims, rerank = rerank)))
+      val r = recall(graft.operators.Pca.pcaTopK(emb, queries, 10,
+        pcaDims = pcaDims, rerank = rerank))
       println(f"| PCA pre-pass | $pcaDims | $rerank | $r%.3f |")
     }
     // cell-balance axis: does k-means training buy a flatter index

@@ -146,8 +146,8 @@ private[graft] object LakeKeys extends Family("lake_") {
     // (synthetic per-row payload, exact integers — the orders
     // fixture carries no text column) and the pruning stats the
     // written footers would carry; LakeSpec closes the loop —
-    // fileSkippingOf over this manifest reproduces fileSkipping's
-    // z-order skip rates
+    // fileSkipping's probes replayed over this manifest reproduce
+    // its z-order skip rates
     Key("lake_zorder_apply")((s, dir) =>
       graft.sources.Lake.zorderApply(
         ordersGrid16(s, dir,

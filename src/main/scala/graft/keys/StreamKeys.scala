@@ -90,8 +90,7 @@ private[graft] object StreamKeys extends Family("stream_") {
       val bench = TextAnalysis.synthIntakeCorpus(
         Tables.documents(s, dir).filter(col("doc_id") % 97 === 0))
       val (store, bloom) = sharedQualityDupStore(s, dir)
-      graft.streaming.DocStream.fullIntakeGate(docs, bench, store,
-        bloom = Some(bloom))
+      graft.streaming.DocStream.fullIntakeGate(docs, bench, store, bloom)
     }) {
       // every intake gate composed over the INTAKE fixture (raw
       // text + per-doc-unique stop-word tails, lined): quality score
@@ -176,7 +175,7 @@ private[graft] object StreamKeys extends Family("stream_") {
     Key("stream_dup_span_scrub")((s, dir) => {
       val (store, bloom) = sharedDupStore(s, dir)
       graft.streaming.DocStream.dupSpanScrub(Tables.documents(s, dir),
-        store, bloom = Some(bloom))
+        store, bloom)
     })(
       CurationKeys.docsDupSpansApply.sql),
     // the corpus-duplication gate at STREAM intake (r13): new docs
@@ -187,14 +186,14 @@ private[graft] object StreamKeys extends Family("stream_") {
     Key("stream_dup_ngram_gate")((s, dir) => {
       val (store, bloom) = sharedDupStore(s, dir)
       graft.streaming.DocStream.dupNgramGate(Tables.documents(s, dir),
-        store, bloom = Some(bloom))
+        store, bloom)
     })(
       // the intake gate computes the SAME relation by definition (the
       // store probe reproduces the coverage chain exactly), so the
       // batch gate's oracle is this key's oracle verbatim
       CurationKeys.docsDupNgramApply.sql),
-    // streaming near-exact gate, batch-folded (min-id per signature;
-    // the deployment form is dropDuplicates("sig") under a watermark)
+    // near-exact gate on the full signature, batch-folded (min-id
+    // per signature)
     Key("stream_sig_dedup")((s, dir) =>
       Dedup.signatureDedup(Tables.documents(s, dir)))(
       // full-signature grouping over the replayed minhash state

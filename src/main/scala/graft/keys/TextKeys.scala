@@ -264,8 +264,7 @@ private[graft] object TextKeys extends Family("text_") {
     // calibration form (r17): graduated from rows-only — the
     // lined-corpus anchors replay in DuckDB, the two booleans pin
     // the engine's OWN deflate kernel (format-feasibility band +
-    // planted-copy back-reference claim); the raw-ratio operator
-    // (compressionSignal) stays the user surface, spec-held
+    // planted-copy back-reference claim)
     Key("text_compression_signal")((s, dir) =>
       TextAnalysis.compressionCalibration(Tables.documents(s, dir)))(
       // calibration form (r17): zlib has no DuckDB twin, so the

@@ -1888,13 +1888,12 @@ object Analytics {
   }
 
   /** Each distinct (user, day) pair fanned out to the `days` target
-    * days it makes active: `cols` are selected over
-    * (user_id, day, i), i the offset in days, and must name
-    * `target_day`; target days are semi-joined to the days present.
-    * The fan-out and the present-days spine share the pinned
-    * relation.
+    * days it makes active (target days semi-joined to the days
+    * present; the fan-out and the present-days spine share the pinned
+    * relation), collapsed to (target_day, user) with the day-0 marker
+    * as `active_today`.
     */
-  private def activeDayFanOut(events: DataFrame, days: Int)(cols: Column*): DataFrame = {
+  private def activeUserDays(events: DataFrame, days: Int): DataFrame = {
     val userDays = events
       .select(col("user_id"), to_date(col("ts")).as("day"))
       .distinct()
@@ -1903,19 +1902,13 @@ object Analytics {
     userDays
       .select(col("user_id"), col("day"),
         explode(sequence(lit(0), lit(days - 1))).as("i"))
-      .select(cols: _*)
-      .join(present, Seq("target_day"), "left_semi")
-  }
-
-  /** The exact (target_day, user) collapse of [[activeDayFanOut]],
-    * carrying the day-0 marker as `active_today`.
-    */
-  private def activeUserDays(events: DataFrame, days: Int): DataFrame =
-    activeDayFanOut(events, days)(col("user_id"), col("day"),
+      .select(col("user_id"), col("day"),
         date_add(col("day"), col("i")).as("target_day"),
         when(col("i") === 0, 1L).otherwise(0L).as("is_today"))
+      .join(present, Seq("target_day"), "left_semi")
       .groupBy("target_day", "user_id")
       .agg(max("is_today").as("active_today"))
+  }
 
   /** Daily + trailing-window distinct actives (DAU / WAU /
     * stickiness) — the hard sliding op done the scale-safe way:
@@ -2049,35 +2042,13 @@ object Analytics {
         round(col("cum") / col("total"), 6).as("cum_share"))
   }
 
-  /** [[rollingActiveUsers]]'s 100 TB twin as a FIRST-CLASS key, not
-    * a comment: the same bounded ×days fan-out of the deduplicated
-    * user-day relation, but the exact (target_day, user) collapse —
-    * whose shuffle carries every user-day pair — is replaced by
-    * per-day HLL sketches (`approx_count_distinct`, rsd ~2%) built
-    * directly from the fan-out's map-side partials: ONE aggregate
-    * with two fixed-size sketch states per day, nothing user-grained
-    * ever shuffles. Same output shape (day, wau, dau); ApproxSpec
-    * bounds the error against the exact key. The day-0 marker
-    * becomes a null-gated second sketch (nulls don't enter HLL).
-    */
-  def rollingActiveUsersApprox(events: DataFrame, days: Int = 7,
-                               rsd: Double = 0.02): DataFrame = {
-    activeDayFanOut(events, days)(col("user_id"),
-        date_add(col("day"), col("i")).as("target_day"), col("i"))
-      .groupBy(col("target_day").as("day"))
-      .agg(
-        approx_count_distinct(col("user_id"), rsd).as("wau_approx"),
-        approx_count_distinct(
-          when(col("i") === 0, col("user_id")), rsd).as("dau_approx"))
-  }
-
   /** Rolling-actives CALIBRATION — [[EventOps.sketchCalibration]]'s
     * pattern over the WAU/DAU tier, graduating the approx key from
     * rows-only to a full oracle: per day, the EXACT anchor columns
     * ([[rollingActiveUsers]] — wau, dau) plus engine-agnostic
-    * boolean claims that the engine's OWN per-day HLL route
-    * ([[rollingActiveUsersApprox]], the no-user-grain-shuffle 100 TB
-    * path) lands within tolerance of each. Raw estimates can never
+    * boolean claims that the engine's OWN per-day HLL sketches
+    * (`approx_count_distinct`, rsd ~2%) land within tolerance of
+    * each. Raw estimates can never
     * hash across engines; the claims can, because each engine checks
     * ITS sketches against the SAME exact anchor. Tolerance
     * `max(2, exact·tolPct/100)` integer-exact on both engines;
@@ -2091,10 +2062,9 @@ object Analytics {
     // own HLL estimates side by side. The sketches read the COLLAPSED
     // relation, which changes nothing: HLL register updates are
     // idempotent, so the sketch of the deduplicated (day, user) set
-    // is bit-identical to rollingActiveUsersApprox's over the raw
-    // fan-out — the boolean still scores the sketch route. Fusing
-    // drops the approx tier's second fan-out chain and the day join
-    // a naive twin-query composition pays.
+    // is bit-identical to one over the raw fan-out — the boolean
+    // still scores the sketch route. Fusing drops a second fan-out
+    // chain and the day join a naive twin-query composition pays.
     activeUserDays(events, days)
       .groupBy(col("target_day").as("day"))
       .agg(

@@ -146,9 +146,8 @@ object Curation {
     * exchange carries |sources|·cap rows — a crawl where one domain
     * is 30% of 100 TB costs O(cap) aggregation state, where a window
     * formulation would sort-shuffle that whole domain through one
-    * task. Deterministic → oracle-checked; the window twin
-    * [[sourceCapWindow]] shares the result (spec-held parity, same
-    * pattern as the other agg/window twins).
+    * task. Deterministic → oracle-checked; CurationSpec holds it
+    * equal to the `row_number` window formulation.
     */
   def sourceCap(docs: DataFrame, cap: Int = 40,
                 scored: Option[DataFrame] = None): DataFrame =
@@ -551,21 +550,6 @@ object Curation {
         col("tok_offset") + coalesce(sum("n_tokens").over(w), lit(0L)))
       .filter(col("cum_excl") < tokenBudget)
       .select("doc_id", "n_tokens", "quality_score")
-  }
-
-  /** [[sourceCap]] as a window — result-identical reference
-    * formulation (fine when no source is skewed; the agg twin is the
-    * 100 TB default). */
-  def sourceCapWindow(docs: DataFrame, cap: Int = 40): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("source")
-      .orderBy(col("quality_score").desc, col("doc_id"))
-    docs
-      .join(TextAnalysis.stats(docs).select("doc_id", "quality_score"),
-        Seq("doc_id"))
-      .withColumn("rank_in_source", row_number().over(w).cast("long"))
-      .filter(col("rank_in_source") <= cap)
-      .select("source", "rank_in_source", "doc_id", "quality_score")
   }
 
   /** Per-(source, drop-reason) accounting of the SAME pass — the

@@ -58,11 +58,9 @@ object DataSplit {
     // a cut of 1.0 maps to "g" (> every hex key): otherwise the
     // "ffffffff" key tail would fall past a full-weight split into
     // whatever zero-weight splits trail it
-    def cutLit(cut: Double): String =
-      if (cut >= 1.0) "g" else Sampling.hexThreshold(cut)
     val label = weights.zip(cuts).foldRight(lit(weights.last._1)) {
       case (((name, _), cut), fallback) =>
-        when(key < lit(cutLit(cut)), name).otherwise(fallback)
+        when(key < lit(Sampling.thresholdLit(cut)), name).otherwise(fallback)
     }
     df.withColumn("split", label)
   }
@@ -219,13 +217,12 @@ object DataSplit {
                     nShards: Int = 8, salt: String = "epoch0"): DataFrame = {
     require(nShards >= 1, s"need at least one shard, got $nShards")
     val cuts = (1 to nShards).map(i => i.toDouble / nShards)
-    def cutLit(cut: Double): String =
-      if (cut >= 1.0) "g" else Sampling.hexThreshold(cut)
     // shard compares against the MATERIALIZED key column — folding
     // over the md5 expression itself would re-hash per threshold
     val shard = (0 until nShards).zip(cuts)
       .foldRight(lit((nShards - 1).toLong)) { case ((i, cut), fallback) =>
-        when(col("shuffle_key") < lit(cutLit(cut)), i.toLong).otherwise(fallback)
+        when(col("shuffle_key") < lit(Sampling.thresholdLit(cut)), i.toLong)
+          .otherwise(fallback)
       }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("shard").orderBy(col("shuffle_key"), col(idCol))
@@ -291,23 +288,13 @@ object DataSplit {
             salt: String = "cv42"): DataFrame = {
     require(k >= 2, s"need at least two folds, got $k")
     val cuts = (1 to k).map(i => i.toDouble / k)
-    def cutLit(cut: Double): String =
-      if (cut >= 1.0) "g" else Sampling.hexThreshold(cut)
     val fold = (0 until k).zip(cuts)
       .foldRight(lit((k - 1).toLong)) { case ((i, cut), fallback) =>
-        when(col("cv_key") < lit(cutLit(cut)), i.toLong).otherwise(fallback)
+        when(col("cv_key") < lit(Sampling.thresholdLit(cut)), i.toLong)
+          .otherwise(fallback)
       }
     df.withColumn("cv_key", Sampling.sampleKey(col(idCol), salt))
       .withColumn("fold", fold)
       .drop("cv_key")
-  }
-
-  /** Convenience: materialized per-split frames. */
-  def splits(df: DataFrame, idCol: String,
-             weights: Seq[(String, Double)], seed: Long = 42L): Map[String, DataFrame] = {
-    val assigned = assign(df, idCol, weights, seed)
-    weights.map { case (name, _) =>
-      name -> assigned.filter(col("split") === name).drop("split")
-    }.toMap
   }
 }

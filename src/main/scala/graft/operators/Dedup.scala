@@ -313,48 +313,22 @@ object Dedup {
     pairSummary(docs, minhashPairs(shingles, numPerms, bands, tau, seed),
       "jaccard")
 
-  /** The full-signature column both [[signatureDedup]] forms key
-    * on — ONE expression builder, so the batch fold and the
-    * streaming dropDuplicates can never silently diverge on
-    * (shingleSize, numPerms, seed). */
-  private def signatureCol(shingleSize: Int, numPerms: Int,
-                           seed: Long): org.apache.spark.sql.Column =
-    gf.minhashSignature(
-      array_distinct(gf.tokenShingleHashes(col("text"), shingleSize)),
-      numPerms, seed)
-
   /** Near-exact dedup on the FULL minhash signature: documents whose
     * 64 permuted minima ALL collide have (w.h.p.) near-identical
     * shingle sets — a much tighter test than any single band, tuned
     * for the "same doc, trivial perturbation" tier between exact
-    * dedup and banded LSH. The batch form keeps the min-id survivor
-    * per signature with its copy count; the STREAMING twin is
-    * `docs.withColumn("sig", …).dropDuplicates("sig")` under a
-    * watermark (state = one row per distinct signature — fingerprint
-    * bytes, never text), which keeps the first ARRIVAL instead of
-    * the min id: the deterministic batch fold here is the oracle
-    * form, the arrival-order stream is the deployment form
-    * (StreamingSpec pins that both drop the same duplicates).
+    * dedup and banded LSH. Keeps the min-id survivor per signature
+    * with its copy count.
     */
   def signatureDedup(docs: DataFrame, shingleSize: Int = 3,
                      numPerms: Int = 64, seed: Long = 42L): DataFrame =
     docs.select(col("doc_id"),
-      signatureCol(shingleSize, numPerms, seed).as("sig"))
+      gf.minhashSignature(
+        array_distinct(gf.tokenShingleHashes(col("text"), shingleSize)),
+        numPerms, seed).as("sig"))
       .groupBy("sig")
       .agg(min("doc_id").as("doc_id"), count(lit(1)).as("n_copies"))
       .select("doc_id", "n_copies")
-
-  /** The streaming form of [[signatureDedup]]: first arrival per
-    * signature survives. Works identically on a batch frame (where
-    * "first" is partition order — use the batch fold when
-    * determinism matters). Same knobs, same defaults, same shared
-    * signature expression as the batch twin. */
-  def signatureDedupStream(docs: DataFrame, shingleSize: Int = 3,
-                           numPerms: Int = 64, seed: Long = 42L): DataFrame =
-    docs.select(col("doc_id"), col("text"),
-      signatureCol(shingleSize, numPerms, seed).as("sig"))
-      .dropDuplicates("sig")
-      .select("doc_id")
 
   /** EXACT set-similarity self-join via PREFIX FILTERING (the
     * AllPairs/PPJoin candidate principle) — the lossless complement

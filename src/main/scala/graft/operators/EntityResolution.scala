@@ -140,39 +140,29 @@ object EntityResolution {
       .filter(col("bn") <= maxBlock).drop("bn")
 
   /** Pigeonhole pre-filter for `lev ≤ 1` (PassJoin's partition rule
-    * at maxLev=1): ONE edit leaves either the first 8 or the last 8
-    * characters untouched (an edit at position p shares the p−1-char
-    * prefix and the end-aligned suffix beyond it; for
-    * `max(len) ≥ 16`, one of the two is ≥ 8). Two codegen'd string
-    * equalities replace the O(len·band) DP on the overwhelming
-    * majority of block candidates — distinct customers differ in the
-    * MIDDLE syllables, so both probes miss. EXACT: a necessary
-    * condition only (the survivors still score real Levenshtein),
-    * guarded to maxLev=1 and longer-side ≥ 16 (shorter strings pass
-    * straight to the DP — an edit can touch both 8-grams). */
-  private def levOnePrefilter(normA: Column, normB: Column,
-                              lenA: Column, lenB: Column): Column =
-    levOneGramPrefilter(
-      substring(normA, 1, 8), substring(normB, 1, 8),
-      substring(normA, -8, 8), substring(normB, -8, 8), lenA, lenB)
-
-  /** The pigeonhole rule itself, over already-extracted 8-grams —
-    * the ONE site that owns the 16-char guard and the
-    * prefix-or-suffix disjunction (both [[levOnePrefilter]] and the
-    * precomputed-gram path in [[entityPairs]] route here, so a
-    * retune of the threshold or gram width cannot drift between the
-    * two result-identical paths). */
+    * at maxLev=1), over the records' first and last 8 characters:
+    * ONE edit leaves either the first 8 or the last 8 characters
+    * untouched (an edit at position p shares the p−1-char prefix and
+    * the end-aligned suffix beyond it; for `max(len) ≥ 16`, one of
+    * the two is ≥ 8). Two codegen'd string equalities replace the
+    * O(len·band) DP on the overwhelming majority of block candidates
+    * — distinct customers differ in the MIDDLE syllables, so both
+    * probes miss. EXACT: a necessary condition only (the survivors
+    * still score real Levenshtein), guarded to maxLev=1 and
+    * longer-side ≥ 16 (shorter strings pass straight to the DP — an
+    * edit can touch both 8-grams). The ONE site that owns the
+    * 16-char guard and the prefix-or-suffix disjunction. */
   private def levOneGramPrefilter(p8a: Column, p8b: Column,
                                   s8a: Column, s8b: Column,
                                   lenA: Column, lenB: Column): Column =
     when(greatest(lenA, lenB) < 16, lit(true))
       .otherwise(p8a === p8b || s8a === s8b)
 
-  /** [[levOnePrefilter]] with the 8-grams PRECOMPUTED per record
-    * (columns `p8`/`s8` from [[withLevOneGrams]]) — the per-pair
-    * work is then two binary comparisons instead of four substring
-    * allocations, which matters when the block join fans out to
-    * millions of candidates. */
+  /** The 8-grams of [[levOneGramPrefilter]] PRECOMPUTED per record
+    * (columns `p8`/`s8`) — the per-pair work is then two binary
+    * comparisons instead of four substring allocations, which
+    * matters when the block join fans out to millions of
+    * candidates. */
   private def withLevOneGrams(n: DataFrame): DataFrame =
     n.withColumn("p8", substring(col("norm"), 1, 8))
       .withColumn("s8", substring(col("norm"), -8, 8))
@@ -182,7 +172,7 @@ object EntityResolution {
     * matches, labeled `exact_norm` when normalization alone closed
     * the gap. Output: (rec_a, rec_b, lev, rule), rec_a < rec_b.
     * `maxBlock` caps each block's participants (see [[capBlocks]]);
-    * at maxLev=1 the [[levOnePrefilter]] prunes candidates before
+    * at maxLev=1 the [[levOneGramPrefilter]] prunes candidates before
     * the DP (result-identical — spec-held). */
   def entityPairs(recs: DataFrame, maxLev: Int = 1,
                   maxBlock: Int = 256): DataFrame = {

@@ -890,27 +890,6 @@ object EventOps {
         contained(0.99, col("lt99"), col("le99")).as("p99_within_tol"))
   }
 
-  /** [[userLifespan]] with `percentile_approx` — the 100 TB form as
-    * a FIRST-CLASS twin: exact `percentile` buffers every value per
-    * group (the whole |users|-row lifespan column on one reducer for
-    * this single-group rollup), while the KLL-style approx sketch
-    * holds bounded state at `accuracy` and merges associatively, so
-    * the rollup stays one partial-aggregating pass no matter how
-    * large the user base grows. Same output shape (approx percentile
-    * of an integer column is integer-valued, cast to double to match
-    * the exact twin's schema); ApproxSpec bounds the rank error
-    * against the exact profile.
-    */
-  def userLifespanApprox(events: DataFrame, accuracy: Int = 10000): DataFrame =
-    userLifespans(events)
-      .agg(
-        count(lit(1)).as("n_users"),
-        Seq(
-          approxLifespan(0.5, accuracy).as("p50_lifespan_days"),
-          approxLifespan(0.9, accuracy).as("p90_lifespan_days"),
-          approxLifespan(0.99, accuracy).as("p99_lifespan_days"))
-          ++ lifespanMeans: _*)
-
   /** Weekly cohort retention matrix — THE product-analytics
     * artifact: users cohorted by first-activity week, each
     * (cohort_week, week_offset) cell carrying how many of the

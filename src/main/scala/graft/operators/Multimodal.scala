@@ -1681,13 +1681,6 @@ object Multimodal {
       audioSigPairs(sigs, maxHamming, bands, maxBucket)
         .withColumn("sim", lit(63) - col("hamming")), "sim")
 
-  /** True when the leading bytes carry the RIFF/WAVE container magic
-    * the JDK's `javax.sound.sampled` reader decodes. */
-  def isWavMagic(b: Array[Byte]): Boolean =
-    b.length >= 12 &&
-      b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F' &&
-      b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E'
-
   case class AudioFeatures(doc_id: Long, n_samples: Long, rms: Double,
                            peak_abs: Long, zero_crossings: Long)
 

@@ -99,7 +99,7 @@ object Sampling {
     * greater than every lowercase-hex key, so a full-keep stratum
     * keeps the 2^-32 tail ("ffffffff" keys) a strict `< "ffffffff"`
     * compare would drop. */
-  private def thresholdLit(rate: Double): String =
+  private[operators] def thresholdLit(rate: Double): String =
     if (rate >= 1.0) "g" else hexThreshold(rate)
 
   /** Stratified Bernoulli sample: per-stratum keep-rates (e.g.

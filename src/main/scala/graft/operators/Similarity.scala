@@ -626,29 +626,13 @@ object Similarity {
     * what actually centers the codebook on the residual
     * distribution (and is where the residual layout's tighter
     * variance pays off). One scan per iteration; only the m·k·subDim
-    * matrix reaches the driver.
+    * matrix reaches the driver. Runs over an ALREADY-prepared
+    * training relation (same split as [[trainCentroidsOn]]);
+    * `corpus`/`knownN` feed only the deterministic codebook INIT
+    * ([[trainResidualCodebooks]]' pickCentroids cut, which samples
+    * the full corpus).
     */
-  def trainResidualCodebooksKMeans(corpus: DataFrame,
-                                   centroids: Array[Array[Float]],
-                                   m: Int = 8, k: Int = 16, dim: Int = 64,
-                                   iters: Int = 2,
-                                   sampleCap: Int = 4096): Array[Array[Array[Float]]] = {
-    val sampled = trainSample(corpus, sampleCap)
-    val thinned = sampled ne corpus
-    val trainOn = if (thinned) sampled.cache() else sampled
-    val cbs = trainResidualCodebooksKMeansOn(trainOn, corpus, centroids,
-      m, k, dim, iters)
-    if (thinned) trainOn.unpersist(false)
-    cbs
-  }
-
-  /** The refinement loop of [[trainResidualCodebooksKMeans]] over an
-    * ALREADY-prepared training relation (same split as
-    * [[trainCentroidsOn]]); `corpus`/`knownN` feed only the
-    * deterministic codebook INIT ([[trainResidualCodebooks]]'
-    * pickCentroids cut, which samples the full corpus). Identical
-    * arithmetic, identical codebooks. */
-  private[operators] def trainResidualCodebooksKMeansOn(
+  private[graft] def trainResidualCodebooksKMeansOn(
       trainOn: DataFrame, corpus: DataFrame,
       centroids: Array[Array[Float]], m: Int, k: Int, dim: Int,
       iters: Int, knownN: Long = -1L): Array[Array[Array[Float]]] = {
@@ -1253,8 +1237,8 @@ object Similarity {
     * the exhaustive fan-out. Returned LAZY — the direct branch only
     * ever folds it into the one plan-choice action; the pruned
     * branch checkpoints it before its three readers. */
-  private def bm25SampleTheta(posts: DataFrame, qPosts: DataFrame,
-                              k: Int, sampleMod: Int): DataFrame = {
+  private[graft] def bm25SampleTheta(posts: DataFrame, qPosts: DataFrame,
+                                     k: Int, sampleMod: Int): DataFrame = {
     val samplePosts = posts
       .filter(pmod(col("doc_id"), lit(sampleMod)) === lit(1 % sampleMod))
     val wS = Window.partitionBy("query_id")
@@ -1271,47 +1255,12 @@ object Similarity {
         (col("s") - lit(1e-6) - abs(col("s")) * lit(1e-9)).as("theta"))
   }
 
-  /** Plan-shape readout for [[bm25MaxScoreTopK]] (test/diagnostic
-    * surface): the volume estimate's inputs and the block-max
-    * pruning rates on a given corpus, so a spec can PROVE the pruned
-    * branch engages on a Zipf-shaped vocabulary — essential postings
-    * a small fraction of Σdf, blocks pruned, estimate choosing
-    * pruned — rather than the 100× story resting on the estimator
-    * alone. */
-  private[graft] case class MaxScoreEstimate(
-      vDirect: Long, vPruned: Long, essPostings: Long,
-      blocksTotal: Long, blocksSurviving: Long) {
-    def usePruned: Boolean = vPruned <= vDirect
-  }
-
-  private[graft] def bm25MaxScoreEstimate(
-      posts: DataFrame, queryMod: Int = 100, k: Int = 10,
-      sampleMod: Int = 50, blockSize: Int = 16): MaxScoreEstimate = {
-    val qPosts = posts.filter(col("doc_id") % queryMod === 0)
-      .select(col("tok"), col("doc_id").as("query_id"))
-    val theta = bm25SampleTheta(posts, qPosts, k, sampleMod)
-      .localCheckpoint(true)
-    val qTok = bm25QTok(posts, qPosts, theta)
-    val nDocs = posts.agg(countDistinct(col("doc_id")).as("n_docs"))
-    val vols = bm25Volumes(qTok, nDocs)
-    val blk = bm25SurvivingBlocks(posts, qPosts, theta, blockSize)
-      .agg(count(lit(1)).as("surv")).head().getAs[Long]("surv")
-    val blkTotal = qPosts.join(
-        posts.select(col("tok"),
-          expr(s"doc_id div $blockSize").as("blk")).distinct(), Seq("tok"))
-      .select("query_id", "blk").distinct().count()
-    val ess = qTok.filter(col("cum") >= col("theta"))
-      .agg(coalesce(sum("df"), lit(0L)).as("e")).head().getAs[Long]("e")
-    MaxScoreEstimate(vols.getAs[Long]("v_direct"),
-      vols.getAs[Long]("v_pruned"), ess, blkTotal, blk)
-  }
-
   /** Query-token relation carrying everything the bounds need: the
     * global per-token upper bound `ub`, document frequency `df`, the
     * query's θ (−∞ when the sample pass found < k candidates) and
     * the ascending-ub running total `cum`. */
-  private def bm25QTok(posts: DataFrame, qPosts: DataFrame,
-                       theta: DataFrame): DataFrame = {
+  private[graft] def bm25QTok(posts: DataFrame, qPosts: DataFrame,
+                              theta: DataFrame): DataFrame = {
     // ub and df ride ONE aggregate over the postings — two separate
     // groupBys would be two shuffles of the same relation
     val ubDf = posts.groupBy("tok")
@@ -1332,7 +1281,7 @@ object Similarity {
     * candidate re-expansion Σ_q [Σ_ess df + min(Σ_ess df, N)·|toks|].
     * (Block-max pruning only SHRINKS the pruned branch further, so
     * the estimate is conservative toward direct.) */
-  private def bm25Volumes(qTok: DataFrame, nDocs: DataFrame) =
+  private[graft] def bm25Volumes(qTok: DataFrame, nDocs: DataFrame) =
     qTok.groupBy("query_id").agg(
         sum("df").as("v_all"),
         sum(when(col("cum") >= col("theta"), col("df")).otherwise(0L))
@@ -1360,9 +1309,9 @@ object Similarity {
     * a candidate pair reached through token t ∈ q∩B always has a
     * bound row (bound ≥ bub(t,B) > 0), so a semi-join against this
     * relation is lossless. */
-  private def bm25SurvivingBlocks(posts: DataFrame, qPosts: DataFrame,
-                                  theta: DataFrame,
-                                  blockSize: Int): DataFrame = {
+  private[graft] def bm25SurvivingBlocks(posts: DataFrame, qPosts: DataFrame,
+                                         theta: DataFrame,
+                                         blockSize: Int): DataFrame = {
     // integer `div`, never float division: doc_id can exceed 2^53 at
     // corpus scale and a double quotient would alias distinct blocks
     val bub = posts

@@ -1406,10 +1406,7 @@ object TextAnalysis {
     // small fraction of the corpus; the oracle replays the same md5
     // filter, so sampling costs no checkability)
     val profileDocs =
-      if (profileRate >= 1.0) withGrams
-      else withGrams.filter(
-        Sampling.sampleKey(col("doc_id"), "trigram_profile")
-          < lit(Sampling.hexThreshold(profileRate)))
+      Sampling.hashSample(withGrams, "doc_id", profileRate, "trigram_profile")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("lang").orderBy(col("n").desc, col("trigram"))
     val profile = profileDocs
@@ -1433,19 +1430,6 @@ object TextAnalysis {
         round(col("n_profile_hits") / col("n_trigrams"), 6))
   }
 
-  /** DISTINCT space-joined token n-grams from an already-tokenized
-    * array column — the shared gram extractor for [[decontaminate]]
-    * and the streaming curation gate. Pass a toks column bound to
-    * its own projection (the expression references it several
-    * times; an inline `tokens(text)` would re-split per reference).
-    */
-  def ngramArrayFromToks(toks: Column, n: Int): Column =
-    when(size(toks) >= n,
-      array_distinct(transform(
-        sequence(lit(0), size(toks) - n),
-        i => array_join(slice(toks, i + lit(1), lit(n)), " "))))
-      .otherwise(array().cast("array<string>"))
-
   /** Benchmark decontamination: flag corpus documents sharing any
     * token n-gram with a held-out benchmark set (here: a deterministic
     * doc_id slice standing in for an eval suite). The real-world
@@ -1459,8 +1443,8 @@ object TextAnalysis {
     */
   def decontaminate(docs: DataFrame, n: Int = 3, benchMod: Int = 97): DataFrame = {
     // gram extraction runs as the fused codegen'd kernel
-    // (gf.tokenNgrams); [[ngramArrayFromToks]] is the SQL-spelling
-    // twin, parity spec-held in FunctionsSpec
+    // (gf.tokenNgrams); TextPropertySpec holds it equal to the
+    // interpreted SQL-HOF spelling
     def grams(d: DataFrame): DataFrame =
       d.select(col("doc_id"),
         explode(graft.functions.gf.tokenNgrams(col("text"), n)).as("gram"))
@@ -1687,32 +1671,18 @@ object TextAnalysis {
         max("n_tokens").as("max_tokens"))
 
   /** Compressibility quality signal — the Gopher/RefinedWeb-style
-    * low-entropy filter: per doc, the deflate compressed÷raw byte
-    * ratio (codegen'd [[graft.functions.gf.deflateRatio]] kernel;
-    * registered in SQL as `deflate_ratio`). Templated/repetitive
-    * text compresses far below natural prose, catching machine-
-    * generated boilerplate the token-level heuristics miss. Pure
-    * per-row map — no shuffle at any scale; zlib has no DuckDB
-    * twin, so the driver key is rows-only with the invariants
-    * (repetition ⇒ lower ratio, determinism, flag threshold)
-    * spec-held.
-    */
-  def compressionSignal(docs: DataFrame, flagBelow: Double = 0.35): DataFrame =
-    docs.select(col("doc_id"), col("source"),
-      length(col("text")).cast("long").as("n_chars_text"),
-      graft.functions.gf.deflateRatio(col("text")).as("deflate_ratio"))
-      .withColumn("is_low_entropy", col("deflate_ratio") < flagBelow)
-
-  /** CALIBRATION form of [[compressionSignal]] (r17) — what
-    * graduates the driver key from rows-only to a full oracle. zlib
-    * itself will never replay in DuckDB, but the calibration pattern
-    * doesn't need it to: the key runs over the [[synthLinedCorpus]]
-    * fixture (the dup-mass machinery — `doc_id % dupMod = 0` docs
-    * carry an EXACT copy of their first paragraph), emits exact
-    * anchors both engines compute (doc_id, source, final-text char
-    * length via the shared lined-corpus replay) and two boolean
-    * claims about the engine's OWN deflate kernel, TRUE by
-    * construction on a working zlib and falsified by a broken one:
+    * low-entropy filter's deflate compressed÷raw byte ratio
+    * ([[graft.functions.gf.deflateRatio]], SQL `deflate_ratio`) in
+    * CALIBRATION form (r17), which gives the driver key a full
+    * oracle. zlib itself will never replay in DuckDB, but the
+    * calibration pattern doesn't need it to: the key runs over the
+    * [[synthLinedCorpus]] fixture (the dup-mass machinery —
+    * `doc_id % dupMod = 0` docs carry an EXACT copy of their first
+    * paragraph), emits exact anchors both engines compute (doc_id,
+    * source, final-text char length via the shared lined-corpus
+    * replay) and two boolean claims about the engine's OWN deflate
+    * kernel, TRUE by construction on a working zlib and falsified
+    * by a broken one:
     *
     *  - `ratio_format_band`: the compressed size sits inside raw
     *    deflate's FEASIBLE band — `[max(2, n/1100), n + 16 +

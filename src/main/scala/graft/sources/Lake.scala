@@ -155,8 +155,8 @@ object Lake {
     * carry. Lossless at both grains by construction — the routing is
     * a partition of the input (row identity) and `sum(bytes)`
     * telescopes (byte conservation) — and `LakeSpec` proves both,
-    * plus the loop-closer: [[fileSkippingOf]] over THIS manifest
-    * reproduces [[fileSkipping]]'s z-order skip rates exactly
+    * plus the loop-closer: [[fileSkipping]]'s probes replayed over
+    * THIS manifest reproduce its z-order skip rates exactly
     * (plan → apply → measured skip-rate, nothing hypothetical left).
     */
   def zorderApply(df: DataFrame, dimNames: Seq[String], byteCol: Column,
@@ -167,35 +167,6 @@ object Lake {
       .agg(count(lit(1)).as("n_rows"),
         sum(col("__bytes")).as("bytes") +: dimBounds(dimNames): _*)
       .withColumnRenamed("file_bucket", "file_id")
-
-  /** Probe replay against an EXISTING post-layout manifest — the
-    * loop-closer behind [[zorderApply]]: the same deterministic
-    * range-probe workload and the same [min, max]-intersects-band
-    * hit test as [[fileSkipping]], but consuming a manifest relation
-    * (`minCol`/`maxCol` = the probed dim's per-file stats) instead
-    * of rebuilding layouts from data. Metadata-sized end to end:
-    * the manifest is O(2^bucketBits) rows and the probes broadcast.
-    */
-  def fileSkippingOf(manifest: DataFrame, minCol: String, maxCol: String,
-                     bitsPerDim: Int = 16, probes: Int = 8,
-                     probeWidth: Long = 512): DataFrame = {
-    require(probes >= 1 && probeWidth >= 1, "need a non-empty workload")
-    val step = (1L << bitsPerDim) / probes
-    val probesDf = manifest.sparkSession.range(probes)
-      .select(col("id").as("probe_id"), (col("id") * step).as("lo"),
-        (col("id") * step + probeWidth - 1).as("hi"))
-    val nf = manifest.agg(count(lit(1)).as("n_files"))
-    manifest
-      .select(col(minCol).as("min_p"), col(maxCol).as("max_p"))
-      .crossJoin(broadcast(probesDf))
-      .groupBy("probe_id", "lo", "hi")
-      .agg(sum(when(col("min_p") <= col("hi") &&
-        col("max_p") >= col("lo"), 1L).otherwise(0L)).as("files_hit"))
-      .crossJoin(broadcast(nf))
-      .withColumn("skip_rate",
-        (col("n_files") - col("files_hit")) / col("n_files"))
-      .select("probe_id", "lo", "hi", "n_files", "files_hit", "skip_rate")
-  }
 
   /** File-SKIPPING estimator — the "why" readout behind
     * [[zorderPlan]]: for the same table, same quantized dims and the
@@ -261,9 +232,9 @@ object Lake {
     * The written FOOTERS then carry the min/max stats the modeled
     * manifest predicted — [[footerManifest]] reads them back without
     * touching a data page, and `LakeSpec` proves the loop: footer
-    * stats ≡ [[zorderApply]]'s manifest stats, and
-    * [[fileSkippingOf]] over the footer manifest reproduces the
-    * modeled skip rates exactly. Sink contract only (the driver keys
+    * stats ≡ [[zorderApply]]'s manifest stats, and the probes
+    * replayed over the footer manifest reproduce the modeled skip
+    * rates exactly. Sink contract only (the driver keys
     * stay on the metadata relations, like SalesJdbc). */
   def writeZorderApplied(df: DataFrame, dimNames: Seq[String], path: String,
                          bitsPerDim: Int = 16, bucketBits: Int = 6): Unit = {

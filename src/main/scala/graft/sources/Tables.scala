@@ -16,10 +16,6 @@ import graft.SharedArtifacts
   * this scan rather than materializing full tables.
   */
 object Tables {
-  val All: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Inferred schemas, one per (session, table file): inference reads
     * parquet footers in a Spark job, and a session's keys load the same
     * few files again and again. An entry keeps the file's

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, GroupState, OutputMode}
+import org.apache.spark.util.sketch.BloomFilter
 
 import graft.operators.TextAnalysis
 
@@ -103,10 +104,10 @@ object DocStream extends Serializable {
     * batch composition of the same gate relations is the oracle.
     */
   def fullIntakeGate(docs: DataFrame, bench: DataFrame, store: DataFrame,
-                     n: Int = 8, minTokens: Long = 20L,
+                     bloom: BloomFilter, n: Int = 8, minTokens: Long = 20L,
                      maxTokens: Long = 100000L, minQuality: Double = 0.2,
-                     benchMod: Int = 97, maxDupFrac: Double = 0.5,
-                     bloom: Option[org.apache.spark.util.sketch.BloomFilter] = None): DataFrame = {
+                     benchMod: Int = 97,
+                     maxDupFrac: Double = 0.5): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val benchGrams = bench
@@ -136,7 +137,7 @@ object DocStream extends Serializable {
       .filter(_._4)
       .map(t => (t._1, t._2, t._3))
       .toDF("doc_id", "source", "text")
-    dupNgramGate(s2, store, n, maxDupFrac, bloom)
+    dupNgramGate(s2, store, bloom, n, maxDupFrac)
       .filter(col("keep"))
       .select("doc_id", "source")
   }
@@ -228,29 +229,6 @@ object DocStream extends Serializable {
                         dup_chars: Long, dup_char_fraction: Double,
                         keep: Boolean)
 
-  /** Broadcast-Bloom pre-filter over the store's gram set — the
-    * r14 cut on the intake grammers' honest explode-every-gram cost:
-    * a CLEAN document's grams now die map-side against ~1.2
-    * bytes/gram of Bloom bits (FNV-1a hashes, 1% FPP) instead of
-    * probing the broadcast store hash relation; only might-match
-    * rows (true matches + FPP) reach the join, which then drops the
-    * false positives — results exactly unchanged, so both intake
-    * gates keep sharing their batch twins' oracles verbatim
-    * (`q3_bloom_pruned` precedent). At real intake rates this is
-    * also the broadcast-budget story: the Bloom is ~100× smaller
-    * than the gram strings, so the pre-filter keeps working at store
-    * sizes where broadcasting the strings would already have fallen
-    * to a shuffle. Returns `grams` unchanged when the store is
-    * empty-by-construction races aside (an empty Bloom rejects
-    * everything — correct: nothing can match an empty store). */
-  private[graft] def bloomPruneGrams(grams: DataFrame, store: DataFrame,
-                                     n: Int = 8,
-                                     bloom: Option[org.apache.spark.util.sketch.BloomFilter] = None): DataFrame = {
-    val bf = bloom.getOrElse(storeBloom(store, n))
-    grams.filter(
-      graft.functions.gf.bloomMightContain(gramHash(col("ng"), n), bf))
-  }
-
   /** The Bloom key of one space-joined n-gram string: the SAME
     * separator-mixed shingle hash [[graft.functions.gf.shingleHashes]]
     * computes over a token array — so the document side can probe
@@ -261,12 +239,17 @@ object DocStream extends Serializable {
   private def gramHash(ng: org.apache.spark.sql.Column, n: Int) =
     element_at(graft.functions.gf.shingleHashes(split(ng, " "), n), 1)
 
-  /** Build the store's Bloom (two driver actions over the gram set).
-    * Production persists this next to the store itself — a nightly
-    * artifact, not a per-batch cost — which is exactly how the
-    * driver keys consume it (built once per (session, dir)). */
-  def storeBloom(store: DataFrame,
-                 n: Int = 8): org.apache.spark.util.sketch.BloomFilter = {
+  /** Build the store's Bloom (two driver actions over the gram set):
+    * FNV-1a gram hashes at 1% FPP, ~1.2 bytes/gram, ~100× smaller
+    * than the gram strings, so it keeps broadcasting at store sizes
+    * where the strings would already have fallen to a shuffle. An
+    * empty store's Bloom rejects everything — correct: nothing can
+    * match an empty store. Production persists this next to the
+    * store itself — a nightly artifact, not a per-batch cost — which
+    * is exactly how the driver keys consume it (built once per
+    * (session, dir)); every gate takes it as an argument, built with
+    * the gate's `n`. */
+  def storeBloom(store: DataFrame, n: Int = 8): BloomFilter = {
     val nGrams = store.count()
     store
       .select(gramHash(col("ng"), n).as("h"))
@@ -280,7 +263,7 @@ object DocStream extends Serializable {
   /** The docs of `base` with at least `n` tokens, each with `cand`:
     * the start positions whose n-gram hash might be in `bf`. */
   private def bloomCandidates(base: DataFrame, n: Int,
-                              bf: org.apache.spark.util.sketch.BloomFilter): DataFrame =
+                              bf: BloomFilter): DataFrame =
     base
       .filter(size(col("toks")) >= n)
       // the hash array is the HOF's INPUT child (evaluated once per
@@ -317,9 +300,8 @@ object DocStream extends Serializable {
     * union so gram-less and match-less documents still emit
     * keep = true.
     */
-  def dupNgramGate(docs: DataFrame, store: DataFrame, n: Int = 8,
-                   maxDupFrac: Double = 0.5,
-                   bloom: Option[org.apache.spark.util.sketch.BloomFilter] = None): DataFrame = {
+  def dupNgramGate(docs: DataFrame, store: DataFrame, bloom: BloomFilter,
+                   n: Int = 8, maxDupFrac: Double = 0.5): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions.broadcast
@@ -338,8 +320,7 @@ object DocStream extends Serializable {
     // positions (true matches + ~1% FPP) materialize, and the store
     // join then drops the false positives, so results are exactly
     // unchanged and the batch twin's oracle still applies verbatim.
-    val bf = bloom.getOrElse(storeBloom(store, n))
-    val pruned = bloomCandidates(base, n, bf)
+    val pruned = bloomCandidates(base, n, bloom)
       .select(col("doc_id"), col("source"), col("tok_chars"),
         explode(org.apache.spark.sql.functions.transform(col("cand"),
           i => struct(
@@ -421,9 +402,8 @@ object DocStream extends Serializable {
     * operator's payload, not overhead); matched rows carry only
     * (start).
     */
-  def dupSpanScrub(docs: DataFrame, store: DataFrame,
-                   n: Int = 8,
-                   bloom: Option[org.apache.spark.util.sketch.BloomFilter] = None): DataFrame = {
+  def dupSpanScrub(docs: DataFrame, store: DataFrame, bloom: BloomFilter,
+                   n: Int = 8): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions.broadcast
@@ -433,8 +413,7 @@ object DocStream extends Serializable {
     // r14: same in-array Bloom position filter as [[dupNgramGate]] —
     // clean documents' positions never build a gram string or an
     // exploded row; the store join drops the ~1% FPP survivors
-    val bf = bloom.getOrElse(storeBloom(store, n))
-    val matched = bloomCandidates(base, n, bf)
+    val matched = bloomCandidates(base, n, bloom)
       .select(col("doc_id"), col("source"),
         explode(org.apache.spark.sql.functions.transform(col("cand"),
           i => struct(

@@ -43,11 +43,16 @@ object StreamingLoad {
         val target = new Path(path)
         val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val staging = new Path(target.getParent, s"_${target.getName}.staging")
-        val merged =
-          if (fs.exists(target))
-            RetailEtl.upsertSummary(spark.read.parquet(path), batch, keys)
-          else batch
-        merged.write.mode("overwrite").parquet(staging.toString)
+        // the merge plans the batch twice (the union and the
+        // anti-join's key side): persisted, the source is read once
+        batch.persist()
+        try {
+          val merged =
+            if (fs.exists(target))
+              RetailEtl.upsertSummary(spark.read.parquet(path), batch, keys)
+            else batch
+          merged.write.mode("overwrite").parquet(staging.toString)
+        } finally batch.unpersist()
         fs.delete(target, true)
         if (!fs.rename(staging, target))
           throw new IOException(s"cannot rename $staging to $target")

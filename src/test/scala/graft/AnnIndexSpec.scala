@@ -204,8 +204,8 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("delete probe holds the survivor recall floor at the driver point") {
-    // recall@10 vs exact brute force over the SURVIVOR corpus, the
-    // same macro-mean metric as RecallFloors — measured ≥ the plain
+    // recall@10 vs exact brute force over the SURVIVOR corpus
+    // (RecallFloors.macroRecall) — measured ≥ the plain
     // IVF tier's floor (identical pick, nprobe=12, ~14% of
     // candidates masked)
     val sf01 = "/root/testdata/sf0.01"
@@ -215,16 +215,11 @@ class AnnIndexSpec extends SparkSpec {
     val deadPred = col("vec_id") % 7 === 3
     AnnIndex.buildIvf(corpus, s"$base/ivf")
     AnnIndex.deleteIvf(corpus.filter(deadPred).select("vec_id"), s"$base/ivf")
-    def sets(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1)))
-        .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val exact = sets(Similarity.bruteForceTopK(
+    val exact = RecallFloors.neighborSets(Similarity.bruteForceTopK(
       corpus.filter(!deadPred), queries))
-    val got = sets(AnnIndex.probeIvf(spark, s"$base/ivf", queries,
-      nprobe = 12, maskDeletes = true))
-    val recall = exact.keys.toSeq.map(q =>
-      got.getOrElse(q, Set.empty[Long]).intersect(exact(q)).size
-        .toDouble / exact(q).size).sum / exact.size
+    val got = RecallFloors.neighborSets(AnnIndex.probeIvf(spark,
+      s"$base/ivf", queries, nprobe = 12, maskDeletes = true))
+    val recall = RecallFloors.macroRecall(got, exact)
     assert(recall >= 0.88, f"survivor recall $recall%.3f under the 0.88 floor")
   }
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-
 /** HARD recall gate over the approximate-ANN driver keys: every tier
   * in [[RecallFloors.tiers]] must clear its floor at sf0.1, measured
   * through `SparkEntry.queries` itself — so a mistuned driver
@@ -9,37 +7,24 @@ import org.apache.spark.sql.DataFrame
   * bench contract line trends the same numbers; this spec is what
   * makes a silent collapse (the pre-r8 LSH rot, 0.575 → 0.16) loud.
   *
-  * Metric: per-query macro-mean recall@k against the tier's exact
-  * anchor — identical definition to SweepMain / Bench, so floor,
-  * trend, and sweep doc are all one number.
+  * Metric: [[RecallFloors.macroRecall]] against the tier's exact
+  * anchor — the one definition SweepMain and Bench also call, so
+  * floor, trend, and sweep doc are all one number.
   */
 class AnnRecallGateSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.1"
 
-  private def sets(df: DataFrame): Map[Long, Set[Long]] =
-    df.select("query_id", "neighbor_id").collect()
-      .groupBy(_.getLong(0))
-      .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-
   // each anchor is evaluated once, shared across its tiers
   private lazy val anchors: Map[String, Map[Long, Set[Long]]] =
     RecallFloors.tiers.map(_._2).distinct
-      .map(k => k -> sets(SparkEntry.queries(k)(spark, dir))).toMap
-
-  private def macroRecall(approx: Map[Long, Set[Long]],
-                          exact: Map[Long, Set[Long]]): Double =
-    // .toSeq before .map: the key-SET would dedup equal per-query
-    // recalls (all on the 1/k grid) before the mean
-    exact.keys.toSeq.map { q =>
-      val truth = exact(q)
-      approx.getOrElse(q, Set.empty[Long]).intersect(truth).size.toDouble /
-        truth.size
-    }.sum / exact.size
+      .map(k => k -> RecallFloors.neighborSets(SparkEntry.queries(k)(spark, dir)))
+      .toMap
 
   RecallFloors.tiers.foreach { case (approxKey, anchorKey, floor) =>
     test(s"$approxKey recall >= $floor vs $anchorKey at sf0.1") {
-      val r = macroRecall(sets(SparkEntry.queries(approxKey)(spark, dir)),
+      val r = RecallFloors.macroRecall(
+        RecallFloors.neighborSets(SparkEntry.queries(approxKey)(spark, dir)),
         anchors(anchorKey))
       info(f"$approxKey recall@10 = $r%.3f (floor $floor)")
       assert(r >= floor, f"$approxKey recall $r%.3f below floor $floor")

@@ -241,6 +241,23 @@ class CurationSpec extends SparkSpec {
     }
   }
 
+  /** [[Curation.sourceCap]] as a window — the result-identical
+    * reference formulation (fine when no source is skewed; the agg
+    * form is the 100 TB default). */
+  private def sourceCapWindow(docs: org.apache.spark.sql.DataFrame,
+                              cap: Int): org.apache.spark.sql.DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("source")
+      .orderBy(col("quality_score").desc, col("doc_id"))
+    docs
+      .join(graft.operators.TextAnalysis.stats(docs)
+        .select("doc_id", "quality_score"), Seq("doc_id"))
+      .withColumn("rank_in_source",
+        org.apache.spark.sql.functions.row_number().over(w).cast("long"))
+      .filter(col("rank_in_source") <= cap)
+      .select("source", "rank_in_source", "doc_id", "quality_score")
+  }
+
   test("source cap: bounded-heap agg equals the window twin, cap holds") {
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
@@ -248,7 +265,7 @@ class CurationSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getLong(1)) ->
         (r.getLong(2), r.getDouble(3))).toMap
     val agg = keyed(Curation.sourceCap(docs, cap = 7))
-    val win = keyed(Curation.sourceCapWindow(docs, cap = 7))
+    val win = keyed(sourceCapWindow(docs, cap = 7))
     assert(agg == win, "agg and window formulations must be result-identical")
     // at most `cap` docs per source, ranks dense from 1
     val bySource = agg.keys.groupBy(_._1).view.mapValues(_.map(_._2).toSeq.sorted)

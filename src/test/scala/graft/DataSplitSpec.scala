@@ -21,8 +21,9 @@ class DataSplitSpec extends SparkSpec {
   }
 
   test("splits are disjoint and complete with ~correct proportions") {
-    val s = DataSplit.splits(ids, "id", weights)
-    val counts = s.map { case (k, df) => k -> df.count() }
+    val assigned = DataSplit.assign(ids, "id", weights)
+    val counts = weights.map { case (k, _) =>
+      k -> assigned.filter(col("split") === k).count() }.toMap
     assert(counts.values.sum == 10000L)
     assert(math.abs(counts("train") - 8000L) < 400, s"train ${counts("train")}")
     assert(math.abs(counts("val") - 1000L) < 200, s"val ${counts("val")}")

@@ -15,6 +15,35 @@ class LakeSpec extends SparkSpec {
   private def executedPlan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** Probe replay against an EXISTING post-layout manifest — the
+    * loop-closer behind [[Lake.zorderApply]]: the same deterministic
+    * range-probe workload and the same [min, max]-intersects-band
+    * hit test as [[Lake.fileSkipping]], but consuming a manifest
+    * relation (`minCol`/`maxCol` = the probed dim's per-file stats)
+    * instead of rebuilding layouts from data.
+    */
+  private def fileSkippingOf(manifest: org.apache.spark.sql.DataFrame,
+                             minCol: String, maxCol: String,
+                             bitsPerDim: Int, probes: Int,
+                             probeWidth: Long): org.apache.spark.sql.DataFrame = {
+    require(probes >= 1 && probeWidth >= 1, "need a non-empty workload")
+    val step = (1L << bitsPerDim) / probes
+    val probesDf = manifest.sparkSession.range(probes)
+      .select(col("id").as("probe_id"), (col("id") * step).as("lo"),
+        (col("id") * step + probeWidth - 1).as("hi"))
+    val nf = manifest.agg(count(lit(1)).as("n_files"))
+    manifest
+      .select(col(minCol).as("min_p"), col(maxCol).as("max_p"))
+      .crossJoin(broadcast(probesDf))
+      .groupBy("probe_id", "lo", "hi")
+      .agg(sum(when(col("min_p") <= col("hi") &&
+        col("max_p") >= col("lo"), 1L).otherwise(0L)).as("files_hit"))
+      .crossJoin(broadcast(nf))
+      .withColumn("skip_rate",
+        (col("n_files") - col("files_hit")) / col("n_files"))
+      .select("probe_id", "lo", "hi", "n_files", "files_hit", "skip_rate")
+  }
+
   private def dropTable(name: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS $name")
     // the in-memory catalog forgets managed tables between JVMs but
@@ -253,7 +282,7 @@ class LakeSpec extends SparkSpec {
     // the loop-closer: probing the POST-layout manifest reproduces
     // fileSkipping's z-order rows exactly — the plan's promised skip
     // rates are the applied layout's measured ones
-    val measured = Lake.fileSkippingOf(manifest, "min_y", "max_y",
+    val measured = fileSkippingOf(manifest, "min_y", "max_y",
         bitsPerDim = 10, probes = 4, probeWidth = 16).collect()
       .map(r => r.getLong(0) -> (r.getLong(3), r.getLong(4), r.getDouble(5)))
       .toMap
@@ -304,11 +333,11 @@ class LakeSpec extends SparkSpec {
     // one physical file per planned bucket (the repartition contract)
     assert(fromFooters.size == modeled.size)
     // and the measured-from-REAL-files skip rates equal the modeled ones
-    val real = Lake.fileSkippingOf(
+    val real = fileSkippingOf(
         Lake.footerManifest(spark, path, Seq("x", "y")), "min_y", "max_y",
         bitsPerDim = 10, probes = 4, probeWidth = 16).collect()
       .map(r => r.getLong(0) -> r.getDouble(5)).toMap
-    val model = Lake.fileSkippingOf(
+    val model = fileSkippingOf(
         Lake.zorderApply(data, Seq("x", "y"), col("row_bytes"),
           bitsPerDim = 10, bucketBits = 4), "min_y", "max_y",
         bitsPerDim = 10, probes = 4, probeWidth = 16).collect()

@@ -555,9 +555,10 @@ class PlanSpec extends SparkSpec {
     val docs = Tables.documents(spark, dir)
     val ta = graft.operators.TextAnalysis
     val store = ta.dupNgramStore(ta.dupNgramDupOcc(ta.dupNgramToks(docs)))
+    val bloom = graft.streaming.DocStream.storeBloom(store)
     Seq(
-      graft.streaming.DocStream.dupNgramGate(docs, store),
-      graft.streaming.DocStream.dupSpanScrub(docs, store)
+      graft.streaming.DocStream.dupNgramGate(docs, store, bloom),
+      graft.streaming.DocStream.dupSpanScrub(docs, store, bloom)
     ).foreach { df =>
       val p = plan(df)
       assert(p.contains("BroadcastHashJoin"),

@@ -23,6 +23,9 @@ class SimilaritySpec extends SparkSpec {
   private lazy val exact: Map[Long, Set[Long]] =
     topkSets(Similarity.bruteForceTopK(emb, queries, k = 10))
 
+  private def recall(m: Map[Long, Set[Long]]): Double =
+    RecallFloors.macroRecall(m, exact)
+
   test("bruteForceTopK matches a driver-side reference computation") {
     val all = emb.select($"vec_id", $"embedding").as[(Long, Seq[Float])].collect()
     def cos(a: Seq[Float], b: Seq[Float]): Double = {
@@ -239,6 +242,41 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  /** The volume estimate's inputs and the block-max pruning rates
+    * of [[Similarity.bm25MaxScoreTopK]] on a given corpus, so a spec
+    * can PROVE the pruned branch engages on a Zipf-shaped vocabulary
+    * — essential postings a small fraction of Σdf, blocks pruned,
+    * estimate choosing pruned — rather than the 100× story resting
+    * on the estimator alone. */
+  private case class MaxScoreEstimate(
+      vDirect: Long, vPruned: Long, essPostings: Long,
+      blocksTotal: Long, blocksSurviving: Long) {
+    def usePruned: Boolean = vPruned <= vDirect
+  }
+
+  private def bm25MaxScoreEstimate(posts: DataFrame, queryMod: Int, k: Int,
+                                   sampleMod: Int,
+                                   blockSize: Int): MaxScoreEstimate = {
+    import org.apache.spark.sql.functions._
+    val qPosts = posts.filter(col("doc_id") % queryMod === 0)
+      .select(col("tok"), col("doc_id").as("query_id"))
+    val theta = Similarity.bm25SampleTheta(posts, qPosts, k, sampleMod)
+      .localCheckpoint(true)
+    val qTok = Similarity.bm25QTok(posts, qPosts, theta)
+    val nDocs = posts.agg(countDistinct(col("doc_id")).as("n_docs"))
+    val vols = Similarity.bm25Volumes(qTok, nDocs)
+    val blk = Similarity.bm25SurvivingBlocks(posts, qPosts, theta, blockSize)
+      .agg(count(lit(1)).as("surv")).head().getAs[Long]("surv")
+    val blkTotal = qPosts.join(
+        posts.select(col("tok"),
+          expr(s"doc_id div $blockSize").as("blk")).distinct(), Seq("tok"))
+      .select("query_id", "blk").distinct().count()
+    val ess = qTok.filter(col("cum") >= col("theta"))
+      .agg(coalesce(sum("df"), lit(0L)).as("e")).head().getAs[Long]("e")
+    MaxScoreEstimate(vols.getAs[Long]("v_direct"),
+      vols.getAs[Long]("v_pruned"), ess, blkTotal, blk)
+  }
+
   test("bm25MaxScoreTopK: pruned branch ENGAGES on a Zipf vocabulary") {
     // the 100x pruning story must not rest on the volume estimator
     // alone: on a Zipf-shaped corpus (few broad tokens, a long tail
@@ -251,7 +289,7 @@ class SimilaritySpec extends SparkSpec {
     val rows = (0L until 600L).map(i =>
       (i, s"filler common${i % 3} mid${i % 40} rare${i % 300}"))
     val posts = SharedTrunks.bm25Postings(rows.toDF("doc_id", "text"))
-    val est = Similarity.bm25MaxScoreEstimate(posts, queryMod = 100,
+    val est = bm25MaxScoreEstimate(posts, queryMod = 100,
       k = 2, sampleMod = 7, blockSize = 8)
     assert(est.usePruned,
       s"estimate must pick pruned: v_pruned=${est.vPruned} " +
@@ -342,10 +380,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("k-means training does not hurt IVF recall") {
-    def recall(m: Map[Long, Set[Long]]): Double =
-      exact.keys.toSeq.map(q =>
-        (m.getOrElse(q, Set.empty) intersect exact(q)).size / 10.0)
-        .sum / exact.size
     val naive = recall(topkSets(
       Similarity.ivfTopK(emb, queries, k = 10, nlist = 8, nprobe = 4)))
     val trained = recall(topkSets(
@@ -356,10 +390,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("PQ ANN achieves reasonable recall and rerank improves it") {
-    def recall(m: Map[Long, Set[Long]]): Double =
-      exact.keys.toSeq.map(q =>
-        (m.getOrElse(q, Set.empty) intersect exact(q)).size / 10.0)
-        .sum / exact.size
     val reranked = recall(topkSets(
       Similarity.pqTopK(emb, queries, k = 10, m = 8, nCodes = 16, rerank = 4)))
     assert(reranked >= 0.5, s"PQ recall $reranked too low")
@@ -370,10 +400,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("per-subspace k-means refinement does not hurt PQ recall") {
-    def recall(m: Map[Long, Set[Long]]): Double =
-      exact.keys.toSeq.map(q =>
-        (m.getOrElse(q, Set.empty) intersect exact(q)).size / 10.0)
-        .sum / exact.size
     val init = recall(topkSets(
       Similarity.pqTopK(emb, queries, k = 10, rerank = 4)))
     val refined = recall(topkSets(
@@ -383,10 +409,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("IVF+PQ composed index recalls reasonably; full probe ≈ plain PQ") {
-    def recall(m: Map[Long, Set[Long]]): Double =
-      exact.keys.toSeq.map(q =>
-        (m.getOrElse(q, Set.empty) intersect exact(q)).size / 10.0)
-        .sum / exact.size
     val partial = recall(topkSets(
       Similarity.ivfPqTopK(emb, queries, k = 10, nlist = 8, nprobe = 4)))
     assert(partial >= 0.4, s"IVF+PQ recall $partial too low")
@@ -399,10 +421,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("residual IVF-PQ reconstructs tighter than plain-code IVF-PQ") {
-    def recall(m: Map[Long, Set[Long]]): Double =
-      exact.keys.toSeq.map(q =>
-        (m.getOrElse(q, Set.empty) intersect exact(q)).size / 10.0)
-        .sum / exact.size
     val residual = recall(topkSets(
       Similarity.ivfPqResidualTopK(emb, queries, k = 10, nlist = 8, nprobe = 4)))
     val plain = recall(topkSets(
@@ -415,7 +433,10 @@ class SimilaritySpec extends SparkSpec {
     // reconstruction-error check, like-for-like (both Lloyd-refined,
     // same iters): residual coding must reconstruct tighter
     val cents = Similarity.trainCentroids(emb, 8, iters = 2)
-    val rcbs = Similarity.trainResidualCodebooksKMeans(emb, cents, m = 8, k = 16, iters = 2)
+    // the trainer ivfPqResidualTopK runs; 500 rows sit under its
+    // 4096-row training sample cap, so it trains on the whole corpus
+    val rcbs = Similarity.trainResidualCodebooksKMeansOn(emb, emb, cents,
+      m = 8, k = 16, dim = 64, iters = 2)
     val pcbs = Similarity.trainPqCodebooksKMeans(emb, m = 8, k = 16, iters = 2)
     import org.apache.spark.sql.functions._
     val gf = graft.functions.gf

@@ -85,69 +85,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("signature dedup: streamed first-arrival drops the same dupes as batch min-id") {
-    implicit val sqlCtx = spark.sqlContext
-    val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
-    val batch = graft.operators.Dedup.signatureDedup(docs).collect()
-    val batchKept = batch.map(_.getLong(0)).toSet
-    val nSigs = batch.length
-    assert(nSigs < docs.count(), "sf0.001 plants signature-identical copies")
-
-    val mem = MemoryStream[StreamingSpec.Doc]
-    val q = graft.operators.Dedup.signatureDedupStream(mem.toDF())
-      .writeStream.format("memory").queryName("sig_dedup_test")
-      .outputMode("append").start()
-    try {
-      val rows = docs.collect()
-        .map(r => StreamingSpec.Doc(r.getLong(0), r.getString(1)))
-        .sortBy(_.doc_id)
-      // feed in id order across two micro-batches: first-arrival ==
-      // min-id, so the survivor SETS must agree exactly
-      mem.addData(rows.take(rows.length / 2): _*)
-      q.processAllAvailable()
-      mem.addData(rows.drop(rows.length / 2): _*)
-      q.processAllAvailable()
-      val streamed = spark.table("sig_dedup_test")
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(streamed == batchKept,
-        s"stream (id-ordered) must keep the min-id survivors: " +
-          s"${streamed.size} vs ${batchKept.size}")
-    } finally q.stop()
-  }
-
-  test("signature dedup: non-default knobs thread identically to both twins") {
-    implicit val sqlCtx = spark.sqlContext
-    val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
-    // shared signature expression: the SAME (shingleSize, numPerms,
-    // seed) must reach both forms, or batch/stream equivalence holds
-    // only at the defaults
-    val batchKept = graft.operators.Dedup
-      .signatureDedup(docs, shingleSize = 2, numPerms = 16, seed = 7L)
-      .collect().map(_.getLong(0)).toSet
-    val defaultKept = graft.operators.Dedup.signatureDedup(docs)
-      .collect().map(_.getLong(0)).toSet
-    val mem = MemoryStream[StreamingSpec.Doc]
-    val q = graft.operators.Dedup
-      .signatureDedupStream(mem.toDF(), shingleSize = 2, numPerms = 16,
-        seed = 7L)
-      .writeStream.format("memory").queryName("sig_dedup_knobs_test")
-      .outputMode("append").start()
-    try {
-      mem.addData(docs.collect()
-        .map(r => StreamingSpec.Doc(r.getLong(0), r.getString(1)))
-        .sortBy(_.doc_id): _*)
-      q.processAllAvailable()
-      val streamed = spark.table("sig_dedup_knobs_test")
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(streamed == batchKept,
-        "non-default knobs must produce the batch twin's survivor set")
-      // the knobs actually changed the signature space (2-shingles at
-      // 16 perms collapse more docs than the default 3/64)
-      assert(batchKept != defaultKept,
-        "fixture must distinguish the knob settings")
-    } finally q.stop()
-  }
-
   test("abDailyPartials over MemoryStream: state merges, readout = batch twin") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Event]
@@ -449,6 +386,31 @@ class StreamingSpec extends SparkSpec {
     assert(restarted == once, s"the restarted run's summary: $restarted")
     assert(resumedBatches == Seq(1L),
       s"the restarted query must run only the batch after the committed one: $resumedBatches")
+  }
+
+  test("streaming upsert sink reads each batch once: numInputRows is its rows") {
+    // the merge plans the batch in its union AND its anti-join key
+    // side; a file source read by both reports its rows twice
+    val first = Seq((101L, 1.0, 10.0), (102L, 2.0, 20.0))
+    val second = Seq((102L, 9.0, 90.0), (103L, 3.0, 30.0), (104L, 4.0, 40.0))
+    def write(rows: Seq[(Long, Double, Double)], in: String): Unit =
+      rows.toDF("product_id", "total_quantity", "total_sale_amount")
+        .coalesce(1).write.mode("append").parquet(in)
+    val base = java.nio.file.Files.createTempDirectory("graft_upsert_rows").toString
+    val in = s"$base/in"
+    write(first, in)
+    val q = graft.streaming.StreamingLoad.upsertSink(
+      spark.readStream.schema(spark.read.parquet(in).schema).parquet(in),
+      path = s"$base/summary", checkpoint = s"$base/chk")
+    val inputRows = try {
+      q.processAllAvailable()
+      write(second, in)
+      q.processAllAvailable()
+      q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq
+    } finally q.stop()
+    assert(inputRows == Seq(2L, 3L),
+      s"each batch must report its own rows once: $inputRows")
+    assert(spark.read.parquet(s"$base/summary").count() == 4L)
   }
 
   test("continuous hourly rollup materializes via the upsert sink") {
@@ -953,10 +915,11 @@ class StreamingSpec extends SparkSpec {
       StreamingSpec.LinedDoc(3L, s"lead3 $shared tail3a tail3b", "s1"))
     val docs = corpus.toDF()
     val store = SharedTrunks.dupStore(docs)
+    val bloom = graft.streaming.DocStream.storeBloom(store)
     def fold(rows: Array[org.apache.spark.sql.Row]) = rows
       .map(r => r.getLong(0) ->
         (r.getLong(2), r.getLong(3), r.getString(4))).toMap
-    val batch = fold(graft.streaming.DocStream.dupSpanScrub(docs, store)
+    val batch = fold(graft.streaming.DocStream.dupSpanScrub(docs, store, bloom)
       .collect())
     // the batch run IS docs_dup_spans_apply's relation
     val applyTwin = fold(graft.operators.TextAnalysis.dupSpansApply(docs,
@@ -967,7 +930,7 @@ class StreamingSpec extends SparkSpec {
     assert(batch(0L)._3 == "pre0a pre0b post0a", s"${batch(0L)}")
 
     val mem = MemoryStream[StreamingSpec.LinedDoc]
-    val q = graft.streaming.DocStream.dupSpanScrub(mem.toDF(), store)
+    val q = graft.streaming.DocStream.dupSpanScrub(mem.toDF(), store, bloom)
       .writeStream.format("memory").queryName("scrub_test")
       .outputMode("append").start()
     try {
@@ -1053,10 +1016,11 @@ class StreamingSpec extends SparkSpec {
       StreamingSpec.LinedDoc(3L, "tiny doc here", "s1"))
     val docs = corpus.toDF()
     val store = SharedTrunks.dupStore(docs)
+    val bloom = graft.streaming.DocStream.storeBloom(store)
     def fold(rows: Array[org.apache.spark.sql.Row]) = rows
       .map(r => r.getLong(0) ->
         (r.getLong(2), r.getLong(3), r.getBoolean(5))).toMap
-    val batch = fold(graft.streaming.DocStream.dupNgramGate(docs, store)
+    val batch = fold(graft.streaming.DocStream.dupNgramGate(docs, store, bloom)
       .collect())
     // the batch run IS docs_dup_ngram_apply's relation
     val applyTwin = fold(graft.operators.TextAnalysis.dupNgramApply(
@@ -1068,7 +1032,7 @@ class StreamingSpec extends SparkSpec {
     assert(batch(2L)._2 > 0L, "the minority run must still bill chars")
 
     val mem = MemoryStream[StreamingSpec.LinedDoc]
-    val q = graft.streaming.DocStream.dupNgramGate(mem.toDF(), store)
+    val q = graft.streaming.DocStream.dupNgramGate(mem.toDF(), store, bloom)
       .writeStream.format("memory").queryName("dup_gate_test")
       .outputMode("append").start()
     try {
@@ -1084,36 +1048,6 @@ class StreamingSpec extends SparkSpec {
       assert(ops != null && ops.nonEmpty && ops.forall(_.numRowsTotal == 0),
         s"fold must never write state: ${ops.mkString(",")}")
     } finally q.stop()
-  }
-
-  test("bloomPruneGrams: clean documents' grams die map-side, matches survive") {
-    // the r14 intake cut: a mostly-clean batch's gram rows must be
-    // dropped by the broadcast Bloom BEFORE the store join — only
-    // true matches (+ ≤1% FPP) reach it. 60 all-unique-vocab docs +
-    // one planted shared run against a store built from the corpus.
-    val shared = (1 to 15).map(i => s"dup$i").mkString(" ")
-    val docs = ((0L until 60L).map(d =>
-      (d, (1 to 40).map(i => s"u${d}x$i").mkString(" "), "s")) ++ Seq(
-      (60L, s"$shared " + (1 to 25).map(i => s"a$i").mkString(" "), "s"),
-      (61L, s"$shared " + (1 to 25).map(i => s"b$i").mkString(" "), "s")))
-      .toDF("doc_id", "text", "source")
-    val store = SharedTrunks.dupStore(docs)
-    val grams = docs
-      .select(org.apache.spark.sql.functions.col("doc_id"),
-        org.apache.spark.sql.functions.explode(
-          graft.functions.gf.tokenNgrams(
-            org.apache.spark.sql.functions.col("text"), 8)).as("ng"))
-    val total = grams.count()
-    val pruned = graft.streaming.DocStream.bloomPruneGrams(grams, store)
-    val survivors = pruned.count()
-    val trueMatches = grams.join(store, Seq("ng"), "left_semi").count()
-    assert(survivors >= trueMatches,
-      "the Bloom must never drop a true match (join input would lose rows)")
-    assert(survivors <= trueMatches + (total * 0.02).toLong + 2,
-      s"pre-filter must cut the join input to matches + ~1% FPP: " +
-        s"$survivors of $total (true $trueMatches)")
-    assert(trueMatches < total / 10,
-      s"fixture sanity: the batch must be mostly clean ($trueMatches/$total)")
   }
 
   test("semanticGate streams with ZERO state, matches the batch decontaminator") {
@@ -1159,8 +1093,9 @@ class StreamingSpec extends SparkSpec {
       .localCheckpoint(true)
     val bench = docs.filter($"doc_id" % 97 === 0)
     val store = SharedTrunks.dupStore(docs)
+    val bloom = graft.streaming.DocStream.storeBloom(store)
     val batch = graft.streaming.DocStream
-      .fullIntakeGate(docs, bench, store)
+      .fullIntakeGate(docs, bench, store, bloom)
       .collect().map(_.getLong(0)).toSet
     assert(batch.nonEmpty && batch.size < docs.count(),
       s"the composed gate must keep a proper nonempty subset: ${batch.size}")
@@ -1169,7 +1104,7 @@ class StreamingSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet
     assert(batch.subsetOf(gopherKeep),
       "a gopher-dropped doc must never pass the composition")
-    val dupKeep = graft.streaming.DocStream.dupNgramGate(docs, store)
+    val dupKeep = graft.streaming.DocStream.dupNgramGate(docs, store, bloom)
       .filter($"keep").collect().map(_.getLong(0)).toSet
     assert(batch.subsetOf(dupKeep),
       "a dup-gated doc must never pass the composition")
@@ -1177,7 +1112,8 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => StreamingSpec.LinedDoc(
         r.getLong(0), r.getString(1), r.getString(2)))
     val mem = MemoryStream[StreamingSpec.LinedDoc]
-    val q = graft.streaming.DocStream.fullIntakeGate(mem.toDF(), bench, store)
+    val q = graft.streaming.DocStream.fullIntakeGate(mem.toDF(), bench, store,
+      bloom)
       .writeStream.format("memory").queryName("intake_gate_test")
       .outputMode("append").start()
     try {

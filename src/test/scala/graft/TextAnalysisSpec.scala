@@ -705,24 +705,6 @@ class TextAnalysisSpec extends SparkSpec {
       s"case/tail variants share one prefix: $c")
   }
 
-  test("compressionSignal: repetition compresses, prose does not, flag bites") {
-    val rep = "spam ham " * 200
-    val prose = (1 to 150).map(i => s"w${i * 7919 % 1000}x$i").mkString(" ")
-    val docs = Seq((1L, rep, "a"), (2L, prose, "a")).toDF("doc_id", "text", "source")
-    val got = TextAnalysis.compressionSignal(docs).collect()
-      .map(r => r.getLong(0) -> ((r.getDouble(3), r.getBoolean(4)))).toMap
-    val (rRep, fRep) = got(1L); val (rProse, fProse) = got(2L)
-    assert(rRep < 0.05 && fRep, s"repetitive text must compress hard: $got")
-    assert(rProse > rRep * 5 && !fProse, s"prose must not be flagged: $got")
-    assert(got.values.forall { case (r, _) => r > 0.0 && r < 1.5 },
-      s"ratio sanity: $got")
-    // deterministic across partitionings (pure per-row kernel)
-    val again = TextAnalysis.compressionSignal(docs.repartition(5)).collect()
-      .map(r => r.getLong(0) -> r.getDouble(3)).toMap
-    assert(again == got.map { case (k, (r, _)) => k -> r },
-      "partition-dependent deflate ratio")
-  }
-
   test("compressionCalibration (r17): both claims hold on real docs, " +
     "and the copy claim is DISCRIMINATING — random tails cost full " +
     "price where planted copies cost back-references") {

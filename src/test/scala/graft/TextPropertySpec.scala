@@ -110,7 +110,11 @@ class TextPropertySpec extends SparkSpec {
     val sqlGrams = docs
       .select(col("doc_id"), toksC.as("toks"))
       .select(col("doc_id"),
-        graft.operators.TextAnalysis.ngramArrayFromToks(col("toks"), n).as("fps"))
+        when(size(col("toks")) >= n,
+          array_distinct(transform(
+            sequence(lit(0), size(col("toks")) - n),
+            i => array_join(slice(col("toks"), i + lit(1), lit(n)), " "))))
+          .otherwise(array().cast("array<string>")).as("fps"))
     val kernelGrams = docs.select(col("doc_id"),
       graft.functions.gf.tokenNgrams(col("text"), n).as("fps"))
     def collectOrdered(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[String]] =

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """List public operator defs that nothing in the product calls.
 
-Usage: tools/entrypoints.py [--root DIR]
+Usage: tools/entrypoints.py [--root DIR] [--check DOC]
 
 The scan reads every `.scala` file under
 `src/main/scala/graft/{operators,streaming,sources,functions}` with its
@@ -14,10 +14,17 @@ def is a whole-word occurrence of its name, comments stripped, in a
 `path:line name (N test uses)`, where N counts whole-word occurrences
 of the name under `src/test`, then the number of public defs and of
 uncalled ones.
+
+`--check DOC` reads the markdown table of documented uncalled defs in
+DOC (relative to the current directory): each row whose first two
+cells are `` `Object.name` `` and `` `path` ``. It prints every
+uncalled def no row names, and every row that names no public def of
+that name in that file, and exits 1 if it printed either; else 0.
 """
 import argparse
 import os
 import re
+import sys
 from collections import Counter
 
 SCOPE = ("operators", "streaming", "sources", "functions")
@@ -25,6 +32,7 @@ COMMENT = re.compile(r"//[^\n]*|/\*.*?\*/", re.S)
 DEF = re.compile(r"^([^\n]*?)\bdef\s+([A-Za-z_][A-Za-z0-9_]*)", re.M)
 BARE = re.compile(r"\b(?:private|protected)\b(?!\s*\[)|\boverride\b")
 WORD = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+ROW = re.compile(r"^\|\s*`\w+\.(\w+)`\s*\|\s*`([^`]+)`\s*\|", re.M)
 
 
 def strip(text):
@@ -55,6 +63,7 @@ def words(paths):
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--root", default=".")
+    ap.add_argument("--check", metavar="DOC")
     args = ap.parse_args()
     j = lambda *p: os.path.join(args.root, *p)
     defs = []
@@ -75,7 +84,19 @@ def main():
     for path, line, name, _ in uncalled:
         print(f"{path}:{line} {name} ({tests[name]} test uses)")
     print(f"{len(defs)} public defs, {len(uncalled)} uncalled")
+    if args.check:
+        with open(args.check, encoding="utf-8") as f:
+            rows = {(path, name) for name, path in ROW.findall(f.read())}
+        missing = [d for d in uncalled if (d[0], d[2]) not in rows]
+        public = {(d[0], d[2]) for d in defs}
+        stale = sorted(rows - public)
+        for path, line, name, _ in missing:
+            print(f"not in {args.check}: {path}:{line} {name}")
+        for path, name in stale:
+            print(f"{args.check} names no public def {name} in {path}")
+        return 1 if missing or stale else 0
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
