@@ -1,12 +1,15 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, ExecutionException, Executors}
 
+import scala.annotation.tailrec
 import scala.collection.concurrent.TrieMap
+import scala.util.Try
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.PlanShim
 
 /** The session-scoped store for artifacts that several queries share:
   * one value per (session, artifact, dir).
@@ -20,6 +23,8 @@ import org.apache.spark.sql.SparkSession
   *    tenant) keep their entries until that context ends: there is no
   *    per-session lifecycle event to hook. Reuse a session per
   *    (tenant, dir) instead.
+  *  - Each entry is built once: concurrent misses on one entry run one
+  *    build, and the others wait for it ([[getOrElseUpdate]]).
   *
   * An artifact is a [[SharedArtifacts.Key]]. Keys compare by identity
   * and each name can be claimed once, so two artifacts never read each
@@ -37,27 +42,40 @@ private[graft] object SharedArtifacts {
     new Key[V](name)
   }
 
-  private val store = TrieMap.empty[(SparkSession, Key[_], String), AnyRef]
+  /** A once-only entry: the first read of `value` runs `build`, and a
+    * concurrent read waits for that build instead of starting its own.
+    * A build that throws leaves the cell unbuilt, so the next read
+    * builds it again. */
+  private final class Cell(val stamp: Any, build: => AnyRef) {
+    lazy val value: AnyRef = build
+  }
+
+  private val store = TrieMap.empty[(SparkSession, Key[_], String), Cell]
   // contexts with an eviction listener on their bus; contexts are few
   // and long-lived, so the set stays small
   private val hooked = ConcurrentHashMap.newKeySet[SparkContext]()
 
-  def get[V <: AnyRef](s: SparkSession, k: Key[V], dir: String): Option[V] =
-    store.get((s, k, dir)).map(_.asInstanceOf[V])
-
-  /** The entry for (s, k, dir), built by `build` on a miss. Concurrent
-    * misses may both build; the first insert wins. */
-  def getOrElseUpdate[V <: AnyRef](s: SparkSession, k: Key[V], dir: String)
-                                  (build: => V): V =
-    store.getOrElse((s, k, dir), {
-      beforeInsert(s)
-      store.getOrElseUpdate((s, k, dir), build)
-    }).asInstanceOf[V]
-
-  def put[V <: AnyRef](s: SparkSession, k: Key[V], dir: String, v: V): Unit = {
-    beforeInsert(s)
-    store.put((s, k, dir), v)
-    ()
+  /** The entry for (s, k, dir), built by `build` on a miss. Each entry
+    * is built once: a miss that finds the entry's build running waits
+    * for it. An entry stored with another `stamp` (say, the
+    * [[pathStamp]] of a file since rewritten) is replaced and built
+    * again. A build may read other entries; as long as no entry's
+    * build reads itself through others, no build waits on its own. */
+  def getOrElseUpdate[V <: AnyRef](s: SparkSession, k: Key[V], dir: String,
+                                   stamp: Any = ())(build: => V): V = {
+    val id = (s, k, dir)
+    @tailrec def cell(): Cell = store.get(id) match {
+      case Some(c) if c.stamp == stamp => c
+      case stale =>
+        beforeInsert(s)
+        val fresh = new Cell(stamp, build)
+        val stored = stale match {
+          case None => store.putIfAbsent(id, fresh).isEmpty
+          case Some(old) => store.replace(id, old, fresh)
+        }
+        if (stored) fresh else cell()
+    }
+    cell().value.asInstanceOf[V]
   }
 
   private def beforeInsert(s: SparkSession): Unit = {
@@ -104,21 +122,25 @@ private[graft] object SharedArtifacts {
     ()
   }
 
-  /** Runs each body on a pooled thread and waits for all of them,
-    * rethrowing the first failure. A body submits its Spark jobs into
-    * the scheduler pool paired with it (null: the default pool), and
-    * the pool is cleared in `finally`, so a pooled thread never carries
-    * it onto later work. Under FIFO scheduling the pool is ignored. */
-  def concurrently(sc: SparkContext)(bodies: (String, () => Any)*): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(Future.sequence(bodies.map { case (pool, body) =>
-      Future {
-        sc.setLocalProperty("spark.scheduler.pool", pool)
-        try body() finally sc.setLocalProperty("spark.scheduler.pool", null)
-      }
-    }), Duration.Inf)
-    ()
+  // the threads of [[concurrently]]: a body that waits on a nested
+  // block gets new threads for it, so waits never exhaust the pool
+  private lazy val threads = Executors.newCachedThreadPool { (r: Runnable) =>
+    val t = new Thread(r, "graft-concurrently")
+    t.setDaemon(true)
+    t
+  }
+
+  /** Runs each body on a pooled thread and waits for all of them, then
+    * rethrows the first body's failure, if any. Each body runs in the
+    * caller's Spark context ([[PlanShim.withCallerContext]]): its active
+    * session and its job group, description, tags and scheduler pool,
+    * so a listener bills its jobs to the caller's group, and
+    * `cancelJobGroup` on that group cancels them. */
+  def concurrently(s: SparkSession)(bodies: (() => Any)*): Unit = {
+    val runs = bodies.map(body => PlanShim.withCallerContext(s, threads)(body()))
+    runs.flatMap(r => Try(r.get()).failed.toOption).headOption.foreach {
+      case e: ExecutionException if e.getCause != null => throw e.getCause
+      case e => throw e
+    }
   }
 }

@@ -42,22 +42,22 @@ object SparkEntry {
     * (shingle_sets + blocked_cands build inside blocked_pairs,
     * tf_postings inside bm25_index when the tf trunk isn't built
     * yet, the ann_* build entries inside ann_indexes /
-    * ann_incr_indexes) and the full-run
-    * chains execute CONCURRENTLY, so `shared_prime` is the wall
+    * ann_incr_indexes) and the full-run chains, like the independent
+    * artifacts a cold curation key prefetches ([[keys.Shared.prefetch]]),
+    * execute CONCURRENTLY, so `shared_prime` is the wall
     * clock of the slowest chain, not the sum of entries. Reading it
     * initializes [[keys.Shared]], which claims every artifact name. */
   val primeDetail: scala.collection.concurrent.TrieMap[String, Double] =
     Shared.primeDetail
 
   /** EXCLUSIVE per-store build time: [[primeDetail]] minus any nested
-    * builds triggered on the SAME thread, so a prime regression names
-    * exactly ONE store instead of every ancestor that happened to wrap
-    * it (blocked_pairs' inclusive time moves whenever shingle_sets
-    * does; its exclusive time only moves when the pair verify itself
-    * does). The ann_* children build on their own threads inside
-    * `ann_indexes` / `ann_incr_indexes`, so those parents' exclusive
-    * time equals their wall — a regression there still names the
-    * child, because the child has its own entry. */
+    * builds, so a prime regression names exactly ONE store instead of
+    * every ancestor that happened to wrap it (blocked_pairs' inclusive
+    * time moves whenever shingle_sets does; its exclusive time only
+    * moves when the pair verify itself does). A build that waits on
+    * builds running on other threads (`curate_flags` on gopher_flagged
+    * and dup_ngram_docs, `ann_indexes` / `ann_incr_indexes` on their
+    * ann_* children) sheds the wall time of that wait. */
   val primeSelf: scala.collection.concurrent.TrieMap[String, Double] =
     Shared.primeSelf
 

@@ -442,11 +442,15 @@ private[graft] object CurationKeys extends Family("docs_") {
     // r15: both composition keys read the ONE pinned flags relation
     // (the gate chain materializes once per session, in prime); each
     // key's own cost is its set-shaped stages — near-dup suppression,
-    // cap, budget (full) / the counting aggregate (funnel)
-    Key("docs_curate_full")((s, dir) =>
+    // cap, budget (full) / the counting aggregate (funnel). The flags
+    // and the shingle sets read neither each other, so a cold key
+    // builds them concurrently
+    Key("docs_curate_full") { (s, dir) =>
+      prefetch(s, dir)(sharedCurateFlags, sharedShingleSets)
       operators.Curation.curateFull(Tables.documents(s, dir),
         flags = sharedCurateFlags(s, dir),
-        shingles = sharedShingleSets(s, dir)))(
+        shingles = sharedShingleSets(s, dir))
+    }(
       // the whole nightly pipeline: 20-threshold Gopher gate →
       // quality bounds → exact dedup → corpus-duplication gate →
       // benchmark exclusion → decontamination → near-dup suppression
@@ -463,10 +467,12 @@ private[graft] object CurationKeys extends Family("docs_") {
           |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_excl
           | FROM capped JOIN rsc ON rsc.doc_id = capped.doc_id) f
           |WHERE cum_excl < 5000""")),
-    Key("docs_curate_funnel")((s, dir) =>
+    Key("docs_curate_funnel") { (s, dir) =>
+      prefetch(s, dir)(sharedCurateFlags, sharedShingleSets)
       operators.Curation.curateFunnel(Tables.documents(s, dir),
         flags = sharedCurateFlags(s, dir),
-        shingles = sharedShingleSets(s, dir)))(
+        shingles = sharedShingleSets(s, dir))
+    }(
       // same CTE chain, counted per stage; n_dropped via lag
       (curateFullCtes +
         """, fin AS (SELECT doc_id FROM (
@@ -727,6 +733,7 @@ private[graft] object CurationKeys extends Family("docs_") {
           |FROM qb LEFT JOIN dd ON dd.doc_id = qb.doc_id
           |GROUP BY q_bucket""")),
     Key("docs_curate_incremental")((s, dir) => {
+      prefetch(s, dir)(sharedGopherFlagged, sharedHistDupStore)
       val d = Tables.documents(s, dir)
       // r14: the incremental twin gains the gate families too — the
       // pinned Gopher flag pass (per-doc pure, delta rows read by

@@ -137,13 +137,15 @@ private[graft] object Shared {
   // per-doc gate decision + residual billing — the intake gate table a
   // nightly pipeline persists. Both composition keys (full + funnel)
   // read it, so the gate chain's corpus work runs once.
-  val sharedCurateFlags = sharedFrame("curate_flags")((s, dir) =>
+  val sharedCurateFlags = sharedFrame("curate_flags") { (s, dir) =>
+    prefetch(s, dir)(sharedGopherFlagged, sharedDupNgramDocs)
     operators.Curation.curateFlags(Tables.documents(s, dir),
       gopherFlags = sharedGopherFlagged(s, dir),
       dupDocs = sharedDupNgramDocs(s, dir),
       dupStarts = operators.TextAnalysis.startsOfOcc(
         sharedDupNgramOcc(s, dir)),
-      embeddings = Tables.embeddings(s, dir)))
+      embeddings = Tables.embeddings(s, dir))
+  }
 
   // the persisted dup-gram STORE + its Bloom: production writes both
   // as nightly artifacts next to each other, and the intake gates probe
@@ -178,10 +180,10 @@ private[graft] object Shared {
     val base = annIndexBaseDir(dir)
     val emb = Tables.embeddings(s, dir)
     val nFull = emb.count()
-    SharedArtifacts.concurrently(s.sparkContext)(
-      "prime_ann" -> (() => primeTimed("ann_ivf_build")(
-        AnnIndex.buildIvf(emb, s"$base/ivf", knownN = nFull))),
-      "prime_ann" -> (() => primeTimed("ann_ivfpq_build")(
+    waited(SharedArtifacts.concurrently(s)(
+      () => primeTimed("ann_ivf_build")(
+        AnnIndex.buildIvf(emb, s"$base/ivf", knownN = nFull)),
+      () => primeTimed("ann_ivfpq_build")(
         AnnIndex.buildIvfPq(emb, s"$base/ivfpq", m = 16, nCodes = 32,
           knownN = nFull))))
     (s"$base/ivf", s"$base/ivfpq")
@@ -195,12 +197,12 @@ private[graft] object Shared {
     val emb = Tables.embeddings(s, dir)
     val even = emb.filter(col("vec_id") % 2 === 0)
     val nEven = even.count()
-    SharedArtifacts.concurrently(s.sparkContext)(
-      "prime_ann_incr" -> (() => primeTimed("ann_ivf_incr") {
+    waited(SharedArtifacts.concurrently(s)(
+      () => primeTimed("ann_ivf_incr") {
         AnnIndex.buildIvf(even, s"$base/ivf_incr", knownN = nEven)
         AnnIndex.appendIvf(emb.filter(col("vec_id") % 2 =!= 0), s"$base/ivf_incr")
-      }),
-      "prime_ann_incr" -> (() => primeTimed("ann_ivfpq_incr") {
+      },
+      () => primeTimed("ann_ivfpq_incr") {
         AnnIndex.buildIvfPq(even,
           s"$base/ivfpq_incr", m = 16, nCodes = 32, knownN = nEven)
         AnnIndex.appendIvfPq(emb.filter(col("vec_id") % 2 =!= 0), s"$base/ivfpq_incr")
@@ -268,6 +270,25 @@ private[graft] object Shared {
       primeChildTime.set(parentAcc + wall)
     }
   }
+
+  /** Runs `f`, a block that waits on builds running on other threads,
+    * and bills its wall time as child time of the enclosing build, so
+    * that build's [[primeSelf]] sheds what it waited for. */
+  private def waited(f: => Unit): Unit = {
+    val t0 = System.nanoTime()
+    try f finally primeChildTime.set(
+      primeChildTime.get() + (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** Builds the artifacts of `getters` for (s, dir) concurrently, one
+    * thread each, and returns when all are built. A builder calls it
+    * over the independent artifacts it reads, so their plans and jobs
+    * overlap instead of running back to back; the later getter calls
+    * hit the store. An artifact already built or being built is not
+    * built again ([[SharedArtifacts.getOrElseUpdate]]). */
+  def prefetch(s: SparkSession, dir: String)(
+      getters: ((SparkSession, String) => AnyRef)*): Unit =
+    waited(SharedArtifacts.concurrently(s)(getters.map(g => () => g(s, dir)): _*))
 
   /** The basket family's shared pair engine: ONE guarded pair-count
     * build (the [[graft.operators.Analytics.basketAffinity]] relation
@@ -344,17 +365,23 @@ private[graft] object Shared {
     // Under spark.scheduler.mode=FAIR each chain submits into its
     // OWN pool (auto-created on first use; the root pool FAIR-shares
     // slots between pools): the single default pool is FIFO inside
-    // even under FAIR mode. Under FIFO mode the pool is ignored.
+    // even under FAIR mode. Under FIFO mode the pool is ignored. A
+    // chain sets its pool on its own copy of the caller's properties,
+    // and the builds it runs concurrently (the ann_* pairs) inherit it.
     // Billing: each getter times itself, so prime_detail still
     // attributes cost per artifact; shared_prime = slowest chain.
-    SharedArtifacts.concurrently(s.sparkContext)(
-      "prime_blocked" -> (() => sharedBlockedPairs(s, dir)),
-      "prime_phash" -> (() => sharedPhashSigs(s, dir)),
-      "prime_ngram" -> (() => sharedDupNgramDocs(s, dir)),
-      "prime_basket" -> { () => sharedBasketTrunk(s, dir); sharedBasketPairs(s, dir) },
-      "prime_bm25" -> (() => sharedBm25Postings(s, dir)),
-      "prime_entity" -> (() => sharedEntityGroups(s, dir)),
-      "prime_ann" -> (() => annBaseIndexPaths(s, dir)),
-      "prime_ann_incr" -> (() => annIncrIndexPaths(s, dir)))
+    def chain(pool: String)(build: => Any): () => Any = () => {
+      s.sparkContext.setLocalProperty("spark.scheduler.pool", pool)
+      build
+    }
+    SharedArtifacts.concurrently(s)(
+      chain("prime_blocked")(sharedBlockedPairs(s, dir)),
+      chain("prime_phash")(sharedPhashSigs(s, dir)),
+      chain("prime_ngram")(sharedDupNgramDocs(s, dir)),
+      chain("prime_basket") { sharedBasketTrunk(s, dir); sharedBasketPairs(s, dir) },
+      chain("prime_bm25")(sharedBm25Postings(s, dir)),
+      chain("prime_entity")(sharedEntityGroups(s, dir)),
+      chain("prime_ann")(annBaseIndexPaths(s, dir)),
+      chain("prime_ann_incr")(annIncrIndexPaths(s, dir)))
   }
 }

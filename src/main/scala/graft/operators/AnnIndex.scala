@@ -36,7 +36,7 @@ object AnnIndex {
     // the model write and the layout write share nothing once the
     // centroids are on the driver — submit them concurrently (two
     // independent jobs; a cluster runs them as parallel pipelines)
-    concurrently(spark.sparkContext)(
+    graft.SharedArtifacts.concurrently(spark)(
       () => centroids.zipWithIndex
         .map { case (c, i) => (i, c) }.toSeq
         .toDF("cell", "centroid")
@@ -46,17 +46,6 @@ object AnnIndex {
         .select(col("vec_id"), col("embedding"),
           gf.nearestCentroids(col("embedding"), centroids, 1)(0).as("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(s"$path/vectors"))
-  }
-
-  /** Run independent build-side writes on concurrent threads —
-    * Spark's scheduler interleaves jobs submitted from multiple
-    * threads, so a build's driver-sized model writes stop
-    * serializing in front of its corpus-sized layout write. Each
-    * write runs in the CALLING thread's scheduler pool. */
-  private def concurrently(sc: org.apache.spark.SparkContext)
-                          (fs: (() => Unit)*): Unit = {
-    val pool = sc.getLocalProperty("spark.scheduler.pool")
-    graft.SharedArtifacts.concurrently(sc)(fs.map(pool -> _): _*)
   }
 
   /** Session-scoped MODEL-STATE memo: a serving probe loads an
@@ -71,20 +60,12 @@ object AnnIndex {
     * mismatch reloads and replaces the entry. Appends/deletes touch only
     * `vectors`/`tombstones`, never the model dirs, so their hits are
     * correct by construction. */
-  private val modelMemo =
-    graft.SharedArtifacts.key[(Long, AnyRef)]("ann_model")
+  private val modelMemo = graft.SharedArtifacts.key[AnyRef]("ann_model")
 
   private def cachedModel[T <: AnyRef](spark: SparkSession, dir: String)
-                                      (load: => T): T = {
-    val stamp = graft.SharedArtifacts.pathStamp(spark, dir)
-    graft.SharedArtifacts.get(spark, modelMemo, dir) match {
-      case Some((`stamp`, v)) => v.asInstanceOf[T]
-      case _ =>
-        val v = load
-        graft.SharedArtifacts.put(spark, modelMemo, dir, (stamp, v))
-        v
-    }
-  }
+                                      (load: => T): T =
+    graft.SharedArtifacts.getOrElseUpdate(spark, modelMemo, dir,
+      stamp = graft.SharedArtifacts.pathStamp(spark, dir))(load).asInstanceOf[T]
 
   /** The broadcastable model state back from disk. */
   def loadCentroids(spark: SparkSession, path: String): Array[Array[Float]] =
@@ -380,7 +361,7 @@ object AnnIndex {
     val cbs = Similarity.codebooksFromSample(sample.take(nCodes), m, dim)
     // three independent writes once the model is on the driver —
     // concurrent submission (see [[buildIvf]])
-    concurrently(spark.sparkContext)(
+    graft.SharedArtifacts.concurrently(spark)(
       () => cents.zipWithIndex
         .map { case (c, i) => (i, c) }.toSeq
         .toDF("cell", "centroid")

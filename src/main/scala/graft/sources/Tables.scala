@@ -18,24 +18,19 @@ import graft.SharedArtifacts
 object Tables {
   /** Inferred schemas, one per (session, table file): inference reads
     * parquet footers in a Spark job, and a session's keys load the same
-    * few files again and again. An entry keeps the file's
-    * [[SharedArtifacts.pathStamp]] and the session's parquet reader
-    * settings, so a rewritten file, or a changed setting, is inferred
-    * again. */
-  private val schemas =
-    SharedArtifacts.key[(Long, Map[String, String], StructType)]("table_schema")
+    * few files again and again, from several threads at once when a key
+    * builds its shared artifacts concurrently. An entry is stamped with
+    * the file's [[SharedArtifacts.pathStamp]] and the session's parquet
+    * reader settings, so a rewritten file, or a changed setting, is
+    * inferred again, and concurrent first loads infer once. */
+  private val schemas = SharedArtifacts.key[StructType]("table_schema")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val stamp = SharedArtifacts.pathStamp(spark, path)
-    val settings = spark.conf.getAll.filter(_._1.contains(".parquet."))
-    val schema = SharedArtifacts.get(spark, schemas, path) match {
-      case Some((`stamp`, `settings`, known)) => known
-      case _ =>
-        val inferred = spark.read.parquet(path).schema
-        SharedArtifacts.put(spark, schemas, path, (stamp, settings, inferred))
-        inferred
-    }
+    val stamp = (SharedArtifacts.pathStamp(spark, path),
+      spark.conf.getAll.filter(_._1.contains(".parquet.")))
+    val schema = SharedArtifacts.getOrElseUpdate(spark, schemas, path, stamp)(
+      spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
   }
 

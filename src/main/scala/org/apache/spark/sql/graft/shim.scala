@@ -1,6 +1,8 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import java.util.concurrent.{CompletableFuture, ExecutorService}
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -20,10 +22,12 @@ object ColumnShim {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 }
 
-/** Run a plan's shuffle map stages once and keep their output as the
-  * input of every later action.
+/** Spark's SQL execution internals that graft reaches: running a
+  * plan's shuffle map stages once, and handing work to another thread
+  * in the calling thread's Spark context.
   *
-  * `executeOnce` plans `df` and calls `execute()` on the physical plan
+  * `executeOnce` runs a plan's shuffle map stages once and keeps their
+  * output as the input of every later action. It plans `df` and calls `execute()` on the physical plan
   * inside one tracked SQL execution, so listeners and SQL metrics see
   * the scans. With adaptive execution (graft's default) that call runs
   * every shuffle map stage and returns the RDD of the final stage; the
@@ -50,4 +54,13 @@ object PlanShim {
     val rdd = SQLExecution.withNewExecutionId(qe, Some(name))(qe.executedPlan.execute())
     session.internalCreateDataFrame(rdd, ds.schema)
   }
+
+  /** Runs `body` on a thread of `exec` as if on the calling thread:
+    * with its active session (`s`) and a copy of its SparkContext local
+    * properties, which carry the job group, job description, job tags,
+    * interrupt-on-cancel flag and scheduler pool. So its jobs are
+    * billed to the caller's group and cancelled with it. */
+  def withCallerContext[T](s: SparkSession, exec: ExecutorService)
+                          (body: => T): CompletableFuture[T] =
+    SQLExecution.withThreadLocalCaptured(s.asInstanceOf[classic.SparkSession], exec)(body)
 }

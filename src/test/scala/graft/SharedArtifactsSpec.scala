@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd, SparkListenerJobStart}
 
 import graft.operators.AnnIndex
 import graft.sources.Tables
@@ -90,7 +90,8 @@ class SharedArtifactsSpec extends SparkSpec {
     // nests shingle_sets + blocked_cands on the same thread — the
     // nesting case the exclusive-time deduction exists for
     val dir = s"$sf/"
-    SparkEntry.primeForKeys(spark, dir, Seq("split_leakage_pairs"))
+    SparkEntry.primeForKeys(spark, dir,
+      Seq("split_leakage_pairs", "docs_curate_full"))
     assert(SparkEntry.primeSelf.nonEmpty, "prime must record builds")
     assert(SparkEntry.primeDetail.contains("blocked_pairs") &&
       SparkEntry.primeDetail.contains("blocked_cands"),
@@ -113,6 +114,81 @@ class SharedArtifactsSpec extends SparkSpec {
         s"$parent self ($self) must exclude the nested blocked_cands " +
           s"build ($child of $wall)")
     }
+    // curate_flags waits for gopher_flagged and dup_ngram_docs, built
+    // concurrently on other threads: its exclusive time must shed the
+    // wait, which lasts at least as long as the slower of the two
+    val flags = Seq("curate_flags", "gopher_flagged", "dup_ngram_docs")
+    assert(flags.forall(SparkEntry.primeDetail.contains),
+      s"docs_curate_full must build ${flags.mkString(", ")}")
+    val wall = SparkEntry.primeDetail("curate_flags")
+    val self = SparkEntry.primeSelf("curate_flags")
+    val waited = flags.tail.map(SparkEntry.primeDetail).max
+    assert(self <= wall - waited + 1e-9,
+      s"curate_flags self ($self) must exclude the concurrent builds it " +
+        s"waited for ($waited of $wall)")
+  }
+
+  test("single flight: two threads that miss one entry at once run " +
+    "one build, and both read its value") {
+    val s = spark.newSession()
+    val k = SharedArtifacts.key[String]("spec_single_flight")
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    val start = new java.util.concurrent.CyclicBarrier(2)
+    val read = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val threads = Seq.fill(2)(new Thread(() => {
+      start.await()
+      read.add(SharedArtifacts.getOrElseUpdate(s, k, sf) {
+        builds.incrementAndGet()
+        Thread.sleep(300)
+        "built"
+      })
+      ()
+    }))
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    assert(builds.get === 1, "a concurrent miss must wait for the running build")
+    assert(read.toArray.toSeq === Seq("built", "built"))
+    SharedArtifacts.sessionCacheSweep(spark.sparkContext)
+  }
+
+  test("concurrent bodies run in the caller's job group: counted with " +
+    "it, and cancelled with it") {
+    val sc = spark.sparkContext
+    // create the pool threads first, outside any job group: a thread
+    // that kept the properties it was created with would not carry the
+    // groups set below
+    def count(): Long = sc.parallelize(1 to 10, 2).count()
+    SharedArtifacts.concurrently(spark)(Seq.fill(4)(() => count()): _*)
+    val jobs = jobsStarted(SharedArtifacts.concurrently(spark)(() => count(), () => count()))
+    assert(jobs === 2, s"the caller's group was billed $jobs of the two concurrent jobs")
+
+    val group = s"spec-cancel-${java.util.UUID.randomUUID}"
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          started.countDown()
+    }
+    sc.addSparkListener(listener)
+    val canceller = new Thread(() =>
+      if (started.await(30, java.util.concurrent.TimeUnit.SECONDS))
+        sc.cancelJobGroup(group))
+    val t0 = System.nanoTime()
+    val failed = try {
+      canceller.start()
+      sc.setJobGroup(group, "cancel spec", interruptOnCancel = true)
+      intercept[org.apache.spark.SparkException] {
+        SharedArtifacts.concurrently(spark)(() =>
+          sc.parallelize(1 to 1, 1).map { x => Thread.sleep(60000); x }.count())
+      }
+    } finally {
+      sc.clearJobGroup()
+      canceller.join()
+      sc.removeSparkListener(listener)
+    }
+    val waited = (System.nanoTime() - t0) / 1e9
+    assert(failed.getMessage.contains("cancel"), failed.getMessage)
+    assert(waited < 45, s"the cancelled body ran for $waited s")
   }
 
   test("no silent sharing: artifacts with distinct keys never read " +
@@ -172,6 +248,14 @@ class SharedArtifactsSpec extends SparkSpec {
     Tables.documents(s, sf)
     val jobs = jobsStarted(Tables.documents(s, sf))
     assert(jobs === 0, s"a second load of one file started $jobs job(s)")
+  }
+
+  test("concurrent first loads of one table file infer its schema " +
+    "once") {
+    val s = spark.newSession()
+    val jobs = jobsStarted(SharedArtifacts.concurrently(s)(
+      Seq.fill(3)(() => Tables.documents(s, sf)): _*))
+    assert(jobs === 1, s"three concurrent first loads started $jobs job(s)")
   }
 
   test("a table file rewritten with another schema is read with its " +

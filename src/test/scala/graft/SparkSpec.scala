@@ -23,8 +23,10 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
 
-  /** The number of Spark jobs `body` starts on this thread (counted
-    * under a job group of its own, so other threads' jobs are not). */
+  /** The number of Spark jobs `body` starts, on this thread or on the
+    * threads it hands work to with [[SharedArtifacts.concurrently]]
+    * (counted under a job group of its own, which those threads carry,
+    * so other threads' jobs are not counted). */
   def jobsStarted(body: => Any): Int = {
     val group = s"jobs-started-${java.util.UUID.randomUUID}"
     val jobs = new java.util.concurrent.atomic.AtomicInteger
