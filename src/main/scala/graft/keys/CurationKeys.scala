@@ -467,12 +467,10 @@ private[graft] object CurationKeys extends Family("docs_") {
           |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_excl
           | FROM capped JOIN rsc ON rsc.doc_id = capped.doc_id) f
           |WHERE cum_excl < 5000""")),
-    Key("docs_curate_funnel") { (s, dir) =>
-      prefetch(s, dir)(sharedCurateFlags, sharedShingleSets)
+    Key("docs_curate_funnel")((s, dir) =>
       operators.Curation.curateFunnel(Tables.documents(s, dir),
         flags = sharedCurateFlags(s, dir),
-        shingles = sharedShingleSets(s, dir))
-    }(
+        shingles = sharedShingleSets(s, dir)))(
       // same CTE chain, counted per stage; n_dropped via lag
       (curateFullCtes +
         """, fin AS (SELECT doc_id FROM (
@@ -733,7 +731,6 @@ private[graft] object CurationKeys extends Family("docs_") {
           |FROM qb LEFT JOIN dd ON dd.doc_id = qb.doc_id
           |GROUP BY q_bucket""")),
     Key("docs_curate_incremental")((s, dir) => {
-      prefetch(s, dir)(sharedGopherFlagged, sharedHistDupStore)
       val d = Tables.documents(s, dir)
       // r14: the incremental twin gains the gate families too — the
       // pinned Gopher flag pass (per-doc pure, delta rows read by
