@@ -460,10 +460,9 @@ object Bench {
     }
 
     val headline = Seq(
-      "q1_pricing_summary", "q3_bloom_pruned", "q_basket_affinity",
-      "q_brand_revenue", "q_brand_revenue_salted", "q_asof_join",
-      "q_events_sessionize", "q_events_retention", "q_heavy_suppliers",
-      "etl_daily_product_summary", "etl_sales_summary_salted",
+      "q1_pricing_summary", "q_basket_affinity", "q_brand_revenue",
+      "q_asof_join", "q_events_sessionize", "q_events_retention",
+      "q_heavy_suppliers", "etl_daily_product_summary",
       "dedup_minhash_lsh", "dedup_groups_blocked", "dedup_source_matrix",
       "ann_bruteforce_topk", "ann_ivf_topk", "text_lm_score",
       "text_winnow_pairs", "docs_curate_mixture", "mm_type_summary",

@@ -5,11 +5,10 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 
-/** Bounded-memory top-k per group as a typed [[Aggregator]] — the
-  * descending twin of [[ReservoirAgg]]: keeps the k rows with the
-  * LARGEST sort value (ties broken ascending by id, so the result is
-  * deterministic and matches `row_number() OVER (ORDER BY v DESC,
-  * id)` ≤ k).
+/** Bounded-memory top-k per group as a typed [[Aggregator]]: keeps
+  * the k rows with the LARGEST sort value (ties broken ascending by
+  * id, so the result is deterministic and matches `row_number() OVER
+  * (ORDER BY v DESC, id)` ≤ k).
   *
   * Same results as the window formulation, better plan at scale: a
   * hash aggregate with partial merge carries |groups|·k rows through

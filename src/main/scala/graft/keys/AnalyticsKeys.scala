@@ -13,34 +13,6 @@ import Shared._
   * retail and event tables. */
 private[graft] object AnalyticsKeys extends Family("q", "sketch_") {
 
-  lazy val q3TopUnshipped: Key = Key("q3_top_unshipped")((s, dir) =>
-    Analytics.topRevenueOrders(Tables.customer(s, dir), Tables.orders(s, dir),
-      Tables.lineitem(s, dir)))(
-    """SELECT o_orderkey, o_orderdate,
-      | sum(l_extendedprice * (1 - l_discount)) AS revenue
-      |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      | JOIN customer ON o_custkey = c_custkey
-      |WHERE c_mktsegment = 'BUILDING'
-      |GROUP BY o_orderkey, o_orderdate
-      |ORDER BY revenue DESC, o_orderkey LIMIT 10""")
-
-  lazy val qTopnPerGroup: Key = Key("q_topn_per_group")((s, dir) =>
-    Analytics.topCustomersPerSegment(Tables.customer(s, dir))
-      .withColumn("rank_in_segment", col("rank_in_segment").cast("long")))(
-    """SELECT c_mktsegment, rank_in_segment, c_custkey, c_name, c_acctbal FROM (
-      | SELECT c_mktsegment, c_custkey, c_name, c_acctbal,
-      |  row_number() OVER (PARTITION BY c_mktsegment
-      |    ORDER BY c_acctbal DESC, c_custkey) AS rank_in_segment
-      | FROM customer) r WHERE rank_in_segment <= 5""")
-
-  lazy val qBrandRevenue: Key = Key("q_brand_revenue")((s, dir) =>
-    Analytics.brandRevenue(Tables.lineitem(s, dir), Tables.part(s, dir)))(
-    """SELECT p_brand, p_type,
-      | sum(l_extendedprice * (1 - l_discount)) AS revenue,
-      | sum(l_quantity) AS total_qty, count(*) AS num_lines
-      |FROM lineitem JOIN part ON l_partkey = p_partkey
-      |GROUP BY p_brand, p_type""")
-
   lazy val qEventsSessionize: Key = Key("q_events_sessionize")((s, dir) =>
     EventOps.sessionize(Tables.events(s, dir)))(
     s"""WITH flagged AS (
@@ -108,12 +80,16 @@ private[graft] object AnalyticsKeys extends Family("q", "sketch_") {
         | avg(l_quantity) AS avg_qty, avg(l_extendedprice) AS avg_price,
         | avg(l_discount) AS avg_disc, count(*) AS count_order
         |FROM lineitem GROUP BY l_returnflag, l_linestatus"""),
-    q3TopUnshipped,
-    Key("q3_bloom_pruned")((s, dir) =>
-      Analytics.topRevenueOrdersBloom(Tables.customer(s, dir), Tables.orders(s, dir),
+    Key("q3_top_unshipped")((s, dir) =>
+      Analytics.topRevenueOrders(Tables.customer(s, dir), Tables.orders(s, dir),
         Tables.lineitem(s, dir)))(
-      // Bloom pruning changes the physical plan, never the result
-      q3TopUnshipped.sql),
+      """SELECT o_orderkey, o_orderdate,
+        | sum(l_extendedprice * (1 - l_discount)) AS revenue
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        | JOIN customer ON o_custkey = c_custkey
+        |WHERE c_mktsegment = 'BUILDING'
+        |GROUP BY o_orderkey, o_orderdate
+        |ORDER BY revenue DESC, o_orderkey LIMIT 10"""),
     Key("q5_regional_revenue")((s, dir) =>
       Analytics.regionalRevenue(Tables.region(s, dir), Tables.nation(s, dir),
         Tables.customer(s, dir), Tables.supplier(s, dir), Tables.orders(s, dir),
@@ -132,10 +108,13 @@ private[graft] object AnalyticsKeys extends Family("q", "sketch_") {
         | c_name AS customer_name, c_mktsegment AS segment, n_name AS nation
         |FROM orders JOIN customer ON o_custkey = c_custkey
         | JOIN nation ON c_nationkey = n_nationkey"""),
-    qTopnPerGroup,
-    Key("q_topn_per_group_agg")((s, dir) =>
-      Analytics.topCustomersPerSegmentAgg(Tables.customer(s, dir)))(
-      qTopnPerGroup.sql),
+    Key("q_topn_per_group")((s, dir) =>
+      Analytics.topCustomersPerSegment(Tables.customer(s, dir)))(
+      """SELECT c_mktsegment, rank_in_segment, c_custkey, c_name, c_acctbal FROM (
+        | SELECT c_mktsegment, c_custkey, c_name, c_acctbal,
+        |  row_number() OVER (PARTITION BY c_mktsegment
+        |    ORDER BY c_acctbal DESC, c_custkey) AS rank_in_segment
+        | FROM customer) r WHERE rank_in_segment <= 5"""),
     Key("q_running_totals")((s, dir) => Analytics.runningTotals(Tables.orders(s, dir)))(
       """SELECT o_custkey, o_orderkey, o_orderdate, o_totalprice,
         | sum(o_totalprice) OVER w AS running_total,
@@ -520,7 +499,13 @@ private[graft] object AnalyticsKeys extends Family("q", "sketch_") {
         |UNION ALL
         |SELECT c_custkey, 'segment_only' AS tag
         | FROM (SELECT c_custkey FROM seg EXCEPT SELECT c_custkey FROM big) e"""),
-    qBrandRevenue,
+    Key("q_brand_revenue")((s, dir) =>
+      Analytics.brandRevenue(Tables.lineitem(s, dir), Tables.part(s, dir)))(
+      """SELECT p_brand, p_type,
+        | sum(l_extendedprice * (1 - l_discount)) AS revenue,
+        | sum(l_quantity) AS total_qty, count(*) AS num_lines
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |GROUP BY p_brand, p_type"""),
     Key("q_percentiles")((s, dir) =>
       Analytics.orderValuePercentiles(Tables.orders(s, dir), Tables.customer(s, dir)))(
       """SELECT c_mktsegment,
@@ -943,10 +928,6 @@ private[graft] object AnalyticsKeys extends Family("q", "sketch_") {
         |  AS cust_avg FROM orders)
         |SELECT o_orderkey, o_custkey, o_orderdate, o_totalprice, cust_avg
         |FROM a WHERE o_totalprice > cust_avg"""),
-    Key("q_brand_revenue_salted")((s, dir) =>
-      Analytics.brandRevenueSalted(Tables.lineitem(s, dir), Tables.part(s, dir)))(
-      // (or, for stream_dedup_within_wm, the batch degenerate form)
-      qBrandRevenue.sql),
     Key("q_events_engagement")((s, dir) =>
       EventOps.engagement(Tables.events(s, dir)))(
       """WITH ud AS (SELECT DISTINCT user_id,

@@ -10,13 +10,6 @@ import OracleFragments._
   * drift and sketch calibrations. */
 private[graft] object EventKeys extends Family("events_") {
 
-  lazy val eventsHeavyHitters: Key = Key("events_heavy_hitters")((s, dir) =>
-    Analytics.heavyHitters(Tables.events(s, dir)))(
-    """WITH c AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_events
-      | FROM events GROUP BY 1)
-      |SELECT user_id, n_events FROM c
-      |WHERE n_events > (SELECT avg(n_events) * 1.25 FROM c)""")
-
   lazy val eventsBotFlag: Key = Key("events_bot_flag")((s, dir) =>
     EventOps.burstFlags(Tables.events(s, dir)))(
     // tightest 20-event span per user, exact integer microseconds
@@ -49,11 +42,12 @@ private[graft] object EventKeys extends Family("events_") {
       |GROUP BY CAST(ts AS DATE)""")
 
   lazy val keys: Seq[Key] = Seq(
-    eventsHeavyHitters,
-    Key("events_heavy_hitters_mg")((s, dir) =>
-      EventOps.approxHeavyHitters(Tables.events(s, dir)))(
-      // exact (no evictions) while distinct keys per partition <= k
-      eventsHeavyHitters.sql),
+    Key("events_heavy_hitters")((s, dir) =>
+      Analytics.heavyHitters(Tables.events(s, dir)))(
+      """WITH c AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_events
+        | FROM events GROUP BY 1)
+        |SELECT user_id, n_events FROM c
+        |WHERE n_events > (SELECT avg(n_events) * 1.25 FROM c)"""),
     Key("events_rolling_active_users")((s, dir) =>
       Analytics.rollingActiveUsers(Tables.events(s, dir)))(
       // exact sliding COUNT DISTINCT via bounded fan-out of the

@@ -63,11 +63,6 @@ private[graft] object RetailEtlKeys extends Family("etl_", "rtbf_") {
       RetailEtl.aggregate(clean.filter(col("sale_date") >= lit(cutoff))))
   }
 
-  private def saltedSummary(s: SparkSession, dir: String): DataFrame =
-    Skew.saltedAgg(cleanSales(s, dir), Seq("product_id"),
-      partials = Seq(sum("quantity").as("q"), sum("sale_amount").as("a")),
-      merge = Seq(sum("q").as("total_quantity"), sum("a").as("total_sale_amount")))
-
   // the RTBF ML-store inputs: subject docs and vectors (id % 53 == 3),
   // the shared fingerprint and winnow stores, and the ANN vector ids
   private def rtbfMlInputs[T](s: SparkSession, dir: String)(
@@ -143,37 +138,6 @@ private[graft] object RetailEtlKeys extends Family("etl_", "rtbf_") {
       |SELECT user_id, event_type AS state, value, ts
       |FROM last WHERE rn = 1 AND event_type <> 'error'""")
 
-  // the single-pass HLL twin, graduated r16 via the calibration
-  // pattern: exact profile anchors + the engine's-own-HLL-
-  // within-5% boolean (the HLL route still runs inside it)
-  lazy val etlDqProfileApprox: Key = Key("etl_dq_profile_approx")((s, dir) =>
-    operators.RetailEtl.dqCalibration(Tables.lineitem(s, dir),
-      Seq("l_partkey", "l_returnflag", "l_shipdate", "l_quantity")))(
-    // calibration form (r16): the exact profile anchor + a
-    // within-5% claim over DuckDB's OWN approx_count_distinct per
-    // column; tolerance max(2, n_distinct·5%) in floored integers
-    s"""$dqCalibrationHead
-      | SELECT 'l_partkey' AS col_name, count(*) AS n_rows,
-      |  CAST(sum(CASE WHEN l_partkey IS NULL THEN 1 ELSE 0 END)
-      |   AS BIGINT) AS n_nulls,
-      |  count(DISTINCT l_partkey) AS n_distinct,
-      |  approx_count_distinct(l_partkey) AS apx FROM lineitem
-      | UNION ALL SELECT 'l_returnflag', count(*),
-      |  CAST(sum(CASE WHEN l_returnflag IS NULL THEN 1 ELSE 0 END)
-      |   AS BIGINT),
-      |  count(DISTINCT l_returnflag),
-      |  approx_count_distinct(l_returnflag) FROM lineitem
-      | UNION ALL SELECT 'l_shipdate', count(*),
-      |  CAST(sum(CASE WHEN l_shipdate IS NULL THEN 1 ELSE 0 END)
-      |   AS BIGINT),
-      |  count(DISTINCT l_shipdate),
-      |  approx_count_distinct(l_shipdate) FROM lineitem
-      | UNION ALL SELECT 'l_quantity', count(*),
-      |  CAST(sum(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END)
-      |   AS BIGINT),
-      |  count(DISTINCT l_quantity),
-      |  approx_count_distinct(l_quantity) FROM lineitem) p""")
-
   lazy val etlScd2UserState: Key = Key("etl_scd2_user_state")((s, dir) =>
     EventOps.scd2UserState(Tables.events(s, dir)))(
     s"""WITH ${scdVersionCtes()},
@@ -217,9 +181,6 @@ private[graft] object RetailEtlKeys extends Family("etl_", "rtbf_") {
          |SELECT f.* FROM f WHERE NOT EXISTS
          | (SELECT 1 FROM o WHERE o.product_id = f.product_id)"""
     },
-    Key("etl_sales_summary_salted")((s, dir) => saltedSummary(s, dir))(
-      // salting changes the physical plan, never the result
-      etlSalesSummary.sql),
     Key("etl_incremental_summary")((s, dir) => incrementalSummary(s, dir))(
       // associative partial-merge == full recompute
       etlSalesSummary.sql),
@@ -449,18 +410,36 @@ private[graft] object RetailEtlKeys extends Family("etl_", "rtbf_") {
         |  CAST(sum(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END)
         |   AS BIGINT),
         |  count(DISTINCT l_quantity) FROM lineitem) p"""),
-    etlDqProfileApprox,
-    // the ONE-SCAN calibration (r17): unpivot-first, exact distinct
-    // + HLL in one aggregate per column — the 100 TB form for when
-    // the fact scan dominates (see dqCalibration's measured shape
-    // note); same output contract, same oracle
-    Key("etl_dq_profile_onescan")((s, dir) =>
-      operators.RetailEtl.dqCalibrationOneScan(Tables.lineitem(s, dir),
+    // the single-pass HLL twin, graduated r16 via the calibration
+    // pattern: exact profile anchors + the engine's-own-HLL-
+    // within-5% boolean (the HLL route still runs inside it)
+    Key("etl_dq_profile_approx")((s, dir) =>
+      operators.RetailEtl.dqCalibration(Tables.lineitem(s, dir),
         Seq("l_partkey", "l_returnflag", "l_shipdate", "l_quantity")))(
-      // one-scan dq calibration: same output contract as the
-      // composed form (stringified distincts are injective for
-      // these columns; floats normalized), so the oracle is shared
-      etlDqProfileApprox.sql),
+      // calibration form (r16): the exact profile anchor + a
+      // within-5% claim over DuckDB's OWN approx_count_distinct per
+      // column; tolerance max(2, n_distinct·5%) in floored integers
+      s"""$dqCalibrationHead
+        | SELECT 'l_partkey' AS col_name, count(*) AS n_rows,
+        |  CAST(sum(CASE WHEN l_partkey IS NULL THEN 1 ELSE 0 END)
+        |   AS BIGINT) AS n_nulls,
+        |  count(DISTINCT l_partkey) AS n_distinct,
+        |  approx_count_distinct(l_partkey) AS apx FROM lineitem
+        | UNION ALL SELECT 'l_returnflag', count(*),
+        |  CAST(sum(CASE WHEN l_returnflag IS NULL THEN 1 ELSE 0 END)
+        |   AS BIGINT),
+        |  count(DISTINCT l_returnflag),
+        |  approx_count_distinct(l_returnflag) FROM lineitem
+        | UNION ALL SELECT 'l_shipdate', count(*),
+        |  CAST(sum(CASE WHEN l_shipdate IS NULL THEN 1 ELSE 0 END)
+        |   AS BIGINT),
+        |  count(DISTINCT l_shipdate),
+        |  approx_count_distinct(l_shipdate) FROM lineitem
+        | UNION ALL SELECT 'l_quantity', count(*),
+        |  CAST(sum(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END)
+        |   AS BIGINT),
+        |  count(DISTINCT l_quantity),
+        |  approx_count_distinct(l_quantity) FROM lineitem) p"""),
     Key("etl_check_constraints")((s, dir) =>
       operators.RetailEtl.checkConstraints(Tables.lineitem(s, dir), Seq(
         ("qty_in_range", col("l_quantity") >= 1 && col("l_quantity") <= 50),

@@ -156,10 +156,6 @@ private[graft] object SamplingKeys extends Family("sample_", "split_") {
         | CASE source WHEN 'src0' THEN '80000000' WHEN 'src1' THEN '0ccccccc'
         |  ELSE '40000000' END"""),
     sampleUniformK,
-    Key("sample_uniform_k_agg")((s, dir) =>
-      Sampling.uniformKPerStratumAgg(Tables.documents(s, dir), "doc_id", "source", k = 5)
-        .select("source", "sample_rank", "doc_id"))(
-      sampleUniformK.sql),
     Key("split_temporal_leakage")((s, dir) =>
       DataSplit.temporalSplitAudit(Tables.events(s, dir), "ts", "user_id",
         "2024-01-21 00:00:00")) {

@@ -48,41 +48,16 @@ object Analytics {
       .orderBy(col("revenue").desc, col("o_orderkey"))
       .limit(n)
 
-  /** [[topRevenueOrders]] with an explicit Bloom runtime filter: the
-    * segment predicate qualifies ~1/5 of customers, so the qualifying
-    * order keys are Bloom-compacted and lineitem is pruned BEFORE its
-    * join shuffle. Same result (false positives die in the real
-    * join — shares the q3 oracle); the win is the shuffle writing
-    * ~selectivity of the fact instead of all of it. The extra
-    * `count()` job prices the filter's size honestly — at scale you'd
-    * take it from table statistics instead.
-    */
-  def topRevenueOrdersBloom(customer: DataFrame, orders: DataFrame,
-                            lineitem: DataFrame,
-                            segment: String = "BUILDING", n: Int = 10): DataFrame = {
-    val qualOrders = orders
-      .join(broadcast(customer.filter(col("c_mktsegment") === segment)
-        .select("c_custkey")), col("o_custkey") === col("c_custkey"))
-      .select("o_orderkey", "o_orderdate", "o_custkey")
-    val bf = BloomPrune.keyFilter(qualOrders, "o_orderkey",
-      expectedItems = qualOrders.count())
-    BloomPrune.prune(lineitem.select("l_orderkey", "l_extendedprice", "l_discount"),
-      "l_orderkey", bf)
-      .join(qualOrders, col("l_orderkey") === col("o_orderkey"))
-      .groupBy("o_orderkey", "o_orderdate")
-      .agg(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
-      .orderBy(col("revenue").desc, col("o_orderkey"))
-      .limit(n)
-  }
-
   /** Exact heavy hitters over the event stream: users whose event
     * count exceeds `factor`× the per-user mean. Two aggregates — the
     * per-user count (one shuffle) and a one-row mean over those
     * counts (broadcast back as a scalar) — so the fact is read once.
-    * At 100 TB with too many users for an exact per-key count,
-    * the swap is a Misra-Gries / Count-Min summary per partition
-    * merged on the driver; this exact form is also the oracle for
-    * validating that sketch's error bound.
+    * The per-user counts partially aggregate before the exchange,
+    * so the shuffle carries one row per user per map task; a
+    * Misra-Gries summary wrote the same shuffle bytes at sf0.1
+    * (docs/SCALING.md, "One key per result"), and the bounded-state
+    * form lives where state must be bounded, in
+    * [[graft.streaming.EventStream.heavyHittersState]].
     */
   def heavyHitters(events: DataFrame, factor: Double = 1.25): DataFrame = {
     val counts = events.groupBy("user_id").agg(count(lit(1)).as("n_events"))
@@ -156,25 +131,16 @@ object Analytics {
         col("o_orderstatus"), col("c_name").as("customer_name"),
         col("c_mktsegment").as("segment"), col("n_name").as("nation"))
 
-  /** Top-N per group via row_number window — tie-broken on the key so
-    * the result is deterministic.
-    */
-  def topCustomersPerSegment(customer: DataFrame, n: Int = 5): DataFrame = {
-    val w = Window.partitionBy("c_mktsegment")
-      .orderBy(col("c_acctbal").desc, col("c_custkey"))
-    customer
-      .withColumn("rank_in_segment", row_number().over(w))
-      .filter(col("rank_in_segment") <= n)
-      .select("c_mktsegment", "rank_in_segment", "c_custkey", "c_name", "c_acctbal")
-  }
-
-  /** [[topCustomersPerSegment]] through the bounded-memory
+  /** Top-N customers by account balance per market segment, ranked
+    * `row_number() OVER (PARTITION BY c_mktsegment ORDER BY c_acctbal
+    * DESC, c_custkey)` ≤ n, through the bounded-memory
     * [[graft.functions.TopKAgg]] aggregator: map tasks pre-reduce
     * each segment to ≤ n candidates, so the exchange carries
-    * |segments|·n rows where the window variant sort-shuffles every
-    * customer. Result-identical (shares the oracle).
+    * |segments|·n rows where a window sort-shuffles every customer.
+    * It measured faster than the window form at every scale factor
+    * (docs/SCALING.md, "One key per result").
     */
-  def topCustomersPerSegmentAgg(customer: DataFrame, n: Int = 5): DataFrame =
+  def topCustomersPerSegment(customer: DataFrame, n: Int = 5): DataFrame =
     customer
       .groupBy(col("c_mktsegment"))
       .agg(graft.functions.TopKAgg.largestKWithPayload(
@@ -220,26 +186,6 @@ object Analytics {
   def brandRevenue(lineitem: DataFrame, part: DataFrame): DataFrame =
     lineitem
       .join(broadcast(part), col("l_partkey") === col("p_partkey"))
-      .groupBy("p_brand", "p_type")
-      .agg(
-        sum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"),
-        sum("l_quantity").as("total_qty"),
-        count(lit(1)).as("num_lines"))
-
-  /** [[brandRevenue]] through [[Skew.saltedJoin]] — result-identical
-    * (oracle-checked against the same SQL), but the fact side fans
-    * each part key over salt buckets first. The defense for when one
-    * part dominates the fact table and even a broadcast join's
-    * downstream aggregate would hot-spot; result parity is the point
-    * of the driver check.
-    */
-  def brandRevenueSalted(lineitem: DataFrame, part: DataFrame,
-                         saltBuckets: Int = 16): DataFrame =
-    Skew.saltedJoin(
-      lineitem.select("l_partkey", "l_extendedprice", "l_discount", "l_quantity"),
-      part.withColumnRenamed("p_partkey", "l_partkey")
-        .select("l_partkey", "p_brand", "p_type"),
-      keys = Seq("l_partkey"), saltBuckets = saltBuckets)
       .groupBy("p_brand", "p_type")
       .agg(
         sum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"),

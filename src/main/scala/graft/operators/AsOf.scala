@@ -30,7 +30,7 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *
   * Cost is a single sort-shuffle of |left| + |right| — no range-join
   * explosion, no per-key collect, skew bounded by the hottest key
-  * (salt upstream via [[Skew]] if one key dominates).
+  * ([[Skew.keySkewProfile]] measures it).
   */
 object AsOf {
 

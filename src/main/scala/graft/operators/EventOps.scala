@@ -91,45 +91,6 @@ object EventOps {
           col("le90") >= lit(0.9 - rankEps)).as("p90_within_tol"))
   }
 
-  /** Misra-Gries heavy hitters: each partition keeps at most `k`
-    * counters (the decrement-all step evicts light keys), then the
-    * ≤ partitions·k surviving (key, count) summaries merge with one
-    * tiny shuffle — memory and shuffle are O(k), independent of key
-    * cardinality. Guarantee: any key with true frequency > N/k
-    * survives, and its merged count underestimates by at most N/k.
-    *
-    * While every partition sees ≤ k distinct keys there are no
-    * evictions, counts are exact, and the result equals
-    * [[Analytics.heavyHitters]] — which is why the driver checks
-    * this entry against the exact query's oracle at test scale
-    * (≤ 1.5k users vs k=2048). At 100 TB key cardinality k stays
-    * fixed and the answer degrades gracefully per the bound — that
-    * regime is what `MisraGriesSpec`-style crafted-skew tests cover.
-    */
-  def approxHeavyHitters(events: DataFrame, k: Int = 2048,
-                         factor: Double = 1.25): DataFrame = {
-    import org.apache.spark.sql.{Encoder, Encoders}
-    implicit val longEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val pairEnc: Encoder[(Long, Long)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
-    // null keys would NPE the primitive encoder; the exact variant
-    // groups them — callers with nullable keys should bucket nulls
-    // upstream (events.user_id is non-null by contract)
-    val summaries = events.select(col("user_id").cast("long"))
-      .filter(col("user_id").isNotNull).as[Long]
-      .mapPartitions { it =>
-        val counters = scala.collection.mutable.LinkedHashMap.empty[Long, Long]
-        mgFold(counters, it, k)
-        counters.iterator.map { case (u, c) => (u, c) }
-      }
-    val merged = summaries.toDF("user_id", "est_count")
-      .groupBy("user_id").agg(sum("est_count").as("n_events"))
-    val thr = merged.agg((avg("n_events") * factor).as("thr"))
-    merged.crossJoin(broadcast(thr))
-      .filter(col("n_events") > col("thr"))
-      .select(col("user_id"), col("n_events"))
-  }
-
   /** Misra–Gries update of `counters` (at most `k`) by every key
     * of `it`. */
   private[graft] def mgFold(counters: scala.collection.mutable.LinkedHashMap[Long, Long],

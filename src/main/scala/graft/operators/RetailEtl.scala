@@ -255,8 +255,10 @@ object RetailEtl {
     * distinct value tuple), then ships them all through the
     * exchange: 4.53 s vs this compose's 1.22 s at sf0.1/local[32]
     * (exact alone 0.62, approx alone 0.79). The scan the compose
-    * "wastes" is 4 pruned columns of parquet — cheap at bench SF.
-    * When the scan is NOT cheap, use [[dqCalibrationOneScan]]. */
+    * "wastes" is 4 pruned columns of parquet. An unpivot-first
+    * one-scan form is no better: at sf0.1 on 4 cores it was within
+    * the run-to-run spread of this one and wrote 5% more shuffle
+    * bytes (docs/SCALING.md, "One key per result"). */
   def dqCalibration(df: DataFrame, cols: Seq[String], rsd: Double = 0.02,
                     tolPct: Int = 5): DataFrame =
     dqProfile(df, cols)
@@ -269,60 +271,13 @@ object RetailEtl {
           greatest(lit(2L), expr(s"n_distinct * $tolPct div 100")))
           .as("distinct_within_tol"))
 
-  /** [[dqCalibration]] in ONE pass over the table — the 100 TB form,
-    * for when the fact scan itself is the dominant cost and paying
-    * it twice is worse than anything the aggregate layout does.
-    * Unpivot first (`stack` → (col_name, value) — |cols|·n narrow
-    * rows), collapse to the (col_name, value) grain with a plain
-    * count, then ONE roll-up per column name carrying the exact
-    * distinct (now a plain `count`) and the HLL side by side. The
-    * r17 spelling kept the distinct and the HLL fused in one
-    * aggregate and still paid the trap (the one-distinct plan
-    * carries regular-agg partials — sketch buffers included — at
-    * the value grain); the r18 two-level grain removes it
-    * (2.42 → ~1.1 s at sf0.1/local[4]). Values stringify for the stack's
-    * type unifier with floats normalized (`+ 0.0`) so the distinct
-    * count matches the native count (the
-    * [[graft.streaming.EventStream]] dq-state discipline); same
-    * output schema and booleans, shares the calibration oracle. */
-  def dqCalibrationOneScan(df: DataFrame, cols: Seq[String],
-                           rsd: Double = 0.02,
-                           tolPct: Int = 5): DataFrame =
-    // TWO-LEVEL GRAIN (r18): collapse to (col_name, v) with a plain
-    // count FIRST, then roll up. Fusing the HLL beside a distinct
-    // aggregate in ONE agg is the measured Expand×HLL trap even with
-    // a single distinct column — Spark's one-distinct plan carries
-    // every regular agg's partial at the (group, value) grain, i.e.
-    // one HLL buffer PER DISTINCT VALUE through the exchange
-    // (dq_fused 1.09 s vs two-level 0.43 s on events at sf0.1). The
-    // roll-up's HLL reads the collapsed values, which changes
-    // nothing: HLL register updates are idempotent, so the sketch of
-    // the deduplicated set is bit-identical (the
-    // [[graft.operators.EventOps.rollingActiveCalibration]]
-    // discipline). Level 1 is map-side combined; level-2 state is
-    // one sketch per column NAME, not per value.
-    stackStringified(df, cols)
-      .groupBy("col_name", "v")
-      .agg(count(lit(1)).as("cnt"))
-      .groupBy("col_name")
-      .agg(sum("cnt").as("n_rows"),
-        sum(when(col("v").isNull, col("cnt")).otherwise(0L)).as("n_nulls"),
-        count(col("v")).as("n_distinct"),
-        approx_count_distinct(col("v"), rsd).as("apx_distinct"))
-      .select(col("col_name"), col("n_rows"), col("n_nulls"),
-        col("n_distinct"),
-        round(col("n_nulls") / col("n_rows"), 6).as("null_frac"),
-        (abs(col("apx_distinct") - col("n_distinct")) <=
-          greatest(lit(2L), expr(s"n_distinct * $tolPct div 100")))
-          .as("distinct_within_tol"))
-
-  /** The dq family's ONE column-resolution rule (r18, ADVICE —
-    * previously only the stringified path had it, so case-variant
-    * callers got differing `col_name` rows from the composed and
-    * one-scan twins): exact schema name first, else a UNIQUE
-    * case-insensitive match; absence and ambiguity throw naming the
-    * caller's spelling; the RESOLVED schema field is what every
-    * emitter uses, so `col_name` output is caller-case-independent. */
+  /** The dq family's ONE column-resolution rule, shared by the batch
+    * profiles and the stringified stream path so a case-variant
+    * caller gets the same `col_name` rows from both: exact schema
+    * name first, else a UNIQUE case-insensitive match; absence and
+    * ambiguity throw naming the caller's spelling; the RESOLVED
+    * schema field is what every emitter uses, so `col_name` output
+    * is caller-case-independent. */
   private def resolveDqColumn(df: DataFrame,
                               c: String): org.apache.spark.sql.types.StructField = {
     val field = df.schema.fields.find(_.name == c).getOrElse {
@@ -341,12 +296,11 @@ object RetailEtl {
     field
   }
 
-  /** Stringified stack-unpivot shared by the dq calibration family —
-    * batch ([[dqCalibrationOneScan]]) and stream
+  /** Stringified stack-unpivot of the stream dq family
     * ([[graft.streaming.EventStream.dqProfileState]] /
-    * `dqStateCalibration`); ONE copy of the normalization rule (r17
-    * review), because the rule exists precisely to keep cross-engine
-    * distinct counts aligned and two drifting copies would undo it.
+    * `dqStateCalibration`); ONE copy of the normalization rule,
+    * because the rule exists precisely to keep cross-engine distinct
+    * counts aligned and two drifting copies would undo it.
     * Columns resolve like the rest of the engine: exact name first,
     * else a UNIQUE case-insensitive match (ambiguity or absence
     * throws naming the column). Floating-point values normalize
@@ -376,8 +330,8 @@ object RetailEtl {
                             distinctOf: String => Column): DataFrame = {
     require(cols.nonEmpty, "dqProfile needs at least one column")
     // resolve-then-emit-schema-name, same rule as the stringified
-    // path (r18, ADVICE): the composed and one-scan twins must emit
-    // IDENTICAL col_name rows for case-variant callers
+    // stream path: both emit IDENTICAL col_name rows for case-variant
+    // callers
     val names = cols.map(c => resolveDqColumn(df, c).name)
     val aggs = count(lit(1)).as("n_rows") +: names.flatMap(c => Seq(
       sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"${c}__nulls"),

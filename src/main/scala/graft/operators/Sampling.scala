@@ -122,7 +122,10 @@ object Sampling {
     * deterministic) and keep the first k. One shuffle on the stratum
     * key; skew is bounded by the largest stratum — for a pathological
     * mega-stratum, pre-thin with [[hashSample]] at ~10·k/|stratum|
-    * first so the per-stratum sort stays small.
+    * first so the per-stratum sort stays small. The window beats a
+    * partial-merge aggregator form here: that form was slower at
+    * sf0.1 and wrote 6% more shuffle bytes (docs/SCALING.md, "One
+    * key per result").
     */
   def uniformKPerStratum(df: DataFrame, idCol: String, stratumCol: String,
                          k: Int, salt: String = "s42"): DataFrame = {
@@ -131,21 +134,6 @@ object Sampling {
     df.withColumn("sample_rank", row_number().over(w).cast("long"))
       .filter(col("sample_rank") <= k)
   }
-
-  /** [[uniformKPerStratum]] semantics through the bounded-memory
-    * [[graft.functions.ReservoirAgg]] aggregator: one hash aggregate
-    * with partial merge — map tasks pre-reduce to ≤ k candidates, so
-    * the shuffle carries |strata|·k rows instead of every row the
-    * window variant sorts. Result-identical (shared oracle).
-    */
-  def uniformKPerStratumAgg(df: DataFrame, idCol: String, stratumCol: String,
-                            k: Int, salt: String = "s42"): DataFrame =
-    df.groupBy(col(stratumCol))
-      .agg(graft.functions.ReservoirAgg.smallestKByKey(
-        sampleKey(col(idCol), salt), col(idCol), k).as("ids"))
-      .select(col(stratumCol), posexplode(col("ids")))
-      .select(col(stratumCol), (col("pos") + 1).cast("long").as("sample_rank"),
-        col("col").as(idCol))
 
   /** Rebalance a corpus to target source proportions — the
     * data-MIXTURE step of a training run ("50% web, 30% wiki, 20%

@@ -1,25 +1,25 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Skew-mitigation utilities (SURVEY.md §5).
+/** Key-skew measurement (SURVEY.md §5).
   *
-  * AQE's skew-join splitting covers sort-merge joins at runtime;
-  * these helpers cover the cases AQE doesn't: aggregation hot keys
-  * and broadcast-replicated joins against a skewed build of
-  * candidates.
+  * The engine already handles the skew shapes graft's keys produce:
+  * AQE splits a skewed partition of a shuffled join at runtime,
+  * partial aggregation reduces a hot grouping key to one row per map
+  * task before the exchange, and a broadcast join has no join shuffle
+  * to skew. Salting measured slower than those plain forms on the
+  * keys graft runs (docs/SCALING.md, "One key per result"), so this
+  * object only measures whether a key is skewed at all.
   */
 object Skew {
 
-  /** Key-skew profile — the MEASUREMENT that decides whether
-    * [[saltedAgg]]/[[saltedJoin]] (or AQE skew handling) is worth
-    * its shuffle: one row summarizing how unevenly `key` distributes
-    * — distinct keys, total rows, the hottest key and its row count,
-    * the exact mean rows/key, and `skew_ratio` = max/mean. A ratio
-    * near 1 says the keys are flat and salting only adds a merge
-    * phase; a large ratio says the hottest key's partition IS the
-    * job's critical path at scale. Two aggregates over one count
+  /** Key-skew profile: one row summarizing how unevenly `key`
+    * distributes — distinct keys, total rows, the hottest key and its
+    * row count, the exact mean rows/key, and `skew_ratio` = max/mean.
+    * A ratio near 1 says the keys are flat; a large ratio says the
+    * hottest key's partition IS the job's critical path at scale. Two aggregates over one count
     * relation (key-cardinality-sized, not row-sized); the hottest
     * key reports deterministically (smallest key wins count ties).
     * skew_ratio is exact integer arithmetic (max·n_keys/total)
@@ -47,52 +47,5 @@ object Skew {
           col("n_rows_total"), 6))
       .select("n_keys", "n_rows_total", "max_rows", "top_key",
         "avg_rows", "skew_ratio")
-  }
-
-  /** Two-phase salted aggregation for hot grouping keys: rows are
-    * spread over `saltBuckets` sub-keys, partially aggregated, then
-    * merged. Works for any algebraic aggregate (sum/count/min/max):
-    * pass the partial aggregates and how to merge them.
-    *
-    * {{{
-    *   Skew.saltedAgg(sales, Seq("product_id"),
-    *     partials = Seq(sum("quantity").as("q"), sum("sale_amount").as("a")),
-    *     merge    = Seq(sum("q").as("total_quantity"), sum("a").as("total_sale_amount")))
-    * }}}
-    *
-    * The salt is a hash of the row's own column values — deterministic
-    * under task retries (a `monotonically_increasing_id` salt changes
-    * on partial stage recompute, which can lose or duplicate rows at
-    * the final aggregate, SPARK-23207-style). Identical rows share a
-    * salt, which only matters if one literal row dominates — and the
-    * aggregate is still correct either way.
-    */
-  def saltedAgg(df: DataFrame, keys: Seq[String],
-                partials: Seq[Column], merge: Seq[Column],
-                saltBuckets: Int = 16): DataFrame = {
-    require(saltBuckets >= 1, s"saltBuckets must be >= 1, got $saltBuckets")
-    val salted = df.withColumn("__salt",
-      pmod(hash(df.columns.map(col): _*), lit(saltBuckets)))
-    val partial = salted
-      .groupBy((keys.map(col) :+ col("__salt")): _*)
-      .agg(partials.head, partials.tail: _*)
-    partial
-      .groupBy(keys.map(col): _*)
-      .agg(merge.head, merge.tail: _*)
-  }
-
-  /** Salted equi-join for a skewed probe side against a small build
-    * side: the big side gets a random-but-stable salt, the small side
-    * is replicated once per salt bucket, and the join key becomes
-    * (key, salt) — one hot key fans out over `saltBuckets` tasks.
-    */
-  def saltedJoin(big: DataFrame, small: DataFrame, keys: Seq[String],
-                 saltBuckets: Int = 16): DataFrame = {
-    require(saltBuckets >= 1, s"saltBuckets must be >= 1, got $saltBuckets")
-    val saltedBig = big.withColumn("__salt",
-      pmod(hash(big.columns.map(col): _*), lit(saltBuckets)))
-    val replicated = small.withColumn("__salt",
-      explode(sequence(lit(0), lit(saltBuckets - 1))))
-    saltedBig.join(replicated, keys :+ "__salt").drop("__salt")
   }
 }

@@ -73,6 +73,52 @@ class ContractSpec extends AnyFunSuite {
       s"every key must carry an oracle now: $rowsOnly")
   }
 
+  // Keys that ship one oracle string, each group with why both keys
+  // exist. A group not listed here is two plans for one result that
+  // the caller picks by key name: keep the faster one (docs/SCALING.md
+  // "One key per result").
+  private val streamingForm =
+    "the streaming form of a batch key: one micro-batch run equals the batch result"
+  private val persistedProbe =
+    "a persisted-index probe of an in-memory tier: same index, read back from disk"
+  private val summaryForms =
+    "validated or incremental forms of the ETL summary: same rows, another load path"
+  private val sharedOracles: Map[Set[String], String] = Map(
+    Set("ann_index_ivf_probe", "ann_ivf_topk", "stream_ann_probe") ->
+      s"$persistedProbe; $streamingForm",
+    Set("ann_index_ivfpq_probe", "ann_ivfpq_topk") -> persistedProbe,
+    Set("etl_incremental_summary", "etl_load_validated", "etl_sales_summary") ->
+      summaryForms,
+    Set("docs_dup_ngram_apply", "stream_dup_ngram_gate") -> streamingForm,
+    Set("docs_dup_spans_apply", "stream_dup_span_scrub") -> streamingForm,
+    Set("docs_quality_drift", "stream_quality_drift") -> streamingForm,
+    Set("etl_cdc_apply", "stream_cdc_apply") -> streamingForm,
+    Set("etl_entity_incremental", "stream_entity_match") -> streamingForm,
+    Set("etl_scd2_user_state", "stream_scd2") -> streamingForm,
+    Set("events_attribution", "stream_attribution") -> streamingForm,
+    Set("events_bot_flag", "stream_bot_flag") -> streamingForm,
+    Set("q_events_funnel", "stream_funnel") -> streamingForm,
+    Set("q_events_sessionize", "stream_sessionize") -> streamingForm,
+    Set("q_new_vs_returning", "stream_new_vs_returning") -> streamingForm,
+    Set("q_session_window", "stream_session_window") -> streamingForm,
+    Set("sample_uniform_k", "stream_sample_uniform") -> streamingForm,
+    Set("stream_cms_sketch", "text_cms_sketch") -> streamingForm,
+    Set("stream_dedup", "stream_dedup_within_wm") ->
+      (streamingForm + "; within-watermark dedup bounds its state by event time"),
+    Set("stream_quality_lr", "text_quality_lr_score") -> streamingForm,
+    Set("stream_semantic_gate", "text_decontaminate_semantic") -> streamingForm)
+
+  test("every group of keys sharing one oracle is listed with its reason") {
+    val groups = SparkEntry.registry.keys.groupBy(SparkEntry.oracleSql)
+      .values.map(_.toSet).filter(_.size > 1).toSet
+    val unlisted = groups -- sharedOracles.keySet
+    assert(unlisted.isEmpty, "keys share an oracle without a listed reason: " +
+      unlisted.map(_.toSeq.sorted.mkString("[", ", ", "]")).toSeq.sorted.mkString("; "))
+    val stale = sharedOracles.keySet -- groups
+    assert(stale.isEmpty, "listed groups that no longer share one oracle: " +
+      stale.map(_.toSeq.sorted.mkString("[", ", ", "]")).toSeq.sorted.mkString("; "))
+  }
+
   test("merging key lists that share a name throws and names the key") {
     def family(prefix: String, names: String*): Family = new Family(prefix) {
       val keys = names.map(n => Key(n)((s, _) => s.emptyDataFrame)("SELECT 1"))

@@ -12,7 +12,7 @@ package graft
   * PcaSpec pins the frozen artifact against a live refit (sign-aligned
   * eigenpair parity) so the artifact cannot drift from the fit code.
   *
-  * Run: `sbt "runMain graft.PcaFreezeMain"` after a testdata or
+  * Run: `sbt "Test/runMain graft.PcaFreezeMain"` after a testdata or
   * fit-algorithm change, commit the regenerated file.
   */
 object PcaFreezeMain {
@@ -29,7 +29,8 @@ object PcaFreezeMain {
     val src = new StringBuilder
     src ++= "package graft.operators\n\n"
     src ++= "/** The PUBLISHED 64->32 PCA transform - a frozen model\n"
-    src ++= "  * artifact, regenerated by [[graft.PcaFreezeMain]] from\n"
+    src ++= "  * artifact, regenerated by graft.PcaFreezeMain (src/test,\n"
+    src ++= "  * `sbt \"Test/runMain graft.PcaFreezeMain\"`) from\n"
     src ++= "  * [[Pca.fit]] over the sf0.1 reference corpus and pinned\n"
     src ++= "  * by PcaSpec against a live refit. Both the Spark keys and\n"
     src ++= "  * their DuckDB oracles replay these exact float literals,\n"

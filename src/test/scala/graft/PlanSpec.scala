@@ -123,14 +123,6 @@ class PlanSpec extends SparkSpec {
       s"the cutoff must reach the orders scan:\n$p")
   }
 
-  test("bloom prune probes via a codegen'd expression, not a Scala UDF") {
-    val p = plan(Analytics.topRevenueOrdersBloom(Tables.customer(spark, dir),
-      Tables.orders(spark, dir), Tables.lineitem(spark, dir)))
-    assert(!p.contains("UDF"), s"no ScalaUDF may survive in the plan:\n$p")
-    assert(p.contains("TextHashes.mightContainLong"),
-      s"expected the native bloom probe on the lineitem scan:\n$p")
-  }
-
   test("paretoRevenue ranks within revenue bands, never one partition") {
     val p = plan(Analytics.paretoRevenue(Tables.lineitem(spark, dir)))
     assert("windowspecdefinition\\(band#\\d+L, revenue".r.findFirstIn(p).isDefined,
@@ -568,6 +560,17 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("bloom prune probes via a codegen'd expression, not a Scala UDF") {
+    val docs = Tables.documents(spark, dir)
+    val ta = graft.operators.TextAnalysis
+    val store = ta.dupNgramStore(ta.dupNgramDupOcc(ta.dupNgramToks(docs)))
+    val p = plan(graft.streaming.DocStream.dupNgramGate(docs, store,
+      graft.streaming.DocStream.storeBloom(store)))
+    assert(!p.contains("UDF"), s"no ScalaUDF may survive in the plan:\n$p")
+    assert(p.contains("TextHashes.mightContainLong"),
+      s"expected the native bloom probe on the candidate positions:\n$p")
+  }
+
   // r14 scale shapes
 
   test("curateFull recomposition: the r14 gates add ZERO corpus scans") {
@@ -687,22 +690,6 @@ class PlanSpec extends SparkSpec {
         keys.contains(valueKey) && l.contains("approx_count_distinct")
       }
     }
-
-  test("dqCalibrationOneScan: ONE scan, no Expand, two-level grain " +
-    "(no sketch buffers at the value grain)") {
-    val p = plan(RetailEtl.dqCalibrationOneScan(Tables.lineitem(spark, dir),
-      Seq("l_partkey", "l_returnflag", "l_shipdate", "l_quantity")))
-    assert("FileScan parquet".r.findAllIn(p).length == 1,
-      s"the one-scan form must scan once:\n$p")
-    assert(!p.contains("Expand"),
-      s"no Expand — the Expand x HLL trap (r17 SCALING.md):\n$p")
-    // two-level grain: the (col_name, v) collapse exchanges partial
-    // COUNTS only; the HLL may exist only at the col_name grain
-    val hashEx = "Exchange hashpartitioning".r.findAllIn(p).length
-    assert(hashEx == 2, s"expected the two grain exchanges only:\n$p")
-    assert(!hllAtValueGrain(p, "v#"),
-      s"value-grain aggregate must not carry HLL buffers:\n$p")
-  }
 
   test("stream dq/sliding calibrations: two-level grain — no sketch " +
     "buffers at the value grain (the r16 fusion cannot come back)") {

@@ -674,37 +674,53 @@ class RetailEtlSpec extends SparkSpec {
   test("dqCalibrationOneScan ≡ dqCalibration row-for-row; columns " +
     "resolve case-insensitively; ambiguity and absence throw by name") {
     import graft.operators.RetailEtl
+    import org.apache.spark.sql.functions.{abs, approx_count_distinct, expr,
+      greatest, round, when}
     val li = graft.sources.Tables.lineitem(spark, "/root/testdata/sf0.001")
     val cols = Seq("l_partkey", "l_returnflag", "l_shipdate", "l_quantity")
+    // the one-scan form over the stream dq path's stringified unpivot,
+    // kept here as the reference: its distinct counts must equal the
+    // native ones dqCalibration computes
+    def dqCalibrationOneScan(df: DataFrame, cs: Seq[String]) =
+      RetailEtl.stackStringified(df, cs)
+        .groupBy("col_name", "v").agg(count(lit(1)).as("cnt"))
+        .groupBy("col_name")
+        .agg(sum("cnt").as("n_rows"),
+          sum(when(col("v").isNull, col("cnt")).otherwise(0L)).as("n_nulls"),
+          count(col("v")).as("n_distinct"),
+          approx_count_distinct(col("v"), 0.02).as("apx_distinct"))
+        .select(col("col_name"), col("n_rows"), col("n_nulls"),
+          col("n_distinct"),
+          round(col("n_nulls") / col("n_rows"), 6).as("null_frac"),
+          (abs(col("apx_distinct") - col("n_distinct")) <=
+            greatest(lit(2L), expr("n_distinct * 5 div 100")))
+            .as("distinct_within_tol"))
     val composed = RetailEtl.dqCalibration(li, cols)
       .collect().map(_.toString).sorted.toSeq
-    val oneScan = RetailEtl.dqCalibrationOneScan(li, cols)
+    val oneScan = dqCalibrationOneScan(li, cols)
       .collect().map(_.toString).sorted.toSeq
     assert(oneScan === composed,
       "the one-scan form must reproduce the composed calibration " +
         "exactly (stringified distincts are injective for these columns)")
     // case-insensitive resolution emits the RESOLVED field name, so
     // the output stays oracle-comparable regardless of caller case
-    val ci = RetailEtl.dqCalibrationOneScan(li, Seq("L_PARTKEY")).collect()
-    assert(ci.length === 1 && ci.head.getString(0) === "l_partkey")
-    // r18 (ADVICE): the COMPOSED twin resolves identically — a
-    // case-variant caller gets the same col_name rows from both forms
-    val ciComposed = RetailEtl.dqCalibration(li, Seq("L_PARTKEY")).collect()
-    assert(ciComposed.length === 1 &&
-      ciComposed.head.getString(0) === "l_partkey",
+    val ci = RetailEtl.dqCalibration(li, Seq("L_PARTKEY")).collect()
+    assert(ci.length === 1 && ci.head.getString(0) === "l_partkey",
       "dqCalibration must emit the resolved schema-case col_name")
-    assert(ciComposed.map(_.toString).sorted.toSeq ===
-      ci.map(_.toString).sorted.toSeq,
-      "case-variant callers must get identical rows from both twins")
+    // the stringified stream path resolves identically — a
+    // case-variant caller gets the same col_name rows from both
+    assert(dqCalibrationOneScan(li, Seq("L_PARTKEY")).collect()
+      .map(_.toString).sorted.toSeq === ci.map(_.toString).sorted.toSeq,
+      "case-variant callers must get identical rows from both paths")
     // two case-variant fields: a third spelling matches both → throws
     val amb = li.select(col("l_partkey"), col("l_partkey").as("L_PARTKEY"))
     val e = intercept[IllegalArgumentException] {
-      RetailEtl.dqCalibrationOneScan(amb, Seq("l_PartKey"))
+      RetailEtl.dqCalibration(amb, Seq("l_PartKey"))
     }
     assert(e.getMessage.contains("l_PartKey") &&
       e.getMessage.toLowerCase.contains("ambiguous"))
     val missing = intercept[IllegalArgumentException] {
-      RetailEtl.dqCalibrationOneScan(li, Seq("no_such_col"))
+      RetailEtl.dqCalibration(li, Seq("no_such_col"))
     }
     assert(missing.getMessage.contains("no_such_col"))
   }

@@ -60,20 +60,6 @@ class SamplingSpec extends SparkSpec {
     assert(math.abs(out("src2") - 1000L) < 250, s"src2 ${out("src2")}")
   }
 
-  test("aggregator k-sample equals the window k-sample, without a window") {
-    val win = Sampling.uniformKPerStratum(docs, "doc_id", "source", k = 7)
-      .select("source", "sample_rank", "doc_id")
-      .as[(String, Long, Long)].collect().sorted.toSeq
-    val agg = Sampling.uniformKPerStratumAgg(docs.repartition(11), "doc_id", "source", k = 7)
-      .as[(String, Long, Long)].collect().sorted.toSeq
-    assert(agg == win)
-    val plan = Sampling.uniformKPerStratumAgg(docs, "doc_id", "source", k = 7)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), s"aggregator path must not window:\n$plan")
-    assert(plan.contains("partial_smallestk") || plan.contains("ObjectHashAggregate"),
-      s"expected partial-merge hash aggregate:\n$plan")
-  }
-
   test("uniformKPerStratum returns exactly k rows per stratum, stable") {
     val a = Sampling.uniformKPerStratum(docs, "doc_id", "source", k = 7)
     val counts = a.groupBy("source").count().collect().map(_.getLong(1))

@@ -1,38 +1,10 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.Skew
 
-/** Salted aggregation/join must be result-identical to the plain
-  * forms — only the shuffle layout changes.
-  */
+/** The key-skew profile: hot key, exact mean and max/mean ratio. */
 class SkewSpec extends SparkSpec {
   import spark.implicits._
-
-  // one hot key (90% of rows) + a long tail
-  private lazy val skewed = (
-    (1 to 900).map(i => ("hot", i.toDouble)) ++
-      (1 to 100).map(i => (s"key$i", i.toDouble))
-    ).toDF("k", "v")
-
-  test("saltedAgg equals plain groupBy aggregate") {
-    val plain = skewed.groupBy("k")
-      .agg(sum("v").as("total"), count(lit(1)).as("n"))
-    val salted = Skew.saltedAgg(skewed, Seq("k"),
-      partials = Seq(sum("v").as("pv"), count(lit(1)).as("pn")),
-      merge = Seq(sum("pv").as("total"), sum("pn").as("n")))
-    assert(salted.exceptAll(plain).count() == 0)
-    assert(plain.exceptAll(salted).count() == 0)
-  }
-
-  test("saltedJoin equals plain join") {
-    val dim = Seq(("hot", "H"), ("key1", "K1"), ("key2", "K2")).toDF("k", "label")
-    val plain = skewed.join(dim, Seq("k")).select("k", "v", "label")
-    val salted = Skew.saltedJoin(skewed, dim, Seq("k")).select("k", "v", "label")
-    assert(salted.exceptAll(plain).count() == 0)
-    assert(plain.exceptAll(salted).count() == 0)
-  }
 
   test("keySkewProfile reports the hot key, exact mean, and max/mean ratio") {
     // "aa" ×4 and "ab" ×4 tie at the max count — the smallest key
@@ -46,14 +18,5 @@ class SkewSpec extends SparkSpec {
     assert(r.getString(3) == "aa", s"smallest key wins the tie: $r")
     assert(r.getDouble(4) == 3.333333, s"avg_rows rounded: $r")
     assert(r.getDouble(5) == 1.2, s"skew = 4·3/10: $r")
-  }
-
-  test("saltedAgg actually spreads the hot key over salt buckets") {
-    // same salt derivation as the implementation (hash of row values)
-    val salted = skewed.withColumn("__salt",
-      pmod(hash(skewed.columns.map(col): _*), lit(16)))
-    val buckets = salted.filter($"k" === "hot")
-      .select("__salt").distinct().count()
-    assert(buckets > 8, s"hot key landed in only $buckets buckets")
   }
 }
